@@ -99,7 +99,7 @@ object Blocks {
     * dangling-mass one-row), and the `Broadcast` handles are unreachable
     * the moment the round's cut is materialized — yet their blocks
     * survive to the end-of-query reset (~40 blocks / ~135 MB per q106
-    * run, r16 Q106Triage), squeezing storage for the live cuts across a
+    * run, r16 triage), squeezing storage for the live cuts across a
     * long chain. The scope drops, at each round's end, every broadcast
     * that appeared AFTER the loop started but BEFORE this round began:
     * provably dead — the current round's cut is materialized (count

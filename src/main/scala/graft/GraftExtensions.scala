@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * `spark.sql("SELECT vec_dot(a, b) ...")` through the same codegen
   * path (parity spec'd per function).
   *
-  * Install via `spark.sql.extensions=graft.GraftExtensions` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * Install via `spark.sql.extensions=graft.GraftExtensions`, as
+  * [[Sessions]] does, or a session builder's
+  * `.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

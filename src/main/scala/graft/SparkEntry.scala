@@ -636,7 +636,7 @@ object SparkEntry {
       // it in-query against the brute-force truth and emits the q62
       // verdict row: counts by value, coverage/sortedness/recall as
       // 1/0s the oracle asserts. Floor 0.6 vs 0.98 measured at both
-      // gate SFs (AnnFloorProbe) — a real recall collapse breaks the
+      // gate SFs (r16 triage) — a real recall collapse breaks the
       // hash gate; box noise cannot.
       val emb = Tables.embeddings(s, dir)
       val ann = sim.LshAnn.topK(emb, "vec_id", "embedding",
@@ -875,7 +875,7 @@ object SparkEntry {
       // across cells — half the cells probed keeps recall@5 >= 0.8
       // (spec-measured; real clustered embeddings take nprobe << kCoarse).
       // VERDICT-GATED (r13): q62 verdict row, floor 0.6 vs 0.82-0.84
-      // measured (AnnFloorProbe at both gate SFs).
+      // measured (r16 triage at both gate SFs).
       val ann = sim.IvfPq.topK(emb, "vec_id", "embedding",
         isQuery = col("vec_id") < 10, dim = 64, k = 5, nprobe = 8,
         model = Some(mdl))
@@ -897,7 +897,7 @@ object SparkEntry {
           kCoarse = 16, coarseIters = 3, pqIters = 3, residual = true)
       }
       // VERDICT-GATED (r13): q62 verdict row, floor 0.6 vs 0.80-0.86
-      // measured (AnnFloorProbe at both gate SFs).
+      // measured (r16 triage at both gate SFs).
       val ann = sim.IvfPq.topK(emb, "vec_id", "embedding",
         isQuery = col("vec_id") < 10, dim = 64, k = 5, nprobe = 8,
         model = Some(mdl))
@@ -1086,7 +1086,7 @@ object SparkEntry {
       // bounded exact re-rank. VERDICT-GATED (r13): codebooks are
       // trained (engine content) but deterministic — the q62 verdict
       // row rides the oracle with floor 0.75 vs 0.90-0.94 measured
-      // (AnnFloorProbe at both gate SFs).
+      // (r16 triage at both gate SFs).
       val emb = Tables.embeddings(s, dir)
       val ann = sim.ProductQuantizer.topK(emb, "vec_id", "embedding",
         isQuery = col("vec_id") < 10, dim = 64, k = 5)

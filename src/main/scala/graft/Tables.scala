@@ -72,9 +72,13 @@ object Tables {
     // which for an input CONTAINING a shuffle is the static pre-AQE
     // number (spark.sql.shuffle.partitions), not the runtime-coalesced
     // one — the guard could misjudge in both directions there (r17
-    // advisor note). Every call site feeds a scan side, where the count
-    // is exact. `toRdd` (not `.rdd`) skips building the second
-    // external-row deserializer lineage just to read a partition count.
+    // advisor note), and probing it would run the upstream stages.
+    // `toRdd` (not `.rdd`) skips building the second external-row
+    // deserializer lineage just to read a partition count.
+    require(!org.apache.spark.sql.GraftShims.hasShuffle(df),
+      "Tables.spread needs a scan-rooted input (a table scan plus narrow " +
+        "operators); this input's plan shuffles, so its partition count " +
+        "is not known before it runs")
     val target = df.sparkSession.sparkContext.defaultParallelism
     val parts = org.apache.spark.sql.GraftShims.planPartitions(df)
     if (parts >= target) df

@@ -108,12 +108,14 @@ object IncrementalDedup {
     recover(spark, name)
     val before = graft.Blocks.persistedIds(spark)
     val indexed = spark.table(setsTable(name)).select(col("id").as(idCol))
-    val fresh = delta.join(indexed, Seq(idCol), "left_anti")
     // localCheckpoint (not persist): the anti-join gate READS <name>_sets,
     // and the sets append below WRITES it — a live lineage from target to
     // source is the self-insert shape Spark rejects on some paths. The
     // eager checkpoint materializes the gated delta and cuts that lineage,
-    // so neither append's plan references its own target table.
+    // so neither append's plan references its own target table. It also
+    // hands shingleSets the scan-rooted input its spread requires: the
+    // anti-join may shuffle.
+    val fresh = delta.join(indexed, Seq(idCol), "left_anti").localCheckpoint()
     val sets = NGramJaccard.shingleSets(fresh, idCol, textCol, n).localCheckpoint()
     // bands BEFORE sets: the anti-join above gates on the sets table, so
     // appending sets last makes it the commit marker. A crash between the

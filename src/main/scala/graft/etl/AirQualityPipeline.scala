@@ -19,16 +19,19 @@ object AirQualityPipeline {
 
   val pollutants = Seq("pm25", "pm10", "no2", "o3", "co")
 
-  /** Extract phase: deterministic distributed synthetic sensor data. */
-  def extract(spark: SparkSession, stations: Int = 5, hours: Int = 90 * 24): DataFrame =
-    Synth.airQuality(spark, stations, hours)
+  /** Extract phase: deterministic distributed synthetic sensor data;
+    * `seed` picks the sensor history ([[Synth.airQuality]]).
+    */
+  def extract(spark: SparkSession, stations: Int = 5, hours: Int = 90 * 24,
+      seed: Long = 42L): DataFrame =
+    Synth.airQuality(spark, stations, hours, seed = seed)
+
+  /** The 7 numeric columns the reference interpolates (dag:161-167). */
+  val numericCols = Seq("pm25", "pm10", "no2", "o3", "co", "temperature", "humidity")
 
   /** Transform phase (dag:138-281): interpolate gaps, clip outliers,
     * dedup, derive AQI/category/temporal features/pollution index.
     */
-  /** The 7 numeric columns the reference interpolates (dag:161-167). */
-  val numericCols = Seq("pm25", "pm10", "no2", "o3", "co", "temperature", "humidity")
-
   def transform(raw: DataFrame): DataFrame = {
     // all 7 columns in one pass — shares a single keyed shuffle+sort
     val interpolated = Clean.interpolateLinear(raw, "station", Seq("ts", "reading_id"), numericCols, maxGap = 3)
@@ -122,9 +125,11 @@ object AirQualityPipeline {
 
   /** Full run. Returns the validation report (the reference raises on
     * thin data — callers can assert on the returned row instead).
+    * `seed` is [[extract]]'s, so a seeded run can be reproduced.
     */
-  def run(spark: SparkSession, outDir: String, stations: Int = 5, hours: Int = 90 * 24): DataFrame = {
-    val raw = extract(spark, stations, hours)
+  def run(spark: SparkSession, outDir: String, stations: Int = 5, hours: Int = 90 * 24,
+      seed: Long = 42L): DataFrame = {
+    val raw = extract(spark, stations, hours, seed)
     // land the transform once (it's a required output), aggregate from
     // the landed copy — one compute, no wide-row cache
     val landed = landThenRead(spark, transform(raw), outDir)

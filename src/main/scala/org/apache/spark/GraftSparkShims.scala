@@ -49,7 +49,7 @@ object GraftSparkShims {
     * only safe between queries, but a 20-round loop pins every round's
     * per-round broadcasts (contribution sums, dangling-mass one-rows)
     * until the end-of-query reset — ~40 blocks / ~135 MB per PageRank
-    * run (r16 Q106Triage) competing with the live working set.
+    * run (r16 triage) competing with the live working set.
     */
   def broadcastIds(sc: SparkContext): Set[Long] =
     sc.env.blockManager.master

@@ -94,6 +94,15 @@ object GraftShims {
   def planPartitions(df: Dataset[Row]): Int =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd.getNumPartitions
 
+  /** Whether a frame's physical plan shuffles, read from the plan (AQE's
+    * initial plan before execution, its stages after) without running it
+    * — the guard on [[planPartitions]]' scan-rooted contract.
+    */
+  def hasShuffle(df: Dataset[Row]): Boolean =
+    new execution.adaptive.AdaptiveSparkPlanHelper {}
+      .find(df.asInstanceOf[classic.Dataset[Row]].queryExecution.executedPlan)(
+        _.isInstanceOf[execution.exchange.ShuffleExchangeLike]).isDefined
+
   /** Drop every CacheManager entry (the `private[sql]` relation cache
     * behind `DataFrame.persist`). Unpersisting a cached plan's RDDs
     * DIRECTLY (the [[graft.Blocks]] id-delta path) leaves the

@@ -46,6 +46,18 @@ class OperatorEdgeSpec extends AnyFunSuite {
     assert(bids().intersect(round1).isEmpty, "round 1 broadcasts must be gone")
   }
 
+  test("Tables.spread refuses a shuffled input and passes a parallel scan unchanged") {
+    val scan = spark.range(0, 1000, 1, numPartitions = 8).toDF("id")
+    assert(Tables.spread(scan, "id") eq scan, "an already-parallel scan is a no-op")
+    val narrow = spark.range(0, 1000, 1, numPartitions = 1).toDF("id").filter(col("id") > 5)
+    assert(Tables.spread(narrow, "id").rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    val e = intercept[IllegalArgumentException] {
+      Tables.spread(scan.groupBy((col("id") % 10).as("k")).count(), "k")
+    }
+    assert(e.getMessage.contains("scan-rooted"), e.getMessage)
+    intercept[IllegalArgumentException](Tables.spread(scan.repartition(2), "id"))
+  }
+
   test("interpolateLinear: leading nulls stay null, trailing forward-fill, limit respected") {
     val df = Seq(
       ("a", 1, None: Option[Double]), // leading null → stays null

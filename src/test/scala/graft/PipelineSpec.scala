@@ -574,6 +574,37 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.option("header", "true").csv(s"$tmp/air_quality_daily_csv").count() == 3 * 7)
   }
 
+  test("extract's seed reaches the generator; the default keeps the seed-42 history") {
+    def pm25(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("reading_id").select("pm25").collect().toSeq
+    val default = pm25(etl.AirQualityPipeline.extract(spark, 3, 48))
+    assert(default == pm25(etl.Synth.airQuality(spark, 3, 48, seed = 42L)))
+    assert(default != pm25(etl.AirQualityPipeline.extract(spark, 3, 48, seed = 7L)))
+  }
+
+  test("a repeated pipeline + dashboard run reuses its generated code") {
+    // Sessions sizes the generated-code cache to hold a whole run's
+    // classes; at Spark's 100 the second run recompiles most of them.
+    // Also fails if a run puts per-run values (paths, now(), seeds)
+    // into generated code.
+    def runOnce(): Unit = {
+      val out = Files.createTempDirectory("graft_codegen").toString
+      etl.AirQualityPipeline.run(spark, out, stations = 3, hours = 7 * 24).collect()
+      val landed = sources.Io.readParquet(spark, s"$out/air_quality_final")
+      etl.Aggregates.rollingMeanCentered6(landed, "station", Seq("ts", "reading_id"),
+        "pm25", "pm25_roll6").collect()
+      etl.Aggregates.dowQuartiles(landed, "ts", "pm25").collect()
+      etl.Aggregates.kpis(landed, "ts", "pm25", 35.0).collect()
+      etl.Aggregates.corrMatrix(landed, etl.AirQualityPipeline.numericCols).collect()
+    }
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    runOnce()
+    val afterFirst = compiles.getCount
+    runOnce()
+    val recompiled = compiles.getCount - afterFirst
+    assert(recompiled == 0, s"the second run compiled $recompiled generated classes again")
+  }
+
   test("transform interpolates ALL numeric columns (pm10 gaps filled, ref dag:161-167)") {
     val raw = etl.Synth.airQuality(spark, 3, 14 * 24)
     val rawNullPm10 = raw.filter(col("pm10").isNull).count()
