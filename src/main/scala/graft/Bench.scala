@@ -5,11 +5,8 @@ import org.apache.spark.sql.SparkSession
   * ONE JSON line. Each query runs twice: `queries` holds the COLD first
   * run (comparable across rounds — includes plan compilation and any
   * in-operator materialization) and `warm` the immediate second run
-  * (steady-state: shuffle files reusable, and the query's generated
-  * classes still compiled — [[Sessions]] sizes the code cache to 1000
-  * classes; at Spark's default 100 a query generating more than about
-  * 100 recompiled most of them on its warm run too). `value` stays the
-  * cold total.
+  * (steady-state: shuffle files reusable, generated classes cached — see
+  * [[Sessions]]). `value` stays the cold total.
   *
   * The artifact is SELF-EXPLAINING on a contended box (the warm>cold
   * inversion class recurred four rounds on the driver machine while the

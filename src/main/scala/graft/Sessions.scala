@@ -17,9 +17,9 @@ import org.apache.spark.sql.SparkSession
   *   of them with Janino. At 1000 (250 per segment, against about 41
   *   per segment for that pass) a repeat compiles none: a steady pass
   *   of 320 stations × 3 days went from 8.35 s to 5.70 s (medians of 10
-  *   runs, 4-core VM) for +2.2 MB of live heap. It is a STATIC
-  *   conf, read once when `CodeGenerator` first initializes in the JVM,
-  *   so it can only be set here, where every session is built.
+  *   runs, 4-core VM; memory cost measured in CHANGES.md). It is a
+  *   STATIC conf, read once when `CodeGenerator` first initializes in
+  *   the JVM, so it can only be set here, where every session is built.
   */
 object Sessions {
   def local(cpus: String, shufflePartitions: String = "32"): SparkSession =

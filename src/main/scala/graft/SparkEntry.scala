@@ -636,8 +636,11 @@ object SparkEntry {
       // it in-query against the brute-force truth and emits the q62
       // verdict row: counts by value, coverage/sortedness/recall as
       // 1/0s the oracle asserts. Floor 0.6 vs 0.98 measured at both
-      // gate SFs (r16 triage) — a real recall collapse breaks the
-      // hash gate; box noise cannot.
+      // gate SFs in r13 (AnnFloorProbe, since deleted; see SURVEY.md
+      // r13) — a real recall collapse breaks the hash gate; box noise
+      // cannot. To re-measure a floor before touching it: compare
+      // `sim.AnnVerdict.meanRecall(ann, truth, k)` against
+      // `sim.Similarity.bruteForceTopK` at sf0.001 and sf0.01.
       val emb = Tables.embeddings(s, dir)
       val ann = sim.LshAnn.topK(emb, "vec_id", "embedding",
         isQuery = col("vec_id") < 10, dim = 64, k = 5)
@@ -875,7 +878,8 @@ object SparkEntry {
       // across cells — half the cells probed keeps recall@5 >= 0.8
       // (spec-measured; real clustered embeddings take nprobe << kCoarse).
       // VERDICT-GATED (r13): q62 verdict row, floor 0.6 vs 0.82-0.84
-      // measured (r16 triage at both gate SFs).
+      // measured in r13 at both gate SFs (AnnFloorProbe, since deleted;
+      // see SURVEY.md r13; re-measure as at q39).
       val ann = sim.IvfPq.topK(emb, "vec_id", "embedding",
         isQuery = col("vec_id") < 10, dim = 64, k = 5, nprobe = 8,
         model = Some(mdl))
@@ -897,7 +901,8 @@ object SparkEntry {
           kCoarse = 16, coarseIters = 3, pqIters = 3, residual = true)
       }
       // VERDICT-GATED (r13): q62 verdict row, floor 0.6 vs 0.80-0.86
-      // measured (r16 triage at both gate SFs).
+      // measured in r13 at both gate SFs (AnnFloorProbe, since deleted;
+      // see SURVEY.md r13; re-measure as at q39).
       val ann = sim.IvfPq.topK(emb, "vec_id", "embedding",
         isQuery = col("vec_id") < 10, dim = 64, k = 5, nprobe = 8,
         model = Some(mdl))
@@ -1085,8 +1090,9 @@ object SparkEntry {
       // Product-quantization ANN: 32× compressed codes + ADC scan +
       // bounded exact re-rank. VERDICT-GATED (r13): codebooks are
       // trained (engine content) but deterministic — the q62 verdict
-      // row rides the oracle with floor 0.75 vs 0.90-0.94 measured
-      // (r16 triage at both gate SFs).
+      // row rides the oracle with floor 0.75 vs 0.90-0.94 measured in
+      // r13 at both gate SFs (AnnFloorProbe, since deleted; see
+      // SURVEY.md r13; re-measure as at q39).
       val emb = Tables.embeddings(s, dir)
       val ann = sim.ProductQuantizer.topK(emb, "vec_id", "embedding",
         isQuery = col("vec_id") < 10, dim = 64, k = 5)

@@ -101,6 +101,8 @@ object IncrementalDedup {
     * an at-least-once caller (foreachBatch, [[graft.streaming.DedupStream]])
     * fold batches without a transaction log, and it enforces the
     * append-only-id contract instead of silently corrupting the index.
+    * `delta` must be scan-rooted, as for [[deltaPairs]]
+    * ([[graft.Tables.spread]]).
     */
   def appendToIndex(delta: DataFrame, idCol: String, textCol: String, name: String,
       n: Int = 3, numHashes: Int = 128, bands: Int = 32): Unit = {
@@ -108,15 +110,15 @@ object IncrementalDedup {
     recover(spark, name)
     val before = graft.Blocks.persistedIds(spark)
     val indexed = spark.table(setsTable(name)).select(col("id").as(idCol))
+    // shingle BEFORE the gate: shingleSets needs the scan-rooted input
+    // (as in deltaPairs), and the anti-join may shuffle.
     // localCheckpoint (not persist): the anti-join gate READS <name>_sets,
     // and the sets append below WRITES it — a live lineage from target to
     // source is the self-insert shape Spark rejects on some paths. The
-    // eager checkpoint materializes the gated delta and cuts that lineage,
-    // so neither append's plan references its own target table. It also
-    // hands shingleSets the scan-rooted input its spread requires: the
-    // anti-join may shuffle.
-    val fresh = delta.join(indexed, Seq(idCol), "left_anti").localCheckpoint()
-    val sets = NGramJaccard.shingleSets(fresh, idCol, textCol, n).localCheckpoint()
+    // eager checkpoint materializes the gated sets and cuts that lineage,
+    // so neither append's plan references its own target table.
+    val sets = NGramJaccard.shingleSets(delta, idCol, textCol, n)
+      .join(indexed, Seq(idCol), "left_anti").localCheckpoint()
     // bands BEFORE sets: the anti-join above gates on the sets table, so
     // appending sets last makes it the commit marker. A crash between the
     // two appends leaves only orphan band rows, which a replay duplicates

@@ -19,12 +19,9 @@ object AirQualityPipeline {
 
   val pollutants = Seq("pm25", "pm10", "no2", "o3", "co")
 
-  /** Extract phase: deterministic distributed synthetic sensor data;
-    * `seed` picks the sensor history ([[Synth.airQuality]]).
-    */
-  def extract(spark: SparkSession, stations: Int = 5, hours: Int = 90 * 24,
-      seed: Long = 42L): DataFrame =
-    Synth.airQuality(spark, stations, hours, seed = seed)
+  /** Extract phase: deterministic distributed synthetic sensor data. */
+  def extract(spark: SparkSession, stations: Int = 5, hours: Int = 90 * 24): DataFrame =
+    Synth.airQuality(spark, stations, hours)
 
   /** The 7 numeric columns the reference interpolates (dag:161-167). */
   val numericCols = Seq("pm25", "pm10", "no2", "o3", "co", "temperature", "humidity")
@@ -125,11 +122,9 @@ object AirQualityPipeline {
 
   /** Full run. Returns the validation report (the reference raises on
     * thin data — callers can assert on the returned row instead).
-    * `seed` is [[extract]]'s, so a seeded run can be reproduced.
     */
-  def run(spark: SparkSession, outDir: String, stations: Int = 5, hours: Int = 90 * 24,
-      seed: Long = 42L): DataFrame = {
-    val raw = extract(spark, stations, hours, seed)
+  def run(spark: SparkSession, outDir: String, stations: Int = 5, hours: Int = 90 * 24): DataFrame = {
+    val raw = extract(spark, stations, hours)
     // land the transform once (it's a required output), aggregate from
     // the landed copy — one compute, no wide-row cache
     val landed = landThenRead(spark, transform(raw), outDir)

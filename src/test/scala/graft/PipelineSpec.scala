@@ -574,14 +574,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.option("header", "true").csv(s"$tmp/air_quality_daily_csv").count() == 3 * 7)
   }
 
-  test("extract's seed reaches the generator; the default keeps the seed-42 history") {
-    def pm25(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("reading_id").select("pm25").collect().toSeq
-    val default = pm25(etl.AirQualityPipeline.extract(spark, 3, 48))
-    assert(default == pm25(etl.Synth.airQuality(spark, 3, 48, seed = 42L)))
-    assert(default != pm25(etl.AirQualityPipeline.extract(spark, 3, 48, seed = 7L)))
-  }
-
   test("a repeated pipeline + dashboard run reuses its generated code") {
     // Sessions sizes the generated-code cache to hold a whole run's
     // classes; at Spark's 100 the second run recompiles most of them.
