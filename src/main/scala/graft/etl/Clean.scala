@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Cleaning operators — dedup, missing-value interpolation, outlier
@@ -55,8 +55,9 @@ object Clean {
     * columns per station (dag:161-167). All columns share ONE keyed
     * shuffle and one ascending + one descending in-partition sort: every
     * per-column window function rides the same two window specs, so
-    * Catalyst plans exactly two Window operators over a single Exchange
-    * (asserted in PlanSpec) instead of re-shuffling per column.
+    * Catalyst plans one Window operator per direction (plus the row
+    * index's) over a single Exchange and two Sorts (asserted in PlanSpec)
+    * instead of re-shuffling or re-sorting per column.
     */
   def interpolateLinear(
       df: DataFrame,
@@ -84,13 +85,15 @@ object Clean {
     // (the nearest non-null one), so they travel as ONE struct per
     // direction — 2 window aggregates per column instead of 4, halving
     // the per-row window bookkeeping on the pipeline's hottest stage.
-    val withNeighbors = valueCols.foldLeft(withIdx) { (acc, c) =>
-      val v = col(c)
-      val tagged = when(v.isNotNull, struct(col("__rn").as("i"), v.as("v")))
-      acc
-        .withColumn(s"__p_$c", last(tagged, ignoreNulls = true).over(ascRun))
-        .withColumn(s"__n_$c", last(tagged, ignoreNulls = true).over(descRun))
-    }
+    // All "prev" aggregates sit in one projection and all "next" ones in
+    // the next: alternating the two specs column by column makes Catalyst
+    // re-sort the partition for every aggregate.
+    def tagged(c: String) = when(col(c).isNotNull, struct(col("__rn").as("i"), col(c).as("v")))
+    def neighbors(prefix: String, frame: WindowSpec) = col("*") +:
+      valueCols.map(c => last(tagged(c), ignoreNulls = true).over(frame).as(s"$prefix$c"))
+    val withNeighbors = withIdx
+      .select(neighbors("__p_", ascRun): _*)
+      .select(neighbors("__n_", descRun): _*)
     val filled = valueCols.foldLeft(withNeighbors) { (acc, c) =>
       val v = col(c)
       val (pv, pi) = (col(s"__p_$c.v"), col(s"__p_$c.i"))
@@ -131,16 +134,6 @@ object Clean {
     }.drop(valueCols.map(c => s"__mu_$c"): _*)
   }
 
-  /** IQR outlier clipping per group (dag:170-177): clip to
-    * [Q1 - k·IQR, Q3 + k·IQR] with exact linear-interpolated percentiles
-    * (matches pandas `quantile` and DuckDB `quantile_cont`). The reference
-    * computes bounds per 10k-row chunk — an artifact of pandas chunking;
-    * the semantically-intended unit is the group, which is what we use.
-    *
-    * At 100 TB: swap `percentile` for `approx_percentile(c, p, err)` —
-    * single-pass sketch, same call shape. Kept exact here because the
-    * oracle compares exact quantiles.
-    */
   /** The 100 TB constant-swap for [[clipOutliersIqr]], PROVEN in-query
     * (the q62 pattern): quartiles from single-pass `approx_percentile`
     * sketches, cross-checked against the exact twins computed in the
@@ -248,22 +241,50 @@ object Clean {
       .withColumnRenamed("__mad", "mad")
   }
 
+  /** IQR outlier clipping per group (dag:170-177): clip to
+    * [Q1 - k·IQR, Q3 + k·IQR] with exact linear-interpolated percentiles
+    * (matches pandas `quantile` and DuckDB `quantile_cont`). The reference
+    * computes bounds per 10k-row chunk — an artifact of pandas chunking;
+    * the semantically-intended unit is the group, which is what we use.
+    * Rows with a null key are dropped, as the inner join below drops them.
+    *
+    * The quartiles come from one of two plans, picked from the input's
+    * physical partitioning:
+    *   - input already clustered on `keys` (e.g. straight out of a
+    *     window keyed on them): the quartiles are unbounded-frame window
+    *     aggregates over that clustering. No shuffle, no sort, and the
+    *     input is computed once.
+    *   - otherwise: one bounds row per group from a keyed aggregation,
+    *     joined back. No static broadcast hint — AQE picks the map-side
+    *     join at runtime when the bounds side fits, and a caller with a
+    *     high-cardinality key keeps a safe shuffle join. A window here
+    *     would shuffle every row into one task per key.
+    * Both return the keys first, then the input's other columns.
+    *
+    * At 100 TB: swap `percentile` for `approx_percentile(c, p, err)` —
+    * single-pass sketch, same call shape. Kept exact here because the
+    * oracle compares exact quantiles.
+    */
   def clipOutliersIqr(
       df: DataFrame,
       keys: Seq[String],
       valueCols: Seq[String],
       k: Double = 3.0): DataFrame = {
-    val aggs = valueCols.flatMap { c =>
-      Seq(
-        expr(s"percentile($c, 0.25)").as(s"__q1_$c"),
-        expr(s"percentile($c, 0.75)").as(s"__q3_$c"))
+    val quartiles = valueCols.flatMap { c =>
+      Seq(s"__q1_$c" -> expr(s"percentile($c, 0.25)"),
+        s"__q3_$c" -> expr(s"percentile($c, 0.75)"))
     }
-    val bounds = df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    // bounds has one row per group; no static broadcast hint — AQE picks
-    // the map-side join at runtime when the bounds side fits, and a
-    // caller with a high-cardinality key keeps a safe shuffle join.
-    val joined = df.join(bounds, keys)
-    valueCols.foldLeft(joined) { (acc, c) =>
+    val bounded =
+      if (org.apache.spark.sql.GraftShims.clusteredOn(df, keys)) {
+        val w = Window.partitionBy(keys.map(col): _*)
+        df.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+          .select(keys.map(col) ++ df.columns.filterNot(keys.contains).map(col) ++
+            quartiles.map { case (name, q) => q.over(w).as(name) }: _*)
+      } else {
+        val bounds = quartiles.map { case (name, q) => q.as(name) }
+        df.join(df.groupBy(keys.map(col): _*).agg(bounds.head, bounds.tail: _*), keys)
+      }
+    valueCols.foldLeft(bounded) { (acc, c) =>
       val iqr = col(s"__q3_$c") - col(s"__q1_$c")
       val lo  = col(s"__q1_$c") - lit(k) * iqr
       val hi  = col(s"__q3_$c") + lit(k) * iqr

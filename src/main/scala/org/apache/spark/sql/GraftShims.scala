@@ -103,6 +103,22 @@ object GraftShims {
       .find(df.asInstanceOf[classic.Dataset[Row]].queryExecution.executedPlan)(
         _.isInstanceOf[execution.exchange.ShuffleExchangeLike]).isDefined
 
+  /** Whether a frame's physical output is already clustered on the named
+    * columns (e.g. hash-partitioned on a subset of them), read from the
+    * plan (AQE's initial plan) without running it: a window or
+    * aggregation keyed on them then needs no shuffle.
+    */
+  def clusteredOn(df: Dataset[Row], keys: Seq[String]): Boolean = {
+    val plan = df.asInstanceOf[classic.Dataset[Row]].queryExecution.executedPlan match {
+      case a: execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    val attrs = keys.flatMap(k => plan.output.find(a => resolver(a.name, k)))
+    attrs.size == keys.size && plan.outputPartitioning.satisfies(
+      catalyst.plans.physical.ClusteredDistribution(attrs))
+  }
+
   /** Drop every CacheManager entry (the `private[sql]` relation cache
     * behind `DataFrame.persist`). Unpersisting a cached plan's RDDs
     * DIRECTLY (the [[graft.Blocks]] id-delta path) leaves the

@@ -612,6 +612,22 @@ class OperatorEdgeSpec extends AnyFunSuite {
     assert(out.filter(col("v") === 50.0).count() == 1)
   }
 
+  test("clipOutliersIqr: clustered and unclustered inputs give the same rows") {
+    // the window path (input already clustered on the key) and the
+    // bounds-join path must agree row for row, null keys dropped by both
+    val rows = (1 to 60).map(i => (if (i % 20 == 0) null else s"g${i % 3}", i.toLong,
+      if (i % 7 == 0) 1000.0 * i else i.toDouble))
+    val df = rows.toDF("g", "id", "v")
+    val joined = etl.Clean.clipOutliersIqr(df, Seq("g"), Seq("v"), k = 1.5)
+    val clustered = df.repartition(col("g"))
+    assert(org.apache.spark.sql.GraftShims.clusteredOn(clustered, Seq("g")))
+    assert(!org.apache.spark.sql.GraftShims.clusteredOn(df, Seq("g")))
+    val windowed = etl.Clean.clipOutliersIqr(clustered, Seq("g"), Seq("v"), k = 1.5)
+    assert(windowed.columns.toSeq == joined.columns.toSeq)
+    assert(windowed.orderBy("id").collect().toSeq == joined.orderBy("id").collect().toSeq)
+    assert(joined.count() == 57)
+  }
+
   test("clipApproxChecked: sketch quartiles in rank band, clip decisions agree") {
     val out = etl.Clean.clipApproxChecked(Tables.events(spark, sfDir), "event_type", "value")
       .collect()

@@ -195,6 +195,22 @@ class PlanSpec extends AnyFunSuite {
     val exchanges = p.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(exchanges == 1,
       s"expected one shared shuffle for all columns, got $exchanges:\n$p")
+    // one ascending sort (row index + every "prev" aggregate) and one
+    // descending (every "next" aggregate), however many columns
+    val sorts = p.linesIterator.count(_.matches(""".*\bSort \[.*"""))
+    assert(sorts == 2, s"expected 2 sorts for all columns, got $sorts:\n$p")
+  }
+
+  test("IQR clipping over a frame clustered on its key plans no join and no new shuffle") {
+    // the air-quality transform clips right after the interpolation,
+    // whose windows leave the rows hash-partitioned on the station
+    val interpolated = etl.Clean.interpolateLinear(etl.Synth.airQuality(spark, 2, 48),
+      "station", Seq("ts", "reading_id"), etl.AirQualityPipeline.numericCols, maxGap = 3)
+    val p = etl.Clean.clipOutliersIqr(interpolated, Seq("station"), Seq("pm25", "no2"))
+      .queryExecution.executedPlan.toString
+    assert(!p.contains("Join"), s"clustered input still joined to its bounds:\n$p")
+    assert(p.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1,
+      s"clipping re-shuffled the clustered input:\n$p")
   }
 
   test("incremental delta join: bands index scan is bucketed, no Exchange up to the join") {
