@@ -1,23 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.roundStable
+import graft.catalog._
 import graft.etl.{Aggregates, Clean, Features}
-import graft.text.TextStats
-import graft.dedup.NGramJaccard
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the operator
-  * inventory each query implements.
-  *
-  * Conventions shared by every (query, oracle) pair so the driver's
-  * hash-compare is stable:
-  *   - doubles rounded (4dp for many-row sums/avgs, 6dp for per-row math),
-  *   - explicit ORDER BY on a unique key in BOTH engines,
-  *   - BIGINT for all integral outputs,
-  *   - weekday pinned to Monday=0 (Spark `weekday` == DuckDB `isodow-1`),
-  *   - UTC session timezone.
+/** The query catalog and its DuckDB oracle, indexed by query name. Each
+  * query is one [[catalog.Query]] record in its family's file under
+  * `graft.catalog`; SURVEY.md §2 lists the operator each one implements.
   */
 object SparkEntry {
 
@@ -33,13893 +24,20 @@ object SparkEntry {
     Aggregates.dailySummary(feat, "ts", "event_type", "aqi")
   }
 
-  /** Once-per-process index builds for the incremental-lifecycle queries
-    * (q70/q72/q86/q87). Bench runs every query twice (cold + warm);
-    * rebuilding a full LSH/IVF/label index inside the timed body measured
-    * setup cost, not the operator — the steady-state fold is what a 100×
-    * reader needs to see. The fold / replay / compact / read stays IN the
-    * query fn, so the oracle contract is unchanged: the first invocation
-    * in a process exercises the real merge path, later invocations
-    * exercise replay idempotence (gated appends no-op; monotone min-fold
-    * merges append zero rows) and must produce the identical result —
-    * itself part of the contract these queries gate.
-    */
-  private val setupDone = scala.collection.mutable.HashSet.empty[String]
-  private def setupOnce(key: String)(body: => Unit): Unit = synchronized {
-    if (setupDone.add(key)) body
-  }
-
-  /** [[setupOnce]] for a VALUE: memoize a driver-side artifact (a trained
-    * quantizer model) per process+sf. Same rationale — training is the
-    * offline step a production deployment amortizes; the timed body then
-    * measures the steady-state search the 100× reader needs to see.
-    * Determinism is unchanged: the trainers are partition-independent
-    * (spec'd), so the memoized model equals a fresh fit.
-    */
-  /** Supplier co-purchasing graph for the triangle queries: an edge per
-    * supplier pair sharing a part in lineitem, restricted to high-volume
-    * line items — shared-part graphs are near-complete unrestricted, and
-    * the cut keeps wedge volume bench-sane at sf0.1 while leaving a rich
-    * triangle structure. Src < dst by construction.
-    */
-  private def supplierGraph(s: SparkSession, dir: String): DataFrame = {
-    // the l_quantity cut keeps the co-purchasing graph SPARSE (~16%
-    // density at sf0.1 vs near-complete without it) — a complete graph
-    // makes triangle counting degenerate and the wedge join needlessly
-    // heavy. The supplier join exists to keep the graph surface honest
-    // (suppliers are the declared node domain even when every l_suppkey
-    // resolves).
-    val sp = Tables.lineitem(s, dir)
-      .filter(col("l_quantity") > 45)
-      .join(Tables.supplier(s, dir),
-        col("l_suppkey") === col("s_suppkey"))
-      .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-      .distinct()
-    sp.as("r1").join(sp.as("r2"),
-        col("r1.pk") === col("r2.pk") && col("r1.sk") < col("r2.sk"))
-      .select(col("r1.sk").as("src"), col("r2.sk").as("dst"))
-  }
-
-  private val memoDone = scala.collection.mutable.HashMap.empty[String, Any]
-  private def memoOnce[T](key: String)(body: => T): T = synchronized {
-    memoDone.getOrElseUpdate(key, body).asInstanceOf[T]
-  }
-
-  /** Unique memory-sink names for the in-query streaming gates (q386):
-    * Bench runs every query twice in one JVM, so a fixed queryName would
-    * collide with the previous run's registered sink table.
-    */
-  private val sinkCounter = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Self-contained per-query local state dir (q382/q383): DELETED
-    * RECURSIVELY at query entry before being handed to the foreachBatch
-    * bodies. The r13 shape keyed the tmpdir by `dir.hashCode` and relied
-    * on every batch dir ever written being deterministically overwritten
-    * each run — true for the current {0,1}/{0,1,2} grids, but a future
-    * batch-grid change would silently READ stale dirs from a previous
-    * build. Wiping at entry makes the query's output a function of this
-    * run alone (OperatorEdgeSpec plants a stale alien batch dir to prove
-    * it).
-    *
-    * The dir is PER-PROCESS (r15, advisor ask): keyed only by the name,
-    * two graft processes on one box (Verify and Bench concurrently, or
-    * Bench's own fresh-JVM re-measure child) would recursively wipe each
-    * other's LIVE q382/q383/q387/q388 state mid-query — the entry wipe
-    * that makes one process self-contained is destructive across two.
-    * The PID suffix gives each process its own root; cross-run reuse was
-    * never needed (the dir is wiped at entry anyway).
-    */
-  private[graft] def freshLocalStateDir(name: String): String = {
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"$name-p${ProcessHandle.current().pid()}")
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    if (root.exists()) rm(root)
-    root.getAbsolutePath
-  }
-
-  /** Deterministically planted messy URLs for q368/q369 (the q81
-    * plant-in-query discipline): scheme/host case noise, www. and :80
-    * variants, a tracking param, shuffled param order, fragments.
-    */
-  private def plantedUrls(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir).select(col("doc_id"),
-      concat(
-        when(col("doc_id") % 3 === 0, "HTTP").otherwise("http"),
-        lit("://"),
-        when(col("doc_id") % 4 === 0, concat(lit("WWW."), upper(col("source"))))
-          .otherwise(col("source")),
-        lit(".example.com"),
-        when(col("doc_id") % 5 === 0, ":80").otherwise(""),
-        lit("/p/"), (col("doc_id") % 7).cast("string"),
-        lit("?utm_source=feed&b="), (col("doc_id") % 3).cast("string"),
-        lit("&a=1"),
-        when(col("doc_id") % 2 === 0, "#frag").otherwise("")).as("url"))
-
-  /** Continuous-ratings table for q374/q375 (same pooling as q355's
-    * nominal one, raw value kept): one rating per (unit, rater), first
-    * by (ts, event_id).
-    */
-  private def contRatingsFrame(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    Tables.events(s, dir).filter(col("value").isNotNull)
-      .select((col("user_id") % 200).as("unit"),
-        col("event_type").as("rater"), col("value").as("rating"),
-        col("ts"), col("event_id"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("unit"), col("rater"))
-          .orderBy(col("ts"), col("event_id"))))
-      .filter(col("__rn") === 1)
-      .select((col("unit") % 3).as("cohort"), col("unit"), col("rater"),
-        col("rating"))
-  }
-
-  /** Multi-rater ratings table for q355/q356: unit = user_id pooled mod
-    * 200 (so several raters rate one unit), rater = event_type, label =
-    * coarse value bucket, ONE rating per (unit, rater) picked
-    * deterministically (first by ts, event_id); cohort = unit % 3 keys
-    * the agreement readouts.
-    */
-  private def ratingsFrame(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    Tables.events(s, dir).filter(col("value").isNotNull)
-      .select((col("user_id") % 200).as("unit"),
-        col("event_type").as("rater"),
-        when(col("value") < 150, "lo").when(col("value") < 300, "mid")
-          .otherwise("hi").as("label"),
-        col("ts"), col("event_id"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("unit"), col("rater"))
-          .orderBy(col("ts"), col("event_id"))))
-      .filter(col("__rn") === 1)
-      .select((col("unit") % 3).as("cohort"), col("unit"), col("rater"),
-        col("label"))
-  }
-
-  /** Labeling-function vote table for q357: same unit pooling, each
-    * event_type is an LF, NULL value = abstain (kept — the unit still
-    * counts in the coverage denominator).
-    */
-  private def lfVotesFrame(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .select((col("user_id") % 200).as("unit"), col("event_type").as("lf"),
-        when(col("value").isNull, lit(null.asInstanceOf[String]))
-          .when(col("value") < 150, "lo").when(col("value") < 300, "mid")
-          .otherwise("hi").as("label"))
-
-  /** Shared IVF self-candidate pairs for the q350-q352 diagnostics: one
-    * coarse fit + one cell join per dir per process (persisted — three
-    * queries ride it).
-    */
-  private def ivfSelfCand(s: SparkSession, dir: String) =
-    memoOnce(s"ivf-self-cand-$dir") {
-      sim.Candidates.ivfSelfPairs(Tables.embeddings(s, dir), "vec_id",
-          "embedding", kCoarse = 8, nprobe = 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** Prune floor (percent) asserted by the q350-q353 verdicts for the
-    * registered kCoarse=8 / nprobe=2 configuration: CandScale measures
-    * the raw-corpus prune rate at ~0.53-0.55 (both sf0.01 and sf0.1 —
-    * balanced-cell expectation 1 − (1 − C(6,2)/C(8,2)) ≈ 0.536);
-    * 30 % is the conservative floor with ~20 pts of margin, enough to
-    * catch the failure mode that matters (a candidate generator that
-    * silently degenerates to all-pairs prunes 0 %).
-    */
-  private val candPruneFloorPct: Int = 30
-
-  /** FULL-PROBE twin of [[ivfSelfCand]] (nprobe = kCoarse): by
-    * construction every ordered pair — the candidate set the q350-q352
-    * verdicts compare against brute force and count against n·(n−1).
-    * Same coarse fit (memoOnce key differs only by probe width; the
-    * KMeans fit memoizes inside Candidates per call, so two fits run —
-    * once per process, shared by three queries each).
-    */
-  private def ivfFullCand(s: SparkSession, dir: String) =
-    memoOnce(s"ivf-full-cand-$dir") {
-      sim.Candidates.ivfSelfPairs(Tables.embeddings(s, dir), "vec_id",
-          "embedding", kCoarse = 8, nprobe = 8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_agg_daily" -> ((s, dir) =>
-      Aggregates.dailySummary(Tables.events(s, dir), "ts", "event_type", "value")
-        .orderBy(col("d"), col("event_type"))),
-
-    "q02_dedup_exact" -> ((s, dir) =>
-      Clean.dedupExact(Tables.events(s, dir), Seq("user_id", "event_type"), Seq("ts", "event_id"))
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-        .orderBy(col("event_id"))),
-
-    "q03_interpolate" -> ((s, dir) => {
-      // Deterministically inject ~2.7% missing values (the testdata has
-      // none), then per-user ordered linear interpolation, limit 3 — the
-      // reference's interpolate(method='linear', limit=3) per station.
-      val ev = Tables.events(s, dir).withColumn("value",
-        when(col("event_id") % 37 === 0, lit(null)).otherwise(col("value")))
-      Clean.interpolateLinear(ev, "user_id", Seq("ts", "event_id"), "value", maxGap = 3)
-        .select(col("event_id"), roundStable(col("value"), 6).as("value_interp"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q04_outlier_iqr" -> ((s, dir) =>
-      Clean.clipOutliersIqr(Tables.events(s, dir), Seq("event_type"), Seq("value"), k = 3.0)
-        .select(col("event_id"), roundStable(col("value"), 6).as("value_clipped"))
-        .orderBy(col("event_id"))),
-
-    "q05_aqi_piecewise" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .select(col("event_id"), roundStable(Features.aqiPm25(col("value")), 6).as("aqi"))
-        .orderBy(col("event_id"))),
-
-    "q06_categorize" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .select(Features.airQualityCategory(Features.aqiPm25(col("value"))).as("category"))
-        .groupBy(col("category"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("category"))),
-
-    "q07_temporal_features" -> ((s, dir) =>
-      Features.withTemporalFeatures(Tables.events(s, dir), "ts")
-        .select(col("event_id"), col("hour"), col("weekday"), col("is_weekend"),
-          col("is_rush_hour"), col("month"), col("date"))
-        .orderBy(col("event_id"))),
-
-    "q08_composite_index" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          roundStable(Features.compositeIndex(Seq(
-            (col("l_quantity"), 50.0, 0.3),
-            (col("l_extendedprice"), 100000.0, 0.3),
-            (col("l_discount"), 1.0, 0.2),
-            (col("l_tax"), 1.0, 0.2))), 6).as("composite_idx"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))),
-
-    "q09_rolling_mean" -> ((s, dir) =>
-      Aggregates.rollingMeanCentered6(Tables.events(s, dir), "user_id",
-        Seq("ts", "event_id"), "value", "rolling_avg")
-        .select(col("event_id"), roundStable(col("rolling_avg"), 4).as("rolling_avg"))
-        .orderBy(col("event_id"))),
-
-    "q10_corr_matrix" -> ((s, dir) =>
-      Aggregates.corrMatrix(Tables.lineitem(s, dir),
-        Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax"))
-        .orderBy(col("col_a"), col("col_b"))),
-
-    "q11_validate" -> ((s, dir) =>
-      Aggregates.validate(Tables.events(s, dir), "user_id", "ts", "value")),
-
-    "q12_kpi" -> ((s, dir) =>
-      Aggregates.kpis(Tables.events(s, dir), "ts", "value", 50.0)),
-
-    "q13_worst_key" -> ((s, dir) =>
-      Aggregates.worstKey(Tables.events(s, dir), "user_id", "value")),
-
-    "q14_hourly_pattern" -> ((s, dir) =>
-      Aggregates.hourlyPattern(Tables.events(s, dir), "ts", "value")
-        .orderBy(col("hour"))),
-
-    "q15_dow_quartiles" -> ((s, dir) =>
-      Aggregates.dowQuartiles(Tables.events(s, dir), "ts", "value")
-        .orderBy(col("weekday"))),
-
-    "q17_zscore_anomaly" -> ((s, dir) =>
-      Aggregates.zscoreAnomalies(Tables.events(s, dir), "event_type", "value", k = 3.0)
-        .select(col("event_id"), col("event_type"), roundStable(col("z"), 6).as("z"))
-        .orderBy(col("event_id"))),
-
-    "q28_cube" -> ((s, dir) =>
-      Features.withTemporalFeatures(Tables.events(s, dir), "ts")
-        .cube(col("event_type"), col("weekday"))
-        .agg(count(lit(1)).as("n"), roundStable(avg(col("value")), 4).as("avg_value"))
-        .select(coalesce(col("event_type"), lit("ALL")).as("event_type"),
-          coalesce(col("weekday"), lit(-1L)).as("weekday"),
-          col("n"), col("avg_value"))
-        .orderBy(col("event_type"), col("weekday"))),
-
-    "q18_impute_mean" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).withColumn("value",
-        when(col("event_id") % 41 === 0, lit(null)).otherwise(col("value")))
-      Clean.imputeMean(ev, Seq("event_type"), Seq("value"))
-        .select(col("event_id"), roundStable(col("value"), 4).as("value_imputed"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q19_monthly_summary" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(month(col("ts")).cast("long").as("month"), col("event_type"))
-        .agg(roundStable(avg(col("value")), 4).as("avg_value"),
-          roundStable(max(col("value")), 6).as("max_value"),
-          count(lit(1)).as("n"))
-        .orderBy(col("month"), col("event_type"))),
-
-    "q20_join_mstar" -> ((s, dir) => {
-      // Star join: fact (orders) shuffles on c_custkey only if customer is
-      // big; nation/region are always broadcast. At 100 TB this is one
-      // shuffle join + two broadcast joins.
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val n = broadcast(Tables.nation(s, dir))
-      val r = broadcast(Tables.region(s, dir))
-      o.join(c, o("o_custkey") === c("c_custkey"))
-        .join(n, c("c_nationkey") === n("n_nationkey"))
-        .join(r, n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(roundStable(sum(col("o_totalprice")), 4).as("revenue"),
-          count(lit(1)).as("n_orders"))
-        .orderBy(col("r_name"), col("n_name"))
-    }),
-
-    "q21_window_topk" -> ((s, dir) =>
-      Aggregates.topNPerGroup(Tables.orders(s, dir), Seq("o_custkey"),
-        Seq(col("o_totalprice").desc, col("o_orderkey")), 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rank").cast("long").as("rank"))
-        .orderBy(col("o_custkey"), col("rank"))),
-
-    "q22_pivot" -> ((s, dir) => {
-      // Conditional aggregation (pivot without the extra distinct-values
-      // job): one pass, map-side partials.
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val aggs = types.map(t =>
-        roundStable(sum(when(col("event_type") === t, col("value"))), 4).as(t))
-      Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(aggs.head, aggs.tail: _*)
-        .orderBy(col("d"))
-    }),
-
-    "q23_rollup" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val n = broadcast(Tables.nation(s, dir))
-      val r = broadcast(Tables.region(s, dir))
-      c.join(n, c("c_nationkey") === n("n_nationkey"))
-        .join(r, n("n_regionkey") === r("r_regionkey"))
-        .rollup(col("r_name"), col("n_name"))
-        .agg(roundStable(sum(col("c_acctbal")), 4).as("acctbal_sum"),
-          count(lit(1)).as("n_customers"))
-        .select(coalesce(col("r_name"), lit("ALL")).as("region"),
-          coalesce(col("n_name"), lit("ALL")).as("nation"),
-          col("acctbal_sum"), col("n_customers"))
-        .orderBy(col("region"), col("nation"))
-    }),
-
-    "q24_semi_anti" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir)
-      val withO = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .agg(count(lit(1)).as("n")).select(lit("with_orders").as("kind"), col("n"))
-      val withoutO = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .agg(count(lit(1)).as("n")).select(lit("without_orders").as("kind"), col("n"))
-      withO.unionByName(withoutO).orderBy(col("kind"))
-    }),
-
-    "q25_json_extract" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .groupBy(col("event_type"))
-        .agg(roundStable(avg(col("k")), 4).as("avg_k"),
-          sum(col("k")).as("sum_k"), count(col("k")).as("n_k"))
-        .orderBy(col("event_type"))),
-
-    "q26_asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("ts"))
-      val o  = Tables.orders(s, dir)
-      operators.AsOfJoin.latestAtOrBefore(
-        ev, o,
-        leftKey = "user_id", rightKey = "o_custkey",
-        leftTime = "ts", rightTime = "o_orderdate",
-        carryCol = "o_orderdate", outCol = "asof_date")
-        .select(col("event_id"), col("asof_date"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q27_time_bucket" -> ((s, dir) =>
-      // Tumbling 6-hour windows — the batch twin of the streaming path
-      // (same window() call drives streaming.EventStream).
-      Tables.events(s, dir)
-        .groupBy(window(col("ts"), "6 hours").getField("start").as("bucket"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), roundStable(sum(col("value")), 4).as("sum_value"))
-        .orderBy(col("bucket"), col("event_type"))),
-
-    "q16_extract_synth" -> ((s, _) => {
-      // Distributed synthetic extract (reference extract phase).
-      // VERDICT-GATED (r13): the hash noise stays engine content, but
-      // the generator CONTRACT is oracle-assertable — exact row/station/
-      // hour counts and the exact timestamp span as literal VALUES,
-      // plus 1/0s for the documented invariants (per-station row
-      // quota, ~2% missingness within [0, 10%], non-negative
-      // pollutants, temperature/humidity inside their generator
-      // ranges). A generator drifting on any of these breaks the gate.
-      val df = etl.Synth.airQuality(s, stations = 5, hours = 72)
-      df.agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(col("station")).as("n_stations"),
-        countDistinct(col("ts")).as("n_hours"),
-        min(col("ts")).as("min_ts"),
-        max(col("ts")).as("max_ts"),
-        (sum(when(col("pm25").isNull, 1L).otherwise(0L)) * 100L <=
-          count(lit(1)) * 10L).cast("bigint").as("missing_bounded_ok"),
-        (min(col("pm25")) >= 0.0 && min(col("pm10")) >= 0.0 &&
-          min(col("no2")) >= 0.0 && min(col("o3")) >= 0.0 &&
-          min(col("co")) >= 0.0).cast("bigint").as("nonneg_ok"),
-        (min(col("temperature")) >= 10.0 && max(col("temperature")) <= 30.0 &&
-          min(col("humidity")) >= 30.0 && max(col("humidity")) <= 80.0)
-          .cast("bigint").as("ranges_ok"))
-        .crossJoin(df.groupBy(col("station")).agg(count(lit(1)).as("__n"))
-          .agg((min(col("__n")) === 72L && max(col("__n")) === 72L)
-            .cast("bigint").as("station_quota_ok")))
-    }),
-
-    "q40_multimodal_meta" -> ((s, dir) =>
-      multimodal.Binary.withBlobMeta(
-        Tables.documents(s, dir).withColumn("blob", col("text").cast("binary")), "blob")
-        .select(col("doc_id"), col("n_bytes"), col("content_md5"), col("head"))
-        .orderBy(col("doc_id"))),
-
-    "q48_funnel" -> ((s, dir) => {
-      // classic ordered funnel: view → click → purchase, first-touch per
-      // stage per user, strictly increasing timestamps
-      val f = Tables.events(s, dir).groupBy(col("user_id")).agg(
-        min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-        min(when(col("event_type") === "click", col("ts"))).as("t_click"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
-      f.agg(
-        count(when(col("t_view").isNotNull, 1)).as("viewed"),
-        count(when(col("t_view").isNotNull && col("t_click") > col("t_view"), 1))
-          .as("clicked_after_view"),
-        count(when(col("t_view").isNotNull && col("t_click") > col("t_view") &&
-          col("t_purchase") > col("t_click"), 1)).as("purchased_after_click"))
-    }),
-
-    "q49_retention" -> ((s, dir) => {
-      // weekly cohort retention: users grouped by first-activity week,
-      // counted per week-offset of later activity.
-      //
-      // Single pass per user: ONE shuffle on user_id computes both the
-      // cohort (min ts) and the distinct active weeks (collect_set —
-      // bounded: #weeks in the observation window), then one shuffle on
-      // (cohort, offset). The naive shape — distinct + groupBy + join +
-      // countDistinct — is four shuffles of the same data. count(*)
-      // equals countDistinct(user_id) here because a user's distinct
-      // weeks map to distinct offsets (weeks are 7 days apart, so
-      // floor(days/7) never collides) — each user contributes at most
-      // one row per (cohort, offset).
-      val ev = Tables.events(s, dir)
-      ev.groupBy(col("user_id"))
-        .agg(date_trunc("week", min(col("ts"))).as("cohort"),
-          collect_set(date_trunc("week", col("ts"))).as("wks"))
-        .select(col("cohort"), explode(col("wks")).as("wk"))
-        .groupBy(col("cohort"),
-          // Column./ is always fp division — floor+cast pins BIGINT to
-          // match the oracle's integer `// 7`
-          floor(datediff(to_date(col("wk")), to_date(col("cohort"))) / 7).cast("long").as("week_offset"))
-        .agg(count(lit(1)).as("active_users"))
-        .orderBy(col("cohort"), col("week_offset"))
-    }),
-
-    "q46_set_ops" -> ((s, dir) => {
-      // set algebra over key domains: customers who ordered in both
-      // halves of the window (INTERSECT), only the first (EXCEPT), and
-      // either (UNION) — counted per set
-      val o = Tables.orders(s, dir)
-      val mid = "1998-01-01"
-      val early = o.filter(col("o_orderdate") < lit(mid)).select(col("o_custkey"))
-      val late  = o.filter(col("o_orderdate") >= lit(mid)).select(col("o_custkey"))
-      val both    = early.intersect(late).agg(count(lit(1)).as("n"))
-        .select(lit("both").as("set_name"), col("n"))
-      val onlyE   = early.distinct().exceptAll(late.distinct()).agg(count(lit(1)).as("n"))
-        .select(lit("early_only").as("set_name"), col("n"))
-      val either  = early.union(late).distinct().agg(count(lit(1)).as("n"))
-        .select(lit("either").as("set_name"), col("n"))
-      both.unionByName(onlyE).unionByName(either).orderBy(col("set_name"))
-    }),
-
-    "q47_grouping_sets" -> ((s, dir) =>
-      // explicit grouping sets: (event_type, weekday), (event_type), ()
-      Features.withTemporalFeatures(Tables.events(s, dir), "ts")
-        .groupingSets(
-          Seq(Seq(col("event_type"), col("weekday")), Seq(col("event_type")), Seq()),
-          col("event_type"), col("weekday"))
-        .agg(count(lit(1)).as("n"), roundStable(sum(col("value")), 4).as("sum_value"))
-        .select(coalesce(col("event_type"), lit("ALL")).as("event_type"),
-          coalesce(col("weekday"), lit(-1L)).as("weekday"),
-          col("n"), col("sum_value"))
-        .orderBy(col("event_type"), col("weekday"))),
-
-    "q30_tokens" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          TextStats.wsTokenCount(col("text")).as("ws_tokens"),
-          TextStats.reTokenCount(col("text")).as("re_tokens"))
-        .orderBy(col("doc_id"))),
-
-    "q31_quality_score" -> ((s, dir) => {
-      val stops = Seq("the", "a")
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          roundStable(TextStats.punctRatio(col("text")), 6).as("punct_ratio"),
-          roundStable(TextStats.stopwordRatio(col("text"), stops), 6).as("stopword_ratio"),
-          roundStable(TextStats.meanWordLen(col("text")), 6).as("mean_word_len"),
-          roundStable(TextStats.qualityScore(col("text"), stops), 6).as("quality"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q32_langid" -> ((s, dir) => {
-      val (en, es, zh) = TextStats.langIdScores(col("text"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), en.as("s_en"), es.as("s_es"), zh.as("s_zh"),
-          TextStats.langId(col("text")).as("predicted_lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q33_fingerprint" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TextStats.fingerprint(col("text")).as("fp"))
-        .withColumn("n_same", count(lit(1)).over(Window.partitionBy(col("fp"))).cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q35_minhash_lsh" -> ((s, dir) =>
-      // Oracle = the exact-Jaccard SQL at the same threshold: banding at
-      // b=32/r=4 has ~1e-15 miss probability for the >=0.9 planted dups,
-      // and exact verification removes every false positive.
-      dedup.MinHashLsh.similarPairs(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, minJaccard = 0.8)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-          roundStable(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))),
-
-    "q36_simhash" -> ((s, dir) => {
-      // VERDICT-GATED (r13, the q38 twin-corpus trick): SimHash pair
-      // content is xxhash64-based engine content, but on a corpus
-      // augmented with exact-duplicate twins (every 5th doc under a
-      // shifted id) recall is 1 BY CONSTRUCTION — identical text ⇒
-      // identical 64-bit fingerprint ⇒ identical bands ⇒ hamming 0 —
-      // so `twins_found_at_zero` is an exact VALUE the oracle
-      // recomputes, and the structural contracts (hamming ∈ [0, max],
-      // id_a < id_b, pairs distinct) flatten to asserted 1/0s.
-      val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val pairs = dedup.SimHash.nearDupPairs(docs.unionByName(twins),
-        "doc_id", "text", maxHamming = 6)
-      pairs.agg(
-        sum(when(col("id_a") % 5 === 0 &&
-          col("id_b") === col("id_a") + 1000000L &&
-          col("hamming") === 0, 1L).otherwise(0L)).as("twins_found_at_zero"),
-        min(col("hamming") >= 0 && col("hamming") <= 6)
-          .cast("bigint").as("hamming_bounded_ok"),
-        min(col("id_a") < col("id_b")).cast("bigint").as("ordered_ok"),
-        (count(lit(1)) === countDistinct(col("id_a"), col("id_b")))
-          .cast("bigint").as("distinct_ok"))
-    }),
-
-    "q37_cosine_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      sim.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "q38_embed_neardup" -> ((s, dir) => {
-      // Embedding near-dup through the SCALE path: LshAnn.nearDupPairs at
-      // its >=0.8 design point (bucketed bands + exact verification), with
-      // brute force demoted to the DuckDB oracle. The raw embeddings table
-      // has NO pairs above 0.8 cosine (measured: densest pair is ~0.6), so
-      // the corpus re-adds every 5th vector under a shifted id — exact
-      // duplicates, so the LSH output equals brute force BY CONSTRUCTION
-      // (identical vectors hash to identical buckets in every table;
-      // recall is exactly 1, not 1−ε — no probabilistic equality in an
-      // oracle-checked query). Cross pairs sit near 0 cosine and are
-      // removed by the exact verify stage, which is the part that does
-      // the real work at corpus scale. Low-threshold near-dup keeps the
-      // brute-force contract in Similarity.nearDupPairs (spec-verified) —
-      // hashing is fundamentally hostile below ~0.8 (p_bit→1/2).
-      val emb = Tables.embeddings(s, dir)
-      val twins = emb.filter(col("vec_id") % 5 === 0)
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      val corpus = emb.select(col("vec_id"), col("embedding")).unionByName(twins)
-      sim.LshAnn.nearDupPairs(corpus, "vec_id", "embedding", dim = 64, minCosine = 0.9)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "q39_ann_lsh" -> ((s, dir) => {
-      // VERDICT-GATED (r13): the LSH neighbor list is hash-bucket
-      // content — engine-specific, but DETERMINISTIC (seeded planes,
-      // rounded-score id-tiebroken ranks) — so the query cross-checks
-      // it in-query against the brute-force truth and emits the q62
-      // verdict row: counts by value, coverage/sortedness/recall as
-      // 1/0s the oracle asserts. Floor 0.6 vs 0.98 measured at both
-      // gate SFs in r13 (AnnFloorProbe, since deleted; see SURVEY.md
-      // r13) — a real recall collapse breaks the hash gate; box noise
-      // cannot. To re-measure a floor before touching it: compare
-      // `sim.AnnVerdict.meanRecall(ann, truth, k)` against
-      // `sim.Similarity.bruteForceTopK` at sf0.001 and sf0.01.
-      val emb = Tables.embeddings(s, dir)
-      val ann = sim.LshAnn.topK(emb, "vec_id", "embedding",
-        isQuery = col("vec_id") < 10, dim = 64, k = 5)
-      val truth = sim.Similarity.bruteForceTopK(emb,
-        emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-      sim.AnnVerdict.topKVerdict(ann, truth, k = 5, recallFloor = 0.6)
-    }),
-
-    "q44_tfidf" -> ((s, dir) =>
-      text.Tfidf.scores(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id"), col("term"), col("tf"), col("df"),
-          roundStable(col("tfidf"), 6).as("tfidf"))
-        .orderBy(col("tfidf").desc, col("doc_id"), col("term"))
-        .limit(50)),
-
-    "q45_sessions_batch" -> ((s, dir) =>
-      Aggregates.sessionizeBatch(Tables.events(s, dir), "user_id", "ts", "event_id",
-        "value", gapMicros = 1800L * 1000000L)
-        .select(col("user_id"), col("session_n"), col("session_start"),
-          col("session_end"), col("n_events"), col("sum_value"))
-        .orderBy(col("user_id"), col("session_n"))),
-
-    "q42_term_freq" -> ((s, dir) =>
-      // corpus vocabulary statistics: term + document frequency per token
-      Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        .groupBy(col("term"))
-        .agg(count(lit(1)).as("tf"), countDistinct(col("doc_id")).as("df"))
-        .orderBy(col("tf").desc, col("term"))
-        .limit(20)),
-
-    "q43_dedup_survivors" -> ((s, dir) => {
-      // end-to-end near-dup removal: drop the higher-id doc of every
-      // >=0.8-Jaccard pair; survivors = docs never appearing as doc_b.
-      // Pair generation uses the EXACT NGramJaccard join (PPJoin-style
-      // prefix filter: only the first |d|−⌈t·|d|⌉+1 sorted shingles are
-      // indexed, tight at t=0.8, with exact verification) — so the query
-      // equals its oracle DETERMINISTICALLY, not up to a recall term. The
-      // probabilistic MinHash+LSH path stays the measured scale
-      // alternative (q35 + DedupScale assert its contract); an
-      // oracle-gated query must not carry even a ~5e-8 per-pair flake.
-      val pairs = NGramJaccard.similarPairs(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, minJaccard = 0.8)
-        .select(col("id_b").as("doc_id"))
-      Tables.documents(s, dir)
-        .join(pairs, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q41_ivf_topk" -> ((s, dir) =>
-      // IVF with PRE-ASSIGNED coarse centroids (the `label` column) — the
-      // production shape where assignment happens offline. Fully
-      // deterministic → real SQL oracle. The in-engine trainer variant is
-      // q51 (verdict-gated: Lloyd's iterations aren't expressible in one
-      // SQL query, so q51 cross-checks its search contract in-query and
-      // the oracle asserts the flattened verdicts).
-      sim.IvfAnn.topK(Tables.embeddings(s, dir), "vec_id", "embedding", "label",
-        isQuery = col("vec_id") < 10, k = 5)
-        .orderBy(col("query_id"), col("rank"))),
-
-    "q51_ivf_kmeans" -> ((s, dir) => {
-      // Self-contained IVF: deterministic k-means computes the coarse
-      // centroids in-engine, then the same cluster-bucketed search.
-      // NOTE: the testdata's `label` is NOT geometric (intra-label cosine
-      // ≈ inter-label ≈ 0), so a trained clustering legitimately differs
-      // from q41's pre-assigned one; the trainer is spec-verified
-      // (planted-cluster recovery + partition-independence).
-      // farthest-point seeding: at k=10 its k sequential scans beat
-      // k-means||'s fewer-but-heavier passes (measured 5.9 s vs 10.7 s
-      // at sf0.1). VERDICT-GATED (r13): on a geometry-free corpus the
-      // trained search's CONTRACT is "exactly the brute-force top-k of
-      // the query's cell" — checked in-query against an independent
-      // truth path (global brute-force ranking filtered to the cell)
-      // and flattened to 1/0s + exact counts the oracle asserts.
-      val assigned = sim.KMeans.fitAssign(Tables.embeddings(s, dir),
-        "vec_id", "embedding", k = 10, iters = 3)
-      sim.AnnVerdict.cellTopKVerdict(assigned, "vec_id", "embedding",
-        "cluster", isQuery = col("vec_id") < 10, k = 5)
-    }),
-
-    "q34_ngram_jaccard" -> ((s, dir) =>
-      NGramJaccard.similarPairs(Tables.documents(s, dir), "doc_id", "text", n = 3, minJaccard = 0.5)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-          roundStable(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))),
-
-    "q65_session_window" -> ((s, dir) =>
-      // Spark's NATIVE session windows (the built-in counterpart of the
-      // hand-rolled q45 lag-based sessionization; also the streaming
-      // session primitive). Boundary semantics: a new session starts
-      // when the gap is >= 30 min (merge iff next < prev_end), which the
-      // oracle mirrors with >=.
-      Tables.events(s, dir)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"),
-          roundStable(sum(col("value")), 4).as("sum_value"))
-        .select(col("user_id"),
-          col("sw.start").as("session_start"),
-          col("sw.end").as("session_end"),
-          col("n_events"), col("sum_value"))
-        .orderBy(col("user_id"), col("session_start"))),
-
-    "q63_hof_battery" -> ((s, dir) =>
-      // higher-order-function battery over array columns: aggregate /
-      // filter / transform / array_max — all codegen'd Catalyst HOFs,
-      // mirrored by DuckDB list functions in the oracle
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          size(filter(col("embedding"), x => x > 0f)).cast("long").as("n_pos"),
-          roundStable(array_max(col("embedding")).cast("double"), 6).as("vmax"),
-          roundStable(array_min(col("embedding")).cast("double"), 6).as("vmin"),
-          roundStable(
-            aggregate(col("embedding"), lit(0.0), (acc, x) => acc + x.cast("double")) /
-              size(col("embedding")).cast("double"), 6).as("vmean"),
-          roundStable(sqrt(aggregate(col("embedding"), lit(0.0),
-            (acc, x) => acc + x.cast("double") * x.cast("double"))), 6).as("l2"))
-        .orderBy(col("vec_id"))),
-
-    "q66_dedup_clusters" -> ((s, dir) => {
-      // the third dedup stage: pair EDGES (exact >=0.8 Jaccard) →
-      // transitive CLUSTERS via min-label connected components — a↔b,
-      // b↔c collapse to one canonical doc even though (a,c) was never a
-      // pair. Canonical = min doc_id per component; singleton docs are
-      // their own cluster. The oracle computes the same closure with a
-      // recursive CTE.
-      val docs = Tables.documents(s, dir)
-      val pairs = NGramJaccard.similarPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.8)
-      val comps = operators.ConnectedComponents.minLabel(pairs, "id_a", "id_b")
-      docs.select(col("doc_id"))
-        .join(comps.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
-        .withColumn("is_canonical", (col("doc_id") === col("cluster_id")).cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q67_range_join" -> ((s, dir) => {
-      // interval join WITHOUT the BroadcastNestedLoopJoin cliff: per
-      // shipment, count orders placed in the 2-day window ending at the
-      // ship date. RangeJoin.binned keys points by time bin and explodes
-      // each interval over its overlapping bins — an equi-join + exact
-      // filter (plan-spec-asserted no BNLJ); the oracle is the naive
-      // BETWEEN join.
-      val li = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-03-01").cast("timestamp") &&
-          col("l_shipdate") <= lit("1995-04-30").cast("timestamp"))
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          col("l_shipdate"))
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderdate").as("lo"),
-          (col("o_orderdate") + expr("INTERVAL 1 DAY")).as("hi"))
-      operators.RangeJoin.binned(li, ord, "l_shipdate", "lo", "hi",
-          binMicros = 2L * 86400L * 1000000L)
-        .groupBy(col("l_orderkey"), col("l_linenumber"))
-        .agg(count(lit(1)).as("n_recent_orders"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    "q62_validate_sketch" -> ((s, dir) =>
-      // the 100 TB swap-in for exact validation: HLL++ cardinality +
-      // single-pass approx quartiles, cross-checked in-query against the
-      // exact twins. Exact columns compare by value; sketch columns are
-      // flattened to scalar 1/0 accuracy verdicts the oracle asserts as
-      // literal 1s — raw sketch values are engine-specific and stay out
-      // of the compared output. (validateApprox is the production shape;
-      // its accuracy is additionally spec-asserted.)
-      etl.Aggregates.validateSketchChecked(Tables.events(s, dir), "user_id", "ts", "value")),
-
-    "q68_clip_approx" -> ((s, dir) =>
-      // the same proof for the IQR clip (reference dag:170-177):
-      // approx_percentile is SURVEY §5's promised 100 TB constant-swap
-      // for clipOutliersIqr's exact quantiles — exact quartiles/bounds
-      // compare by value, the sketch side flattens to 1/0 verdicts
-      // (rank-band containment + end-to-end clip-decision agreement)
-      // the oracle asserts as literal 1s
-      etl.Clean.clipApproxChecked(Tables.events(s, dir), "event_type", "value")
-        .orderBy(col("event_type"))),
-
-    "q69_cluster_star" -> ((s, dir) => {
-      // q66's contract through the OTHER components algorithm: the
-      // alternating large-star/small-star contraction (diameter-
-      // independent, O(log²n) rounds) must reproduce the recursive-CTE
-      // transitive closure exactly — proving the adversarial-topology
-      // fallback against the same oracle as the propagation path
-      val docs = Tables.documents(s, dir)
-      val pairs = NGramJaccard.similarPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.8)
-      val comps = operators.ConnectedComponents.starComponents(pairs, "id_a", "id_b")
-      docs.select(col("doc_id"))
-        .join(comps.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
-        .withColumn("is_canonical", (col("doc_id") === col("cluster_id")).cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q70_incremental_dedup" -> ((s, dir) => {
-      // the production ingest shape, driver-gated: rebuild a small LSH
-      // index over the corpus (rebuild semantics keep Bench's cold+warm
-      // double run idempotent), then dedup a planted delta — twins of
-      // every 7th doc under fresh ids — against it WITHOUT recomputing
-      // any corpus-vs-corpus pair. Oracle = the exact-Jaccard closure
-      // over corpus ∪ delta RESTRICTED to pairs touching the delta: the
-      // O(delta) join must say exactly what a full recompute would have
-      // said about the new docs (banding at b=32/r=4 has ~1e-15 miss
-      // probability at j≥0.8, and exact verification kills every false
-      // positive — same argument as q35). Index build hoisted to the
-      // once-per-process setup: deltaPairs never mutates the index, so
-      // every invocation sees the identical corpus index and the timed
-      // body is the O(delta) fold alone.
-      val docs = Tables.documents(s, dir).select("doc_id", "text")
-      setupOnce(s"q70idx|$dir") {
-        dedup.IncrementalDedup.writeIndex(docs, "doc_id", "text", "q70idx", buckets = 4)
-      }
-      val delta = docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      dedup.IncrementalDedup.deltaPairs(s, delta, "doc_id", "text", "q70idx", minJaccard = 0.8)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-          roundStable(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "q71_ivfpq_topk" -> ((s, dir) => {
-      // IVF-PQ composed: nprobe coarse cells -> ADC scan of only those
-      // cells' codes -> bounded exact re-rank. Probe-bounded candidate
-      // count and the probe-join-below-explode plan shape stay
-      // spec-asserted. Training hoisted to the once-per-process memo
-      // (the q87 discipline: quantizer training is the offline step a
-      // deployment amortizes), so Bench times the probe path.
-      val emb = Tables.embeddings(s, dir)
-      val mdl = memoOnce(s"q71mdl|$dir") {
-        sim.IvfPq.fit(emb, "vec_id", "embedding", dim = 64,
-          kCoarse = 16, coarseIters = 3, pqIters = 3)
-      }
-      // nprobe=8 of 16 cells: the synthetic embeddings have no cluster
-      // geometry (intra-label ≈ inter-label cosine), so neighbors spread
-      // across cells — half the cells probed keeps recall@5 >= 0.8
-      // (spec-measured; real clustered embeddings take nprobe << kCoarse).
-      // VERDICT-GATED (r13): q62 verdict row, floor 0.6 vs 0.82-0.84
-      // measured in r13 at both gate SFs (AnnFloorProbe, since deleted;
-      // see SURVEY.md r13; re-measure as at q39).
-      val ann = sim.IvfPq.topK(emb, "vec_id", "embedding",
-        isQuery = col("vec_id") < 10, dim = 64, k = 5, nprobe = 8,
-        model = Some(mdl))
-      val truth = sim.Similarity.bruteForceTopK(emb,
-        emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-      sim.AnnVerdict.topKVerdict(ann, truth, k = 5, recallFloor = 0.6)
-    }),
-
-    "q73_ivfrq_topk" -> ((s, dir) => {
-      // q71 with residual-trained codebooks (IVFADC, Jégou et al. TPAMI
-      // 2011): PQ quantizes v − c_cell and the ADC score adds the
-      // per-probe ⟨q, c_cell⟩ offset. Identical distributed plan to q71
-      // — the refinement is all in the driver-side constants — so this
-      // gates that the residual constants don't corrupt the probe-bounded
-      // scan. Residual training hoisted to the memo like q71's.
-      val emb = Tables.embeddings(s, dir)
-      val mdl = memoOnce(s"q73mdl|$dir") {
-        sim.IvfPq.fit(emb, "vec_id", "embedding", dim = 64,
-          kCoarse = 16, coarseIters = 3, pqIters = 3, residual = true)
-      }
-      // VERDICT-GATED (r13): q62 verdict row, floor 0.6 vs 0.80-0.86
-      // measured in r13 at both gate SFs (AnnFloorProbe, since deleted;
-      // see SURVEY.md r13; re-measure as at q39).
-      val ann = sim.IvfPq.topK(emb, "vec_id", "embedding",
-        isQuery = col("vec_id") < 10, dim = 64, k = 5, nprobe = 8,
-        model = Some(mdl))
-      val truth = sim.Similarity.bruteForceTopK(emb,
-        emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-      sim.AnnVerdict.topKVerdict(ann, truth, k = 5, recallFloor = 0.6)
-    }),
-
-    "q72_stream_dedup_fold" -> ((s, dir) => {
-      // the streaming ingest fold, driver-gated: same planted delta as
-      // q70, but pushed through DedupStream.dedupBatch TWICE with the
-      // same batch id — the at-least-once replay case. The second fold
-      // runs with the delta already in the index (appendToIndex's gate
-      // makes the re-append a no-op; deltaPairs' self-pair guard plus
-      // candidate distinct() keep the emitted pairs identical), so the
-      // batch directory this query returns must STILL equal the exact
-      // closure restricted to delta-touching pairs — idempotence joins
-      // the oracle gate instead of riding on specs alone. Corpus index
-      // build hoisted to the once-per-process setup; warm invocations
-      // run with the delta already appended, i.e. every fold after the
-      // first is the replay case this query exists to gate.
-      val docs = Tables.documents(s, dir).select("doc_id", "text")
-      setupOnce(s"q72idx|$dir") {
-        dedup.IncrementalDedup.writeIndex(docs, "doc_id", "text", "q72idx", buckets = 4)
-      }
-      val delta = docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val pairsPath = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_q72_pairs").getAbsolutePath
-      streaming.DedupStream.dedupBatch(delta, 0L, "doc_id", "text", "q72idx",
-        pairsPath, minJaccard = 0.8)
-      streaming.DedupStream.dedupBatch(delta, 0L, "doc_id", "text", "q72idx",
-        pairsPath, minJaccard = 0.8)
-      s.read.parquet(s"$pairsPath/batch=0")
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-          roundStable(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "q60_text_normalize" -> ((s, dir) =>
-      // LLM-pipeline text canonicalization: lowercase, mask URLs and
-      // emails, collapse whitespace — all codegen'd string expressions
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(lower(col("text")),
-                "https?://[^ ]+", "<url>"),
-              "[a-z0-9.]+@[a-z0-9.]+", "<email>"),
-            "  +", " ").as("norm_text"))
-        .withColumn("n_chars_norm", length(col("norm_text")).cast("long"))
-        .orderBy(col("doc_id"))),
-
-    "q61_quality_filter" -> ((s, dir) => {
-      // end-to-end LLM corpus filter: keep documents passing the
-      // composite quality gate (score, language, token range) — the
-      // selection step that feeds a training-data pipeline
-      val stops = Seq("the", "a")
-      val toks = TextStats.wsTokenCount(col("text"))
-      Tables.documents(s, dir)
-        .withColumn("quality", TextStats.qualityScore(col("text"), stops))
-        .withColumn("lang", TextStats.langId(col("text")))
-        .withColumn("n_toks", toks)
-        .filter(col("quality") >= 0.5 && col("lang") === "en" &&
-          col("n_toks").between(20, 150))
-        .select(col("doc_id"), roundStable(col("quality"), 6).as("quality"),
-          col("n_toks"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q59_blob_features" -> ((s, dir) => {
-      // multimodal featurize path under the driver (not just specs):
-      // binary blobs → batched mapPartitions decode/featurize (decode
-      // stubbed as deterministic byte statistics — no codecs in env).
-      // VERDICT-GATED (r13): the stub's byte COUNT flows from the
-      // batched UDF output and compares BY VALUE per row (it must
-      // equal the blob's UTF-8 octet length — DuckDB recomputes it);
-      // the decode-specific mean-byte statistic stays engine content,
-      // flattened to a range verdict. The batched plumbing (batch
-      // shape, schema, partition independence) remains spec'd.
-      import s.implicits._
-      val blobs = Tables.documents(s, dir)
-        .select(col("doc_id").as("id"), col("text").cast("binary").as("bytes"))
-        .as[multimodal.Binary.Blob]
-      multimodal.Binary.featurize(blobs, batchSize = 64).toDF()
-        .select(col("id").as("doc_id"), col("nBytes").as("n_bytes"),
-          (col("meanByte") >= 0.0 && col("meanByte") <= 255.0)
-            .cast("bigint").as("mean_byte_bounded_ok"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q56_tpch_pricing" -> ((s, dir) =>
-      // TPC-H Q1 shape: date-filtered multi-aggregate pricing summary.
-      // The filter reaches the parquet scan (PushedFilters); aggregation
-      // is partial+final over two low-cardinality keys.
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") <= lit("1998-09-02"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          roundStable(sum(col("l_quantity")), 4).as("sum_qty"),
-          roundStable(sum(col("l_extendedprice")), 4).as("sum_base_price"),
-          roundStable(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4).as("sum_disc_price"),
-          roundStable(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))), 4).as("sum_charge"),
-          roundStable(avg(col("l_quantity")), 6).as("avg_qty"),
-          roundStable(avg(col("l_extendedprice")), 4).as("avg_price"),
-          roundStable(avg(col("l_discount")), 6).as("avg_disc"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))),
-
-    "q57_promo_share" -> ((s, dir) => {
-      // part-dimension join (broadcast) + conditional aggregation:
-      // promo revenue share per brand (TPC-H Q14 generalized)
-      val li = Tables.lineitem(s, dir)
-      val p = broadcast(Tables.part(s, dir))
-      val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      li.join(p, col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(
-          roundStable(sum(when(col("p_type") === "PROMO", rev).otherwise(lit(0.0))), 4).as("promo_rev"),
-          roundStable(sum(rev), 4).as("total_rev"),
-          count(lit(1)).as("n"))
-        .withColumn("promo_share",
-          roundStable(col("promo_rev") / col("total_rev"), 6))
-        .orderBy(col("p_brand"))
-    }),
-
-    "q58_supplier_revenue" -> ((s, dir) => {
-      // two-level dimension chain: lineitem ⋈ supplier ⋈ nation, revenue
-      // per nation — both dims broadcast, fact never shuffles before agg
-      val li = Tables.lineitem(s, dir)
-      val sup = broadcast(Tables.supplier(s, dir))
-      val n = broadcast(Tables.nation(s, dir))
-      li.join(sup, col("l_suppkey") === col("s_suppkey"))
-        .join(n, col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(roundStable(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4).as("revenue"),
-          count(lit(1)).as("n_items"))
-        .orderBy(col("n_name"))
-    }),
-
-    "q55_window_suite" -> ((s, dir) => {
-      // analytic window battery: lead/lag/ntile/percent_rank/cume_dist
-      // over one keyed sort — all five functions share the same window
-      // spec, so Catalyst plans ONE shuffle+sort
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-          lag(col("o_totalprice"), 1).over(w).as("prev_price"),
-          lead(col("o_totalprice"), 1).over(w).as("next_price"),
-          ntile(4).over(w).cast("long").as("quartile"),
-          roundStable(percent_rank().over(w), 6).as("pct_rank"),
-          roundStable(cume_dist().over(w), 6).as("cume"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
-
-    "q53_salted_agg" -> ((s, dir) =>
-      // Two-phase salted aggregation under the DRIVER oracle (not just
-      // specs): result must equal a plain GROUP BY regardless of the salt.
-      // Salt derives from the deterministic event_id so the partial stage
-      // is reproducible under task retry (no RNG anywhere in the plan).
-      operators.Skew.saltedSum(Tables.events(s, dir), Seq("event_type"), "value", buckets = 8,
-        saltFrom = Some("event_id"))
-        .select(col("event_type"),
-          roundStable(col("sum_value"), 4).as("sum_value"),
-          col("n"),
-          roundStable(col("avg_value"), 6).as("avg_value"))
-        .orderBy(col("event_type"))),
-
-    "q54_asof_forward" -> ((s, dir) => {
-      // forward as-of join: earliest order at or after each event
-      val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("ts"))
-      val o  = Tables.orders(s, dir)
-      operators.AsOfJoin.earliestAtOrAfter(
-        ev, o,
-        leftKey = "user_id", rightKey = "o_custkey",
-        leftTime = "ts", rightTime = "o_orderdate",
-        carryCol = "o_orderdate", outCol = "asof_next")
-        .select(col("event_id"), col("asof_next"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q52_pq_topk" -> ((s, dir) => {
-      // Product-quantization ANN: 32× compressed codes + ADC scan +
-      // bounded exact re-rank. VERDICT-GATED (r13): codebooks are
-      // trained (engine content) but deterministic — the q62 verdict
-      // row rides the oracle with floor 0.75 vs 0.90-0.94 measured in
-      // r13 at both gate SFs (AnnFloorProbe, since deleted; see
-      // SURVEY.md r13; re-measure as at q39).
-      val emb = Tables.embeddings(s, dir)
-      val ann = sim.ProductQuantizer.topK(emb, "vec_id", "embedding",
-        isQuery = col("vec_id") < 10, dim = 64, k = 5)
-      val truth = sim.Similarity.bruteForceTopK(emb,
-        emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-      sim.AnnVerdict.topKVerdict(ann, truth, k = 5, recallFloor = 0.75)
-    }),
-
-    "q50_interpolate_multi" -> ((s, dir) => {
-      // Multi-column interpolation, the reference's actual shape
-      // (dag:161-167 loops 7 numeric columns per station): two value
-      // series with DIFFERENT null patterns share one keyed sort.
-      val ev = Tables.events(s, dir)
-        .withColumn("value",
-          when(col("event_id") % 37 === 0, lit(null)).otherwise(col("value")))
-        .withColumn("k2",
-          when(col("event_id") % 29 === 0, lit(null))
-            .otherwise(get_json_object(col("props"), "$.k").cast("double")))
-      Clean.interpolateLinear(ev, "user_id", Seq("ts", "event_id"),
-        Seq("value", "k2"), maxGap = 3)
-        .select(col("event_id"),
-          roundStable(col("value"), 6).as("value_interp"),
-          roundStable(col("k2"), 6).as("k2_interp"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q74_repetition" -> ((s, dir) =>
-      // Gopher-style repetition quality signals: top-bigram coverage
-      // fraction + distinct-token ratio per document. Explode → two
-      // partial-agg keyed shuffles; no per-doc driver work.
-      text.Corpus.repetitionStats(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-
-    "q75_domain_mix" -> ((s, dir) =>
-      // temperature-scaled domain sampling weights (share^0.5,
-      // renormalized): one corpus aggregation to #domains rows, totals
-      // via tiny broadcast cross-joins
-      text.Corpus.mixWeights(Tables.documents(s, dir), "lang", "text", alpha = 0.5)
-        .orderBy(col("lang"))),
-
-    "q76_chunk_windows" -> ((s, dir) =>
-      // sliding-window context chunking (window 32, stride 24): pure
-      // narrow map — sequence + explode + slice, zero shuffles before
-      // the presentation sort
-      text.Corpus.chunkWindows(Tables.documents(s, dir), "doc_id", "text",
-        window = 32, stride = 24)
-        .orderBy(col("doc_id"), col("chunk_idx"))),
-
-    "q77_contamination" -> ((s, dir) => {
-      // benchmark decontamination: distinct 4-gram shingle overlap of
-      // the corpus (source != src0) against the benchmark slice
-      // (source = src0); benchmark side broadcast, one keyed count
-      val docs = Tables.documents(s, dir)
-      text.Corpus.contamination(
-        docs.filter(col("source") =!= "src0"),
-        docs.filter(col("source") === "src0"),
-        "doc_id", "text", n = 4)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q100_contamination_bloom" -> ((s, dir) => {
-      // q77's 100 TB form: the benchmark side compresses to a bloom
-      // filter (MB-scale literal vs a multi-GB string broadcast for a
-      // real decontamination suite); corpus shingles pre-filter map-only
-      // and only filter-positive rows join for the exact confirm. Same
-      // oracle as q77 — the filter routes rows, never decides
-      // membership, so the output must be bit-identical.
-      val docs = Tables.documents(s, dir)
-      text.Corpus.contaminationBloom(
-        docs.filter(col("source") =!= "src0"),
-        docs.filter(col("source") === "src0"),
-        "doc_id", "text", n = 4)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q101_epoch_shuffle" -> ((s, dir) =>
-      // deterministic epoch-1 corpus reshuffle into 8 shards: the
-      // epoch-salted hash is the order key AND the placement — map-only,
-      // no global row_number rank, replayed exactly by the oracle's
-      // int64 arithmetic. Epoch-vs-epoch divergence and the sorted
-      // shard-partitioned landing are spec'd (writeShards).
-      text.Corpus.epochShuffle(Tables.documents(s, dir), "doc_id",
-          epoch = 1, numShards = 8)
-        .orderBy(col("doc_id"))),
-
-    "q102_fuzzy_match" -> ((s, dir) =>
-      // edit-distance record linkage over the distinct part names:
-      // lossless length-band blocking (dist >= |len diff|) restores an
-      // equi-join where bare levenshtein <= d would plan a nested-loop
-      // cross; the banded levenshtein(threshold) verifies in O(d·len).
-      operators.FuzzyJoin.fuzzyPairs(Tables.part(s, dir), "p_name",
-          maxDist = 3)
-        .orderBy(col("s_a"), col("s_b"))),
-
-    "q103_int8_quant" -> ((s, dir) => {
-      // int8 scalar quantization of the embedding corpus — per-vector
-      // scale/codes are pure deterministic arithmetic (round-half-up via
-      // floor(x·scale + 0.5)), so the oracle replays the compression
-      // bit-identically; reconstruction RMSE is recomputed from the
-      // codes in-query. The search path over the codes is q105 + spec.
-      val q = sim.ScalarQuant.quantize(Tables.embeddings(s, dir),
-        "vec_id", "embedding")
-      val scale = col("scale")
-      val errs = zip_with(col("__v"), col("codes"), (x, c) => {
-        val e = x - when(scale > 0, c.cast("double") / scale).otherwise(lit(0.0))
-        e * e
-      })
-      q.join(Tables.embeddings(s, dir).select(col("vec_id"),
-          transform(col("embedding"), _.cast("double")).as("__v")), Seq("vec_id"))
-        .select(col("vec_id"), roundStable(scale, 6).as("scale_r"),
-          size(col("codes")).cast("long").as("n_dims"),
-          aggregate(col("codes"), lit(0L), (a, c) => a + c).as("sum_codes"),
-          array_min(col("codes")).cast("long").as("min_code"),
-          array_max(col("codes")).cast("long").as("max_code"),
-          roundStable(sqrt(
-            aggregate(errs, lit(0.0), (a, e) => a + e) / size(col("codes"))),
-            6).as("rmse_r"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "q104_bm25" -> ((s, dir) => {
-      // BM25 top-10 retrieval: queries are the 4-token prefixes of the
-      // five lowest-id documents (derived in-query so the oracle
-      // recomputes the same query set); scores rounded before ranking,
-      // doc_id tie-break — oracle-stable by the q44 discipline.
-      val docs = Tables.documents(s, dir)
-      val q5 = docs.orderBy("doc_id").limit(5)
-        .select(col("doc_id").as("qid"),
-          concat_ws(" ", slice(text.TextStats.tokens(col("text")), 1, 4))
-            .as("qtext"))
-      text.Retrieval.bm25TopK(docs, q5, "doc_id", "text", "qid", "qtext",
-          k = 10)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    "q105_int8_topk" -> ((s, dir) => {
-      // top-5 cosine through the int8 scan (4× over-fetch on the
-      // quantized ranking, exact rescore on the sliver). VERDICT-GATED
-      // (r13): q62 verdict row, floor 0.85 vs 1.00 measured at both
-      // gate SFs (the 4× over-fetch recovers every quantization miss
-      // on this corpus; spec floor 0.9 at sf0.001).
-      val emb = Tables.embeddings(s, dir)
-      val ann = sim.ScalarQuant.topK(emb, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", k = 5)
-      val truth = sim.Similarity.bruteForceTopK(emb,
-        emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-      sim.AnnVerdict.topKVerdict(ann, truth, k = 5, recallFloor = 0.85)
-    }),
-
-    "q109_group_sample" -> ((s, dir) =>
-      // exact per-domain quota: keep <= 40 docs per source, selected by
-      // the width-safe hash order — deterministic, engine-replayable,
-      // one keyed window shuffle (no global sort)
-      text.Corpus.quotaSample(Tables.documents(s, dir), "source", "doc_id",
-          maxPerDomain = 40)
-        .orderBy(col("doc_id"))),
-
-    "q106_pagerank" -> ((s, dir) => {
-      // PageRank over the symmetrized customer↔supplier trade graph
-      // (distinct (cust, supp) pairs via lineitem⋈orders, both
-      // directions so no node dangles). 10 rounds, damping 0.85; the
-      // oracle unrolls the identical recurrence as 10 chained CTEs.
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val cs = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      val edges = cs.unionByName(cs.select(col("dst").as("src"), col("src").as("dst")))
-      operators.PageRank.run(edges, "src", "dst", iters = 10)
-        .select(col("node"), roundStable(col("rank"), 6).as("rank_r"))
-        .orderBy(col("node"))
-    }),
-
-    "q107_bpe_merges" -> ((s, dir) => {
-      // the BPE tokenizer-training loop over the documents corpus: 10
-      // merge rounds on the aggregated word vocabulary. VERDICT-GATED
-      // (r13): merges 2-10 depend on re-segmentation (inherently
-      // iterative — engine content, exact sequence spec'd on a hand
-      // corpus), but merge 1 IS the argmax adjacent-character pair of
-      // the initial vocabulary — SQL-computable, so the first merge
-      // and its count compare BY VALUE; merge-count and
-      // pair-distinctness flatten to asserted 1/0s.
-      val docs = Tables.documents(s, dir)
-      val m = text.Bpe.trainMerges(docs, "text", numMerges = 10)
-      val firstTrue = docs.select(explode(split(col("text"), " ")).as("w"))
-        .filter(length(col("w")) >= 2)
-        .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-        .select(col("cnt"), split(col("w"), "").as("syms"))
-        .select(col("cnt"),
-          explode(sequence(lit(1), size(col("syms")) - 1)).as("__i"),
-          col("syms"))
-        .select(element_at(col("syms"), col("__i")).as("l"),
-          element_at(col("syms"), col("__i") + 1).as("r"), col("cnt"))
-        .groupBy(col("l"), col("r")).agg(sum(col("cnt")).as("first_count"))
-        .orderBy(col("first_count").desc, col("l"), col("r")).limit(1)
-      val stats = m.agg(count(lit(1)).as("n_merges"),
-        (countDistinct(col("left"), col("right")) === count(lit(1)))
-          .cast("bigint").as("pairs_distinct_ok"))
-      m.filter(col("rank") === 0)
-        .select(col("left").as("first_left"), col("right").as("first_right"))
-        .crossJoin(firstTrue)
-        .withColumn("first_match_ok",
-          (col("first_left") === col("l") && col("first_right") === col("r"))
-            .cast("bigint"))
-        .drop("l", "r")
-        .crossJoin(stats)
-    }),
-
-    "q108_hard_negatives" -> ((s, dir) => {
-      // contrastive hard-negative mining: per anchor, top-3 most-similar
-      // embeddings with a DIFFERENT label (the pairs a triplet loss
-      // learns from). Exact scan; label inequality pruned in the join.
-      val emb = Tables.embeddings(s, dir)
-      sim.Similarity.hardNegatives(emb, emb.filter(col("vec_id") < 10),
-          "vec_id", "embedding", "label", k = 3)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "q110_fuzzy_deletion" -> ((s, dir) =>
-      // the SELECTIVE small-distance linkage path: symmetric-deletion
-      // (FastSS) blocking at d<=2 — near-singleton key groups instead
-      // of everything-of-one-length, removing the quadratic-within-band
-      // cliff on uniform-length corpora (q102 is the general-d band).
-      // Output contract identical; the oracle is the brute force
-      // restricted to the provably-lossless length band.
-      operators.FuzzyJoin.fuzzyPairsDeletion(Tables.part(s, dir), "p_name",
-          maxDist = 2)
-        .orderBy(col("s_a"), col("s_b"))),
-
-    "q111_scd2_merge" -> ((s, dir) => {
-      // SCD Type-2 merge: version each customer's priority tier from the
-      // orders feed (one update per (cust, date), min-priority tie-fold).
-      // Initial dim opens everyone at '1-URGENT' so first updates that
-      // re-state it exercise the open-row collapse; consecutive equal
-      // priorities collapse in-chain. Closed history passes through
-      // shuffle-free; only open rows join the batch.
-      val cust = Tables.customer(s, dir)
-        .select(col("c_custkey").as("cust"), lit("1-URGENT").as("seg"))
-      val dim = operators.Scd2.init(cust, Seq("cust"), Seq("seg"),
-        epoch = "1990-01-01")
-      val ups = Tables.orders(s, dir)
-        .groupBy(col("o_custkey").as("cust"), col("o_orderdate").as("ts"))
-        .agg(min(col("o_orderpriority")).as("seg"))
-      operators.Scd2.merge(dim, ups, Seq("cust"), Seq("seg"), "ts")
-        .select(col("cust"), col("seg"), col("valid_from"), col("valid_to"),
-          col("is_current").cast("long").as("cur"))
-        .orderBy(col("cust"), col("valid_from"))
-    }),
-
-    "q112_temporal_join" -> ((s, dir) => {
-      // point-in-time fact enrichment: each order joined to the customer
-      // priority-tier version valid at its own order date (half-open
-      // intervals — an order on a version's first day sees the new
-      // version, including the version it itself created). Key-driven
-      // sort-merge join; the interval test is a residual, never a BNLJ.
-      // The dim BUILD is q111's timed surface — here it lands once per
-      // process (a dimension is a maintained table, not a per-query
-      // recompute) and the timed body measures the steady-state join.
-      val dimPath = memoOnce(s"q112dim|$dir") {
-        val cust = Tables.customer(s, dir)
-          .select(col("c_custkey").as("cust"), lit("1-URGENT").as("seg"))
-        val dim0 = operators.Scd2.init(cust, Seq("cust"), Seq("seg"),
-          epoch = "1990-01-01")
-        val ups = Tables.orders(s, dir)
-          .groupBy(col("o_custkey").as("cust"), col("o_orderdate").as("ts"))
-          .agg(min(col("o_orderpriority")).as("seg"))
-        val p = java.nio.file.Files.createTempDirectory("graft_q112dim").toString
-        operators.Scd2.merge(dim0, ups, Seq("cust"), Seq("seg"), "ts")
-          .write.mode("overwrite").parquet(p)
-        p
-      }
-      val facts = Tables.orders(s, dir).select(col("o_orderkey").as("okey"),
-        col("o_custkey").as("cust"), col("o_orderdate").as("ts"))
-      operators.Scd2.temporalJoin(facts, s.read.parquet(dimPath),
-          Seq("cust"), "ts")
-        .orderBy(col("okey"))
-    }),
-
-    "q113_table_diff" -> ((s, dir) => {
-      // snapshot reconciliation: diff orders against a drifted replica
-      // (1/97 of keys dropped, 1/101 prices bumped, 1/103 re-keyed in as
-      // additions). Output is O(drift): one full-outer SMJ on the key,
-      // identical rows vanish, changed rows name their columns.
-      val a = Tables.orders(s, dir).select(col("o_orderkey"),
-        col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
-      val b = a.filter(col("o_orderkey") % 97 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 101 === 0, col("o_totalprice") + lit(1.0))
-            .otherwise(col("o_totalprice")))
-        .unionByName(a.filter(col("o_orderkey") % 103 === 0)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L)))
-      operators.TableDiff.diff(a, b, Seq("o_orderkey"))
-        .select(col("o_orderkey").as("okey"), col("status"),
-          concat_ws(",", col("changed_cols")).as("cols"))
-        .orderBy(col("okey"))
-    }),
-
-    "q114_stratified_split" -> ((s, dir) =>
-      // exact per-language 80/10/10 split by the width-safe hash order —
-      // every stratum gets exactly ceil-proportioned train/val/test
-      // (q82's map-only split only hits these in expectation)
-      text.Corpus.stratifiedSplit(Tables.documents(s, dir), "lang", "doc_id",
-          trainFrac = 0.8, valFrac = 0.1)
-        .orderBy(col("doc_id"))),
-
-    "q115_mmr_rerank" -> ((s, dir) => {
-      // retrieval diversity pass: brute-force top-20 recall per query,
-      // vectors joined back, then the greedy MMR selection of 5 — the
-      // RAG re-rank that keeps near-duplicate hits from crowding out
-      // coverage. The greedy argmax is a per-group fold (the documented
-      // imperative island), spec-verified on planted near-dups;
-      // determinism via (rel desc, id) candidate order.
-      // VERDICT-GATED (r13): MMR's FIRST pick is the relevance argmax
-      // (empty selected set ⇒ score = λ·rel), i.e. the brute-force
-      // top-1 — id and relevance oracle-recomputable BY VALUE; the
-      // remaining greedy picks flatten to structural 1/0 verdicts
-      // (subset-of-candidates, distinct, k selected).
-      val emb = Tables.embeddings(s, dir)
-      val queries = emb.filter(col("vec_id") < 5)
-      val cands = sim.Similarity.bruteForceTopK(emb, queries, "vec_id",
-        "embedding", k = 20)
-      val withVecs = cands.join(emb.select(col("vec_id").as("neighbor_id"),
-        col("embedding")), Seq("neighbor_id"))
-      val mmr = sim.Similarity.mmrRerank(withVecs, "query_id", "neighbor_id",
-        "cosine", "embedding", k = 5, lambda = 0.7)
-      sim.AnnVerdict.mmrVerdict(mmr, cands, k = 5).orderBy(col("query_id"))
-    }),
-
-    "q116_cdc_apply" -> ((s, dir) => {
-      // the warehouse family composed end-to-end: yesterday's snapshot
-      // vs today's drifted replica → TableDiff extracts the change feed
-      // (added/changed carry today's values; removed become TOMBSTONES)
-      // → Scd2.merge applies it — changed keys close + reopen, removed
-      // keys close with no successor, added keys open, untouched keys
-      // pass through open.
-      val a = Tables.customer(s, dir)
-        .select(col("c_custkey").as("cust"), col("c_mktsegment").as("seg"))
-      val b = a.filter(col("cust") % 97 =!= 0)
-        .withColumn("seg", when(col("cust") % 11 === 0,
-          concat(col("seg"), lit("_V2"))).otherwise(col("seg")))
-        .unionByName(a.filter(col("cust") % 103 === 0)
-          .select((col("cust") + 5000000L).as("cust"), col("seg")))
-      val d = operators.TableDiff.diff(a, b, Seq("cust"))
-      val ts = to_date(lit("2024-06-01"))
-      val upserts = d.filter(col("status").isin("added", "changed"))
-        .select("cust").join(b, Seq("cust"))
-        .select(col("cust"), col("seg"), ts.as("ts"), lit(false).as("del"))
-      val tombs = d.filter(col("status") === "removed")
-        .select(col("cust"), lit(null).cast("string").as("seg"),
-          ts.as("ts"), lit(true).as("del"))
-      val dim0 = operators.Scd2.init(a, Seq("cust"), Seq("seg"),
-        epoch = "1990-01-01")
-      operators.Scd2.merge(dim0, upserts.unionByName(tombs), Seq("cust"),
-          Seq("seg"), "ts", deleteCol = Some("del"))
-        .select(col("cust"), col("seg"), col("valid_from"), col("valid_to"),
-          col("is_current").cast("long").as("cur"))
-        .orderBy(col("cust"), col("valid_from"))
-    }),
-
-    "q117_interval_merge" -> ((s, dir) => {
-      // interval union per user: each event opens a 10-minute activity
-      // horizon; overlapping/touching horizons collapse to maximal
-      // coverage islands. One shuffle total — the closing groupBy on
-      // (user, island) reuses the window's HashPartitioning(user)
-      // distribution (plan-gated: exactly one Exchange).
-      val iv = Tables.events(s, dir)
-        .select(col("user_id"), col("ts").as("s"),
-          (col("ts") + expr("INTERVAL 10 MINUTES")).as("e"))
-      operators.Intervals.mergeIntervals(iv, Seq("user_id"), "s", "e")
-        .select(col("user_id"), col("s").as("start_ts"),
-          col("e").as("end_ts"), col("n_rows").as("n_events"))
-        .orderBy(col("user_id"), col("start_ts"))
-    }),
-
-    "q123_interval_gaps" -> ((s, dir) => {
-      // the complement of q117: maximal UNCOVERED spans strictly inside
-      // each user's activity range — the downtime report. Derived from
-      // the same one-shuffle island sweep + one more keyed window.
-      val iv = Tables.events(s, dir)
-        .select(col("user_id"), col("ts").as("s"),
-          (col("ts") + expr("INTERVAL 10 MINUTES")).as("e"))
-      operators.Intervals.gaps(iv, Seq("user_id"), "s", "e")
-        .orderBy(col("user_id"), col("gap_start"))
-    }),
-
-    "q124_interval_coverage" -> ((s, dir) => {
-      // de-overlapped covered duration per user — the uptime metric a
-      // naive sum(e − s) double-counts wherever horizons overlap.
-      val iv = Tables.events(s, dir)
-        .select(col("user_id"), col("ts").as("s"),
-          (col("ts") + expr("INTERVAL 10 MINUTES")).as("e"))
-      operators.Intervals.coverage(iv, Seq("user_id"), "s", "e")
-        .orderBy(col("user_id"))
-    }),
-
-    "q125_psi_drift" -> ((s, dir) =>
-      // binned feature-drift monitor: PSI of value per event_type,
-      // reference = first half of the month, bins fixed from the
-      // reference range (current-side outliers clamp into edge bins)
-      etl.Drift.psi(Tables.events(s, dir), Seq("event_type"), "value",
-          isRef = dayofmonth(col("ts")) <= 15, bins = 10)
-        .orderBy(col("event_type"))),
-
-    "q126_ks_drift" -> ((s, dir) =>
-      // distribution-shape drift: exact two-sample KS statistic of value
-      // per event_type between the same two month halves — catches shape
-      // changes PSI's 10 bins smooth over
-      etl.Drift.ksTest(Tables.events(s, dir), Seq("event_type"), "value",
-          isA = dayofmonth(col("ts")) <= 15)
-        .orderBy(col("event_type"))),
-
-    "q127_token_entropy" -> ((s, dir) =>
-      // lexical-diversity quality axis: per-doc type-token ratio +
-      // unigram Shannon entropy — spam/boilerplate sits low on both
-      text.Corpus.tokenEntropy(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-
-    "q128_quantile_bins" -> ((s, dir) =>
-      // exact equal-frequency discretization fit: 10 ntile bins of value
-      // per event_type with deterministic (value, event_id) tiebreak
-      etl.Features.quantileBins(Tables.events(s, dir), Seq("event_type"),
-          "value", "event_id", nBins = 10)
-        .orderBy(col("event_type"), col("bin"))),
-
-    "q129_triangles" -> ((s, dir) =>
-      // graph cohesion over the supplier co-purchasing graph (suppliers
-      // sharing a high-volume part; the quantity cut keeps edge density
-      // bench-sane — the unrestricted shared-part graph is near-complete):
-      // global triangle census via degree-oriented wedge enumeration
-      operators.Triangles.census(supplierGraph(s, dir), "src", "dst")),
-
-    "q130_clustering_coef" -> ((s, dir) =>
-      // the node-level view: per-supplier triangle participation and
-      // local clustering coefficient over the same graph
-      operators.Triangles.perVertex(supplierGraph(s, dir), "src", "dst")
-        .orderBy(col("v"))),
-
-    "q131_chi2_indep" -> ((s, dir) =>
-      // is the language mix independent of the source? chi-square of
-      // the lang × source contingency + Cramér's V effect size — one
-      // O(r·c) cell agg, marginals ride windows over the cells
-      etl.Drift.chiSquareIndep(Tables.documents(s, dir), "source", "lang")),
-
-    "q132_mannwhitney" -> ((s, dir) =>
-      // rank-based two-sample drift test per event_type between the
-      // month halves — the no-normality-assumption sibling of q121;
-      // exact average-rank ties + tie-corrected normal approximation
-      etl.Aggregates.mannWhitneyU(Tables.events(s, dir), Seq("event_type"),
-          isA = dayofmonth(col("ts")) <= 15, col("value"))
-        .orderBy(col("event_type"))),
-
-    "q133_benford" -> ((s, dir) =>
-      // fabricated-data screen: chi-square distance of each event
-      // type's first-significant-digit histogram to the Benford
-      // expectation (absent digits contribute their expected mass)
-      etl.Drift.benford(Tables.events(s, dir), Seq("event_type"), "value")
-        .orderBy(col("event_type"))),
-
-    "q134_zipf_slope" -> ((s, dir) =>
-      // corpus-health check: OLS slope of ln(freq) on ln(rank) over
-      // each source's token frequency table (natural text ≈ −1)
-      text.Corpus.zipfSlope(Tables.documents(s, dir), "source", "text")
-        .orderBy(col("source"))),
-
-    "q135_containment" -> ((s, dir) =>
-      // asymmetric near-dup: |A∩B| / min(|A|,|B|) ≥ 0.8 catches a doc
-      // quoted inside a longer one where Jaccard stays tiny — candidate
-      // pairs from the shared-shingle index, exact merge-scan verify
-      dedup.NGramJaccard.containmentPairs(
-          Tables.documents(s, dir).select("doc_id", "text"),
-          "doc_id", "text", n = 3, minContainment = 0.8)
-        .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"),
-          graft.functions.roundStable(col("containment"), 6).as("containment"))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    "q136_mad_outliers" -> ((s, dir) =>
-      // robust outlier flags: |v − median| > 3.5·1.4826·MAD per event
-      // type — the 50%-breakdown twin of q04's IQR fence
-      etl.Clean.madOutliers(Tables.events(s, dir)
-            .select("event_id", "event_type", "value"),
-          Seq("event_type"), "value")
-        .select(col("event_id"), col("event_type"), col("value"),
-          graft.functions.roundStable(col("med"), 6).as("med"),
-          graft.functions.roundStable(col("mad"), 6).as("mad"),
-          col("is_outlier"), col("robust_z"))
-        .orderBy(col("event_id"))),
-
-    "q137_kcore" -> ((s, dir) =>
-      // dense-community filter: 4-core of the supplier co-purchasing
-      // graph by iterative peeling (≤ 6 rounds, early-stopped at the
-      // fixpoint — the oracle unrolls the same 6 peels)
-      operators.KCore.core(supplierGraph(s, dir), "src", "dst",
-          k = 4, maxPeels = 6)
-        .orderBy(col("v"))),
-
-    "q139_acf" -> ((s, dir) =>
-      // periodicity/persistence readout: autocorrelation of value at
-      // lags 1-3 per event_type over the (ts, event_id)-ordered series —
-      // one keyed window builds all lag columns
-      etl.Aggregates.acf(Tables.events(s, dir), Seq("event_type"),
-          col("ts"), col("event_id"), col("value"), lags = Seq(1, 2, 3))
-        .orderBy(col("event_type"))),
-
-    "q140_transitions" -> ((s, dir) =>
-      // first-order Markov structure of user behavior: observed
-      // event-type transition counts + row-normalized P(next | state)
-      operators.Sequences.transitionMatrix(Tables.events(s, dir),
-          "user_id", col("ts"), col("event_id"), "event_type")
-        .orderBy(col("state"), col("next"))),
-
-    "q141_session_paths" -> ((s, dir) =>
-      // funnel discovery: gap-sessionize (30 min, the q45 contract),
-      // render each session's ordered event-type path, count identical
-      // paths — top 50 navigation patterns
-      operators.Sequences.sessionPaths(Tables.events(s, dir), "user_id",
-          "ts", col("event_id"), "event_type", gapMicros = 1800L * 1000000L)
-        .orderBy(col("n_sessions").desc, col("path"))
-        .limit(50)),
-
-    "q142_rrf_fusion" -> ((s, dir) => {
-      // hybrid retrieval: reciprocal-rank fusion of the BM25 ranking
-      // (q104's exact setup) with a coordination-level coverage ranking
-      // over the same query set — no score calibration, only ranks
-      val docs = Tables.documents(s, dir)
-      val q5 = docs.orderBy("doc_id").limit(5)
-        .select(col("doc_id").as("qid"),
-          concat_ws(" ", slice(text.TextStats.tokens(col("text")), 1, 4))
-            .as("qtext"))
-      val bm = text.Retrieval.bm25TopK(docs, q5, "doc_id", "text",
-        "qid", "qtext", k = 10)
-      val cov = text.Retrieval.coverageTopK(docs, q5, "doc_id", "text",
-        "qid", "qtext", k = 10)
-      text.Retrieval.rrfFuse(Seq(bm, cov), "qid", "doc_id", "rank",
-          kRrf = 60, topK = 10)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    "q150_hist_quantiles" -> ((s, dir) => {
-      // incremental quantiles, q138's twin: per-(event_type, day)
-      // histogram sketch rows merge by vector addition; the estimate
-      // must land within 2 bin widths of the exact interpolated
-      // percentile (1/0 verdicts, the q62 discipline)
-      val ev = Tables.events(s, dir)
-      val sk = etl.Aggregates.histSketch(
-        ev.withColumn("day", to_date(col("ts"))),
-        Seq("event_type"), "day", "value", bins = 100)
-      val est = etl.Aggregates.histQuantiles(sk, Seq("event_type"),
-        Seq(0.5, 0.9))
-      val exact = ev.groupBy("event_type").agg(
-        expr("percentile(value, 0.5)").as("__e50"),
-        expr("percentile(value, 0.9)").as("__e90"),
-        ((max(col("value")) - min(col("value"))) / 100).as("__w"))
-      exact.join(est, "event_type")
-        .select(col("event_type"), col("n"),
-          graft.functions.roundStable(col("__e50"), 6).as("p50_exact"),
-          graft.functions.roundStable(col("__e90"), 6).as("p90_exact"),
-          (abs(col("p50") - col("__e50")) <= lit(2.0) * col("__w") + lit(1e-9))
-            .cast("long").as("p50_ok"),
-          (abs(col("p90") - col("__e90")) <= lit(2.0) * col("__w") + lit(1e-9))
-            .cast("long").as("p90_ok"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q151_cusum_twosided" -> ((s, dir) => {
-      // both CUSUM sides exercised: a planted −60 (~1.25σ) step from
-      // day 23 models sensor degradation — invisible to the upper
-      // statistic, alarmed by the lower one; the upper side watches the
-      // same series and stays quiet. Oracle replays the identical plant.
-      val ev = Tables.events(s, dir).withColumn("value",
-        when(dayofmonth(col("ts")) > 22, col("value") - lit(60.0))
-          .otherwise(col("value")))
-      etl.Drift.cusum(ev, Seq("event_type"), "value",
-          orderCol = col("ts"), tieCol = col("event_id"),
-          isRef = dayofmonth(col("ts")) <= 15)
-        .orderBy(col("event_type"))
-    }),
-
-    "q152_chi2_keyed" -> ((s, dir) =>
-      // the keyed form of q131: per SOURCE, is language independent of
-      // document length class? one pass over all sources — the drift
-      // family's per-cohort convention applied to the categorical test
-      etl.Drift.chiSquareIndep(
-          Tables.documents(s, dir).withColumn("len_class",
-            when(col("n_chars") >= 300, lit("long")).otherwise(lit("short"))),
-          Seq("source"), "lang", "len_class")
-        .orderBy(col("source"))),
-
-    "q153_adamic_adar" -> ((s, dir) => {
-      // neighborhood link prediction over a THIN supplier co-purchasing
-      // graph (quantity > 48 — wedge volume through unoriented centers
-      // is Σ C(deg,2), so this query thins the q129 graph rather than
-      // paying ~4× its wedge count): top-5 predicted partners per
-      // supplier by Adamic–Adar, hub centers excluded above maxDeg
-      val sp = Tables.lineitem(s, dir)
-        .filter(col("l_quantity") > 48)
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-        .distinct()
-      val edges = sp.as("r1").join(sp.as("r2"),
-          col("r1.pk") === col("r2.pk") && col("r1.sk") < col("r2.sk"))
-        .select(col("r1.sk").as("src"), col("r2.sk").as("dst"))
-      operators.LinkPrediction.adamicAdarTopK(edges, "src", "dst",
-          k = 5, maxDeg = 500)
-        .orderBy(col("u"), col("rank"))
-    }),
-
-    "q154_twap" -> ((s, dir) =>
-      // time-weighted daily average per event_type — the
-      // irregular-sampling correction of q01's plain mean: each reading
-      // holds until the series' next one; the last reading has no
-      // holding interval (half-open, the q117 convention)
-      etl.Aggregates.twap(Tables.events(s, dir), Seq("event_type"),
-          Seq(col("event_type"), to_date(col("ts")).as("day")),
-          orderCol = col("ts"), tieCol = col("event_id"),
-          valueCol = "value")
-        .orderBy(col("event_type"), col("day"))),
-
-    "q155_gini" -> ((s, dir) =>
-      // activity-concentration readout: Gini of per-user event counts
-      // within each event_type — is one user absorbing the volume? (the
-      // corpus-balance twin of q75's domain mix)
-      etl.Aggregates.gini(
-          Tables.events(s, dir).groupBy(col("event_type"), col("user_id"))
-            .agg(count(lit(1)).as("n_events")),
-          Seq("event_type"), "n_events", tieCol = col("user_id"))
-        .orderBy(col("event_type"))),
-
-    "q156_rate_drift" -> ((s, dir) => {
-      // volume-axis drift: events-per-hour per type, current vs
-      // reference window under the Poisson model — a planted 70%
-      // thinning of the error type's current rows must drive its
-      // poisson_z strongly negative while the untouched types sit near 0
-      val ev = Tables.events(s, dir).filter(
-        !(col("event_type") === "error" && dayofmonth(col("ts")) > 15 &&
-          col("event_id") % 10 < 7))
-      etl.Drift.rateShift(ev, Seq("event_type"), col("ts"),
-          isRef = dayofmonth(col("ts")) <= 15)
-        .orderBy(col("event_type"))
-    }),
-
-    "q157_weighted_sample" -> ((s, dir) =>
-      // exact weighted-without-replacement sampling (Efraimidis-
-      // Spirakis): 20 docs per source, longer docs proportionally more
-      // likely, never twice — the missing corner of the sampling ladder
-      // (q85 weighted in-expectation, q109 exact unweighted)
-      text.Corpus.weightedSample(Tables.documents(s, dir), "source",
-          "doc_id", "n_chars", k = 20)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("rk"))
-        .orderBy(col("source"), col("rk"))),
-
-    "q158_rolling_corr" -> ((s, dir) =>
-      // trailing-20-row price/quantity co-movement per supplier —
-      // full-window rows only (warm-up excluded: small-n conventions
-      // differ across engines and a 1-row frame is undefined)
-      etl.Aggregates.rollingCorr(
-          Tables.lineitem(s, dir).filter(col("l_suppkey") <= 50)
-            .withColumn("tie",
-              col("l_orderkey") * 10 + col("l_linenumber")),
-          Seq("l_suppkey"), orderCol = col("l_shipdate"),
-          tieCol = col("tie"), xCol = "l_extendedprice",
-          yCol = "l_quantity", window = 20)
-        .orderBy(col("l_suppkey"), col("l_shipdate"), col("tie"))),
-
-    "q159_seasonal_naive" -> ((s, dir) =>
-      // forecastability screen: MAE of "same hour yesterday" vs
-      // "previous hour" over the hourly-mean series per type; exact-hour
-      // self-joins, NOT row lags — a grid gap must not slide the
-      // comparison (the q95 lesson)
-      etl.Aggregates.seasonalNaiveError(Tables.events(s, dir),
-          Seq("event_type"), col("ts"), "value")
-        .orderBy(col("event_type"))),
-
-    "q160_asof_tolerance" -> ((s, dir) =>
-      // as-of with a staleness horizon (pandas merge_asof tolerance):
-      // the latest order price at or before each event, but only within
-      // 7 days — a customer quiet for months attaches NULL instead of a
-      // silently fossilized carry-forward
-      operators.AsOfJoin.latestAtOrBeforeWithin(
-          Tables.events(s, dir).select(col("event_id"), col("user_id"),
-            col("ts")),
-          Tables.orders(s, dir),
-          leftKey = "user_id", rightKey = "o_custkey",
-          leftTime = "ts", rightTime = "o_orderdate",
-          carryCol = "o_totalprice", outCol = "asof_price",
-          toleranceSecs = 7L * 86400L)
-        .select(col("event_id"), col("asof_price"))
-        .orderBy(col("event_id"))),
-
-    "q161_unpivot" -> ((s, dir) => {
-      // melt — the inverse of q22's pivot: wide per-day metrics back to
-      // (day, metric, value) long form; Spark's native unpivot explodes
-      // map-side, zero shuffles beyond the feeding agg
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(graft.functions.roundStable(avg(col("value")), 6).as("avg_value"),
-          max(col("value")).as("max_value"),
-          min(col("value")).as("min_value"))
-      daily.unpivot(Array(col("day")),
-          Array(col("avg_value"), col("max_value"), col("min_value")),
-          "metric", "metric_value")
-        .orderBy(col("day"), col("metric"))
-    }),
-
-    "q162_asof_nearest" -> ((s, dir) =>
-      // nearest-direction as-of within 7 days: whichever of the latest
-      // at-or-before / earliest at-or-after order is CLOSER in time —
-      // aligning two irregular clocks where "before" alone discards a
-      // measurement taken seconds later; exact-tie distances go backward
-      operators.AsOfJoin.nearestWithin(
-          Tables.events(s, dir).select(col("event_id"), col("user_id"),
-            col("ts")),
-          Tables.orders(s, dir),
-          leftKey = "user_id", rightKey = "o_custkey",
-          leftTime = "ts", rightTime = "o_orderdate",
-          carryCol = "o_totalprice", outCol = "near_price",
-          toleranceSecs = 7L * 86400L)
-        .select(col("event_id"), col("near_price"))
-        .orderBy(col("event_id"))),
-
-    "q163_label_prop" -> ((s, dir) => {
-      // synchronous min-tie label propagation over the trade graph, 3
-      // rounds — community structure INSIDE the connected component
-      // (q66 answers reachability; this finds the dense clusters);
-      // deterministic by construction, oracle unrolls the same rounds
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val cs = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      val edges = cs.unionByName(
-        cs.select(col("dst").as("src"), col("src").as("dst")))
-      operators.LabelProp.run(edges, "src", "dst", rounds = 3)
-        .orderBy(col("node"))
-    }),
-
-    "q164_theilsen" -> ((s, dir) =>
-      // Theil-Sen robust trend per type: median-of-pairwise-slopes over
-      // the hourly-mean series — the 50%-breakdown twin of q118's OLS
-      // (one wild reading tilts OLS; here ~29% of hours can be corrupt)
-      etl.Aggregates.theilSen(Tables.events(s, dir), Seq("event_type"),
-          col("ts"), "value")
-        .orderBy(col("event_type"))),
-
-    "q165_vocab_coverage" -> ((s, dir) =>
-      // tokenizer-fit screen: per-doc OOV rate against the corpus's own
-      // top-500 token vocabulary (deterministic boundary cut) — docs
-      // that shatter into unknowns at training time surface here
-      text.Corpus.vocabCoverage(Tables.documents(s, dir), "doc_id",
-          "text", vocabSize = 500)
-        .orderBy(col("doc_id"))),
-
-    "q166_name_match" -> ((s, dir) =>
-      // Jaro-Winkler record linkage over part names (first-char-blocked
-      // pairs, native codegen'd expression — Spark has no similarity
-      // function beyond levenshtein; DuckDB replays its built-in)
-      operators.FuzzyJoin.jaroWinklerPairs(
-          Tables.part(s, dir).filter(col("p_partkey") <= 600)
-            .select(col("p_name")),
-          "p_name", minSim = 0.88)
-        .orderBy(col("s_a"), col("s_b"))),
-
-    "q167_trimmed_mean" -> ((s, dir) =>
-      // robust-location ladder closed: 10/90 trimmed + winsorized means
-      // per type — the mean believes every glitch, the median throws
-      // away 98% of the data; these are the standard middle ground
-      etl.Aggregates.trimmedStats(Tables.events(s, dir),
-          Seq("event_type"), "value", lo = 0.1, hi = 0.9)
-        .orderBy(col("event_type"))),
-
-    "q168_modularity" -> ((s, dir) => {
-      // Newman modularity of the nation partition over the trade graph:
-      // is same-nation trade denser than chance? (the quality readout
-      // any community labeling plugs into — q163's labels included)
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val cs = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      val edges = cs.unionByName(
-        cs.select(col("dst").as("src"), col("src").as("dst")))
-      val cust = Tables.customer(s, dir)
-        .select(concat(lit("c"), col("c_custkey")).as("node"),
-          col("c_nationkey").as("nat"))
-      val supp = Tables.supplier(s, dir)
-        .select(concat(lit("s"), col("s_suppkey")).as("node"),
-          col("s_nationkey").as("nat"))
-      operators.LabelProp.modularity(edges, "src", "dst",
-          cust.unionByName(supp), "node", "nat")
-        .orderBy(col("label"))
-    }),
-
-    "q169_chunk_dedup" -> ((s, dir) =>
-      // C4-style within-doc boilerplate strip: non-overlapping 8-token
-      // chunks, repeats of an already-seen chunk dropped (first kept,
-      // in position order), survivors re-assembled
-      text.Corpus.chunkDedup(Tables.documents(s, dir), "doc_id", "text",
-          window = 8)
-        .orderBy(col("doc_id"))),
-
-    "q170_sssp" -> ((s, dir) => {
-      // multi-source BFS blast radius: hop distance from nation-0
-      // customers out to 4 rounds over the trade graph — the distance
-      // axis next to q66 reachability / q163 density / q106 centrality
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val cs = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      val edges = cs.unionByName(
-        cs.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = Tables.customer(s, dir)
-        .filter(col("c_nationkey") === 0)
-        .select(concat(lit("c"), col("c_custkey")).as("node"))
-      operators.Bfs.hops(edges, "src", "dst", seeds, "node", rounds = 4)
-        .orderBy(col("node"))
-    }),
-
-    "q171_jsd" -> ((s, dir) =>
-      // bounded symmetric divergence (the thresholdable twin of q125's
-      // PSI): JSD of value per type, ref = first half, ref-frozen bins
-      etl.Drift.jsd(Tables.events(s, dir), Seq("event_type"), "value",
-          isRef = dayofmonth(col("ts")) <= 15, bins = 10)
-        .orderBy(col("event_type"))),
-
-    "q172_kaplan_meier" -> ((s, dir) => {
-      // time-to-first-error survival per cohort: subject = user, event =
-      // the user's first 'error', censored at last sighting if none —
-      // the right-censoring KM exists for (calling never-erroring users
-      // "errored at last sighting" biases every curve down)
-      val perUser = Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(min(col("ts")).as("__first"), max(col("ts")).as("__last"),
-          min(when(col("event_type") === "error", col("ts"))).as("__err"))
-      val subj = perUser
-        .select((col("user_id") % 3).as("cohort"),
-          datediff(to_date(coalesce(col("__err"), col("__last"))),
-            to_date(col("__first"))).cast("long").as("dur"),
-          col("__err").isNotNull.as("obs"))
-      etl.Aggregates.kaplanMeier(subj, Seq("cohort"), "dur", col("obs"))
-        .orderBy(col("cohort"), col("t"))
-    }),
-
-    "q173_ndcg" -> ((s, dir) => {
-      // retrieval-quality readout over the oracle-gated q37 ranking:
-      // binary-relevance nDCG@10 against the label column, ideal DCG
-      // from each query's ACTUAL relevant-corpus count
-      val emb = Tables.embeddings(s, dir)
-      sim.Similarity.ndcgAtK(emb, emb.filter(col("vec_id") < 50),
-          "vec_id", "embedding", "label", k = 10)
-        .orderBy(col("query_id"))
-    }),
-
-    "q174_scalable_median" -> ((s, dir) =>
-      // EXACT median via two bounded passes (histogram narrows to the
-      // candidate bin, only that sliver ranks) — the oracle's plain
-      // median() proves exactness; percentile() would OOM a 100 TB key
-      etl.Aggregates.scalableMedian(Tables.events(s, dir),
-          Seq("event_type"), "value", bins = 100)
-        .orderBy(col("event_type"))),
-
-    "q175_kfold" -> ((s, dir) =>
-      // deterministic k-fold census: fold sizes + char mass per fold —
-      // the cross-validation corner of the split family (q82/q109/q114)
-      text.Corpus.kFold(Tables.documents(s, dir), "doc_id", k = 5)
-        .groupBy(col("fold"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          countDistinct(col("source")).as("n_sources"))
-        .orderBy(col("fold"))),
-
-    "q177_assoc_rules" -> ((s, dir) =>
-      // directed association rules over order baskets with the full
-      // support/confidence/lift triple — q147's cosine ranks recs, these
-      // are what a RULE needs to be acted on (lift kills the popularity
-      // confound); lift >= 2 and >= 3 shared baskets
-      operators.MarketBasket.assocRules(
-          Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey")),
-          "l_orderkey", "l_partkey", minCount = 3L, minLift = 2.0)
-        .orderBy(col("antecedent"), col("consequent"))),
-
-    "q178_skew_report" -> ((s, dir) =>
-      // the measurement half of the salting module: top-10 heaviest
-      // users with share and skew factor — the "which keys die at 100x"
-      // readout that picks saltedAgg/saltedJoin targets
-      operators.Skew.skewReport(Tables.events(s, dir), Seq("user_id"),
-          topN = 10)
-        .orderBy(col("rank"))),
-
-    "q179_profile" -> ((s, dir) =>
-      // one-scan column profile in long form: null/distinct counts and
-      // rates per column (exact distincts via Expand; approx HLL flag
-      // for very wide tables)
-      etl.Profile.profile(Tables.events(s, dir),
-          Seq("event_type", "user_id", "value", "props"))
-        .orderBy(col("column"))),
-
-    "q180_spearman" -> ((s, dir) =>
-      // monotone price/quantity association per supplier — the rank
-      // correlation q158's Pearson isn't (outlier-proof, catches any
-      // monotone relation, not just linear)
-      etl.Aggregates.spearman(
-          Tables.lineitem(s, dir).filter(col("l_suppkey") <= 50),
-          Seq("l_suppkey"), col("l_extendedprice"), col("l_quantity"))
-        .orderBy(col("l_suppkey"))),
-
-    "q181_pettitt" -> ((s, dir) => {
-      // WHERE did the series shift: rank-based changepoint per type over
-      // the daily mean series, no reference window needed (the cusum
-      // complement); a +50 step planted after day 15 on the error type
-      // must localize there with a tiny p, untouched types stay flat
-      val ev = Tables.events(s, dir).withColumn("value",
-        when(col("event_type") === "error" && dayofmonth(col("ts")) > 15,
-          col("value") + 50).otherwise(col("value")))
-      etl.Drift.pettitt(ev, Seq("event_type"), to_date(col("ts")), "value")
-        .orderBy(col("event_type"))
-    }),
-
-    "q182_retrieval_eval" -> ((s, dir) => {
-      // the order-sensitive eval triple (MRR / AP@10 / P+R@10) over the
-      // same oracle-gated exact ranking q173's nDCG rides — together the
-      // full quality dashboard the ANN ladder is tuned by
-      val emb = Tables.embeddings(s, dir)
-      sim.Similarity.retrievalEvalAtK(emb, emb.filter(col("vec_id") < 50),
-          "vec_id", "embedding", "label", k = 10)
-        .orderBy(col("query_id"))
-    }),
-
-    "q183_dq_rules" -> ((s, dir) =>
-      // the declarative contract gate: five rule kinds (incl. exact
-      // uniqueness) evaluated in ONE scan — rules chosen so some PASS
-      // and some FAIL on the real feed (a gate that can't fail proves
-      // nothing)
-      etl.Rules.check(Tables.events(s, dir), Seq(
-          etl.Rules.NotNull("user_id"),
-          etl.Rules.InRange("value", 0.0, 100.0),
-          etl.Rules.InSet("event_type",
-            Seq("click", "view", "purchase", "signup")),
-          etl.Rules.MatchesRegex("props", "^\\{.*\\}$"),
-          etl.Rules.Unique(Seq("event_id"))))
-        .orderBy(col("rule"), col("target"))),
-
-    "q184_winnow" -> ((s, dir) =>
-      // winnowing fingerprint census (the MOSS selection, k=8 w=4):
-      // per-doc selected-gram count and density vs the ~2/(w+1)
-      // expectation; the md5-prefix hash makes the SELECTION itself
-      // oracle-replayable, not just the counts
-      text.Winnow.density(Tables.documents(s, dir), "doc_id", "text",
-          k = 8, w = 4)
-        .orderBy(col("doc"))),
-
-    "q185_winnow_pairs" -> ((s, dir) =>
-      // the MOSS report: doc pairs by DISTINCT shared fingerprints,
-      // doc-freq-capped candidates (the q135 discipline) — every shared
-      // run >= k+w-1 = 11 chars has a provable floor in n_shared; the
-      // threshold sits past the measured background (random pairs share
-      // a median of 8 common-English fingerprints, 99.9% < 34; planted
-      // near-dups reach 200+)
-      text.Winnow.sharedPairs(Tables.documents(s, dir), "doc_id", "text",
-          k = 8, w = 4, maxDocFreq = 1000L, minShared = 40L)
-        .orderBy(col("doc_a"), col("doc_b"))),
-
-    "q186_kendall" -> ((s, dir) =>
-      // concordance between monthly revenue and quantity per supplier —
-      // tau-b over the calendar-bounded aggregated series (83 months =
-      // 3.4k pairs, however many rows fed them)
-      etl.Aggregates.kendallTau(
-          Tables.lineitem(s, dir).filter(col("l_suppkey") <= 50),
-          Seq("l_suppkey"), date_trunc("month", col("l_shipdate")),
-          "l_extendedprice", "l_quantity")
-        .orderBy(col("l_suppkey"))),
-
-    "q187_bh_fdr" -> ((s, dir) => {
-      // the monitor-fleet capstone: a 150-user Pettitt changepoint
-      // battery with a shift planted on every 10th user, then
-      // Benjamini-Hochberg at alpha=0.05 — the shifted users must
-      // survive FDR control, the quiet ones mostly shouldn't
-      val ev = Tables.events(s, dir).withColumn("value",
-        when(col("user_id") % 10 === 0 && dayofmonth(col("ts")) > 15,
-          col("value") + 80).otherwise(col("value")))
-      val battery = etl.Drift.pettitt(ev, Seq("user_id"),
-        to_date(col("ts")), "value")
-      etl.Drift.bhAdjust(battery.select(col("user_id"), col("p_value")),
-          Seq("user_id"), "p_value", alpha = 0.05)
-        .orderBy(col("user_id"))
-    }),
-
-    "q188_weighted_median" -> ((s, dir) =>
-      // the price at which half the QUANTITY traded, per return flag —
-      // what plain median gets wrong whenever rows carry unequal mass
-      etl.Aggregates.weightedMedian(Tables.lineitem(s, dir),
-          Seq("l_returnflag"), "l_extendedprice", "l_quantity")
-        .orderBy(col("l_returnflag"))),
-
-    "q189_interval_overlap" -> ((s, dir) => {
-      // which browsing sessions were hit by an error session: the
-      // interval×interval grid join (canonical-cell dedup, no distinct)
-      // over per-user 6h-gap sessions of each type
-      val ev = Tables.events(s, dir)
-      def sess(t: String) = etl.Aggregates.sessionizeBatch(
-        ev.filter(col("event_type") === t), "user_id", "ts", "event_id",
-        "value", gapMicros = 6L * 3600L * 1000000L)
-        .select(col("user_id"), col("session_start"), col("session_end"))
-      operators.Intervals.overlapJoin(sess("click"), sess("error"),
-          Seq("user_id"), "session_start", "session_end",
-          binMicros = 86400L * 1000000L)
-        .orderBy(col("user_id"), col("start_l"), col("start_r"))
-    }),
-
-    "q190_ppr" -> ((s, dir) => {
-      // personalized PageRank: importance AS SEEN FROM customers 1-5 —
-      // restart mass on the seed set only, 5 rounds over the q106
-      // symmetrized trade graph; the oracle unrolls the same recurrence
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val cs = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      val edges = cs.unionByName(
-        cs.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = o.filter(col("o_custkey") <= 5)
-        .select(concat(lit("c"), col("o_custkey")).as("node")).distinct()
-      operators.PageRank.personalized(edges, "src", "dst", seeds, "node",
-          iters = 5)
-        .select(col("node"), roundStable(col("rank"), 6).as("rank_r"))
-        .filter(col("rank_r") > 0)
-        .orderBy(col("node"))
-    }),
-
-    "q191_tfidf_top" -> ((s, dir) =>
-      // keyphrase extraction: top-5 TF-IDF terms per doc, rounded
-      // before ranking (deterministic cut), WindowGroupLimit plan
-      text.Tfidf.topTerms(Tables.documents(s, dir), "doc_id", "text",
-          k = 5)
-        .orderBy(col("doc_id"), col("rank"))),
-
-    "q192_ccf" -> ((s, dir) =>
-      // does click activity LEAD purchase activity, and by how many
-      // hours: lagged cross-correlation of the two hourly mean series
-      // at lags -6..6 (exact-hour alignment, gaps drop the pair)
-      etl.Aggregates.crossCorr(Tables.events(s, dir), col("ts"),
-          isX = col("event_type") === "click",
-          isY = col("event_type") === "purchase",
-          "value", lags = (-6 to 6).toSeq)
-        .orderBy(col("lag"))),
-
-    "q193_attribution" -> ((s, dir) => {
-      // linear multi-touch credit: every click in the 7 days before a
-      // purchase shares the credit equally; orphan purchases surface
-      // with NULL touch and full unattributed credit
-      val ev = Tables.events(s, dir)
-      operators.Attribution.linear(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          Seq("user_id"), "event_id", "ts", "event_id", "ts",
-          windowSecs = 7L * 86400L)
-        .orderBy(col("conv_id"), col("touch_id"))
-    }),
-
-    "q194_band_join" -> ((s, dir) => {
-      // duplicate-payment screen: order pairs whose totals agree within
-      // $1 — the numeric band join (cell + adjacent-cell equi join,
-      // integer-cents band so no fp boundary flake)
-      val o = Tables.orders(s, dir)
-      operators.RangeJoin.band(
-          o.select(col("o_orderkey").as("key_a"),
-            col("o_totalprice").as("price_a")),
-          o.select(col("o_orderkey").as("key_b"),
-            col("o_totalprice").as("price_b")),
-          "price_a", "price_b", eps = 1.0, scale = 100L)
-        .filter(col("key_a") < col("key_b"))
-        .select(col("key_a"), col("key_b"), col("price_a"), col("price_b"),
-          roundStable(abs(col("price_a") - col("price_b")), 2).as("diff"))
-        .orderBy(col("key_a"), col("key_b"))
-    }),
-
-    "q195_pop" -> ((s, dir) =>
-      // month-over-month revenue per return flag with EXACT calendar
-      // alignment — a missing month yields NULL, never a silent
-      // compare-to-two-months-ago
-      etl.Aggregates.periodDelta(Tables.lineitem(s, dir),
-          Seq("l_returnflag"), col("l_shipdate"), "l_extendedprice",
-          unit = "month")
-        .orderBy(col("l_returnflag"), col("period"))),
-
-    "q196_golden" -> ((s, dir) =>
-      // golden profile per user: modal event type, most recent props,
-      // peak value — each rule with a deterministic total tiebreak
-      operators.Survivorship.golden(
-          Tables.events(s, dir).select(col("user_id"), col("event_type"),
-            col("props"), col("value"), col("ts")),
-          "user_id", Seq(
-            operators.Survivorship.MostFrequent("event_type"),
-            operators.Survivorship.Latest("props", "ts"),
-            operators.Survivorship.MaxVal("value")))
-        .select(col("user_id"), col("event_type"), col("props"),
-          col("value"), col("n_members"))
-        .orderBy(col("user_id"))),
-
-    "q197_tail_risk" -> ((s, dir) =>
-      // p95 VaR + expected shortfall per type — the SLO readout that
-      // distinguishes a fat tail from a near-miss (exact order-stat
-      // convention, no interpolation to disagree on)
-      etl.Aggregates.tailStats(Tables.events(s, dir), Seq("event_type"),
-          "value", tieCol = col("event_id"), p = 0.95)
-        .orderBy(col("event_type"))),
-
-    "q198_decay" -> ((s, dir) =>
-      // recency-weighted activity per user with a 7-day half-life,
-      // anchored at each user's own latest event — the feature-store
-      // score, closed-form in one aggregation
-      etl.Aggregates.decayAgg(Tables.events(s, dir), Seq("user_id"),
-          col("ts"), "value", halfLifeSecs = 7L * 86400L)
-        .orderBy(col("user_id"))),
-
-    "q199_novelty" -> ((s, dir) =>
-      // per-doc first-occurrence rate of word trigrams vs all EARLIER
-      // docs — the curation signal between exact dedup and
-      // decontamination (a re-crawling feed's novelty curve collapses)
-      text.Corpus.novelty(Tables.documents(s, dir), "doc_id", "text",
-          n = 3)
-        .orderBy(col("doc_id"))),
-
-    "q200_target_encode" -> ((s, dir) =>
-      // leave-one-out target encoding of event_type by value (m=10):
-      // the leakage-guarded categorical encoder; singletons fall out as
-      // exactly the global mean with no special case
-      etl.Features.targetEncodeLoo(Tables.events(s, dir), "event_type",
-          "value", m = 10.0)
-        .select(col("event_id"), col("event_type"), col("te"))
-        .orderBy(col("event_id"))),
-
-    "q201_label_confusion" -> ((s, dir) =>
-      // which classes does the embedding space confuse: pairwise
-      // centroid cosines in long form — label-count-sized after one
-      // explode+agg, the 45-number summary before a full eval
-      sim.Centroids.centroidConfusion(Tables.embeddings(s, dir),
-          "embedding", "label")
-        .orderBy(col("label_a"), col("label_b"))),
-
-    "q202_auc" -> ((s, dir) =>
-      // threshold-free ranking power per cohort via the rank identity
-      // AUC = (Σranks⁺ − n⁺(n⁺+1)/2)/(n⁺n⁻) — tie-exact midranks, state
-      // O(#distinct scores) per key
-      etl.MlEval.auc(
-          Tables.events(s, dir)
-            .withColumn("cohort", (col("user_id") % 5).cast("long")),
-          Seq("cohort"), col("value"), col("event_type") === "purchase")
-        .orderBy(col("cohort"))),
-
-    "q203_calibration" -> ((s, dir) =>
-      // reliability bins + ECE terms for a [0,1] score (value/500
-      // clamped): per-bin confidence vs observed rate — map-side
-      // equal-width binning, the scale path of the eval family
-      etl.MlEval.calibration(Tables.events(s, dir),
-          least(col("value") / 500, lit(1.0)),
-          col("event_type") === "purchase", bins = 10)
-        .orderBy(col("bin"))),
-
-    "q204_gains" -> ((s, dir) =>
-      // decile gains/lift for the same score: explicit rank-arithmetic
-      // buckets (never ntile — engine-specific tie placement)
-      etl.MlEval.gainsTable(Tables.events(s, dir),
-          least(col("value") / 500, lit(1.0)),
-          col("event_type") === "purchase", tieCol = col("event_id"),
-          parts = 10)
-        .orderBy(col("bucket"))),
-
-    "q205_conformal" -> ((s, dir) => {
-      // split-conformal upper bound per type at alpha=0.1 (calibrate on
-      // even event_ids, check empirical coverage on odd) — a threshold
-      // with a finite-sample guarantee instead of a vibe
-      val ev = Tables.events(s, dir)
-      val thr = etl.MlEval.conformalThreshold(
-        ev.filter(col("event_id") % 2 === 0), Seq("event_type"),
-        col("value"), col("event_id"), alpha = 0.1)
-      ev.filter(col("event_id") % 2 === 1)
-        .join(thr, Seq("event_type"))
-        .groupBy(col("event_type"))
-        .agg(max(col("qhat")).as("qhat"), max(col("n_cal")).as("n_cal"),
-          max(col("guaranteed_cov")).as("guaranteed_cov"),
-          count(lit(1)).as("n_test"),
-          roundStable(avg((col("value") <= col("qhat")).cast("double")), 6)
-            .as("test_cov"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q206_assortativity" -> ((s, dir) => {
-      // one graph-census scalar: do trade hubs attach to hubs? —
-      // decides whether saltBuckets matters before ten PageRank rounds
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val cs = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      val edges = cs.unionByName(
-        cs.select(col("dst").as("src"), col("src").as("dst")))
-      operators.Assortativity.degreeAssortativity(edges, "src", "dst")
-    }),
-
-    "q207_twonn" -> ((s, dir) => {
-      // two-NN intrinsic dimension of the embedding space (Facco 2017)
-      // over a deterministic 10% query sample — the "how many effective
-      // dimensions am I actually indexing" readout
-      val emb = Tables.embeddings(s, dir)
-      sim.IntrinsicDim.twoNN(emb, emb.filter(col("vec_id") % 10 === 0),
-        "vec_id", "embedding")
-    }),
-
-    "q208_scalable_quantile" -> ((s, dir) =>
-      // EXACT p99 per type via the two-pass histogram narrowing (the
-      // q174 machinery at any p) — the oracle's quantile_cont IS the
-      // exactness proof; percentile() would buffer a 100 TB key
-      etl.Aggregates.scalableQuantile(Tables.events(s, dir),
-          Seq("event_type"), "value", p = 0.99, bins = 100)
-        .orderBy(col("event_type"))),
-
-    "q209_density_ratio" -> ((s, dir) =>
-      // the cure to the drift q125 diagnoses: per-(type, bin)
-      // importance weights p/q that make current-window averages
-      // estimate reference-window expectations again
-      etl.Drift.densityRatio(Tables.events(s, dir), Seq("event_type"),
-          "value", isRef = dayofmonth(col("ts")) <= 15, bins = 10)
-        .orderBy(col("event_type"), col("bin"))),
-
-    "q210_hash_features" -> ((s, dir) =>
-      // fixed-dim sparse vectors, no vocabulary table: the hashing
-      // trick with md5-replayable buckets and ±1 signs
-      text.HashFeatures.hashFeatures(Tables.documents(s, dir), "doc_id",
-          "text", dim = 512)
-        .orderBy(col("doc_id"), col("feature"))),
-
-    "q211_binscatter" -> ((s, dir) =>
-      // what does revenue do as quantity rises, per return flag: the
-      // equal-mass conditional-mean curve with CIs — the readout a
-      // 10^10-point scatter can't draw
-      etl.Aggregates.binScatter(Tables.lineitem(s, dir),
-          Seq("l_returnflag"), col("l_quantity"), col("l_extendedprice"),
-          tieCol = col("l_orderkey") * 10 + col("l_linenumber"),
-          parts = 10)
-        .orderBy(col("l_returnflag"), col("bucket"))),
-
-    "q212_psi_quantile" -> ((s, dir) =>
-      // the PSI variant risk teams standardize on: reference-DECILE
-      // bins (equal mass by construction — an outlier can't stretch
-      // the range until drift hides in two bins)
-      etl.Drift.psiQuantileBins(Tables.events(s, dir), Seq("event_type"),
-          "value", isRef = dayofmonth(col("ts")) <= 15, bins = 10)
-        .orderBy(col("event_type"))),
-
-    "q213_bootstrap_ci" -> ((s, dir) =>
-      // distribution-free CI on the mean via the deterministic Poisson
-      // bootstrap (md5-hash draws, pinned CDF thresholds) — 50 replicas,
-      // exact order-stat quantiles of the replica means
-      etl.Aggregates.bootstrapMeanCi(Tables.events(s, dir),
-          Seq("event_type"), "value", idCol = col("event_id"),
-          reps = 50, alpha = 0.05)
-        .orderBy(col("event_type"))),
-
-    "q214_fertility" -> ((s, dir) =>
-      // tokenizer fertility census per language: tokens/doc,
-      // chars/token (the cross-lingual equity metric), type-token ratio
-      text.Corpus.fertility(Tables.documents(s, dir), "lang", "text")
-        .orderBy(col("lang"))),
-
-    "q215_wasserstein" -> ((s, dir) =>
-      // the drift family's magnitude axis: earth-mover distance in the
-      // value's own units (KS reads the worst CDF gap, PSI binned mass
-      // ratios; W1 says how FAR the mass moved)
-      etl.Drift.wasserstein1(Tables.events(s, dir), Seq("event_type"),
-          "value", isRef = dayofmonth(col("ts")) <= 15)
-        .orderBy(col("event_type"))),
-
-    "q216_mann_kendall" -> ((s, dir) =>
-      // the significance half of the robust-trend pair (Theil-Sen q164
-      // estimates the slope; MK says whether a monotone trend is THERE),
-      // daily buckets so the pair count is calendar-bounded
-      etl.Aggregates.mannKendall(Tables.events(s, dir), Seq("event_type"),
-          bucketCol = to_date(col("ts")), valueCol = "value")
-        .orderBy(col("event_type"))),
-
-    "q217_mutual_info" -> ((s, dir) =>
-      // information-theoretic companion to q152's chi2 on the same
-      // per-source lang x length contingency: MI in nats + NMI on [0,1]
-      etl.Drift.mutualInfo(
-          Tables.documents(s, dir).withColumn("len_class",
-            when(col("n_chars") >= 300, lit("long")).otherwise(lit("short"))),
-          Seq("source"), "lang", "len_class")
-        .orderBy(col("source"))),
-
-    "q218_max_drawdown" -> ((s, dir) =>
-      // worst peak-to-trough drop per key, order-aware (max-min
-      // overstates whenever the min precedes the max), with the
-      // earliest-trough determinism contract
-      etl.Aggregates.maxDrawdown(Tables.events(s, dir), Seq("event_type"),
-          "value", orderCol = col("ts"), tieCol = col("event_id"))
-        .orderBy(col("event_type"))),
-
-    "q219_runs_test" -> ((s, dir) =>
-      // Wald-Wolfowitz randomness check against each key's own exact
-      // median: too few runs = the series lingers (autocorrelation),
-      // too many = oscillation
-      etl.Aggregates.runsTest(Tables.events(s, dir), Seq("event_type"),
-          "value", orderCol = col("ts"), tieCol = col("event_id"))
-        .orderBy(col("event_type"))),
-
-    "q220_hodges_lehmann" -> ((s, dir) =>
-      // the robust center the Wilcoxon test inverts to: median of all
-      // Walsh averages over the daily-mean series (calendar-bounded
-      // pairs — the Theil-Sen discipline)
-      etl.Aggregates.hodgesLehmann(Tables.events(s, dir), Seq("event_type"),
-          bucketCol = to_date(col("ts")), valueCol = "value")
-        .orderBy(col("event_type"))),
-
-    "q221_burstiness" -> ((s, dir) =>
-      // content-vs-function word separation: population Fano factor of
-      // per-doc counts (zeros included, computed algebraically)
-      text.Corpus.burstiness(Tables.documents(s, dir), "doc_id", "text",
-          minDf = 3)
-        .orderBy(col("tok"))),
-
-    "q222_heaps" -> ((s, dir) =>
-      // vocabulary-growth law per source: V ~ K*n^beta over doc-boundary
-      // checkpoints — predicts the OOV cost of the next 10x of corpus
-      text.Corpus.heapsLaw(Tables.documents(s, dir), "source", "doc_id",
-          "text")
-        .orderBy(col("source"))),
-
-    "q223_rfm" -> ((s, dir) =>
-      // the customer-value grid: quintile scores by explicit rank
-      // arithmetic (never ntile), segment cells with average raw metrics
-      etl.Features.rfm(Tables.orders(s, dir), col("o_custkey"),
-          col("o_orderdate"), col("o_totalprice"))
-        .orderBy(col("r_score"), col("f_score"), col("m_score"))),
-
-    "q224_qq_shift" -> ((s, dir) =>
-      // WHERE in the distribution did it drift: per-decile shift
-      // function (KS says THAT, W1 says HOW MUCH, this says WHERE)
-      etl.Drift.qqShift(Tables.events(s, dir), Seq("event_type"), "value",
-          isRef = dayofmonth(col("ts")) <= 15)
-        .orderBy(col("event_type"), col("decile"))),
-
-    "q225_contribution" -> ((s, dir) =>
-      // "why did revenue move": per-segment delta decomposition between
-      // the pre-1998 and post-1998 halves, ranked by absolute movement
-      etl.Aggregates.contribution(Tables.orders(s, dir),
-          Seq("o_orderpriority", "o_orderstatus"), "o_totalprice",
-          isRef = year(col("o_orderdate")) < 1998, digits = 2)
-        .orderBy(col("o_orderpriority"), col("o_orderstatus"))),
-
-    "q226_effect_size" -> ((s, dir) =>
-      // the magnitude companion to q121's Welch significance on the
-      // same A/B split: pooled-SD Cohen's d + Hedges' g
-      etl.Aggregates.effectSize(Tables.events(s, dir), Seq("event_type"),
-          isA = col("user_id") % 2 === 0, yCol = col("value"))
-        .orderBy(col("event_type"))),
-
-    "q227_neighbor_jaccard" -> ((s, dir) => {
-      // the complementary link-prediction normalization to q153's AA on
-      // the same thin graph: what FRACTION of their worlds overlap
-      val sp = Tables.lineitem(s, dir)
-        .filter(col("l_quantity") > 48)
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-        .distinct()
-      val edges = sp.as("r1").join(sp.as("r2"),
-          col("r1.pk") === col("r2.pk") && col("r1.sk") < col("r2.sk"))
-        .select(col("r1.sk").as("src"), col("r2.sk").as("dst"))
-      operators.LinkPrediction.jaccardTopK(edges, "src", "dst",
-          k = 5, maxDeg = 500)
-        .orderBy(col("u"), col("rank"))
-    }),
-
-    "q228_abc" -> ((s, dir) =>
-      // Pareto/ABC customer classification by lifetime spend: the head
-      // that carries 80%, the middle to 95%, the tail
-      etl.Aggregates.abcClasses(Tables.orders(s, dir), Nil,
-          idCol = col("o_custkey"), valueCol = "o_totalprice", digits = 2)
-        .orderBy(col("abc_class"))),
-
-    "q229_interarrival" -> ((s, dir) =>
-      // is the arrival process actually Poisson? CV of gaps and the
-      // Goh-Barabasi burstiness the A43 rate monitor's model assumes
-      etl.Aggregates.interArrival(Tables.events(s, dir), Seq("event_type"),
-          tsCol = col("ts"), tieCol = col("event_id"))
-        .orderBy(col("event_type"))),
-
-    "q230_median_ci" -> ((s, dir) =>
-      // the median with distribution-free error bars: order-statistic
-      // CI (integer ranks — no resampling, no shape assumption)
-      etl.Aggregates.quantileCi(Tables.events(s, dir), Seq("event_type"),
-          "value", p = 0.5)
-        .orderBy(col("event_type"))),
-
-    "q231_brier" -> ((s, dir) =>
-      // Brier + the exact Murphy decomposition on q202's cohort
-      // staging: REL (calibration gap) - RES (separation) + UNC (base
-      // rate's own entropy) — catches calibrated-but-useless, ECE can't
-      etl.MlEval.brierDecomposition(
-          Tables.events(s, dir)
-            .withColumn("cohort", (col("user_id") % 5).cast("long")),
-          Seq("cohort"), least(col("value") / 500, lit(1.0)),
-          col("event_type") === "purchase")
-        .orderBy(col("cohort"))),
-
-    "q232_seasonal_strength" -> ((s, dir) =>
-      // which keys have a daily cycle worth modeling: Hyndman
-      // seasonal/trend strength over the q88 decomposition staging
-      etl.Aggregates.seasonalStrength(Tables.events(s, dir), "event_type",
-          "ts", "event_id", "value", halfWindow = 12)
-        .orderBy(col("event_type"))),
-
-    "q233_concurrency" -> ((s, dir) =>
-      // capacity census: how many user sessions were open AT ONCE —
-      // sweep-line over the q45 session intervals, half-open semantics
-      operators.Intervals.concurrency(
-        Aggregates.sessionizeBatch(Tables.events(s, dir), "user_id",
-          "ts", "event_id", "value", gapMicros = 1800L * 1000000L),
-        Nil, "session_start", "session_end")),
-
-    "q234_ols2" -> ((s, dir) =>
-      // trend CONTROLLING FOR hour-of-day: the two-regressor normal
-      // equations (a cycled series reads a biased plain slope)
-      etl.Aggregates.ols2(Tables.events(s, dir), Seq("event_type"),
-          x1 = (unix_micros(col("ts")) - lit(1704067200000000L))
-            .cast("double") / lit(86400000000.0),
-          x2 = hour(col("ts")).cast("double"),
-          y = col("value"))
-        .orderBy(col("event_type"))),
-
-    "q235_freq_spectrum" -> ((s, dir) =>
-      // the Good-Turing frequency-of-frequencies table: vocabulary and
-      // mass share per occurrence count (hapax share = feed health)
-      text.Corpus.freqSpectrum(Tables.documents(s, dir), "text")
-        .orderBy(col("r"))),
-
-    "q236_fk_audit" -> ((s, dir) =>
-      // cross-table referential integrity: per declared FK relation,
-      // broken pointers vs null FKs (different diseases, never mixed)
-      etl.Rules.fkAudit(Seq(
-          ("customer.nationkey->nation", Tables.customer(s, dir),
-            col("c_nationkey"), Tables.nation(s, dir), col("n_nationkey")),
-          ("lineitem.orderkey->orders", Tables.lineitem(s, dir),
-            col("l_orderkey"), Tables.orders(s, dir), col("o_orderkey")),
-          ("lineitem.partkey->part", Tables.lineitem(s, dir),
-            col("l_partkey"), Tables.part(s, dir), col("p_partkey")),
-          ("lineitem.suppkey->supplier", Tables.lineitem(s, dir),
-            col("l_suppkey"), Tables.supplier(s, dir), col("s_suppkey")),
-          ("nation.regionkey->region", Tables.nation(s, dir),
-            col("n_regionkey"), Tables.region(s, dir), col("r_regionkey")),
-          ("orders.custkey->customer", Tables.orders(s, dir),
-            col("o_custkey"), Tables.customer(s, dir), col("c_custkey"))))
-        .orderBy(col("relation"))),
-
-    "q237_levene" -> ((s, dir) =>
-      // the drift family's SPREAD axis: did the NOISE change between
-      // month halves, robust to heavy tails (median-centered deviations)
-      etl.Aggregates.levene(Tables.events(s, dir), Seq("event_type"),
-          isA = dayofmonth(col("ts")) <= 15, yCol = col("value"))
-        .orderBy(col("event_type"))),
-
-    "q238_rate_mix" -> ((s, dir) =>
-      // did average order value move because segment RATES changed, or
-      // because traffic SHIFTED between segments? exact two-term split
-      etl.Aggregates.rateMix(Tables.orders(s, dir),
-          Seq("o_orderpriority"), "o_totalprice",
-          isRef = year(col("o_orderdate")) < 1998, digits = 2)
-        .orderBy(col("o_orderpriority"))),
-
-    "q239_embedding_census" -> ((s, dir) =>
-      // the vector-corpus preflight: dims, norm profile, zero vectors,
-      // adjacent-pair |cos| as the isotropy proxy
-      sim.Similarity.embeddingCensus(Tables.embeddings(s, dir),
-          "vec_id", "embedding")),
-
-    "q240_page_hinkley" -> ((s, dir) =>
-      // the no-baseline sequential monitor: deviations from the series'
-      // OWN running mean (CUSUM's q143 needs a calibrated reference)
-      etl.Drift.pageHinkley(Tables.events(s, dir), Seq("event_type"),
-          "value", orderCol = col("ts"), tieCol = col("event_id"),
-          delta = 1.0, lambda = 200.0)
-        .orderBy(col("event_type"))),
-
-    "q241_degree_census" -> ((s, dir) => {
-      // the pre-flight that decides whether salting will matter: degree
-      // extremes, power-law alpha (CSN MLE), hub endpoint share
-      val sp = Tables.lineitem(s, dir)
-        .filter(col("l_quantity") > 48)
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-        .distinct()
-      val edges = sp.as("r1").join(sp.as("r2"),
-          col("r1.pk") === col("r2.pk") && col("r1.sk") < col("r2.sk"))
-        .select(col("r1.sk").as("src"), col("r2.sk").as("dst"))
-      operators.Triangles.degreeCensus(edges, "src", "dst")
-    }),
-
-    "q242_langid_confusion" -> ((s, dir) => {
-      // declared-vs-detected language confusion: the census that says
-      // whether the lang column can be TRUSTED before anyone filters on it
-      import org.apache.spark.sql.expressions.Window
-      Tables.documents(s, dir)
-        .groupBy(col("lang"), TextStats.langId(col("text")).as("predicted_lang"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("share_of_lang", roundStable(col("n").cast("double") /
-          sum(col("n")).over(Window.partitionBy(col("lang"))), 6))
-        .orderBy(col("lang"), col("predicted_lang"))
-    }),
-
-    "q243_cohen_kappa" -> ((s, dir) =>
-      // chance-corrected agreement between the declared lang column and
-      // the content detector — raw accuracy flatters majority-class luck
-      etl.MlEval.cohenKappa(Tables.documents(s, dir), Nil,
-          aCol = col("lang"), bCol = text.TextStats.langId(col("text")))),
-
-    "q244_audience_overlap" -> ((s, dir) =>
-      // do these segments reach the same people? pairwise user-set
-      // intersection/Jaccard/lift over distinct memberships
-      etl.Aggregates.audienceOverlap(Tables.events(s, dir),
-          entityCol = col("user_id"), catCol = col("event_type"))
-        .orderBy(col("cat_a"), col("cat_b"))),
-
-    "q245_prop_test" -> ((s, dir) =>
-      // the conversion-rate A/B readout: pooled-null z plus the
-      // unpooled CI on the rate difference, per cohort
-      etl.Aggregates.propTest(Tables.events(s, dir), Seq("event_type"),
-          isA = col("user_id") % 2 === 0, isSuccess = col("value") > 250)
-        .orderBy(col("event_type"))),
-
-    "q246_weighted_quantile" -> ((s, dir) =>
-      // the p90 price PER UNIT SOLD: lower-quantile convention (an
-      // actual data value — no interpolation to disagree on)
-      etl.Aggregates.weightedQuantile(Tables.lineitem(s, dir),
-          Seq("l_returnflag"), "l_extendedprice", "l_quantity", p = 0.9)
-        .orderBy(col("l_returnflag"))),
-
-    "q247_km_summary" -> ((s, dir) => {
-      // the two numbers a survival curve is quoted by: median survival
-      // (NULL = "not reached", an answer) and the restricted mean —
-      // q172's staging, summarized
-      val perUser = Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(min(col("ts")).as("__first"), max(col("ts")).as("__last"),
-          min(when(col("event_type") === "error", col("ts"))).as("__err"))
-      val subj = perUser
-        .select((col("user_id") % 3).as("cohort"),
-          datediff(to_date(coalesce(col("__err"), col("__last"))),
-            to_date(col("__first"))).cast("long").as("dur"),
-          col("__err").isNotNull.as("obs"))
-      etl.Aggregates.kmSummary(subj, Seq("cohort"), "dur", col("obs"))
-        .orderBy(col("cohort"))
-    }),
-
-    "q248_mode" -> ((s, dir) =>
-      // busiest weekday per type, deterministic under ties (count desc,
-      // value asc) — "the mode" must not depend on partition order
-      etl.Aggregates.modeValue(
-          Tables.events(s, dir)
-            .withColumn("dow", weekday(col("ts")).cast("long")),
-          Seq("event_type"), "dow")
-        .orderBy(col("event_type"))),
-
-    "q249_anova" -> ((s, dir) =>
-      // is the metric day-of-week sensitive AT ALL — the k-group mean
-      // test behind q14/q15's eyeballed profiles, with the η² effect
-      // size that keeps a huge-N significant-but-tiny F honest
-      etl.Aggregates.anovaF(Tables.events(s, dir), Seq("event_type"),
-          factorCol = weekday(col("ts")).cast("long"), yCol = col("value"))
-        .orderBy(col("event_type"))),
-
-    "q250_mcnemar" -> ((s, dir) =>
-      // did the high-value hit rate change between the month's halves
-      // for the SAME users — only discordant pairs carry information;
-      // pooled-rows z (q245) would wrongly count the concordant ones
-      etl.Aggregates.mcnemar(Tables.events(s, dir), Seq("event_type"),
-          subjectCol = col("user_id"),
-          inFirst = col("ts") < lit("2024-01-16").cast("timestamp"),
-          isHit = col("value") > 250)
-        .orderBy(col("event_type"))),
-
-    "q251_nelson_aalen" -> ((s, dir) => {
-      // the hazard-scale twin of q172's KM curve: cumulative hazard,
-      // its Poisson variance, and exp(−H) — same per-user staging
-      val perUser = Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(min(col("ts")).as("__first"), max(col("ts")).as("__last"),
-          min(when(col("event_type") === "error", col("ts"))).as("__err"))
-      val subj = perUser
-        .select((col("user_id") % 3).as("cohort"),
-          datediff(to_date(coalesce(col("__err"), col("__last"))),
-            to_date(col("__first"))).cast("long").as("dur"),
-          col("__err").isNotNull.as("obs"))
-      etl.Aggregates.nelsonAalen(subj, Seq("cohort"), "dur", col("obs"))
-        .orderBy(col("cohort"), col("t"))
-    }),
-
-    "q288_crosslang_dups" -> ((s, dir) => {
-      // near-dup pairs that CROSS language labels — mislabeled or
-      // copied-across content the per-lang pipelines would each keep
-      val docs = Tables.documents(s, dir)
-      val pairs = NGramJaccard.similarPairs(docs, "doc_id", "text",
-        n = 3, minJaccard = 0.5)
-      val langs = docs.select(col("doc_id"), col("lang"))
-      pairs
-        .join(langs.select(col("doc_id").as("id_a"),
-          col("lang").as("__la")), "id_a")
-        .join(langs.select(col("doc_id").as("id_b"),
-          col("lang").as("__lb")), "id_b")
-        .groupBy(least(col("__la"), col("__lb")).as("lang_a"),
-          greatest(col("__la"), col("__lb")).as("lang_b"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("__la") =!= col("__lb"), 1L).otherwise(0L))
-            .as("n_cross_label"))
-        .orderBy(col("lang_a"), col("lang_b"))
-    }),
-
-    "q289_source_separation" -> ((s, dir) => {
-      // are sources distinguishable in embedding space — pairwise
-      // cosine between per-source centroids, all relational (no UDF)
-      val dims = Tables.embeddings(s, dir)
-        .join(Tables.documents(s, dir),
-          col("vec_id") === col("doc_id"))
-        .select(col("source"), posexplode(col("embedding"))
-          .as(Seq("pos", "x")))
-      val cent = dims.groupBy(col("source"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("c"))
-      val a = cent.select(col("source").as("src_a"), col("pos"),
-        col("c").as("__ca"))
-      val b = cent.select(col("source").as("src_b"), col("pos"),
-        col("c").as("__cb"))
-      a.join(b, "pos").filter(col("src_a") < col("src_b"))
-        .groupBy(col("src_a"), col("src_b"))
-        .agg(roundStable(sum(col("__ca") * col("__cb")) /
-          (sqrt(sum(col("__ca") * col("__ca"))) *
-            sqrt(sum(col("__cb") * col("__cb")))), 6)
-          .as("centroid_cosine"))
-        .orderBy(col("src_a"), col("src_b"))
-    }),
-
-    "q290_context_fit" -> ((s, dir) => {
-      // if we train at context L: truncated-doc share, tokens lost to
-      // truncation, padding share under one-doc-per-sequence
-      import s.implicits._
-      val lens = Tables.documents(s, dir)
-        .select(text.TextStats.wsTokenCount(col("text")).as("n"))
-      val ctx = Seq(128L, 512L, 2048L).toDF("ctx_len")
-      ctx.crossJoin(lens)
-        .groupBy(col("ctx_len"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n")).as("tokens_total"),
-          sum(when(col("n") > col("ctx_len"), 1L).otherwise(0L))
-            .as("truncated_docs"),
-          roundStable(sum(when(col("n") > col("ctx_len"),
-            col("n") - col("ctx_len")).otherwise(0L)).cast("double") /
-            sum(col("n")).cast("double"), 6).as("tokens_lost_share"),
-          roundStable(sum(col("ctx_len") - least(col("n"), col("ctx_len")))
-            .cast("double") /
-            (count(lit(1)) * col("ctx_len")).cast("double"), 6)
-            .as("padding_share"))
-        .orderBy(col("ctx_len"))
-    }),
-
-    "q291_source_silhouette" -> ((s, dir) => {
-      // are the source clusters real in embedding space — simplified
-      // (centroid) silhouette per source + share of misfiled points
-      val pts = Tables.embeddings(s, dir)
-        .join(Tables.documents(s, dir), col("vec_id") === col("doc_id"))
-      sim.Geometry.silhouette(pts, "vec_id", "source", "embedding")
-    }),
-
-    "q292_pc1_power" -> ((s, dir) =>
-      // dominant direction of the embedding corpus: 10-round power
-      // iteration on the d×d covariance (collected as a bounded model
-      // constant), canonical sign, λ1/trace anisotropy share
-      sim.Geometry.pc1Power(Tables.embeddings(s, dir), "embedding",
-        iters = 10)),
-
-    "q293_knn_outlier" -> ((s, dir) =>
-      // geometric outliers: top-20 vectors by mean cosine distance to
-      // their 10 nearest neighbors (Ramaswamy kNN-dist)
-      sim.Geometry.knnOutliers(Tables.embeddings(s, dir), "vec_id",
-        "embedding", k = 10, topN = 20)),
-
-    "q294_isotonic" -> ((s, dir) =>
-      // monotone (PAV) calibration of the q203 score via the minimax
-      // identity — pure relational over the 20-bin reduction
-      etl.MlEval.isotonicCalibration(Tables.events(s, dir),
-          least(col("value") / 500, lit(1.0)),
-          col("event_type") === "purchase", bins = 20)
-        .orderBy(col("bin"))),
-
-    "q295_dispersion" -> ((s, dir) =>
-      // are arrivals Poisson or clumped: variance/mean of per-
-      // (user, day) counts per type, Fisher chi-square + z
-      etl.Drift.dispersionIndex(Tables.events(s, dir), Seq("event_type"),
-          unitCols = Seq(col("user_id"), to_date(col("ts"))))
-        .orderBy(col("event_type"))),
-
-    "q296_fd_audit" -> ((s, dir) =>
-      // declared-dependency violation audit: g3 (min fraction of rows
-      // to delete for det→dep to hold) over lineitem claims + one
-      // true key dependency on orders as the zero baseline
-      etl.Rules.fdAudit(Tables.lineitem(s, dir), Seq(
-          ("l_partkey", "l_suppkey"),
-          ("l_orderkey", "l_returnflag"),
-          ("l_suppkey", "l_linestatus")))
-        .unionByName(etl.Rules.fdAudit(Tables.orders(s, dir),
-          Seq(("o_orderkey", "o_custkey"))))
-        .orderBy(col("determinant"), col("dependent"))),
-
-    "q297_richness" -> ((s, dir) =>
-      // crawl-scheduling signal: Good-Turing unseen mass + Chao1
-      // vocabulary floor per source — which sources still yield new
-      // types and how big each vocabulary at least is
-      text.Corpus.richness(Tables.documents(s, dir), "source", "text")
-        .orderBy(col("source"))),
-
-    "q298_capture_recapture" -> ((s, dir) =>
-      // how many users exist in total per event type, estimated from
-      // the first-half/second-half overlap (Chapman): the unobserved
-      // audience remainder q244/q280 cannot see
-      etl.Aggregates.captureRecapture(Tables.events(s, dir),
-          Seq("event_type"), col("user_id"),
-          inA = dayofmonth(col("ts")) <= 15,
-          inB = dayofmonth(col("ts")) > 15)
-        .orderBy(col("event_type"))),
-
-    "q299_hill" -> ((s, dir) =>
-      // effective vocabulary at three concentration sensitivities
-      // (D0/D1/D2 on one "equally-common types" scale) + evenness —
-      // the per-source template-flood screen
-      text.Corpus.hillNumbers(Tables.documents(s, dir), "source", "text")
-        .orderBy(col("source"))),
-
-    "q300_durbin_watson" -> ((s, dir) =>
-      // are the q118 trend residuals serially correlated (DW ≈ 2 =
-      // the OLS error bars are honest; DW → 0 = the residuals trend
-      // too and the slope CI is overconfident)
-      etl.Aggregates.durbinWatson(Tables.events(s, dir),
-          Seq("event_type"), col("ts"), "value")
-        .orderBy(col("event_type"))),
-
-    "q301_cooks" -> ((s, dir) =>
-      // which hours bend the trend line: top-3 Cook's distance per
-      // type with leverage and studentized residual
-      etl.Aggregates.cooksInfluence(Tables.events(s, dir),
-          Seq("event_type"), col("ts"), "value", topN = 3)
-        .orderBy(col("event_type"), col("rk"))),
-
-    "q302_breusch_pagan" -> ((s, dir) =>
-      // does residual variance drift with time (Koenker LM = n·R² of
-      // e² on x): fan-shaped residuals mean one s² understates late-
-      // series error
-      etl.Aggregates.breuschPagan(Tables.events(s, dir),
-          Seq("event_type"), col("ts"), "value")
-        .orderBy(col("event_type"))),
-
-    "q303_cross_perplexity" -> ((s, dir) =>
-      // domain distance in nats/token: each source scored under every
-      // other source's smoothed unigram LM, + excess over self-model
-      text.Corpus.crossPerplexity(Tables.documents(s, dir), "source",
-          "text", k = 0.5)
-        .orderBy(col("source_a"), col("source_b"))),
-
-    "q304_burrows_delta" -> ((s, dir) =>
-      // stylometric distance over the top-150 function words: two
-      // "different" sources with delta ≈ 0 are one pipeline wearing
-      // two names
-      text.Corpus.burrowsDelta(Tables.documents(s, dir), "source",
-          "text", topWords = 150)
-        .orderBy(col("source_a"), col("source_b"))),
-
-    "q305_mnn_pairs" -> ((s, dir) => {
-      // mutual-nearest-neighbor alignment candidates across labels 0/1
-      // (the k=1 MNN bitext-mining criterion — mutuality kills hubs)
-      val e = Tables.embeddings(s, dir)
-      sim.Similarity.mutualNearest(
-          e.filter(col("label") === 0), e.filter(col("label") === 1),
-          "vec_id", "embedding")
-        .orderBy(col("id_a"))
-    }),
-
-    "q306_hurst" -> ((s, dir) =>
-      // does averaging buy anything: H ≈ 0.5 = i.i.d. (rollups
-      // trustworthy), H → 1 = persistent trends (they aren't)
-      etl.Aggregates.hurstExponent(Tables.events(s, dir),
-          Seq("event_type"), col("ts"), "value")
-        .orderBy(col("event_type"))),
-
-    "q307_wavelet_energy" -> ((s, dir) =>
-      // where the variance lives on the scale axis: Haar detail
-      // energy + share per dyadic level 1..4
-      etl.Aggregates.waveletEnergy(Tables.events(s, dir),
-          Seq("event_type"), col("ts"), "value")
-        .orderBy(col("event_type"), col("level"))),
-
-    "q308_cochran_armitage" -> ((s, dir) =>
-      // does the high-value rate RISE across the month (1-df monotone
-      // trend — seen long before the omnibus chi-square flags)
-      etl.Drift.cochranArmitage(Tables.events(s, dir),
-          Seq("event_type"), scoreCol = dayofmonth(col("ts")),
-          isSuccess = col("value") > 250)
-        .orderBy(col("event_type"))),
-
-    "q309_profile_drift" -> ((s, dir) => {
-      // schema-health tripwire: column profiles of the two month
-      // halves side by side, null-rate delta + cardinality ratio
-      val e = Tables.events(s, dir)
-      etl.Profile.profileDrift(
-          e.filter(dayofmonth(col("ts")) <= 15),
-          e.filter(dayofmonth(col("ts")) > 15),
-          Seq("user_id", "event_type", "value"))
-        .orderBy(col("column"))
-    }),
-
-    "q310_negbin" -> ((s, dir) =>
-      // once q295 says counts are clumped, NB MoM says HOW clumped and
-      // predicts the silent-unit share p^r a Poisson model misses
-      etl.Drift.negbinFit(Tables.events(s, dir), Seq("event_type"),
-          unitCols = Seq(col("user_id"), to_date(col("ts"))))
-        .orderBy(col("event_type"))),
-
-    "q311_token_budget" -> ((s, dir) =>
-      // mixing planner: water-fill 60% of the corpus's tokens across
-      // sources at uniform target weight — which sources are supply-
-      // bound and where the waterline λ sits
-      text.Corpus.waterFill(
-          Tables.documents(s, dir).groupBy(col("source"))
-            .agg(sum(size(split(col("text"), " "))).as("toks"))
-            .withColumn("weight", lit(1.0)),
-          "source", "weight", "toks", budget = 0.6, asFraction = true)
-        .orderBy(col("key"))),
-
-    "q312_hubness" -> ((s, dir) =>
-      // the high-dimensional pathology every ANN stack inherits: top
-      // k-occurrence hubs + N_k skewness + antihub share
-      sim.Geometry.hubness(Tables.embeddings(s, dir), "vec_id",
-          "embedding", k = 10, topN = 20)
-        .orderBy(col("rank"))),
-
-    "q313_lid" -> ((s, dir) =>
-      // local intrinsic dimensionality per label (Levina-Bickel MLE):
-      // which regions of the space are effectively unstructured
-      sim.Geometry.lidMle(Tables.embeddings(s, dir), "vec_id",
-          "embedding", "label", k = 10)
-        .orderBy(col("label"))),
-
-    "q314_margin_mnn" -> ((s, dir) => {
-      // q305's pairs rescored with the Artetxe-Schwenk ratio margin —
-      // local-density-normalized, so one global threshold works
-      val e = Tables.embeddings(s, dir)
-      sim.Similarity.marginMutualNearest(
-          e.filter(col("label") === 0), e.filter(col("label") === 1),
-          "vec_id", "embedding", k = 4)
-        .orderBy(col("id_a"))
-    }),
-
-    "q315_streaks" -> ((s, dir) =>
-      // gaps-and-islands engagement summary: longest consecutive-day
-      // run per user with bounds, island count, total active days
-      operators.Sequences.longestStreak(Tables.events(s, dir),
-          Seq("user_id"), to_date(col("ts")))
-        .orderBy(col("user_id"))),
-
-    "q316_rank_movers" -> ((s, dir) =>
-      // leaderboard diff: top-20 users by |rank displacement| between
-      // the month halves — the signal a raw value delta isn't
-      etl.Aggregates.rankMovers(Tables.events(s, dir), "user_id",
-          col("value"), isBefore = dayofmonth(col("ts")) <= 15,
-          topN = 20)
-        .orderBy(col("mover_rank"))),
-
-    "q317_skyline" -> ((s, dir) =>
-      // Pareto frontier: parts where no other part is both cheaper
-      // and larger
-      operators.Sequences.skyline2D(Tables.part(s, dir), "p_partkey",
-          minCol = col("p_retailprice").cast("double"),
-          maxCol = col("p_size").cast("long"))
-        .orderBy(col("x"), col("y"), col("p_partkey"))),
-
-    "q318_burn_rate" -> ((s, dir) =>
-      // SRE multi-window burn-rate alerting: short window proves it's
-      // still happening, long window proves it's real
-      etl.Slo.burnRate(
-          Tables.events(s, dir).withColumn("cohort", col("user_id") % 5),
-          Seq("cohort"), col("ts"),
-          isError = col("event_type") === "error", budget = 0.1,
-          shortHours = 6, longHours = 24, threshold = 2.0)
-        .orderBy(col("cohort"), col("hour"))),
-
-    "q319_incidents" -> ((s, dir) =>
-      // failure episodes from sparse severe errors: MTTR/MTBF per
-      // cohort with 2h-gap incident merging
-      etl.Slo.incidents(
-          Tables.events(s, dir).withColumn("cohort", col("user_id") % 5),
-          Seq("cohort"), col("ts"),
-          isError = col("event_type") === "error" && col("value") > 200,
-          gapHours = 2)
-        .orderBy(col("cohort"))),
-
-    "q320_apdex" -> ((s, dir) =>
-      // the one-number UX summary a tail can't hide behind: Apdex at
-      // T = 100 per type, value as the latency proxy
-      etl.Slo.apdex(Tables.events(s, dir), Seq("event_type"),
-          col("value"), t = 100)
-        .orderBy(col("event_type"))),
-
-    "q321_jarque_bera" -> ((s, dir) =>
-      // the cheap normality gate before any Gaussian-assuming CI:
-      // JB = n/6(S² + K²/4) from one moments pass
-      etl.Aggregates.jarqueBera(Tables.events(s, dir),
-          Seq("event_type"), col("value"))
-        .orderBy(col("event_type"))),
-
-    "q322_friedman" -> ((s, dir) =>
-      // is one type's daily mean RELIABLY highest day after day:
-      // within-day ranks cancel day-level shifts (the nonparametric
-      // repeated-measures test)
-      etl.Drift.friedman(Tables.events(s, dir),
-          blockCol = to_date(col("ts")), treatmentCol = col("event_type"),
-          valueCol = col("value"))
-        .orderBy(col("treatment"))),
-
-    "q323_grubbs" -> ((s, dir) =>
-      // is the worst point actually wild: the single most extreme
-      // observation's studentized distance per type, with side
-      etl.Aggregates.grubbs(Tables.events(s, dir), Seq("event_type"),
-          col("value"))
-        .orderBy(col("event_type"))),
-
-    "q324_dau_stickiness" -> ((s, dir) =>
-      // DAU/WAU/MAU over the observed-day spine with trailing
-      // calendar ranges (silent days still age users out)
-      etl.Growth.dauStickiness(Tables.events(s, dir), col("user_id"),
-          col("ts"))
-        .orderBy(col("day"))),
-
-    "q325_growth_accounting" -> ((s, dir) =>
-      // weekly new/retained/resurrected/churned identity + quick
-      // ratio: is the bucket filling faster than it leaks
-      etl.Growth.growthAccounting(Tables.events(s, dir),
-          col("user_id"), col("ts"))
-        .orderBy(col("week"))),
-
-    "q326_power_users" -> ((s, dir) =>
-      // the engagement histogram a mean DAU hides: users by active-day
-      // count with cumulative user/activity shares from the top
-      etl.Growth.powerUserCurve(Tables.events(s, dir), col("user_id"),
-          col("ts"))
-        .orderBy(col("n_days"))),
-
-    "q327_vocab_curve" -> ((s, dir) =>
-      // tokenizer-budget planning: token-mass coverage and OOV rate
-      // at candidate vocabulary sizes
-      text.Corpus.vocabCoverageCurve(Tables.documents(s, dir), "text",
-          cuts = Seq(100, 500, 1000, 5000))
-        .orderBy(col("vocab_size"))),
-
-    "q328_dup_profile" -> ((s, dir) =>
-      // WHERE duplication lives per source (intra vs cross) — decides
-      // whether dedup must be global; 40-char prefix fingerprint
-      text.Corpus.dupProfile(Tables.documents(s, dir), "source",
-          fingerprint = md5(substring(col("text"), 1, 40)))
-        .orderBy(col("source"))),
-
-    "q329_char_classes" -> ((s, dir) =>
-      // the tokenizer-free OCR/markup screen: per-source character-
-      // class shares from exact length arithmetic
-      text.Corpus.charClassProfile(Tables.documents(s, dir), "source",
-          "text")
-        .orderBy(col("source"))),
-
-    "q330_msprt" -> ((s, dir) =>
-      // always-valid sequential A/B p-value per day: peeking daily at
-      // this never inflates false positives (mSPRT, τ = 10)
-      etl.Experiment.msprt(Tables.events(s, dir), Seq("event_type"),
-          col("ts"), isTreat = col("user_id") % 2 === 0,
-          valueCol = col("value"), tau = 10.0)
-        .orderBy(col("event_type"), col("day"))),
-
-    "q331_ucb" -> ((s, dir) =>
-      // UCB1 arm scores: which arm the policy would pull next — the
-      // exploration bonus is why a rarely-tried arm can outrank
-      etl.Experiment.ucb1(Tables.events(s, dir), Seq("event_type"),
-          armCol = concat(lit("arm"), col("user_id") % 3),
-          isSuccess = col("value") > 250)
-        .orderBy(col("event_type"), col("arm"))),
-
-    "q332_srm" -> ((s, dir) =>
-      // the #1 A/B integrity gate: observed arm counts vs the
-      // designed thirds, with per-arm Pearson residuals
-      etl.Experiment.srm(Tables.events(s, dir), Seq("event_type"),
-          armCol = col("user_id") % 3,
-          expected = Seq(("0", 1.0 / 3), ("1", 1.0 / 3), ("2", 1.0 / 3)))
-        .orderBy(col("event_type"), col("arm"))),
-
-    "q333_brown_les" -> ((s, dir) =>
-      // the smallest model that can forecast "up and to the right":
-      // Brown's double smoothing, latest level/trend/forecast per type
-      etl.Aggregates.brownForecast(Tables.events(s, dir), "event_type",
-          "ts", "event_id", "value", alpha = 0.3, span = 24,
-          horizon = 6)
-        .orderBy(col("event_type"))),
-
-    "q334_fellegi_sunter" -> ((s, dir) => {
-      // probabilistic record linkage over brand-blocked part pairs:
-      // per-field log-likelihood ratios, summed
-      val p = Tables.part(s, dir).filter(col("p_partkey") <= 300)
-      val w1 = element_at(split(col("p_name"), " "), 1)
-      val a = p.select(col("p_partkey").as("id_a"),
-        col("p_brand").as("brand"), col("p_type").as("__ta"),
-        w1.as("__ca"), col("p_size").as("__za"))
-      val b = p.select(col("p_partkey").as("id_b"),
-        col("p_brand").as("brand"), col("p_type").as("__tb"),
-        w1.as("__cb"), col("p_size").as("__zb"))
-      operators.FuzzyJoin.fellegiSunter(
-          a.join(b, "brand").filter(col("id_a") < col("id_b")),
-          Seq(("type", col("__ta") === col("__tb"), 0.9, 0.05),
-                ("name1", col("__ca") === col("__cb"), 0.8, 0.1),
-            ("size", col("__za") === col("__zb"), 0.85, 0.15)))
-        .select(col("id_a"), col("id_b"), col("n_agree"),
-          col("match_weight"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "q335_last_digit" -> ((s, dir) =>
-      // fabrication screen Benford can't see: last-digit uniformity
-      // chi-square with the spiked digit named
-      etl.Drift.lastDigitUniformity(Tables.events(s, dir),
-          Seq("event_type"), col("value"))
-        .orderBy(col("event_type"))),
-
-    "q336_raking" -> ((s, dir) => {
-      // IPF: rake the second half's (type × dow) mix to the first
-      // half's marginals — the survey-adjustment workhorse
-      val e = Tables.events(s, dir)
-      val ref = e.filter(dayofmonth(col("ts")) <= 15)
-      val cur = e.filter(dayofmonth(col("ts")) > 15)
-      etl.Weighting.rake(
-          cur.groupBy(col("event_type"), weekday(col("ts")).as("dow"))
-            .agg(count(lit(1)).as("n")),
-          "event_type", "dow", col("n"),
-          rowTargets = ref.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("target")),
-          colTargets = ref.groupBy(weekday(col("ts")).as("dow"))
-            .agg(count(lit(1)).as("target")),
-          sweeps = 3)
-        .orderBy(col("event_type"), col("dow"))
-    }),
-
-    "q337_ess" -> ((s, dir) => {
-      // what the q336 weights COST in precision: Kish ESS and design
-      // effect per type over the raked cells
-      val e = Tables.events(s, dir)
-      val ref = e.filter(dayofmonth(col("ts")) <= 15)
-      val cur = e.filter(dayofmonth(col("ts")) > 15)
-      val raked = etl.Weighting.rake(
-        cur.groupBy(col("event_type"), weekday(col("ts")).as("dow"))
-          .agg(count(lit(1)).as("n")),
-        "event_type", "dow", col("n"),
-        rowTargets = ref.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("target")),
-        colTargets = ref.groupBy(weekday(col("ts")).as("dow"))
-          .agg(count(lit(1)).as("target")),
-        sweeps = 3)
-      etl.Weighting.essDeff(raked, Seq("event_type"), col("weight"),
-          countCol = col("n"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q338_weight_trim" -> ((s, dir) => {
-      // the trimming trade-off on the same weights: cap at p80,
-      // mass moved vs ESS recovered
-      val e = Tables.events(s, dir)
-      val ref = e.filter(dayofmonth(col("ts")) <= 15)
-      val cur = e.filter(dayofmonth(col("ts")) > 15)
-      val raked = etl.Weighting.rake(
-        cur.groupBy(col("event_type"), weekday(col("ts")).as("dow"))
-          .agg(count(lit(1)).as("n")),
-        "event_type", "dow", col("n"),
-        rowTargets = ref.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("target")),
-        colTargets = ref.groupBy(weekday(col("ts")).as("dow"))
-          .agg(count(lit(1)).as("target")),
-        sweeps = 3)
-      etl.Weighting.trimWeights(raked, Seq("event_type"), col("weight"),
-          countCol = col("n"), p = 0.8)
-        .orderBy(col("event_type"))
-    }),
-
-    "q339_wald_iv" -> ((s, dir) =>
-      // encouragement design: ITT rescaled by the first stage — the
-      // estimator for "we could only randomize the nudge"
-      etl.Causal.waldIv(Tables.events(s, dir), Seq("event_type"),
-          instrument = col("user_id") % 2 === 0,
-          treated = col("user_id") % 4 === 0, outcome = col("value"))
-        .orderBy(col("event_type"))),
-
-    "q340_rdd" -> ((s, dir) =>
-      // sharp regression discontinuity at minute 30, local linear
-      // both sides of the half-hour (a scale-free running variable)
-      etl.Causal.rdd(Tables.events(s, dir), Seq("event_type"),
-          runningCol = minute(col("ts")), outcomeCol = col("value"),
-          cutoff = 30.0, bandwidth = 30.0)
-        .orderBy(col("event_type"))),
-
-    "q341_evalue" -> ((s, dir) =>
-      // the sensitivity bound an observational RR should ship with:
-      // how strong an unmeasured confounder must be to explain it away
-      etl.Causal.eValue(Tables.events(s, dir), Seq("event_type"),
-          exposed = col("user_id") % 2 === 0,
-          outcome = col("value") > 250)
-        .orderBy(col("event_type"))),
-
-    "q342_cindex" -> ((s, dir) => {
-      // does the user's mean value ORDER time-to-first-error: the
-      // survival-world AUC over the q172 subjects
-      val subj = Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(min(col("ts")).as("__f"), max(col("ts")).as("__l"),
-          min(when(col("event_type") === "error", col("ts"))).as("__e"),
-          avg(col("value")).as("__score"))
-        .select((col("user_id") % 3).as("cohort"),
-          datediff(to_date(coalesce(col("__e"), col("__l"))),
-            to_date(col("__f"))).cast("long").as("dur"),
-          col("__e").isNotNull.as("obs"), col("__score"))
-      etl.Survival.cIndex(subj, Seq("cohort"), col("dur"), col("obs"),
-          col("__score"))
-        .orderBy(col("cohort"))
-    }),
-
-    "q343_survival_summary" -> ((s, dir) => {
-      // the scalars a KM curve is read for: RMST(20d) and median
-      // survival per cohort ("not reached" stays NULL)
-      val subj = Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(min(col("ts")).as("__f"), max(col("ts")).as("__l"),
-          min(when(col("event_type") === "error", col("ts"))).as("__e"))
-        .select((col("user_id") % 3).as("cohort"),
-          datediff(to_date(coalesce(col("__e"), col("__l"))),
-            to_date(col("__f"))).cast("long").as("dur"),
-          col("__e").isNotNull.as("obs"))
-      etl.Survival.survivalSummary(subj, Seq("cohort"), "dur",
-          col("obs"), tau = 20.0)
-        .orderBy(col("cohort"))
-    }),
-
-    "q344_rate_ratio" -> ((s, dir) => {
-      // incidence-rate ratio with person-time denominators — what
-      // plain proportions get wrong when follow-up differs
-      val subj = Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(min(col("ts")).as("__f"), max(col("ts")).as("__l"),
-          min(when(col("event_type") === "error", col("ts"))).as("__e"))
-        .select((col("user_id") % 3).as("cohort"),
-          (col("user_id") % 2 === 0).as("exp"),
-          datediff(to_date(coalesce(col("__e"), col("__l"))),
-            to_date(col("__f"))).cast("long").as("dur"),
-          col("__e").isNotNull.as("obs"))
-      etl.Survival.rateRatio(subj, Seq("cohort"), col("exp"),
-          col("dur"), col("obs"))
-        .orderBy(col("cohort"))
-    }),
-
-    "q345_inequality" -> ((s, dir) =>
-      // the concentration indices Gini blurs: decomposable Theil,
-      // welfare-reading Atkinson, tail-sensitive Palma
-      etl.Aggregates.inequality(Tables.events(s, dir),
-          Seq("event_type"), col("value"))
-        .orderBy(col("event_type"))),
-
-    "q346_price_index" -> ((s, dir) => {
-      // Fisher's ideal index 1996 → 2000 over the matched part basket
-      val li = Tables.lineitem(s, dir).join(
-        Tables.orders(s, dir).select(col("o_orderkey"),
-          year(col("o_orderdate")).as("__y")),
-        col("l_orderkey") === col("o_orderkey"))
-      etl.Econ.fisherIndex(li, itemCol = col("l_partkey"),
-        isBase = col("__y") === 1996, isCurrent = col("__y") === 2000,
-        spendCol = col("l_extendedprice") * (lit(1.0) - col("l_discount")),
-        qtyCol = col("l_quantity"))
-    }),
-
-    "q347_abc_xyz" -> ((s, dir) => {
-      // the inventory decision table: Pareto revenue class × demand
-      // predictability class over monthly part demand
-      val li = Tables.lineitem(s, dir).join(
-        Tables.orders(s, dir).select(col("o_orderkey"),
-          date_trunc("month", col("o_orderdate")).as("__m")),
-        col("l_orderkey") === col("o_orderkey"))
-      etl.Econ.abcXyz(li, itemCol = col("l_partkey"),
-          periodCol = col("__m"),
-          revenueCol = col("l_extendedprice") *
-            (lit(1.0) - col("l_discount")),
-          qtyCol = col("l_quantity"))
-        .orderBy(col("abc"), col("xyz"))
-    }),
-
-    "q348_elasticity" -> ((s, dir) =>
-      // within-part demand elasticity: item fixed effects absorb the
-      // cross-sectional confound; effective price varies via discount
-      etl.Econ.elasticityFe(Tables.lineitem(s, dir),
-          itemCol = col("l_partkey"),
-          priceCol = col("l_extendedprice") *
-            (lit(1.0) - col("l_discount")) / col("l_quantity"),
-          qtyCol = col("l_quantity"))),
-
-    "q349_supplier_risk" -> ((s, dir) =>
-      // procurement risk screen: per part, how concentrated its spend
-      // is across suppliers — HHI, effective suppliers, single-source
-      etl.Econ.concentration(
-          Tables.lineitem(s, dir).filter(col("l_partkey") <= 400),
-          groupCol = col("l_partkey"), memberCol = col("l_suppkey"),
-          valueCol = col("l_extendedprice"))
-        .orderBy(col("group"))),
-
-    // --- candidate-path embedding diagnostics (q350-q353): the same
-    // four diagnostics as q293/q312/q313/q305, riding IVF candidate
-    // pairs instead of the brute-force self-join — the 100 TB plan
-    // (pair join keyed on the coarse cell). VERDICT-GATED (r14, was
-    // rows-only since r12): the registered rows are CandVerdict
-    // one-liners — full-probe candidates counted against n·(n-1) BY
-    // VALUE, the diagnostic on those candidates proven row-set-equal
-    // to its brute-force twin in-query, the REGISTERED nprobe=2 pruned
-    // path executed (its diagnostic row count oracle-recomputed) with
-    // subset + prune-floor verdicts. The pruned DIAGNOSTIC VALUES stay
-    // engine content by declared design (the synthetic embeddings have
-    // no cluster geometry — the q51/q71 finding — so nprobe=2 loses
-    // recall here; q384 makes the with-geometry exactness claim
-    // oracle-visible on a planted-geometry corpus). Index fit +
-    // candidate plans memoized per dir (the q87 once-per-process
-    // discipline).
-    "q350_knn_outlier_cand" -> ((s, dir) => memoOnce(s"q350v-$dir") {
-      // verdict row memoized (literal-only frame, the q354 collected
-      // discipline): the in-query brute-force truth is the COLD cost
-      // by design — the warm pass must not re-pay it
-      val emb = Tables.embeddings(s, dir)
-      sim.CandVerdict.selfVerdict(emb, "vec_id", kCoarse = 8, nprobe = 2,
-        pruneFloorPct = candPruneFloorPct,
-        fullCand = ivfFullCand(s, dir), prunedCand = ivfSelfCand(s, dir),
-        diag = c => sim.Geometry.knnOutliers(emb, "vec_id", "embedding",
-          k = 10, topN = 20, candidates = c))
-    }),
-
-    "q351_hubness_cand" -> ((s, dir) => memoOnce(s"q351v-$dir") {
-      val emb = Tables.embeddings(s, dir)
-      sim.CandVerdict.selfVerdict(emb, "vec_id", kCoarse = 8, nprobe = 2,
-        pruneFloorPct = candPruneFloorPct,
-        fullCand = ivfFullCand(s, dir), prunedCand = ivfSelfCand(s, dir),
-        diag = c => sim.Geometry.hubness(emb, "vec_id", "embedding",
-          k = 10, topN = 20, candidates = c))
-    }),
-
-    "q352_lid_cand" -> ((s, dir) => memoOnce(s"q352v-$dir") {
-      val emb = Tables.embeddings(s, dir)
-      sim.CandVerdict.selfVerdict(emb, "vec_id", kCoarse = 8, nprobe = 2,
-        pruneFloorPct = candPruneFloorPct,
-        fullCand = ivfFullCand(s, dir), prunedCand = ivfSelfCand(s, dir),
-        diag = c => sim.Geometry.lidMle(emb, "vec_id", "embedding",
-          "label", k = 10, candidates = c))
-    }),
-
-    "q353_mnn_cand" -> ((s, dir) => memoOnce(s"q353v-$dir") {
-      val e = Tables.embeddings(s, dir)
-      val a = e.filter(col("label") === 0)
-      val b = e.filter(col("label") === 1)
-      sim.CandVerdict.crossVerdict(a, b, "vec_id", kCoarse = 8, nprobe = 2,
-        pruneFloorPct = candPruneFloorPct,
-        fullCand = memoOnce(s"ivf-cross-full-$dir") {
-          sim.Candidates.ivfCrossPairs(a, b, "vec_id", "embedding",
-              kCoarse = 8, nprobe = 8)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        },
-        prunedCand = memoOnce(s"ivf-cross-cand-$dir") {
-          sim.Candidates.ivfCrossPairs(a, b, "vec_id", "embedding",
-              kCoarse = 8, nprobe = 2)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        },
-        diag = c => sim.Similarity.mutualNearest(a, b, "vec_id",
-          "embedding", candidates = c))
-    }),
-
-    "q354_ann_ladder" -> ((s, dir) => {
-      // the choose-your-index capstone: every ANN rung (LSH / IVF-flat
-      // / PQ / IVF-PQ / IVFADC / int8 / binary / matryoshka) vs brute
-      // force on ONE query set — measured recall@5 + the cost
-      // decomposition (scanned rows × scan width + rescore dots).
-      // VERDICT-GATED (r13): the driver row is AnnLadder.verdicts —
-      // config literals + exact counts by value + the full-scan rungs'
-      // EXACT scan/rescore numbers + recall-floor / scan-pruned 1/0s
-      // the oracle asserts (brute force must read recall EXACTLY 1.0);
-      // the informative measured table stays the library surface,
-      // spec'd by AnnLadderSpec. The 9-row table is memoized COLLECTED
-      // (not as a cached plan) so Bench's warm run reuses the result
-      // without re-training and without holding checkpoint blocks
-      // across the between-queries release.
-      val (schema, rows) = memoOnce(s"annladder-$dir") {
-        val emb = Tables.embeddings(s, dir)
-        // reuse q71/q73's memoized codebooks (same keys, same params):
-        // the ladder evaluates the deployment's existing index models
-        val t = sim.AnnLadder.selectionTable(emb,
-          "vec_id", "embedding", dim = 64, isQuery = col("vec_id") < 10,
-          k = 5,
-          ivfpqModel = Some(memoOnce(s"q71mdl|$dir") {
-            sim.IvfPq.fit(emb, "vec_id", "embedding", dim = 64,
-              kCoarse = 16, coarseIters = 3, pqIters = 3)
-          }),
-          ivfadcModel = Some(memoOnce(s"q73mdl|$dir") {
-            sim.IvfPq.fit(emb, "vec_id", "embedding", dim = 64,
-              kCoarse = 16, coarseIters = 3, pqIters = 3, residual = true)
-          }))
-        (t.schema, t.collect().toSeq)
-      }
-      sim.AnnLadder.verdicts(
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema))
-        .orderBy(col("rung"))
-    }),
-
-    "q355_fleiss_kappa" -> ((s, dir) =>
-      // multi-rater chance-corrected agreement per cohort (variable
-      // rater counts; single-rating units excluded but counted)
-      etl.MlEval.fleissKappa(ratingsFrame(s, dir), Seq("cohort"),
-          col("unit"), col("label"))
-        .orderBy(col("cohort"))),
-
-    "q356_krippendorff" -> ((s, dir) =>
-      // agreement with missing ratings handled natively — the normal
-      // state of a crowd/ensemble label table (nominal metric)
-      etl.MlEval.krippendorffAlpha(ratingsFrame(s, dir), Seq("cohort"),
-          col("unit"), col("label"))
-        .orderBy(col("cohort"))),
-
-    "q357_lf_diagnostics" -> ((s, dir) =>
-      // the weak-supervision pre-flight: coverage / overlap / conflict
-      // / majority-agreement per labeling function (event_type as LF,
-      // NULL value = abstain)
-      etl.MlEval.lfDiagnostics(lfVotesFrame(s, dir), col("unit"),
-          col("lf"), col("label"))
-        .orderBy(col("lf"))),
-
-    "q358_logistic" -> ((s, dir) =>
-      // in-engine logistic fit (propensity/filter model): P(returned |
-      // qty, discount) by 4 Newton rounds, 9 moment sums collected per
-      // round, Cramer 3×3 solve — the oracle unrolls the identical
-      // recurrence (the q106/q292 iterative-trainer feat, now for MLE)
-      etl.MlEval.logisticNewton(Tables.lineitem(s, dir),
-        yCol = (col("l_returnflag") === "R").cast("double"),
-        x1Col = col("l_quantity"), x2Col = col("l_discount"))),
-
-    "q359_hill_tail" -> ((s, dir) =>
-      // how heavy is each stream's upper tail (Hill/Pareto index from
-      // the top-51 order stats) — the POT companion to q263's
-      // block-maxima Gumbel; α∈2-4 = p99s are sample-size artifacts
-      etl.Aggregates.hillTail(Tables.events(s, dir), Seq("event_type"),
-          col("value"), k = 50)
-        .orderBy(col("event_type"))),
-
-    "q360_repeated_spans" -> ((s, dir) =>
-      // the Lee et al. ACL'22 span-dedup pressure metric: per doc, the
-      // share of tokens covered by a 5-gram that occurs >1× anywhere
-      // in the corpus — finds boilerplate PASSAGES whole-doc dedup
-      // can't (group-by problem, no pair join)
-      text.Spans.repeatedSpanCoverage(Tables.documents(s, dir), "doc_id",
-          "text", k = 5)
-        .orderBy(col("doc_id"))),
-
-    "q361_top_spans" -> ((s, dir) =>
-      // WHAT the boilerplate is: top repeated 5-grams with occurrence
-      // and doc counts — the allow/deny list before a span scrub
-      text.Spans.topRepeatedSpans(Tables.documents(s, dir), "doc_id",
-        "text", k = 5, topN = 20)),
-
-    "q362_k_anonymity" -> ((s, dir) =>
-      // the pre-release privacy gate: how small do the (nation,
-      // mktsegment) equivalence classes get, and how many rows sit in
-      // classes below k=10 — the single-out risk share
-      etl.Privacy.kAnonymityReport(Tables.customer(s, dir),
-        Seq("c_nationkey", "c_mktsegment"), k = 10)),
-
-    "q363_l_diversity" -> ((s, dir) =>
-      // the homogeneity-attack screen k-anonymity misses: distinct
-      // sensitive values (acctbal band) per QI class, rows below l=3
-      etl.Privacy.lDiversityReport(Tables.customer(s, dir),
-        Seq("c_nationkey", "c_mktsegment"),
-        sensitiveCol = floor(col("c_acctbal") / 2000).cast("long"), l = 3)),
-
-    "q364_join_skew" -> ((s, dir) =>
-      // the join pre-flight q199's single-table report can't answer:
-      // which keys AMPLIFY when the self-join runs (n_l × n_r on one
-      // reduce task) — decides broadcast vs salt vs pre-agg without
-      // materializing one output row
-      operators.Skew.joinSkewReport(Tables.events(s, dir),
-        Tables.events(s, dir), "user_id", topN = 20)),
-
-    "q365_cdc_dedup" -> ((s, dir) => {
-      // content-defined chunk dedup over the binary column (gear CDC,
-      // FastCDC family). VERDICT-GATED (r13, the twin trick on BYTES):
-      // chunk boundaries stay engine-imperative (mapPartitions-class,
-      // the C12 islands), but identical blobs chunk IDENTICALLY — a
-      // planted twin of every 5th doc makes both members fully
-      // duplicated BY CONSTRUCTION, so the full-dup member count
-      // compares BY VALUE (exactly 2× the twin count) next to the
-      // exact corpus byte total (chunks cover every byte); share and
-      // chunk-count bounds assert as 1/0s. Insertion-resync and
-      // determinism remain spec'd.
-      import s.implicits._
-      val docs = Tables.documents(s, dir)
-        .filter(col("text").isNotNull && length(col("text")) >= 1)
-        .select(col("doc_id").as("id"), col("text"))
-      val twins = docs.filter(col("id") % 5 === 0)
-        .select((col("id") + 1000000L).as("id"), col("text"))
-      val blobs = docs.unionByName(twins)
-        .select(col("id"), col("text").cast("binary").as("bytes"))
-        .as[multimodal.Binary.Blob]
-      val isTwinMember = (col("id") % 5 === 0 && col("id") < 1000000L) ||
-        col("id") >= 1000000L
-      multimodal.Binary.cdcDupReport(blobs).agg(
-        count(lit(1)).as("n_blobs"),
-        sum(col("n_bytes")).cast("bigint").as("bytes_total"),
-        sum(when(isTwinMember && col("dup_byte_share") === 1.0 &&
-          col("n_dup_chunks") === col("n_chunks"), 1L).otherwise(0L))
-          .as("n_twin_members_full_dup"),
-        min(col("dup_byte_share") >= 0.0 && col("dup_byte_share") <= 1.0 &&
-          col("n_dup_chunks") <= col("n_chunks") &&
-          col("dup_bytes") <= col("n_bytes")).cast("bigint").as("bounds_ok"))
-    }),
-
-    "q366_quantile_norm" -> ((s, dir) =>
-      // put every event stream's values on ONE scale: each value maps
-      // to the pooled distribution's quantile at its within-source
-      // percent rank (rank-exact, unlike z-scoring's two moments)
-      etl.Clean.quantileNormalize(Tables.events(s, dir), "event_type",
-          col("value"))
-        .orderBy(col("event_type"), col("value"), col("pct"))),
-
-    "q367_platt" -> ((s, dir) =>
-      // the parametric calibrator on q294's exact score/label pairing:
-      // isotonic bends to any monotone curve, Platt's 2 params can't
-      // overfit thin calibration data — run both, compare
-      etl.MlEval.plattScaling(Tables.events(s, dir).filter(col("value").isNotNull),
-        scoreCol = least(col("value") / 500, lit(1.0)),
-        isPositive = col("event_type") === "purchase")),
-
-    "q368_url_canon" -> ((s, dir) =>
-      // crawl-side URL canonicalization (planted deterministically
-      // in-query, the q81 discipline, so the oracle replays the mess):
-      // case/www/default-port/fragment/tracking-param/param-order noise
-      // all collapse to one canonical page key — map-only, scan speed
-      text.Urls.canonicalize(plantedUrls(s, dir), col("url"))
-        .select(col("doc_id"), col("url"), col("host"), col("canonical"))
-        .orderBy(col("doc_id"))),
-
-    "q369_host_census" -> ((s, dir) =>
-      // the per-site dedup payoff: raw URLs vs distinct canonical
-      // pages per host — where crawl-frequency stats were lying
-      text.Urls.hostCensus(plantedUrls(s, dir), col("url"))
-        .orderBy(col("host"))),
-
-    "q370_theta_overlap" -> ((s, dir) =>
-      // audience overlap by theta-sketch set algebra (the operation HLL
-      // state can't answer): which value bands share users — exact pair
-      // counts + 1/0 verdicts that every sketch estimate is within 5%
-      // (the q138 discipline: raw estimates never reach the hash)
-      etl.Aggregates.thetaOverlap(
-          Tables.events(s, dir).filter(col("value").isNotNull),
-          segmentCol = floor(col("value") / 100).cast("long"),
-          idCol = col("user_id"))
-        .orderBy(col("seg_a"), col("seg_b"))),
-
-    "q371_debias" -> ((s, dir) =>
-      // the CURE for q292's anisotropy diagnosis (Mu & Viswanath '18
-      // all-but-the-top): mean-center + project out PC1; exploded
-      // scalar rows so the iterative-trainer output stays hash-gated
-      sim.Geometry.removeTopComponent(Tables.embeddings(s, dir),
-          "vec_id", "embedding")
-        .orderBy(col("vec_id"), col("pos"))),
-
-    "q372_group_sequential" -> ((s, dir) =>
-      // the scheduled-looks interim monitor beside q330's always-valid
-      // one: 5 pre-planned looks, cumulative Welch z vs pinned
-      // O'Brien-Fleming boundaries (spend alpha conservatively early)
-      etl.Experiment.groupSequential(Tables.events(s, dir),
-          Seq("event_type"), col("ts"),
-          isTreat = col("user_id") % 2 === 0, valueCol = col("value"))
-        .orderBy(col("event_type"), col("look"))),
-
-    "q392_alpha_spending" -> ((s, dir) =>
-      // Lan-DeMets spending functions beside q372's pinned OBF table
-      // (r15 — the last sketched depth item): OBF-type and Pocock-type
-      // spends per look with the Bonferroni-increment crossing rule
-      // (conservative by construction; the exact boundary needs MVN
-      // recursion neither engine can express — documented); Phi rides
-      // a pinned Abramowitz-Stegun approximation both engines replay
-      etl.Experiment.alphaSpending(Tables.events(s, dir),
-          Seq("event_type"), col("ts"),
-          isTreat = col("user_id") % 2 === 0, valueCol = col("value"))
-        .orderBy(col("event_type"), col("look"))),
-
-    "q373_procrustes" -> ((s, dir) => {
-      // "did the new embedding model just rotate the space?" —
-      // VALUE-GATED (r13): v2 is a SIGNED PERMUTATION of v1 (dims
-      // reversed, even output dims negated) — still a fully general
-      // orthogonal map for the recovery problem, but one the oracle
-      // can REPLAY: cos_before (raw cross-space cosine vs the permuted
-      // twin) recomputes by value, and the Procrustes-ALIGNED cosine
-      // must read EXACTLY 1.0 at 4 digits (Jacobi residuals ~1e-9;
-      // the float permutation is bit-exact on both engines — negation
-      // and reordering lose no precision). The planted 30°-rotation
-      // recovery stays spec'd (OperatorEdgeSpec).
-      val v1 = Tables.embeddings(s, dir)
-      val v2 = v1.select(col("vec_id"),
-        transform(col("embedding"), (_, i) =>
-          (when(i % 2 === 0, lit(-1.0)).otherwise(lit(1.0)) *
-            element_at(col("embedding"), lit(64) - i)).cast("float"))
-          .as("embedding"))
-      sim.Procrustes.alignReport(v1, v2, "vec_id", "embedding", digits = 4)
-        .orderBy(col("vec_id"))
-    }),
-
-    "q374_icc" -> ((s, dir) =>
-      // continuous-ratings agreement (the kappa family's ANOVA
-      // sibling): how much rating variance is the UNITS vs raters+noise
-      etl.MlEval.icc(contRatingsFrame(s, dir), Seq("cohort"),
-          col("unit"), col("rating"))
-        .orderBy(col("cohort"))),
-
-    "q375_cronbach" -> ((s, dir) =>
-      // internal consistency of the complete rater panel; incomplete
-      // units excluded and counted (ragged α isn't Cronbach's α)
-      etl.MlEval.cronbachAlpha(contRatingsFrame(s, dir), Seq("cohort"),
-          col("unit"), col("rater"), col("rating"))
-        .orderBy(col("cohort"))),
-
-    "q379_label_pr" -> ((s, dir) =>
-      // per-cohort effective dimensionality — "which slice of the
-      // corpus embeds into a collapsed subspace": the keyed form of
-      // q377 (one d2 typed buffer PER KEY, #keys model constants back)
-      sim.Geometry.participationRatioBy(Tables.embeddings(s, dir),
-          "label", "embedding")
-        .orderBy(col("label"))),
-
-    "q378_kneser_ney" -> ((s, dir) =>
-      // the real CCNet arithmetic: interpolated Kneser-Ney bigram LM
-      // score per doc (q122's add-k is the classroom stand-in) —
-      // continuation-probability backoff, D = 0.75
-      text.Corpus.knBigramLogProb(Tables.documents(s, dir), "doc_id",
-          "text")
-        .orderBy(col("doc_id"))),
-
-    "q380_kn_trigram" -> ((s, dir) =>
-      // the CCNet-class filter proper: interpolated KN TRIGRAM score
-      // with per-order Chen-Goodman discounts D = n1/(n1+2n2) estimated
-      // from the corpus (q378's fixed-0.75 bigram is the rung below);
-      // continuation counts cascade one level down, estimated discounts
-      // ride every row so the oracle recomputes them by value
-      text.Corpus.knTrigramLogProb(Tables.documents(s, dir), "doc_id",
-          "text")
-        .orderBy(col("doc_id"))),
-
-    "q391_kn_fourgram" -> ((s, dir) =>
-      // the q380 cascade one order up, built MEASURED-FIRST (r15): the
-      // predicted no-singleton cliff at n=4 does not exist on these
-      // corpora (n1 = 22.7k/172k at sf0.01/0.1, estimated D4 ~ .89/.72),
-      // so all three discounts are genuinely estimated; continuation
-      // tables derive level-from-level (Chen-Goodman), discounts ride
-      // every row by value
-      text.Corpus.knFourgramLogProb(Tables.documents(s, dir), "doc_id",
-          "text")
-        .orderBy(col("doc_id"))),
-
-    "q377_participation_ratio" -> ((s, dir) =>
-      // effective dimensionality of the embedding covariance,
-      // PR = tr(C)^2 / tr(C^2): pure moment algebra off the one-pass
-      // scatter (no eigensolve), so unlike q292's power fit the WHOLE
-      // statistic is oracle-replayable cell-for-cell
-      sim.Geometry.participationRatio(Tables.embeddings(s, dir),
-        "embedding")),
-
-    "q376_pagerank_dangling" -> ((s, dir) => {
-      // PageRank on the RAW (un-symmetrized) customer→supplier graph:
-      // every supplier is a dangling sink, so the default run leaks
-      // ~all rank mass by round 10 — redistributeDangling teleports
-      // the sink mass uniformly each round (Page et al.), conserving
-      // Σrank = 1. The oracle unrolls the identical recurrence with a
-      // per-round dangling-mass CTE.
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val edges = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      operators.PageRank.run(edges, "src", "dst", iters = 10,
-          redistributeDangling = true)
-        .select(col("node"), roundStable(col("rank"), 6).as("rank_r"))
-        .orderBy(col("node"))
-    }),
-
-    "q285_eb_shrinkage" -> ((s, dir) =>
-      // rank users by high-value rate without letting 1/1 beat
-      // 498/500: beta-binomial shrinkage with a moments prior
-      etl.Aggregates.ebShrinkRates(Tables.events(s, dir),
-          itemCols = Seq("user_id"), isSuccess = col("value") > 250)
-        .orderBy(col("user_id"))),
-
-    "q286_simpson" -> ((s, dir) =>
-      // is the pooled A-vs-B sign a segment-mix artifact — pooled vs
-      // direct-standardized diff across weekday strata
-      etl.Aggregates.simpsonCheck(Tables.events(s, dir),
-          Seq("event_type"), segCol = weekday(col("ts")).cast("long"),
-          isA = col("user_id") % 2 === 0, yCol = col("value"))
-        .orderBy(col("event_type"))),
-
-    "q287_cell_residuals" -> ((s, dir) =>
-      // WHICH cells drive the chi-square: Haberman adjusted residuals
-      // per (type, weekday) cell with the margin correction
-      etl.Drift.cellResiduals(Tables.events(s, dir),
-          aCol = col("event_type"), bCol = weekday(col("ts")).cast("long"))
-        .orderBy(col("a"), col("b"))),
-
-    "q282_cluster_purity" -> ((s, dir) => {
-      // score q66's dedup clustering against exact-dup truth classes:
-      // B-cubed P/R/F1 from contingency cells — no per-element join
-      val docs = Tables.documents(s, dir)
-      val pairs = NGramJaccard.similarPairs(docs, "doc_id", "text",
-        n = 3, minJaccard = 0.8)
-      val comps = operators.ConnectedComponents.minLabel(pairs, "id_a", "id_b")
-      val el = docs.select(col("doc_id"), md5(col("text")).as("truth"))
-        .join(comps.withColumnRenamed("node", "doc_id"),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("comp"), col("doc_id")).as("cluster"),
-          col("truth"))
-      dedup.BlockingEval.bcubed(el, "doc_id", "cluster", "truth")
-    }),
-
-    "q283_dominant_period" -> ((s, dir) => {
-      // WHAT period does this series actually have: argmax of the ACF
-      // over lags 2..48 — the daily cycle should read 24, and a
-      // runner-up far below it says the cycle is clean
-      import org.apache.spark.sql.expressions.Window
-      val hourly = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hb"))
-        .agg(avg(col("value")).as("hv"))
-        .filter(col("hv").isNotNull) // all-null hours must not occupy lag positions
-      val lags = 2 to 48
-      val wide = etl.Aggregates.acf(hourly, Seq("event_type"),
-        col("hb"), col("hb"), col("hv"), lags = lags)
-      val stackExpr = s"stack(${lags.size}, " +
-        lags.map(l => s"$l, acf_$l").mkString(", ") + ") as (lag, acf)"
-      val wR = Window.partitionBy(col("event_type"))
-        .orderBy(col("acf").desc, col("lag"))
-      wide.selectExpr("event_type", stackExpr)
-        .filter(col("acf").isNotNull)
-        .withColumn("rk", row_number().over(wR))
-        .filter(col("rk") <= 2)
-        .groupBy(col("event_type"))
-        .agg(
-          max(when(col("rk") === 1, col("lag"))).cast("long")
-            .as("best_lag"),
-          max(when(col("rk") === 1, col("acf"))).as("best_acf"),
-          max(when(col("rk") === 2, col("lag"))).cast("long")
-            .as("runner_lag"),
-          max(when(col("rk") === 2, col("acf"))).as("runner_acf"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q284_records" -> ((s, dir) => {
-      // the nonparametric trend screen: running-max/min breaks vs the
-      // distribution-free harmonic expectation
-      val hourly = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hb"))
-        .agg(avg(col("value")).as("hv"))
-      etl.Aggregates.recordCounts(hourly, Seq("event_type"),
-          orderCol = col("hb"), tieCol = col("hb"), valueCol = "hv")
-        .orderBy(col("event_type"))
-    }),
-
-    "q279_stump" -> ((s, dir) =>
-      // which feature best separates high-value events, and where —
-      // the tree-root split as pure aggregation over distinct values
-      etl.Features.bestStump(Tables.events(s, dir),
-          labelCol = col("value") > 250,
-          features = Seq(
-            "hour" -> hour(col("ts")),
-            "weekday" -> weekday(col("ts")),
-            "day_of_month" -> dayofmonth(col("ts"))))
-        .orderBy(col("feature"))),
-
-    "q280_hll_overlap" -> ((s, dir) => {
-      // audience overlap at sketch scale: inclusion-exclusion over
-      // HLL unions, verdict-gated against the exact pair counts (the
-      // q62/q138 discipline — estimates are engine-specific, the
-      // within-tolerance verdict is not)
-      val m = Tables.events(s, dir)
-        .select(col("event_type").as("c"), col("user_id").as("e"))
-        .distinct()
-      val sk = m.groupBy(col("c")).agg(expr("hll_sketch_agg(e)").as("sk"))
-      val sa = sk.select(col("c").as("cat_a"), col("sk").as("ska"))
-      val sb = sk.select(col("c").as("cat_b"), col("sk").as("skb"))
-      val est = sa.crossJoin(sb).filter(col("cat_a") < col("cat_b"))
-        .select(col("cat_a"), col("cat_b"),
-          (expr("hll_sketch_estimate(ska)") +
-            expr("hll_sketch_estimate(skb)") -
-            expr("hll_sketch_estimate(hll_union(ska, skb))"))
-            .as("__inter_est"))
-      val exact = m.as("x").join(m.as("y"), "e")
-        .filter(col("x.c") < col("y.c"))
-        .groupBy(col("x.c").as("cat_a"), col("y.c").as("cat_b"))
-        .agg(count(lit(1)).as("n_both"))
-      est.join(exact, Seq("cat_a", "cat_b"), "left")
-        .withColumn("n_both", coalesce(col("n_both"), lit(0L)))
-        .select(col("cat_a"), col("cat_b"), col("n_both"),
-          (abs(col("__inter_est") - col("n_both")) <=
-            greatest(col("n_both").cast("double") * lit(0.2), lit(3.0)))
-            .cast("long").as("sketch_ok"))
-        .orderBy(col("cat_a"), col("cat_b"))
-    }),
-
-    "q281_poststrat" -> ((s, dir) =>
-      // re-weight the second half's metric to the first half's
-      // event-type mix: the mix-adjusted mean with its SE
-      etl.Aggregates.postStratified(Tables.events(s, dir),
-          Seq("event_type"), valueCol = col("value"),
-          isRef = col("ts") < lit("2024-01-16").cast("timestamp"))),
-
-    "q276_did" -> ((s, dir) =>
-      // before/after × treat/control netting out both the standing
-      // difference and the common time trend, per event type
-      etl.Aggregates.diffInDiff(Tables.events(s, dir), Seq("event_type"),
-          isTreat = col("user_id") % 2 === 0,
-          isPost = col("ts") >= lit("2024-01-16").cast("timestamp"),
-          yCol = col("value"))
-        .orderBy(col("event_type"))),
-
-    "q277_ltv_curve" -> ((s, dir) => {
-      // cumulative purchase value per cohort user by week offset —
-      // the money twin of q49's activity triangle; ordered cumulative
-      // sums are engine-deterministic
-      val ev = Tables.events(s, dir)
-      val cohorts = ev.groupBy(col("user_id"))
-        .agg(date_trunc("week", min(col("ts"))).as("cohort"))
-      import org.apache.spark.sql.expressions.Window
-      val wCum = Window.partitionBy(col("cohort")).orderBy(col("week_offset"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.filter(col("event_type") === "purchase" && col("value").isNotNull)
-        .join(cohorts, "user_id")
-        .groupBy(col("cohort"),
-          floor(datediff(to_date(col("ts")), to_date(col("cohort"))) / 7)
-            .cast("long").as("week_offset"))
-        .agg(sum(col("value")).as("__rev"))
-        .join(cohorts.groupBy(col("cohort"))
-          .agg(countDistinct(col("user_id")).as("cohort_users")), "cohort")
-        .withColumn("rev", roundStable(col("__rev"), 6))
-        .withColumn("cum_rev", roundStable(sum(col("__rev")).over(wCum), 6))
-        .withColumn("ltv_per_user", roundStable(
-          sum(col("__rev")).over(wCum) /
-            col("cohort_users").cast("double"), 6))
-        .select(col("cohort"), col("week_offset"), col("cohort_users"),
-          col("rev"), col("cum_rev"), col("ltv_per_user"))
-        .orderBy(col("cohort"), col("week_offset"))
-    }),
-
-    "q278_vocab_overlap" -> ((s, dir) =>
-      // which sources write with the same vocabulary — q244's
-      // overlap machinery on (word, source) memberships: the corpus
-      // redundancy map between ingestion feeds
-      etl.Aggregates.audienceOverlap(
-          Tables.documents(s, dir)
-            .select(col("source"),
-              explode(split(col("text"), " ")).as("word"))
-            .filter(col("word") =!= ""),
-          entityCol = col("word"), catCol = col("source"))
-        .orderBy(col("cat_a"), col("cat_b"))),
-
-    "q273_binseg" -> ((s, dir) => {
-      // WHERE the hourly series changes, up to 3 changepoints — the
-      // multi-CP upgrade of q181's single Pettitt; all ordered sums
-      val hourly = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hb"))
-        .agg(avg(col("value")).as("hv"))
-      etl.Drift.binseg(hourly, Seq("event_type"), orderCol = col("hb"),
-          tieCol = col("hb"), valueCol = "hv", minSeg = 48)
-        .orderBy(col("event_type"), col("segment"), col("split_i"))
-    }),
-
-    "q274_retention_halflife" -> ((s, dir) =>
-      // "this cohort loses half its actives every H weeks" — the
-      // decay-rate summary of q49's triangle, with r² honesty
-      etl.Aggregates.retentionHalfLife(Tables.events(s, dir),
-          tsCol = col("ts"), entityCol = col("user_id"))
-        .orderBy(col("cohort"))),
-
-    "q275_peaks" -> ((s, dir) => {
-      // the incident finder: local maxima of the hourly series that
-      // are also robustly high (median + 2.5·1.4826·MAD)
-      val hourly = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hb"))
-        .agg(avg(col("value")).as("hv"))
-      etl.Drift.peaks(hourly, Seq("event_type"), orderCol = col("hb"),
-          tieCol = col("hb"), valueCol = "hv", k = 2.5)
-        .orderBy(col("event_type"), col("o"))
-    }),
-
-    "q270_readability" -> ((s, dir) =>
-      // the structural readability screen: Flesch ease + FK grade
-      // from pure regexp counts — run-on machine text scores low,
-      // listy fragments score absurdly high; both are quality flags
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          text.TextStats.wsTokenCount(col("text")).as("n_words"),
-          text.TextStats.sentenceCount(col("text")).as("n_sentences"),
-          text.TextStats.syllableCount(col("text")).as("n_syllables"),
-          roundStable(text.TextStats.fleschEase(col("text")), 6)
-            .as("flesch"),
-          roundStable(text.TextStats.fkGrade(col("text")), 6)
-            .as("fk_grade"))
-        .orderBy(col("doc_id"))),
-
-    "q271_log_odds" -> ((s, dir) =>
-      // WHICH words distinguish the English side of the corpus —
-      // Monroe's prior-shrunk log-odds z, comparable across the
-      // whole frequency spectrum (raw ratios explode on rare words)
-      text.Corpus.logOddsWords(Tables.documents(s, dir),
-          isA = col("lang") === "en", textCol = "text")
-        .orderBy(col("word"))),
-
-    "q272_conversion_latency" -> ((s, dir) => {
-      // how LONG view→purchase takes, not just whether: exact
-      // latency percentiles per cohort + the conversion rate
-      val ev = Tables.events(s, dir)
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("tv"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .join(v, "user_id").filter(col("ts") > col("tv"))
-        .groupBy(col("user_id"))
-        .agg(min(unix_micros(col("ts"))).as("tp"))
-      v.join(p, Seq("user_id"), "left")
-        .select((col("user_id") % 3).as("cohort"),
-          ((col("tp") - unix_micros(col("tv"))).cast("double") /
-            lit(1000000.0)).as("lat"),
-          col("tp").isNotNull.as("conv"))
-        .groupBy(col("cohort"))
-        .agg(count(lit(1)).as("n_viewed"),
-          sum(when(col("conv"), 1L).otherwise(0L)).as("n_converted"),
-          roundStable(sum(when(col("conv"), 1L).otherwise(0L))
-            .cast("double") / count(lit(1)).cast("double"), 6)
-            .as("conv_rate"),
-          roundStable(expr("percentile(lat, 0.5)"), 6).as("median_s"),
-          roundStable(expr("percentile(lat, 0.9)"), 6).as("p90_s"),
-          roundStable(avg(col("lat")), 6).as("mean_s"))
-        .orderBy(col("cohort"))
-    }),
-
-    "q267_neyman" -> ((s, dir) =>
-      // how to spend a 1000-row sampling budget: n_h ∝ N_h·σ_h, the
-      // variance-minimizing split; largest-remainder integerization
-      etl.Aggregates.neymanAllocation(Tables.events(s, dir),
-          Seq("event_type"), "value", totalN = 1000L)
-        .orderBy(col("event_type"))),
-
-    "q268_smd_balance" -> ((s, dir) => {
-      // are the two arms comparable BEFORE any claim: standardized
-      // mean differences over per-user covariates, one moments pass
-      val perUser = Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(count(lit(1)).cast("double").as("n_events"),
-          avg(col("value")).as("avg_value"),
-          countDistinct(col("event_type")).cast("double").as("n_types"),
-          countDistinct(to_date(col("ts"))).cast("double")
-            .as("active_days"))
-      etl.Aggregates.smdBalance(perUser, isA = col("user_id") % 2 === 0,
-          metricCols = Seq("n_events", "avg_value", "n_types",
-            "active_days"))
-        .orderBy(col("covariate"))
-    }),
-
-    "q269_blocking_eval" -> ((s, dir) =>
-      // audit the candidate-generation stage itself: prefix blocking
-      // vs exact-Jaccard ground truth — RR/PC/PQ without enumerating
-      // a single candidate pair
-      dedup.BlockingEval.prefixBlockingReport(Tables.documents(s, dir),
-        "doc_id", "text", prefixLen = 40, n = 3, minJaccard = 0.5)),
-
-    "q264_forecast_band" -> ((s, dir) =>
-      // the alerting layer on q159's screen: same-hour-yesterday
-      // forecast with a distribution-free 95% band, flags on rounded
-      etl.Aggregates.forecastBand(Tables.events(s, dir),
-          Seq("event_type"), tsCol = col("ts"), valueCol = "value")
-        .orderBy(col("event_type"), col("bucket"))),
-
-    "q265_adf" -> ((s, dir) => {
-      // random walk or mean-reverting — whether mean-based monitors
-      // on this series lie; ADF on the hourly-mean series per type
-      val hourly = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hb"))
-        .agg(avg(col("value")).as("hv"))
-      etl.Aggregates.adfTest(hourly, Seq("event_type"),
-          orderCol = col("hb"), tieCol = col("hb"), valueCol = "hv")
-        .orderBy(col("event_type"))
-    }),
-
-    "q266_granger" -> ((s, dir) => {
-      // does yesterday's error count predict today's purchase value
-      // beyond what yesterday's value already does
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("dt"))
-        .agg(avg(when(col("event_type") === "purchase", col("value")))
-          .as("y"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L))
-            .cast("double").as("x"))
-      etl.Aggregates.granger(daily, Nil, orderCol = col("dt"),
-        yCol = col("y"), xCol = col("x"))
-    }),
-
-    "q261_ktruss" -> ((s, dir) =>
-      // edge-level cohesion one notch above q137's k-core: every
-      // surviving tie is embedded in >= 2 triangles (4-truss, <= 3
-      // peels — the oracle unrolls the same rounds)
-      operators.KTruss.truss(supplierGraph(s, dir), "src", "dst",
-          k = 4, maxPeels = 3)
-        .orderBy(col("a"), col("b"))),
-
-    "q262_markov_entropy" -> ((s, dir) =>
-      // HOW PREDICTABLE is the next event given this one — the
-      // information summary of q140's transition matrix, with the
-      // modal successor under the q248 tiebreak
-      operators.Sequences.markovEntropy(Tables.events(s, dir), "user_id",
-          orderCol = col("ts"), tieCol = col("event_id"),
-          stateCol = col("event_type"))
-        .orderBy(col("state"))),
-
-    "q263_gumbel_return" -> ((s, dir) => {
-      // "the spike this monitor sees once a quarter / once a decade":
-      // Gumbel fit on daily maxima by L-moments, pinned constants
-      val dm = Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(max(col("value")).as("mx"))
-      etl.Aggregates.gumbelReturn(dm, Seq("event_type"), "mx",
-          tieCol = col("d"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q258_tukey" -> ((s, dir) =>
-      // WHICH weekdays differ — the post-hoc step q249's single F
-      // refuses to answer; q-stats against the pooled within-variance
-      etl.Aggregates.tukeyPairs(Tables.events(s, dir), Seq("event_type"),
-          factorCol = weekday(col("ts")).cast("long"), yCol = col("value"))
-        .orderBy(col("event_type"), col("lvl_a"), col("lvl_b"))),
-
-    "q259_funnel_window" -> ((s, dir) =>
-      // view→click→purchase with the WHOLE chain inside 3 days —
-      // "viewed in January, bought in June" must not count (q48's
-      // first-touch funnel has no clock)
-      operators.Sequences.windowFunnel(Tables.events(s, dir), "user_id",
-          tsCol = col("ts"), tieCol = col("event_id"),
-          typeCol = col("event_type"),
-          steps = Seq("view", "click", "purchase"),
-          windowMicros = 3L * 86400L * 1000000L)
-        .orderBy(col("depth"))),
-
-    "q260_lmoments" -> ((s, dir) =>
-      // the order-statistics distribution fingerprint: L-scale/skew/
-      // kurtosis, outlier-robust where moment skew cubes its tails
-      etl.Aggregates.lMoments(Tables.events(s, dir), Seq("event_type"),
-          "value", tieCol = col("event_id"))
-        .orderBy(col("event_type"))),
-
-    "q255_logrank" -> ((s, dir) => {
-      // ARE the two arms' survival curves different — the inferential
-      // step after q172 draws them; same per-user staging
-      val perUser = Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(min(col("ts")).as("__first"), max(col("ts")).as("__last"),
-          min(when(col("event_type") === "error", col("ts"))).as("__err"))
-      val subj = perUser
-        .select((col("user_id") % 3).as("cohort"),
-          (col("user_id") % 2 === 0).as("ga"),
-          datediff(to_date(coalesce(col("__err"), col("__last"))),
-            to_date(col("__first"))).cast("long").as("dur"),
-          col("__err").isNotNull.as("obs"))
-      etl.Aggregates.logRank(subj, Seq("cohort"), "dur", col("obs"),
-          isGroupA = col("ga"))
-        .orderBy(col("cohort"))
-    }),
-
-    "q256_bartlett" -> ((s, dir) =>
-      // the q249 ANOVA's assumption check, and a spread-drift readout:
-      // are the day-of-week VARIANCES equal per type
-      etl.Aggregates.bartlett(Tables.events(s, dir), Seq("event_type"),
-          factorCol = weekday(col("ts")).cast("long"), yCol = col("value"))
-        .orderBy(col("event_type"))),
-
-    "q257_xbar_chart" -> ((s, dir) =>
-      // the SPC view: daily subgroup means vs pooled-noise limits,
-      // rule-1 excursions + rule-4 runs, flagged on rounded values
-      etl.Drift.xbarChart(Tables.events(s, dir), Seq("event_type"),
-          bucketCol = to_date(col("ts")), valueCol = "value")
-        .orderBy(col("event_type"), col("bucket"))),
-
-    "q252_cuped" -> ((s, dir) => {
-      // CUPED: each user's first-half mean is the covariate that
-      // shrinks the second-half A/B read by exactly rho^2 — one
-      // per-user staging agg, then ONE moments agg does theta AND
-      // both arm means
-      val cut = lit("2024-01-16").cast("timestamp")
-      val perUser = Tables.events(s, dir)
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(avg(when(col("ts") < cut, col("value"))).as("x"),
-          avg(when(col("ts") >= cut, col("value"))).as("y"))
-      etl.Aggregates.cuped(perUser, Seq("event_type"),
-          isA = col("user_id") % 2 === 0, yCol = col("y"),
-          xCol = col("x"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q253_power_mde" -> ((s, dir) =>
-      // can this traffic even SEE a 5% move — the pre-ship power
-      // check and the flat-test autopsy, from one moments pass
-      etl.Aggregates.powerMde(Tables.events(s, dir), Seq("event_type"),
-          isA = col("user_id") % 2 === 0, yCol = col("value"))
-        .orderBy(col("event_type"))),
-
-    "q254_ratio_ci" -> ((s, dir) => {
-      // value PER EVENT as a ratio-of-sums over users: the delta
-      // method prices the shared-denominator variance a naive mean
-      // CI understates
-      val perUser = Tables.events(s, dir)
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(sum(col("value")).as("y"), count(col("value")).as("x"))
-      etl.Aggregates.ratioMetricCi(perUser, Seq("event_type"),
-          numCol = col("y"), denCol = col("x"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q176_rbo" -> ((s, dir) => {
-      // ranking-agreement readout: RBO@10 between the exact 64-dim
-      // cosine ranking and the matryoshka prefix-16 ranking — "how much
-      // retrieval does the cheap prefix change", per query, no labels
-      // (q173's nDCG scores quality; this scores agreement — the pair
-      // you tune a prefix deployment BY)
-      val emb = Tables.embeddings(s, dir)
-      val queries = emb.filter(col("vec_id") < 50)
-      val a = sim.Similarity.bruteForceTopK(emb, queries, "vec_id",
-        "embedding", k = 10)
-      val pre = emb.withColumn("embedding", slice(col("embedding"), 1, 16))
-      val b = sim.Similarity.bruteForceTopK(pre,
-        pre.filter(col("vec_id") < 50), "vec_id", "embedding", k = 10)
-      text.Retrieval.rbo(a, b, "query_id", "neighbor_id", "rank", k = 10)
-        .orderBy(col("qid"))
-    }),
-
-    "q148_hopping" -> ((s, dir) =>
-      // overlapping (hopping) event-time windows in BATCH — the
-      // streaming window shape q27's tumbling buckets don't cover:
-      // 2 h windows sliding 1 h, so every event lands in exactly two;
-      // Spark's window() explodes the assignment map-side
-      Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          window(col("ts"), "2 hours", "1 hour").as("w"))
-        .agg(count(lit(1)).as("n"),
-          graft.functions.roundStable(avg(col("value")), 6).as("avg_value"))
-        .select(col("event_type"), col("w.start").as("w_start"),
-          col("w.end").as("w_end"), col("n"), col("avg_value"))
-        .orderBy(col("event_type"), col("w_start"))),
-
-    "q149_ohlc" -> ((s, dir) => {
-      // OHLC downsampling (the telemetry/financial candle): per
-      // event_type × hour, open/close by (ts, event_id) order +
-      // high/low/volume — two row_number windows over ONE keyed sort,
-      // conditional aggs close the bucket
-      import org.apache.spark.sql.expressions.Window
-      val b = Tables.events(s, dir)
-        .withColumn("bucket", date_trunc("hour", col("ts")))
-      val wAsc = Window.partitionBy(col("event_type"), col("bucket"))
-        .orderBy(col("ts"), col("event_id"))
-      val wDesc = Window.partitionBy(col("event_type"), col("bucket"))
-        .orderBy(col("ts").desc, col("event_id").desc)
-      b.withColumn("__rf", row_number().over(wAsc))
-        .withColumn("__rl", row_number().over(wDesc))
-        .groupBy(col("event_type"), col("bucket"))
-        .agg(
-          // all four are exact DATA values (no arithmetic) — no
-          // rounding needed for engine portability
-          max(when(col("__rf") === 1, col("value"))).as("open"),
-          max(col("value")).as("high"),
-          min(col("value")).as("low"),
-          max(when(col("__rl") === 1, col("value"))).as("close"),
-          count(lit(1)).as("n"))
-        .orderBy(col("event_type"), col("bucket"))
-    }),
-
-    "q146_hits" -> ((s, dir) => {
-      // hubs & authorities over the directed customer→supplier trade
-      // graph (supplier ids offset — cust/supp key spaces overlap);
-      // 5 L1-normalized rounds, oracle unrolls the identical recurrence
-      val e = Tables.orders(s, dir)
-        .join(Tables.lineitem(s, dir),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000L)).as("dst"))
-      operators.Hits.run(e, "src", "dst", iters = 5)
-        .select(col("node"),
-          graft.functions.roundStable(col("hub"), 6).as("hub"),
-          graft.functions.roundStable(col("authority"), 6).as("authority"))
-        .orderBy(col("node"))
-    }),
-
-    "q147_cooccur" -> ((s, dir) =>
-      // "customers also bought": item-item cosine over order baskets,
-      // pair volume bounded by basket size, top-3 per item
-      operators.MarketBasket.cooccurTopK(
-          Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey")),
-          "l_orderkey", "l_partkey", k = 3)
-        .orderBy(col("item"), col("rank"))),
-
-    "q144_mrl_topk" -> ((s, dir) => {
-      // matryoshka two-stage retrieval: coarse rank on the first 16 of
-      // 64 dims (¼ the scan bytes), 4× over-fetch, exact full-dim
-      // re-rank — deterministic arithmetic end to end, so unlike the
-      // trained quantizers this approximate path is oracle-checked
-      val emb = Tables.embeddings(s, dir)
-      sim.Matryoshka.topK(emb, emb.filter(col("vec_id") < 10),
-          "vec_id", "embedding", dPrefix = 16, k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "q145_bq_topk" -> ((s, dir) => {
-      // sign-bit binary quantization (32× compression): Hamming-ranked
-      // candidates over packed words, 8× over-fetch (1-bit scores are
-      // coarse), exact re-rank — integer packing/XOR/popcount replay
-      // bit-identically in the oracle
-      val emb = Tables.embeddings(s, dir)
-      sim.BinaryQuant.topK(emb, emb.filter(col("vec_id") < 10),
-          "vec_id", "embedding", dims = 64, k = 5, overFetch = 8)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "q143_cusum" -> ((s, dir) =>
-      // online change-point localization: upper CUSUM of value per
-      // event_type over the second month-half, reference moments from
-      // the first — the drift family's WHEN to q125/q126's THAT
-      etl.Drift.cusum(Tables.events(s, dir), Seq("event_type"), "value",
-          orderCol = col("ts"), tieCol = col("event_id"),
-          isRef = dayofmonth(col("ts")) <= 15)
-        .orderBy(col("event_type"))),
-
-    "q138_hll_distinct" -> ((s, dir) => {
-      // incremental distinct-count surface: per-(event_type, day) HLL
-      // sketches (the stored artifact — a day aggregates once, forever),
-      // range queries union sketch rows instead of rescanning raw data.
-      // Output is the q62 discipline: exact cardinality for value
-      // comparison + 1/0 verdicts (estimate within 5% of exact; merged
-      // dailies within 1% of the direct whole-range sketch) — raw
-      // estimates are engine-specific and never reach the output.
-      val ev = Tables.events(s, dir)
-      val daily = etl.Aggregates.distinctSketchKeyed(
-        ev.withColumn("day", to_date(col("ts"))),
-        Seq("event_type", "day"), "user_id")
-      val merged = etl.Aggregates.sketchRollup(daily, Seq("event_type"))
-        .withColumnRenamed("distinct_estimate", "__est_merged")
-      val direct = etl.Aggregates.distinctSketch(ev, "event_type", "user_id")
-        .select(col("event_type"),
-          expr("hll_sketch_estimate(sketch)").as("__est_direct"))
-      val exact = ev.groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("exact_distinct"))
-      exact.join(merged, "event_type").join(direct, "event_type")
-        .select(col("event_type"), col("exact_distinct"),
-          (abs(col("__est_merged") - col("exact_distinct")).cast("double") /
-            col("exact_distinct") <= 0.05).cast("long").as("est_ok"),
-          (abs(col("__est_merged") - col("__est_direct")).cast("double") /
-            col("__est_direct") <= 0.01).cast("long").as("merge_ok"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q118_ols_trend" -> ((s, dir) => {
-      // per-series drift detection: OLS of value on days-since-2024
-      // per event_type — one pass, map-side partials, no window/sort.
-      // Population moments ≡ SQL regr_slope/regr_intercept; r² = corr².
-      val x = (unix_micros(col("ts")) - lit(1704067200000000L)) /
-        lit(86400e6)
-      etl.Aggregates.olsTrend(Tables.events(s, dir), Seq("event_type"),
-          x, col("value"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q121_welch_ttest" -> ((s, dir) =>
-      // the A/B readout: Welch t-test of value between even/odd user
-      // cohorts per event_type, conditional aggregates — one pass, no
-      // self-join of the arms.
-      etl.Aggregates.welchTTest(Tables.events(s, dir), Seq("event_type"),
-          col("user_id") % 2 === 0, col("value"))
-        .orderBy(col("event_type"))),
-
-    "q120_collocations" -> ((s, dir) =>
-      // phrase mining: PMI/NPMI of adjacent token pairs, bigrams built
-      // in-array (zero window), unigram model joined back BY TOKEN
-      text.Corpus.collocations(Tables.documents(s, dir), "doc_id", "text",
-          minCount = 5)
-        .orderBy(col("w1"), col("w2"))),
-
-    "q122_bigram_logprob" -> ((s, dir) =>
-      // the CCNet-style fluency filter, one order up from q97: add-1
-      // smoothed bigram LM score per doc, model = the corpus, joined by
-      // pair key — never broadcast
-      text.Corpus.bigramLogProb(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-
-    "q88_seasonal" -> ((s, dir) =>
-      // additive seasonal decomposition of each event-type series:
-      // trend / hour-of-day seasonal / residual — one keyed shuffle for
-      // both windows, seasonal means broadcast back
-      etl.Aggregates.seasonalDecompose(Tables.events(s, dir),
-        "event_type", "ts", "event_id", "value", halfWindow = 12)
-        .orderBy(col("event_type"), col("rn"))),
-
-    "q89_seasonal_anomaly" -> ((s, dir) => {
-      // seasonally-adjusted anomaly detection: flag rows whose residual
-      // (after q88's trend+seasonal removal) exceeds 3σ of the key's
-      // residual distribution — the upgrade of plain z-scoring (q17)
-      // that doesn't fire on rush-hour structure. σ is compared ROUNDED
-      // on both sides (the cross-engine boundary discipline).
-      val dec = etl.Aggregates.seasonalDecompose(Tables.events(s, dir),
-        "event_type", "ts", "event_id", "value", halfWindow = 12)
-      val sigma = dec.groupBy(col("event_type"))
-        .agg(roundStable(stddev(col("residual")), 6).as("sigma"))
-      dec.join(broadcast(sigma), Seq("event_type"))
-        .filter(abs(col("residual")) > lit(3.0) * col("sigma"))
-        .select(col("event_type"), col("rn"), col("residual"), col("sigma"))
-        .orderBy(col("event_type"), col("rn"))
-    }),
-
-    "q90_substring_dup" -> ((s, dir) =>
-      // cross-document repeated-substring spans (span-level dedup): the
-      // registered plan is the SCALE path — xxhash64 shingle keys on the
-      // heavy exchange — against a text-keyed DuckDB recompute; equal
-      // unless a 2⁻⁶⁴ collision lands, and deterministically so
-      text.Corpus.substringSpans(Tables.documents(s, dir), "doc_id", "text",
-        k = 8, minDocs = 2, hashKeys = true)
-        .orderBy(col("doc_id"), col("span_start"))),
-
-    "q91_ewma" -> ((s, dir) =>
-      // exponentially weighted moving average per event-type series
-      // (pandas adjust=true, span-truncated): one keyed shuffle, the
-      // weighted fold a codegen'd higher-order aggregate over the frame
-      etl.Aggregates.ewma(Tables.events(s, dir),
-        "event_type", "ts", "event_id", "value", alpha = 0.3, span = 24)
-        .orderBy(col("event_type"), col("rn"))),
-
-    "q92_semdedup" -> ((s, dir) => {
-      // SemDeDup corpus pruning: drop the higher-id endpoint of every
-      // >=0.9-cosine embedding pair. Twin construction as in q38 (every
-      // 7th vector re-added under a shifted id): the corpus's densest
-      // natural pair sits at ~0.6 cosine, so the >=0.9 pair set is
-      // exactly the planted identical twins and the LSH scale path
-      // equals brute force BY CONSTRUCTION — recall exactly 1, no
-      // probabilistic equality inside an oracle-checked query.
-      val emb = Tables.embeddings(s, dir)
-      val twins = emb.filter(col("vec_id") % 7 === 0)
-        .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
-      val corpus = emb.select(col("vec_id"), col("embedding")).unionByName(twins)
-      sim.Similarity.semDedupSurvivors(corpus, "vec_id", "embedding",
-        dim = 64, minCosine = 0.9)
-        .select(col("vec_id")).orderBy(col("vec_id"))
-    }),
-
-    "q93_zorder" -> ((s, dir) => {
-      // Morton-code computation behind Io.writeZOrdered: interleave the
-      // low 8 bits of two key columns — pure shift/and/or fold, one
-      // codegen'd projection over the scan. The layout effect (box
-      // queries cluster into few files) is spec-asserted in PipelineSpec;
-      // this gates the code itself cross-engine.
-      val li = Tables.lineitem(s, dir)
-      li.select(col("l_orderkey"), col("l_linenumber"),
-        graft.functions.ZOrder.zValue(
-          Seq(pmod(col("l_orderkey"), lit(256)), pmod(col("l_partkey"), lit(256))),
-          bits = 8).as("zval"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    "q94_quality_prank" -> ((s, dir) => {
-      // per-domain quantile quality filter (the curation upgrade of
-      // q61's global threshold): drop each source's bottom 20% by
-      // quality — rank-space, so a uniformly low-quality domain keeps
-      // its best docs instead of losing everything. percent_rank orders
-      // by the ROUNDED score + doc_id: deterministic under last-ulp
-      // cross-engine drift and quality ties. One keyed window shuffle.
-      import org.apache.spark.sql.expressions.Window
-      val stops = Seq("the", "a")
-      val scored = Tables.documents(s, dir).select(col("doc_id"), col("source"),
-        roundStable(TextStats.qualityScore(col("text"), stops), 6).as("quality"))
-      val w = Window.partitionBy(col("source")).orderBy(col("quality"), col("doc_id"))
-      scored.withColumn("prank", roundStable(percent_rank().over(w), 6))
-        .filter(col("prank") >= 0.2)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q95_gap_detect" -> ((s, dir) => {
-      // sensor-downtime detection over each key's reading series:
-      // consecutive events further apart than 2 h become one gap row —
-      // the monitoring counterpart of interpolation (q03 fills small
-      // gaps; this reports the outages). One keyed window, narrow after.
-      // microsecond arithmetic on BOTH sides: second-cast floors and
-      // fractional epoch() round differently at the boundary
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"))
-        .withColumn("next_ts", lead(col("ts"), 1).over(w))
-        .filter(unix_micros(col("next_ts")) - unix_micros(col("ts")) > 7200L * 1000000L)
-        .select(col("event_type"), col("ts").as("gap_start"),
-          col("next_ts").as("gap_end"),
-          (unix_micros(col("next_ts")) - unix_micros(col("ts"))).as("gap_usecs"))
-        .orderBy(col("event_type"), col("gap_start"))
-    }),
-
-    "q96_rolling_median" -> ((s, dir) =>
-      // robust rolling smoother: trailing 6-row median per key — one
-      // keyed shuffle, sort_array over the frame list, parity branch
-      etl.Aggregates.rollingMedian(Tables.events(s, dir),
-        "event_type", "ts", "event_id", "value", window = 6)
-        .orderBy(col("event_type"), col("rn"))),
-
-    "q97_unigram_logprob" -> ((s, dir) =>
-      // LM-quality signal (the cheap CCNet perplexity stand-in): mean
-      // unigram log-probability per doc, model = the corpus itself —
-      // unigram table joined BY TOKEN (vocab never broadcasts at scale)
-      text.Corpus.unigramLogProb(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-
-    "q98_stream_topk" -> ((s, dir) => {
-      // D9's streaming heavy-hitter state, driver-gated: three
-      // foreachBatch-shaped folds of the token stream (batch 1 folded
-      // TWICE — the at-least-once replay), then MG compaction with
-      // capacity BELOW the vocabulary so eviction actually fires
-      // in-query. Compared rows are the exact top-5 tokens (oracle-
-      // computable); the MG contracts collapse to 1/0 verdicts the
-      // oracle asserts as literal 1s (q62/q68 discipline): the replayed
-      // batch appended zero rows, the state is bounded at capacity, and
-      // each top token's retained count is within the N/(capacity+1)
-      // undercount bound — with eviction permitted exactly when that
-      // bound allows (exact count <= N/(capacity+1)).
-      val cap = 16
-      val toks = Tables.documents(s, dir).select(col("doc_id"),
-        explode(text.TextStats.tokens(col("text"))).as("token"))
-        .withColumn("__one", lit(1.0))
-      def batch(b: Long) =
-        toks.filter(col("doc_id") % 3 === b).select("token", "__one")
-      etl.IncrementalAgg.writeState(toks.limit(0).select("token", "__one"),
-        Seq("token"), "__one", "q98tk", buckets = 2)
-      for (b <- 0L to 2L)
-        etl.IncrementalAgg.appendDelta(batch(b), Seq("token"), "__one", "q98tk", batchId = b)
-      val rowsBefore = s.table("q98tk_state").count()
-      etl.IncrementalAgg.appendDelta(batch(1L), Seq("token"), "__one", "q98tk", batchId = 1)
-      val gated = s.table("q98tk_state").count() == rowsBefore
-      etl.IncrementalAgg.compactTopK(s, "q98tk", cap)
-      val mg = etl.IncrementalAgg.read(s, "q98tk")
-        .select(col("token"), col("cnt").as("mg_cnt"))
-      val bounded = mg.count() <= cap
-      val n = toks.count()
-      toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token")).limit(5)
-        .join(mg, Seq("token"), "left")
-        .select(col("token").as("tok"), col("cnt"),
-          lit(if (gated) 1L else 0L).as("replay_gated"),
-          lit(if (bounded) 1L else 0L).as("state_bounded"),
-          when(col("mg_cnt").isNull, (col("cnt") <= lit(n / (cap + 1))).cast("long"))
-            .otherwise((col("mg_cnt") <= col("cnt") &&
-              (col("cnt") - col("mg_cnt")) <= lit(n / (cap + 1))).cast("long"))
-            .as("undercount_ok"))
-        .orderBy(col("cnt").desc, col("tok"))
-    }),
-
-    "q99_ann_drift" -> ((s, dir) => {
-      // C38's retrain signal, driver-gated: quantization drift of a
-      // batch against the index's FROZEN coarse quantizer. The indexed
-      // corpus itself must report drift_ratio = 1 (its persisted
-      // baseline IS that corpus — same deterministic pass), and a
-      // deliberately shifted copy (+50 per component) must scream
-      // >> 1. The exact column (batch n) compares by value; the
-      // trained-quantizer ratios flatten to 1/0 verdicts the oracle
-      // asserts as literal 1s (q62/q68 discipline). Index build
-      // hoisted to the once-per-process setup; driftStats itself is
-      // the O(batch) map-only pass + a one-row baseline read — it
-      // never rescans the cells table (plan spec'd).
-      val emb = Tables.embeddings(s, dir)
-      setupOnce(s"q99ann|$dir") {
-        sim.IncrementalAnn.writeIndex(emb, "vec_id", "embedding", "q99ann",
-          kCoarse = 8, iters = 3, buckets = 4)
-      }
-      val inDist = sim.IncrementalAnn.driftStats(emb, "embedding", "q99ann")
-      val shifted = sim.IncrementalAnn.driftStats(
-        emb.withColumn("embedding",
-          transform(col("embedding"), x => (x + lit(50.0f)).cast("float"))),
-        "embedding", "q99ann")
-      inDist.select(col("n"),
-          (abs(col("drift_ratio") - 1.0) < 0.05).cast("long").as("in_dist_ok"))
-        .crossJoin(shifted.select(
-          (col("drift_ratio") > 10.0).cast("long").as("shift_flagged")))
-    }),
-
-    "q87_incremental_ann" -> ((s, dir) => {
-      // incremental ANN lifecycle in-query: IVF cell index built on two
-      // thirds of the vectors (frozen centroids), the last third
-      // APPENDED in O(delta) (assign + bucketed append, no retrain),
-      // the append REPLAYED (id gate → no-op), then top-5 probing ALL
-      // cells — cells partition the corpus, so the result must equal
-      // q37's exact brute-force oracle over the full vector set.
-      // Restricted-nprobe recall is spec'd like the other ANN surfaces.
-      // Base build (k-means training) hoisted to the once-per-process
-      // setup; warm invocations hit the id gate, so both appends become
-      // the replay no-op — the gated-append contract itself.
-      val emb = Tables.embeddings(s, dir)
-      val base = emb.filter(col("vec_id") % 3 =!= 2)
-      val delta = emb.filter(col("vec_id") % 3 === 2)
-      setupOnce(s"q87ann|$dir") {
-        sim.IncrementalAnn.writeIndex(base, "vec_id", "embedding", "q87ann",
-          kCoarse = 8, iters = 3, buckets = 4)
-      }
-      sim.IncrementalAnn.appendVectors(delta, "vec_id", "embedding", "q87ann")
-      sim.IncrementalAnn.appendVectors(delta, "vec_id", "embedding", "q87ann")
-      sim.IncrementalAnn.topK(s, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", "q87ann", k = 5, nprobe = 8)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "q86_incremental_cc" -> ((s, dir) => {
-      // incremental clustering, full lifecycle in-query: the exact-
-      // Jaccard pair graph is split by edge hash into base/d1/d2; labels
-      // built from base, d1 merged, d1 REPLAYED (append-only min-fold →
-      // no-op by monotonicity, no gate), the log compacted, d2 merged.
-      // The folded labels must equal q66's one-shot closure over ALL
-      // pairs — O(affected) maintenance ≡ full recompute, via the SAME
-      // recursive-CTE oracle as q66. Pair-graph computation + base label
-      // build hoisted to the once-per-process setup (pairs persisted as
-      // a table the merge stages read); warm invocations replay merges
-      // against a converged log — monotone min-fold appends zero rows
-      // and must reproduce the same labels.
-      val docs = Tables.documents(s, dir)
-      setupOnce(s"q86cc|$dir") {
-        dedup.IncrementalDedup.dropForRebuild(s, "q86_pairs")
-        NGramJaccard.similarPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.8)
-          .write.mode("overwrite").format("parquet").saveAsTable("q86_pairs")
-        operators.IncrementalCC.writeLabels(
-          s.table("q86_pairs").filter(pmod(col("id_a") + col("id_b"), lit(3)) === 0),
-          "id_a", "id_b", "q86cc", buckets = 4)
-      }
-      val pairs = s.table("q86_pairs")
-      def part(k: Int) = pairs.filter(pmod(col("id_a") + col("id_b"), lit(3)) === k)
-      operators.IncrementalCC.mergeEdges(s, part(1), "id_a", "id_b", "q86cc")
-      operators.IncrementalCC.mergeEdges(s, part(1), "id_a", "id_b", "q86cc")
-      operators.IncrementalCC.compactLabels(s, "q86cc")
-      operators.IncrementalCC.mergeEdges(s, part(2), "id_a", "id_b", "q86cc")
-      docs.select(col("doc_id"))
-        .join(operators.IncrementalCC.readLabels(s, "q86cc")
-          .withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
-        .withColumn("is_canonical", (col("doc_id") === col("cluster_id")).cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q85_weighted_sample" -> ((s, dir) =>
-      // resample the corpus to the temperature mix (applies q75's
-      // weights): per-domain keep probability from the weight table,
-      // selection by the q82 multiplicative hash — broadcast + map-only,
-      // exact row set replayed by the oracle
-      text.Corpus.sampleToMix(Tables.documents(s, dir), "lang", "doc_id", "text",
-        alpha = 0.5, targetFrac = 0.5)
-        .orderBy(col("doc_id"))),
-
-    "q84_salted_join" -> ((s, dir) => {
-      // the skew-splitting join identity, oracle-gated: events join a
-      // 5-row per-type dimension through Skew.saltedJoin (left salted
-      // from the row-unique event_id, dim exploded buckets×) must equal
-      // the plain join bit-for-bit. The hot-key shape this exists for:
-      // 5 join keys over the whole fact table → salting turns 5 reduce
-      // groups into 5×8
-      val ev = Tables.events(s, dir)
-      val dim = ev.groupBy(col("event_type"))
-        .agg(roundStable(avg(col("value")), 6).as("type_avg"))
-      operators.Skew.saltedJoin(ev, dim, "event_type", buckets = 8,
-        saltFrom = Some("event_id"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          roundStable(sum(col("value") - col("type_avg")), 4).as("dev_sum"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q83_curation" -> ((s, dir) => {
-      // the end-to-end corpus-curation composition a training-data user
-      // actually runs, each stage an already-gated operator: normalize
-      // (q60's shape) → quality + length gate (q61) → exact bag-of-words
-      // dedup, min-id survivor (q33's fingerprint) → deterministic split
-      // (q82's hash). One narrow pipeline + one fingerprint aggregation.
-      val stops = Seq("the", "a")
-      val norm = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
-        regexp_replace(lower(col("text")), "  +", " ").as("t"))
-      val gated = norm
-        .withColumn("quality", TextStats.qualityScore(col("t"), stops))
-        .withColumn("n_toks", TextStats.wsTokenCount(col("t")))
-        .filter(col("quality") >= 0.4 && col("n_toks").between(10, 200))
-        .withColumn("fp", TextStats.fingerprint(col("t")))
-      val survivors = gated.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-      gated.join(survivors, Seq("fp", "doc_id"), "left_semi")
-        .withColumn("h", text.Corpus.idHash(col("doc_id")))
-        .select(col("doc_id"), col("lang"),
-          roundStable(col("quality"), 6).as("quality"),
-          col("n_toks"),
-          when(col("h") % 10 < 8, "train").when(col("h") % 10 < 9, "val")
-            .otherwise("test").as("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q81_redact_pii" -> ((s, dir) => {
-      // C4/CCNet-style PII scrub. The corpus is synthetic word salad, so
-      // PII is PLANTED deterministically first (email on every 10th doc,
-      // ip on every 17th, phone on every 23rd) — the redactor then has
-      // real work whose expected counts the oracle recomputes
-      val planted = Tables.documents(s, dir).select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 10 === 0,
-            concat(lit(" contact user"), col("doc_id"), lit("@example.com"))).otherwise(lit("")),
-          when(col("doc_id") % 17 === 0,
-            concat(lit(" host 10.0."), pmod(col("doc_id"), lit(256L)), lit(".1"))).otherwise(lit("")),
-          when(col("doc_id") % 23 === 0,
-            concat(lit(" tel 555-01"), pmod(col("doc_id"), lit(100L)), lit("-4433"))).otherwise(lit("")))
-          .as("text"))
-      text.Corpus.redactPii(planted, "doc_id", "text")
-        .withColumn("clean_len", length(col("clean_text")).cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q82_train_split" -> ((s, dir) =>
-      // deterministic train/val/test split + pseudo-random shuffle key
-      // from a multiplicative hash — map-only, RNG-free, engine-portable
-      text.Corpus.trainSplit(Tables.documents(s, dir), "doc_id")
-        .orderBy(col("doc_id"))),
-
-    "q80_heavy_hitters" -> ((s, dir) =>
-      // sketch-then-verify exact top-k tokens: Misra-Gries candidates in
-      // one pass (bounded state), exact counts for candidates only in a
-      // second. capacity 256 >> vocabulary here, so the result is exact
-      // (the eviction path is spec-covered on planted skew)
-      text.Corpus.topKTokens(Tables.documents(s, dir), "text", k = 20, capacity = 256)
-        .orderBy(col("cnt").desc, col("tok"))),
-
-    "q79_incremental_agg" -> ((s, dir) => {
-      // incremental daily summary, full lifecycle in-query: build from a
-      // third of the facts, fold in a second third (batch 1), REPLAY
-      // batch 1 (gate → no-op), compact the partial log, replay batch 1
-      // AGAIN post-compact (the marker table keeps gating it), fold the
-      // final third (batch 2). The folded read must equal the oracle's
-      // one-shot aggregate over ALL the facts — O(delta) maintenance ≡
-      // full recompute.
-      val keys = Seq("d", "event_type")
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        col("event_type"), to_date(col("ts")).as("d"), col("value"))
-      val base = ev.filter(col("event_id") % 3 === 0)
-      val d1 = ev.filter(col("event_id") % 3 === 1)
-      val d2 = ev.filter(col("event_id") % 3 === 2)
-      etl.IncrementalAgg.writeState(base, keys, "value", "q79agg", batchId = 0, buckets = 4)
-      etl.IncrementalAgg.appendDelta(d1, keys, "value", "q79agg", batchId = 1)
-      etl.IncrementalAgg.appendDelta(d1, keys, "value", "q79agg", batchId = 1)
-      etl.IncrementalAgg.compact(s, "q79agg")
-      etl.IncrementalAgg.appendDelta(d1, keys, "value", "q79agg", batchId = 1)
-      etl.IncrementalAgg.appendDelta(d2, keys, "value", "q79agg", batchId = 2)
-      etl.IncrementalAgg.read(s, "q79agg")
-        .select(col("event_type"), col("d"), col("cnt"),
-          roundStable(col("s"), 4).as("sum_value"),
-          // avg from the ROUNDED sum: the raw partial-sum fold and the
-          // oracle's single-pass sum can differ in the last ulp, which
-          // flips a 4-digit tie; the rounded sums are bit-identical, so
-          // an avg derived from them is too
-          roundStable(roundStable(col("s"), 4) / col("cnt"), 4).as("avg_value"),
-          roundStable(col("mn"), 6).as("min_value"),
-          roundStable(col("mx"), 6).as("max_value"))
-        .orderBy(col("d"), col("event_type"))
-    }),
-
-    "q78_pack_greedy" -> ((s, dir) =>
-      // greedy sequence packing into 256-token bins per lang, doc_id
-      // order: secondary-sort mapPartitions fold (the one inherently
-      // sequential-per-group op); oracle is a recursive-CTE replay of
-      // the same fold
-      text.Corpus.packGreedy(Tables.documents(s, dir), "lang", "doc_id", "text",
-        capacity = 256L)
-        .orderBy(col("lang"), col("doc_id"))),
-
-    "q381_stream_agg" -> ((s, dir) => {
-      // D8's STREAMING fold driver-gated (the q72 pattern): the exact
-      // foreachBatch body (AggStream.aggBatch) runs in-query over three
-      // micro-batches with compactEvery=2 firing mid-stream AND a
-      // replayed batch 1 (at-least-once) — the folded read must equal
-      // the one-shot aggregate over all facts, and the replay gate
-      // flattens to a 1/0 the oracle asserts. q79 gates the state
-      // machinery directly; this row gates the STREAM surface's batch
-      // closure, cadence included.
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        col("event_type"), col("value"))
-      etl.IncrementalAgg.writeState(ev.limit(0).select("event_type", "value"),
-        Seq("event_type"), "value", "q381ag", buckets = 2)
-      def batch(b: Long) =
-        ev.filter(col("event_id") % 3 === b).select("event_type", "value")
-      for (b <- 0L to 2L)
-        streaming.AggStream.aggBatch(batch(b), b, Seq("event_type"),
-          "value", "q381ag", compactEvery = 2)
-      // the replay fires aggBatch's COMPACTION too ((1+1) % 2 == 0),
-      // which legitimately rewrites the partial log — so the gate is
-      // judged on the FOLDED count staying put (an ungated replay would
-      // double batch 1's cnt), not on raw state-table row counts
-      val cntBefore = etl.IncrementalAgg.read(s, "q381ag")
-        .agg(sum(col("cnt"))).head().getLong(0)
-      streaming.AggStream.aggBatch(batch(1L), 1L, Seq("event_type"),
-        "value", "q381ag", compactEvery = 2)
-      val gated = etl.IncrementalAgg.read(s, "q381ag")
-        .agg(sum(col("cnt"))).head().getLong(0) == cntBefore
-      etl.IncrementalAgg.read(s, "q381ag")
-        .select(col("event_type"), col("cnt"),
-          roundStable(col("s"), 4).as("sum_value"),
-          // avg from the ROUNDED sum (the q79 lesson): raw partial-sum
-          // fold vs one-pass sum differ in the last ulp
-          roundStable(roundStable(col("s"), 4) / col("cnt"), 4).as("avg_value"),
-          roundStable(col("mn"), 6).as("min_value"),
-          roundStable(col("mx"), 6).as("max_value"),
-          lit(if (gated) 1L else 0L).as("replay_gated"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q382_stream_drift" -> ((s, dir) => {
-      // D13 driver-gated: the reference window freezes ONCE (bins from
-      // the ref range), then two current-side micro-batches score
-      // through the exact foreachBatch body (DriftStream.driftBatch)
-      // into their own batch=<id> dirs, with batch 0 REPLAYED — the
-      // overwrite must be byte-identical, and every landed PSI row must
-      // equal the oracle's one-shot recompute of that batch's PSI
-      // against the same frozen reference (q125's arithmetic, per
-      // batch). No verdict columns needed: the values themselves are
-      // oracle-computable.
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("event_type"), col("value"),
-          (dayofmonth(col("ts")) <= 15).as("__ref"))
-      val ref = streaming.DriftStream.buildReference(
-        ev.filter(col("__ref")), Seq("event_type"), "value", bins = 10)
-      val monitorDir = freshLocalStateDir(
-        s"graft_q382_${Integer.toHexString(dir.hashCode)}")
-      val cur = ev.filter(!col("__ref"))
-      for (b <- 0L to 1L)
-        streaming.DriftStream.driftBatch(ref,
-          cur.filter(col("event_id") % 2 === b), b, "value", monitorDir)
-      // at-least-once replay of batch 0: deterministic bytes overwrite
-      streaming.DriftStream.driftBatch(ref,
-        cur.filter(col("event_id") % 2 === 0), 0L, "value", monitorDir)
-      s.read.parquet(monitorDir)
-        .select(col("event_type"), col("batch_id"), col("psi"),
-          col("n_ref"), col("n_cur"))
-        .orderBy(col("event_type"), col("batch_id"))
-    }),
-
-    "q383_stream_census" -> ((s, dir) => {
-      // D24 driver-gated: three document micro-batches land their own
-      // additive census cells through the exact foreachBatch body
-      // (CensusStream.censusBatch), batch 1 REPLAYED (partition
-      // ownership → byte-identical overwrite), then the merged
-      // duplication-locality readout must equal q328's ONE-SHOT
-      // dupProfile over the same corpus — split ≡ one-shot by value,
-      // with the oracle recomputing every cell.
-      val docs = Tables.documents(s, dir)
-      val stateDir = freshLocalStateDir(
-        s"graft_q383_${Integer.toHexString(dir.hashCode)}")
-      def batch(b: Long) = docs.filter(col("doc_id") % 3 === b)
-      for (b <- 0L to 2L)
-        streaming.CensusStream.censusBatch(batch(b), b, "source", "text",
-          md5(substring(col("text"), 1, 40)), stateDir)
-      streaming.CensusStream.censusBatch(batch(1L), 1L, "source", "text",
-        md5(substring(col("text"), 1, 40)), stateDir)
-      streaming.CensusStream.dupProfile(s, stateDir)
-        .orderBy(col("source"))
-    }),
-
-    "q384_cand_clustered" -> ((s, dir) => {
-      // §5.2's central claim — "cell-keyed candidate pruning is FREE
-      // when geometry exists" — made oracle-visible (it lived only in
-      // SURVEY tables and CandidatesSpec until r14). Corpus: the sf
-      // embeddings pulled toward 8 deterministic hash-derived centers
-      // (CandScale's planted-geometry generator: signal ×0.3, center
-      // span ±2.5 — intra-cluster cosine ≫ inter, the structure real
-      // embedding corpora have and the raw synthetic corpus lacks).
-      // Verdicts, all asserted as 1 by the oracle: recall of the TRUE
-      // 10-NN pair set (in-query cosine brute force, every point a
-      // query) is EXACTLY 1.0 at nprobe=1, AND ≥87 % of the n·(n−1)
-      // ordered pairs are pruned (measured 0.8754-0.8767 across SFs —
-      // the balanced-8-cell bound is 0.875), AND the full knnOutliers
-      // diagnostic on the pruned candidates is row-set-identical to
-      // its brute-force twin. Counts and config ride by value.
-      val row = memoOnce(s"q384-$dir") {
-        val emb = Tables.embeddings(s, dir).select(col("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            (x.cast("double") * 0.3 +
-              (pmod(xxhash64(pmod(col("vec_id"), lit(8)) * 64 + i),
-                lit(1000)).cast("double") / 500.0 - 1.0) * 2.5)
-              .cast("float")).as("embedding"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = emb.count()
-        // GateCost-wrapped stages are the brute-force ORACLE machinery
-        // (all-pairs truth + brute-twin equality) the 100 TB plan
-        // drops; the candidate path between them is the operator
-        val (truth, nTruth) = GateCost.timed {
-          val t = sim.Similarity.bruteForceTopK(emb, emb, "vec_id",
-              "embedding", k = 10)
-            .select(col("query_id").as("id_a"), col("neighbor_id").as("id_b"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          (t, t.count())
-        }
-        val cand = sim.Candidates.ivfSelfPairs(emb, "vec_id", "embedding",
-            kCoarse = 8, nprobe = 1)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nCand = cand.count()
-        val (hit, diagOk) = GateCost.timed {
-          val h = truth.join(cand, Seq("id_a", "id_b")).count()
-          // persist the 20-row diag outputs so the two-directional
-          // exceptAll executes each all-pairs plan ONCE (the
-          // CandVerdict.measure discipline)
-          val brute = sim.Geometry.knnOutliers(emb, "vec_id", "embedding",
-              k = 10, topN = 20)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val viaCand = sim.Geometry.knnOutliers(emb, "vec_id", "embedding",
-              k = 10, topN = 20, candidates = Some(cand))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          brute.count(): Unit
-          viaCand.count(): Unit
-          val ok = viaCand.exceptAll(brute).isEmpty &&
-            brute.exceptAll(viaCand).isEmpty
-          brute.unpersist(blocking = false)
-          viaCand.unpersist(blocking = false)
-          (h, ok)
-        }
-        val pruneOk = nCand.toDouble <= 0.13 * n.toDouble * (n - 1)
-        truth.unpersist(); cand.unpersist(); emb.unpersist()
-        (n, nTruth, hit, hit == nTruth, pruneOk, diagOk)
-      }
-      val (n, nTruth, hit, recallOk, pruneOk, diagOk) = row
-      // n_hit_pairs rides BY VALUE next to the recall_exact_ok flag
-      // (r15, advisor ask): if a degenerate coarse init ever drops
-      // recall below 1.0, the dump shows HOW MANY truth pairs were
-      // missed instead of failing as an unattributable flake.
-      s.range(1).select(
-        lit(n).as("n_corpus"), lit(nTruth).as("n_truth_pairs"),
-        lit(hit).as("n_hit_pairs"),
-        lit(8L).as("k_coarse"), lit(1L).as("nprobe"),
-        lit(10L).as("recall_k"), lit(87L).as("prune_floor_pct"),
-        lit(if (recallOk) 1L else 0L).as("recall_exact_ok"),
-        lit(if (pruneOk) 1L else 0L).as("prune_floor_ok"),
-        lit(if (diagOk) 1L else 0L).as("diag_eq_brute_ok"))
-    }),
-
-    "q385_media_headers" -> ((s, dir) => {
-      // the q40 multimodal surface with a REAL decode stage (r14): one
-      // deterministic synthetic blob per document — genuine PNG / JFIF
-      // JPEG / GIF89a / BMP header bytes with id-derived dimensions,
-      // plus a truncated-magic junk case — probed by the batched
-      // mapPartitions header parser (magic detect + per-format
-      // dimension layout). The oracle re-derives format, width,
-      // height, bit depth, byte size and validity from doc_id
-      // arithmetic alone: wrong endianness, an off-by-one offset, or a
-      // dropped segment walk all hash-mismatch on VALUES.
-      import s.implicits._
-      val blobs = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-        .map(id => multimodal.Binary.Blob(id,
-          multimodal.Binary.synthMediaBlob(id)))
-      multimodal.Binary.mediaInfo(blobs).toDF()
-        .select(col("id").as("doc_id"), col("format"),
-          col("width"), col("height"), col("bitDepth").as("bit_depth"),
-          col("nBytes").as("n_bytes"), col("valid").cast("int").as("valid"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q386_stream_dedup" -> ((s, dir) => {
-      // D3 driver-gated: dropDuplicatesWithinWatermark driven as a REAL
-      // StreamingQuery (memory source -> the registered operator ->
-      // memory sink, three micro-batches processed synchronously) — the
-      // watermark state machine itself is the unit under test, so no
-      // foreachBatch body can stand in for it. Batch A lands two
-      // byte-identical events per key (in-batch dedup -> 1 survivor);
-      // batch B advances the watermark 3 h on a reserved key, expiring
-      // A's state (1 h horizon); batch C re-arrives every key — state
-      // gone, so each key survives AGAIN. Per key the oracle expects
-      // EXACTLY 2 survivors (one per epoch) and the advancer 1: a
-      // dedup that leaks duplicates inside the horizon or never
-      // expires state both hash-mismatch. Duplicates are identical in
-      // every column, so survivor identity is deterministic.
-      // EVICTION DEPENDENCY (declared): the operator's contract only
-      // guarantees dedup WITHIN the watermark horizon — batch C's
-      // re-survival relies on the no-data micro-batch after B's
-      // watermark advance evicting A's state, so Sessions PINS
-      // spark.sql.streaming.noDataMicroBatches.enabled=true (and B's
-      // advance is 3 h against a 1 h horizon — 2 h of margin).
-      import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-      val types = Tables.events(s, dir).select(col("event_type"))
-        .distinct().as[String].collect().sorted // bounded: enum column
-      val base = 86400000L
-      def ev(u: Long, t: String, off: Long) = streaming.EventStream.Event(
-        u, new java.sql.Timestamp(base + off), u, t, 1.0)
-      val keys = for (u <- 0L until 20L; t <- types) yield (u, t)
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[streaming.EventStream.Event]
-      val sink = s"q386_sink_${sinkCounter.incrementAndGet()}"
-      val q = streaming.EventStream.dedupWithinWatermark(mem.toDF(),
-          Seq("user_id", "event_type"), watermark = "1 hour")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      val (schema, rows) = try {
-        mem.addData(keys.flatMap { case (u, t) =>
-          Seq(ev(u, t, 0L), ev(u, t, 0L)) })
-        q.processAllAvailable()
-        mem.addData(Seq(ev(999L, types.head, 3L * 3600 * 1000)))
-        q.processAllAvailable()
-        mem.addData(keys.flatMap { case (u, t) =>
-          Seq(ev(u, t, 3L * 3600 * 1000), ev(u, t, 3L * 3600 * 1000)) })
-        q.processAllAvailable()
-        val out = s.table(sink)
-          .groupBy(col("user_id"), col("event_type"))
-          .agg(count(lit(1)).as("n_survivors"),
-            sum(col("value")).as("sum_value"))
-        (out.schema, out.collect().toSeq)
-      } finally {
-        q.stop()
-        s.catalog.dropTempView(sink): Unit
-      }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
-        .orderBy(col("user_id"), col("event_type"))
-    }),
-
-    "q387_stream_ann" -> ((s, dir) => {
-      // D10 driver-gated: the EXACT AnnStream.annBatch body (append
-      // through the id gate + drift row + compaction cadence) folds two
-      // vector micro-batches into the frozen-centroid index, batch 1
-      // fires the compactEvery=2 rebuild, then batch 0 REPLAYS
-      // (at-least-once): the id gate makes the append a no-op and the
-      // replayed drift row is byte-identical, so the drift log folds
-      // 3 raw -> 2 distinct rows. Search at full probe must then equal
-      // q37's brute-force oracle over ALL vectors (cells partition the
-      // corpus) — q87's gate, now riding the streaming closure itself.
-      val emb = Tables.embeddings(s, dir)
-      val baseV = emb.filter(col("vec_id") % 3 =!= 2)
-      val d0 = emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)
-      val d1 = emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 1)
-      setupOnce(s"q387ann|$dir") {
-        sim.IncrementalAnn.writeIndex(baseV, "vec_id", "embedding",
-          "q387ann", kCoarse = 8, iters = 3, buckets = 4)
-      }
-      val driftDir = freshLocalStateDir(
-        s"graft_q387_${Integer.toHexString(dir.hashCode)}")
-      def fold(b: DataFrame, id: Long): Unit =
-        streaming.AnnStream.annBatch(b, id, "vec_id", "embedding",
-          "q387ann", compactEvery = 2, driftLog = Some(driftDir))
-      fold(d0, 0L); fold(d1, 1L); fold(d0, 0L) // <- the replay
-      val drift = s.read.parquet(driftDir)
-      val foldsOk = drift.count() == 3L && drift.distinct().count() == 2L
-      sim.IncrementalAnn.topK(s, emb.filter(col("vec_id") < 10),
-          "vec_id", "embedding", "q387ann", k = 5, nprobe = 8)
-        .withColumn("replay_folds_ok", lit(if (foldsOk) 1L else 0L))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "q388_stream_scd2" -> ((s, dir) => {
-      // D12 driver-gated: the EXACT DimStream.scd2Batch body maintains
-      // the versioned dimension across two date-split update batches,
-      // then batch 0 REPLAYS — the monotone gate (ts strictly past the
-      // open valid_from) folds every replayed instant to nothing, and
-      // the row-count + row-hash checksum proves the rewritten table is
-      // content-identical. The folded dimension must equal the ONE-SHOT
-      // SCD2 chain over all updates (q111's fold, baseline-free): split
-      // ≡ one-shot by value, every version row oracle-recomputed.
-      val dimPath = freshLocalStateDir(
-        s"graft_q388_${Integer.toHexString(dir.hashCode)}")
-      val ups = Tables.orders(s, dir)
-        .groupBy(col("o_custkey").as("cust"), col("o_orderdate").as("ts"))
-        .agg(min(col("o_orderpriority")).as("seg"))
-      val cut = lit("1995-01-01").cast("date")
-      def fold(b: DataFrame): Unit =
-        streaming.DimStream.scd2Batch(b, dimPath, Seq("cust"), Seq("seg"), "ts")
-      fold(ups.filter(col("ts") <= cut))
-      fold(ups.filter(col("ts") > cut))
-      def checksum(): (Long, Long) = {
-        // XOR fold: order-independent and overflow-free under ANSI
-        val r = s.read.parquet(dimPath)
-          .agg(count(lit(1)), expr("bit_xor(xxhash64(cust, seg, " +
-            "valid_from, valid_to, is_current))")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val before = checksum()
-      fold(ups.filter(col("ts") <= cut)) // <- at-least-once replay
-      val gated = checksum() == before
-      s.read.parquet(dimPath)
-        .select(col("cust"), col("seg"), col("valid_from"), col("valid_to"),
-          col("is_current").cast("long").as("cur"),
-          lit(if (gated) 1L else 0L).as("replay_gated"))
-        .orderBy(col("cust"), col("valid_from"))
-    }),
-
-    "q389_bmp_pixels" -> ((s, dir) => {
-      // C-family pixel stage made REAL for the zero-codec format (r15):
-      // one deterministic 24-bpp BI_RGB BMP per document (pixel grid a
-      // fixed linear function of doc_id — Binary.synthPixelBmp), decoded
-      // by the batched mapPartitions prober reading the ACTUAL pixel
-      // array (stride padding, bottom-up vs top-down row order). The
-      // oracle recomputes width/height/per-channel sums AND the
-      // row-order-sensitive y-weighted red sum from doc_id arithmetic
-      // over two generate_series grids, so a miscounted stride, a
-      // bottom-up file read in logical order, or an off-by-one pixel
-      // offset all hash-mismatch on VALUES; doc_id%10==9 truncates the
-      // pixel array and must come back invalid with NULL stats.
-      import s.implicits._
-      val blobs = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-        .map(id => multimodal.Binary.Blob(id,
-          multimodal.Binary.synthPixelBmp(id)))
-      multimodal.Binary.bmpPixelStats(blobs).toDF()
-        .select(col("id").as("doc_id"), col("width"), col("height"),
-          col("nPx").as("n_px"), col("sumB").as("sum_b"),
-          col("sumG").as("sum_g"), col("sumR").as("sum_r"),
-          col("yWeightedRSum").as("ywr_sum"),
-          col("cornerTlB").as("corner_tl_b"),
-          col("valid").cast("int").as("valid"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q390_mg_guarantee" -> ((s, dir) => {
-      // the q62 discipline on the last spec-only sketch family
-      // (FreqSketchAgg): per-segment Misra-Gries guarantee verdicts
-      // over exact in-query counts. Skew planted (the q81 discipline):
-      // 70 % of each segment's rows land on 3 hot items (true counts
-      // far above N/(k+1) — the coverage clause is non-vacuous), the
-      // rest spread over per-user cold items so the per-segment
-      // vocabulary >> capacity 16 and the eviction/merge paths
-      // genuinely fire. Survivor identities stay engine content
-      // (partition-dependent); the guarantees flatten to 1/0s.
-      val ev = Tables.events(s, dir).select(
-        col("event_type").as("segment"),
-        when(col("user_id") % 10 < 7,
-          concat(lit("hot_"), (col("user_id") % 3).cast("string")))
-          .otherwise(concat(lit("cold_"), col("user_id").cast("string")))
-          .as("item"))
-      etl.Aggregates.mgVerdict(ev, "segment", "item", capacity = 16)
-        .orderBy(col("segment"))
-    }),
-  )
+  /** Every family's records; a name used twice fails at first use. */
+  private lazy val catalog: Map[String, Query] = Query.byName(
+    EtlPipelineQueries.queries ++ EtlStatsQueries.queries ++
+      EtlAnalysisQueries.queries ++ RelationalQueries.queries ++
+      TextQueries.queries ++ DedupStreamQueries.queries ++
+      OperatorQueries.queries ++ SimQueries.queries)
+
+  /** Build function per query name, called as `queries(name)(spark, sfDir)`. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map { case (name, q) => name -> q.build }
 
   /** Oracle SQL may use `roundStable(expr, d)` as shorthand; it expands to
     * the same `floor(x*10^d + 0.5)/10^d` the Spark side computes.
     */
-  /** q111/q112's shared dimension fold: the SCD2 chain over the orders
-    * feed as a bare SELECT (no ORDER BY) so both oracles reuse it.
-    */
-  private val scd2DimSql: String =
-    """WITH u0 AS (SELECT o_custkey AS cust, o_orderdate AS ts,
-      |             min(o_orderpriority) AS seg
-      |           FROM orders GROUP BY 1, 2),
-      |c1 AS (SELECT cust, ts, seg,
-      |         lag(seg) OVER (PARTITION BY cust ORDER BY ts) AS prev
-      |       FROM u0),
-      |ch AS (SELECT cust, ts, seg,
-      |         row_number() OVER (PARTITION BY cust ORDER BY ts) AS rn
-      |       FROM c1 WHERE prev IS NULL OR prev <> seg),
-      |surv AS (SELECT * FROM ch WHERE NOT (rn = 1 AND seg = '1-URGENT')),
-      |vers AS (SELECT cust, seg, CAST(ts AS DATE) AS valid_from,
-      |           CAST(lead(ts) OVER (PARTITION BY cust ORDER BY ts) AS DATE)
-      |             AS valid_to
-      |         FROM surv),
-      |firstnew AS (SELECT cust, min(valid_from) AS close_at
-      |             FROM vers GROUP BY 1)
-      |SELECT cust, seg, valid_from, valid_to FROM vers
-      |UNION ALL
-      |SELECT c_custkey AS cust, '1-URGENT' AS seg,
-      |  DATE '1990-01-01' AS valid_from, f.close_at AS valid_to
-      |FROM customer LEFT JOIN firstnew f ON c_custkey = f.cust""".stripMargin
-
-  def oracleSql: Map[String, String] =
-    rawOracleSql.map { case (k, v) => k -> graft.functions.expandRoundStable(v) }
-
-  private def rawOracleSql: Map[String, String] = Map(
-    "q01_agg_daily" ->
-      """SELECT CAST(ts AS DATE) AS d, event_type,
-        | roundStable(avg(value), 4) AS avg_value,
-        | roundStable(max(value), 6) AS max_value,
-        | roundStable(min(value), 6) AS min_value,
-        | roundStable(sum(value), 4) AS sum_value,
-        | count(*) AS n
-        |FROM events GROUP BY d, event_type ORDER BY d, event_type""".stripMargin,
-
-    "q02_dedup_exact" ->
-      """SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts FROM (
-        |  SELECT event_id, user_id, event_type, ts,
-        |    row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn
-        |  FROM events) t
-        |WHERE rn = 1 ORDER BY event_id""".stripMargin,
-
-    "q03_interpolate" ->
-      """WITH base AS (
-        |  SELECT event_id, user_id, ts,
-        |         CASE WHEN event_id % 37 = 0 THEN NULL ELSE value END AS v,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events
-        |), t AS (
-        |  SELECT event_id, v, rn,
-        |    last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-        |    last_value(CASE WHEN v IS NOT NULL THEN rn END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pi,
-        |    first_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN rn END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS ni
-        |  FROM base
-        |)
-        |SELECT event_id, roundStable(CASE
-        |  WHEN v IS NOT NULL THEN v
-        |  WHEN pv IS NOT NULL AND nv IS NOT NULL AND rn - pi <= 3
-        |    THEN pv + (nv - pv) * CAST(rn - pi AS DOUBLE) / CAST(ni - pi AS DOUBLE)
-        |  WHEN pv IS NOT NULL AND rn - pi <= 3 THEN pv
-        |  ELSE NULL END, 6) AS value_interp
-        |FROM t ORDER BY event_id""".stripMargin,
-
-    "q04_outlier_iqr" ->
-      """WITH b AS (
-        |  SELECT event_type,
-        |         quantile_cont(value, 0.25) AS q1, quantile_cont(value, 0.75) AS q3
-        |  FROM events GROUP BY event_type
-        |)
-        |SELECT e.event_id, roundStable(CASE
-        |  WHEN e.value < b.q1 - 3.0 * (b.q3 - b.q1) THEN b.q1 - 3.0 * (b.q3 - b.q1)
-        |  WHEN e.value > b.q3 + 3.0 * (b.q3 - b.q1) THEN b.q3 + 3.0 * (b.q3 - b.q1)
-        |  ELSE e.value END, 6) AS value_clipped
-        |FROM events e JOIN b USING (event_type)
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q05_aqi_piecewise" ->
-      """SELECT event_id, roundStable(
-        | CASE WHEN value IS NULL THEN NULL
-        |  WHEN value <= 12.0 THEN (50.0/12.0) * value
-        |  WHEN value <= 35.4 THEN 50.0 + ((100.0-50.0)/(35.4-12.1)) * (value - 12.1)
-        |  WHEN value <= 55.4 THEN 100.0 + ((150.0-100.0)/(55.4-35.5)) * (value - 35.5)
-        |  WHEN value <= 150.4 THEN 150.0 + ((200.0-150.0)/(150.4-55.5)) * (value - 55.5)
-        |  ELSE 200.0 + ((300.0-200.0)/(250.4-150.5)) * (value - 150.5)
-        | END, 6) AS aqi
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q06_categorize" ->
-      """SELECT CASE WHEN aqi IS NULL THEN 'Unknown'
-        |  WHEN aqi <= 50.0 THEN 'Good'
-        |  WHEN aqi <= 100.0 THEN 'Moderate'
-        |  WHEN aqi <= 150.0 THEN 'Unhealthy for Sensitive'
-        |  WHEN aqi <= 200.0 THEN 'Unhealthy'
-        |  ELSE 'Very Unhealthy' END AS category,
-        | count(*) AS n
-        |FROM (SELECT
-        |  CASE WHEN value IS NULL THEN NULL
-        |   WHEN value <= 12.0 THEN (50.0/12.0) * value
-        |   WHEN value <= 35.4 THEN 50.0 + ((100.0-50.0)/(35.4-12.1)) * (value - 12.1)
-        |   WHEN value <= 55.4 THEN 100.0 + ((150.0-100.0)/(55.4-35.5)) * (value - 35.5)
-        |   WHEN value <= 150.4 THEN 150.0 + ((200.0-150.0)/(150.4-55.5)) * (value - 55.5)
-        |   ELSE 200.0 + ((300.0-200.0)/(250.4-150.5)) * (value - 150.5)
-        |  END AS aqi FROM events) t
-        |GROUP BY category ORDER BY category""".stripMargin,
-
-    "q07_temporal_features" ->
-      """SELECT event_id,
-        | CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hour,
-        | CAST(EXTRACT(isodow FROM ts) - 1 AS BIGINT) AS weekday,
-        | CAST(CASE WHEN EXTRACT(isodow FROM ts) - 1 >= 5 THEN 1 ELSE 0 END AS BIGINT) AS is_weekend,
-        | CAST(CASE WHEN EXTRACT(hour FROM ts) IN (7,8,9,17,18,19) THEN 1 ELSE 0 END AS BIGINT) AS is_rush_hour,
-        | CAST(EXTRACT(month FROM ts) AS BIGINT) AS month,
-        | CAST(ts AS DATE) AS date
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q08_composite_index" ->
-      """SELECT l_orderkey, l_linenumber,
-        | roundStable((l_quantity/50.0)*0.3 + (l_extendedprice/100000.0)*0.3
-        |      + (l_discount/1.0)*0.2 + (l_tax/1.0)*0.2, 6) AS composite_idx
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q09_rolling_mean" ->
-      """SELECT event_id,
-        | roundStable(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN 3 PRECEDING AND 2 FOLLOWING), 4) AS rolling_avg
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q10_corr_matrix" ->
-      """SELECT 'l_discount' AS col_a, 'l_extendedprice' AS col_b, roundStable(corr(l_discount, l_extendedprice), 6) AS r FROM lineitem
-        |UNION ALL SELECT 'l_discount', 'l_quantity', roundStable(corr(l_discount, l_quantity), 6) FROM lineitem
-        |UNION ALL SELECT 'l_discount', 'l_tax', roundStable(corr(l_discount, l_tax), 6) FROM lineitem
-        |UNION ALL SELECT 'l_extendedprice', 'l_quantity', roundStable(corr(l_extendedprice, l_quantity), 6) FROM lineitem
-        |UNION ALL SELECT 'l_extendedprice', 'l_tax', roundStable(corr(l_extendedprice, l_tax), 6) FROM lineitem
-        |UNION ALL SELECT 'l_quantity', 'l_tax', roundStable(corr(l_quantity, l_tax), 6) FROM lineitem
-        |ORDER BY col_a, col_b""".stripMargin,
-
-    "q11_validate" ->
-      """SELECT count(*) AS total_records,
-        | count(DISTINCT user_id) AS distinct_keys,
-        | CAST(min(ts) AS TIMESTAMP) AS min_ts, CAST(max(ts) AS TIMESTAMP) AS max_ts,
-        | roundStable(avg(value), 4) AS avg_value,
-        | roundStable(100.0 * (count(*) - count(value)) / count(*), 6) AS null_pct
-        |FROM events""".stripMargin,
-
-    "q12_kpi" ->
-      """SELECT o.avg_value, o.max_value, d.days_over, d.total_days,
-        | roundStable(100.0 * d.days_over / d.total_days, 6) AS pct_days_over
-        |FROM
-        | (SELECT roundStable(avg(value), 4) AS avg_value, roundStable(max(value), 6) AS max_value FROM events) o,
-        | (SELECT count(*) FILTER (WHERE day_avg > 50.0) AS days_over, count(*) AS total_days
-        |  FROM (SELECT CAST(ts AS DATE) AS d, avg(value) AS day_avg FROM events GROUP BY d) t) d""".stripMargin,
-
-    "q13_worst_key" ->
-      """SELECT user_id, roundStable(avg(value), 4) AS avg_value
-        |FROM events GROUP BY user_id
-        |ORDER BY avg_value DESC, user_id LIMIT 1""".stripMargin,
-
-    "q14_hourly_pattern" ->
-      """SELECT CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hour,
-        | roundStable(avg(value), 4) AS avg_value, count(*) AS n
-        |FROM events GROUP BY hour ORDER BY hour""".stripMargin,
-
-    "q15_dow_quartiles" ->
-      """SELECT CAST(EXTRACT(isodow FROM ts) - 1 AS BIGINT) AS weekday,
-        | roundStable(quantile_cont(value, 0.25), 6) AS q1,
-        | roundStable(quantile_cont(value, 0.5), 6) AS median,
-        | roundStable(quantile_cont(value, 0.75), 6) AS q3,
-        | count(*) AS n
-        |FROM events GROUP BY weekday ORDER BY weekday""".stripMargin,
-
-    "q21_window_topk" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, CAST(rank AS BIGINT) AS rank FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rank
-        |  FROM orders) t
-        |WHERE rank <= 3 ORDER BY o_custkey, rank""".stripMargin,
-
-    "q18_impute_mean" ->
-      """WITH b AS (
-        |  SELECT event_id, event_type,
-        |         CASE WHEN event_id % 41 = 0 THEN NULL ELSE value END AS v
-        |  FROM events),
-        |st AS (SELECT event_type, avg(v) AS mu FROM b GROUP BY event_type)
-        |SELECT event_id, roundStable(COALESCE(v, mu), 4) AS value_imputed
-        |FROM b JOIN st USING (event_type)
-        |ORDER BY event_id""".stripMargin,
-
-    "q17_zscore_anomaly" ->
-      """WITH st AS (
-        |  SELECT event_type, avg(value) AS mu, stddev_samp(value) AS sd
-        |  FROM events GROUP BY event_type
-        |)
-        |SELECT e.event_id, e.event_type, roundStable((e.value - st.mu) / st.sd, 6) AS z
-        |FROM events e JOIN st USING (event_type)
-        |WHERE abs((e.value - st.mu) / st.sd) > 3.0
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q28_cube" ->
-      """SELECT COALESCE(event_type, 'ALL') AS event_type,
-        | COALESCE(weekday, -1) AS weekday,
-        | count(*) AS n, roundStable(avg(value), 4) AS avg_value
-        |FROM (SELECT event_type, CAST(EXTRACT(isodow FROM ts) - 1 AS BIGINT) AS weekday, value FROM events) t
-        |GROUP BY CUBE(event_type, weekday)
-        |ORDER BY event_type, weekday""".stripMargin,
-
-    "q19_monthly_summary" ->
-      """SELECT CAST(EXTRACT(month FROM ts) AS BIGINT) AS month, event_type,
-        | roundStable(avg(value), 4) AS avg_value,
-        | roundStable(max(value), 6) AS max_value,
-        | count(*) AS n
-        |FROM events GROUP BY month, event_type ORDER BY month, event_type""".stripMargin,
-
-    "q20_join_mstar" ->
-      """SELECT r_name, n_name,
-        | roundStable(sum(o_totalprice), 4) AS revenue, count(*) AS n_orders
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-
-    "q22_pivot" ->
-      """SELECT CAST(ts AS DATE) AS d,
-        | roundStable(sum(value) FILTER (WHERE event_type = 'click'), 4) AS click,
-        | roundStable(sum(value) FILTER (WHERE event_type = 'error'), 4) AS error,
-        | roundStable(sum(value) FILTER (WHERE event_type = 'purchase'), 4) AS purchase,
-        | roundStable(sum(value) FILTER (WHERE event_type = 'signup'), 4) AS signup,
-        | roundStable(sum(value) FILTER (WHERE event_type = 'view'), 4) AS "view"
-        |FROM events GROUP BY d ORDER BY d""".stripMargin,
-
-    "q23_rollup" ->
-      """SELECT COALESCE(r_name, 'ALL') AS region, COALESCE(n_name, 'ALL') AS nation,
-        | roundStable(sum(c_acctbal), 4) AS acctbal_sum, count(*) AS n_customers
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY region, nation""".stripMargin,
-
-    "q24_semi_anti" ->
-      """SELECT 'with_orders' AS kind, count(*) AS n FROM customer
-        | WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |UNION ALL
-        |SELECT 'without_orders' AS kind, count(*) AS n FROM customer
-        | WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY kind""".stripMargin,
-
-    "q25_json_extract" ->
-      """SELECT event_type,
-        | roundStable(avg(CAST(props->>'k' AS BIGINT)), 4) AS avg_k,
-        | CAST(sum(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
-        | count(CAST(props->>'k' AS BIGINT)) AS n_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q26_asof_join" ->
-      """SELECT e.event_id, CAST(max(o.o_orderdate) AS TIMESTAMP) AS asof_date
-        |FROM events e
-        |LEFT JOIN orders o ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts
-        |GROUP BY e.event_id ORDER BY e.event_id""".stripMargin,
-
-    "q27_time_bucket" ->
-      """SELECT make_timestamp((epoch_us(ts) // 21600000000) * 21600000000) AS bucket,
-        | event_type, count(*) AS n, roundStable(sum(value), 4) AS sum_value
-        |FROM events GROUP BY bucket, event_type ORDER BY bucket, event_type""".stripMargin,
-
-    "q48_funnel" ->
-      """WITH f AS (
-        |  SELECT user_id,
-        |    min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-        |    min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
-        |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
-        |  FROM events GROUP BY user_id)
-        |SELECT
-        | count(*) FILTER (WHERE t_view IS NOT NULL) AS viewed,
-        | count(*) FILTER (WHERE t_view IS NOT NULL AND t_click > t_view) AS clicked_after_view,
-        | count(*) FILTER (WHERE t_view IS NOT NULL AND t_click > t_view AND t_purchase > t_click) AS purchased_after_click
-        |FROM f""".stripMargin,
-
-    "q49_retention" ->
-      """WITH first AS (
-        |  SELECT user_id, date_trunc('week', min(ts)) AS cohort FROM events GROUP BY user_id),
-        |act AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS wk FROM events)
-        |SELECT CAST(cohort AS TIMESTAMP) AS cohort,
-        | CAST(date_diff('day', CAST(cohort AS DATE), CAST(wk AS DATE)) // 7 AS BIGINT) AS week_offset,
-        | count(DISTINCT user_id) AS active_users
-        |FROM act JOIN first USING (user_id)
-        |GROUP BY cohort, week_offset ORDER BY cohort, week_offset""".stripMargin,
-
-    "q46_set_ops" ->
-      """WITH early AS (SELECT o_custkey FROM orders WHERE o_orderdate < '1998-01-01'),
-        |late AS (SELECT o_custkey FROM orders WHERE o_orderdate >= '1998-01-01')
-        |SELECT 'both' AS set_name, count(*) AS n FROM (SELECT o_custkey FROM early INTERSECT SELECT o_custkey FROM late) t
-        |UNION ALL
-        |SELECT 'early_only', count(*) FROM (SELECT DISTINCT o_custkey FROM early EXCEPT SELECT DISTINCT o_custkey FROM late) t
-        |UNION ALL
-        |SELECT 'either', count(*) FROM (SELECT o_custkey FROM early UNION SELECT o_custkey FROM late) t
-        |ORDER BY set_name""".stripMargin,
-
-    "q47_grouping_sets" ->
-      """SELECT COALESCE(event_type, 'ALL') AS event_type,
-        | COALESCE(weekday, -1) AS weekday,
-        | count(*) AS n, roundStable(sum(value), 4) AS sum_value
-        |FROM (SELECT event_type, CAST(EXTRACT(isodow FROM ts) - 1 AS BIGINT) AS weekday, value FROM events) t
-        |GROUP BY GROUPING SETS ((event_type, weekday), (event_type), ())
-        |ORDER BY event_type, weekday""".stripMargin,
-
-    "q40_multimodal_meta" ->
-      """SELECT doc_id,
-        | CAST(strlen(text) AS BIGINT) AS n_bytes,
-        | md5(text) AS content_md5,
-        | substr(text, 1, 8) AS head
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q30_tokens" ->
-      """SELECT doc_id,
-        | CAST(len(str_split(text, ' ')) AS BIGINT) AS ws_tokens,
-        | CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS re_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q31_quality_score" ->
-      """WITH t AS (SELECT doc_id, text, str_split(text, ' ') AS toks FROM documents)
-        |SELECT doc_id,
-        | roundStable(CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / CAST(length(text) AS DOUBLE), 6) AS punct_ratio,
-        | roundStable(CAST(len(list_filter(toks, x -> x IN ('the','a'))) AS DOUBLE) / CAST(len(toks) AS DOUBLE), 6) AS stopword_ratio,
-        | roundStable(CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE) / CAST(len(toks) AS DOUBLE), 6) AS mean_word_len,
-        | roundStable(0.5 * least(1.0, CAST(len(toks) AS DOUBLE) / 50.0)
-        |   + 0.3 * (1.0 - CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / CAST(length(text) AS DOUBLE))
-        |   + 0.2 * (CAST(len(list_filter(toks, x -> x IN ('the','a'))) AS DOUBLE) / CAST(len(toks) AS DOUBLE)), 6) AS quality
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    "q32_langid" ->
-      """SELECT doc_id, s_en, s_es, s_zh,
-        | CASE WHEN s_en >= s_es AND s_en >= s_zh THEN 'en'
-        |      WHEN s_es >= s_zh THEN 'es'
-        |      ELSE 'zh' END AS predicted_lang
-        |FROM (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(str_split(text,' '), x -> x IN ('the','a'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(str_split(text,' '), x -> x IN ('el','la','de','que'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(str_split(text,' '), x -> x IN ('的','是','了'))) AS BIGINT) AS s_zh
-        |  FROM documents) t
-        |ORDER BY doc_id""".stripMargin,
-
-    "q33_fingerprint" ->
-      """SELECT doc_id, fp, CAST(count(*) OVER (PARTITION BY fp) AS BIGINT) AS n_same
-        |FROM (SELECT doc_id,
-        |        md5(array_to_string(list_sort(list_distinct(str_split(lower(text), ' '))), ' ')) AS fp
-        |      FROM documents) t
-        |ORDER BY doc_id""".stripMargin,
-
-    "q34_ngram_jaccard" ->
-      """WITH s AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s
-        |),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh FROM sh)
-        |SELECT doc_a, doc_b, roundStable(j, 6) AS jaccard FROM (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(count(*) AS DOUBLE) / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id) t
-        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q35_minhash_lsh" ->
-      """WITH s AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s
-        |),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh FROM sh)
-        |SELECT doc_a, doc_b, roundStable(j, 6) AS jaccard FROM (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(count(*) AS DOUBLE) / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id) t
-        |WHERE j >= 0.8 ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q44_tfidf" ->
-      """WITH terms AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM documents) t
-        |  GROUP BY doc_id, term),
-        |dfreq AS (SELECT term, count(*) AS df FROM terms GROUP BY term),
-        |nd AS (SELECT count(*) AS n_docs FROM documents)
-        |SELECT doc_id, term, tf, df,
-        | roundStable(CAST(tf AS DOUBLE) * ln(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)), 6) AS tfidf
-        |FROM terms JOIN dfreq USING (term) CROSS JOIN nd
-        |ORDER BY tfidf DESC, doc_id, term LIMIT 50""".stripMargin,
-
-    "q45_sessions_batch" ->
-      """WITH t AS (
-        |  SELECT user_id, ts, event_id, value, epoch_us(ts) AS tu,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts, value,
-        |    CAST(sum(CASE WHEN prev IS NULL OR tu - prev > 1800000000 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_n
-        |  FROM t)
-        |SELECT user_id, session_n,
-        | CAST(min(ts) AS TIMESTAMP) AS session_start,
-        | CAST(max(ts) AS TIMESTAMP) AS session_end,
-        | count(*) AS n_events,
-        | roundStable(sum(value), 4) AS sum_value
-        |FROM s GROUP BY user_id, session_n
-        |ORDER BY user_id, session_n""".stripMargin,
-
-    "q42_term_freq" ->
-      """SELECT term, count(*) AS tf, count(DISTINCT doc_id) AS df
-        |FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM documents) t
-        |GROUP BY term ORDER BY tf DESC, term LIMIT 20""".stripMargin,
-
-    "q43_dedup_survivors" ->
-      """WITH s AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s
-        |),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh FROM sh),
-        |dropped AS (
-        |  SELECT DISTINCT doc_b AS doc_id FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |      CAST(count(*) AS DOUBLE) / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |    FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |    GROUP BY a.doc_id, b.doc_id) t
-        |  WHERE j >= 0.8)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q41_ivf_topk" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding, label,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                 FOR i IN range(1, len(q.embedding) + 1)]) / (q.nrm * c.nrm), 4) AS cosine
-        |  FROM v q JOIN v c ON q.label = c.label AND q.vec_id < 10 AND q.vec_id <> c.vec_id)
-        |SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM (
-        |  SELECT p.*, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM p) t
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "q96_rolling_median" ->
-      """WITH o AS (SELECT event_type, value,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY ts, event_id) AS rn,
-        |    median(value) OVER (PARTITION BY event_type ORDER BY ts, event_id
-        |                        ROWS BETWEEN 5 PRECEDING AND CURRENT ROW) AS med
-        |  FROM events)
-        |SELECT event_type, CAST(rn AS BIGINT) AS rn, value,
-        |  roundStable(med, 6) AS rolling_median
-        |FROM o ORDER BY event_type, rn""".stripMargin,
-
-    "q99_ann_drift" ->
-      // the batch size compares by value; the trained-quantizer drift
-      // verdicts (in-distribution ratio ~1, shifted ratio >> 1) are
-      // Spark-side 1/0 columns the oracle asserts as literal 1s
-      """SELECT count(*) AS n,
-        | CAST(1 AS BIGINT) AS in_dist_ok,
-        | CAST(1 AS BIGINT) AS shift_flagged
-        |FROM embeddings""".stripMargin,
-
-    "q98_stream_topk" ->
-      // exact top-5 token counts computed exactly on both sides; the MG
-      // streaming-state contracts (replay gate, capacity bound, undercount
-      // bound) are Spark-side verdicts the oracle asserts as literal 1s
-      """SELECT tok, count(*) AS cnt,
-        | CAST(1 AS BIGINT) AS replay_gated,
-        | CAST(1 AS BIGINT) AS state_bounded,
-        | CAST(1 AS BIGINT) AS undercount_ok
-        |FROM (SELECT unnest(str_split(text, ' ')) AS tok FROM documents)
-        |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 5""".stripMargin,
-
-    "q97_unigram_logprob" ->
-      """WITH tk AS (SELECT doc_id, unnest(str_split(text, ' ')) AS tok FROM documents),
-        |tf AS (SELECT tok, CAST(count(*) AS DOUBLE) AS tf FROM tk GROUP BY tok),
-        |tot AS (SELECT sum(tf) AS total FROM tf),
-        |lm AS (SELECT tok, ln(tf / (SELECT total FROM tot)) AS lp FROM tf)
-        |SELECT tk.doc_id, CAST(count(*) AS BIGINT) AS n_toks,
-        |  roundStable(avg(lm.lp), 6) AS mean_logprob
-        |FROM tk JOIN lm USING (tok)
-        |GROUP BY tk.doc_id ORDER BY doc_id""".stripMargin,
-
-    "q94_quality_prank" ->
-      """WITH t AS (SELECT doc_id, source, text, str_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, source,
-        |  roundStable(0.5 * least(1.0, CAST(len(toks) AS DOUBLE) / 50.0)
-        |    + 0.3 * (1.0 - CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / CAST(length(text) AS DOUBLE))
-        |    + 0.2 * (CAST(len(list_filter(toks, x -> x IN ('the','a'))) AS DOUBLE) / CAST(len(toks) AS DOUBLE)), 6) AS quality
-        |  FROM t),
-        |p AS (SELECT doc_id, source, quality,
-        |  roundStable(percent_rank() OVER (PARTITION BY source ORDER BY quality, doc_id), 6) AS prank
-        |  FROM s)
-        |SELECT doc_id, source, quality, prank FROM p
-        |WHERE prank >= 0.2 ORDER BY doc_id""".stripMargin,
-
-    "q95_gap_detect" ->
-      """WITH o AS (SELECT event_type, ts, event_id,
-        |    lead(ts) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS next_ts
-        |  FROM events)
-        |SELECT event_type, ts AS gap_start, next_ts AS gap_end,
-        |  epoch_us(next_ts) - epoch_us(ts) AS gap_usecs
-        |FROM o WHERE epoch_us(next_ts) - epoch_us(ts) > 7200000000::BIGINT
-        |ORDER BY event_type, gap_start""".stripMargin,
-
-    "q93_zorder" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(list_sum([(((l_orderkey % 256) >> i) & 1) * (1::BIGINT << (2*i))
-        |               + (((l_partkey % 256) >> i) & 1) * (1::BIGINT << (2*i+1))
-        |               FOR i IN range(0, 8)]) AS BIGINT) AS zval
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q92_semdedup" ->
-      // brute force over the same twin-augmented corpus; min-id
-      // retention expressed as NOT EXISTS over the >=0.9 pair set
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 2000000, embedding FROM embeddings WHERE vec_id % 7 = 0),
-        |v AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM corpus)
-        |SELECT c.vec_id FROM corpus c
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM v a JOIN v b ON a.vec_id < b.vec_id
-        |  WHERE b.vec_id = c.vec_id
-        |    AND list_sum([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)
-        |         FOR i IN range(1, len(a.embedding) + 1)]) / (a.nrm * b.nrm) >= 0.9)
-        |ORDER BY vec_id""".stripMargin,
-
-    "q90_substring_dup" ->
-      """WITH t AS (SELECT doc_id, str_split(text, ' ') AS toks FROM documents),
-        |p AS (SELECT doc_id, toks,
-        |    unnest(range(0, greatest(len(toks) - 7, 0))) AS pos FROM t),
-        |s AS (SELECT doc_id, pos,
-        |    array_to_string(toks[pos+1:pos+8], ' ') AS sh FROM p),
-        |dup AS (SELECT sh FROM s GROUP BY sh HAVING count(DISTINCT doc_id) >= 2),
-        |d AS (SELECT s.doc_id, s.pos FROM s JOIN dup USING (sh)),
-        |g AS (SELECT doc_id, pos,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM d)
-        |SELECT doc_id, min(pos) AS span_start, max(pos) AS span_end,
-        |  max(pos) - min(pos) + 8 AS tok_len
-        |FROM g GROUP BY doc_id, grp
-        |ORDER BY doc_id, span_start""".stripMargin,
-
-    "q91_ewma" ->
-      """WITH o AS (SELECT event_type, value,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY ts, event_id) AS rn,
-        |    list(value) OVER (PARTITION BY event_type ORDER BY ts, event_id
-        |                      ROWS BETWEEN 24 PRECEDING AND CURRENT ROW) AS ll
-        |  FROM events)
-        |SELECT event_type, CAST(rn AS BIGINT) AS rn, value,
-        |  roundStable(list_sum([ll[i+1] * pow(0.7, len(ll)-1-i) FOR i IN range(0, len(ll))])
-        |    / list_sum([pow(0.7, len(ll)-1-i) FOR i IN range(0, len(ll))]), 6) AS ewma
-        |FROM o ORDER BY event_type, rn""".stripMargin,
-
-    "q89_seasonal_anomaly" ->
-      """WITH o AS (SELECT event_type, ts, event_id, value,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |t AS (SELECT event_type, ts, rn, value,
-        |    avg(value) OVER (PARTITION BY event_type ORDER BY ts, event_id
-        |                     ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS trend
-        |  FROM o),
-        |s AS (SELECT event_type, rn, trend, value - trend AS detr, hour(ts) AS hh FROM t),
-        |m AS (SELECT event_type AS met, hh AS mhh,
-        |    roundStable(avg(detr), 6) AS seasonal
-        |  FROM s GROUP BY 1, 2),
-        |r AS (SELECT s.event_type, s.rn,
-        |    roundStable(s.detr - m.seasonal, 6) AS residual
-        |  FROM s JOIN m ON s.event_type = m.met AND s.hh = m.mhh),
-        |g AS (SELECT event_type AS get2, roundStable(stddev_samp(residual), 6) AS sigma
-        |  FROM r GROUP BY 1)
-        |SELECT r.event_type, CAST(r.rn AS BIGINT) AS rn, r.residual, g.sigma
-        |FROM r JOIN g ON r.event_type = g.get2
-        |WHERE abs(r.residual) > 3.0 * g.sigma
-        |ORDER BY r.event_type, r.rn""".stripMargin,
-
-    "q88_seasonal" ->
-      """WITH o AS (SELECT event_type, ts, event_id, value,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |t AS (SELECT event_type, ts, rn, value,
-        |    avg(value) OVER (PARTITION BY event_type ORDER BY ts, event_id
-        |                     ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS trend
-        |  FROM o),
-        |s AS (SELECT event_type, rn, trend, value - trend AS detr, hour(ts) AS hh FROM t),
-        |m AS (SELECT event_type AS met, hh AS mhh,
-        |    roundStable(avg(detr), 6) AS seasonal
-        |  FROM s GROUP BY 1, 2)
-        |SELECT s.event_type, CAST(s.rn AS BIGINT) AS rn,
-        |  roundStable(s.trend, 6) AS trend,
-        |  m.seasonal,
-        |  roundStable(s.detr - m.seasonal, 6) AS residual
-        |FROM s JOIN m ON s.event_type = m.met AND s.hh = m.mhh
-        |ORDER BY s.event_type, s.rn""".stripMargin,
-
-    "q87_incremental_ann" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                 FOR i IN range(1, len(q.embedding) + 1)]) / (q.nrm * c.nrm), 4) AS cosine
-        |  FROM v q JOIN v c ON q.vec_id < 10 AND q.vec_id <> c.vec_id)
-        |SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM (
-        |  SELECT p.*, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM p) t
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "q386_stream_dedup" ->
-      // watermark-dedup gate: every (user 0-19 x event_type) key
-      // survives once per epoch (2 epochs), the watermark-advancer key
-      // (999, lexicographically first type) once
-      """WITH t AS (SELECT DISTINCT event_type FROM events),
-        |k AS (SELECT r.range AS user_id, t.event_type
-        |      FROM range(20) r CROSS JOIN t)
-        |SELECT CAST(user_id AS BIGINT) AS user_id, event_type,
-        |  CAST(2 AS BIGINT) AS n_survivors,
-        |  CAST(2.0 AS DOUBLE) AS sum_value
-        |FROM k
-        |UNION ALL
-        |SELECT CAST(999 AS BIGINT), (SELECT min(event_type) FROM t),
-        |  CAST(1 AS BIGINT), CAST(1.0 AS DOUBLE)
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    "q387_stream_ann" ->
-      // the q87 brute-force truth (cells partition the corpus, full
-      // probe is exact) + the drift-log replay fold asserting as 1
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                 FOR i IN range(1, len(q.embedding) + 1)]) / (q.nrm * c.nrm), 4) AS cosine
-        |  FROM v q JOIN v c ON q.vec_id < 10 AND q.vec_id <> c.vec_id)
-        |SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank,
-        |  CAST(1 AS BIGINT) AS replay_folds_ok FROM (
-        |  SELECT p.*, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM p) t
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "q388_stream_scd2" ->
-      // baseline-free SCD2 chain over the whole update feed — the
-      // one-shot twin of the two-batch + replay fold, with the replay
-      // no-change checksum asserting as 1
-      """WITH u0 AS (SELECT o_custkey AS cust, o_orderdate AS ts,
-        |             min(o_orderpriority) AS seg
-        |           FROM orders GROUP BY 1, 2),
-        |c1 AS (SELECT cust, ts, seg,
-        |         lag(seg) OVER (PARTITION BY cust ORDER BY ts) AS prev
-        |       FROM u0),
-        |ch AS (SELECT cust, ts, seg FROM c1
-        |       WHERE prev IS NULL OR prev <> seg)
-        |SELECT cust, seg, CAST(ts AS DATE) AS valid_from,
-        |  CAST(lead(ts) OVER (PARTITION BY cust ORDER BY ts) AS DATE)
-        |    AS valid_to,
-        |  CAST(lead(ts) OVER (PARTITION BY cust ORDER BY ts) IS NULL
-        |    AS BIGINT) AS cur,
-        |  CAST(1 AS BIGINT) AS replay_gated
-        |FROM ch ORDER BY cust, valid_from""".stripMargin,
-
-    "q389_bmp_pixels" ->
-      // the BMP pixel grid is a fixed linear function of doc_id —
-      // recompute every channel sum plus the row-order-sensitive
-      // y-weighted red sum over two generate_series grids; doc_id%10==9
-      // is the truncated-pixel-array case (invalid, NULL stats)
-      """WITH d AS (SELECT doc_id,
-        |             CAST(4 + doc_id % 9 AS INT) AS w,
-        |             CAST(3 + doc_id % 7 AS INT) AS h
-        |           FROM documents),
-        |g AS (SELECT d.doc_id, d.w, d.h, xs.x, ys.y,
-        |        (d.doc_id + 7*xs.x + 13*ys.y) % 256 AS bch,
-        |        (3*d.doc_id + 5*xs.x + 11*ys.y) % 256 AS gch,
-        |        (2*d.doc_id + xs.x + 17*ys.y) % 256 AS rch
-        |      FROM d
-        |      JOIN (SELECT * FROM generate_series(0, 11)) xs(x) ON xs.x < d.w
-        |      JOIN (SELECT * FROM generate_series(0, 9)) ys(y) ON ys.y < d.h),
-        |agg AS (SELECT doc_id, w, h,
-        |          CAST(w AS BIGINT) * h AS n_px,
-        |          CAST(sum(bch) AS BIGINT) AS sum_b,
-        |          CAST(sum(gch) AS BIGINT) AS sum_g,
-        |          CAST(sum(rch) AS BIGINT) AS sum_r,
-        |          CAST(sum(y * rch) AS BIGINT) AS ywr_sum
-        |        FROM g GROUP BY doc_id, w, h)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.doc_id % 10 = 9 THEN NULL ELSE a.w END AS width,
-        |  CASE WHEN d.doc_id % 10 = 9 THEN NULL ELSE a.h END AS height,
-        |  CASE WHEN d.doc_id % 10 = 9 THEN NULL ELSE a.n_px END AS n_px,
-        |  CASE WHEN d.doc_id % 10 = 9 THEN NULL ELSE a.sum_b END AS sum_b,
-        |  CASE WHEN d.doc_id % 10 = 9 THEN NULL ELSE a.sum_g END AS sum_g,
-        |  CASE WHEN d.doc_id % 10 = 9 THEN NULL ELSE a.sum_r END AS sum_r,
-        |  CASE WHEN d.doc_id % 10 = 9 THEN NULL ELSE a.ywr_sum END AS ywr_sum,
-        |  CASE WHEN d.doc_id % 10 = 9 THEN NULL
-        |       ELSE CAST(d.doc_id % 256 AS INT) END AS corner_tl_b,
-        |  CAST(d.doc_id % 10 <> 9 AS INT) AS valid
-        |FROM d JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q390_mg_guarantee" ->
-      // per-segment row counts by value; the three Misra-Gries
-      // guarantee clauses (tracked set bounded by capacity, every
-      // counter an underestimate by at most N/(k+1), every heavy item
-      // present) as literal 1s — survivor identities are engine
-      // content and stay out of the compared output
-      """SELECT event_type AS segment,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(16 AS BIGINT) AS capacity,
-        |  CAST(1 AS BIGINT) AS tracked_bound_ok,
-        |  CAST(1 AS BIGINT) AS underestimate_ok,
-        |  CAST(1 AS BIGINT) AS coverage_ok
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q37_cosine_topk" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                 FOR i IN range(1, len(q.embedding) + 1)]) / (q.nrm * c.nrm), 4) AS cosine
-        |  FROM v q JOIN v c ON q.vec_id < 10 AND q.vec_id <> c.vec_id)
-        |SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM (
-        |  SELECT p.*, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM p) t
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // ANN verdict rows (q62 discipline): exact counts recomputed by
-    // value; the in-query coverage/sortedness/recall cross-checks vs
-    // brute force assert as literal 1s — engine-specific neighbor lists
-    // stay out of the compared output, but a recall collapse, missing
-    // rank, or unsorted score breaks the hash gate.
-    "q39_ann_lsh" ->
-      """SELECT count(*) AS n_queries, CAST(5 AS BIGINT) AS k,
-        | CAST(1 AS BIGINT) AS coverage_ok,
-        | CAST(1 AS BIGINT) AS sorted_ok,
-        | CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    "q52_pq_topk" ->
-      """SELECT count(*) AS n_queries, CAST(5 AS BIGINT) AS k,
-        | CAST(1 AS BIGINT) AS coverage_ok,
-        | CAST(1 AS BIGINT) AS sorted_ok,
-        | CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    "q71_ivfpq_topk" ->
-      """SELECT count(*) AS n_queries, CAST(5 AS BIGINT) AS k,
-        | CAST(1 AS BIGINT) AS coverage_ok,
-        | CAST(1 AS BIGINT) AS sorted_ok,
-        | CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    "q73_ivfrq_topk" ->
-      """SELECT count(*) AS n_queries, CAST(5 AS BIGINT) AS k,
-        | CAST(1 AS BIGINT) AS coverage_ok,
-        | CAST(1 AS BIGINT) AS sorted_ok,
-        | CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    "q105_int8_topk" ->
-      """SELECT count(*) AS n_queries, CAST(5 AS BIGINT) AS k,
-        | CAST(1 AS BIGINT) AS coverage_ok,
-        | CAST(1 AS BIGINT) AS sorted_ok,
-        | CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    "q59_blob_features" ->
-      // the stub decode's byte count recomputed by value (UTF-8 octet
-      // length); the engine-specific mean-byte flattens to a 1
-      """SELECT doc_id,
-        | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        | CAST(1 AS BIGINT) AS mean_byte_bounded_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q107_bpe_merges" ->
-      // merge 1 = the argmax adjacent-character pair of the initial
-      // word vocabulary (count desc, then lexicographic on l, r) —
-      // recomputed by value with its count; structure asserts as 1s
-      """WITH w AS (SELECT t AS w, count(*) AS cnt
-        |  FROM (SELECT unnest(str_split(text, ' ')) AS t FROM documents)
-        |  WHERE len(t) >= 2 GROUP BY 1),
-        |p AS (SELECT unnest([{'l': w[i:i], 'r': w[i+1:i+1]}
-        |        FOR i IN range(1, len(w))]) AS pr, cnt
-        |      FROM w),
-        |g AS (SELECT pr.l AS l, pr.r AS r, CAST(sum(cnt) AS BIGINT) AS n
-        |      FROM p GROUP BY 1, 2)
-        |SELECT l AS first_left, r AS first_right, n AS first_count,
-        |  CAST(1 AS BIGINT) AS first_match_ok,
-        |  CAST(10 AS BIGINT) AS n_merges,
-        |  CAST(1 AS BIGINT) AS pairs_distinct_ok
-        |FROM g ORDER BY n DESC, l, r LIMIT 1""".stripMargin,
-
-    "q373_procrustes" ->
-      // v2 is the signed permutation v2[i] = (-1)^[i even] · v1[64-i]
-      // (0-based) — replayed in SQL, so cos_before compares BY VALUE;
-      // the aligned cosine must read exactly 1.0 at 4 digits
-      """WITH p AS (
-        |  SELECT vec_id, embedding,
-        |    [CAST((CASE WHEN (i - 1) % 2 = 0 THEN -1.0 ELSE 1.0 END)
-        |       * embedding[65 - i] AS DOUBLE)
-        |     FOR i IN range(1, 65)] AS v2
-        |  FROM embeddings)
-        |SELECT vec_id,
-        |  roundStable(
-        |    list_sum([CAST(embedding[i] AS DOUBLE) * v2[i]
-        |              FOR i IN range(1, 65)])
-        |    / (sqrt(list_sum([CAST(embedding[i] AS DOUBLE)
-        |         * CAST(embedding[i] AS DOUBLE) FOR i IN range(1, 65)]))
-        |       * sqrt(list_sum([v2[i] * v2[i] FOR i IN range(1, 65)]))),
-        |    4) AS cos_before,
-        |  1.0 AS cos_after
-        |FROM p ORDER BY vec_id""".stripMargin,
-
-    "q365_cdc_dedup" ->
-      // exact blob count and byte total (chunks cover every byte);
-      // the planted twins' full-dup member count is exactly 2x the
-      // twin count; bounds assert as 1
-      """WITH d AS (SELECT doc_id, text FROM documents
-        |           WHERE text IS NOT NULL AND len(text) >= 1)
-        |SELECT
-        |  CAST((SELECT count(*) FROM d)
-        |    + (SELECT count(*) FROM d WHERE doc_id % 5 = 0) AS BIGINT)
-        |    AS n_blobs,
-        |  CAST((SELECT sum(octet_length(encode(text))) FROM d)
-        |    + (SELECT sum(octet_length(encode(text))) FROM d
-        |       WHERE doc_id % 5 = 0) AS BIGINT) AS bytes_total,
-        |  CAST(2 * (SELECT count(*) FROM d WHERE doc_id % 5 = 0)
-        |    AS BIGINT) AS n_twin_members_full_dup,
-        |  CAST(1 AS BIGINT) AS bounds_ok""".stripMargin,
-
-    "q16_extract_synth" ->
-      // the generator contract as literals: exact row/station/hour
-      // counts and the exact timestamp span; invariant checks assert 1
-      """SELECT CAST(360 AS BIGINT) AS n_rows,
-        | CAST(5 AS BIGINT) AS n_stations,
-        | CAST(72 AS BIGINT) AS n_hours,
-        | TIMESTAMP '2024-01-01 00:00:00' AS min_ts,
-        | TIMESTAMP '2024-01-03 23:00:00' AS max_ts,
-        | CAST(1 AS BIGINT) AS missing_bounded_ok,
-        | CAST(1 AS BIGINT) AS nonneg_ok,
-        | CAST(1 AS BIGINT) AS ranges_ok,
-        | CAST(1 AS BIGINT) AS station_quota_ok""".stripMargin,
-
-    "q36_simhash" ->
-      // exact-duplicate twins MUST surface at hamming 0 (identical
-      // fingerprints share every band): the twin count is recomputed
-      // by value; structural contracts assert as 1s
-      """SELECT count(*) AS twins_found_at_zero,
-        | CAST(1 AS BIGINT) AS hamming_bounded_ok,
-        | CAST(1 AS BIGINT) AS ordered_ok,
-        | CAST(1 AS BIGINT) AS distinct_ok
-        |FROM documents WHERE doc_id % 5 = 0""".stripMargin,
-
-    "q350_knn_outlier_cand" ->
-      // candidate-path verdict (r14, was rows-only): full-probe pair
-      // count by value (n·(n−1) — any dropped/duplicated pair breaks a
-      // VALUE), the pruned knnOutliers' topN row count by value, and
-      // the equality/subset/prune-floor verdicts as literal 1s
-      """WITH c AS (SELECT count(*) AS n FROM embeddings)
-        |SELECT CAST(n AS BIGINT) AS n_corpus,
-        | CAST(8 AS BIGINT) AS k_coarse, CAST(2 AS BIGINT) AS nprobe,
-        | CAST(n * (n - 1) AS BIGINT) AS n_pairs_full,
-        | CAST(20 AS BIGINT) AS pruned_diag_rows,
-        | CAST(1 AS BIGINT) AS fullprobe_eq_brute_ok,
-        | CAST(1 AS BIGINT) AS pruned_subset_ok,
-        | CAST(30 AS BIGINT) AS prune_floor_pct,
-        | CAST(1 AS BIGINT) AS prune_floor_ok
-        |FROM c""".stripMargin,
-
-    "q351_hubness_cand" ->
-      // hubness materializes every point via its left join, so the
-      // pruned diagnostic always has exactly topN=20 rows
-      """WITH c AS (SELECT count(*) AS n FROM embeddings)
-        |SELECT CAST(n AS BIGINT) AS n_corpus,
-        | CAST(8 AS BIGINT) AS k_coarse, CAST(2 AS BIGINT) AS nprobe,
-        | CAST(n * (n - 1) AS BIGINT) AS n_pairs_full,
-        | CAST(20 AS BIGINT) AS pruned_diag_rows,
-        | CAST(1 AS BIGINT) AS fullprobe_eq_brute_ok,
-        | CAST(1 AS BIGINT) AS pruned_subset_ok,
-        | CAST(30 AS BIGINT) AS prune_floor_pct,
-        | CAST(1 AS BIGINT) AS prune_floor_ok
-        |FROM c""".stripMargin,
-
-    "q352_lid_cand" ->
-      // lidMle emits one row per label with >= 1 point holding exactly
-      // k pruned neighbors at nonzero distance — at nprobe=2 every
-      // label keeps fit points (54 % of pairs survive), so the pruned
-      // row count is the label count, oracle-recomputed
-      """WITH c AS (SELECT count(*) AS n FROM embeddings)
-        |SELECT CAST(n AS BIGINT) AS n_corpus,
-        | CAST(8 AS BIGINT) AS k_coarse, CAST(2 AS BIGINT) AS nprobe,
-        | CAST(n * (n - 1) AS BIGINT) AS n_pairs_full,
-        | (SELECT count(DISTINCT label) FROM embeddings)
-        |   AS pruned_diag_rows,
-        | CAST(1 AS BIGINT) AS fullprobe_eq_brute_ok,
-        | CAST(1 AS BIGINT) AS pruned_subset_ok,
-        | CAST(30 AS BIGINT) AS prune_floor_pct,
-        | CAST(1 AS BIGINT) AS prune_floor_ok
-        |FROM c""".stripMargin,
-
-    "q353_mnn_cand" ->
-      // cross shape: disjoint id universes, so full probe = n_a·n_b by
-      // value; the pruned mutual-NN survivor count is engine content
-      // (trained cells pick the candidates) — bounds-gated instead
-      """WITH a AS (SELECT count(*) AS na FROM embeddings WHERE label = 0),
-        |b AS (SELECT count(*) AS nb FROM embeddings WHERE label = 1)
-        |SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-        | CAST(8 AS BIGINT) AS k_coarse, CAST(2 AS BIGINT) AS nprobe,
-        | CAST(na * nb AS BIGINT) AS n_pairs_full,
-        | CAST(1 AS BIGINT) AS fullprobe_eq_brute_ok,
-        | CAST(1 AS BIGINT) AS pruned_subset_ok,
-        | CAST(1 AS BIGINT) AS pruned_diag_bounded_ok,
-        | CAST(30 AS BIGINT) AS prune_floor_pct,
-        | CAST(1 AS BIGINT) AS prune_floor_ok
-        |FROM a CROSS JOIN b""".stripMargin,
-
-    "q384_cand_clustered" ->
-      // planted-geometry corpus: counts by value (truth pairs = 10 per
-      // point — n > k+1 at every SF), config literals, and the three
-      // §5.2 claims (exact recall at nprobe=1, >= 87 % pruned, full
-      // diagnostic equality) as literal 1s
-      """WITH c AS (SELECT count(*) AS n FROM embeddings)
-        |SELECT CAST(n AS BIGINT) AS n_corpus,
-        | CAST(10 * n AS BIGINT) AS n_truth_pairs,
-        | CAST(10 * n AS BIGINT) AS n_hit_pairs,
-        | CAST(8 AS BIGINT) AS k_coarse, CAST(1 AS BIGINT) AS nprobe,
-        | CAST(10 AS BIGINT) AS recall_k,
-        | CAST(87 AS BIGINT) AS prune_floor_pct,
-        | CAST(1 AS BIGINT) AS recall_exact_ok,
-        | CAST(1 AS BIGINT) AS prune_floor_ok,
-        | CAST(1 AS BIGINT) AS diag_eq_brute_ok
-        |FROM c""".stripMargin,
-
-    "q385_media_headers" ->
-      // header-parse oracle: every field re-derived from doc_id
-      // arithmetic + the generator's fixed per-format byte sizes
-      // (PNG 33 = magic 8 + len 4 + "IHDR" 4 + data 13 + CRC 4;
-      // JPEG 41 = SOI + 18-byte APP0 + 19-byte SOF0 + EOI;
-      // GIF 14 = header 6 + LSD 7 + trailer; BMP 54-byte header;
-      // junk 6 magic bytes)
-      """SELECT doc_id,
-        | CASE doc_id % 5 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-        |   WHEN 2 THEN 'gif' WHEN 3 THEN 'bmp' ELSE 'unknown' END
-        |   AS format,
-        | CAST(CASE doc_id % 5
-        |   WHEN 0 THEN 16 + doc_id % 256 WHEN 1 THEN 32 + doc_id % 200
-        |   WHEN 2 THEN 1 + doc_id % 300 WHEN 3 THEN 64 + doc_id % 50
-        |   END AS INTEGER) AS width,
-        | CAST(CASE doc_id % 5
-        |   WHEN 0 THEN 8 + doc_id % 128 WHEN 1 THEN 24 + doc_id % 100
-        |   WHEN 2 THEN 1 + doc_id % 150 WHEN 3 THEN 48 + doc_id % 25
-        |   END AS INTEGER) AS height,
-        | CAST(CASE doc_id % 5 WHEN 0 THEN 8 WHEN 1 THEN 8
-        |   WHEN 3 THEN 24 END AS INTEGER) AS bit_depth,
-        | CAST(CASE doc_id % 5 WHEN 0 THEN 33 WHEN 1 THEN 41
-        |   WHEN 2 THEN 14 WHEN 3 THEN 54 ELSE 6 END AS BIGINT)
-        |   AS n_bytes,
-        | CAST(CASE WHEN doc_id % 5 = 4 THEN 0 ELSE 1 END AS INTEGER)
-        |   AS valid
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q354_ann_ladder" ->
-      // ladder verdict view: config literals + exact counts; the
-      // full-scan rungs' scan/rescore numbers are exact by construction
-      // (n-1 and min(overfetch*k, n-1)); probed rungs' measured scans
-      // stay engine content (NULL here, reported by the library table)
-      // and their verdicts assert as 1s
-      """WITH c AS (SELECT (SELECT count(*) FROM embeddings) AS n,
-        |  (SELECT count(*) FROM embeddings WHERE vec_id < 10) AS nq),
-        |r AS (SELECT * FROM (VALUES
-        |  (0, 'brute_force',        256.0, TRUE,  0.0),
-        |  (1, 'lsh_8x4_multiprobe', 256.0, FALSE, NULL),
-        |  (2, 'ivf_flat_k10_np1',   256.0, FALSE, NULL),
-        |  (3, 'pq_m8',                8.0, TRUE,  100.0),
-        |  (4, 'ivfpq_c16_np8_m8',     8.0, FALSE, NULL),
-        |  (5, 'ivfadc_c16_np8_m8',    8.0, FALSE, NULL),
-        |  (6, 'int8_of4',            72.0, TRUE,  20.0),
-        |  (7, 'binary_of4',           8.0, TRUE,  20.0),
-        |  (8, 'matryoshka_d16_of4',  64.0, TRUE,  20.0)
-        |) v(rung, method, sb, fullscan, resc))
-        |SELECT CAST(rung AS BIGINT) AS rung, method,
-        |  sb AS scan_bytes_per_vec,
-        |  CAST(n AS BIGINT) AS corpus_n, CAST(nq AS BIGINT) AS n_queries,
-        |  CASE WHEN fullscan THEN CAST(n - 1 AS DOUBLE) END
-        |    AS scanned_per_query,
-        |  CASE WHEN fullscan THEN CAST(resc AS DOUBLE) END
-        |    AS rescore_per_query,
-        |  CAST(1 AS BIGINT) AS recall_ok,
-        |  CAST(1 AS BIGINT) AS scan_pruned_ok
-        |FROM r CROSS JOIN c ORDER BY rung""".stripMargin,
-
-    "q51_ivf_kmeans" ->
-      // trained-cell search: exact corpus/query counts by value; the
-      // assignment-total and within-cell-equality cross-checks assert
-      // as literal 1s (the independent truth path is the global
-      // brute-force ranking filtered to the query's trained cell)
-      """SELECT (SELECT count(*) FROM embeddings) AS n_corpus,
-        | count(*) AS n_queries, CAST(5 AS BIGINT) AS k,
-        | CAST(1 AS BIGINT) AS assign_ok,
-        | CAST(1 AS BIGINT) AS cell_match_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    "q115_mmr_rerank" ->
-      // MMR's first pick IS the brute-force top-1 (relevance argmax) —
-      // id and relevance recomputed by value; the rest of the greedy
-      // selection flattens to structural verdicts
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                 FOR i IN range(1, len(q.embedding) + 1)]) / (q.nrm * c.nrm), 4) AS cosine
-        |  FROM v q JOIN v c ON q.vec_id < 5 AND q.vec_id <> c.vec_id)
-        |SELECT query_id, neighbor_id AS first_pick, cosine AS first_rel,
-        |  CAST(5 AS BIGINT) AS n_selected,
-        |  CAST(1 AS BIGINT) AS subset_ok,
-        |  CAST(1 AS BIGINT) AS distinct_ok
-        |FROM (
-        |  SELECT p.*, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM p) t
-        |WHERE rank = 1 ORDER BY query_id""".stripMargin,
-
-    "q65_session_window" ->
-      """WITH t AS (
-        |  SELECT user_id, ts, value, epoch_us(ts) AS tu,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) AS prev
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts, value,
-        |    CAST(sum(CASE WHEN prev IS NULL OR tu - prev >= 1800000000 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_n
-        |  FROM t)
-        |SELECT user_id,
-        | CAST(min(ts) AS TIMESTAMP) AS session_start,
-        | CAST(max(ts) + INTERVAL 30 MINUTE AS TIMESTAMP) AS session_end,
-        | count(*) AS n_events,
-        | roundStable(sum(value), 4) AS sum_value
-        |FROM s GROUP BY user_id, session_n
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    "q63_hof_battery" ->
-      """SELECT vec_id,
-        | CAST(len(list_filter(embedding, x -> x > 0)) AS BIGINT) AS n_pos,
-        | roundStable(CAST(list_max(embedding) AS DOUBLE), 6) AS vmax,
-        | roundStable(CAST(list_min(embedding) AS DOUBLE), 6) AS vmin,
-        | roundStable(list_sum([CAST(x AS DOUBLE) FOR x IN embedding])
-        |   / CAST(len(embedding) AS DOUBLE), 6) AS vmean,
-        | roundStable(sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) FOR x IN embedding])), 6) AS l2
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "q60_text_normalize" ->
-      """WITH t AS (SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(lower(text),
-        |    'https?://[^ ]+', '<url>', 'g'),
-        |    '[a-z0-9.]+@[a-z0-9.]+', '<email>', 'g'),
-        |    '  +', ' ', 'g') AS norm_text
-        | FROM documents)
-        |SELECT doc_id, norm_text, CAST(length(norm_text) AS BIGINT) AS n_chars_norm
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    "q61_quality_filter" ->
-      """WITH t AS (SELECT doc_id, text, str_split(text, ' ') AS toks FROM documents),
-        |q AS (SELECT doc_id,
-        |  0.5 * least(1.0, CAST(len(toks) AS DOUBLE) / 50.0)
-        |   + 0.3 * (1.0 - CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / CAST(length(text) AS DOUBLE))
-        |   + 0.2 * (CAST(len(list_filter(toks, x -> x IN ('the','a'))) AS DOUBLE) / CAST(len(toks) AS DOUBLE)) AS quality,
-        |  CAST(len(list_filter(toks, x -> x IN ('the','a'))) AS BIGINT) AS s_en,
-        |  CAST(len(list_filter(toks, x -> x IN ('el','la','de','que'))) AS BIGINT) AS s_es,
-        |  CAST(len(list_filter(toks, x -> x IN ('的','是','了'))) AS BIGINT) AS s_zh,
-        |  CAST(len(toks) AS BIGINT) AS n_toks
-        | FROM t)
-        |SELECT doc_id, roundStable(quality, 6) AS quality, n_toks
-        |FROM q
-        |WHERE quality >= 0.5
-        |  AND s_en >= s_es AND s_en >= s_zh
-        |  AND n_toks BETWEEN 20 AND 150
-        |ORDER BY doc_id""".stripMargin,
-
-    "q56_tpch_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        | roundStable(sum(l_quantity), 4) AS sum_qty,
-        | roundStable(sum(l_extendedprice), 4) AS sum_base_price,
-        | roundStable(sum(l_extendedprice * (1.0 - l_discount)), 4) AS sum_disc_price,
-        | roundStable(sum(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)), 4) AS sum_charge,
-        | roundStable(avg(l_quantity), 6) AS avg_qty,
-        | roundStable(avg(l_extendedprice), 4) AS avg_price,
-        | roundStable(avg(l_discount), 6) AS avg_disc,
-        | count(*) AS n
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q57_promo_share" ->
-      """WITH j AS (
-        |  SELECT p_brand, p_type, l_extendedprice * (1.0 - l_discount) AS rev
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |a AS (
-        |  SELECT p_brand,
-        |    roundStable(sum(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0.0 END), 4) AS promo_rev,
-        |    roundStable(sum(rev), 4) AS total_rev,
-        |    count(*) AS n
-        |  FROM j GROUP BY p_brand)
-        |SELECT p_brand, promo_rev, total_rev, n,
-        | roundStable(promo_rev / total_rev, 6) AS promo_share
-        |FROM a ORDER BY p_brand""".stripMargin,
-
-    "q58_supplier_revenue" ->
-      """SELECT n_name,
-        | roundStable(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue,
-        | count(*) AS n_items
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    "q55_window_suite" ->
-      """SELECT o_custkey, o_orderkey,
-        | lag(o_totalprice, 1) OVER w AS prev_price,
-        | lead(o_totalprice, 1) OVER w AS next_price,
-        | CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        | roundStable(percent_rank() OVER w, 6) AS pct_rank,
-        | roundStable(cume_dist() OVER w, 6) AS cume
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q53_salted_agg" ->
-      """SELECT event_type,
-        | roundStable(CAST(sum(value) AS DOUBLE), 4) AS sum_value,
-        | count(*) AS n,
-        | roundStable(CAST(sum(value) AS DOUBLE) / count(*), 6) AS avg_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q54_asof_forward" ->
-      """SELECT e.event_id, CAST(min(o.o_orderdate) AS TIMESTAMP) AS asof_next
-        |FROM events e
-        |LEFT JOIN orders o ON o.o_custkey = e.user_id AND o.o_orderdate >= e.ts
-        |GROUP BY e.event_id ORDER BY e.event_id""".stripMargin,
-
-    "q50_interpolate_multi" ->
-      """WITH base AS (
-        |  SELECT event_id, user_id, ts,
-        |         CASE WHEN event_id % 37 = 0 THEN NULL ELSE value END AS v1,
-        |         CASE WHEN event_id % 29 = 0 THEN NULL
-        |              ELSE CAST(props->>'k' AS DOUBLE) END AS v2,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events
-        |), t AS (
-        |  SELECT event_id, v1, v2, rn,
-        |    last_value(v1 IGNORE NULLS) OVER wp AS pv1,
-        |    last_value(CASE WHEN v1 IS NOT NULL THEN rn END IGNORE NULLS) OVER wp AS pi1,
-        |    first_value(v1 IGNORE NULLS) OVER wn AS nv1,
-        |    first_value(CASE WHEN v1 IS NOT NULL THEN rn END IGNORE NULLS) OVER wn AS ni1,
-        |    last_value(v2 IGNORE NULLS) OVER wp AS pv2,
-        |    last_value(CASE WHEN v2 IS NOT NULL THEN rn END IGNORE NULLS) OVER wp AS pi2,
-        |    first_value(v2 IGNORE NULLS) OVER wn AS nv2,
-        |    first_value(CASE WHEN v2 IS NOT NULL THEN rn END IGNORE NULLS) OVER wn AS ni2
-        |  FROM base
-        |  WINDOW wp AS (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |         wn AS (PARTITION BY user_id ORDER BY rn ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-        |)
-        |SELECT event_id,
-        | roundStable(CASE
-        |  WHEN v1 IS NOT NULL THEN v1
-        |  WHEN pv1 IS NOT NULL AND nv1 IS NOT NULL AND rn - pi1 <= 3
-        |    THEN pv1 + (nv1 - pv1) * CAST(rn - pi1 AS DOUBLE) / CAST(ni1 - pi1 AS DOUBLE)
-        |  WHEN pv1 IS NOT NULL AND rn - pi1 <= 3 THEN pv1
-        |  ELSE NULL END, 6) AS value_interp,
-        | roundStable(CASE
-        |  WHEN v2 IS NOT NULL THEN v2
-        |  WHEN pv2 IS NOT NULL AND nv2 IS NOT NULL AND rn - pi2 <= 3
-        |    THEN pv2 + (nv2 - pv2) * CAST(rn - pi2 AS DOUBLE) / CAST(ni2 - pi2 AS DOUBLE)
-        |  WHEN pv2 IS NOT NULL AND rn - pi2 <= 3 THEN pv2
-        |  ELSE NULL END, 6) AS k2_interp
-        |FROM t ORDER BY event_id""".stripMargin,
-
-    "q86_incremental_cc" ->
-      """WITH RECURSIVE s AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh FROM sh),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |      CAST(count(*) AS DOUBLE) / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |    FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |    GROUP BY a.doc_id, b.doc_id) t
-        |  WHERE j >= 0.8),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT a AS node, a AS comp FROM (SELECT DISTINCT a FROM edges) t
-        |  UNION
-        |  SELECT e.a AS node, r.comp FROM edges e JOIN reach r ON e.b = r.node),
-        |comp AS (SELECT node, min(comp) AS cluster_id FROM reach GROUP BY node)
-        |SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id,
-        |  CAST(CASE WHEN coalesce(c.cluster_id, d.doc_id) = d.doc_id THEN 1 ELSE 0 END AS BIGINT) AS is_canonical
-        |FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q66_dedup_clusters" ->
-      """WITH RECURSIVE s AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh FROM sh),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |      CAST(count(*) AS DOUBLE) / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |    FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |    GROUP BY a.doc_id, b.doc_id) t
-        |  WHERE j >= 0.8),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT a AS node, a AS comp FROM (SELECT DISTINCT a FROM edges) t
-        |  UNION
-        |  SELECT e.a AS node, r.comp FROM edges e JOIN reach r ON e.b = r.node),
-        |comp AS (SELECT node, min(comp) AS cluster_id FROM reach GROUP BY node)
-        |SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id,
-        |  CAST(CASE WHEN coalesce(c.cluster_id, d.doc_id) = d.doc_id THEN 1 ELSE 0 END AS BIGINT) AS is_canonical
-        |FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q67_range_join" ->
-      """SELECT l.l_orderkey, CAST(l.l_linenumber AS BIGINT) AS l_linenumber,
-        |  count(*) AS n_recent_orders
-        |FROM lineitem l JOIN orders o
-        |  ON l.l_shipdate >= o.o_orderdate
-        | AND l.l_shipdate <= o.o_orderdate + INTERVAL 1 DAY
-        |WHERE l.l_shipdate >= TIMESTAMP '1995-03-01'
-        |  AND l.l_shipdate <= TIMESTAMP '1995-04-30'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q62_validate_sketch" ->
-      // exact columns computed exactly; sketch-accuracy verdicts asserted
-      // as literal 1s (the Spark side computes them from its sketches —
-      // a sketch drifting out of tolerance breaks the hash match)
-      """SELECT count(*) AS total_records,
-        | CAST(min(ts) AS TIMESTAMP) AS min_ts, CAST(max(ts) AS TIMESTAMP) AS max_ts,
-        | roundStable(avg(value), 4) AS avg_value,
-        | CAST(1 AS BIGINT) AS distinct_ok,
-        | CAST(1 AS BIGINT) AS q1_ok,
-        | CAST(1 AS BIGINT) AS median_ok,
-        | CAST(1 AS BIGINT) AS q3_ok
-        |FROM events""".stripMargin,
-
-    "q68_clip_approx" ->
-      // exact quartiles and derived clip bounds by value
-      // (quantile_cont ≡ Spark percentile); sketch verdicts as literal 1s
-      """SELECT event_type, count(value) AS n_rows,
-        | roundStable(quantile_cont(value, 0.25), 4) AS q1,
-        | roundStable(quantile_cont(value, 0.75), 4) AS q3,
-        | roundStable(quantile_cont(value, 0.25)
-        |   - 3.0 * (quantile_cont(value, 0.75) - quantile_cont(value, 0.25)), 4) AS lo,
-        | roundStable(quantile_cont(value, 0.75)
-        |   + 3.0 * (quantile_cont(value, 0.75) - quantile_cont(value, 0.25)), 4) AS hi,
-        | CAST(1 AS BIGINT) AS q1_ok,
-        | CAST(1 AS BIGINT) AS q3_ok,
-        | CAST(1 AS BIGINT) AS clip_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q69_cluster_star" ->
-      // identical closure oracle to q66 — the star transform must land on
-      // the same clusters as min-label propagation
-      """WITH RECURSIVE s AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh FROM sh),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |      CAST(count(*) AS DOUBLE) / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |    FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |    GROUP BY a.doc_id, b.doc_id) t
-        |  WHERE j >= 0.8),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT a AS node, a AS comp FROM (SELECT DISTINCT a FROM edges) t
-        |  UNION
-        |  SELECT e.a AS node, r.comp FROM edges e JOIN reach r ON e.b = r.node),
-        |comp AS (SELECT node, min(comp) AS cluster_id FROM reach GROUP BY node)
-        |SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id,
-        |  CAST(CASE WHEN coalesce(c.cluster_id, d.doc_id) = d.doc_id THEN 1 ELSE 0 END AS BIGINT) AS is_canonical
-        |FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q70_incremental_dedup" ->
-      // full exact-Jaccard recompute over corpus ∪ delta, restricted to
-      // pairs with a delta endpoint — what the O(delta) incremental join
-      // must reproduce exactly
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0),
-        |s AS (SELECT doc_id, str_split(text, ' ') AS w FROM docs),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh FROM sh)
-        |SELECT doc_a, doc_b, roundStable(j, 6) AS jaccard FROM (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(count(*) AS DOUBLE) / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id) t
-        |WHERE j >= 0.8 AND (doc_a >= 1000000 OR doc_b >= 1000000)
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q72_stream_dedup_fold" ->
-      // identical closure to q70: the streaming fold (run twice — the
-      // replay case) must land exactly the delta-restricted pair set in
-      // its batch directory
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0),
-        |s AS (SELECT doc_id, str_split(text, ' ') AS w FROM docs),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh FROM sh)
-        |SELECT doc_a, doc_b, roundStable(j, 6) AS jaccard FROM (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(count(*) AS DOUBLE) / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id) t
-        |WHERE j >= 0.8 AND (doc_a >= 1000000 OR doc_b >= 1000000)
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q38_embed_neardup" ->
-      // brute force over the SAME twin-augmented corpus — the oracle the
-      // LSH-bucketed registered plan must equal exactly
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id % 5 = 0),
-        |v AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM corpus)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  roundStable(list_sum([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)
-        |               FOR i IN range(1, len(a.embedding) + 1)]) / (a.nrm * b.nrm), 4) AS cosine
-        |FROM v a JOIN v b ON a.vec_id < b.vec_id
-        |WHERE list_sum([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)
-        |       FOR i IN range(1, len(a.embedding) + 1)]) / (a.nrm * b.nrm) >= 0.9
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q74_repetition" ->
-      """WITH t AS (SELECT doc_id, str_split(text,' ') AS toks FROM documents),
-        |b AS (SELECT doc_id, len(toks) AS n_toks, len(list_distinct(toks)) AS n_distinct,
-        |        unnest(list_transform(generate_series(1, len(toks)-1),
-        |          i -> toks[i] || ' ' || toks[i+1])) AS bg
-        |      FROM t),
-        |c AS (SELECT doc_id, n_toks, n_distinct, bg, count(*) AS cnt
-        |      FROM b GROUP BY 1,2,3,4)
-        |SELECT doc_id, CAST(n_toks AS BIGINT) AS n_toks,
-        |  CAST(max(cnt) AS BIGINT) AS top_bigram_cnt,
-        |  roundStable(max(cnt)*2.0/n_toks, 6) AS top_bigram_frac,
-        |  roundStable(CAST(n_distinct AS DOUBLE)/n_toks, 6) AS distinct_ratio
-        |FROM c GROUP BY doc_id, n_toks, n_distinct
-        |ORDER BY doc_id""".stripMargin,
-
-    "q75_domain_mix" ->
-      """WITH g AS (SELECT lang, count(*) AS n_docs,
-        |             sum(len(str_split(text,' '))) AS n_toks
-        |           FROM documents GROUP BY lang),
-        |w AS (SELECT lang, n_docs, n_toks,
-        |        CAST(n_toks AS DOUBLE)/sum(n_toks) OVER () AS share,
-        |        pow(CAST(n_toks AS DOUBLE)/sum(n_toks) OVER (), 0.5) AS raw_w
-        |      FROM g)
-        |SELECT lang, CAST(n_docs AS BIGINT) AS n_docs,
-        |  CAST(n_toks AS BIGINT) AS n_toks,
-        |  roundStable(share, 6) AS share,
-        |  roundStable(raw_w/sum(raw_w) OVER (), 6) AS mix_weight
-        |FROM w ORDER BY lang""".stripMargin,
-
-    "q76_chunk_windows" ->
-      """WITH t AS (SELECT doc_id, str_split(text,' ') AS toks FROM documents),
-        |n AS (SELECT doc_id, toks, len(toks) AS n,
-        |        CAST(ceil(greatest(len(toks)-32, 0)/24.0) AS INT)+1 AS n_chunks
-        |      FROM t),
-        |c AS (SELECT doc_id, unnest(generate_series(0, n_chunks-1)) AS cidx, toks, n
-        |      FROM n)
-        |SELECT doc_id, CAST(cidx AS INT) AS chunk_idx,
-        |  CAST(cidx*24 AS BIGINT) AS tok_start,
-        |  CAST(least(32, n - cidx*24) AS BIGINT) AS n_chunk_toks,
-        |  md5(array_to_string(toks[cidx*24+1 : cidx*24+32], ' ')) AS chunk_hash
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "q77_contamination" ->
-      """WITH t AS (SELECT doc_id, source, str_split(text,' ') AS toks FROM documents),
-        |sh AS (SELECT doc_id, source,
-        |         unnest(list_distinct(list_transform(generate_series(1, len(toks)-3),
-        |           i -> array_to_string(toks[i:i+3], ' ')))) AS sh
-        |       FROM t WHERE len(toks) >= 4),
-        |bench AS (SELECT DISTINCT sh FROM sh WHERE source = 'src0'),
-        |corpus AS (SELECT doc_id, sh FROM sh WHERE source <> 'src0'),
-        |j AS (SELECT c.doc_id, count(*) AS n_shingles,
-        |        sum(CASE WHEN b.sh IS NULL THEN 0 ELSE 1 END) AS n_hits
-        |      FROM corpus c LEFT JOIN bench b USING (sh) GROUP BY 1)
-        |SELECT doc_id, CAST(n_shingles AS BIGINT) AS n_shingles,
-        |  CAST(n_hits AS BIGINT) AS n_hits,
-        |  roundStable(CAST(n_hits AS DOUBLE)/n_shingles, 6) AS contamination,
-        |  n_hits > 0 AS contaminated
-        |FROM j ORDER BY doc_id""".stripMargin,
-
-    "q100_contamination_bloom" ->
-      // the bloom path must be BIT-IDENTICAL to q77: the filter only
-      // routes rows (no false negatives; positives confirmed exactly),
-      // so the oracle is the same exact-decontamination SQL
-      """WITH t AS (SELECT doc_id, source, str_split(text,' ') AS toks FROM documents),
-        |sh AS (SELECT doc_id, source,
-        |         unnest(list_distinct(list_transform(generate_series(1, len(toks)-3),
-        |           i -> array_to_string(toks[i:i+3], ' ')))) AS sh
-        |       FROM t WHERE len(toks) >= 4),
-        |bench AS (SELECT DISTINCT sh FROM sh WHERE source = 'src0'),
-        |corpus AS (SELECT doc_id, sh FROM sh WHERE source <> 'src0'),
-        |j AS (SELECT c.doc_id, count(*) AS n_shingles,
-        |        sum(CASE WHEN b.sh IS NULL THEN 0 ELSE 1 END) AS n_hits
-        |      FROM corpus c LEFT JOIN bench b USING (sh) GROUP BY 1)
-        |SELECT doc_id, CAST(n_shingles AS BIGINT) AS n_shingles,
-        |  CAST(n_hits AS BIGINT) AS n_hits,
-        |  roundStable(CAST(n_hits AS DOUBLE)/n_shingles, 6) AS contamination,
-        |  n_hits > 0 AS contaminated
-        |FROM j ORDER BY doc_id""".stripMargin,
-
-    "q101_epoch_shuffle" ->
-      // the epoch-salted width-safe Knuth hash replayed in pure int64
-      // arithmetic (epoch 1, 8 shards); doc_id >= 0 so % == pmod
-      """SELECT doc_id,
-        |  ((doc_id % 2147483648) * 2654435761 + 1 * 2246822519) % 2147483648 AS h,
-        |  CAST((((doc_id % 2147483648) * 2654435761 + 1 * 2246822519) % 2147483648) % 8 AS BIGINT) AS shard
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q102_fuzzy_match" ->
-      // the blocking CONTRACT replayed: length band [l_a, l_a+3] with
-      // the strict (length, lex) orientation, then exact levenshtein
-      """WITH n AS (SELECT DISTINCT p_name AS s FROM part WHERE p_name IS NOT NULL),
-        |l AS (SELECT s, length(s) AS len FROM n)
-        |SELECT a.s AS s_a, b.s AS s_b,
-        |  CAST(levenshtein(a.s, b.s) AS BIGINT) AS dist
-        |FROM l a JOIN l b
-        |  ON b.len BETWEEN a.len AND a.len + 3
-        | AND (a.len < b.len OR a.s < b.s)
-        |WHERE levenshtein(a.s, b.s) <= 3
-        |ORDER BY s_a, s_b""".stripMargin,
-
-    "q103_int8_quant" ->
-      // the quantization replayed element-wise: scale = 127/max|x|,
-      // code = floor(x*scale + 0.5) — deterministic arithmetic, no sums
-      // over nondeterministic order except the 64-element list folds
-      // (rounded at 6 digits on both sides)
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |s AS (SELECT vec_id, v,
-        |    CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
-        |         THEN 127.0 / list_max(list_transform(v, x -> abs(x)))
-        |         ELSE 0.0 END AS scale
-        |  FROM e),
-        |c AS (SELECT vec_id, v, scale,
-        |    list_transform(v, x -> CAST(floor(x * scale + 0.5) AS BIGINT)) AS codes
-        |  FROM s),
-        |r AS (SELECT vec_id, scale, codes,
-        |    list_transform(generate_series(1, len(v)), i ->
-        |      (v[i] - (CASE WHEN scale > 0 THEN codes[i] / scale ELSE 0.0 END))
-        |      * (v[i] - (CASE WHEN scale > 0 THEN codes[i] / scale ELSE 0.0 END))) AS errs
-        |  FROM c)
-        |SELECT vec_id, roundStable(scale, 6) AS scale_r,
-        |  CAST(len(codes) AS BIGINT) AS n_dims,
-        |  CAST(list_sum(codes) AS BIGINT) AS sum_codes,
-        |  CAST(list_min(codes) AS BIGINT) AS min_code,
-        |  CAST(list_max(codes) AS BIGINT) AS max_code,
-        |  roundStable(sqrt(list_sum(errs) / len(codes)), 6) AS rmse_r
-        |FROM r ORDER BY vec_id""".stripMargin,
-
-    "q104_bm25" ->
-      // BM25 with the Lucene idf, k1=1.2 b=0.75, queries = 4-token
-      // prefixes of the five lowest-id docs; identical fp expression
-      // tree as the Spark side (exact integer tf/df/dl/N inputs)
-      """WITH t AS (SELECT doc_id, str_split(text,' ') AS toks FROM documents),
-        |st AS (SELECT count(*) AS n_docs, sum(len(toks)) AS sum_dl FROM t),
-        |q AS (SELECT doc_id AS qid, toks[1:4] AS qtoks FROM t ORDER BY doc_id LIMIT 5),
-        |qt AS (SELECT qid, unnest(list_distinct(qtoks)) AS tok FROM q),
-        |qterms AS (SELECT DISTINCT tok FROM qt),
-        |dt AS (SELECT doc_id, unnest(toks) AS tok, len(toks) AS dl FROM t),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf, min(dl) AS dl
-        |       FROM dt JOIN qterms USING (tok) GROUP BY 1, 2),
-        |df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT qt.qid, tf.doc_id,
-        |         sum(ln(1 + (st.n_docs - df.df + 0.5) / (df.df + 0.5))
-        |             * tf.tf * (1.2 + 1)
-        |             / (tf.tf + 1.2 * ((1 - 0.75) + 0.75 *
-        |                 (tf.dl / (CAST(st.sum_dl AS DOUBLE) / st.n_docs))))) AS raw
-        |       FROM tf JOIN df USING (tok) JOIN qt USING (tok) CROSS JOIN st
-        |       GROUP BY 1, 2),
-        |rk AS (SELECT qid, doc_id, roundStable(raw, 6) AS score,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |           ORDER BY roundStable(raw, 6) DESC, doc_id) AS BIGINT) AS rank
-        |       FROM sc)
-        |SELECT qid, doc_id, score, rank FROM rk
-        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
-
-    "q109_group_sample" ->
-      // the hash-order quota replayed in int64 arithmetic
-      """WITH h AS (SELECT doc_id, source,
-        |    ((doc_id % 2147483648) * 2654435761) % 2147483648 AS hh
-        |  FROM documents),
-        |r AS (SELECT doc_id, source,
-        |    CAST(row_number() OVER (PARTITION BY source ORDER BY hh, doc_id) AS BIGINT) AS rk
-        |  FROM h)
-        |SELECT doc_id, source, rk FROM r WHERE rk <= 40 ORDER BY doc_id""".stripMargin,
-
-    "q106_pagerank" -> {
-      // the recurrence unrolled as 10 chained CTEs (a recursive CTE can
-      // reference the working table only once; the contribution join
-      // needs it twice) — identical fp expression tree as the operator
-      val iterCtes = (1 to 10).map { i =>
-        s"""r$i AS (SELECT nodes.node,
-           |        (CAST(1 AS DOUBLE) - 0.85) / st.n + 0.85 * coalesce(c.s, CAST(0 AS DOUBLE)) AS rank
-           |       FROM nodes CROSS JOIN st
-           |       LEFT JOIN (SELECT e.dst AS node, sum(r.rank / deg.deg) AS s
-           |                  FROM e JOIN r${i - 1} r ON e.src = r.node
-           |                  JOIN deg ON deg.node = e.src
-           |                  GROUP BY 1) c ON c.node = nodes.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-         |             's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-         |           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-         |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-         |nodes AS (SELECT DISTINCT src AS node FROM e),
-         |st AS (SELECT count(*) AS n FROM nodes),
-         |deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
-         |r0 AS (SELECT node, CAST(1 AS DOUBLE) / st.n AS rank FROM nodes CROSS JOIN st),
-         |$iterCtes
-         |SELECT node, roundStable(rank, 6) AS rank_r FROM r10 ORDER BY node""".stripMargin
-    },
-
-    "q376_pagerank_dangling" -> {
-      // the dangling-mass recurrence unrolled: per round, m = rank mass
-      // sitting on sinks (÷ n) as a scalar CTE, then the identical
-      // fp tree base + d·(contrib + m) the operator builds
-      val iterCtes = (1 to 10).map { i =>
-        s"""m$i AS MATERIALIZED (SELECT (SELECT coalesce(sum(rank), CAST(0 AS DOUBLE))
-           |          FROM r${i - 1} JOIN dang USING (node))
-           |         / (SELECT n FROM st) AS mn),
-           |r$i AS MATERIALIZED (SELECT nodes.node,
-           |        (CAST(1 AS DOUBLE) - 0.85) / st.n
-           |          + 0.85 * (coalesce(c.s, CAST(0 AS DOUBLE)) + m$i.mn) AS rank
-           |       FROM nodes CROSS JOIN st CROSS JOIN m$i
-           |       LEFT JOIN (SELECT e.dst AS node, sum(r.rank / deg.deg) AS s
-           |                  FROM e JOIN r${i - 1} r ON e.src = r.node
-           |                  JOIN deg ON deg.node = e.src
-           |                  GROUP BY 1) c ON c.node = nodes.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS MATERIALIZED (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-         |             's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-         |           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-         |nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         |st AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
-         |deg AS MATERIALIZED (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
-         |dang AS MATERIALIZED (SELECT nodes.node FROM nodes LEFT JOIN deg USING (node)
-         |         WHERE deg.deg IS NULL),
-         |r0 AS MATERIALIZED (SELECT node, CAST(1 AS DOUBLE) / st.n AS rank FROM nodes CROSS JOIN st),
-         |$iterCtes
-         |SELECT node, roundStable(rank, 6) AS rank_r FROM r10 ORDER BY node""".stripMargin
-    },
-
-    "q108_hard_negatives" ->
-      // q37's exact scan with the label inequality in the join
-      """WITH v AS (
-        |  SELECT vec_id, embedding, label,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                 FOR i IN range(1, len(q.embedding) + 1)]) / (q.nrm * c.nrm), 4) AS cosine
-        |  FROM v q JOIN v c ON q.vec_id < 10 AND q.label <> c.label)
-        |SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM (
-        |  SELECT p.*, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM p) t
-        |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    "q110_fuzzy_deletion" ->
-      // output contract of the deletion blocking: every unordered pair
-      // within d<=2, (length, lex)-oriented — brute force restricted to
-      // the lossless band
-      """WITH n AS (SELECT DISTINCT p_name AS s FROM part WHERE p_name IS NOT NULL),
-        |l AS (SELECT s, length(s) AS len FROM n)
-        |SELECT a.s AS s_a, b.s AS s_b,
-        |  CAST(levenshtein(a.s, b.s) AS BIGINT) AS dist
-        |FROM l a JOIN l b
-        |  ON b.len BETWEEN a.len AND a.len + 2
-        | AND (a.len < b.len OR a.s < b.s)
-        |WHERE levenshtein(a.s, b.s) <= 2
-        |ORDER BY s_a, s_b""".stripMargin,
-
-    "q111_scd2_merge" ->
-      // the SCD2 fold replayed: consecutive-dedupe per key, first
-      // surviving update collapsed against the '1-URGENT' open baseline,
-      // survivors chained by lead(), baseline closed at the first new
-      // version's valid_from
-      s"""SELECT cust, seg, valid_from, valid_to,
-         |  CAST(valid_to IS NULL AS BIGINT) AS cur
-         |FROM ($scd2DimSql) dim
-         |ORDER BY cust, valid_from""".stripMargin,
-
-    "q112_temporal_join" ->
-      // each order matched to the one half-open version interval covering
-      // its date — the dim fold shared verbatim with q111's oracle
-      s"""SELECT o.o_orderkey AS okey, d.cust, o.o_orderdate AS ts, d.seg
-         |FROM orders o JOIN ($scd2DimSql) d
-         |  ON o.o_custkey = d.cust
-         | AND o.o_orderdate >= d.valid_from
-         | AND (d.valid_to IS NULL OR o.o_orderdate < d.valid_to)
-         |ORDER BY okey""".stripMargin,
-
-    "q113_table_diff" ->
-      // the same drifted replica rebuilt, full-outer joined, statuses by
-      // presence flags, changed columns named via null-skipping concat_ws
-      """WITH a AS (SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
-        |           FROM orders),
-        |b AS (SELECT o_orderkey, o_custkey,
-        |        CASE WHEN o_orderkey % 101 = 0 THEN o_totalprice + 1.0
-        |             ELSE o_totalprice END AS o_totalprice,
-        |        o_orderstatus
-        |      FROM a WHERE o_orderkey % 97 <> 0
-        |      UNION ALL
-        |      SELECT o_orderkey + 10000000, o_custkey, o_totalprice,
-        |        o_orderstatus
-        |      FROM a WHERE o_orderkey % 103 = 0),
-        |j AS (SELECT coalesce(a.o_orderkey, b.o_orderkey) AS okey,
-        |        a.o_orderkey IS NULL AS only_b, b.o_orderkey IS NULL AS only_a,
-        |        a.o_custkey IS DISTINCT FROM b.o_custkey AS c1,
-        |        a.o_totalprice IS DISTINCT FROM b.o_totalprice AS c2,
-        |        a.o_orderstatus IS DISTINCT FROM b.o_orderstatus AS c3
-        |      FROM a FULL OUTER JOIN b ON a.o_orderkey = b.o_orderkey)
-        |SELECT okey,
-        |  CASE WHEN only_b THEN 'added' WHEN only_a THEN 'removed'
-        |       ELSE 'changed' END AS status,
-        |  CASE WHEN only_b OR only_a THEN ''
-        |       ELSE concat_ws(',', CASE WHEN c1 THEN 'o_custkey' END,
-        |              CASE WHEN c2 THEN 'o_totalprice' END,
-        |              CASE WHEN c3 THEN 'o_orderstatus' END) END AS cols
-        |FROM j WHERE only_b OR only_a OR c1 OR c2 OR c3
-        |ORDER BY okey""".stripMargin,
-
-    "q114_stratified_split" ->
-      // the hash-rank split replayed in int64 arithmetic + IEEE ceil
-      """WITH h AS (SELECT doc_id, lang,
-        |    ((doc_id % 2147483648) * 2654435761) % 2147483648 AS hh
-        |  FROM documents),
-        |r AS (SELECT doc_id, lang,
-        |    CAST(row_number() OVER (PARTITION BY lang ORDER BY hh, doc_id)
-        |      AS BIGINT) AS rk,
-        |    count(*) OVER (PARTITION BY lang) AS n
-        |  FROM h)
-        |SELECT doc_id, lang, rk,
-        |  -- CAST AS DOUBLE everywhere: DuckDB parses 0.8 as DECIMAL, but
-        |  -- the engine computes IEEE doubles; and the cumulative boundary
-        |  -- is the SUM (0.8 + 0.1 = 0.9000000000000001), never literal 0.9
-        |  CASE WHEN rk <= ceil(CAST(0.8 AS DOUBLE) * n) THEN 'train'
-        |       WHEN rk <= ceil((CAST(0.8 AS DOUBLE) + CAST(0.1 AS DOUBLE)) * n)
-        |         THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "q116_cdc_apply" ->
-      // the composition replayed: change feed as joins, tombstoned keys
-      // close the baseline, upserted keys close + reopen at the feed ts
-      """WITH a AS (SELECT c_custkey AS cust, c_mktsegment AS seg FROM customer),
-        |b AS (SELECT cust,
-        |        CASE WHEN cust % 11 = 0 THEN seg || '_V2' ELSE seg END AS seg
-        |      FROM a WHERE cust % 97 <> 0
-        |      UNION ALL
-        |      SELECT cust + 5000000, seg FROM a WHERE cust % 103 = 0),
-        |up AS (SELECT b.cust, b.seg FROM b LEFT JOIN a ON b.cust = a.cust
-        |       WHERE a.cust IS NULL OR a.seg <> b.seg),
-        |rem AS (SELECT a.cust FROM a LEFT JOIN b ON a.cust = b.cust
-        |        WHERE b.cust IS NULL),
-        |touched AS (SELECT cust FROM up UNION SELECT cust FROM rem)
-        |SELECT a.cust, a.seg, DATE '1990-01-01' AS valid_from,
-        |  CASE WHEN t.cust IS NOT NULL THEN DATE '2024-06-01' END AS valid_to,
-        |  CAST(t.cust IS NULL AS BIGINT) AS cur
-        |FROM a LEFT JOIN touched t ON a.cust = t.cust
-        |UNION ALL
-        |SELECT cust, seg, DATE '2024-06-01' AS valid_from,
-        |  CAST(NULL AS DATE) AS valid_to, CAST(1 AS BIGINT) AS cur
-        |FROM up
-        |ORDER BY cust, valid_from""".stripMargin,
-
-    "q117_interval_merge" ->
-      // the same sweep: break where start exceeds the running max end
-      // of strictly-preceding rows, islands = running break count
-      """WITH iv AS (SELECT user_id, ts AS s,
-        |              ts + INTERVAL 10 MINUTE AS e FROM events),
-        |m AS (SELECT user_id, s, e,
-        |        CASE WHEN s <= max(e) OVER (PARTITION BY user_id
-        |               ORDER BY s, e
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |             THEN 0 ELSE 1 END AS brk
-        |      FROM iv),
-        |g AS (SELECT user_id, s, e,
-        |        sum(brk) OVER (PARTITION BY user_id ORDER BY s, e
-        |          ROWS UNBOUNDED PRECEDING) AS island
-        |      FROM m)
-        |SELECT user_id, CAST(min(s) AS TIMESTAMP) AS start_ts,
-        |  CAST(max(e) AS TIMESTAMP) AS end_ts, count(*) AS n_events
-        |FROM g GROUP BY user_id, island
-        |ORDER BY user_id, start_ts""".stripMargin,
-
-    "q123_interval_gaps" ->
-      // islands first (identical sweep), then each island's end pairs
-      // with the NEXT island's start per user
-      """WITH iv AS (SELECT user_id, ts AS s,
-        |              ts + INTERVAL 10 MINUTE AS e FROM events),
-        |m AS (SELECT user_id, s, e,
-        |        CASE WHEN s <= max(e) OVER (PARTITION BY user_id
-        |               ORDER BY s, e
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |             THEN 0 ELSE 1 END AS brk
-        |      FROM iv),
-        |g AS (SELECT user_id, s, e,
-        |        sum(brk) OVER (PARTITION BY user_id ORDER BY s, e
-        |          ROWS UNBOUNDED PRECEDING) AS island
-        |      FROM m),
-        |isl AS (SELECT user_id, min(s) AS s, max(e) AS e
-        |        FROM g GROUP BY user_id, island),
-        |nx AS (SELECT user_id, CAST(e AS TIMESTAMP) AS gap_start,
-        |         CAST(lead(s) OVER (PARTITION BY user_id ORDER BY s)
-        |           AS TIMESTAMP) AS gap_end
-        |       FROM isl)
-        |SELECT * FROM nx WHERE gap_end IS NOT NULL
-        |ORDER BY user_id, gap_start""".stripMargin,
-
-    "q124_interval_coverage" ->
-      // sum of de-overlapped island spans in microseconds; BIGINT casts
-      // because DuckDB widens integer sums to HUGEINT
-      """WITH iv AS (SELECT user_id, ts AS s,
-        |              ts + INTERVAL 10 MINUTE AS e FROM events),
-        |m AS (SELECT user_id, s, e,
-        |        CASE WHEN s <= max(e) OVER (PARTITION BY user_id
-        |               ORDER BY s, e
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |             THEN 0 ELSE 1 END AS brk
-        |      FROM iv),
-        |g AS (SELECT user_id, s, e,
-        |        sum(brk) OVER (PARTITION BY user_id ORDER BY s, e
-        |          ROWS UNBOUNDED PRECEDING) AS island
-        |      FROM m),
-        |isl AS (SELECT user_id, min(s) AS s, max(e) AS e,
-        |          count(*) AS n FROM g GROUP BY user_id, island)
-        |SELECT user_id,
-        |  CAST(sum(epoch_us(e) - epoch_us(s)) AS BIGINT) AS covered_us,
-        |  count(*) AS n_islands, CAST(sum(n) AS BIGINT) AS n_rows
-        |FROM isl GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q125_psi_drift" ->
-      // identical binning: ref-side [lo, hi] fixes 10 equal-width bins,
-      // both sides clamp in, add-half smoothing (0.5·bins = 5.0)
-      """WITH t AS (SELECT event_type, value,
-        |             (day(ts) <= 15) AS ref FROM events),
-        |r AS (SELECT event_type, min(value) AS lo, max(value) AS hi
-        |      FROM t WHERE ref GROUP BY event_type),
-        |b AS (SELECT t.event_type,
-        |        CAST(least(greatest(CASE WHEN hi - lo <= 0 THEN 0
-        |          ELSE floor((value - lo) / (hi - lo) * 10) END, 0), 9)
-        |          AS BIGINT) AS bin,
-        |        ref
-        |      FROM t JOIN r ON t.event_type = r.event_type),
-        |c AS (SELECT event_type, bin,
-        |        sum(CASE WHEN ref THEN 1 ELSE 0 END) AS rc,
-        |        sum(CASE WHEN ref THEN 0 ELSE 1 END) AS cc
-        |      FROM b GROUP BY event_type, bin),
-        |w AS (SELECT event_type, rc, cc,
-        |        sum(rc) OVER (PARTITION BY event_type) AS nr,
-        |        sum(cc) OVER (PARTITION BY event_type) AS nc
-        |      FROM c)
-        |SELECT event_type,
-        |  roundStable(sum(((rc + 0.5) / (nr + 5.0) - (cc + 0.5) / (nc + 5.0))
-        |    * ln(((rc + 0.5) / (nr + 5.0)) / ((cc + 0.5) / (nc + 5.0)))), 6)
-        |    AS psi,
-        |  CAST(max(nr) AS BIGINT) AS n_ref, CAST(max(nc) AS BIGINT) AS n_cur
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q126_ks_drift" ->
-      // exact two-sample KS: group by value first (tie handling), then
-      // cumulative ECDFs per key and the max absolute gap
-      """WITH c AS (SELECT event_type, value AS v,
-        |        sum(CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END) AS ca,
-        |        sum(CASE WHEN day(ts) <= 15 THEN 0 ELSE 1 END) AS cb
-        |      FROM events GROUP BY event_type, value),
-        |w AS (SELECT event_type,
-        |        sum(ca) OVER (PARTITION BY event_type ORDER BY v
-        |          ROWS UNBOUNDED PRECEDING) AS cua,
-        |        sum(cb) OVER (PARTITION BY event_type ORDER BY v
-        |          ROWS UNBOUNDED PRECEDING) AS cub,
-        |        sum(ca) OVER (PARTITION BY event_type) AS na,
-        |        sum(cb) OVER (PARTITION BY event_type) AS nb
-        |      FROM c)
-        |SELECT event_type,
-        |  roundStable(max(abs(CAST(cua AS DOUBLE) / na
-        |    - CAST(cub AS DOUBLE) / nb)), 6) AS ks_d,
-        |  roundStable(max(abs(CAST(cua AS DOUBLE) / na
-        |      - CAST(cub AS DOUBLE) / nb))
-        |    * sqrt(CAST(max(na) AS DOUBLE) * max(nb)
-        |        / (max(na) + max(nb))), 6) AS ks_scaled,
-        |  CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q127_token_entropy" ->
-      // H = ln L − (Σ c·ln c)/L over each doc's own token counts
-      """WITH t AS (SELECT doc_id, unnest(str_split(text, ' ')) AS tok
-        |           FROM documents),
-        |c AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS c
-        |      FROM t GROUP BY doc_id, tok)
-        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-        |  count(*) AS n_types,
-        |  roundStable(count(*) / sum(c), 6) AS ttr,
-        |  roundStable(ln(sum(c)) - sum(c * ln(c)) / sum(c), 6) AS entropy
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q128_quantile_bins" ->
-      // ntile remainder semantics are standard SQL on both engines; the
-      // (value, event_id) tiebreak pins every row's bucket
-      """WITH t AS (SELECT event_type, value,
-        |    ntile(10) OVER (PARTITION BY event_type
-        |      ORDER BY value, event_id) AS bin
-        |  FROM events)
-        |SELECT event_type, CAST(bin AS BIGINT) AS bin, count(*) AS n,
-        |  min(value) AS lo, max(value) AS hi
-        |FROM t GROUP BY event_type, bin
-        |ORDER BY event_type, bin""".stripMargin,
-
-    "q129_triangles" ->
-      // identical degree-(deg, id) orientation so n_wedges (an
-      // orientation-dependent quantity) matches, not just the
-      // orientation-invariant triangle count
-      """WITH sp AS (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  WHERE l_quantity > 45),
-        |e AS (SELECT DISTINCT r1.sk AS a, r2.sk AS b
-        |      FROM sp r1 JOIN sp r2 ON r1.pk = r2.pk AND r1.sk < r2.sk),
-        |deg AS (SELECT v, count(*) AS deg FROM
-        |          (SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e) t
-        |        GROUP BY v),
-        |o AS (SELECT CASE WHEN da.deg < db.deg
-        |               OR (da.deg = db.deg AND e.a < e.b)
-        |             THEN e.a ELSE e.b END AS u,
-        |             CASE WHEN da.deg < db.deg
-        |               OR (da.deg = db.deg AND e.a < e.b)
-        |             THEN e.b ELSE e.a END AS w
-        |      FROM e JOIN deg da ON da.v = e.a JOIN deg db ON db.v = e.b),
-        |wed AS (SELECT x.u, x.w AS p, y.w AS q
-        |        FROM o x JOIN o y ON x.u = y.u AND x.w < y.w),
-        |cc AS (SELECT least(u, w) AS p, greatest(u, w) AS q FROM o)
-        |SELECT (SELECT count(*) FROM deg) AS n_nodes,
-        |  (SELECT count(*) FROM e) AS n_edges,
-        |  (SELECT count(*) FROM wed) AS n_wedges,
-        |  (SELECT count(*) FROM wed JOIN cc USING (p, q)) AS n_triangles""".stripMargin,
-
-    "q130_clustering_coef" ->
-      // triangle corners explode back out; every triangle credits all
-      // three vertices; coefficient = 2T / deg(deg−1)
-      """WITH sp AS (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  WHERE l_quantity > 45),
-        |e AS (SELECT DISTINCT r1.sk AS a, r2.sk AS b
-        |      FROM sp r1 JOIN sp r2 ON r1.pk = r2.pk AND r1.sk < r2.sk),
-        |deg AS (SELECT v, count(*) AS deg FROM
-        |          (SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e) t
-        |        GROUP BY v),
-        |o AS (SELECT CASE WHEN da.deg < db.deg
-        |               OR (da.deg = db.deg AND e.a < e.b)
-        |             THEN e.a ELSE e.b END AS u,
-        |             CASE WHEN da.deg < db.deg
-        |               OR (da.deg = db.deg AND e.a < e.b)
-        |             THEN e.b ELSE e.a END AS w
-        |      FROM e JOIN deg da ON da.v = e.a JOIN deg db ON db.v = e.b),
-        |wed AS (SELECT x.u, x.w AS p, y.w AS q
-        |        FROM o x JOIN o y ON x.u = y.u AND x.w < y.w),
-        |cc AS (SELECT least(u, w) AS p, greatest(u, w) AS q FROM o),
-        |tri AS (SELECT u, p, q FROM wed JOIN cc USING (p, q)),
-        |pv AS (SELECT v, count(*) AS n_triangles FROM
-        |         (SELECT u AS v FROM tri UNION ALL SELECT p FROM tri
-        |          UNION ALL SELECT q FROM tri) t
-        |       GROUP BY v)
-        |SELECT deg.v, deg.deg,
-        |  CAST(coalesce(pv.n_triangles, 0) AS BIGINT) AS n_triangles,
-        |  roundStable(CASE WHEN deg.deg >= 2
-        |    THEN 2.0 * coalesce(pv.n_triangles, 0)
-        |      / (deg.deg * (deg.deg - 1)) ELSE 0.0 END, 6)
-        |    AS clustering_coef
-        |FROM deg LEFT JOIN pv ON pv.v = deg.v ORDER BY deg.v""".stripMargin,
-
-    "q131_chi2_indep" ->
-      // chi2 over observed cells only, via the identity
-      // chi2 = n·(Σ o²/(rt·ct) − 1) — structural zeros need no dense
-      // cross of levels
-      """WITH cells AS (SELECT source AS a, lang AS b,
-        |        CAST(count(*) AS DOUBLE) AS o
-        |      FROM documents GROUP BY source, lang),
-        |m AS (SELECT a, b, o,
-        |        sum(o) OVER (PARTITION BY a) AS rt,
-        |        sum(o) OVER (PARTITION BY b) AS ct
-        |      FROM cells)
-        |SELECT
-        |  roundStable((sum(o * o / (rt * ct)) - 1.0) * sum(o), 6) AS chi2,
-        |  CAST((count(DISTINCT a) - 1) * (count(DISTINCT b) - 1) AS BIGINT)
-        |    AS dof,
-        |  roundStable(sqrt((sum(o * o / (rt * ct)) - 1.0)
-        |    / CAST(least(count(DISTINCT a), count(DISTINCT b)) - 1
-        |        AS DOUBLE)), 6) AS cramers_v,
-        |  CAST(sum(o) AS BIGINT) AS n
-        |FROM m""".stripMargin,
-
-    "q132_mannwhitney" ->
-      // exact average-rank ties (group by value first), tie-corrected
-      // normal approximation — identical fp sequence to the Spark side
-      """WITH c AS (SELECT event_type, value AS v,
-        |        sum(CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END) AS ca,
-        |        sum(CASE WHEN day(ts) <= 15 THEN 0 ELSE 1 END) AS cb
-        |      FROM events GROUP BY event_type, value),
-        |w AS (SELECT event_type, ca, cb, ca + cb AS t,
-        |        sum(ca + cb) OVER (PARTITION BY event_type ORDER BY v
-        |          ROWS UNBOUNDED PRECEDING) - (ca + cb) AS below,
-        |        sum(ca) OVER (PARTITION BY event_type) AS na,
-        |        sum(cb) OVER (PARTITION BY event_type) AS nb
-        |      FROM c),
-        |r AS (SELECT event_type,
-        |        (CAST(below AS DOUBLE) + CAST(t + 1 AS DOUBLE) / 2) * ca
-        |          AS ra,
-        |        t * t * t - t AS tie, na, nb
-        |      FROM w)
-        |SELECT event_type,
-        |  roundStable(sum(ra) - CAST(max(na) AS DOUBLE)
-        |    * (CAST(max(na) AS DOUBLE) + 1) / 2, 6) AS u_stat,
-        |  roundStable((sum(ra) - CAST(max(na) AS DOUBLE)
-        |      * (CAST(max(na) AS DOUBLE) + 1) / 2
-        |      - CAST(max(na) AS DOUBLE) * CAST(max(nb) AS DOUBLE) / 2)
-        |    / sqrt(CAST(max(na) AS DOUBLE) * CAST(max(nb) AS DOUBLE) / 12
-        |      * ((CAST(max(na) AS DOUBLE) + CAST(max(nb) AS DOUBLE) + 1)
-        |        - CAST(sum(tie) AS DOUBLE)
-        |          / ((CAST(max(na) AS DOUBLE) + CAST(max(nb) AS DOUBLE))
-        |            * (CAST(max(na) AS DOUBLE) + CAST(max(nb) AS DOUBLE)
-        |              - 1)))), 6) AS z,
-        |  CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b
-        |FROM r GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q133_benford" ->
-      // first significant digit by pure arithmetic; absent digits'
-      // expected mass folds in as (n − Σ_observed e)
-      """WITH t AS (SELECT event_type, abs(value) AS v FROM events
-        |           WHERE abs(value) > 0),
-        |d AS (SELECT event_type,
-        |        CAST(floor(v / pow(10.0, floor(log10(v)))) AS BIGINT) AS dg
-        |      FROM t),
-        |c AS (SELECT event_type, dg, CAST(count(*) AS DOUBLE) AS o
-        |      FROM d GROUP BY event_type, dg),
-        |w AS (SELECT event_type, dg, o,
-        |        sum(o) OVER (PARTITION BY event_type) AS n FROM c),
-        |e AS (SELECT event_type, o, n,
-        |        ln(1.0 + 1.0 / dg) / ln(10.0) * n AS ex FROM w)
-        |SELECT event_type,
-        |  roundStable(sum((o - ex) * (o - ex) / ex) + (max(n) - sum(ex)), 6)
-        |    AS benford_chi2,
-        |  CAST(max(n) AS BIGINT) AS n,
-        |  count(*) AS n_digits_seen
-        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q134_zipf_slope" ->
-      // rank dense by (freq desc, token); same population-moment OLS
-      // as q118
-      """WITH tok AS (SELECT source, unnest(str_split(text, ' ')) AS tok
-        |             FROM documents),
-        |c AS (SELECT source, tok, CAST(count(*) AS DOUBLE) AS freq
-        |      FROM tok GROUP BY source, tok),
-        |r AS (SELECT source,
-        |        ln(CAST(row_number() OVER (PARTITION BY source
-        |          ORDER BY freq DESC, tok) AS DOUBLE)) AS x,
-        |        ln(freq) AS y
-        |      FROM c)
-        |SELECT source,
-        |  roundStable(covar_pop(y, x) / var_pop(x), 6) AS slope,
-        |  roundStable(avg(y) - covar_pop(y, x) / var_pop(x) * avg(x), 6)
-        |    AS intercept,
-        |  roundStable(pow(corr(x, y), 2), 6) AS r2,
-        |  count(*) AS n
-        |FROM r GROUP BY source ORDER BY source""".stripMargin,
-
-    "q135_containment" ->
-      // same 3-gram shingle sets as q34; score = overlap / min size.
-      // The engine caps CANDIDATE GENERATION at maxDocFreq=1000 shared
-      // shingles (verification uses full sets) — mirrored here so both
-      // sides share candidate semantics: a pair qualifies only via a
-      // sub-cap shared shingle. No-op at this SF (500 docs < cap), load-
-      // bearing on a boilerplate-heavy corpus.
-      """WITH s AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s
-        |),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh FROM sh),
-        |capped AS (SELECT sh FROM ex GROUP BY sh
-        |           HAVING count(DISTINCT doc_id) <= 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |         FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |         WHERE a.sh IN (SELECT sh FROM capped)),
-        |v AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(max(a.n) AS BIGINT) AS n_a, CAST(max(b.n) AS BIGINT) AS n_b,
-        |    CAST(count(*) AS DOUBLE) / CAST(least(max(a.n), max(b.n)) AS DOUBLE) AS ct
-        |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id)
-        |SELECT id_a, id_b, n_a, n_b, roundStable(ct, 6) AS containment
-        |FROM v JOIN cand USING (id_a, id_b)
-        |WHERE ct >= 0.8 ORDER BY id_a, id_b""".stripMargin,
-
-    "q136_mad_outliers" ->
-      // two aggregation passes by necessity: deviation median depends
-      // on the location median
-      """WITH m AS (SELECT event_type, median(value) AS med
-        |           FROM events GROUP BY event_type),
-        |x AS (SELECT e.event_id, e.event_type, e.value, m.med
-        |      FROM events e JOIN m ON e.event_type = m.event_type),
-        |d AS (SELECT event_type, median(abs(value - med)) AS mad
-        |      FROM x GROUP BY event_type)
-        |SELECT x.event_id, x.event_type, x.value,
-        |  roundStable(x.med, 6) AS med,
-        |  roundStable(d.mad, 6) AS mad,
-        |  CAST(abs(x.value - x.med) > 3.5 * 1.4826 * d.mad AS BIGINT)
-        |    AS is_outlier,
-        |  CASE WHEN d.mad > 0
-        |    THEN roundStable(abs(x.value - x.med) / (1.4826 * d.mad), 4)
-        |  END AS robust_z
-        |FROM x JOIN d ON x.event_type = d.event_type
-        |ORDER BY event_id""".stripMargin,
-
-    "q137_kcore" -> {
-      // the same 6 peel rounds unrolled (the q106 discipline for
-      // iterative fixpoints): each round drops vertices of degree < 4
-      // from the previous round's edge set; the Spark side early-stops
-      // at the fixpoint, which by definition equals the unrolled result
-      // AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and
-      // each peel references the previous level ~5× — inlined, e6
-      // expands to 5^6 scans of the base tables (observed as an
-      // open-file explosion)
-      val peels = (0 until 6).map { i =>
-        s"""d$i AS MATERIALIZED (SELECT v, count(*) AS deg FROM
-           |          (SELECT a AS v FROM e$i UNION ALL SELECT b FROM e$i) t
-           |        GROUP BY v),
-           |e${i + 1} AS MATERIALIZED (SELECT a, b FROM e$i
-           |      WHERE a NOT IN (SELECT v FROM d$i WHERE deg < 4)
-           |        AND b NOT IN (SELECT v FROM d$i WHERE deg < 4))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH sp AS MATERIALIZED (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk
-         |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         |  WHERE l_quantity > 45),
-         |e0 AS MATERIALIZED (SELECT DISTINCT r1.sk AS a, r2.sk AS b
-         |       FROM sp r1 JOIN sp r2 ON r1.pk = r2.pk AND r1.sk < r2.sk),
-         |$peels
-         |SELECT v, count(*) AS core_deg FROM
-         |  (SELECT a AS v FROM e6 UNION ALL SELECT b FROM e6) t
-         |GROUP BY v ORDER BY v""".stripMargin
-    },
-
-    "q139_acf" ->
-      // corr skips null lead pairs on both engines
-      """WITH t AS (SELECT event_type, value AS v,
-        |    lead(value, 1) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS l1,
-        |    lead(value, 2) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS l2,
-        |    lead(value, 3) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS l3
-        |  FROM events)
-        |SELECT event_type,
-        |  roundStable(corr(v, l1), 6) AS acf_1,
-        |  roundStable(corr(v, l2), 6) AS acf_2,
-        |  roundStable(corr(v, l3), 6) AS acf_3,
-        |  count(*) AS n
-        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q140_transitions" ->
-      // last event per user has no successor and drops; the normalizing
-      // window rides the O(#states²) aggregated rows
-      """WITH t AS (SELECT event_type AS state,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS next
-        |  FROM events),
-        |c AS (SELECT state, next, count(*) AS n FROM t
-        |      WHERE next IS NOT NULL GROUP BY state, next)
-        |SELECT state, next, n,
-        |  roundStable(CAST(n AS DOUBLE)
-        |    / sum(n) OVER (PARTITION BY state), 6) AS p
-        |FROM c ORDER BY state, next""".stripMargin,
-
-    "q141_session_paths" ->
-      // same gap-sessionization as q45 (cumulative break flags), path
-      // order pinned by (ts, event_id)
-      """WITH s AS (SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-        |        OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |        > 1800000000 THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id
-        |        ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess
-        |      FROM s),
-        |p AS (SELECT user_id, sess,
-        |        string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-        |      FROM g GROUP BY user_id, sess)
-        |SELECT path, count(*) AS n_sessions FROM p GROUP BY path
-        |ORDER BY n_sessions DESC, path LIMIT 50""".stripMargin,
-
-    "q142_rrf_fusion" ->
-      // q104's BM25 CTEs verbatim + a distinct-term coverage ranking
-      // over the same query set; fusion = Σ 1/(60 + rank), re-ranked
-      """WITH t AS (SELECT doc_id, str_split(text,' ') AS toks FROM documents),
-        |st AS (SELECT count(*) AS n_docs, sum(len(toks)) AS sum_dl FROM t),
-        |q AS (SELECT doc_id AS qid, toks[1:4] AS qtoks FROM t ORDER BY doc_id LIMIT 5),
-        |qt AS (SELECT qid, unnest(list_distinct(qtoks)) AS tok FROM q),
-        |qterms AS (SELECT DISTINCT tok FROM qt),
-        |dt AS (SELECT doc_id, unnest(toks) AS tok, len(toks) AS dl FROM t),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf, min(dl) AS dl
-        |       FROM dt JOIN qterms USING (tok) GROUP BY 1, 2),
-        |df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT qt.qid, tf.doc_id,
-        |         sum(ln(1 + (st.n_docs - df.df + 0.5) / (df.df + 0.5))
-        |             * tf.tf * (1.2 + 1)
-        |             / (tf.tf + 1.2 * ((1 - 0.75) + 0.75 *
-        |                 (tf.dl / (CAST(st.sum_dl AS DOUBLE) / st.n_docs))))) AS raw
-        |       FROM tf JOIN df USING (tok) JOIN qt USING (tok) CROSS JOIN st
-        |       GROUP BY 1, 2),
-        |bm AS (SELECT qid, doc_id,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |           ORDER BY roundStable(raw, 6) DESC, doc_id) AS BIGINT) AS rank
-        |       FROM sc),
-        |cv AS (SELECT qt.qid, ddt.doc_id, count(*) AS n_matched
-        |       FROM (SELECT DISTINCT doc_id, tok FROM dt) ddt
-        |       JOIN qt USING (tok) GROUP BY 1, 2),
-        |cvr AS (SELECT qid, doc_id,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |           ORDER BY n_matched DESC, doc_id) AS BIGINT) AS rank
-        |       FROM cv),
-        |u AS (SELECT qid, doc_id, CAST(1.0 AS DOUBLE) / (60 + rank) AS c
-        |      FROM bm WHERE rank <= 10
-        |      UNION ALL
-        |      SELECT qid, doc_id, CAST(1.0 AS DOUBLE) / (60 + rank) AS c
-        |      FROM cvr WHERE rank <= 10),
-        |f AS (SELECT qid, doc_id, roundStable(sum(c), 6) AS rrf_score,
-        |        count(*) AS n_lists
-        |      FROM u GROUP BY qid, doc_id),
-        |r AS (SELECT qid, doc_id, rrf_score, n_lists,
-        |        CAST(row_number() OVER (PARTITION BY qid
-        |          ORDER BY rrf_score DESC, doc_id) AS BIGINT) AS rank
-        |      FROM f)
-        |SELECT qid, doc_id, rrf_score, n_lists, rank FROM r
-        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
-
-    "q150_hist_quantiles" ->
-      // exact percentiles + n for value comparison; the sketch
-      // verdicts are asserted literal 1s (estimates are bin-edge
-      // values — deterministic but engine-internal, never output raw)
-      """SELECT event_type, count(*) AS n,
-        |  roundStable(quantile_cont(value, 0.5), 6) AS p50_exact,
-        |  roundStable(quantile_cont(value, 0.9), 6) AS p90_exact,
-        |  CAST(1 AS BIGINT) AS p50_ok, CAST(1 AS BIGINT) AS p90_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q148_hopping" ->
-      // each event joins exactly two 2h/1h hopping windows: starts at
-      // its hour and the hour before — the UNION ALL replays Spark's
-      // window() assignment exactly
-      """WITH t AS (SELECT event_type, value,
-        |             date_trunc('hour', ts) AS h FROM events),
-        |u AS (SELECT event_type, value, h AS ws FROM t
-        |      UNION ALL
-        |      SELECT event_type, value, h - INTERVAL 1 HOUR AS ws FROM t)
-        |SELECT event_type, CAST(ws AS TIMESTAMP) AS w_start,
-        |  CAST(ws + INTERVAL 2 HOUR AS TIMESTAMP) AS w_end,
-        |  count(*) AS n, roundStable(avg(value), 6) AS avg_value
-        |FROM u GROUP BY event_type, ws
-        |ORDER BY event_type, w_start""".stripMargin,
-
-    "q149_ohlc" ->
-      // open/close by (ts, event_id) row order; all four outputs are
-      // exact data values — no rounding
-      """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    value,
-        |    row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-        |      ORDER BY ts, event_id) AS rf,
-        |    row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-        |      ORDER BY ts DESC, event_id DESC) AS rl
-        |  FROM events)
-        |SELECT event_type, CAST(bucket AS TIMESTAMP) AS bucket,
-        |  max(CASE WHEN rf = 1 THEN value END) AS open,
-        |  max(value) AS high, min(value) AS low,
-        |  max(CASE WHEN rl = 1 THEN value END) AS close,
-        |  count(*) AS n
-        |FROM b GROUP BY event_type, bucket
-        |ORDER BY event_type, bucket""".stripMargin,
-
-    "q146_hits" -> {
-      // 5 rounds unrolled (the q106 discipline); MATERIALIZED is
-      // load-bearing — each round references the previous ~3×
-      val rounds = (1 to 5).map { i =>
-        s"""ar$i AS MATERIALIZED (SELECT e.dst AS node, sum(h.h) AS a
-           |  FROM e JOIN h${i - 1} h ON e.src = h.node GROUP BY e.dst),
-           |an$i AS MATERIALIZED (SELECT node,
-           |  a / (SELECT sum(a) FROM ar$i) AS a FROM ar$i),
-           |hr$i AS MATERIALIZED (SELECT e.src AS node, sum(a.a) AS h
-           |  FROM e JOIN an$i a ON e.dst = a.node GROUP BY e.src),
-           |h$i AS MATERIALIZED (SELECT node,
-           |  h / (SELECT sum(h) FROM hr$i) AS h FROM hr$i)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS MATERIALIZED (SELECT DISTINCT o_custkey AS src,
-         |    l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |n AS MATERIALIZED (SELECT src AS node FROM e
-         |                   UNION SELECT dst FROM e),
-         |h0 AS MATERIALIZED (SELECT node, CAST(1.0 AS DOUBLE) AS h FROM n),
-         |$rounds
-         |SELECT n.node, roundStable(coalesce(h5.h, 0.0), 6) AS hub,
-         |  roundStable(coalesce(an5.a, 0.0), 6) AS authority
-         |FROM n LEFT JOIN h5 ON n.node = h5.node
-         |LEFT JOIN an5 ON n.node = an5.node
-         |ORDER BY n.node""".stripMargin
-    },
-
-    "q147_cooccur" ->
-      // canonical pairs once (a < b), symmetric expansion, cosine of
-      // binary basket-incidence vectors, rounded BEFORE the rank
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |p AS (SELECT x.it AS a, y.it AS c, count(*) AS n_ab
-        |      FROM b x JOIN b y ON x.bk = y.bk AND x.it < y.it
-        |      GROUP BY x.it, y.it HAVING count(*) >= 2),
-        |s AS (SELECT a, c, n_ab FROM p
-        |      UNION ALL SELECT c, a, n_ab FROM p),
-        |f AS (SELECT it, count(*) AS n FROM b GROUP BY it),
-        |sc AS (SELECT s.a AS item, s.c AS rec, s.n_ab,
-        |        roundStable(CAST(s.n_ab AS DOUBLE)
-        |          / sqrt(CAST(fa.n AS DOUBLE) * fc.n), 6) AS score
-        |      FROM s JOIN f fa ON fa.it = s.a JOIN f fc ON fc.it = s.c)
-        |SELECT item, rec, n_ab, score, CAST(rank AS BIGINT) AS rank FROM (
-        |  SELECT sc.*, row_number() OVER (PARTITION BY item
-        |    ORDER BY score DESC, rec) AS rank FROM sc) t
-        |WHERE rank <= 3 ORDER BY item, rank""".stripMargin,
-
-    "q144_mrl_topk" ->
-      // coarse = prefix-16 cosine rounded BEFORE the cut (identical
-      // over-fetch set across engines), then exact full-dim re-rank
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, 17)])) AS pnrm
-        |  FROM embeddings),
-        |pr AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    CASE WHEN q.pnrm * c.pnrm > 0 THEN
-        |      roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, 17)]) / (q.pnrm * c.pnrm), 6)
-        |    ELSE 0.0 END AS coarse,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                 FOR i IN range(1, len(q.embedding) + 1)]) / (q.nrm * c.nrm), 4) AS cosine
-        |  FROM v q JOIN v c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |cut AS (SELECT query_id, neighbor_id, cosine,
-        |          row_number() OVER (PARTITION BY query_id
-        |            ORDER BY coarse DESC, neighbor_id) AS arank
-        |        FROM pr)
-        |SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM (
-        |  SELECT query_id, neighbor_id, cosine,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM cut WHERE arank <= 20) t
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "q145_bq_topk" ->
-      // 32-bit sign-bit words via Σ bit·2^(32−i) (≡ the acc·2+bit fold,
-      // exact integers), Hamming = popcount(xor), 8× over-fetch, exact
-      // re-rank
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm,
-        |    CAST(list_sum([CASE WHEN embedding[i] > 0
-        |        THEN CAST(pow(2.0, 32 - i) AS BIGINT) ELSE 0 END
-        |      FOR i IN range(1, 33)]) AS BIGINT) AS w1,
-        |    CAST(list_sum([CASE WHEN embedding[i + 32] > 0
-        |        THEN CAST(pow(2.0, 32 - i) AS BIGINT) ELSE 0 END
-        |      FOR i IN range(1, 33)]) AS BIGINT) AS w2
-        |  FROM embeddings),
-        |pr AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    CAST(bit_count(xor(q.w1, c.w1)) + bit_count(xor(q.w2, c.w2))
-        |      AS BIGINT) AS hamming,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                 FOR i IN range(1, len(q.embedding) + 1)]) / (q.nrm * c.nrm), 4) AS cosine
-        |  FROM v q JOIN v c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |cut AS (SELECT query_id, neighbor_id, hamming, cosine,
-        |          row_number() OVER (PARTITION BY query_id
-        |            ORDER BY hamming ASC, neighbor_id) AS arank
-        |        FROM pr)
-        |SELECT query_id, neighbor_id, hamming, cosine,
-        |  CAST(rank AS BIGINT) AS rank FROM (
-        |  SELECT query_id, neighbor_id, hamming, cosine,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM cut WHERE arank <= 40) t
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "q143_cusum" ->
-      // the max(0, S+x) recursion via its running-drawdown closed form:
-      // S_t = P_t − min(0, min_{j≤t} P_j) — two cumulative windows per
-      // side, lower side substitutes −z. σ≤0 keys carry NULL z → every
-      // statistic folds to NULL (the "unmonitorable" contract); the
-      // drawdown floor is a null-safe CASE (NULL min ⇒ floor 0 ⇒ NULL−0
-      // stays NULL, matching Spark's null-skipping least)
-      """WITH st AS (SELECT event_type, avg(value) AS mu,
-        |              stddev_samp(value) AS sd
-        |            FROM events WHERE day(ts) <= 15 GROUP BY event_type),
-        |c AS (SELECT e.event_type, e.ts, e.event_id,
-        |        CASE WHEN st.sd > 0 THEN (e.value - st.mu) / st.sd END AS z
-        |      FROM events e JOIN st ON e.event_type = st.event_type
-        |      WHERE day(e.ts) > 15),
-        |p AS (SELECT event_type, ts, event_id,
-        |        sum(z - 0.5) OVER w AS pu,
-        |        sum(-z - 0.5) OVER w AS pl
-        |      FROM c
-        |      WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-        |        ROWS UNBOUNDED PRECEDING)),
-        |s AS (SELECT event_type, ts,
-        |        pu - CASE WHEN min(pu) OVER w < 0
-        |          THEN min(pu) OVER w ELSE 0.0 END AS su,
-        |        pl - CASE WHEN min(pl) OVER w < 0
-        |          THEN min(pl) OVER w ELSE 0.0 END AS sl
-        |      FROM p
-        |      WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-        |        ROWS UNBOUNDED PRECEDING))
-        |SELECT event_type,
-        |  CAST(sum(CASE WHEN su > 5.0 THEN 1
-        |    WHEN su IS NOT NULL THEN 0 END) AS BIGINT) AS n_alarms,
-        |  min(CASE WHEN su > 5.0 THEN ts END) AS first_alarm_at,
-        |  roundStable(max(su), 6) AS max_s,
-        |  CAST(sum(CASE WHEN sl > 5.0 THEN 1
-        |    WHEN sl IS NOT NULL THEN 0 END) AS BIGINT) AS n_alarms_lo,
-        |  min(CASE WHEN sl > 5.0 THEN ts END) AS first_alarm_lo_at,
-        |  roundStable(max(sl), 6) AS max_s_lo,
-        |  count(*) AS n_cur
-        |FROM s GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q151_cusum_twosided" ->
-      // identical plan with the −60 step planted from day 23 — the
-      // lower-side statistic must alarm, the upper stays quiet
-      """WITH ev AS (SELECT event_type, ts, event_id,
-        |        CASE WHEN day(ts) > 22 THEN value - 60.0 ELSE value END
-        |          AS value
-        |      FROM events),
-        |st AS (SELECT event_type, avg(value) AS mu,
-        |         stddev_samp(value) AS sd
-        |       FROM ev WHERE day(ts) <= 15 GROUP BY event_type),
-        |c AS (SELECT e.event_type, e.ts, e.event_id,
-        |        CASE WHEN st.sd > 0 THEN (e.value - st.mu) / st.sd END AS z
-        |      FROM ev e JOIN st ON e.event_type = st.event_type
-        |      WHERE day(e.ts) > 15),
-        |p AS (SELECT event_type, ts, event_id,
-        |        sum(z - 0.5) OVER w AS pu,
-        |        sum(-z - 0.5) OVER w AS pl
-        |      FROM c
-        |      WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-        |        ROWS UNBOUNDED PRECEDING)),
-        |s AS (SELECT event_type, ts,
-        |        pu - CASE WHEN min(pu) OVER w < 0
-        |          THEN min(pu) OVER w ELSE 0.0 END AS su,
-        |        pl - CASE WHEN min(pl) OVER w < 0
-        |          THEN min(pl) OVER w ELSE 0.0 END AS sl
-        |      FROM p
-        |      WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-        |        ROWS UNBOUNDED PRECEDING))
-        |SELECT event_type,
-        |  CAST(sum(CASE WHEN su > 5.0 THEN 1
-        |    WHEN su IS NOT NULL THEN 0 END) AS BIGINT) AS n_alarms,
-        |  min(CASE WHEN su > 5.0 THEN ts END) AS first_alarm_at,
-        |  roundStable(max(su), 6) AS max_s,
-        |  CAST(sum(CASE WHEN sl > 5.0 THEN 1
-        |    WHEN sl IS NOT NULL THEN 0 END) AS BIGINT) AS n_alarms_lo,
-        |  min(CASE WHEN sl > 5.0 THEN ts END) AS first_alarm_lo_at,
-        |  roundStable(max(sl), 6) AS max_s_lo,
-        |  count(*) AS n_cur
-        |FROM s GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q153_adamic_adar" ->
-      // the same wedge enumeration through capped-degree centers,
-      // existing edges anti-joined, aa ROUNDED before the rank cut
-      """WITH sp AS (SELECT DISTINCT l.l_suppkey AS sk, l.l_partkey AS pk
-        |      FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |      WHERE l.l_quantity > 48),
-        |e AS (SELECT r1.sk AS a, r2.sk AS b FROM sp r1 JOIN sp r2
-        |      ON r1.pk = r2.pk AND r1.sk < r2.sk GROUP BY 1, 2),
-        |deg AS (SELECT w, count(*) AS deg FROM
-        |        (SELECT a AS w FROM e UNION ALL SELECT b FROM e)
-        |      GROUP BY 1),
-        |adj AS (SELECT j.w, j.n, d.deg FROM
-        |        (SELECT a AS w, b AS n FROM e
-        |         UNION ALL SELECT b AS w, a AS n FROM e) j
-        |      JOIN deg d ON j.w = d.w WHERE d.deg <= 500),
-        |ps AS (SELECT x.n AS u, y.n AS v,
-        |        count(*) AS common_neighbors,
-        |        sum(1.0 / ln(x.deg)) AS aa_raw
-        |      FROM adj x JOIN adj y ON x.w = y.w AND x.n < y.n
-        |      GROUP BY 1, 2),
-        |pred AS (SELECT u, v, common_neighbors,
-        |        roundStable(aa_raw, 6) AS aa
-        |      FROM ps WHERE NOT EXISTS
-        |        (SELECT 1 FROM e WHERE e.a = ps.u AND e.b = ps.v)),
-        |bth AS (SELECT u, v, common_neighbors, aa FROM pred
-        |      UNION ALL
-        |      SELECT v AS u, u AS v, common_neighbors, aa FROM pred),
-        |r AS (SELECT u, v, common_neighbors, aa,
-        |        row_number() OVER (PARTITION BY u ORDER BY aa DESC, v)
-        |          AS rank
-        |      FROM bth)
-        |SELECT u, v, common_neighbors, aa, rank
-        |FROM r WHERE rank <= 5 ORDER BY u, rank""".stripMargin,
-
-    "q154_twap" ->
-      // step-hold weights from the series' lead; the last reading has a
-      // NULL weight and drops from both sums, but still counts in n and
-      // the plain mean
-      """WITH t AS (SELECT event_type, CAST(ts AS DATE) AS day, value,
-        |        (epoch_us(lead(ts) OVER (PARTITION BY event_type
-        |            ORDER BY ts, event_id)) - epoch_us(ts)) / 1e6 AS w
-        |      FROM events)
-        |SELECT event_type, day,
-        |  roundStable(sum(value * w) / sum(w), 6) AS twap,
-        |  roundStable(avg(value), 6) AS plain_avg,
-        |  roundStable(sum(w), 6) AS covered_secs,
-        |  count(*) AS n
-        |FROM t GROUP BY event_type, day
-        |ORDER BY event_type, day""".stripMargin,
-
-    "q155_gini" ->
-      // rank identity G = 2·Σ i·x_(i)/(n·Σx) − (n+1)/n over the
-      // (value, user_id)-ascending sort — ties share a value, so the
-      // tiebreak order cannot change the sum
-      """WITH c AS (SELECT event_type, user_id,
-        |        CAST(count(*) AS DOUBLE) AS n_events
-        |      FROM events GROUP BY 1, 2),
-        |r AS (SELECT event_type, n_events,
-        |        row_number() OVER (PARTITION BY event_type
-        |          ORDER BY n_events, user_id) AS i
-        |      FROM c)
-        |SELECT event_type,
-        |  roundStable(CASE WHEN sum(n_events) > 0 THEN
-        |    2.0 * sum(i * n_events) / (count(*) * sum(n_events))
-        |      - (count(*) + 1) / CAST(count(*) AS DOUBLE) END, 6) AS gini,
-        |  count(*) AS n,
-        |  roundStable(sum(n_events), 6) AS total
-        |FROM r GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q156_rate_drift" ->
-      // Poisson z over the same planted thinning; window hour-spans from
-      // the global extents, one conditional-count agg per key
-      """WITH ev AS (SELECT * FROM events WHERE NOT (event_type = 'error'
-        |        AND day(ts) > 15 AND event_id % 10 < 7)),
-        |sp AS (SELECT
-        |        (epoch_us(max(CASE WHEN day(ts) <= 15 THEN ts END)) -
-        |         epoch_us(min(CASE WHEN day(ts) <= 15 THEN ts END)))
-        |          / 3.6e9 AS hr,
-        |        (epoch_us(max(CASE WHEN day(ts) > 15 THEN ts END)) -
-        |         epoch_us(min(CASE WHEN day(ts) > 15 THEN ts END)))
-        |          / 3.6e9 AS hc
-        |      FROM ev),
-        |c AS (SELECT event_type,
-        |        sum(CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END) AS cr,
-        |        sum(CASE WHEN day(ts) > 15 THEN 1 ELSE 0 END) AS cc
-        |      FROM ev GROUP BY 1)
-        |SELECT event_type,
-        |  roundStable(CASE WHEN hr > 0 THEN cr / hr END, 6) AS ref_rate,
-        |  roundStable(CASE WHEN hc > 0 THEN cc / hc END, 6) AS cur_rate,
-        |  roundStable(CASE WHEN cr > 0 AND hr > 0 AND hc > 0
-        |    THEN cc / (cr / hr * hc) END, 6) AS rate_ratio,
-        |  roundStable(CASE WHEN cr > 0 AND hr > 0 AND hc > 0
-        |    THEN (cc - cr / hr * hc) / sqrt(cr / hr * hc) END, 6)
-        |    AS poisson_z,
-        |  CAST(cr AS BIGINT) AS n_ref, CAST(cc AS BIGINT) AS n_cur
-        |FROM c CROSS JOIN sp ORDER BY event_type""".stripMargin,
-
-    "q157_weighted_sample" ->
-      // the E-S selection key ln(u)/w replayed in int64+double
-      // arithmetic, rounded BEFORE the rank cut (q94 discipline)
-      """WITH s AS (SELECT doc_id, source, n_chars,
-        |    roundStable(ln((((doc_id % 2147483648) * 2654435761)
-        |        % 2147483648 + 0.5) / 2147483648.0)
-        |      / CAST(n_chars AS DOUBLE), 6) AS es
-        |  FROM documents WHERE n_chars > 0),
-        |r AS (SELECT doc_id, source, n_chars,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY es DESC, doc_id) AS BIGINT) AS rk
-        |  FROM s)
-        |SELECT doc_id, source, n_chars, rk FROM r
-        |WHERE rk <= 20 ORDER BY source, rk""".stripMargin,
-
-    "q158_rolling_corr" ->
-      // the identical moment formula over the identical trailing frame
-      // (not the engine's corr() — two engines, two small-n/zero-var
-      // conventions); warm-up rows excluded on both sides
-      """WITH t AS (SELECT l_suppkey, l_shipdate,
-        |        l_orderkey * 10 + l_linenumber AS tie,
-        |        CAST(l_extendedprice AS DOUBLE) AS x,
-        |        CAST(l_quantity AS DOUBLE) AS y
-        |      FROM lineitem WHERE l_suppkey <= 50),
-        |w AS (SELECT l_suppkey, l_shipdate, tie,
-        |        row_number() OVER win AS rn,
-        |        CAST(count(*) OVER winf AS DOUBLE) AS n,
-        |        sum(x) OVER winf AS sx, sum(y) OVER winf AS sy,
-        |        sum(x * y) OVER winf AS sxy,
-        |        sum(x * x) OVER winf AS sxx,
-        |        sum(y * y) OVER winf AS syy
-        |      FROM t
-        |      WINDOW win AS (PARTITION BY l_suppkey
-        |          ORDER BY l_shipdate, tie),
-        |        winf AS (PARTITION BY l_suppkey ORDER BY l_shipdate, tie
-        |          ROWS BETWEEN 19 PRECEDING AND CURRENT ROW))
-        |SELECT l_suppkey, l_shipdate, tie,
-        |  roundStable(CASE WHEN sqrt((n * sxx - sx * sx)
-        |      * (n * syy - sy * sy)) > 0
-        |    THEN (n * sxy - sx * sy) / sqrt((n * sxx - sx * sx)
-        |      * (n * syy - sy * sy)) END, 6) AS rolling_corr
-        |FROM w WHERE rn >= 20 ORDER BY l_suppkey, l_shipdate, tie""".stripMargin,
-
-    "q159_seasonal_naive" ->
-      // exact-hour self-joins against the hourly-mean series
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hh,
-        |        avg(value) AS v
-        |      FROM events GROUP BY 1, 2),
-        |j AS (SELECT c.event_type, c.v, p24.v AS v24, p1.v AS v1
-        |      FROM h c
-        |      LEFT JOIN h p24 ON p24.event_type = c.event_type
-        |        AND p24.hh + INTERVAL 24 HOUR = c.hh
-        |      LEFT JOIN h p1 ON p1.event_type = c.event_type
-        |        AND p1.hh + INTERVAL 1 HOUR = c.hh)
-        |SELECT event_type,
-        |  roundStable(avg(abs(v - v24)), 6) AS mae_24h,
-        |  roundStable(avg(abs(v - v1)), 6) AS mae_1h,
-        |  roundStable(CASE WHEN avg(abs(v - v1)) > 0
-        |    THEN avg(abs(v - v24)) / avg(abs(v - v1)) END, 6) AS mase24,
-        |  CAST(count(v24) AS BIGINT) AS n_24h,
-        |  CAST(count(v1) AS BIGINT) AS n_1h,
-        |  count(*) AS n_hours
-        |FROM j GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q160_asof_tolerance" ->
-      // latest in-horizon order per event (ties at the max date take the
-      // max price — the backward as-of convention), NULL beyond 7 days
-      """WITH j AS (SELECT e.event_id, o.o_totalprice,
-        |        row_number() OVER (PARTITION BY e.event_id
-        |          ORDER BY o.o_orderdate DESC, o.o_totalprice DESC) AS rn
-        |      FROM events e JOIN orders o ON o.o_custkey = e.user_id
-        |        AND o.o_orderdate <= e.ts
-        |        AND epoch_us(e.ts) - epoch_us(o.o_orderdate)
-        |          <= 604800000000)
-        |SELECT e2.event_id, j.o_totalprice AS asof_price
-        |FROM events e2 LEFT JOIN j
-        |  ON j.event_id = e2.event_id AND j.rn = 1
-        |ORDER BY e2.event_id""".stripMargin,
-
-    "q161_unpivot" ->
-      // melt replayed as a UNION ALL of the three metric columns
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |        roundStable(avg(value), 6) AS a,
-        |        max(value) AS mx, min(value) AS mn
-        |      FROM events GROUP BY 1)
-        |SELECT day, 'avg_value' AS metric, a AS metric_value FROM d
-        |UNION ALL SELECT day, 'max_value', mx FROM d
-        |UNION ALL SELECT day, 'min_value', mn FROM d
-        |ORDER BY day, metric""".stripMargin,
-
-    "q162_asof_nearest" ->
-      // global min |Δt| within tolerance; distance ties backward (fwd=0
-      // first), equal-time ties to the side's value convention (max
-      // backward / min forward — the q54/q160 contracts)
-      """WITH j AS (SELECT e.event_id, o.o_totalprice,
-        |        abs(epoch_us(e.ts) - epoch_us(o.o_orderdate)) AS ad,
-        |        CASE WHEN o.o_orderdate <= e.ts THEN 0 ELSE 1 END AS fwd
-        |      FROM events e JOIN orders o ON o.o_custkey = e.user_id
-        |        AND abs(epoch_us(e.ts) - epoch_us(o.o_orderdate))
-        |          <= 604800000000),
-        |r AS (SELECT event_id, o_totalprice,
-        |        row_number() OVER (PARTITION BY event_id ORDER BY ad, fwd,
-        |          CASE WHEN fwd = 0 THEN -o_totalprice
-        |               ELSE o_totalprice END) AS rn
-        |      FROM j)
-        |SELECT e2.event_id, r.o_totalprice AS near_price
-        |FROM events e2 LEFT JOIN r
-        |  ON r.event_id = e2.event_id AND r.rn = 1
-        |ORDER BY e2.event_id""".stripMargin,
-
-    "q163_label_prop" -> {
-      // 3 synchronous rounds unrolled (the q106/q146 feat): per round,
-      // per-node argmax of neighbor-label counts, ties to the min label
-      val roundCtes = (1 to 3).map { i =>
-        s"""l$i AS (SELECT n.node, coalesce(b.label, n.label) AS label
-           |      FROM l${i - 1} n LEFT JOIN (
-           |        SELECT e.src AS node, l.label,
-           |          row_number() OVER (PARTITION BY e.src
-           |            ORDER BY count(*) DESC, l.label) AS rn
-           |        FROM e JOIN l${i - 1} l ON l.node = e.dst
-           |        GROUP BY e.src, l.label) b
-           |      ON b.node = n.node AND b.rn = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-         |             's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-         |           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-         |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-         |nodes AS (SELECT DISTINCT src AS node FROM e),
-         |l0 AS (SELECT node, node AS label FROM nodes),
-         |$roundCtes
-         |SELECT node, label FROM l3 ORDER BY node""".stripMargin
-    },
-
-    "q164_theilsen" ->
-      // median of pairwise slopes over the hourly-mean series; x =
-      // epoch-hours as double on both engines, identical interpolation
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hh,
-        |        avg(value) AS v
-        |      FROM events GROUP BY 1, 2),
-        |hx AS (SELECT event_type, epoch_us(hh) / 3.6e9 AS x, v FROM h),
-        |p AS (SELECT a.event_type, (b.v - a.v) / (b.x - a.x) AS s
-        |      FROM hx a JOIN hx b ON b.event_type = a.event_type
-        |        AND b.x > a.x),
-        |sl AS (SELECT event_type, median(s) AS slope, count(*) AS np
-        |      FROM p GROUP BY 1)
-        |SELECT hx.event_type,
-        |  roundStable(max(sl.slope), 6) AS slope_per_hour,
-        |  roundStable(median(hx.v - sl.slope * hx.x), 6) AS intercept,
-        |  count(*) AS n_hours,
-        |  CAST(coalesce(max(sl.np), 0) AS BIGINT) AS n_pairs
-        |FROM hx LEFT JOIN sl ON sl.event_type = hx.event_type
-        |GROUP BY hx.event_type ORDER BY hx.event_type""".stripMargin,
-
-    "q165_vocab_coverage" ->
-      // top-500 vocab with the deterministic (tf DESC, token ASC)
-      // boundary cut, then per-doc OOV tallies
-      """WITH tok AS (SELECT doc_id, unnest(str_split(text, ' ')) AS t
-        |      FROM documents),
-        |v AS (SELECT t FROM (SELECT t, count(*) AS tf FROM tok
-        |      GROUP BY 1 ORDER BY tf DESC, t LIMIT 500)),
-        |j AS (SELECT tok.doc_id, tok.t,
-        |        CASE WHEN v.t IS NULL THEN 1 ELSE 0 END AS oov
-        |      FROM tok LEFT JOIN v ON v.t = tok.t)
-        |SELECT doc_id,
-        |  count(*) AS n_tokens,
-        |  CAST(sum(oov) AS BIGINT) AS n_oov,
-        |  roundStable(CAST(sum(oov) AS DOUBLE) / count(*), 6) AS oov_rate,
-        |  CAST(count(DISTINCT CASE WHEN oov = 1 THEN t END) AS BIGINT)
-        |    AS n_oov_types
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q166_name_match" ->
-      // DuckDB's built-in jaro_winkler_similarity replays the native
-      // expression; identical first-char blocking on both sides
-      """WITH n AS (SELECT DISTINCT p_name AS s FROM part
-        |      WHERE p_partkey <= 600)
-        |SELECT a.s AS s_a, b.s AS s_b,
-        |  roundStable(jaro_winkler_similarity(a.s, b.s), 6) AS jw
-        |FROM n a JOIN n b ON substr(a.s, 1, 1) = substr(b.s, 1, 1)
-        |  AND a.s < b.s
-        |WHERE roundStable(jaro_winkler_similarity(a.s, b.s), 6) >= 0.88
-        |ORDER BY s_a, s_b""".stripMargin,
-
-    "q167_trimmed_mean" ->
-      // interpolated exact quantile bounds (quantile_cont ≡ Spark's
-      // percentile), then conditional / clamped means over the same scan
-      """WITH b AS (SELECT event_type,
-        |        quantile_cont(value, 0.1) AS qlo,
-        |        quantile_cont(value, 0.9) AS qhi
-        |      FROM events GROUP BY 1)
-        |SELECT e.event_type,
-        |  roundStable(avg(value), 6) AS mean,
-        |  roundStable(avg(CASE WHEN value >= qlo AND value <= qhi
-        |    THEN value END), 6) AS trimmed_mean,
-        |  roundStable(avg(greatest(least(value, qhi), qlo)), 6)
-        |    AS winsor_mean,
-        |  roundStable(max(qlo), 6) AS q_lo,
-        |  roundStable(max(qhi), 6) AS q_hi,
-        |  count(value) AS n
-        |FROM events e JOIN b ON b.event_type = e.event_type
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
-
-    "q168_modularity" ->
-      // per-nation census over the symmetrized trade graph; x*x (not
-      // power()) for the null-model term, matching the engine
-      """WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-        |             's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-        |           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-        |lab AS (SELECT 'c' || CAST(c_custkey AS VARCHAR) AS node,
-        |          c_nationkey AS nat FROM customer
-        |        UNION ALL SELECT 's' || CAST(s_suppkey AS VARCHAR),
-        |          s_nationkey FROM supplier),
-        |el AS (SELECT ls.nat AS lsrc, ld.nat AS ldst FROM e
-        |       JOIN lab ls ON ls.node = e.src
-        |       JOIN lab ld ON ld.node = e.dst),
-        |m2 AS (SELECT count(*) AS m2 FROM el),
-        |d AS (SELECT lsrc AS label, count(*) AS dc FROM el GROUP BY 1),
-        |i AS (SELECT lsrc AS label, count(*) AS ic FROM el
-        |      WHERE lsrc = ldst GROUP BY 1),
-        |nn AS (SELECT nat AS label, count(*) AS n_nodes FROM lab GROUP BY 1)
-        |SELECT nn.label, nn.n_nodes,
-        |  CAST(coalesce(i.ic, 0) / 2 AS BIGINT) AS internal_edges,
-        |  CAST(coalesce(d.dc, 0) AS BIGINT) AS degree_sum,
-        |  roundStable(CAST(coalesce(i.ic, 0) AS DOUBLE) / m2.m2
-        |    - (CAST(coalesce(d.dc, 0) AS DOUBLE) / m2.m2)
-        |      * (CAST(coalesce(d.dc, 0) AS DOUBLE) / m2.m2), 6) AS q_contrib
-        |FROM nn LEFT JOIN d ON d.label = nn.label
-        |LEFT JOIN i ON i.label = nn.label CROSS JOIN m2
-        |ORDER BY nn.label""".stripMargin,
-
-    "q169_chunk_dedup" ->
-      // the same non-overlapping chunk geometry, keep-first via
-      // row_number, rebuild via ordered string_agg (NULLs skipped)
-      """WITH t AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
-        |ch AS (SELECT doc_id, i AS ci,
-        |        array_to_string(w[(i*8+1):(i*8+8)], ' ') AS chunk
-        |      FROM (SELECT doc_id, w,
-        |              unnest(range(0, greatest(
-        |                CAST(ceil(len(w) / 8.0) AS INT), 1))) AS i
-        |            FROM t)),
-        |r AS (SELECT doc_id, ci, chunk,
-        |        row_number() OVER (PARTITION BY doc_id, chunk
-        |          ORDER BY ci) AS rn
-        |      FROM ch)
-        |SELECT doc_id,
-        |  count(*) AS n_chunks,
-        |  CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_dup_chunks,
-        |  string_agg(CASE WHEN rn = 1 THEN chunk END, ' ' ORDER BY ci)
-        |    AS clean_text
-        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q170_sssp" -> {
-      // min-plus relaxation unrolled 4 rounds (the q106/q163 feat)
-      val roundCtes = (1 to 4).map { i =>
-        s"""d$i AS (SELECT node, min(dist) AS dist FROM (
-           |        SELECT node, dist FROM d${i - 1}
-           |        UNION ALL SELECT e.dst AS node, d.dist + 1 AS dist
-           |        FROM e JOIN d${i - 1} d ON d.node = e.src) GROUP BY 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-         |             's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-         |           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-         |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-         |d0 AS (SELECT DISTINCT 'c' || CAST(c_custkey AS VARCHAR) AS node,
-         |         CAST(0 AS BIGINT) AS dist
-         |       FROM customer WHERE c_nationkey = 0),
-         |$roundCtes
-         |SELECT node, CAST(dist AS BIGINT) AS dist FROM d4
-         |ORDER BY node""".stripMargin
-    },
-
-    "q171_jsd" ->
-      // the q125 binning verbatim; per-bin term
-      // (p·ln(p/m) + q·ln(q/m)) / 2 with m = (p+q)/2
-      """WITH t AS (SELECT event_type, value,
-        |             (day(ts) <= 15) AS ref FROM events),
-        |r AS (SELECT event_type, min(value) AS lo, max(value) AS hi
-        |      FROM t WHERE ref GROUP BY event_type),
-        |b AS (SELECT t.event_type,
-        |        CAST(least(greatest(CASE WHEN hi - lo <= 0 THEN 0
-        |          ELSE floor((value - lo) / (hi - lo) * 10) END, 0), 9)
-        |          AS BIGINT) AS bin,
-        |        ref
-        |      FROM t JOIN r ON t.event_type = r.event_type),
-        |c AS (SELECT event_type, bin,
-        |        sum(CASE WHEN ref THEN 1 ELSE 0 END) AS rc,
-        |        sum(CASE WHEN ref THEN 0 ELSE 1 END) AS cc
-        |      FROM b GROUP BY event_type, bin),
-        |w AS (SELECT event_type, rc, cc,
-        |        sum(rc) OVER (PARTITION BY event_type) AS nr,
-        |        sum(cc) OVER (PARTITION BY event_type) AS nc
-        |      FROM c),
-        |p AS (SELECT event_type,
-        |        (rc + 0.5) / (nr + 5.0) AS p,
-        |        (cc + 0.5) / (nc + 5.0) AS q,
-        |        nr, nc
-        |      FROM w)
-        |SELECT event_type,
-        |  roundStable(sum((p * ln(p / ((p + q) / 2))
-        |    + q * ln(q / ((p + q) / 2))) / 2), 6) AS jsd,
-        |  CAST(max(nr) AS BIGINT) AS n_ref, CAST(max(nc) AS BIGINT) AS n_cur
-        |FROM p GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q172_kaplan_meier" ->
-      // identical per-duration reduction, reverse-cumulative at-risk,
-      // exp(Σ ln(1−d/n)) survival with the zero-factor pin
-      """WITH u AS (SELECT user_id, min(ts) AS f, max(ts) AS l,
-        |        min(CASE WHEN event_type = 'error' THEN ts END) AS err
-        |      FROM events GROUP BY 1),
-        |s AS (SELECT user_id % 3 AS cohort,
-        |        date_diff('day', CAST(f AS DATE),
-        |          CAST(coalesce(err, l) AS DATE)) AS t,
-        |        (err IS NOT NULL) AS obs
-        |      FROM u),
-        |g AS (SELECT cohort, t,
-        |        sum(CASE WHEN obs THEN 1 ELSE 0 END) AS d,
-        |        sum(CASE WHEN obs THEN 0 ELSE 1 END) AS c
-        |      FROM s GROUP BY 1, 2),
-        |w AS (SELECT cohort, t, d, c,
-        |        sum(d + c) OVER (PARTITION BY cohort ORDER BY t
-        |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS n
-        |      FROM g),
-        |f AS (SELECT cohort, t, d, c, n,
-        |        1.0 - CAST(d AS DOUBLE) / n AS fac FROM w)
-        |SELECT cohort, t, CAST(n AS BIGINT) AS n_risk,
-        |  CAST(d AS BIGINT) AS n_events, CAST(c AS BIGINT) AS n_censored,
-        |  roundStable(CASE WHEN min(fac) OVER win <= 0 THEN 0.0
-        |    ELSE exp(sum(CASE WHEN fac > 0 THEN ln(fac) ELSE 0.0 END)
-        |      OVER win) END, 6) AS survival
-        |FROM f
-        |WINDOW win AS (PARTITION BY cohort ORDER BY t
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY cohort, t""".stripMargin,
-
-    "q173_ndcg" ->
-      // the q37 exact ranking verbatim at k=10, then the identical
-      // DCG / ideal-DCG expression trees (1/(ln(i+1)/ln 2) prefix sums)
-      """WITH v AS (
-        |  SELECT vec_id, embedding, label,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    q.label AS ql, c.label AS cl,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                 FOR i IN range(1, len(q.embedding) + 1)]) / (q.nrm * c.nrm), 4) AS cosine
-        |  FROM v q JOIN v c ON q.vec_id < 50 AND q.vec_id <> c.vec_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY cosine DESC, neighbor_id) AS rank FROM p),
-        |d AS (SELECT query_id,
-        |        sum(CASE WHEN cl = ql THEN 1.0 / (ln(rank + 1) / ln(2))
-        |          ELSE 0 END) AS dcg,
-        |        CAST(sum(CASE WHEN cl = ql THEN 1 ELSE 0 END) AS BIGINT)
-        |          AS n_rel_at_k
-        |      FROM r WHERE rank <= 10 GROUP BY 1),
-        |tot AS (SELECT label, count(*) AS tot FROM embeddings GROUP BY 1),
-        |q AS (SELECT e.vec_id AS query_id, t.tot - 1 AS rr
-        |      FROM embeddings e JOIN tot t ON t.label = e.label
-        |      WHERE e.vec_id < 50)
-        |SELECT q.query_id, coalesce(d.n_rel_at_k, 0) AS n_rel_at_k,
-        |  CAST(q.rr AS BIGINT) AS n_rel_corpus,
-        |  roundStable(CASE WHEN q.rr >= 1 THEN coalesce(d.dcg, 0)
-        |    / list_sum([1.0 / (ln(i + 1) / ln(2))
-        |        FOR i IN range(1, least(10, q.rr) + 1)]) END, 6) AS ndcg
-        |FROM q LEFT JOIN d ON d.query_id = q.query_id
-        |ORDER BY q.query_id""".stripMargin,
-
-    "q174_scalable_median" ->
-      // the oracle states the CONTRACT (exact interpolated median) —
-      // proving the histogram-narrowed two-pass is exact, not approximate
-      """SELECT event_type, roundStable(median(value), 6) AS median,
-        |  count(value) AS n
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q175_kfold" ->
-      // the idHash fold assignment replayed in int64 arithmetic
-      """WITH f AS (SELECT ((doc_id % 2147483648) * 2654435761)
-        |        % 2147483648 % 5 AS fold, n_chars, source
-        |      FROM documents)
-        |SELECT fold, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |  CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-        |FROM f GROUP BY 1 ORDER BY fold""".stripMargin,
-
-    "q177_assoc_rules" ->
-      // identical metric triple; lift filtered on the ROUNDED value
-      // (the q94 discipline)
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |      FROM lineitem),
-        |nb AS (SELECT count(DISTINCT bk) AS nb FROM b),
-        |p0 AS (SELECT x.it AS a, y.it AS c, count(*) AS n_ab
-        |      FROM b x JOIN b y ON y.bk = x.bk AND x.it < y.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 3),
-        |p AS (SELECT a, c, n_ab FROM p0
-        |      UNION ALL SELECT c, a, n_ab FROM p0),
-        |f AS (SELECT it, count(*) AS n FROM b GROUP BY 1)
-        |SELECT p.a AS antecedent, p.c AS consequent, p.n_ab,
-        |  roundStable(CAST(p.n_ab AS DOUBLE) / nb.nb, 6) AS support,
-        |  roundStable(CAST(p.n_ab AS DOUBLE) / fa.n, 6) AS confidence,
-        |  roundStable((CAST(p.n_ab AS DOUBLE) / fa.n)
-        |    / (CAST(fc.n AS DOUBLE) / nb.nb), 6) AS lift
-        |FROM p JOIN f fa ON fa.it = p.a JOIN f fc ON fc.it = p.c
-        |CROSS JOIN nb
-        |WHERE roundStable((CAST(p.n_ab AS DOUBLE) / fa.n)
-        |    / (CAST(fc.n AS DOUBLE) / nb.nb), 6) >= 2.0
-        |ORDER BY antecedent, consequent""".stripMargin,
-
-    "q178_skew_report" ->
-      // top-10 by (count DESC, key) with global share / mean factors
-      """WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
-        |t AS (SELECT sum(n) AS tt, count(*) AS kk, max(n) AS mx FROM c),
-        |r AS (SELECT user_id, n,
-        |        row_number() OVER (ORDER BY n DESC, user_id) AS rank
-        |      FROM c)
-        |SELECT user_id, CAST(rank AS BIGINT) AS rank, n,
-        |  roundStable(CAST(n AS DOUBLE) / tt, 6) AS share,
-        |  roundStable(CAST(n AS DOUBLE) / (CAST(tt AS DOUBLE) / kk), 6)
-        |    AS skew_factor,
-        |  roundStable(CAST(mx AS DOUBLE) / (CAST(tt AS DOUBLE) / kk), 6)
-        |    AS max_skew_factor
-        |FROM r CROSS JOIN t WHERE rank <= 10 ORDER BY rank""".stripMargin,
-
-    "q179_profile" ->
-      // per-column tallies replayed as a UNION ALL over the same scan
-      """WITH n AS (SELECT count(*) AS nr FROM events),
-        |u AS (
-        |  SELECT 'event_type' AS col_name, n.nr AS n_rows,
-        |    (SELECT count(*) FROM events WHERE event_type IS NULL) AS n_null,
-        |    (SELECT count(DISTINCT event_type) FROM events) AS n_distinct
-        |  FROM n
-        |  UNION ALL SELECT 'user_id', n.nr,
-        |    (SELECT count(*) FROM events WHERE user_id IS NULL),
-        |    (SELECT count(DISTINCT user_id) FROM events) FROM n
-        |  UNION ALL SELECT 'value', n.nr,
-        |    (SELECT count(*) FROM events WHERE value IS NULL),
-        |    (SELECT count(DISTINCT value) FROM events) FROM n
-        |  UNION ALL SELECT 'props', n.nr,
-        |    (SELECT count(*) FROM events WHERE props IS NULL),
-        |    (SELECT count(DISTINCT props) FROM events) FROM n)
-        |SELECT col_name AS "column", n_rows, n_null, n_distinct,
-        |  roundStable(CAST(n_null AS DOUBLE) / n_rows, 6) AS null_rate,
-        |  roundStable(CAST(n_distinct AS DOUBLE)
-        |    / greatest(n_rows - n_null, 1), 6) AS distinct_rate
-        |FROM u ORDER BY "column" """.stripMargin,
-
-    "q180_spearman" ->
-      // identical midrank (rank + (peers-1)/2) and product-moment trees
-      """WITH b AS (SELECT l_suppkey AS k, l_extendedprice AS x,
-        |        l_quantity AS y FROM lineitem WHERE l_suppkey <= 50),
-        |r AS (SELECT k,
-        |    CAST(rank() OVER (PARTITION BY k ORDER BY x) AS DOUBLE)
-        |      + (CAST(count(*) OVER (PARTITION BY k, x) AS DOUBLE) - 1) / 2
-        |      AS rx,
-        |    CAST(rank() OVER (PARTITION BY k ORDER BY y) AS DOUBLE)
-        |      + (CAST(count(*) OVER (PARTITION BY k, y) AS DOUBLE) - 1) / 2
-        |      AS ry
-        |  FROM b),
-        |m AS (SELECT k, count(*) AS n, sum(rx) AS sx, sum(ry) AS sy,
-        |    sum(rx * ry) AS sxy, sum(rx * rx) AS sxx, sum(ry * ry) AS syy
-        |  FROM r GROUP BY 1)
-        |SELECT k AS l_suppkey,
-        |  roundStable(CASE WHEN (n * sxx - sx * sx) * (n * syy - sy * sy) > 0
-        |    THEN (n * sxy - sx * sy)
-        |      / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)) END, 6)
-        |    AS spearman_rho,
-        |  CAST(n AS BIGINT) AS n
-        |FROM m ORDER BY l_suppkey""".stripMargin,
-
-    "q181_pettitt" ->
-      // U_t = 2*W_t - t*(n+1) over midranks, argmax with earliest-day
-      // tiebreak, the same 2*exp(-6K^2/(n^3+n^2)) significance
-      """WITH e AS (SELECT event_type AS k, CAST(ts AS DATE) AS b,
-        |    CASE WHEN event_type = 'error' AND day(ts) > 15
-        |      THEN value + 50 ELSE value END AS val FROM events),
-        |d AS (SELECT k, b, roundStable(avg(val), 6) AS v
-        |  FROM e GROUP BY 1, 2),
-        |r AS (SELECT k, b,
-        |    CAST(rank() OVER (PARTITION BY k ORDER BY v) AS DOUBLE)
-        |      + (CAST(count(*) OVER (PARTITION BY k, v) AS DOUBLE) - 1) / 2
-        |      AS rr,
-        |    CAST(count(*) OVER (PARTITION BY k) AS BIGINT) AS n,
-        |    CAST(row_number() OVER (PARTITION BY k ORDER BY b) AS DOUBLE)
-        |      AS t
-        |  FROM d),
-        |u AS (SELECT k, b, n, t,
-        |    2.0 * sum(rr) OVER (PARTITION BY k ORDER BY b
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      - t * (n + 1) AS uu
-        |  FROM r),
-        |f AS (SELECT *, row_number() OVER (PARTITION BY k
-        |      ORDER BY abs(uu) DESC, b) AS rk
-        |  FROM u WHERE t < n OR n = 1)
-        |SELECT k AS event_type,
-        |  CASE WHEN n >= 3 THEN b END AS change_at,
-        |  roundStable(CASE WHEN n >= 3 THEN abs(uu) END, 6) AS k_stat,
-        |  roundStable(CASE WHEN n >= 3 THEN least(
-        |    2.0 * exp(-6.0 * uu * uu / (CAST(n AS DOUBLE) * n * n
-        |      + CAST(n AS DOUBLE) * n)), 1.0) END, 6) AS p_value,
-        |  n AS n_buckets
-        |FROM f WHERE rk = 1 ORDER BY event_type""".stripMargin,
-
-    "q182_retrieval_eval" ->
-      // the q37 exact ranking verbatim at k=10, then the identical
-      // rr / P@i prefix-sum / AP trees
-      """WITH v AS (
-        |  SELECT vec_id, embedding, label,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    q.label AS ql, c.label AS cl,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |                 FOR i IN range(1, len(q.embedding) + 1)]) / (q.nrm * c.nrm), 4) AS cosine
-        |  FROM v q JOIN v c ON q.vec_id < 50 AND q.vec_id <> c.vec_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY cosine DESC, neighbor_id) AS rank FROM p),
-        |tk AS (SELECT query_id, rank,
-        |        CASE WHEN cl = ql THEN 1 ELSE 0 END AS rel
-        |      FROM r WHERE rank <= 10),
-        |c AS (SELECT query_id, rank, rel,
-        |        sum(rel) OVER (PARTITION BY query_id ORDER BY rank) AS cum
-        |      FROM tk),
-        |d AS (SELECT query_id, CAST(sum(rel) AS BIGINT) AS n_rel_at_k,
-        |        coalesce(max(CASE WHEN rel = 1 THEN 1.0 / rank END), 0.0)
-        |          AS rr,
-        |        sum(CASE WHEN rel = 1
-        |          THEN CAST(cum AS DOUBLE) / rank END) AS apsum
-        |      FROM c GROUP BY 1),
-        |tot AS (SELECT label, count(*) AS tot FROM embeddings GROUP BY 1),
-        |q AS (SELECT e.vec_id AS query_id, t.tot - 1 AS rc
-        |      FROM embeddings e JOIN tot t ON t.label = e.label
-        |      WHERE e.vec_id < 50)
-        |SELECT q.query_id, coalesce(d.n_rel_at_k, 0) AS n_rel_at_k,
-        |  CAST(q.rc AS BIGINT) AS n_rel_corpus,
-        |  roundStable(coalesce(d.rr, 0.0), 6) AS reciprocal_rank,
-        |  roundStable(coalesce(d.n_rel_at_k, 0) / 10.0, 6) AS precision_at_k,
-        |  roundStable(CASE WHEN q.rc >= 1 THEN
-        |    CAST(coalesce(d.n_rel_at_k, 0) AS DOUBLE) / q.rc END, 6)
-        |    AS recall_at_k,
-        |  roundStable(CASE WHEN q.rc >= 1 THEN coalesce(d.apsum, 0.0)
-        |    / least(10, q.rc) END, 6) AS ap_at_k
-        |FROM q LEFT JOIN d ON d.query_id = q.query_id
-        |ORDER BY q.query_id""".stripMargin,
-
-    "q183_dq_rules" ->
-      // each rule's violation count replayed as its own aggregate over
-      // one scan; uniqueness = count(*) - count(DISTINCT key)
-      """WITH a AS (SELECT
-        |    count(*) AS n,
-        |    count(*) FILTER (user_id IS NULL) AS v_nn,
-        |    count(*) FILTER (value IS NOT NULL
-        |      AND (value < 0.0 OR value > 100.0)) AS v_rng,
-        |    count(*) FILTER (event_type IS NOT NULL AND event_type
-        |      NOT IN ('click', 'view', 'purchase', 'signup')) AS v_set,
-        |    count(*) FILTER (props IS NOT NULL
-        |      AND NOT regexp_matches(props, '^\{.*\}$')) AS v_re,
-        |    count(*) - count(DISTINCT event_id) AS v_uq
-        |  FROM events),
-        |u AS (
-        |  SELECT 'not_null' AS rule, 'user_id' AS target, v_nn AS v, n FROM a
-        |  UNION ALL SELECT 'in_range', 'value', v_rng, n FROM a
-        |  UNION ALL SELECT 'in_set', 'event_type', v_set, n FROM a
-        |  UNION ALL SELECT 'matches_regex', 'props', v_re, n FROM a
-        |  UNION ALL SELECT 'unique', 'event_id', v_uq, n FROM a)
-        |SELECT rule, target, CAST(v AS BIGINT) AS n_violations,
-        |  CAST(n AS BIGINT) AS n_rows,
-        |  roundStable(CAST(v AS DOUBLE) / greatest(n, 1), 6)
-        |    AS violation_rate,
-        |  v = 0 AS passed
-        |FROM u ORDER BY rule, target""".stripMargin,
-
-    "q184_winnow" ->
-      // the identical packed (md5-prefix-hash, rightmost-pos) argmin:
-      // hex parsed digit-by-digit (exact below 2^53), same window frame
-      """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents
-        |      WHERE len(lower(text)) >= 8 AND len(lower(text)) < 1048576),
-        |g AS (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS pos FROM d),
-        |x AS (SELECT doc_id, pos, md5(substr(t, pos, 8)) AS hh FROM g),
-        |h AS (SELECT doc_id, pos,
-        |    CAST(list_sum([CAST((CASE WHEN unicode(hh[i]) >= 97
-        |        THEN unicode(hh[i]) - 87 ELSE unicode(hh[i]) - 48 END)
-        |        AS BIGINT) * 16 ** (10 - i) FOR i IN range(1, 11)])
-        |      AS BIGINT) * 1048576 + (1048576 - pos) AS packed
-        |  FROM x),
-        |s AS (SELECT doc_id, pos, min(packed) OVER (PARTITION BY doc_id
-        |        ORDER BY pos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-        |        AS sel FROM h),
-        |f AS (SELECT doc_id, count(DISTINCT sel) AS n_fp
-        |      FROM s WHERE pos >= 4 GROUP BY 1)
-        |SELECT d.doc_id AS doc, CAST(len(d.t) - 7 AS BIGINT) AS n_grams,
-        |  f.n_fp,
-        |  roundStable(CAST(f.n_fp AS DOUBLE)
-        |    / greatest(len(d.t) - 7 - 3, 1), 6) AS fp_density
-        |FROM d JOIN f ON f.doc_id = d.doc_id ORDER BY doc""".stripMargin,
-
-    "q185_winnow_pairs" ->
-      // the q184 selection replayed, then distinct (doc, hash), the
-      // same doc-freq cap, and the pair join
-      """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents
-        |      WHERE len(lower(text)) >= 8 AND len(lower(text)) < 1048576),
-        |g AS (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS pos FROM d),
-        |x AS (SELECT doc_id, pos, md5(substr(t, pos, 8)) AS hh FROM g),
-        |h AS (SELECT doc_id, pos,
-        |    CAST(list_sum([CAST((CASE WHEN unicode(hh[i]) >= 97
-        |        THEN unicode(hh[i]) - 87 ELSE unicode(hh[i]) - 48 END)
-        |        AS BIGINT) * 16 ** (10 - i) FOR i IN range(1, 11)])
-        |      AS BIGINT) * 1048576 + (1048576 - pos) AS packed
-        |  FROM x),
-        |s AS (SELECT doc_id, pos, min(packed) OVER (PARTITION BY doc_id
-        |        ORDER BY pos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-        |        AS sel FROM h),
-        |fp AS (SELECT DISTINCT doc_id, sel // 1048576 AS fh
-        |      FROM s WHERE pos >= 4),
-        |rare AS (SELECT fh FROM fp GROUP BY 1
-        |      HAVING count(DISTINCT doc_id) <= 1000),
-        |ix AS (SELECT fp.doc_id, fp.fh FROM fp JOIN rare USING (fh))
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  count(*) AS n_shared
-        |FROM ix a JOIN ix b ON a.fh = b.fh AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 40
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q186_kendall" ->
-      // same rounded monthly series, same pair enumeration; tau-b
-      // denominators are the unequal-pair counts from the SAME join
-      """WITH m AS (SELECT l_suppkey AS k,
-        |    date_trunc('month', l_shipdate) AS b,
-        |    roundStable(avg(l_extendedprice), 6) AS x,
-        |    roundStable(avg(l_quantity), 6) AS y
-        |  FROM lineitem WHERE l_suppkey <= 50 GROUP BY 1, 2),
-        |p AS (SELECT a.k,
-        |    sign(b.x - a.x) * sign(b.y - a.y) AS dxy,
-        |    CASE WHEN a.x <> b.x THEN 1 ELSE 0 END AS xne,
-        |    CASE WHEN a.y <> b.y THEN 1 ELSE 0 END AS yne
-        |  FROM m a JOIN m b ON a.k = b.k AND a.b < b.b)
-        |SELECT k AS l_suppkey,
-        |  roundStable(CASE WHEN sum(xne) > 0 AND sum(yne) > 0 THEN
-        |    CAST(sum(CASE WHEN dxy > 0 THEN 1 ELSE 0 END)
-        |       - sum(CASE WHEN dxy < 0 THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / sqrt(CAST(sum(xne) AS DOUBLE) * sum(yne)) END, 6) AS tau_b,
-        |  CAST(sum(CASE WHEN dxy > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_concordant,
-        |  CAST(sum(CASE WHEN dxy < 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_discordant,
-        |  count(*) AS n_pairs
-        |FROM p GROUP BY 1 ORDER BY l_suppkey""".stripMargin,
-
-    "q187_bh_fdr" ->
-      // the q181 per-user Pettitt battery (shift on every 10th user),
-      // then the BH step-up: rank window, suffix-min window, clamp
-      """WITH e AS (SELECT user_id AS k, CAST(ts AS DATE) AS b,
-        |    CASE WHEN user_id % 10 = 0 AND day(ts) > 15
-        |      THEN value + 80 ELSE value END AS val FROM events),
-        |d AS (SELECT k, b, roundStable(avg(val), 6) AS v
-        |  FROM e GROUP BY 1, 2),
-        |r AS (SELECT k, b,
-        |    CAST(rank() OVER (PARTITION BY k ORDER BY v) AS DOUBLE)
-        |      + (CAST(count(*) OVER (PARTITION BY k, v) AS DOUBLE) - 1) / 2
-        |      AS rr,
-        |    CAST(count(*) OVER (PARTITION BY k) AS BIGINT) AS n,
-        |    CAST(row_number() OVER (PARTITION BY k ORDER BY b) AS DOUBLE)
-        |      AS t
-        |  FROM d),
-        |u AS (SELECT k, b, n, t,
-        |    2.0 * sum(rr) OVER (PARTITION BY k ORDER BY b
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      - t * (n + 1) AS uu
-        |  FROM r),
-        |f AS (SELECT *, row_number() OVER (PARTITION BY k
-        |      ORDER BY abs(uu) DESC, b) AS rk
-        |  FROM u WHERE t < n OR n = 1),
-        |pt AS (SELECT k AS user_id,
-        |    roundStable(CASE WHEN n >= 3 THEN least(
-        |      2.0 * exp(-6.0 * uu * uu / (CAST(n AS DOUBLE) * n * n
-        |        + CAST(n AS DOUBLE) * n)), 1.0) END, 6) AS p_value
-        |  FROM f WHERE rk = 1),
-        |bh AS (SELECT user_id, p_value,
-        |    CAST(row_number() OVER (ORDER BY p_value, user_id) AS BIGINT)
-        |      AS rank,
-        |    count(*) OVER () AS m
-        |  FROM pt WHERE p_value IS NOT NULL),
-        |adj AS (SELECT user_id, p_value, rank,
-        |    roundStable(least(min(p_value * m / rank) OVER (
-        |      ORDER BY p_value DESC, user_id DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 1.0), 6)
-        |      AS q_value
-        |  FROM bh)
-        |SELECT user_id, p_value, rank, q_value, q_value <= 0.05 AS rejected
-        |FROM adj
-        |UNION ALL
-        |SELECT user_id, p_value, CAST(NULL AS BIGINT),
-        |  CAST(NULL AS DOUBLE), false
-        |FROM pt WHERE p_value IS NULL
-        |ORDER BY user_id""".stripMargin,
-
-    "q188_weighted_median" ->
-      // lower weighted median: smallest value whose cumulative weight
-      // reaches half the total; intra-tie row order is engine-free
-      // because min(v) only needs SOME row of the crossing value to
-      // qualify, and integral weights sum exactly
-      """WITH b AS (SELECT l_returnflag AS k, l_extendedprice AS v,
-        |    l_quantity AS w FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_quantity > 0),
-        |c AS (SELECT k, v,
-        |    sum(w) OVER (PARTITION BY k ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |    sum(w) OVER (PARTITION BY k) AS tw
-        |  FROM b)
-        |SELECT k AS l_returnflag, roundStable(min(v), 6) AS w_median,
-        |  roundStable(max(tw), 6) AS total_weight
-        |FROM c WHERE cw >= tw / 2 GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-
-    "q189_interval_overlap" ->
-      // the q45 sessionize replay per type, then the plain overlap
-      // predicate — the grid join's canonical-cell dedup must emit each
-      // overlapping pair exactly once
-      """WITH t AS (
-        |  SELECT user_id, event_type, ts, value, epoch_us(ts) AS tu,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id, event_type
-        |      ORDER BY ts, event_id) AS prev,
-        |    event_id
-        |  FROM events WHERE event_type IN ('click', 'error')),
-        |s AS (
-        |  SELECT user_id, event_type, ts,
-        |    CAST(sum(CASE WHEN prev IS NULL OR tu - prev > 21600000000
-        |      THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS session_n
-        |  FROM t),
-        |g AS (SELECT user_id, event_type, session_n,
-        |    CAST(min(ts) AS TIMESTAMP) AS st, CAST(max(ts) AS TIMESTAMP) AS en
-        |  FROM s GROUP BY 1, 2, 3)
-        |SELECT a.user_id, a.st AS start_l, a.en AS end_l,
-        |  b.st AS start_r, b.en AS end_r,
-        |  CAST(least(epoch_us(a.en), epoch_us(b.en))
-        |    - greatest(epoch_us(a.st), epoch_us(b.st)) AS BIGINT)
-        |    AS overlap_us
-        |FROM g a JOIN g b ON a.user_id = b.user_id
-        | AND a.event_type = 'click' AND b.event_type = 'error'
-        | AND epoch_us(a.st) <= epoch_us(b.en)
-        | AND epoch_us(b.st) <= epoch_us(a.en)
-        |ORDER BY a.user_id, start_l, start_r""".stripMargin,
-
-    "q190_ppr" -> {
-      // the q106 unroll with restart mass on the seed set only
-      val iterCtes = (1 to 5).map { i =>
-        s"""r$i AS (SELECT sv.node,
-           |        (CAST(1 AS DOUBLE) - 0.85) * sv.s + 0.85 * coalesce(c.s, CAST(0 AS DOUBLE)) AS rank
-           |       FROM sv
-           |       LEFT JOIN (SELECT e.dst AS node, sum(r.rank / deg.deg) AS s
-           |                  FROM e JOIN r${i - 1} r ON e.src = r.node
-           |                  JOIN deg ON deg.node = e.src
-           |                  GROUP BY 1) c ON c.node = sv.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-         |             's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-         |           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-         |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-         |nodes AS (SELECT DISTINCT src AS node FROM e),
-         |deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
-         |seeds AS (SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS node
-         |          FROM orders WHERE o_custkey <= 5),
-         |ns AS (SELECT count(*) AS n FROM seeds),
-         |sv AS (SELECT nodes.node,
-         |         CASE WHEN seeds.node IS NOT NULL
-         |           THEN CAST(1 AS DOUBLE) / ns.n ELSE CAST(0 AS DOUBLE) END AS s
-         |       FROM nodes CROSS JOIN ns
-         |       LEFT JOIN seeds ON seeds.node = nodes.node),
-         |r0 AS (SELECT node, s AS rank FROM sv),
-         |$iterCtes
-         |SELECT node, roundStable(rank, 6) AS rank_r FROM r5
-         |WHERE roundStable(rank, 6) > 0 ORDER BY node""".stripMargin
-    },
-
-    "q191_tfidf_top" ->
-      // the q44 scores, rounded, then the same (tfidf desc, term)
-      // row_number cut
-      """WITH terms AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(str_split(text, ' ')) AS term
-        |    FROM documents) t
-        |  GROUP BY doc_id, term),
-        |dfreq AS (SELECT term, count(*) AS df FROM terms GROUP BY term),
-        |nd AS (SELECT count(*) AS n_docs FROM documents),
-        |sc AS (SELECT doc_id, term, tf, df,
-        |    roundStable(CAST(tf AS DOUBLE)
-        |      * ln(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)), 6)
-        |      AS tfidf_r
-        |  FROM terms JOIN dfreq USING (term) CROSS JOIN nd)
-        |SELECT doc_id, term, tf, df, tfidf_r, rank FROM (
-        |  SELECT sc.*, CAST(row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY tfidf_r DESC, term) AS BIGINT) AS rank
-        |  FROM sc) t
-        |WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
-
-    "q192_ccf" ->
-      // hourly means per side, int64-micros lag alignment, the shared
-      // explicit-moment correlation per lag
-      """WITH hx AS (SELECT epoch_us(date_trunc('hour', ts)) AS h,
-        |    avg(value) AS x FROM events WHERE event_type = 'click'
-        |  GROUP BY 1),
-        |hy AS (SELECT epoch_us(date_trunc('hour', ts)) AS h,
-        |    avg(value) AS y FROM events WHERE event_type = 'purchase'
-        |  GROUP BY 1),
-        |lags AS (SELECT unnest(range(-6, 7)) AS lag),
-        |p AS (SELECT l.lag, hx.x, hy.y
-        |  FROM lags l JOIN hx ON true
-        |  JOIN hy ON hy.h = hx.h + l.lag * 3600000000)
-        |SELECT CAST(lag AS BIGINT) AS lag,
-        |  roundStable(CASE WHEN
-        |    (count(*) * sum(x*x) - sum(x) * sum(x))
-        |      * (count(*) * sum(y*y) - sum(y) * sum(y)) > 0 THEN
-        |    (count(*) * sum(x*y) - sum(x) * sum(y))
-        |    / sqrt((count(*) * sum(x*x) - sum(x) * sum(x))
-        |         * (count(*) * sum(y*y) - sum(y) * sum(y))) END, 6) AS ccf,
-        |  count(*) AS n_hours
-        |FROM p GROUP BY 1 ORDER BY lag""".stripMargin,
-
-    "q193_attribution" ->
-      // per-user window join, per-conversion touch count, 1/n credit,
-      // first/last position flags, orphan conversions via anti-join
-      """WITH c AS (SELECT user_id, event_id AS conv_id, ts AS conv_ts
-        |  FROM events WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, event_id AS touch_id, ts AS touch_ts
-        |  FROM events WHERE event_type = 'click'),
-        |m AS (SELECT c.user_id, c.conv_id, c.conv_ts, t.touch_id,
-        |    t.touch_ts
-        |  FROM c JOIN t ON t.user_id = c.user_id
-        |   AND epoch_us(t.touch_ts) <= epoch_us(c.conv_ts)
-        |   AND epoch_us(t.touch_ts) > epoch_us(c.conv_ts) - 604800000000),
-        |w AS (SELECT *, count(*) OVER (PARTITION BY conv_id) AS n_touches,
-        |    row_number() OVER (PARTITION BY conv_id
-        |      ORDER BY touch_ts, touch_id) AS rn
-        |  FROM m)
-        |SELECT user_id, conv_id, conv_ts, touch_id, touch_ts,
-        |  CAST(n_touches AS BIGINT) AS n_touches,
-        |  roundStable(1.0 / n_touches, 6) AS weight,
-        |  rn = 1 AS is_first, rn = n_touches AS is_last
-        |FROM w
-        |UNION ALL
-        |SELECT c.user_id, c.conv_id, c.conv_ts,
-        |  CAST(NULL AS BIGINT), CAST(NULL AS TIMESTAMP),
-        |  CAST(0 AS BIGINT), 1.0, false, false
-        |FROM c WHERE conv_id NOT IN (SELECT conv_id FROM m)
-        |ORDER BY conv_id, touch_id""".stripMargin,
-
-    "q194_band_join" ->
-      // the band replayed in integer cents — the SAME rounding the
-      // engine's cells use, so the boundary is exact on both sides
-      """SELECT a.o_orderkey AS key_a, b.o_orderkey AS key_b,
-        |  a.o_totalprice AS price_a, b.o_totalprice AS price_b,
-        |  roundStable(abs(a.o_totalprice - b.o_totalprice), 2) AS diff
-        |FROM orders a JOIN orders b
-        |  ON abs(CAST(round(a.o_totalprice * 100) AS BIGINT)
-        |       - CAST(round(b.o_totalprice * 100) AS BIGINT)) <= 100
-        | AND a.o_orderkey < b.o_orderkey
-        |ORDER BY key_a, key_b""".stripMargin,
-
-    "q195_pop" ->
-      // per-(flag, month) totals, prev month by CALENDAR arithmetic
-      """WITH t AS (SELECT l_returnflag AS k,
-        |    CAST(date_trunc('month', l_shipdate) AS DATE) AS period,
-        |    roundStable(sum(l_extendedprice), 6) AS value
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT t.k AS l_returnflag, t.period, t.value,
-        |  p.value AS prev_value,
-        |  roundStable(t.value - p.value, 6) AS delta,
-        |  roundStable(CASE WHEN p.value <> 0
-        |    THEN (t.value - p.value) / p.value * 100 END, 6) AS pct_change
-        |FROM t LEFT JOIN t p ON p.k = t.k
-        | AND p.period = CAST(t.period - INTERVAL 1 MONTH AS DATE)
-        |ORDER BY l_returnflag, t.period""".stripMargin,
-
-    "q196_golden" ->
-      // each rule replayed as its ordered pick: modal = (count, value)
-      // max, latest = (ts, value) max, peak = plain max
-      """WITH m AS (SELECT user_id, event_type FROM (
-        |    SELECT user_id, event_type, row_number() OVER (
-        |      PARTITION BY user_id
-        |      ORDER BY count(*) DESC, event_type DESC) AS rn
-        |    FROM events WHERE event_type IS NOT NULL
-        |    GROUP BY user_id, event_type) t WHERE rn = 1),
-        |l AS (SELECT user_id, props FROM (
-        |    SELECT user_id, props, row_number() OVER (
-        |      PARTITION BY user_id ORDER BY ts DESC, props DESC) AS rn
-        |    FROM events WHERE props IS NOT NULL) t WHERE rn = 1),
-        |g AS (SELECT user_id, max(value) AS value,
-        |    count(*) AS n_members FROM events GROUP BY 1)
-        |SELECT g.user_id, m.event_type, l.props, g.value, g.n_members
-        |FROM g LEFT JOIN m USING (user_id) LEFT JOIN l USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-
-    "q197_tail_risk" ->
-      // the same ceil(n·(1 − 0.95)) tail cut — (1 − 0.95) spelled as a
-      // SUBTRACTION on both sides so the fp literal is identical
-      """WITH b AS (SELECT event_type AS k, value AS v, event_id AS tie
-        |  FROM events WHERE value IS NOT NULL),
-        |r AS (SELECT k, v,
-        |    row_number() OVER (PARTITION BY k ORDER BY v DESC, tie DESC)
-        |      AS rn,
-        |    count(*) OVER (PARTITION BY k) AS n FROM b),
-        |t AS (SELECT k, v, n,
-        |    CAST(ceil(n * (1 - CAST(0.95 AS DOUBLE))) AS BIGINT) AS kk
-        |  FROM r WHERE rn <= ceil(n * (1 - CAST(0.95 AS DOUBLE))))
-        |SELECT k AS event_type, roundStable(min(v), 6) AS var_p,
-        |  roundStable(avg(v), 6) AS es_p,
-        |  max(kk) AS n_tail, max(n) AS n
-        |FROM t GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q198_decay" ->
-      // identical exp(ln2 · Δt/halflife) tree with ln 2 PINNED as a
-      // literal (libm ln is not correctly rounded across engines)
-      """WITH b AS (SELECT user_id, epoch_us(ts) AS tu, value FROM events),
-        |m AS (SELECT user_id, tu, value,
-        |    max(tu) OVER (PARTITION BY user_id) AS mx FROM b)
-        |SELECT user_id,
-        |  roundStable(sum(value * exp(0.6931471805599453
-        |    * (CAST(tu - mx AS DOUBLE) / 604800000000.0))), 6)
-        |    AS decayed_sum,
-        |  roundStable(sum(exp(0.6931471805599453
-        |    * (CAST(tu - mx AS DOUBLE) / 604800000000.0))), 6)
-        |    AS effective_n,
-        |  roundStable(sum(value), 6) AS plain_sum,
-        |  count(*) AS n
-        |FROM m GROUP BY 1 ORDER BY user_id""".stripMargin,
-
-    "q199_novelty" ->
-      // distinct trigrams per doc (the q34 shingle convention), global
-      // first-occurrence by min(doc_id), per-doc novel fraction
-      """WITH s AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
-        |sh0 AS (SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |      FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s WHERE len(w) >= 3),
-        |ex AS (SELECT doc_id, unnest(shingles) AS sh FROM sh0),
-        |f AS (SELECT sh, min(doc_id) AS fd FROM ex GROUP BY 1)
-        |SELECT e.doc_id, count(*) AS n_shingles,
-        |  CAST(sum(CASE WHEN f.fd = e.doc_id THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_novel,
-        |  roundStable(CAST(sum(CASE WHEN f.fd = e.doc_id THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / count(*), 6) AS novelty_rate
-        |FROM ex e JOIN f USING (sh) GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    "q200_target_encode" ->
-      // the identical LOO + smoothing expression tree
-      """WITH s AS (SELECT event_type, sum(value) AS sv,
-        |    count(value) AS nv FROM events GROUP BY 1),
-        |g AS (SELECT sum(value) / count(value) AS g FROM events)
-        |SELECT e.event_id, e.event_type,
-        |  roundStable(CASE WHEN e.value IS NOT NULL THEN
-        |    (s.sv - e.value + 10.0 * g.g) / (s.nv - 1 + 10.0) END, 6)
-        |    AS te
-        |FROM events e JOIN s USING (event_type) CROSS JOIN g
-        |ORDER BY event_id""".stripMargin,
-
-    "q201_label_confusion" ->
-      // long-form centroids (9dp-rounded means), label norms, dim-keyed
-      // pair dot products — the identical staging
-      """WITH x AS (SELECT label,
-        |    unnest([{'d': i, 'v': CAST(embedding[i] AS DOUBLE)}
-        |      FOR i IN range(1, len(embedding) + 1)]) AS s
-        |  FROM embeddings),
-        |e AS (SELECT label, s.d AS dim, s.v AS v FROM x),
-        |c AS (SELECT label, dim, roundStable(avg(v), 9) AS mu
-        |  FROM e GROUP BY 1, 2),
-        |n AS (SELECT label, sum(mu * mu) AS nn FROM c GROUP BY 1)
-        |SELECT a.label AS label_a, b.label AS label_b,
-        |  roundStable(sum(a.mu * b.mu)
-        |    / (sqrt(max(na.nn)) * sqrt(max(nb.nn))), 6) AS cosine
-        |FROM c a JOIN c b ON a.dim = b.dim AND a.label < b.label
-        |JOIN n na ON na.label = a.label JOIN n nb ON nb.label = b.label
-        |GROUP BY 1, 2 ORDER BY label_a, label_b""".stripMargin,
-
-    "q202_auc" ->
-      // the q132 midrank staging, closed by the AUC identity instead
-      // of the z statistic
-      """WITH c AS (SELECT user_id % 5 AS cohort, value AS v,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS ca,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 0 ELSE 1 END) AS cb
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT cohort, ca, cb, ca + cb AS t,
-        |    sum(ca + cb) OVER (PARTITION BY cohort ORDER BY v
-        |      ROWS UNBOUNDED PRECEDING) - (ca + cb) AS below,
-        |    sum(ca) OVER (PARTITION BY cohort) AS na,
-        |    sum(cb) OVER (PARTITION BY cohort) AS nb FROM c),
-        |r AS (SELECT cohort,
-        |    (CAST(below AS DOUBLE) + CAST(t + 1 AS DOUBLE) / 2) * ca AS ra,
-        |    na, nb FROM w)
-        |SELECT cohort,
-        |  roundStable(CASE WHEN max(na) > 0 AND max(nb) > 0 THEN
-        |    (sum(ra) - CAST(max(na) AS DOUBLE)
-        |      * (CAST(max(na) AS DOUBLE) + 1) / 2)
-        |    / (CAST(max(na) AS DOUBLE) * CAST(max(nb) AS DOUBLE)) END, 6)
-        |    AS auc,
-        |  CAST(max(na) AS BIGINT) AS n_pos, CAST(max(nb) AS BIGINT) AS n_neg
-        |FROM r GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "q203_calibration" ->
-      // identical rounded-score binning and per-bin means
-      """WITH b AS (SELECT
-        |    roundStable(least(value / 500, CAST(1 AS DOUBLE)), 9) AS s,
-        |    CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END AS y
-        |  FROM events WHERE value IS NOT NULL),
-        |g AS (SELECT CAST(least(floor(s * 10), 9) AS BIGINT) AS bin,
-        |    count(*) AS n, avg(s) AS conf, avg(y) AS acc FROM b GROUP BY 1),
-        |t AS (SELECT sum(n) AS tot FROM g)
-        |SELECT bin, n, roundStable(conf, 6) AS confidence,
-        |  roundStable(acc, 6) AS accuracy,
-        |  roundStable(CAST(n AS DOUBLE) / tot * abs(acc - conf), 6)
-        |    AS ece_term
-        |FROM g CROSS JOIN t ORDER BY bin""".stripMargin,
-
-    "q204_gains" ->
-      // the same (score desc, tie) rank and (rn-1)·parts DIV n buckets
-      """WITH b AS (SELECT
-        |    roundStable(least(value / 500, CAST(1 AS DOUBLE)), 9) AS s,
-        |    event_id AS tie,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events WHERE value IS NOT NULL),
-        |r AS (SELECT s, y, row_number() OVER (ORDER BY s DESC, tie) AS rn,
-        |    count(*) OVER () AS n FROM b),
-        |g AS (SELECT CAST((rn - 1) * 10 // n AS BIGINT) AS bucket,
-        |    count(*) AS n, sum(y) AS np FROM r GROUP BY 1),
-        |t AS (SELECT sum(n) AS tot, sum(np) AS totp FROM g),
-        |c AS (SELECT bucket, n, np, sum(np) OVER (ORDER BY bucket
-        |    ROWS UNBOUNDED PRECEDING) AS cump FROM g)
-        |SELECT c.bucket, c.n, CAST(c.np AS BIGINT) AS n_pos,
-        |  roundStable(CASE WHEN totp > 0
-        |    THEN CAST(cump AS DOUBLE) / totp END, 6) AS capture_rate,
-        |  roundStable(CASE WHEN totp > 0 THEN (CAST(np AS DOUBLE) / c.n)
-        |    / (CAST(totp AS DOUBLE) / tot) END, 6) AS lift
-        |FROM c CROSS JOIN t ORDER BY bucket""".stripMargin,
-
-    "q205_conformal" ->
-      // the ⌈(n+1)(1−α)⌉ order statistic with (1 − α) spelled as the
-      // same IEEE subtraction, then the odd-half coverage check
-      """WITH cal AS (SELECT event_type, value AS v, event_id AS tie
-        |  FROM events WHERE event_id % 2 = 0 AND value IS NOT NULL),
-        |r AS (SELECT event_type, v,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY v, tie)
-        |      AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n FROM cal),
-        |k AS (SELECT event_type, v, rn, n,
-        |    CAST(ceil((n + 1) * (1 - CAST(0.1 AS DOUBLE))) AS BIGINT) AS kk
-        |  FROM r),
-        |th AS (SELECT event_type,
-        |    roundStable(min(CASE WHEN kk <= n THEN v END), 6) AS qhat,
-        |    CAST(max(n) AS BIGINT) AS n_cal,
-        |    roundStable(max(CAST(kk AS DOUBLE) / (n + 1)), 6) AS gcov
-        |  FROM k WHERE rn = least(kk, n) GROUP BY 1),
-        |te AS (SELECT event_type, value FROM events WHERE event_id % 2 = 1)
-        |SELECT te.event_type, th.qhat, th.n_cal,
-        |  th.gcov AS guaranteed_cov, count(*) AS n_test,
-        |  roundStable(avg(CASE WHEN te.value <= th.qhat
-        |    THEN 1.0 ELSE 0.0 END), 6) AS test_cov
-        |FROM te JOIN th USING (event_type)
-        |GROUP BY 1, 2, 3, 4 ORDER BY te.event_type""".stripMargin,
-
-    "q206_assortativity" ->
-      // endpoint degrees over the symmetrized edge list, explicit
-      // moment Pearson
-      """WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-        |    's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-        |deg AS (SELECT src AS node, count(*) AS d FROM e GROUP BY 1),
-        |x AS (SELECT CAST(dj.d AS DOUBLE) AS x, CAST(dk.d AS DOUBLE) AS y
-        |  FROM e JOIN deg dj ON dj.node = e.src
-        |  JOIN deg dk ON dk.node = e.dst)
-        |SELECT roundStable(CASE WHEN
-        |    (count(*) * sum(x*x) - sum(x) * sum(x))
-        |      * (count(*) * sum(y*y) - sum(y) * sum(y)) > 0 THEN
-        |    (count(*) * sum(x*y) - sum(x) * sum(y))
-        |    / sqrt((count(*) * sum(x*x) - sum(x) * sum(x))
-        |         * (count(*) * sum(y*y) - sum(y) * sum(y))) END, 6)
-        |    AS assortativity,
-        |  count(*) AS n_edges
-        |FROM x""".stripMargin,
-
-    "q207_twonn" ->
-      // identical squared-norm/dot euclidean tree, rounded distances,
-      // (d, cid) rank, the n/Σln(μ) MLE
-      """WITH v AS (SELECT vec_id, embedding,
-        |    list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(embedding) + 1)]) AS nsq
-        |  FROM embeddings),
-        |p AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-        |    roundStable(sqrt(greatest(q.nsq + c.nsq
-        |      - 2.0 * list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |          FOR i IN range(1, len(q.embedding) + 1)]),
-        |      CAST(0 AS DOUBLE))), 6) AS d
-        |  FROM v q JOIN v c ON q.vec_id % 10 = 0 AND q.vec_id <> c.vec_id),
-        |r AS (SELECT qid, cid, d,
-        |    row_number() OVER (PARTITION BY qid ORDER BY d, cid) AS rn
-        |  FROM p),
-        |nn AS (SELECT qid, min(CASE WHEN rn = 1 THEN d END) AS r1,
-        |    min(CASE WHEN rn = 2 THEN d END) AS r2
-        |  FROM r WHERE rn <= 2 GROUP BY 1),
-        |s AS (SELECT CASE WHEN r1 > 0 THEN ln(r2 / r1) END AS lnmu FROM nn)
-        |SELECT CAST(sum(CASE WHEN lnmu IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_used,
-        |  CAST(sum(CASE WHEN lnmu IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_dropped_dup,
-        |  roundStable(sum(lnmu), 6) AS sum_ln_mu,
-        |  roundStable(CAST(sum(CASE WHEN lnmu IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / sum(lnmu), 6) AS id_hat
-        |FROM s""".stripMargin,
-
-    "q208_scalable_quantile" ->
-      // the CONTRACT (exact continuous quantile) — proving the
-      // histogram-narrowed two-pass exact, not approximate
-      """SELECT event_type,
-        |  roundStable(quantile_cont(value, 0.99), 6) AS quantile,
-        |  count(value) AS n
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q209_density_ratio" ->
-      // the q125 binning replay closed by p/q instead of the PSI term
-      """WITH t AS (SELECT event_type, value,
-        |    (day(ts) <= 15) AS ref FROM events),
-        |r AS (SELECT event_type, min(value) AS lo, max(value) AS hi
-        |  FROM t WHERE ref GROUP BY event_type),
-        |b AS (SELECT t.event_type, r.lo, r.hi,
-        |    CAST(least(greatest(CASE WHEN hi - lo <= 0 THEN 0
-        |      ELSE floor((value - lo) / (hi - lo) * 10) END, 0), 9)
-        |      AS BIGINT) AS bin,
-        |    ref
-        |  FROM t JOIN r ON t.event_type = r.event_type),
-        |c AS (SELECT event_type, bin, min(lo) AS lo, min(hi) AS hi,
-        |    sum(CASE WHEN ref THEN 1 ELSE 0 END) AS rc,
-        |    sum(CASE WHEN ref THEN 0 ELSE 1 END) AS cc
-        |  FROM b GROUP BY event_type, bin),
-        |w AS (SELECT event_type, bin, lo, hi, rc, cc,
-        |    sum(rc) OVER (PARTITION BY event_type) AS nr,
-        |    sum(cc) OVER (PARTITION BY event_type) AS nc
-        |  FROM c)
-        |SELECT event_type, bin, CAST(rc AS BIGINT) AS ref_n,
-        |  CAST(cc AS BIGINT) AS cur_n, lo, hi,
-        |  roundStable(((rc + 0.5) / (nr + 5.0))
-        |    / ((cc + 0.5) / (nc + 5.0)), 6) AS weight
-        |FROM w ORDER BY event_type, bin""".stripMargin,
-
-    "q210_hash_features" ->
-      // md5 hex prefix mod dim for the bucket, 11th hex digit parity
-      // for the sign — the winnow digit-parse convention
-      """WITH tk AS (SELECT doc_id, unnest(str_split(text, ' ')) AS tok
-        |  FROM documents),
-        |h AS (SELECT doc_id, md5(tok) AS hh FROM tk WHERE tok <> ''),
-        |f AS (SELECT doc_id,
-        |    CAST(list_sum([CAST((CASE WHEN unicode(hh[i]) >= 97
-        |        THEN unicode(hh[i]) - 87 ELSE unicode(hh[i]) - 48 END)
-        |        AS BIGINT) * 16 ** (10 - i) FOR i IN range(1, 11)])
-        |      AS BIGINT) % 512 AS feature,
-        |    (CASE WHEN unicode(hh[11]) >= 97 THEN unicode(hh[11]) - 87
-        |      ELSE unicode(hh[11]) - 48 END) % 2 * 2 - 1 AS s
-        |  FROM h)
-        |SELECT doc_id, feature, CAST(sum(s) AS BIGINT) AS value
-        |FROM f GROUP BY 1, 2 HAVING sum(s) <> 0
-        |ORDER BY doc_id, feature""".stripMargin,
-
-    "q211_binscatter" ->
-      // the same (x, tie) rank and (rn-1)·parts DIV n equal-mass cut,
-      // sample-sd standard errors
-      """WITH b AS (SELECT l_returnflag AS k, l_quantity AS x,
-        |    l_extendedprice AS y,
-        |    l_orderkey * 10 + l_linenumber AS tie
-        |  FROM lineitem WHERE l_quantity IS NOT NULL
-        |    AND l_extendedprice IS NOT NULL),
-        |r AS (SELECT k, x, y,
-        |    row_number() OVER (PARTITION BY k ORDER BY x, tie) AS rn,
-        |    count(*) OVER (PARTITION BY k) AS n FROM b),
-        |g AS (SELECT k, CAST((rn - 1) * 10 // n AS BIGINT) AS bucket,
-        |    count(*) AS n, avg(x) AS xm, avg(y) AS ym,
-        |    stddev_samp(y) / sqrt(CAST(count(*) AS DOUBLE)) AS se
-        |  FROM r GROUP BY 1, 2)
-        |SELECT k AS l_returnflag, bucket, n,
-        |  roundStable(xm, 6) AS x_mean, roundStable(ym, 6) AS y_mean,
-        |  roundStable(se, 6) AS y_se,
-        |  roundStable(ym - 1.96 * se, 6) AS ci_lo,
-        |  roundStable(ym + 1.96 * se, 6) AS ci_hi
-        |FROM g ORDER BY l_returnflag, bucket""".stripMargin,
-
-    "q212_psi_quantile" ->
-      // reference-decile edges as exact order statistics, value > edge
-      // counting, the q125 smoothing
-      """WITH t AS (SELECT event_type, value,
-        |    (day(ts) <= 15) AS ref FROM events),
-        |rr AS (SELECT event_type, value,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY value)
-        |      AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM t WHERE ref),
-        |ed AS (SELECT event_type,
-        |    list_sort(list(DISTINCT value)) AS edges
-        |  FROM rr WHERE rn IN ((n * 1 + 9) // 10, (n * 2 + 9) // 10,
-        |    (n * 3 + 9) // 10, (n * 4 + 9) // 10, (n * 5 + 9) // 10,
-        |    (n * 6 + 9) // 10, (n * 7 + 9) // 10, (n * 8 + 9) // 10,
-        |    (n * 9 + 9) // 10)
-        |  GROUP BY 1),
-        |b AS (SELECT t.event_type, t.ref,
-        |    len([e FOR e IN ed.edges IF t.value > e]) AS bin
-        |  FROM t JOIN ed USING (event_type)),
-        |c AS (SELECT event_type, bin,
-        |    sum(CASE WHEN ref THEN 1 ELSE 0 END) AS rc,
-        |    sum(CASE WHEN ref THEN 0 ELSE 1 END) AS cc
-        |  FROM b GROUP BY 1, 2),
-        |w AS (SELECT event_type, rc, cc,
-        |    sum(rc) OVER (PARTITION BY event_type) AS nr,
-        |    sum(cc) OVER (PARTITION BY event_type) AS nc
-        |  FROM c)
-        |SELECT event_type,
-        |  roundStable(sum(((rc + 0.5) / (nr + 5.0) - (cc + 0.5) / (nc + 5.0))
-        |    * ln(((rc + 0.5) / (nr + 5.0)) / ((cc + 0.5) / (nc + 5.0)))), 6)
-        |    AS psi,
-        |  CAST(max(nr) AS BIGINT) AS n_ref, CAST(max(nc) AS BIGINT) AS n_cur
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q213_bootstrap_ci" ->
-      // md5 uniforms, pinned Poisson(1) CDF (every threshold CAST to
-      // DOUBLE — decimal-literal comparisons are the q197 trap), same
-      // replica means and order-stat CI
-      """WITH b AS (SELECT event_type, value, event_id,
-        |    unnest(range(0, 50)) AS r
-        |  FROM events WHERE value IS NOT NULL),
-        |h AS (SELECT event_type, value, r,
-        |    md5(CAST(event_id AS VARCHAR) || '#' || CAST(r AS VARCHAR))
-        |      AS hh FROM b),
-        |u AS (SELECT event_type, value, r,
-        |    CAST(list_sum([CAST((CASE WHEN unicode(hh[i]) >= 97
-        |        THEN unicode(hh[i]) - 87 ELSE unicode(hh[i]) - 48 END)
-        |        AS BIGINT) * 16 ** (10 - i) FOR i IN range(1, 11)])
-        |      AS BIGINT) / CAST(1099511627776 AS DOUBLE) AS uu
-        |  FROM h),
-        |w AS (SELECT event_type, value, r,
-        |    CASE WHEN uu < CAST(0.36787944117144233 AS DOUBLE) THEN 0
-        |         WHEN uu < CAST(0.7357588823428847 AS DOUBLE) THEN 1
-        |         WHEN uu < CAST(0.9196986029286058 AS DOUBLE) THEN 2
-        |         WHEN uu < CAST(0.9810118431238462 AS DOUBLE) THEN 3
-        |         WHEN uu < CAST(0.9963401531726563 AS DOUBLE) THEN 4
-        |         WHEN uu < CAST(0.9994058151824183 AS DOUBLE) THEN 5
-        |         ELSE 6 END AS wt
-        |  FROM u),
-        |rep AS (SELECT event_type, r, sum(wt * value) AS sw,
-        |    sum(wt) AS w0 FROM w GROUP BY 1, 2),
-        |m AS (SELECT event_type, r,
-        |    roundStable(CASE WHEN w0 > 0 THEN sw / w0 END, 9) AS mm
-        |  FROM rep),
-        |lv AS (SELECT event_type, mm, r,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY mm, r)
-        |      AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS nb
-        |  FROM m WHERE mm IS NOT NULL),
-        |sel AS (SELECT * FROM lv
-        |  WHERE rn = greatest(CAST(ceil(nb
-        |      * (CAST(0.05 AS DOUBLE) / 2)) AS BIGINT), 1)
-        |   OR rn = CAST(ceil(nb
-        |      * (1 - CAST(0.05 AS DOUBLE) / 2)) AS BIGINT)),
-        |ci AS (SELECT event_type, roundStable(min(mm), 6) AS ci_lo,
-        |    roundStable(max(mm), 6) AS ci_hi,
-        |    CAST(max(nb) AS BIGINT) AS n_reps FROM sel GROUP BY 1),
-        |pl AS (SELECT event_type, roundStable(avg(value), 6) AS mean,
-        |    count(value) AS n FROM events WHERE value IS NOT NULL
-        |  GROUP BY 1)
-        |SELECT pl.event_type, pl.mean, pl.n, ci.ci_lo, ci.ci_hi, ci.n_reps
-        |FROM pl LEFT JOIN ci USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-
-    "q214_fertility" ->
-      // whitespace tokens (the q42 convention), empty tokens filtered
-      """WITH tk AS (SELECT lang, unnest(str_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (SELECT lang, tok FROM tk WHERE tok <> ''),
-        |d AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY 1),
-        |a AS (SELECT lang, count(*) AS total_tokens,
-        |    count(DISTINCT tok) AS n_types,
-        |    sum(length(tok)) AS chars FROM f GROUP BY 1)
-        |SELECT a.lang, d.n_docs, a.total_tokens,
-        |  CAST(a.n_types AS BIGINT) AS n_types,
-        |  roundStable(CAST(a.total_tokens AS DOUBLE) / d.n_docs, 6)
-        |    AS tokens_per_doc,
-        |  roundStable(CAST(chars AS DOUBLE) / a.total_tokens, 6)
-        |    AS chars_per_token,
-        |  roundStable(CAST(a.n_types AS DOUBLE) / a.total_tokens, 6)
-        |    AS type_token_ratio
-        |FROM a JOIN d USING (lang) ORDER BY lang""".stripMargin,
-
-    "q215_wasserstein" ->
-      // same construction: (key, value) side counts, cumulative CDFs,
-      // each gap weighted by the distance to the next value
-      """WITH t AS (SELECT event_type, value AS v,
-        |    (day(ts) <= 15) AS ref FROM events),
-        |c AS (SELECT event_type, v,
-        |    sum(CASE WHEN ref THEN 1 ELSE 0 END) AS rc,
-        |    sum(CASE WHEN ref THEN 0 ELSE 1 END) AS cc
-        |  FROM t GROUP BY 1, 2),
-        |w AS (SELECT event_type, v,
-        |    sum(rc) OVER (PARTITION BY event_type ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS crc,
-        |    sum(cc) OVER (PARTITION BY event_type ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ccc,
-        |    sum(rc) OVER (PARTITION BY event_type) AS nr,
-        |    sum(cc) OVER (PARTITION BY event_type) AS nc,
-        |    lead(v) OVER (PARTITION BY event_type ORDER BY v) AS nxt,
-        |    max(v) OVER (PARTITION BY event_type)
-        |      - min(v) OVER (PARTITION BY event_type) AS rng
-        |  FROM c)
-        |SELECT event_type,
-        |  roundStable(sum(CASE WHEN nr > 0 AND nc > 0 THEN
-        |    abs(CAST(crc AS DOUBLE) / nr - CAST(ccc AS DOUBLE) / nc)
-        |      * coalesce(nxt - v, 0) END), 6) AS w1,
-        |  roundStable(CASE WHEN max(rng) > 0 THEN
-        |    sum(CASE WHEN nr > 0 AND nc > 0 THEN
-        |      abs(CAST(crc AS DOUBLE) / nr - CAST(ccc AS DOUBLE) / nc)
-        |        * coalesce(nxt - v, 0) END) / max(rng) END, 6) AS w1_norm,
-        |  CAST(max(nr) AS BIGINT) AS n_ref, CAST(max(nc) AS BIGINT) AS n_cur
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q216_mann_kendall" ->
-      // daily bucket means rounded before comparison, pair sign sum,
-      // tie-corrected variance, continuity-corrected z
-      """WITH s AS (SELECT event_type, CAST(ts AS DATE) AS b,
-        |    roundStable(avg(value), 6) AS v
-        |  FROM events GROUP BY 1, 2),
-        |p AS (SELECT a.event_type,
-        |    CAST(sum(sign(b2.v - a.v)) AS BIGINT) AS s_stat,
-        |    count(*) AS np
-        |  FROM s a JOIN s b2 ON b2.event_type = a.event_type
-        |    AND a.b < b2.b
-        |  GROUP BY 1),
-        |t AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS t
-        |  FROM s GROUP BY event_type, v),
-        |g AS (SELECT event_type,
-        |    sum(t * (t - 1) * (2 * t + 5)) AS tieterm,
-        |    sum(t) AS n FROM t GROUP BY 1)
-        |SELECT g.event_type,
-        |  p.s_stat,
-        |  CAST(g.n AS BIGINT) AS n_buckets,
-        |  CAST(coalesce(p.np, 0) AS BIGINT) AS n_pairs,
-        |  roundStable(CASE WHEN p.s_stat IS NOT NULL THEN
-        |    (g.n * (g.n - 1) * (2 * g.n + 5) - g.tieterm) / 18.0 END, 6)
-        |    AS var_s,
-        |  roundStable(CASE WHEN p.s_stat IS NOT NULL
-        |      AND (g.n * (g.n - 1) * (2 * g.n + 5) - g.tieterm) / 18.0 > 0
-        |    THEN CASE
-        |      WHEN p.s_stat > 0 THEN (CAST(p.s_stat AS DOUBLE) - 1)
-        |        / sqrt((g.n * (g.n - 1) * (2 * g.n + 5) - g.tieterm) / 18.0)
-        |      WHEN p.s_stat < 0 THEN (CAST(p.s_stat AS DOUBLE) + 1)
-        |        / sqrt((g.n * (g.n - 1) * (2 * g.n + 5) - g.tieterm) / 18.0)
-        |      ELSE 0.0 END END, 6) AS z
-        |FROM g LEFT JOIN p USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-
-    "q217_mutual_info" ->
-      // observed cells only; marginal entropies fold over the same cell
-      // rows via sum_b n_ab = n_a
-      """WITH cells AS (SELECT source, lang AS a,
-        |    CASE WHEN n_chars >= 300 THEN 'long' ELSE 'short' END AS b,
-        |    CAST(count(*) AS DOUBLE) AS o
-        |  FROM documents GROUP BY 1, 2, 3),
-        |m AS (SELECT source, o,
-        |    sum(o) OVER (PARTITION BY source) AS n,
-        |    sum(o) OVER (PARTITION BY source, a) AS na,
-        |    sum(o) OVER (PARTITION BY source, b) AS nb
-        |  FROM cells)
-        |SELECT source,
-        |  roundStable(sum((o / n) * ln(o * n / (na * nb))), 6) AS mi,
-        |  roundStable(sum(-(o / n) * ln(na / n)), 6) AS h_a,
-        |  roundStable(sum(-(o / n) * ln(nb / n)), 6) AS h_b,
-        |  roundStable(CASE WHEN sum(-(o / n) * ln(na / n)) > 0
-        |      AND sum(-(o / n) * ln(nb / n)) > 0
-        |    THEN sum((o / n) * ln(o * n / (na * nb)))
-        |      / sqrt(sum(-(o / n) * ln(na / n))
-        |           * sum(-(o / n) * ln(nb / n))) END, 6) AS nmi,
-        |  CAST(max(n) AS BIGINT) AS n,
-        |  count(*) AS n_cells
-        |FROM m GROUP BY source ORDER BY source""".stripMargin,
-
-    "q218_max_drawdown" ->
-      // cumulative peak window, then the (drawdown desc, time asc)
-      // rank picks the earliest worst trough
-      """WITH s AS (SELECT event_type, value, ts, event_id,
-        |    max(value) OVER (PARTITION BY event_type ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
-        |  FROM events),
-        |d AS (SELECT event_type, ts, peak, peak - value AS dd,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY peak - value DESC, ts, event_id) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM s)
-        |SELECT event_type,
-        |  roundStable(dd, 6) AS max_dd,
-        |  roundStable(CASE WHEN peak > 0 THEN dd / peak END, 6)
-        |    AS max_dd_frac,
-        |  roundStable(peak, 6) AS peak_value,
-        |  ts AS trough_at,
-        |  CAST(n AS BIGINT) AS n
-        |FROM d WHERE rn = 1 ORDER BY event_type""".stripMargin,
-
-    "q219_runs_test" ->
-      // same exact interpolated median, same tie exclusion, same
-      // run-boundary lag
-      """WITH m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
-        |  FROM events GROUP BY 1),
-        |f AS (SELECT e.event_type, (e.value > m.med) AS s, e.ts, e.event_id
-        |  FROM events e JOIN m USING (event_type) WHERE e.value <> m.med),
-        |r AS (SELECT event_type, s,
-        |    CASE WHEN lag(s) OVER w IS NULL OR lag(s) OVER w <> s
-        |      THEN 1 ELSE 0 END AS nw
-        |  FROM f WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)),
-        |g AS (SELECT event_type,
-        |    CAST(sum(CASE WHEN s THEN 1 ELSE 0 END) AS DOUBLE) AS np,
-        |    CAST(sum(CASE WHEN s THEN 0 ELSE 1 END) AS DOUBLE) AS nn,
-        |    CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(nw) AS BIGINT) AS r FROM r GROUP BY 1)
-        |SELECT event_type,
-        |  CAST(np AS BIGINT) AS n_pos, CAST(nn AS BIGINT) AS n_neg,
-        |  r AS n_runs,
-        |  roundStable(CASE WHEN n > 1 THEN 1.0 + 2.0 * np * nn / n END, 6)
-        |    AS expected_runs,
-        |  roundStable(CASE WHEN n > 1
-        |      AND 2.0 * np * nn * (2.0 * np * nn - n) / (n * n * (n - 1)) > 0
-        |    THEN (CAST(r AS DOUBLE) - (1.0 + 2.0 * np * nn / n))
-        |      / sqrt(2.0 * np * nn * (2.0 * np * nn - n)
-        |             / (n * n * (n - 1))) END, 6) AS z
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q220_hodges_lehmann" ->
-      // rounded daily means, i <= j Walsh pairs, interpolated median
-      // of the averages
-      """WITH s AS (SELECT event_type, CAST(ts AS DATE) AS b,
-        |    roundStable(avg(value), 6) AS v FROM events GROUP BY 1, 2),
-        |p AS (SELECT a.event_type,
-        |    quantile_cont((a.v + b2.v) / 2, 0.5) AS hl,
-        |    count(*) AS n_pairs
-        |  FROM s a JOIN s b2 ON b2.event_type = a.event_type
-        |    AND a.b <= b2.b
-        |  GROUP BY 1),
-        |g AS (SELECT event_type, quantile_cont(v, 0.5) AS med,
-        |    count(*) AS n_buckets FROM s GROUP BY 1)
-        |SELECT g.event_type, roundStable(p.hl, 6) AS hl_location,
-        |  roundStable(g.med, 6) AS series_median,
-        |  CAST(g.n_buckets AS BIGINT) AS n_buckets,
-        |  CAST(p.n_pairs AS BIGINT) AS n_pairs
-        |FROM g JOIN p USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-
-    "q221_burstiness" ->
-      // same algebraic Fano (df, cf, sum c^2 against total docs — the
-      // zero rows never materialize), same minDf pruning
-      """WITH tk AS (SELECT doc_id, unnest(str_split(text, ' ')) AS tok
-        |  FROM documents),
-        |pd AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS c
-        |  FROM tk WHERE tok <> '' GROUP BY 1, 2),
-        |nd AS (SELECT CAST(count(*) AS DOUBLE) AS ndocs FROM documents),
-        |a AS (SELECT tok, count(*) AS df, sum(c) AS cf,
-        |    sum(c * c) AS s2
-        |  FROM pd GROUP BY 1 HAVING count(*) >= 3)
-        |SELECT tok, CAST(df AS BIGINT) AS df, CAST(cf AS BIGINT) AS cf,
-        |  roundStable((s2 / ndocs - (cf / ndocs) * (cf / ndocs))
-        |    / (cf / ndocs), 6) AS fano
-        |FROM a, nd ORDER BY tok""".stripMargin,
-
-    "q222_heaps" ->
-      // type introductions from one min(doc) agg, cumulative windows,
-      // the q118 population-moment OLS over the log-log checkpoints
-      """WITH tk AS (SELECT source, doc_id AS d,
-        |    unnest(str_split(text, ' ')) AS tok FROM documents),
-        |f AS (SELECT source, d, tok FROM tk WHERE tok <> ''),
-        |pd AS (SELECT source, d, count(*) AS nt FROM f GROUP BY 1, 2),
-        |iv AS (SELECT source, tok, min(d) AS d FROM f GROUP BY 1, 2),
-        |ic AS (SELECT source, d, count(*) AS nv FROM iv GROUP BY 1, 2),
-        |cp AS (SELECT pd.source,
-        |    sum(pd.nt) OVER (PARTITION BY pd.source ORDER BY pd.d
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n,
-        |    sum(coalesce(ic.nv, 0)) OVER (PARTITION BY pd.source
-        |      ORDER BY pd.d
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v
-        |  FROM pd LEFT JOIN ic ON ic.source = pd.source AND ic.d = pd.d),
-        |l AS (SELECT source, ln(CAST(n AS DOUBLE)) AS x,
-        |    ln(CAST(v AS DOUBLE)) AS y FROM cp WHERE n > 0 AND v > 0)
-        |SELECT source,
-        |  roundStable(CASE WHEN var_pop(x) > 0
-        |    THEN covar_pop(y, x) / var_pop(x) END, 6) AS beta,
-        |  roundStable(exp(roundStable(CASE WHEN var_pop(x) > 0
-        |    THEN avg(y) - covar_pop(y, x) / var_pop(x) * avg(x) END, 6)),
-        |    6) AS k,
-        |  roundStable(CASE WHEN var_pop(x) > 0 AND var_pop(y) > 0
-        |    THEN covar_pop(y, x) * covar_pop(y, x)
-        |      / (var_pop(x) * var_pop(y)) END, 6) AS r2,
-        |  count(*) AS n_checkpoints
-        |FROM l GROUP BY source ORDER BY source""".stripMargin,
-
-    "q223_rfm" ->
-      // same entity rollup, same (rn-1)*5 DIV n + 1 quintile arithmetic
-      // on (metric asc, custkey) row_numbers
-      """WITH e AS (SELECT o_custkey AS id, max(o_orderdate) AS last_ts,
-        |    count(*) AS freq, sum(o_totalprice) AS money
-        |  FROM orders GROUP BY 1),
-        |a AS (SELECT max(o_orderdate) AS anchor FROM orders),
-        |r AS (SELECT e.*, a.anchor,
-        |    date_diff('day', CAST(e.last_ts AS DATE),
-        |      CAST(a.anchor AS DATE)) AS rdays,
-        |    count(*) OVER () AS n,
-        |    row_number() OVER (ORDER BY e.last_ts, e.id) AS rnr,
-        |    row_number() OVER (ORDER BY e.freq, e.id) AS rnf,
-        |    row_number() OVER (ORDER BY e.money, e.id) AS rnm
-        |  FROM e, a),
-        |s AS (SELECT CAST((rnr - 1) * 5 // n + 1 AS INT) AS r_score,
-        |    CAST((rnf - 1) * 5 // n + 1 AS INT) AS f_score,
-        |    CAST((rnm - 1) * 5 // n + 1 AS INT) AS m_score,
-        |    rdays, freq, money FROM r)
-        |SELECT r_score, f_score, m_score,
-        |  count(*) AS n_entities,
-        |  roundStable(avg(rdays), 6) AS avg_recency_days,
-        |  roundStable(avg(freq), 6) AS avg_frequency,
-        |  roundStable(avg(money), 6) AS avg_monetary
-        |FROM s GROUP BY 1, 2, 3
-        |ORDER BY r_score, f_score, m_score""".stripMargin,
-
-    "q224_qq_shift" ->
-      // same interpolated quantiles both sides, list-indexed per decile
-      """WITH t AS (SELECT event_type, value,
-        |    (day(ts) <= 15) AS ref FROM events),
-        |q AS (SELECT event_type,
-        |    quantile_cont(value, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7,
-        |      0.8, 0.9]) FILTER (WHERE ref) AS qr,
-        |    quantile_cont(value, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7,
-        |      0.8, 0.9]) FILTER (WHERE NOT ref) AS qc
-        |  FROM t GROUP BY 1),
-        |i AS (SELECT unnest(range(1, 10)) AS d)
-        |SELECT event_type, CAST(d AS BIGINT) AS decile,
-        |  roundStable(qr[CAST(d AS INT)], 6) AS q_ref,
-        |  roundStable(qc[CAST(d AS INT)], 6) AS q_cur,
-        |  roundStable(qc[CAST(d AS INT)] - qr[CAST(d AS INT)], 6) AS shift
-        |FROM q, i ORDER BY event_type, decile""".stripMargin,
-
-    "q225_contribution" ->
-      // same conditional totals; |delta| ROUNDED before ranking with
-      // the full-segment tiebreak
-      """WITH b AS (SELECT o_orderpriority, o_orderstatus,
-        |    sum(CASE WHEN year(o_orderdate) < 1998 THEN o_totalprice
-        |      ELSE 0 END) AS r,
-        |    sum(CASE WHEN NOT (year(o_orderdate) < 1998)
-        |      THEN o_totalprice ELSE 0 END) AS c
-        |  FROM orders GROUP BY 1, 2),
-        |w AS (SELECT *, c - r AS d,
-        |    sum(abs(c - r)) OVER () AS ta,
-        |    row_number() OVER (ORDER BY roundStable(abs(c - r), 2) DESC,
-        |      o_orderpriority, o_orderstatus) AS rk
-        |  FROM b)
-        |SELECT o_orderpriority, o_orderstatus,
-        |  roundStable(r, 2) AS ref_total, roundStable(c, 2) AS cur_total,
-        |  roundStable(d, 2) AS delta,
-        |  roundStable(CASE WHEN ta > 0 THEN abs(d) / ta END, 2)
-        |    AS abs_share,
-        |  CAST(rk AS BIGINT) AS rank
-        |FROM w ORDER BY o_orderpriority, o_orderstatus""".stripMargin,
-
-    "q226_effect_size" ->
-      // same arm moments, pooled SD, Hedges correction
-      """WITH t AS (SELECT event_type,
-        |    CASE WHEN user_id % 2 = 0 THEN value END AS a,
-        |    CASE WHEN user_id % 2 <> 0 THEN value END AS b
-        |  FROM events),
-        |g AS (SELECT event_type,
-        |    count(a) AS na, count(b) AS nb,
-        |    avg(a) AS ma, avg(b) AS mb,
-        |    var_samp(a) AS va, var_samp(b) AS vb
-        |  FROM t GROUP BY 1),
-        |s AS (SELECT *,
-        |    CAST(na + nb AS DOUBLE) AS n,
-        |    (CAST(na - 1 AS DOUBLE) * va + CAST(nb - 1 AS DOUBLE) * vb)
-        |      / (CAST(na + nb AS DOUBLE) - 2) AS pv
-        |  FROM g)
-        |SELECT event_type,
-        |  CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-        |  roundStable(ma, 6) AS mean_a, roundStable(mb, 6) AS mean_b,
-        |  roundStable(CASE WHEN na >= 2 AND nb >= 2 AND pv > 0
-        |    THEN (ma - mb) / sqrt(pv) END, 6) AS cohen_d,
-        |  roundStable(CASE WHEN na >= 2 AND nb >= 2 AND pv > 0
-        |    THEN ((ma - mb) / sqrt(pv)) * (1.0 - 3.0 / (4.0 * n - 9))
-        |    END, 6) AS hedges_g
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    "q227_neighbor_jaccard" ->
-      // q153's wedge skeleton; union size from the UNCAPPED degree
-      // table, jaccard rounded before the rank cut
-      """WITH sp AS (SELECT DISTINCT l.l_suppkey AS sk, l.l_partkey AS pk
-        |      FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |      WHERE l.l_quantity > 48),
-        |e AS (SELECT r1.sk AS a, r2.sk AS b FROM sp r1 JOIN sp r2
-        |      ON r1.pk = r2.pk AND r1.sk < r2.sk GROUP BY 1, 2),
-        |deg AS (SELECT w, count(*) AS deg FROM
-        |        (SELECT a AS w FROM e UNION ALL SELECT b FROM e)
-        |      GROUP BY 1),
-        |adj AS (SELECT j.w, j.n, d.deg FROM
-        |        (SELECT a AS w, b AS n FROM e
-        |         UNION ALL SELECT b AS w, a AS n FROM e) j
-        |      JOIN deg d ON j.w = d.w WHERE d.deg <= 500),
-        |ps AS (SELECT x.n AS u, y.n AS v, count(*) AS cn
-        |      FROM adj x JOIN adj y ON x.w = y.w AND x.n < y.n
-        |      GROUP BY 1, 2),
-        |pred AS (SELECT ps.u, ps.v, ps.cn AS common_neighbors,
-        |        roundStable(CAST(ps.cn AS DOUBLE)
-        |          / (du.deg + dv.deg - ps.cn), 6) AS jaccard
-        |      FROM ps JOIN deg du ON du.w = ps.u
-        |        JOIN deg dv ON dv.w = ps.v
-        |      WHERE NOT EXISTS
-        |        (SELECT 1 FROM e WHERE e.a = ps.u AND e.b = ps.v)),
-        |bth AS (SELECT u, v, common_neighbors, jaccard FROM pred
-        |      UNION ALL
-        |      SELECT v AS u, u AS v, common_neighbors, jaccard FROM pred),
-        |r AS (SELECT u, v, common_neighbors, jaccard,
-        |        row_number() OVER (PARTITION BY u
-        |          ORDER BY jaccard DESC, v) AS rank
-        |      FROM bth)
-        |SELECT u, v, common_neighbors, jaccard, rank
-        |FROM r WHERE rank <= 5 ORDER BY u, rank""".stripMargin,
-
-    "q228_abc" ->
-      // same item rollup, (rounded value desc, id) running total, class
-      // from the 9dp-rounded cumulative share BEFORE each item
-      """WITH it AS (SELECT o_custkey AS id, sum(o_totalprice) AS v
-        |  FROM orders GROUP BY 1),
-        |w AS (SELECT id, v,
-        |    sum(v) OVER () AS tot,
-        |    sum(v) OVER (ORDER BY roundStable(v, 2) DESC, id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM it),
-        |c AS (SELECT *, roundStable((cum - v) / tot, 9) AS ps FROM w),
-        |s AS (SELECT CASE WHEN tot > 0 THEN
-        |      CASE WHEN ps < 0.8 THEN 'A' WHEN ps < 0.95 THEN 'B'
-        |        ELSE 'C' END END AS abc_class, v, tot FROM c)
-        |SELECT abc_class, count(*) AS n_items,
-        |  roundStable(sum(v), 2) AS class_total,
-        |  roundStable(CASE WHEN max(tot) > 0 THEN sum(v) / max(tot) END,
-        |    2) AS share
-        |FROM s GROUP BY 1 ORDER BY abc_class""".stripMargin,
-
-    "q229_interarrival" ->
-      // same keyed lag gaps in seconds, same spread guards
-      """WITH g AS (SELECT event_type,
-        |    (epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id))) / 1e6 AS gap
-        |  FROM events)
-        |SELECT event_type, count(*) AS n_events, count(gap) AS n_gaps,
-        |  roundStable(avg(gap), 6) AS mean_gap_s,
-        |  roundStable(CASE WHEN count(gap) >= 2 AND avg(gap) > 0
-        |    THEN stddev_samp(gap) / avg(gap) END, 6) AS cv,
-        |  roundStable(CASE WHEN count(gap) >= 2 AND avg(gap) > 0
-        |    THEN (stddev_samp(gap) - avg(gap))
-        |      / (stddev_samp(gap) + avg(gap)) END, 6) AS b_burstiness
-        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q230_median_ci" ->
-      // identical integer rank arithmetic (p = 0.5 keeps every literal
-      // an exact double), exact order-stat endpoints, interpolated point
-      """WITH r AS (SELECT event_type, value,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY value)
-        |      AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events),
-        |b AS (SELECT event_type, value, rn, n,
-        |    greatest(CAST(ceil(CAST(n AS DOUBLE) * 0.5
-        |      - 1.96 * sqrt(CAST(n AS DOUBLE) * 0.5 * 0.5)) AS BIGINT),
-        |      1) AS lo,
-        |    least(CAST(ceil(CAST(n AS DOUBLE) * 0.5
-        |      + 1.96 * sqrt(CAST(n AS DOUBLE) * 0.5 * 0.5)) AS BIGINT),
-        |      n) AS hi
-        |  FROM r),
-        |pk AS (SELECT event_type,
-        |    roundStable(min(value), 6) AS ci_lo,
-        |    roundStable(max(value), 6) AS ci_hi,
-        |    max(lo) AS lo_rank, max(hi) AS hi_rank, max(n) AS n
-        |  FROM b WHERE rn = lo OR rn = hi GROUP BY 1),
-        |pt AS (SELECT event_type,
-        |    roundStable(quantile_cont(value, 0.5), 6) AS point
-        |  FROM events GROUP BY 1)
-        |SELECT pt.event_type, pt.point, pk.ci_lo, pk.ci_hi,
-        |  CAST(pk.lo_rank AS BIGINT) AS lo_rank,
-        |  CAST(pk.hi_rank AS BIGINT) AS hi_rank,
-        |  CAST(pk.n AS BIGINT) AS n
-        |FROM pt JOIN pk USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-
-    "q231_brier" ->
-      // distinct-score cells make Murphy an identity:
-      // sum(s-y)^2 over a cell = n*s^2 - 2*s*pos + pos since y^2 = y
-      """WITH t AS (SELECT CAST(user_id % 5 AS BIGINT) AS cohort,
-        |    roundStable(least(value / 500, 1.0), 9) AS s,
-        |    CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END AS y
-        |  FROM events),
-        |c AS (SELECT cohort, s, CAST(count(*) AS DOUBLE) AS n,
-        |    sum(y) AS pos FROM t GROUP BY 1, 2),
-        |w AS (SELECT *, sum(n) OVER (PARTITION BY cohort) AS nt,
-        |    sum(pos) OVER (PARTITION BY cohort)
-        |      / sum(n) OVER (PARTITION BY cohort) AS ybar
-        |  FROM c)
-        |SELECT cohort,
-        |  roundStable(sum(n * s * s - 2.0 * s * pos + pos) / max(nt), 6)
-        |    AS brier,
-        |  roundStable(sum(n * (s - pos / n) * (s - pos / n)) / max(nt), 6)
-        |    AS reliability,
-        |  roundStable(sum(n * (pos / n - ybar) * (pos / n - ybar))
-        |    / max(nt), 6) AS resolution,
-        |  roundStable(max(ybar) * (1.0 - max(ybar)), 6) AS uncertainty,
-        |  roundStable(max(ybar), 6) AS base_rate,
-        |  CAST(max(nt) AS BIGINT) AS n
-        |FROM w GROUP BY cohort ORDER BY cohort""".stripMargin,
-
-    "q232_seasonal_strength" ->
-      // the q88 decomposition staging with UNROUNDED components, two
-      // guarded variance ratios
-      """WITH t AS (SELECT event_type, ts, value,
-        |    avg(value) OVER (PARTITION BY event_type ORDER BY ts, event_id
-        |      ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS trend
-        |  FROM events),
-        |s AS (SELECT event_type, value, value - trend AS detr,
-        |    hour(ts) AS hh FROM t),
-        |m AS (SELECT event_type AS met, hh AS mhh, avg(detr) AS seas
-        |  FROM s GROUP BY 1, 2),
-        |j AS (SELECT s.event_type, s.detr, s.detr - m.seas AS resid,
-        |    s.value - m.seas AS deseas
-        |  FROM s JOIN m ON s.event_type = m.met AND s.hh = m.mhh)
-        |SELECT event_type,
-        |  roundStable(CASE WHEN var_pop(detr) > 0 THEN
-        |    greatest(0.0, 1.0 - var_pop(resid) / var_pop(detr)) END, 6)
-        |    AS strength_seasonal,
-        |  roundStable(CASE WHEN var_pop(deseas) > 0 THEN
-        |    greatest(0.0, 1.0 - var_pop(resid) / var_pop(deseas)) END, 6)
-        |    AS strength_trend,
-        |  count(*) AS n
-        |FROM j GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q233_concurrency" ->
-      // same sessionization, same (t, delta) sweep order — ends before
-      // starts at an instant (half-open), tie-group levels deterministic
-      """WITH st AS (SELECT user_id, ts, event_id, epoch_us(ts) AS eu,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |sx AS (SELECT user_id, ts,
-        |    sum(CASE WHEN prev IS NULL OR eu - prev > 1800000000
-        |      THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-        |  FROM st),
-        |ses AS (SELECT user_id, sess, min(ts) AS st, max(ts) AS en
-        |  FROM sx GROUP BY 1, 2),
-        |pts AS (SELECT epoch_us(st) AS t, 1 AS d FROM ses
-        |  UNION ALL SELECT epoch_us(en), -1 FROM ses),
-        |sw AS (SELECT t, d,
-        |    sum(d) OVER (ORDER BY t, d
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lvl,
-        |    lead(t) OVER (ORDER BY t, d) AS nxt
-        |  FROM pts),
-        |m AS (SELECT max(lvl) AS mx FROM sw)
-        |SELECT CAST(m.mx AS BIGINT) AS max_concurrency,
-        |  roundStable(CASE WHEN max(sw.t) > min(sw.t) THEN
-        |    sum(sw.lvl * CAST(nxt - sw.t AS DOUBLE))
-        |      / CAST(max(sw.t) - min(sw.t) AS DOUBLE) END, 6)
-        |    AS avg_concurrency,
-        |  CAST(count(*) // 2 AS BIGINT) AS n_intervals,
-        |  make_timestamp(min(CASE WHEN sw.lvl = m.mx THEN sw.t END))
-        |    AS peak_at
-        |FROM sw, m GROUP BY m.mx""".stripMargin,
-
-    "q234_ols2" ->
-      // identical six-moment trees, identical 2x2 solve and guards
-      """WITH t AS (SELECT event_type, value AS y,
-        |    (epoch_us(ts) - 1704067200000000) / 86400000000.0 AS x1,
-        |    CAST(hour(ts) AS DOUBLE) AS x2
-        |  FROM events)
-        |SELECT event_type,
-        |  roundStable(CASE WHEN var_pop(x1) * var_pop(x2)
-        |      - covar_pop(x1, x2) * covar_pop(x1, x2) > 0 THEN
-        |    (covar_pop(x1, y) * var_pop(x2)
-        |      - covar_pop(x2, y) * covar_pop(x1, x2))
-        |    / (var_pop(x1) * var_pop(x2)
-        |      - covar_pop(x1, x2) * covar_pop(x1, x2)) END, 6) AS b1,
-        |  roundStable(CASE WHEN var_pop(x1) * var_pop(x2)
-        |      - covar_pop(x1, x2) * covar_pop(x1, x2) > 0 THEN
-        |    (covar_pop(x2, y) * var_pop(x1)
-        |      - covar_pop(x1, y) * covar_pop(x1, x2))
-        |    / (var_pop(x1) * var_pop(x2)
-        |      - covar_pop(x1, x2) * covar_pop(x1, x2)) END, 6) AS b2,
-        |  roundStable(avg(y)
-        |    - (CASE WHEN var_pop(x1) * var_pop(x2)
-        |        - covar_pop(x1, x2) * covar_pop(x1, x2) > 0 THEN
-        |      (covar_pop(x1, y) * var_pop(x2)
-        |        - covar_pop(x2, y) * covar_pop(x1, x2))
-        |      / (var_pop(x1) * var_pop(x2)
-        |        - covar_pop(x1, x2) * covar_pop(x1, x2)) END) * avg(x1)
-        |    - (CASE WHEN var_pop(x1) * var_pop(x2)
-        |        - covar_pop(x1, x2) * covar_pop(x1, x2) > 0 THEN
-        |      (covar_pop(x2, y) * var_pop(x1)
-        |        - covar_pop(x1, y) * covar_pop(x1, x2))
-        |      / (var_pop(x1) * var_pop(x2)
-        |        - covar_pop(x1, x2) * covar_pop(x1, x2)) END) * avg(x2),
-        |    6) AS intercept,
-        |  roundStable(CASE WHEN var_pop(x1) * var_pop(x2)
-        |      - covar_pop(x1, x2) * covar_pop(x1, x2) > 0
-        |      AND var_pop(y) > 0 THEN
-        |    ((covar_pop(x1, y) * var_pop(x2)
-        |      - covar_pop(x2, y) * covar_pop(x1, x2))
-        |     / (var_pop(x1) * var_pop(x2)
-        |      - covar_pop(x1, x2) * covar_pop(x1, x2)) * covar_pop(x1, y)
-        |    + (covar_pop(x2, y) * var_pop(x1)
-        |      - covar_pop(x1, y) * covar_pop(x1, x2))
-        |     / (var_pop(x1) * var_pop(x2)
-        |      - covar_pop(x1, x2) * covar_pop(x1, x2)) * covar_pop(x2, y))
-        |    / var_pop(y) END, 6) AS r2,
-        |  count(*) AS n
-        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q235_freq_spectrum" ->
-      // token counts then count-of-counts; shares off the same windows
-      """WITH tk AS (SELECT unnest(str_split(text, ' ')) AS tok
-        |  FROM documents),
-        |c AS (SELECT tok, count(*) AS r FROM tk WHERE tok <> ''
-        |  GROUP BY 1),
-        |s AS (SELECT r, count(*) AS n_types FROM c GROUP BY 1),
-        |w AS (SELECT *, sum(r * n_types) OVER () AS mass,
-        |    sum(n_types) OVER () AS v FROM s)
-        |SELECT CAST(r AS BIGINT) AS r, CAST(n_types AS BIGINT) AS n_types,
-        |  roundStable(CAST(r * n_types AS DOUBLE) / mass, 6) AS mass_share,
-        |  roundStable(CAST(n_types AS DOUBLE) / v, 6) AS type_share
-        |FROM w ORDER BY r""".stripMargin,
-
-    "q236_fk_audit" ->
-      // same per-relation split: nulls are a nullability count, orphans
-      // a broken-pointer count against the parent's distinct keys
-      """WITH
-        |a1 AS (SELECT 'customer.nationkey->nation' AS relation,
-        |  sum(CASE WHEN c_nationkey IS NOT NULL THEN 1 ELSE 0 END) AS nc,
-        |  sum(CASE WHEN c_nationkey IS NULL THEN 1 ELSE 0 END) AS nn,
-        |  sum(CASE WHEN c_nationkey IS NOT NULL AND p.k IS NULL
-        |    THEN 1 ELSE 0 END) AS no
-        |  FROM customer LEFT JOIN
-        |    (SELECT DISTINCT n_nationkey AS k FROM nation) p
-        |    ON c_nationkey = p.k),
-        |a2 AS (SELECT 'lineitem.orderkey->orders' AS relation,
-        |  sum(CASE WHEN l_orderkey IS NOT NULL THEN 1 ELSE 0 END) AS nc,
-        |  sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) AS nn,
-        |  sum(CASE WHEN l_orderkey IS NOT NULL AND p.k IS NULL
-        |    THEN 1 ELSE 0 END) AS no
-        |  FROM lineitem LEFT JOIN
-        |    (SELECT DISTINCT o_orderkey AS k FROM orders) p
-        |    ON l_orderkey = p.k),
-        |a3 AS (SELECT 'lineitem.partkey->part' AS relation,
-        |  sum(CASE WHEN l_partkey IS NOT NULL THEN 1 ELSE 0 END) AS nc,
-        |  sum(CASE WHEN l_partkey IS NULL THEN 1 ELSE 0 END) AS nn,
-        |  sum(CASE WHEN l_partkey IS NOT NULL AND p.k IS NULL
-        |    THEN 1 ELSE 0 END) AS no
-        |  FROM lineitem LEFT JOIN
-        |    (SELECT DISTINCT p_partkey AS k FROM part) p
-        |    ON l_partkey = p.k),
-        |a4 AS (SELECT 'lineitem.suppkey->supplier' AS relation,
-        |  sum(CASE WHEN l_suppkey IS NOT NULL THEN 1 ELSE 0 END) AS nc,
-        |  sum(CASE WHEN l_suppkey IS NULL THEN 1 ELSE 0 END) AS nn,
-        |  sum(CASE WHEN l_suppkey IS NOT NULL AND p.k IS NULL
-        |    THEN 1 ELSE 0 END) AS no
-        |  FROM lineitem LEFT JOIN
-        |    (SELECT DISTINCT s_suppkey AS k FROM supplier) p
-        |    ON l_suppkey = p.k),
-        |a5 AS (SELECT 'nation.regionkey->region' AS relation,
-        |  sum(CASE WHEN n_regionkey IS NOT NULL THEN 1 ELSE 0 END) AS nc,
-        |  sum(CASE WHEN n_regionkey IS NULL THEN 1 ELSE 0 END) AS nn,
-        |  sum(CASE WHEN n_regionkey IS NOT NULL AND p.k IS NULL
-        |    THEN 1 ELSE 0 END) AS no
-        |  FROM nation LEFT JOIN
-        |    (SELECT DISTINCT r_regionkey AS k FROM region) p
-        |    ON n_regionkey = p.k),
-        |a6 AS (SELECT 'orders.custkey->customer' AS relation,
-        |  sum(CASE WHEN o_custkey IS NOT NULL THEN 1 ELSE 0 END) AS nc,
-        |  sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS nn,
-        |  sum(CASE WHEN o_custkey IS NOT NULL AND p.k IS NULL
-        |    THEN 1 ELSE 0 END) AS no
-        |  FROM orders LEFT JOIN
-        |    (SELECT DISTINCT c_custkey AS k FROM customer) p
-        |    ON o_custkey = p.k),
-        |u AS (SELECT * FROM a1 UNION ALL SELECT * FROM a2
-        |  UNION ALL SELECT * FROM a3 UNION ALL SELECT * FROM a4
-        |  UNION ALL SELECT * FROM a5 UNION ALL SELECT * FROM a6)
-        |SELECT relation, CAST(nc AS BIGINT) AS n_child,
-        |  CAST(nn AS BIGINT) AS n_null_fk,
-        |  CAST(no AS BIGINT) AS n_orphans,
-        |  roundStable(CASE WHEN nc > 0
-        |    THEN CAST(no AS DOUBLE) / nc END, 6) AS orphan_rate
-        |FROM u ORDER BY relation""".stripMargin,
-
-    "q237_levene" ->
-      // same group medians, same absolute deviations, same two-group F
-      """WITH t AS (SELECT event_type, value AS y,
-        |    (day(ts) <= 15) AS a FROM events),
-        |m AS (SELECT event_type,
-        |    quantile_cont(CASE WHEN a THEN y END, 0.5) AS ma,
-        |    quantile_cont(CASE WHEN NOT a THEN y END, 0.5) AS mb
-        |  FROM t GROUP BY 1),
-        |z AS (SELECT t.event_type, t.a,
-        |    CASE WHEN a THEN abs(y - ma) ELSE abs(y - mb) END AS z
-        |  FROM t JOIN m USING (event_type)),
-        |g AS (SELECT event_type,
-        |    CAST(count(CASE WHEN a THEN 1 END) AS DOUBLE) AS na,
-        |    CAST(count(CASE WHEN NOT a THEN 1 END) AS DOUBLE) AS nb,
-        |    avg(CASE WHEN a THEN z END) AS za,
-        |    avg(CASE WHEN NOT a THEN z END) AS zb,
-        |    sum(z) AS sz,
-        |    var_pop(CASE WHEN a THEN z END) AS vza,
-        |    var_pop(CASE WHEN NOT a THEN z END) AS vzb
-        |  FROM z GROUP BY 1)
-        |SELECT event_type,
-        |  CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-        |  roundStable(za, 6) AS mean_absdev_a,
-        |  roundStable(zb, 6) AS mean_absdev_b,
-        |  roundStable(CASE WHEN na >= 2 AND nb >= 2
-        |      AND na * vza + nb * vzb > 0 THEN
-        |    (na + nb - 2)
-        |      * (na * (za - sz / (na + nb)) * (za - sz / (na + nb))
-        |        + nb * (zb - sz / (na + nb)) * (zb - sz / (na + nb)))
-        |      / (na * vza + nb * vzb) END, 6) AS f_stat
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q238_rate_mix" ->
-      // same conditional rollup; a one-sided segment coalesces to the
-      // present side's rate so its whole move lands in mix
-      """WITH b AS (SELECT o_orderpriority,
-        |    sum(CASE WHEN year(o_orderdate) < 1998
-        |      THEN o_totalprice END) AS sr,
-        |    count(CASE WHEN year(o_orderdate) < 1998 THEN 1 END) AS nr,
-        |    sum(CASE WHEN NOT (year(o_orderdate) < 1998)
-        |      THEN o_totalprice END) AS sc,
-        |    count(CASE WHEN NOT (year(o_orderdate) < 1998) THEN 1 END)
-        |      AS nc
-        |  FROM orders GROUP BY 1),
-        |w AS (SELECT *, sum(nr) OVER () AS tnr, sum(nc) OVER () AS tnc
-        |  FROM b),
-        |x AS (SELECT o_orderpriority,
-        |    CAST(nr AS DOUBLE) / tnr AS shr,
-        |    CAST(nc AS DOUBLE) / tnc AS shc,
-        |    coalesce(sr / nr, sc / nc) AS rr,
-        |    coalesce(sc / nc, sr / nr) AS rc
-        |  FROM w)
-        |SELECT o_orderpriority,
-        |  roundStable(shr, 2) AS share_ref, roundStable(shc, 2) AS share_cur,
-        |  roundStable(rr, 2) AS rate_ref, roundStable(rc, 2) AS rate_cur,
-        |  roundStable(shc * (rc - rr), 2) AS rate_effect,
-        |  roundStable((shc - shr) * rr, 2) AS mix_effect
-        |FROM x ORDER BY o_orderpriority""".stripMargin,
-
-    "q239_embedding_census" ->
-      // same double-accumulated norms/dots, same adjacent-id pairing
-      """WITH s AS (SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE)
-        |        * CAST(embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(embedding) + 1)])) AS nrm,
-        |    len(embedding) AS dim
-        |  FROM embeddings),
-        |c AS (SELECT count(*) AS n, CAST(min(dim) AS BIGINT) AS dim_min,
-        |    CAST(max(dim) AS BIGINT) AS dim_max,
-        |    roundStable(avg(nrm), 6) AS mean_norm,
-        |    roundStable(stddev_samp(nrm), 6) AS sd_norm,
-        |    CAST(sum(CASE WHEN nrm < 1e-12 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_zero
-        |  FROM s),
-        |p AS (SELECT roundStable(avg(cc), 6) AS mean_abs_cos_adjacent,
-        |    count(cc) AS n_pairs FROM (
-        |    SELECT CASE WHEN a.nrm > 0 AND b.nrm > 0 THEN
-        |        abs(list_sum([CAST(a.embedding[i] AS DOUBLE)
-        |            * CAST(b.embedding[i] AS DOUBLE)
-        |          FOR i IN range(1, len(a.embedding) + 1)])
-        |          / (a.nrm * b.nrm)) END AS cc
-        |    FROM s a JOIN s b ON b.vec_id = a.vec_id + 1))
-        |SELECT c.*, p.* FROM c, p""".stripMargin,
-
-    "q240_page_hinkley" ->
-      // same running-mean deviations, same prefix sums and running
-      // mins, same unrounded alarm thresholds
-      """WITH o AS (SELECT event_type, ts, event_id, value,
-        |    avg(value) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mu
-        |  FROM events),
-        |m AS (SELECT event_type, ts, event_id,
-        |    sum(value - mu - 1.0) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mup,
-        |    sum(mu - value - 1.0) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mlo
-        |  FROM o),
-        |p AS (SELECT event_type, ts,
-        |    mup - min(mup) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS php,
-        |    mlo - min(mlo) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS phl
-        |  FROM m)
-        |SELECT event_type,
-        |  CAST(sum(CASE WHEN php > 200.0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_alarms,
-        |  min(CASE WHEN php > 200.0 THEN ts END) AS first_alarm_at,
-        |  roundStable(max(php), 6) AS max_ph,
-        |  CAST(sum(CASE WHEN phl > 200.0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_alarms_lo,
-        |  min(CASE WHEN phl > 200.0 THEN ts END) AS first_alarm_lo_at,
-        |  roundStable(max(phl), 6) AS max_ph_lo,
-        |  count(*) AS n
-        |FROM p GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q241_degree_census" ->
-      // q153's graph prologue, one degree rollup, CSN alpha with
-      // d_min pinned to 1 (every ln(2d) term positive)
-      """WITH sp AS (SELECT DISTINCT l.l_suppkey AS sk, l.l_partkey AS pk
-        |      FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |      WHERE l.l_quantity > 48),
-        |e AS (SELECT r1.sk AS a, r2.sk AS b FROM sp r1 JOIN sp r2
-        |      ON r1.pk = r2.pk AND r1.sk < r2.sk GROUP BY 1, 2),
-        |deg AS (SELECT w, count(*) AS deg FROM
-        |        (SELECT a AS w FROM e UNION ALL SELECT b FROM e)
-        |      GROUP BY 1)
-        |SELECT count(*) AS n_nodes,
-        |  CAST(sum(deg) // 2 AS BIGINT) AS n_edges,
-        |  CAST(min(deg) AS BIGINT) AS min_deg,
-        |  CAST(max(deg) AS BIGINT) AS max_deg,
-        |  roundStable(CAST(sum(deg) AS DOUBLE) / count(*), 6) AS mean_deg,
-        |  roundStable(1.0 + CAST(count(*) AS DOUBLE)
-        |    / sum(ln(CAST(deg AS DOUBLE) / 0.5)), 6) AS alpha_mle,
-        |  roundStable(CAST(max(deg) AS DOUBLE) / sum(deg), 6)
-        |    AS hub_endpoint_share
-        |FROM deg""".stripMargin,
-
-    "q242_langid_confusion" ->
-      // the q32 scoring verbatim, folded to the confusion cells
-      """WITH p AS (SELECT lang,
-        |    CASE WHEN s_en >= s_es AND s_en >= s_zh THEN 'en'
-        |         WHEN s_es >= s_zh THEN 'es' ELSE 'zh' END
-        |      AS predicted_lang
-        |  FROM (SELECT lang,
-        |      CAST(len(list_filter(str_split(text,' '),
-        |        x -> x IN ('the','a'))) AS BIGINT) AS s_en,
-        |      CAST(len(list_filter(str_split(text,' '),
-        |        x -> x IN ('el','la','de','que'))) AS BIGINT) AS s_es,
-        |      CAST(len(list_filter(str_split(text,' '),
-        |        x -> x IN ('的','是','了'))) AS BIGINT) AS s_zh
-        |    FROM documents) t),
-        |c AS (SELECT lang, predicted_lang, count(*) AS n
-        |  FROM p GROUP BY 1, 2)
-        |SELECT lang, predicted_lang, n,
-        |  roundStable(CAST(n AS DOUBLE)
-        |    / sum(n) OVER (PARTITION BY lang), 6) AS share_of_lang
-        |FROM c ORDER BY lang, predicted_lang""".stripMargin,
-
-    "q243_cohen_kappa" ->
-      // q32 scoring; p_e meets on the distinct-label table (the
-      // missing-diagonal case), marginals coalesced to 0
-      """WITH p AS (SELECT lang AS a,
-        |    CASE WHEN s_en >= s_es AND s_en >= s_zh THEN 'en'
-        |         WHEN s_es >= s_zh THEN 'es' ELSE 'zh' END AS b
-        |  FROM (SELECT lang,
-        |      CAST(len(list_filter(str_split(text,' '),
-        |        x -> x IN ('the','a'))) AS BIGINT) AS s_en,
-        |      CAST(len(list_filter(str_split(text,' '),
-        |        x -> x IN ('el','la','de','que'))) AS BIGINT) AS s_es,
-        |      CAST(len(list_filter(str_split(text,' '),
-        |        x -> x IN ('的','是','了'))) AS BIGINT) AS s_zh
-        |    FROM documents) t),
-        |cells AS (SELECT a, b, CAST(count(*) AS DOUBLE) AS o
-        |  FROM p GROUP BY 1, 2),
-        |lbl AS (SELECT a AS l FROM cells UNION SELECT b FROM cells),
-        |am AS (SELECT a AS l, sum(o) AS ma FROM cells GROUP BY 1),
-        |bm AS (SELECT b AS l, sum(o) AS mb FROM cells GROUP BY 1),
-        |pe AS (SELECT sum(coalesce(ma, 0) * coalesce(mb, 0)) AS pexn
-        |  FROM lbl LEFT JOIN am USING (l) LEFT JOIN bm USING (l)),
-        |po AS (SELECT sum(CASE WHEN a = b THEN o ELSE 0 END) AS agree,
-        |    sum(o) AS N FROM cells)
-        |SELECT roundStable(agree / N, 6) AS observed_agreement,
-        |  roundStable(pexn / (N * N), 6) AS expected_agreement,
-        |  roundStable(CASE WHEN pexn / (N * N) < 1 THEN
-        |    (agree / N - pexn / (N * N)) / (1.0 - pexn / (N * N)) END, 6)
-        |    AS kappa,
-        |  CAST(N AS BIGINT) AS n
-        |FROM po, pe""".stripMargin,
-
-    "q244_audience_overlap" ->
-      // distinct memberships first, co-membership pairs by entity,
-      // lift against total distinct entities
-      """WITH m AS (SELECT DISTINCT user_id AS e, event_type AS c
-        |  FROM events),
-        |sz AS (SELECT c, count(*) AS sz FROM m GROUP BY 1),
-        |t AS (SELECT count(DISTINCT e) AS N FROM m),
-        |pr AS (SELECT x.c AS cat_a, y.c AS cat_b, count(*) AS n_both
-        |  FROM m x JOIN m y ON y.e = x.e AND x.c < y.c GROUP BY 1, 2)
-        |SELECT cat_a, cat_b,
-        |  CAST(a.sz AS BIGINT) AS n_a, CAST(b.sz AS BIGINT) AS n_b,
-        |  CAST(n_both AS BIGINT) AS n_both,
-        |  CAST(a.sz + b.sz - n_both AS BIGINT) AS n_union,
-        |  roundStable(CAST(n_both AS DOUBLE)
-        |    / (a.sz + b.sz - n_both), 6) AS jaccard,
-        |  roundStable(CAST(n_both AS DOUBLE) * t.N / (a.sz * b.sz), 6)
-        |    AS lift
-        |FROM pr JOIN sz a ON a.c = pr.cat_a
-        |  JOIN sz b ON b.c = pr.cat_b, t
-        |ORDER BY cat_a, cat_b""".stripMargin,
-
-    "q245_prop_test" ->
-      // same conditional counts, pooled-null z, unpooled CI
-      """WITH g AS (SELECT event_type,
-        |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-        |      AS DOUBLE) AS n1,
-        |    CAST(sum(CASE WHEN user_id % 2 <> 0 THEN 1 ELSE 0 END)
-        |      AS DOUBLE) AS n2,
-        |    CAST(sum(CASE WHEN user_id % 2 = 0 AND value > 250
-        |      THEN 1 ELSE 0 END) AS DOUBLE) AS s1,
-        |    CAST(sum(CASE WHEN user_id % 2 <> 0 AND value > 250
-        |      THEN 1 ELSE 0 END) AS DOUBLE) AS s2
-        |  FROM events GROUP BY 1),
-        |x AS (SELECT event_type, n1, n2, s1, s2,
-        |    s1 / n1 AS p1, s2 / n2 AS p2,
-        |    (s1 + s2) / (n1 + n2) AS pp FROM g)
-        |SELECT event_type,
-        |  CAST(n1 AS BIGINT) AS n_a, CAST(s1 AS BIGINT) AS succ_a,
-        |  CAST(n2 AS BIGINT) AS n_b, CAST(s2 AS BIGINT) AS succ_b,
-        |  roundStable(CASE WHEN n1 > 0 THEN p1 END, 6) AS p_a,
-        |  roundStable(CASE WHEN n2 > 0 THEN p2 END, 6) AS p_b,
-        |  roundStable(CASE WHEN n1 > 0 AND n2 > 0 AND pp > 0 AND pp < 1
-        |    THEN (p1 - p2) / sqrt(pp * (1.0 - pp)
-        |      * (1.0 / n1 + 1.0 / n2)) END, 6) AS z,
-        |  roundStable(CASE WHEN n1 > 0 AND n2 > 0 AND pp > 0 AND pp < 1
-        |    THEN (p1 - p2) - 1.96 * sqrt(p1 * (1.0 - p1) / n1
-        |      + p2 * (1.0 - p2) / n2) END, 6) AS diff_ci_lo,
-        |  roundStable(CASE WHEN n1 > 0 AND n2 > 0 AND pp > 0 AND pp < 1
-        |    THEN (p1 - p2) + 1.96 * sqrt(p1 * (1.0 - p1) / n1
-        |      + p2 * (1.0 - p2) / n2) END, 6) AS diff_ci_hi
-        |FROM x ORDER BY event_type""".stripMargin,
-
-    "q246_weighted_quantile" ->
-      // same cumulative-weight threshold, same exclusions
-      """WITH b AS (SELECT l_returnflag AS k, l_extendedprice AS v,
-        |    l_quantity AS w FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_quantity > 0),
-        |c AS (SELECT k, v,
-        |    sum(w) OVER (PARTITION BY k ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |    sum(w) OVER (PARTITION BY k) AS tw
-        |  FROM b)
-        |SELECT k AS l_returnflag, roundStable(min(v), 6) AS w_quantile,
-        |  roundStable(max(tw), 6) AS total_weight
-        |FROM c WHERE cw >= tw * 0.9 GROUP BY k
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q247_km_summary" ->
-      // the q172 curve verbatim, then one lead window integrates the
-      // staircase from the same 6dp-rounded survival values
-      """WITH u AS (SELECT user_id, min(ts) AS f, max(ts) AS l,
-        |        min(CASE WHEN event_type = 'error' THEN ts END) AS err
-        |      FROM events GROUP BY 1),
-        |s AS (SELECT user_id % 3 AS cohort,
-        |        date_diff('day', CAST(f AS DATE),
-        |          CAST(coalesce(err, l) AS DATE)) AS t,
-        |        (err IS NOT NULL) AS obs
-        |      FROM u),
-        |g AS (SELECT cohort, t,
-        |        sum(CASE WHEN obs THEN 1 ELSE 0 END) AS d,
-        |        sum(CASE WHEN obs THEN 0 ELSE 1 END) AS c
-        |      FROM s GROUP BY 1, 2),
-        |w AS (SELECT cohort, t, d, c,
-        |        sum(d + c) OVER (PARTITION BY cohort ORDER BY t
-        |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS n
-        |      FROM g),
-        |f AS (SELECT cohort, t, d, c, n,
-        |        1.0 - CAST(d AS DOUBLE) / n AS fac FROM w),
-        |k AS (SELECT cohort, t, n,
-        |        roundStable(CASE WHEN min(fac) OVER win <= 0 THEN 0.0
-        |          ELSE exp(sum(CASE WHEN fac > 0 THEN ln(fac)
-        |            ELSE 0.0 END) OVER win) END, 6) AS surv
-        |      FROM f
-        |      WINDOW win AS (PARTITION BY cohort ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |l AS (SELECT cohort, t, surv, n,
-        |        lead(t) OVER (PARTITION BY cohort ORDER BY t) AS nxt,
-        |        min(t) OVER (PARTITION BY cohort) AS t0
-        |      FROM k)
-        |SELECT cohort,
-        |  CAST(min(CASE WHEN surv <= 0.5 THEN t END) AS BIGINT)
-        |    AS median_survival_t,
-        |  roundStable(CAST(max(t0) AS DOUBLE)
-        |    + sum(surv * CAST(coalesce(nxt, t) - t AS DOUBLE)), 6)
-        |    AS rmst,
-        |  CAST(max(t) AS BIGINT) AS horizon_t,
-        |  roundStable(min(surv), 6) AS final_survival,
-        |  CAST(max(n) AS BIGINT) AS n_subjects
-        |FROM l GROUP BY cohort ORDER BY cohort""".stripMargin,
-
-    "q248_mode" ->
-      // Monday=0 weekday pin, (count desc, value asc) tiebreak
-      """WITH c AS (SELECT event_type, isodow(ts) - 1 AS mode,
-        |    count(*) AS mc FROM events GROUP BY 1, 2),
-        |r AS (SELECT event_type, mode, mc,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY mc DESC, mode) AS rn,
-        |    sum(mc) OVER (PARTITION BY event_type) AS tot,
-        |    count(*) OVER (PARTITION BY event_type) AS nv
-        |  FROM c)
-        |SELECT event_type, CAST(mode AS BIGINT) AS mode,
-        |  CAST(mc AS BIGINT) AS mode_count,
-        |  CAST(nv AS BIGINT) AS n_distinct,
-        |  roundStable(CAST(mc AS DOUBLE) / tot, 6) AS mode_share
-        |FROM r WHERE rn = 1 ORDER BY event_type""".stripMargin,
-
-    "q249_anova" ->
-      // same per-(type, dow) moments, same SSB/SSW decomposition
-      """WITH c AS (SELECT event_type, isodow(ts) - 1 AS lvl,
-        |    CAST(count(value) AS DOUBLE) AS n, sum(value) AS s,
-        |    sum(value * value) AS ss
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |g AS (SELECT event_type, sum(n) AS n, CAST(count(*) AS DOUBLE)
-        |      AS k, sum(s) AS s, sum(ss) AS ss, sum(s * s / n) AS sb
-        |  FROM c GROUP BY 1)
-        |SELECT event_type, CAST(k AS BIGINT) AS k_groups,
-        |  CAST(n AS BIGINT) AS n, CAST(k - 1 AS BIGINT) AS df_between,
-        |  CAST(n - k AS BIGINT) AS df_within,
-        |  roundStable(CASE WHEN k > 1 AND n > k AND (ss - sb) > 0
-        |    THEN ((sb - s * s / n) / (k - 1))
-        |      / ((ss - sb) / (n - k)) END, 6) AS f_stat,
-        |  roundStable(CASE WHEN (ss - s * s / n) > 0
-        |    THEN (sb - s * s / n) / (ss - s * s / n) END, 6) AS eta_sq
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q250_mcnemar" ->
-      // same per-(type, user) phase flags, same discordant-cell χ²
-      """WITH p AS (SELECT event_type, user_id,
-        |    max(CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0
-        |      END) AS pf,
-        |    max(CASE WHEN ts >= TIMESTAMP '2024-01-16' THEN 1 ELSE 0
-        |      END) AS ps,
-        |    max(CASE WHEN ts < TIMESTAMP '2024-01-16' AND value > 250
-        |      THEN 1 ELSE 0 END) AS a,
-        |    max(CASE WHEN ts >= TIMESTAMP '2024-01-16' AND value > 250
-        |      THEN 1 ELSE 0 END) AS b
-        |  FROM events GROUP BY 1, 2),
-        |g AS (SELECT event_type, count(*) AS ns,
-        |    sum(CASE WHEN pf = 1 AND ps = 1 THEN 1 ELSE 0 END) AS np,
-        |    sum(CASE WHEN pf = 1 AND ps = 1 AND a = 1 AND b = 1
-        |      THEN 1 ELSE 0 END) AS bh,
-        |    sum(CASE WHEN pf = 1 AND ps = 1 AND a = 0 AND b = 0
-        |      THEN 1 ELSE 0 END) AS nh,
-        |    CAST(sum(CASE WHEN pf = 1 AND ps = 1 AND a = 1 AND b = 0
-        |      THEN 1 ELSE 0 END) AS DOUBLE) AS bb,
-        |    CAST(sum(CASE WHEN pf = 1 AND ps = 1 AND a = 0 AND b = 1
-        |      THEN 1 ELSE 0 END) AS DOUBLE) AS cc
-        |  FROM p GROUP BY 1)
-        |SELECT event_type, CAST(ns AS BIGINT) AS n_subjects,
-        |  CAST(np AS BIGINT) AS n_pairs, CAST(bh AS BIGINT) AS both_hit,
-        |  CAST(nh AS BIGINT) AS neither_hit,
-        |  CAST(bb AS BIGINT) AS first_only,
-        |  CAST(cc AS BIGINT) AS second_only,
-        |  roundStable(CASE WHEN bb + cc > 0
-        |    THEN (bb - cc) * (bb - cc) / (bb + cc) END, 6) AS chi2,
-        |  roundStable(CASE WHEN bb + cc > 0
-        |    THEN pow(abs(bb - cc) - 1.0, 2) / (bb + cc) END, 6)
-        |    AS chi2_cc
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q251_nelson_aalen" ->
-      // q247's per-user staging verbatim; ordered cumulative sums over
-      // the same keyed sort are bit-deterministic on both engines
-      """WITH u AS (SELECT user_id, min(ts) AS f, max(ts) AS l,
-        |        min(CASE WHEN event_type = 'error' THEN ts END) AS err
-        |      FROM events GROUP BY 1),
-        |s AS (SELECT user_id % 3 AS cohort,
-        |        date_diff('day', CAST(f AS DATE),
-        |          CAST(coalesce(err, l) AS DATE)) AS t,
-        |        (err IS NOT NULL) AS obs
-        |      FROM u),
-        |g AS (SELECT cohort, t,
-        |        sum(CASE WHEN obs THEN 1 ELSE 0 END) AS d,
-        |        sum(CASE WHEN obs THEN 0 ELSE 1 END) AS c
-        |      FROM s GROUP BY 1, 2),
-        |w AS (SELECT cohort, t, d, c,
-        |        sum(d + c) OVER (PARTITION BY cohort ORDER BY t
-        |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS n
-        |      FROM g),
-        |h AS (SELECT cohort, t, d, c, n,
-        |        roundStable(sum(CAST(d AS DOUBLE) / n) OVER win, 6)
-        |          AS cum_hazard,
-        |        roundStable(sum(CAST(d AS DOUBLE)
-        |          / (CAST(n AS DOUBLE) * n)) OVER win, 6) AS hazard_var
-        |      FROM w
-        |      WINDOW win AS (PARTITION BY cohort ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT cohort, CAST(t AS BIGINT) AS t,
-        |  CAST(n AS BIGINT) AS n_risk, CAST(d AS BIGINT) AS n_events,
-        |  CAST(c AS BIGINT) AS n_censored, cum_hazard, hazard_var,
-        |  roundStable(exp(-cum_hazard), 6) AS fh_survival
-        |FROM h ORDER BY cohort, t""".stripMargin,
-
-    "q288_crosslang_dups" ->
-      // the q34 exact-pair CTE + language labels on both sides
-      """WITH s AS (SELECT doc_id, str_split(text, ' ') AS w
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |      FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh
-        |  FROM sh),
-        |pr AS (SELECT doc_a, doc_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |      CAST(count(*) AS DOUBLE)
-        |        / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |    FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |    GROUP BY 1, 2) t WHERE j >= 0.5)
-        |SELECT least(da.lang, db.lang) AS lang_a,
-        |  greatest(da.lang, db.lang) AS lang_b,
-        |  count(*) AS n_pairs,
-        |  CAST(sum(CASE WHEN da.lang <> db.lang THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_cross_label
-        |FROM pr JOIN documents da ON da.doc_id = pr.doc_a
-        |  JOIN documents db ON db.doc_id = pr.doc_b
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q289_source_separation" ->
-      // per-source centroids by dimension, pairwise cosine — position
-      // bases differ per engine but pair identically within each
-      """WITH d AS (SELECT doc.source AS source, e.embedding
-        |  FROM embeddings e JOIN documents doc
-        |    ON e.vec_id = doc.doc_id),
-        |x AS (SELECT source, i AS pos,
-        |    CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        |  FROM d, range(1, 65) t(i)),
-        |c AS (SELECT source, pos, avg(x) AS c FROM x GROUP BY 1, 2)
-        |SELECT a.source AS src_a, b.source AS src_b,
-        |  roundStable(sum(a.c * b.c)
-        |    / (sqrt(sum(a.c * a.c)) * sqrt(sum(b.c * b.c))), 6)
-        |    AS centroid_cosine
-        |FROM c a JOIN c b ON a.pos = b.pos AND a.source < b.source
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q290_context_fit" ->
-      // same length census against the same context grid
-      """WITH lens AS (SELECT CAST(len(str_split(text, ' ')) AS BIGINT)
-        |    AS n FROM documents),
-        |ctx AS (SELECT * FROM (VALUES (128), (512), (2048)) t(ctx_len))
-        |SELECT CAST(ctx_len AS BIGINT) AS ctx_len, count(*) AS n_docs,
-        |  CAST(sum(n) AS BIGINT) AS tokens_total,
-        |  CAST(sum(CASE WHEN n > ctx_len THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS truncated_docs,
-        |  roundStable(CAST(sum(CASE WHEN n > ctx_len THEN n - ctx_len
-        |    ELSE 0 END) AS DOUBLE) / CAST(sum(n) AS DOUBLE), 6)
-        |    AS tokens_lost_share,
-        |  roundStable(CAST(sum(ctx_len - least(n, ctx_len)) AS DOUBLE)
-        |    / CAST(count(*) * ctx_len AS DOUBLE), 6) AS padding_share
-        |FROM ctx, lens GROUP BY ctx_len ORDER BY ctx_len""".stripMargin,
-
-    "q291_source_silhouette" ->
-      // same centroid-variant silhouette: per-source centroid lists,
-      // distances via the p·p − 2p·c + c·c identity, fp-clamped at 0
-      """WITH p AS (SELECT e.vec_id, d.source, e.embedding,
-        |    list_sum([CAST(e.embedding[i] AS DOUBLE)
-        |        * CAST(e.embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(e.embedding) + 1)]) AS pp
-        |  FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id),
-        |x AS (SELECT source, i AS pos,
-        |    CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        |  FROM p, range(1, 65) t(i)),
-        |cm AS (SELECT source, pos, avg(x) AS c FROM x GROUP BY 1, 2),
-        |cent AS (SELECT source AS ck, list(c ORDER BY pos) AS cent,
-        |    list_sum([c * c FOR c IN list(c ORDER BY pos)]) AS cc
-        |  FROM cm GROUP BY 1),
-        |d2 AS (SELECT p.vec_id, p.source, cent.ck,
-        |    sqrt(greatest(0.0, p.pp
-        |      - 2.0 * list_sum([CAST(p.embedding[i] AS DOUBLE)
-        |          * cent.cent[CAST(i AS INT)]
-        |        FOR i IN range(1, len(p.embedding) + 1)])
-        |      + cent.cc)) AS d
-        |  FROM p, cent),
-        |pp AS (SELECT vec_id, source,
-        |    min(CASE WHEN ck = source THEN d END) AS a,
-        |    min(CASE WHEN ck <> source THEN d END) AS b
-        |  FROM d2 GROUP BY 1, 2),
-        |s AS (SELECT source,
-        |    CASE WHEN greatest(a, b) > 0 THEN (b - a) / greatest(a, b)
-        |      ELSE 0.0 END AS s
-        |  FROM pp)
-        |SELECT source, count(*) AS n_points,
-        |  roundStable(avg(s), 6) AS mean_silhouette,
-        |  roundStable(avg(CASE WHEN s < 0 THEN 1.0 ELSE 0.0 END), 6)
-        |    AS misfit_share
-        |FROM s GROUP BY source ORDER BY source""".stripMargin,
-
-    "q292_pc1_power" -> Pc1OracleSql.sql,
-
-    "q379_label_pr" ->
-      // the q377 trace folds, grouped by label
-      """WITH px AS (SELECT label, i.i AS i, j.j AS j,
-        |    CAST(embedding[CAST(i.i AS INT)] AS DOUBLE) AS xi,
-        |    CAST(embedding[CAST(j.j AS INT)] AS DOUBLE) AS xj
-        |  FROM embeddings, range(1, 65) i(i), range(1, 65) j(j)),
-        |cv AS MATERIALIZED (SELECT label, i, j,
-        |    sum(xi * xj) / count(*)
-        |      - (sum(xi) / count(*)) * (sum(xj) / count(*)) AS c
-        |  FROM px GROUP BY 1, 2, 3),
-        |nn AS (SELECT label, CAST(count(*) AS BIGINT) AS n
-        |       FROM embeddings GROUP BY 1),
-        |tr AS (SELECT label, sum(CASE WHEN i = j THEN c ELSE 0 END) AS t,
-        |    sum(c * c) AS t2 FROM cv GROUP BY 1)
-        |SELECT CAST(nn.label AS BIGINT) AS label,
-        |  CAST(64 AS BIGINT) AS dim, nn.n AS n_vectors,
-        |  roundStable(tr.t, 6) AS trace_cov,
-        |  roundStable(CASE WHEN tr.t2 > 0
-        |    THEN tr.t * tr.t / tr.t2 END, 6) AS participation_ratio,
-        |  roundStable(CASE WHEN tr.t2 > 0
-        |    THEN tr.t * tr.t / tr.t2 / 64.0 END, 6) AS pr_share
-        |FROM nn JOIN tr USING (label) ORDER BY label""".stripMargin,
-
-    "q378_kneser_ney" ->
-      // identical cell algebra: c12/c1/N1+ forward by w1, continuation
-      // counts by w2, B = bigram-type count, then the interpolated-KN
-      // expression tree verbatim
-      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS l FROM documents),
-        |bgz AS (SELECT doc_id, unnest(list_zip(l[1:len(l)-1], l[2:len(l)])) AS z
-        |        FROM d WHERE len(l) >= 2),
-        |bg AS (SELECT doc_id, z[1] AS w1, z[2] AS w2 FROM bgz),
-        |c12 AS (SELECT w1, w2, CAST(count(*) AS DOUBLE) AS c12
-        |        FROM bg GROUP BY w1, w2),
-        |bt AS (SELECT CAST(count(*) AS DOUBLE) AS b FROM c12),
-        |c1 AS (SELECT w1, CAST(count(*) AS DOUBLE) AS c1,
-        |         CAST(count(DISTINCT w2) AS DOUBLE) AS n1f
-        |       FROM bg GROUP BY w1),
-        |pc AS (SELECT w2, CAST(count(*) AS DOUBLE) AS n1r
-        |       FROM c12 GROUP BY w2),
-        |lm AS (SELECT c12.w1, c12.w2,
-        |         ln((greatest(c12 - 0.75, CAST(0 AS DOUBLE))
-        |           + 0.75 * n1f * (n1r / b)) / c1) AS lp
-        |       FROM c12 JOIN c1 USING (w1) JOIN pc USING (w2)
-        |       CROSS JOIN bt)
-        |SELECT bg.doc_id, count(*) AS n_bigrams,
-        |  roundStable(avg(lp), 6) AS mean_kn_logprob
-        |FROM bg JOIN lm ON bg.w1 = lm.w1 AND bg.w2 = lm.w2
-        |GROUP BY bg.doc_id ORDER BY doc_id""".stripMargin,
-
-    "q380_kn_trigram" ->
-      // the same cell algebra one order up: raw trigram counts on top,
-      // continuation counts (distinct-left-context) for the middle
-      // order, type-count continuation at the bottom; per-order
-      // Chen-Goodman discounts n1/(n1+2n2) recomputed as scalar
-      // subqueries and ALSO compared by value via the discount columns
-      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS l FROM documents),
-        |tgz AS (SELECT doc_id, unnest(list_zip(l[1:len(l)-2],
-        |          l[2:len(l)-1], l[3:len(l)])) AS z
-        |        FROM d WHERE len(l) >= 3),
-        |tg AS MATERIALIZED (SELECT doc_id, z[1] AS w1, z[2] AS w2, z[3] AS w3 FROM tgz),
-        |c3 AS MATERIALIZED (SELECT w1, w2, w3, CAST(count(*) AS DOUBLE) AS c3
-        |       FROM tg GROUP BY 1, 2, 3),
-        |dhi AS (SELECT CASE WHEN sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) = 0
-        |          THEN 0.75
-        |          ELSE CAST(sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |            / (sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END)
-        |               + 2.0 * sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END)) END AS dh
-        |        FROM c3),
-        |cp AS (SELECT w1, w2, CAST(count(*) AS DOUBLE) AS cp,
-        |         CAST(count(DISTINCT w3) AS DOUBLE) AS n1f3
-        |       FROM tg GROUP BY 1, 2),
-        |cont2 AS MATERIALIZED (SELECT w2, w3, CAST(count(*) AS DOUBLE) AS n2c
-        |          FROM c3 GROUP BY 1, 2),
-        |dmid AS (SELECT CASE WHEN sum(CASE WHEN n2c = 1 THEN 1 ELSE 0 END) = 0
-        |           THEN 0.75
-        |           ELSE CAST(sum(CASE WHEN n2c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / (sum(CASE WHEN n2c = 1 THEN 1 ELSE 0 END)
-        |                + 2.0 * sum(CASE WHEN n2c = 2 THEN 1 ELSE 0 END)) END AS dm
-        |         FROM cont2),
-        |mid AS (SELECT w2, sum(n2c) AS den2,
-        |          CAST(count(*) AS DOUBLE) AS n1f2
-        |        FROM cont2 GROUP BY 1),
-        |uc AS (SELECT w3, CAST(count(*) AS DOUBLE) AS n1r
-        |       FROM cont2 GROUP BY 1),
-        |bt AS (SELECT CAST(count(*) AS DOUBLE) AS b FROM cont2),
-        |lp AS (SELECT tg.doc_id,
-        |         ln((greatest(c3.c3 - dh, CAST(0 AS DOUBLE))
-        |           + dh * cp.n1f3
-        |             * ((greatest(cont2.n2c - dm, CAST(0 AS DOUBLE))
-        |                + dm * mid.n1f2 * (uc.n1r / bt.b)) / mid.den2))
-        |           / cp.cp) AS lp
-        |       FROM tg JOIN c3 USING (w1, w2, w3) JOIN cp USING (w1, w2)
-        |         JOIN cont2 USING (w2, w3) JOIN mid USING (w2)
-        |         JOIN uc USING (w3)
-        |         CROSS JOIN dhi CROSS JOIN dmid CROSS JOIN bt)
-        |SELECT doc_id, count(*) AS n_trigrams,
-        |  roundStable(avg(lp), 6) AS mean_kn_logprob,
-        |  roundStable((SELECT dh FROM dhi), 6) AS discount_hi,
-        |  roundStable((SELECT dm FROM dmid), 6) AS discount_mid
-        |FROM lp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q391_kn_fourgram" ->
-      // the q380 replica one order up: raw fourgram counts on top, then
-      // level-from-level continuation tables (cont3 from c4 types,
-      // cont2 from cont3 types), per-order Chen-Goodman discounts as
-      // scalar subqueries, compared by value via the discount columns
-      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS l FROM documents),
-        |qgz AS (SELECT doc_id, unnest(list_zip(l[1:len(l)-3],
-        |          l[2:len(l)-2], l[3:len(l)-1], l[4:len(l)])) AS z
-        |        FROM d WHERE len(l) >= 4),
-        |qg AS MATERIALIZED (SELECT doc_id, z[1] AS w1, z[2] AS w2,
-        |        z[3] AS w3, z[4] AS w4 FROM qgz),
-        |c4 AS MATERIALIZED (SELECT w1, w2, w3, w4,
-        |        CAST(count(*) AS DOUBLE) AS c4
-        |      FROM qg GROUP BY 1, 2, 3, 4),
-        |dhi AS (SELECT CASE WHEN sum(CASE WHEN c4 = 1 THEN 1 ELSE 0 END) = 0
-        |          THEN 0.75
-        |          ELSE CAST(sum(CASE WHEN c4 = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |            / (sum(CASE WHEN c4 = 1 THEN 1 ELSE 0 END)
-        |               + 2.0 * sum(CASE WHEN c4 = 2 THEN 1 ELSE 0 END)) END AS dh
-        |        FROM c4),
-        |cp3 AS (SELECT w1, w2, w3, CAST(count(*) AS DOUBLE) AS cp3,
-        |          CAST(count(DISTINCT w4) AS DOUBLE) AS n1f4
-        |        FROM qg GROUP BY 1, 2, 3),
-        |cont3 AS MATERIALIZED (SELECT w2, w3, w4,
-        |          CAST(count(*) AS DOUBLE) AS n3c
-        |        FROM c4 GROUP BY 1, 2, 3),
-        |dm3x AS (SELECT CASE WHEN sum(CASE WHEN n3c = 1 THEN 1 ELSE 0 END) = 0
-        |           THEN 0.75
-        |           ELSE CAST(sum(CASE WHEN n3c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / (sum(CASE WHEN n3c = 1 THEN 1 ELSE 0 END)
-        |                + 2.0 * sum(CASE WHEN n3c = 2 THEN 1 ELSE 0 END)) END AS dm3
-        |         FROM cont3),
-        |mid3 AS (SELECT w2, w3, sum(n3c) AS den3,
-        |           CAST(count(*) AS DOUBLE) AS n1f3c
-        |         FROM cont3 GROUP BY 1, 2),
-        |cont2 AS MATERIALIZED (SELECT w3, w4,
-        |          CAST(count(*) AS DOUBLE) AS n2c
-        |        FROM cont3 GROUP BY 1, 2),
-        |dm2x AS (SELECT CASE WHEN sum(CASE WHEN n2c = 1 THEN 1 ELSE 0 END) = 0
-        |           THEN 0.75
-        |           ELSE CAST(sum(CASE WHEN n2c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / (sum(CASE WHEN n2c = 1 THEN 1 ELSE 0 END)
-        |                + 2.0 * sum(CASE WHEN n2c = 2 THEN 1 ELSE 0 END)) END AS dm2
-        |         FROM cont2),
-        |mid2 AS (SELECT w3, sum(n2c) AS den2,
-        |           CAST(count(*) AS DOUBLE) AS n1f2
-        |         FROM cont2 GROUP BY 1),
-        |uc AS (SELECT w4, CAST(count(*) AS DOUBLE) AS n1r
-        |       FROM cont2 GROUP BY 1),
-        |bt AS (SELECT CAST(count(*) AS DOUBLE) AS b FROM cont2),
-        |lp AS (SELECT qg.doc_id,
-        |         ln((greatest(c4.c4 - dh, CAST(0 AS DOUBLE))
-        |           + dh * cp3.n1f4
-        |             * ((greatest(cont3.n3c - dm3, CAST(0 AS DOUBLE))
-        |                + dm3 * mid3.n1f3c
-        |                  * ((greatest(cont2.n2c - dm2, CAST(0 AS DOUBLE))
-        |                     + dm2 * mid2.n1f2 * (uc.n1r / bt.b))
-        |                    / mid2.den2))
-        |               / mid3.den3))
-        |           / cp3.cp3) AS lp
-        |       FROM qg JOIN c4 USING (w1, w2, w3, w4)
-        |         JOIN cp3 USING (w1, w2, w3)
-        |         JOIN cont3 USING (w2, w3, w4) JOIN mid3 USING (w2, w3)
-        |         JOIN cont2 USING (w3, w4) JOIN mid2 USING (w3)
-        |         JOIN uc USING (w4)
-        |         CROSS JOIN dhi CROSS JOIN dm3x CROSS JOIN dm2x
-        |         CROSS JOIN bt)
-        |SELECT doc_id, count(*) AS n_fourgrams,
-        |  roundStable(avg(lp), 6) AS mean_kn_logprob,
-        |  roundStable((SELECT dh FROM dhi), 6) AS discount_hi,
-        |  roundStable((SELECT dm3 FROM dm3x), 6) AS discount_mid3,
-        |  roundStable((SELECT dm2 FROM dm2x), 6) AS discount_mid2
-        |FROM lp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q377_participation_ratio" ->
-      // the identical covariance cells (q292's px/cv CTEs), then both
-      // traces as straight folds: tr(C) on the diagonal, tr(C^2) =
-      // sum of squared cells (C symmetric)
-      """WITH px AS (SELECT i.i AS i, j.j AS j,
-        |    CAST(embedding[CAST(i.i AS INT)] AS DOUBLE) AS xi,
-        |    CAST(embedding[CAST(j.j AS INT)] AS DOUBLE) AS xj
-        |  FROM embeddings, range(1, 65) i(i), range(1, 65) j(j)),
-        |cv AS MATERIALIZED (SELECT i, j,
-        |    sum(xi * xj) / count(*)
-        |      - (sum(xi) / count(*)) * (sum(xj) / count(*)) AS c
-        |  FROM px GROUP BY 1, 2),
-        |tr AS (SELECT sum(c) AS t FROM cv WHERE i = j),
-        |t2 AS (SELECT sum(c * c) AS t2 FROM cv),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings)
-        |SELECT CAST(64 AS BIGINT) AS dim, nn.n AS n_vectors,
-        |  roundStable(tr.t, 6) AS trace_cov,
-        |  roundStable(CASE WHEN t2.t2 > 0
-        |    THEN tr.t * tr.t / t2.t2 END, 6) AS participation_ratio,
-        |  roundStable(CASE WHEN t2.t2 > 0
-        |    THEN tr.t * tr.t / t2.t2 / 64.0 END, 6) AS pr_share
-        |FROM tr, t2, nn""".stripMargin,
-
-    "q371_debias" -> Pc1OracleSql.debiasSql,
-
-    "q293_knn_outlier" ->
-      // same all-pairs cosine distance, rounded BEFORE ranking, id
-      // tie-breaks, k=10 mean, top-20 by (score desc, id)
-      """WITH v AS (SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE)
-        |        * CAST(embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (SELECT a.vec_id AS ida, b.vec_id AS idb,
-        |    roundStable(1.0 - list_sum([CAST(a.embedding[i] AS DOUBLE)
-        |        * CAST(b.embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(a.embedding) + 1)]) / (a.nrm * b.nrm), 6)
-        |      AS dist
-        |  FROM v a JOIN v b ON a.vec_id <> b.vec_id),
-        |r AS (SELECT ida, dist, row_number() OVER (PARTITION BY ida
-        |    ORDER BY dist ASC, idb ASC) AS rk FROM p),
-        |s AS (SELECT ida, roundStable(avg(dist), 6) AS knn_dist
-        |  FROM r WHERE rk <= 10 GROUP BY 1),
-        |t AS (SELECT ida, knn_dist, row_number() OVER (
-        |    ORDER BY knn_dist DESC, ida ASC) AS rank FROM s)
-        |SELECT CAST(rank AS BIGINT) AS rank, ida AS vec_id, knn_dist
-        |FROM t WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-    "q294_isotonic" ->
-      // the same 20-bin reduction, interval means from inclusive prefix
-      // sums, and the minimax identity over (k, i, j) triples
-      """WITH b AS (SELECT
-        |    roundStable(least(value / 500, CAST(1 AS DOUBLE)), 9) AS s,
-        |    CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END AS y
-        |  FROM events WHERE value IS NOT NULL),
-        |g AS (SELECT CAST(least(floor(s * 20), 19) AS BIGINT) AS bin,
-        |    CAST(count(*) AS DOUBLE) AS n, avg(s) AS conf, sum(y) AS pos
-        |  FROM b GROUP BY 1),
-        |c AS (SELECT bin, n, pos,
-        |    sum(n) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cn,
-        |    sum(pos) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cp
-        |  FROM g),
-        |iv AS (SELECT a.bin AS i, j.bin AS j,
-        |    (j.cp - (a.cp - a.pos)) / (j.cn - (a.cn - a.n)) AS av
-        |  FROM c a JOIN c j ON a.bin <= j.bin),
-        |mm AS (SELECT k.bin AS bin, iv.i, min(iv.av) AS m
-        |  FROM c k JOIN iv ON iv.i <= k.bin AND k.bin <= iv.j
-        |  GROUP BY 1, 2),
-        |f AS (SELECT bin, max(m) AS fit FROM mm GROUP BY 1)
-        |SELECT g.bin, CAST(g.n AS BIGINT) AS n,
-        |  roundStable(g.conf, 6) AS confidence,
-        |  roundStable(g.pos / g.n, 6) AS accuracy,
-        |  roundStable(f.fit, 6) AS iso_rate
-        |FROM g JOIN f USING (bin) ORDER BY bin""".stripMargin,
-
-    "q295_dispersion" ->
-      // same occupied-unit counts and the identical moment arithmetic
-      """WITH u AS (SELECT event_type, user_id, CAST(ts AS DATE) AS d,
-        |    CAST(count(*) AS DOUBLE) AS c
-        |  FROM events GROUP BY 1, 2, 3),
-        |s AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    sum(c) AS s1, sum(c * c) AS s2 FROM u GROUP BY 1)
-        |SELECT event_type, CAST(n AS BIGINT) AS n_units,
-        |  CAST(s1 AS BIGINT) AS n_events,
-        |  roundStable(s1 / n, 6) AS mean_per_unit,
-        |  roundStable(CASE WHEN n > 1 AND s1 / n > 0 THEN
-        |    ((s2 - n * (s1 / n) * (s1 / n)) / (n - 1)) / (s1 / n)
-        |    END, 6) AS dispersion,
-        |  roundStable(CASE WHEN n > 1 AND s1 / n > 0 THEN
-        |    (n - 1) * (((s2 - n * (s1 / n) * (s1 / n)) / (n - 1))
-        |      / (s1 / n)) END, 6) AS chi2,
-        |  roundStable(CASE WHEN n > 1 AND s1 / n > 0 THEN
-        |    sqrt(2.0 * ((n - 1) * (((s2 - n * (s1 / n) * (s1 / n)) / (n - 1))
-        |        / (s1 / n))))
-        |      - sqrt(2.0 * (n - 1) - 1) END, 6) AS z
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    "q296_fd_audit" ->
-      // per declared pair: distinct cells -> per-det max/sum -> g3
-      """WITH c1 AS (SELECT l_partkey AS det, l_suppkey AS dep, count(*) AS c
-        |  FROM lineitem WHERE l_partkey IS NOT NULL GROUP BY 1, 2),
-        |d1 AS (SELECT det, max(c) AS mx, sum(c) AS tot, count(*) AS nd
-        |  FROM c1 GROUP BY 1),
-        |c2 AS (SELECT l_orderkey AS det, l_returnflag AS dep, count(*) AS c
-        |  FROM lineitem WHERE l_orderkey IS NOT NULL GROUP BY 1, 2),
-        |d2 AS (SELECT det, max(c) AS mx, sum(c) AS tot, count(*) AS nd
-        |  FROM c2 GROUP BY 1),
-        |c3 AS (SELECT l_suppkey AS det, l_linestatus AS dep, count(*) AS c
-        |  FROM lineitem WHERE l_suppkey IS NOT NULL GROUP BY 1, 2),
-        |d3 AS (SELECT det, max(c) AS mx, sum(c) AS tot, count(*) AS nd
-        |  FROM c3 GROUP BY 1),
-        |c4 AS (SELECT o_orderkey AS det, o_custkey AS dep, count(*) AS c
-        |  FROM orders WHERE o_orderkey IS NOT NULL GROUP BY 1, 2),
-        |d4 AS (SELECT det, max(c) AS mx, sum(c) AS tot, count(*) AS nd
-        |  FROM c4 GROUP BY 1)
-        |SELECT * FROM (
-        |  SELECT 'l_partkey' AS determinant, 'l_suppkey' AS dependent,
-        |    CAST(count(*) AS BIGINT) AS n_det,
-        |    CAST(sum(tot) AS BIGINT) AS n_rows,
-        |    CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS violating_det,
-        |    roundStable(1.0 - CAST(sum(mx) AS DOUBLE)
-        |      / CAST(sum(tot) AS DOUBLE), 6) AS g3 FROM d1
-        |  UNION ALL
-        |  SELECT 'l_orderkey', 'l_returnflag', CAST(count(*) AS BIGINT),
-        |    CAST(sum(tot) AS BIGINT),
-        |    CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT),
-        |    roundStable(1.0 - CAST(sum(mx) AS DOUBLE)
-        |      / CAST(sum(tot) AS DOUBLE), 6) FROM d2
-        |  UNION ALL
-        |  SELECT 'l_suppkey', 'l_linestatus', CAST(count(*) AS BIGINT),
-        |    CAST(sum(tot) AS BIGINT),
-        |    CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT),
-        |    roundStable(1.0 - CAST(sum(mx) AS DOUBLE)
-        |      / CAST(sum(tot) AS DOUBLE), 6) FROM d3
-        |  UNION ALL
-        |  SELECT 'o_orderkey', 'o_custkey', CAST(count(*) AS BIGINT),
-        |    CAST(sum(tot) AS BIGINT),
-        |    CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT),
-        |    roundStable(1.0 - CAST(sum(mx) AS DOUBLE)
-        |      / CAST(sum(tot) AS DOUBLE), 6) FROM d4)
-        |ORDER BY determinant, dependent""".stripMargin,
-
-    "q297_richness" ->
-      // same per-source token cells, same Good-Turing / Chao1 closed
-      // forms (bias-corrected: n1(n1-1)/(2(n2+1)))
-      """WITH c AS (SELECT source, t, count(*) AS c FROM (
-        |    SELECT source, unnest(str_split(text, ' ')) AS t
-        |    FROM documents) WHERE t <> '' GROUP BY 1, 2),
-        |s AS (SELECT source, sum(c) AS n, count(*) AS v,
-        |    sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS n1,
-        |    sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS n2
-        |  FROM c GROUP BY 1)
-        |SELECT source, CAST(n AS BIGINT) AS n_tokens,
-        |  CAST(v AS BIGINT) AS n_types, CAST(n1 AS BIGINT) AS n_hapax,
-        |  CAST(n2 AS BIGINT) AS n_dis,
-        |  roundStable(CAST(n1 AS DOUBLE) / n, 6) AS p_unseen,
-        |  roundStable(1.0 - CAST(n1 AS DOUBLE) / n, 6) AS coverage,
-        |  roundStable(v + CAST(n1 AS DOUBLE) * (n1 - 1)
-        |    / (2.0 * (n2 + 1)), 6) AS chao1
-        |FROM s ORDER BY source""".stripMargin,
-
-    "q298_capture_recapture" ->
-      // same per-(type, user) membership flags, same Chapman estimate
-      // and Seber variance
-      """WITH i AS (SELECT event_type, user_id,
-        |    max(CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END) AS a,
-        |    max(CASE WHEN day(ts) > 15 THEN 1 ELSE 0 END) AS b
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT event_type, CAST(sum(a) AS DOUBLE) AS n1,
-        |    CAST(sum(b) AS DOUBLE) AS n2, CAST(sum(a * b) AS DOUBLE) AS m
-        |  FROM i WHERE a = 1 OR b = 1 GROUP BY 1)
-        |SELECT event_type, CAST(n1 AS BIGINT) AS n_a,
-        |  CAST(n2 AS BIGINT) AS n_b, CAST(m AS BIGINT) AS n_both,
-        |  roundStable((n1 + 1) * (n2 + 1) / (m + 1) - 1, 6) AS n_hat,
-        |  roundStable(sqrt((n1 + 1) * (n2 + 1) * (n1 - m) * (n2 - m)
-        |    / ((m + 1) * (m + 1) * (m + 2))), 6) AS se,
-        |  roundStable((n1 + n2 - m)
-        |    / ((n1 + 1) * (n2 + 1) / (m + 1) - 1), 6) AS observed_frac
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    "q299_hill" ->
-      // same token cells, entropy via the log-sum identity, inverse
-      // Simpson from double-typed squares
-      """WITH c AS (SELECT source, t, CAST(count(*) AS DOUBLE) AS c FROM (
-        |    SELECT source, unnest(str_split(text, ' ')) AS t
-        |    FROM documents) WHERE t <> '' GROUP BY 1, 2),
-        |s AS (SELECT source, sum(c) AS n, count(*) AS v,
-        |    sum(c * ln(c)) AS clc, sum(c * c) AS c2
-        |  FROM c GROUP BY 1)
-        |SELECT source, CAST(n AS BIGINT) AS n_tokens,
-        |  CAST(v AS BIGINT) AS d0,
-        |  roundStable(exp(ln(n) - clc / n), 6) AS d1,
-        |  roundStable(n * n / c2, 6) AS d2,
-        |  roundStable(exp(ln(n) - clc / n) / v, 6) AS evenness
-        |FROM s ORDER BY source""".stripMargin,
-
-    "q300_durbin_watson" ->
-      // same hourly series, same moment fit, same t≥2 lag-sum (the
-      // first row's NULL lag drops out of both engines' sums)
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hh,
-        |    avg(value) AS y FROM events GROUP BY 1, 2),
-        |p AS (SELECT event_type, epoch_us(hh) / 3.6e9 AS x, y FROM h),
-        |f AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    avg(x) AS mx, avg(y) AS my, covar_pop(y, x) AS cxy,
-        |    var_pop(x) AS vx FROM p GROUP BY 1),
-        |r AS (SELECT p.event_type,
-        |    p.y - (f.my - f.cxy / f.vx * f.mx) - f.cxy / f.vx * p.x AS e,
-        |    p.x FROM p JOIN f USING (event_type) WHERE f.vx > 0),
-        |d AS (SELECT event_type, e, lag(e) OVER
-        |    (PARTITION BY event_type ORDER BY x) AS ep FROM r)
-        |SELECT event_type, count(*) AS n_hours,
-        |  roundStable(CASE WHEN sum(e * e) > 0 THEN
-        |    sum((e - ep) * (e - ep)) / sum(e * e) END, 6) AS dw,
-        |  roundStable(CASE WHEN sum(e * e) > 0 THEN
-        |    1.0 - sum((e - ep) * (e - ep)) / sum(e * e) / 2 END, 6)
-        |    AS rho_hat
-        |FROM d GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q301_cooks" ->
-      // same residuals; leverage 1/n + (x−mx)²/(n·vx), s² on n−2 df,
-      // rank on 6dp-rounded D desc with the hour as tiebreak
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hh,
-        |    avg(value) AS y FROM events GROUP BY 1, 2),
-        |p AS (SELECT event_type, hh, epoch_us(hh) / 3.6e9 AS x, y FROM h),
-        |f AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    avg(x) AS mx, avg(y) AS my, covar_pop(y, x) AS cxy,
-        |    var_pop(x) AS vx FROM p GROUP BY 1),
-        |r AS (SELECT p.event_type, p.hh, p.y, p.x, f.n, f.mx, f.vx,
-        |    (f.my - f.cxy / f.vx * f.mx) + f.cxy / f.vx * p.x AS fit,
-        |    p.y - (f.my - f.cxy / f.vx * f.mx) - f.cxy / f.vx * p.x AS e
-        |  FROM p JOIN f USING (event_type) WHERE f.vx > 0),
-        |s AS (SELECT event_type, sum(e * e) AS sse FROM r GROUP BY 1),
-        |c AS (SELECT r.*,
-        |    1.0 / n + (x - mx) * (x - mx) / (n * vx) AS hl,
-        |    CASE WHEN n > 2 THEN sse / (n - 2) END AS s2
-        |  FROM r JOIN s USING (event_type)),
-        |t AS (SELECT *, CASE WHEN s2 > 0 AND hl < 1 THEN
-        |    e / sqrt(s2 * (1.0 - hl)) END AS tt FROM c),
-        |dd AS (SELECT *, roundStable(tt * tt * hl / (2.0 * (1.0 - hl)),
-        |    6) AS d FROM t),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY event_type
-        |    ORDER BY d DESC NULLS LAST, x) AS rk FROM dd)
-        |SELECT event_type, CAST(rk AS BIGINT) AS rk, hh AS t,
-        |  roundStable(y, 6) AS y, roundStable(fit, 6) AS fitted,
-        |  roundStable(hl, 6) AS leverage, roundStable(tt, 6) AS rstudent,
-        |  d AS cooks_d
-        |FROM rk WHERE rk <= 3 ORDER BY event_type, rk""".stripMargin,
-
-    "q302_breusch_pagan" ->
-      // same residuals; Koenker LM = n·corr(e²,x)², signed z
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hh,
-        |    avg(value) AS y FROM events GROUP BY 1, 2),
-        |p AS (SELECT event_type, epoch_us(hh) / 3.6e9 AS x, y FROM h),
-        |f AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    avg(x) AS mx, avg(y) AS my, covar_pop(y, x) AS cxy,
-        |    var_pop(x) AS vx FROM p GROUP BY 1),
-        |r AS (SELECT p.event_type, p.x, f.vx,
-        |    p.y - (f.my - f.cxy / f.vx * f.mx) - f.cxy / f.vx * p.x AS e
-        |  FROM p JOIN f USING (event_type) WHERE f.vx > 0),
-        |g AS (SELECT event_type, count(*) AS n, covar_samp(e*e, x) AS cs,
-        |    var_samp(e*e) AS ve, var_samp(x) AS vxs,
-        |    covar_pop(e*e, x) AS cex, any_value(vx) AS vxx
-        |  FROM r GROUP BY 1),
-        |q AS (SELECT *, CASE WHEN ve > 0 AND vxs > 0 THEN
-        |    cs / sqrt(ve * vxs) END AS rr FROM g)
-        |SELECT event_type, n AS n_hours,
-        |  roundStable(CASE WHEN vxx > 0 THEN cex / vxx END, 6)
-        |    AS aux_slope,
-        |  roundStable(rr * rr, 6) AS r2_aux,
-        |  roundStable(n * rr * rr, 6) AS lm,
-        |  roundStable(sign(cex) * sqrt(n * rr * rr), 6) AS z
-        |FROM q ORDER BY event_type""".stripMargin,
-
-    "q303_cross_perplexity" ->
-      // same cells, same add-k model over the global vocab, same
-      // −Σ pa·ln qb fold and self-model excess
-      """WITH c AS (SELECT CAST(source AS VARCHAR) AS s, t AS tok,
-        |    CAST(count(*) AS DOUBLE) AS c FROM (
-        |    SELECT source, unnest(str_split(text, ' ')) AS t
-        |    FROM documents) WHERE t <> '' GROUP BY 1, 2),
-        |tot AS (SELECT s, sum(c) AS n FROM c GROUP BY 1),
-        |vv AS (SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS v FROM c),
-        |a AS (SELECT c.s AS sa, c.tok, c.c / tot.n AS pa, tot.n AS na
-        |  FROM c JOIN tot USING (s)),
-        |g AS (SELECT a.sa, a.tok, a.pa, a.na, bt.s AS sb, bt.n AS nb,
-        |    bc.c AS cb
-        |  FROM a CROSS JOIN tot bt
-        |  LEFT JOIN c bc ON bc.s = bt.s AND bc.tok = a.tok),
-        |h AS (SELECT sa, sb, CAST(any_value(na) AS BIGINT) AS n_tokens_a,
-        |    -sum(pa * ln((coalesce(cb, 0.0) + 0.5)
-        |      / (nb + 0.5 * (SELECT v FROM vv)))) AS hh
-        |  FROM g GROUP BY 1, 2),
-        |d AS (SELECT sa, hh AS hself FROM h WHERE sa = sb)
-        |SELECT h.sa AS source_a, h.sb AS source_b, h.n_tokens_a,
-        |  roundStable(h.hh, 6) AS cross_entropy,
-        |  roundStable(exp(h.hh), 6) AS ppl,
-        |  roundStable(h.hh - d.hself, 6) AS excess
-        |FROM h JOIN d USING (sa)
-        |ORDER BY source_a, source_b""".stripMargin,
-
-    "q304_burrows_delta" ->
-      // same deterministic top-150 cut, materialized zero grid, z over
-      // sources with the σ>0 guard, L1 mean over pairs
-      """WITH c AS (SELECT CAST(source AS VARCHAR) AS s, t AS tok,
-        |    CAST(count(*) AS DOUBLE) AS c FROM (
-        |    SELECT source, unnest(str_split(text, ' ')) AS t
-        |    FROM documents) WHERE t <> '' GROUP BY 1, 2),
-        |tot AS (SELECT s, sum(c) AS n FROM c GROUP BY 1),
-        |top AS (SELECT tok FROM (SELECT tok, sum(c) AS tf FROM c
-        |    GROUP BY 1 ORDER BY tf DESC, tok LIMIT 150)),
-        |g AS (SELECT tot.s, top.tok, coalesce(c.c, 0.0) / tot.n AS f
-        |  FROM tot CROSS JOIN top
-        |  LEFT JOIN c ON c.s = tot.s AND c.tok = top.tok),
-        |z AS (SELECT s, tok, CASE WHEN
-        |    stddev_pop(f) OVER (PARTITION BY tok) > 0 THEN
-        |    (f - avg(f) OVER (PARTITION BY tok))
-        |      / stddev_pop(f) OVER (PARTITION BY tok) END AS z FROM g)
-        |SELECT a.s AS source_a, b.s AS source_b,
-        |  count(abs(a.z - b.z)) AS n_words,
-        |  roundStable(avg(abs(a.z - b.z)), 6) AS delta
-        |FROM z a JOIN z b ON a.tok = b.tok AND a.s < b.s
-        |GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin,
-
-    "q305_mnn_pairs" ->
-      // same rounded-cosine pair table ranked in both directions; the
-      // mutual join keeps (a,b) iff each is the other's top-1
-      """WITH v AS (SELECT vec_id, label, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE)
-        |      * CAST(embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings WHERE label IN (0, 1)),
-        |p AS (SELECT q.vec_id AS qa, c.vec_id AS qb,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE)
-        |      * CAST(c.embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(q.embedding) + 1)])
-        |      / (q.nrm * c.nrm), 4) AS cos
-        |  FROM v q JOIN v c ON q.label = 0 AND c.label = 1),
-        |ab AS (SELECT qa AS id_a, qb AS id_b, cos FROM (SELECT p.*,
-        |    row_number() OVER (PARTITION BY qa ORDER BY cos DESC, qb)
-        |      AS rk FROM p) WHERE rk = 1),
-        |ba AS (SELECT qa AS id_a, qb AS id_b FROM (SELECT p.*,
-        |    row_number() OVER (PARTITION BY qb ORDER BY cos DESC, qa)
-        |      AS rk FROM p) WHERE rk = 1)
-        |SELECT ab.id_a, ab.id_b, ab.cos AS cosine
-        |FROM ab JOIN ba USING (id_a, id_b) ORDER BY id_a""".stripMargin,
-
-    "q306_hurst" ->
-      // same hourly index, same complete-block means per level, same
-      // ln-ln regression (floor() mirrors Spark's positive-cast trunc)
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hh,
-        |    avg(value) AS y FROM events GROUP BY 1, 2),
-        |i AS (SELECT event_type, y, row_number() OVER
-        |    (PARTITION BY event_type ORDER BY hh) - 1 AS t FROM h),
-        |e AS (SELECT i.*, m FROM i
-        |  CROSS JOIN (SELECT unnest([2, 4, 8, 16]) AS m)),
-        |b AS (SELECT event_type, m, CAST(floor(t / m) AS BIGINT) AS blk,
-        |    avg(y) AS bm, count(*) AS cnt FROM e GROUP BY 1, 2, 3),
-        |l AS (SELECT event_type, m, var_pop(bm) AS v, count(*) AS nb
-        |  FROM b WHERE cnt = m GROUP BY 1, 2),
-        |g AS (SELECT event_type, ln(CAST(m AS DOUBLE)) AS lx, ln(v) AS ly
-        |  FROM l WHERE nb >= 2 AND v > 0)
-        |SELECT event_type, count(*) AS n_levels,
-        |  roundStable(CASE WHEN var_pop(lx) > 0 THEN
-        |    covar_pop(ly, lx) / var_pop(lx) END, 6) AS var_slope,
-        |  roundStable(CASE WHEN var_pop(lx) > 0 THEN
-        |    1.0 + covar_pop(ly, lx) / var_pop(lx) / 2 END, 6) AS hurst
-        |FROM g GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q307_wavelet_energy" ->
-      // same half-block signed sums, energy = Σd²/2^l with the exact
-      // integer divisor, shares over ≤ 4 rows per key
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hh,
-        |    avg(value) AS y FROM events GROUP BY 1, 2),
-        |i AS (SELECT event_type, y, row_number() OVER
-        |    (PARTITION BY event_type ORDER BY hh) - 1 AS t FROM h),
-        |e AS (SELECT i.*, l, m FROM i CROSS JOIN
-        |  (SELECT unnest([1, 2, 3, 4]) AS l, unnest([2, 4, 8, 16]) AS m)),
-        |b AS (SELECT event_type, l, m, CAST(floor(t / m) AS BIGINT) AS blk,
-        |    sum(CASE WHEN (t % m) * 2 < m THEN y ELSE -y END) AS d,
-        |    count(*) AS cnt FROM e GROUP BY 1, 2, 3, 4),
-        |lv AS (SELECT event_type, l AS level,
-        |    sum(d * d) / CAST(any_value(m) AS DOUBLE) AS e,
-        |    count(*) AS n_blocks FROM b WHERE cnt = m GROUP BY 1, 2)
-        |SELECT event_type, level, n_blocks, roundStable(e, 6) AS energy,
-        |  roundStable(CASE WHEN tot > 0 THEN e / tot END, 6)
-        |    AS energy_share
-        |FROM (SELECT *, sum(e) OVER (PARTITION BY event_type) AS tot
-        |  FROM lv) ORDER BY event_type, level""".stripMargin,
-
-    "q308_cochran_armitage" ->
-      // same (key, score) cells, same T / Var fold
-      """WITH c AS (SELECT event_type, CAST(day(ts) AS DOUBLE) AS w,
-        |    CAST(count(*) AS DOUBLE) AS n,
-        |    sum(CASE WHEN value > 250 THEN 1.0 ELSE 0.0 END) AS x
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT event_type, count(*) AS n_groups, sum(n) AS nn,
-        |    sum(x) AS xx, sum(w * x) AS wx, sum(w * n) AS wn,
-        |    sum(n * w * w) AS wwn FROM c GROUP BY 1)
-        |SELECT event_type, n_groups, CAST(nn AS BIGINT) AS n,
-        |  CAST(xx AS BIGINT) AS n_success,
-        |  roundStable(xx / nn, 6) AS p_bar,
-        |  roundStable(wx - xx / nn * wn, 6) AS t_stat,
-        |  roundStable(CASE WHEN
-        |      xx / nn * (1.0 - xx / nn) * (wwn - wn * wn / nn) > 0 THEN
-        |    (wx - xx / nn * wn) / sqrt(xx / nn * (1.0 - xx / nn)
-        |      * (wwn - wn * wn / nn)) END, 6) AS z
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    "q309_profile_drift" ->
-      // same two one-pass profiles, deltas on the ROUNDED rates (the
-      // engine rounds inside profile), same flag thresholds
-      """WITH b AS (SELECT count(*) AS n, count(user_id) AS nnu,
-        |    count(DISTINCT user_id) AS ndu, count(event_type) AS nne,
-        |    count(DISTINCT event_type) AS nde, count(value) AS nnv,
-        |    count(DISTINCT value) AS ndv
-        |  FROM events WHERE day(ts) <= 15),
-        |f AS (SELECT count(*) AS n, count(user_id) AS nnu,
-        |    count(DISTINCT user_id) AS ndu, count(event_type) AS nne,
-        |    count(DISTINCT event_type) AS nde, count(value) AS nnv,
-        |    count(DISTINCT value) AS ndv
-        |  FROM events WHERE day(ts) > 15),
-        |r AS (
-        |  SELECT 'user_id' AS col, b.n AS rb,
-        |    roundStable(CASE WHEN b.n > 0 THEN
-        |      1.0 * (b.n - b.nnu) / b.n END, 6) AS nlb, b.ndu AS ndb,
-        |    f.n AS ra, roundStable(CASE WHEN f.n > 0 THEN
-        |      1.0 * (f.n - f.nnu) / f.n END, 6) AS nla, f.ndu AS nda
-        |  FROM b, f
-        |  UNION ALL
-        |  SELECT 'event_type', b.n, roundStable(CASE WHEN b.n > 0 THEN
-        |      1.0 * (b.n - b.nne) / b.n END, 6), b.nde,
-        |    f.n, roundStable(CASE WHEN f.n > 0 THEN
-        |      1.0 * (f.n - f.nne) / f.n END, 6), f.nde FROM b, f
-        |  UNION ALL
-        |  SELECT 'value', b.n, roundStable(CASE WHEN b.n > 0 THEN
-        |      1.0 * (b.n - b.nnv) / b.n END, 6), b.ndv,
-        |    f.n, roundStable(CASE WHEN f.n > 0 THEN
-        |      1.0 * (f.n - f.nnv) / f.n END, 6), f.ndv FROM b, f),
-        |d AS (SELECT *, roundStable(nla - nlb, 6) AS nd,
-        |    roundStable(CASE WHEN ndb > 0 THEN 1.0 * nda / ndb END, 6)
-        |      AS dr FROM r)
-        |SELECT col AS "column", rb AS rows_before, nlb AS null_before,
-        |  ndb AS nd_before, ra AS rows_after, nla AS null_after,
-        |  nda AS nd_after, nd AS null_delta, dr AS distinct_ratio,
-        |  (coalesce(abs(nd) > 0.05, true)
-        |    OR coalesce(dr > 2.0 OR dr < 0.5, true)) AS flag
-        |FROM d ORDER BY "column"""".stripMargin,
-
-    "q310_negbin" ->
-      // same occupied-unit moments as q295, MoM inversion + p^r
-      """WITH u AS (SELECT event_type, user_id, CAST(ts AS DATE) AS d,
-        |    CAST(count(*) AS DOUBLE) AS c
-        |  FROM events GROUP BY 1, 2, 3),
-        |s AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    sum(c) AS s1, sum(c * c) AS s2 FROM u GROUP BY 1),
-        |m AS (SELECT event_type, n, s1 / n AS mean,
-        |    CASE WHEN n > 1 THEN (s2 - n * (s1 / n) * (s1 / n)) / (n - 1)
-        |      END AS v FROM s)
-        |SELECT event_type, CAST(n AS BIGINT) AS n_units,
-        |  roundStable(mean, 6) AS mean,
-        |  roundStable(v, 6) AS variance,
-        |  roundStable(CASE WHEN n > 1 AND mean > 0 AND v > mean THEN
-        |    mean * mean / (v - mean) END, 6) AS r_hat,
-        |  roundStable(CASE WHEN n > 1 AND mean > 0 AND v > mean THEN
-        |    mean / v END, 6) AS p_hat,
-        |  roundStable(CASE WHEN n > 1 AND mean > 0 AND v > mean THEN
-        |    pow(mean / v, mean * mean / (v - mean)) END, 6) AS p0_hat
-        |FROM m ORDER BY event_type""".stripMargin,
-
-    "q311_token_budget" ->
-      // same ratio sort, prefix sums, closed-form waterline, and
-      // LEAST(s, λw) allocation (LEAST ignores the all-capped NULL λ
-      // identically on both engines)
-      """WITH sup AS (SELECT source AS key, 1.0 AS w,
-        |    CAST(sum(len(str_split(text, ' '))) AS DOUBLE) AS s
-        |  FROM documents GROUP BY 1),
-        |o AS (SELECT *, s / w AS rr,
-        |    row_number() OVER (ORDER BY s / w, key) AS j,
-        |    sum(s) OVER (ORDER BY s / w, key ROWS UNBOUNDED PRECEDING)
-        |      AS cs,
-        |    sum(w) OVER (ORDER BY s / w, key ROWS UNBOUNDED PRECEDING)
-        |      AS cw FROM sup),
-        |t AS (SELECT sum(s) AS ss, sum(w) AS ww FROM sup),
-        |m AS (SELECT o.*, (0.6 * t.ss - (cs - s)) / (t.ww - (cw - w))
-        |    AS lp FROM o, t),
-        |js AS (SELECT min(j) AS jstar FROM m WHERE lp <= rr),
-        |lam AS (SELECT lp AS lam FROM m, js WHERE m.j = js.jstar)
-        |SELECT key, w AS weight, roundStable(s, 6) AS supply,
-        |  roundStable(least(s, lam * w), 6) AS allocation,
-        |  (roundStable(least(s, lam * w), 6) = roundStable(s, 6))
-        |    AS capped,
-        |  roundStable(lam, 6) AS fill_level
-        |FROM m LEFT JOIN lam ON true ORDER BY key""".stripMargin,
-
-    "q312_hubness" ->
-      // same rounded-distance kNN lists, zero-occurrence points
-      // materialized, same raw-moment skewness
-      """WITH v AS (SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE)
-        |      * CAST(embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (SELECT a.vec_id AS ida, b.vec_id AS idb,
-        |    roundStable(1.0 - list_sum([CAST(a.embedding[i] AS DOUBLE)
-        |      * CAST(b.embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(a.embedding) + 1)])
-        |      / (a.nrm * b.nrm), 6) AS dist
-        |  FROM v a JOIN v b ON a.vec_id <> b.vec_id),
-        |r AS (SELECT idb FROM (SELECT p.*, row_number() OVER
-        |    (PARTITION BY ida ORDER BY dist, idb) AS rk FROM p)
-        |  WHERE rk <= 10),
-        |oc AS (SELECT v.vec_id, CAST(coalesce(c.c, 0) AS DOUBLE) AS occ
-        |  FROM v LEFT JOIN (SELECT idb, count(*) AS c FROM r GROUP BY 1)
-        |    c ON c.idb = v.vec_id),
-        |st AS (SELECT avg(occ) AS mu, avg(occ * occ) AS m2r,
-        |    avg(occ * occ * occ) AS m3r,
-        |    avg(CASE WHEN occ = 0 THEN 1.0 ELSE 0.0 END) AS ah FROM oc)
-        |SELECT CAST(rank AS BIGINT) AS rank, vec_id,
-        |  CAST(occ AS BIGINT) AS k_occurrence,
-        |  roundStable(CASE WHEN m2r - mu * mu > 0 THEN
-        |    (m3r - 3.0 * mu * m2r + 2.0 * mu * mu * mu)
-        |      / pow(m2r - mu * mu, 1.5) END, 6) AS skewness,
-        |  roundStable(ah, 6) AS antihub_frac
-        |FROM (SELECT oc.*, row_number() OVER (ORDER BY occ DESC, vec_id)
-        |    AS rank FROM oc), st
-        |WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-    "q313_lid" ->
-      // same zero-filtered rounded distances, same (k−1)/Σln(Tk/Tj)
-      """WITH v AS (SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE)
-        |      * CAST(embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings),
-        |p AS (SELECT a.vec_id AS ida, b.vec_id AS idb,
-        |    roundStable(1.0 - list_sum([CAST(a.embedding[i] AS DOUBLE)
-        |      * CAST(b.embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(a.embedding) + 1)])
-        |      / (a.nrm * b.nrm), 6) AS dist
-        |  FROM v a JOIN v b ON a.vec_id <> b.vec_id),
-        |r AS (SELECT * FROM (SELECT p.*, row_number() OVER
-        |    (PARTITION BY ida ORDER BY dist, idb) AS rk
-        |  FROM p WHERE dist > 0) WHERE rk <= 10),
-        |pp AS (SELECT ida, count(*) AS kk, max(dist) AS tk,
-        |    sum(CASE WHEN rk < 10 THEN ln(dist) END) AS sl
-        |  FROM r GROUP BY 1),
-        |l AS (SELECT ida, CASE WHEN 9.0 * ln(tk) - sl > 0 THEN
-        |    9.0 / (9.0 * ln(tk) - sl) END AS lid FROM pp WHERE kk = 10)
-        |SELECT e.label, count(*) AS n_points, count(l.lid) AS n_fit,
-        |  roundStable(avg(l.lid), 6) AS mean_lid
-        |FROM l JOIN embeddings e ON e.vec_id = l.ida
-        |GROUP BY 1 ORDER BY label""".stripMargin,
-
-    "q314_margin_mnn" ->
-      // same top-4 runs both directions, kNN means over those runs,
-      // ratio margin on the mutual top-1 pairs
-      """WITH v AS (SELECT vec_id, label, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE)
-        |      * CAST(embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(embedding) + 1)])) AS nrm
-        |  FROM embeddings WHERE label IN (0, 1)),
-        |p AS (SELECT q.vec_id AS qa, c.vec_id AS qb,
-        |    roundStable(list_sum([CAST(q.embedding[i] AS DOUBLE)
-        |      * CAST(c.embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, len(q.embedding) + 1)])
-        |      / (q.nrm * c.nrm), 4) AS cos
-        |  FROM v q JOIN v c ON q.label = 0 AND c.label = 1),
-        |fr AS (SELECT p.*, row_number() OVER
-        |    (PARTITION BY qa ORDER BY cos DESC, qb) AS rk FROM p),
-        |br AS (SELECT p.*, row_number() OVER
-        |    (PARTITION BY qb ORDER BY cos DESC, qa) AS rk FROM p),
-        |ft AS (SELECT qa AS id_a, qb AS id_b, cos FROM fr WHERE rk = 1),
-        |bt AS (SELECT qa AS id_a, qb AS id_b FROM br WHERE rk = 1),
-        |fm AS (SELECT qa AS id_a, avg(cos) AS ma FROM fr
-        |  WHERE rk <= 4 GROUP BY 1),
-        |bm AS (SELECT qb AS id_b, avg(cos) AS mb FROM br
-        |  WHERE rk <= 4 GROUP BY 1)
-        |SELECT ft.id_a, ft.id_b, ft.cos AS cosine,
-        |  roundStable(CASE WHEN (ma + mb) / 2 <> 0 THEN
-        |    ft.cos / ((ma + mb) / 2) END, 6) AS margin
-        |FROM ft JOIN bt USING (id_a, id_b) JOIN fm USING (id_a)
-        |  JOIN bm USING (id_b) ORDER BY id_a""".stripMargin,
-
-    "q315_streaks" ->
-      // same day − row_number island trick, longest island with
-      // earliest-start tiebreak
-      """WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS dd
-        |  FROM events),
-        |i AS (SELECT user_id, dd,
-        |    datediff('day', DATE '1970-01-01', dd) - row_number() OVER
-        |      (PARTITION BY user_id ORDER BY dd) AS grp FROM d),
-        |isl AS (SELECT user_id, grp, count(*) AS len, min(dd) AS st,
-        |    max(dd) AS en FROM i GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY user_id
-        |      ORDER BY len DESC, st) AS rk,
-        |    count(*) OVER (PARTITION BY user_id) AS ni,
-        |    sum(len) OVER (PARTITION BY user_id) AS tot FROM isl)
-        |SELECT user_id, CAST(len AS BIGINT) AS max_streak_days,
-        |  st AS streak_start, en AS streak_end,
-        |  CAST(ni AS BIGINT) AS n_islands,
-        |  CAST(tot AS BIGINT) AS n_active_days
-        |FROM r WHERE rk = 1 ORDER BY user_id""".stripMargin,
-
-    "q316_rank_movers" ->
-      // same rounded-sum ranks per half, inner join on stayers, top-20
-      // by |rank delta| with entity tiebreak
-      """WITH a AS (SELECT user_id AS entity, day(ts) <= 15 AS b,
-        |    roundStable(sum(value), 6) AS v FROM events GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY b
-        |    ORDER BY v DESC, entity) AS rk FROM a),
-        |bb AS (SELECT entity, v AS value_before,
-        |    CAST(rk AS BIGINT) AS rank_before FROM r WHERE b),
-        |aa AS (SELECT entity, v AS value_after,
-        |    CAST(rk AS BIGINT) AS rank_after FROM r WHERE NOT b),
-        |j AS (SELECT bb.entity, bb.value_before, bb.rank_before,
-        |    aa.value_after, aa.rank_after,
-        |    bb.rank_before - aa.rank_after AS rank_delta
-        |  FROM bb JOIN aa USING (entity))
-        |SELECT entity, value_before, rank_before, value_after,
-        |  rank_after, rank_delta, CAST(mr AS BIGINT) AS mover_rank
-        |FROM (SELECT j.*,
-        |    row_number() OVER (ORDER BY abs(rank_delta) DESC, entity)
-        |      AS mr FROM j)
-        |WHERE mr <= 20 ORDER BY mr""".stripMargin,
-
-    "q317_skyline" ->
-      // same sort-filter skyline over the distinct value grid, ids
-      // joined back
-      """WITH pts AS (SELECT DISTINCT CAST(p_retailprice AS DOUBLE) AS x,
-        |    CAST(p_size AS BIGINT) AS y FROM part),
-        |s AS (SELECT *, max(y) OVER (ORDER BY x ASC, y DESC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS my
-        |  FROM pts),
-        |sky AS (SELECT x, y FROM s WHERE my IS NULL OR y > my)
-        |SELECT p.p_partkey, sky.x, sky.y FROM part p
-        |JOIN sky ON CAST(p.p_retailprice AS DOUBLE) = sky.x
-        |  AND CAST(p.p_size AS BIGINT) = sky.y
-        |ORDER BY x, y, p_partkey""".stripMargin,
-
-    "q318_burn_rate" ->
-      // same hour-index RANGE windows (silent hours widen, not
-      // shrink), alert compared on the ROUNDED burns
-      """WITH h AS (SELECT user_id % 5 AS cohort,
-        |    date_trunc('hour', ts) AS hh, CAST(count(*) AS DOUBLE) AS n,
-        |    sum(CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END)
-        |      AS e
-        |  FROM events GROUP BY 1, 2),
-        |x AS (SELECT *, epoch_us(hh) // 3600000000 AS hi FROM h),
-        |w AS (SELECT cohort, hh, n, e,
-        |    sum(n) OVER (PARTITION BY cohort ORDER BY hi
-        |      RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) AS n6,
-        |    sum(e) OVER (PARTITION BY cohort ORDER BY hi
-        |      RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) AS e6,
-        |    sum(n) OVER (PARTITION BY cohort ORDER BY hi
-        |      RANGE BETWEEN 23 PRECEDING AND CURRENT ROW) AS n24,
-        |    sum(e) OVER (PARTITION BY cohort ORDER BY hi
-        |      RANGE BETWEEN 23 PRECEDING AND CURRENT ROW) AS e24
-        |  FROM x),
-        |r AS (SELECT cohort, hh, n, e,
-        |    roundStable(CASE WHEN n6 > 0 THEN e6 / n6 / 0.1 END, 6)
-        |      AS bs,
-        |    roundStable(CASE WHEN n24 > 0 THEN e24 / n24 / 0.1 END, 6)
-        |      AS bl FROM w)
-        |SELECT cohort, hh AS hour, CAST(n AS BIGINT) AS n,
-        |  CAST(e AS BIGINT) AS n_errors, bs AS burn_short,
-        |  bl AS burn_long,
-        |  (coalesce(bs > 2.0, false) AND coalesce(bl > 2.0, false))
-        |    AS alert
-        |FROM r ORDER BY cohort, hour""".stripMargin,
-
-    "q319_incidents" ->
-      // same variable-gap islands (flag-on-big-gap prefix sum),
-      // MTBF from consecutive incident starts
-      """WITH eh AS (SELECT DISTINCT user_id % 5 AS cohort,
-        |    epoch_us(date_trunc('hour', ts)) // 3600000000 AS hi
-        |  FROM events WHERE event_type = 'error' AND value > 200),
-        |m AS (SELECT *, CASE WHEN
-        |      lag(hi) OVER (PARTITION BY cohort ORDER BY hi) IS NULL
-        |      OR hi - lag(hi) OVER (PARTITION BY cohort ORDER BY hi) > 2
-        |    THEN 1 ELSE 0 END AS nw FROM eh),
-        |c AS (SELECT *, sum(nw) OVER (PARTITION BY cohort ORDER BY hi
-        |    ROWS UNBOUNDED PRECEDING) AS inc FROM m),
-        |sp AS (SELECT cohort, inc, min(hi) AS st,
-        |    max(hi) - min(hi) + 1 AS dur FROM c GROUP BY 1, 2),
-        |b AS (SELECT *, st - lag(st) OVER (PARTITION BY cohort
-        |    ORDER BY st) AS btw FROM sp)
-        |SELECT cohort, count(*) AS n_incidents,
-        |  roundStable(avg(dur), 6) AS mttr_hours,
-        |  roundStable(avg(btw), 6) AS mtbf_hours,
-        |  CAST(sum(dur) AS BIGINT) AS total_incident_hours
-        |FROM b GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "q320_apdex" ->
-      // same conditional tallies, same (sat + tol/2)/n
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CASE WHEN value <= 100 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_satisfied,
-        |  CAST(sum(CASE WHEN value > 100 AND value <= 400 THEN 1 ELSE 0
-        |    END) AS BIGINT) AS n_tolerating,
-        |  roundStable((sum(CASE WHEN value <= 100 THEN 1 ELSE 0 END)
-        |    + CAST(sum(CASE WHEN value > 100 AND value <= 400
-        |        THEN 1 ELSE 0 END) AS DOUBLE) / 2) / count(*), 6)
-        |    AS apdex
-        |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q321_jarque_bera" ->
-      // same four power sums folded to central moments
-      """WITH s AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    avg(value) AS m, avg(value * value) AS e2,
-        |    avg(value * value * value) AS e3,
-        |    avg(value * value * value * value) AS e4
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |c AS (SELECT event_type, n, e2 - m * m AS m2,
-        |    e3 - 3.0 * m * e2 + 2.0 * m * m * m AS m3,
-        |    e4 - 4.0 * m * e3 + 6.0 * m * m * e2 - 3.0 * m * m * m * m
-        |      AS m4 FROM s),
-        |t AS (SELECT event_type, n,
-        |    CASE WHEN m2 > 0 THEN m3 / pow(m2, 1.5) END AS sk,
-        |    CASE WHEN m2 > 0 THEN m4 / (m2 * m2) - 3.0 END AS ku FROM c)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |  roundStable(sk, 6) AS skewness,
-        |  roundStable(ku, 6) AS ex_kurtosis,
-        |  roundStable(n / 6 * (sk * sk + ku * ku / 4), 6) AS jb
-        |FROM t ORDER BY event_type""".stripMargin,
-
-    "q322_friedman" ->
-      // same rounded cells, complete blocks only, mean ranks on ties,
-      // same uncorrected Q
-      """WITH cells AS (SELECT CAST(ts AS DATE) AS b, event_type AS t,
-        |    roundStable(avg(value), 6) AS v FROM events GROUP BY 1, 2),
-        |k AS (SELECT count(DISTINCT t) AS k FROM cells),
-        |comp AS (SELECT c.* FROM cells c
-        |  JOIN (SELECT b, count(*) AS bc FROM cells GROUP BY 1) x
-        |    USING (b), k WHERE x.bc = k.k),
-        |r AS (SELECT *, rank() OVER (PARTITION BY b ORDER BY v)
-        |    + (count(*) OVER (PARTITION BY b, v) - 1) / 2.0 AS rr
-        |  FROM comp),
-        |bt AS (SELECT t AS treatment, count(*) AS nb, sum(rr) AS rs
-        |  FROM r GROUP BY 1),
-        |q AS (SELECT bt.*, 12.0 / (nb * k.k * (k.k + 1))
-        |    * sum(rs * rs) OVER () - 3.0 * nb * (k.k + 1) AS qs
-        |  FROM bt, k)
-        |SELECT treatment, CAST(nb AS BIGINT) AS n_blocks,
-        |  roundStable(rs, 6) AS rank_sum,
-        |  roundStable(rs / nb, 6) AS mean_rank,
-        |  roundStable(qs, 6) AS q_stat
-        |FROM q ORDER BY treatment""".stripMargin,
-
-    "q323_grubbs" ->
-      // same distinct-value reduction, argmax on rounded G with the
-      // low value winning exact ties
-      """WITH s AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    avg(value) AS mu, stddev_samp(value) AS sd
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |v AS (SELECT event_type, value AS x FROM events
-        |  WHERE value IS NOT NULL GROUP BY 1, 2),
-        |g AS (SELECT v.event_type, v.x, s.n, s.mu,
-        |    roundStable(CASE WHEN s.sd > 0 AND s.n >= 3 THEN
-        |      abs(v.x - s.mu) / s.sd END, 6) AS gg
-        |  FROM v JOIN s USING (event_type)),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY event_type
-        |    ORDER BY gg DESC NULLS LAST, x) AS rk FROM g)
-        |SELECT event_type, CAST(n AS BIGINT) AS n, gg AS g,
-        |  roundStable(x, 6) AS extreme_value,
-        |  CASE WHEN gg IS NULL THEN NULL WHEN x >= mu THEN 'high'
-        |    ELSE 'low' END AS side
-        |FROM r WHERE rk = 1 ORDER BY event_type""".stripMargin,
-
-    "q324_dau_stickiness" ->
-      // same day-spine range join, same conditional distincts
-      """WITH ud AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d
-        |  FROM events),
-        |udi AS (SELECT u, d,
-        |    datediff('day', DATE '1970-01-01', d) AS di FROM ud),
-        |sp AS (SELECT DISTINCT d AS day, di AS si FROM udi),
-        |j AS (SELECT sp.day, sp.si, udi.u, udi.di FROM udi
-        |  JOIN sp ON udi.di <= sp.si AND udi.di >= sp.si - 29)
-        |SELECT day,
-        |  count(DISTINCT CASE WHEN di = si THEN u END) AS dau,
-        |  count(DISTINCT CASE WHEN di >= si - 6 THEN u END) AS wau,
-        |  count(DISTINCT u) AS mau,
-        |  roundStable(CAST(count(DISTINCT CASE WHEN di = si THEN u END)
-        |    AS DOUBLE) / count(DISTINCT u), 6) AS stickiness
-        |FROM j GROUP BY 1 ORDER BY day""".stripMargin,
-
-    "q325_growth_accounting" ->
-      // same lag/lead lifecycle states, churn landed in the silent
-      // week, active-week output spine
-      """WITH uw AS (SELECT DISTINCT user_id AS u,
-        |    CAST(date_trunc('week', ts) AS DATE) AS w FROM events),
-        |m AS (SELECT *, lag(w) OVER (PARTITION BY u ORDER BY w) AS pv,
-        |    lead(w) OVER (PARTITION BY u ORDER BY w) AS nx FROM uw),
-        |st AS (SELECT *, CASE WHEN pv IS NULL THEN 'new'
-        |    WHEN datediff('day', pv, w) = 7 THEN 'retained'
-        |    ELSE 'resurrected' END AS s FROM m),
-        |act AS (SELECT w AS week, count(*) AS n_active,
-        |    CAST(sum(CASE WHEN s = 'new' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_new,
-        |    CAST(sum(CASE WHEN s = 'retained' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_retained,
-        |    CAST(sum(CASE WHEN s = 'resurrected' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_resurrected
-        |  FROM st GROUP BY 1),
-        |ch AS (SELECT w + 7 AS week, count(*) AS c FROM st
-        |  WHERE nx IS NULL OR datediff('day', w, nx) > 7 GROUP BY 1)
-        |SELECT a.week, a.n_active, a.n_new, a.n_retained,
-        |  a.n_resurrected, coalesce(ch.c, 0) AS n_churned,
-        |  roundStable(CASE WHEN coalesce(ch.c, 0) > 0 THEN
-        |    CAST(a.n_new + a.n_resurrected AS DOUBLE) / ch.c END, 6)
-        |    AS quick_ratio
-        |FROM act a LEFT JOIN ch USING (week) ORDER BY week""".stripMargin,
-
-    "q326_power_users" ->
-      // same histogram + top-down cumulative shares
-      """WITH pu AS (SELECT user_id AS u,
-        |    count(DISTINCT CAST(ts AS DATE)) AS nd
-        |  FROM events GROUP BY 1),
-        |h AS (SELECT nd AS n_days, count(*) AS n_users,
-        |    nd * count(*) AS act FROM pu GROUP BY 1),
-        |t AS (SELECT sum(n_users) AS tu, sum(act) AS ta FROM h),
-        |c AS (SELECT h.*,
-        |    sum(n_users) OVER (ORDER BY n_days DESC
-        |      ROWS UNBOUNDED PRECEDING) AS cu,
-        |    sum(act) OVER (ORDER BY n_days DESC
-        |      ROWS UNBOUNDED PRECEDING) AS ca FROM h)
-        |SELECT n_days, n_users,
-        |  roundStable(CAST(n_users AS DOUBLE) / t.tu, 6) AS user_share,
-        |  roundStable(CAST(act AS DOUBLE) / t.ta, 6) AS activity_share,
-        |  roundStable(CAST(cu AS DOUBLE) / t.tu, 6) AS cum_user_share,
-        |  roundStable(CAST(ca AS DOUBLE) / t.ta, 6)
-        |    AS cum_activity_share
-        |FROM c, t ORDER BY n_days""".stripMargin,
-
-    "q327_vocab_curve" ->
-      // same (tf DESC, token) ranking, cumulative mass at literal cuts
-      """WITH f AS (SELECT t AS tok, CAST(count(*) AS DOUBLE) AS f
-        |  FROM (SELECT unnest(str_split(text, ' ')) AS t FROM documents)
-        |  WHERE t <> '' GROUP BY 1),
-        |r AS (SELECT tok, f, row_number() OVER (ORDER BY f DESC, tok)
-        |    AS rk, sum(f) OVER () AS tot FROM f),
-        |g AS (SELECT r.*, c.vocab_size FROM r CROSS JOIN
-        |  (SELECT unnest([100, 500, 1000, 5000]) AS vocab_size) c
-        |  WHERE rk <= vocab_size)
-        |SELECT vocab_size, count(*) AS n_types,
-        |  roundStable(sum(f) / any_value(tot), 6) AS coverage,
-        |  roundStable(1.0 - sum(f) / any_value(tot), 6) AS oov_rate
-        |FROM g GROUP BY 1 ORDER BY vocab_size""".stripMargin,
-
-    "q328_dup_profile" ->
-      // same md5(prefix-40) fingerprint cells, same locality classes
-      """WITH c AS (SELECT source AS s, md5(substr(text, 1, 40)) AS h,
-        |    count(*) AS c FROM documents GROUP BY 1, 2),
-        |g AS (SELECT h, sum(c) AS tot, count(*) AS nsrc FROM c
-        |  GROUP BY 1)
-        |SELECT s AS source, CAST(sum(c.c) AS BIGINT) AS n_docs,
-        |  count(*) AS n_distinct,
-        |  CAST(sum(CASE WHEN g.tot > 1 AND g.nsrc = 1 THEN c.c ELSE 0
-        |    END) AS BIGINT) AS n_intra_dup,
-        |  CAST(sum(CASE WHEN g.nsrc > 1 THEN c.c ELSE 0 END) AS BIGINT)
-        |    AS n_cross_dup,
-        |  roundStable(CAST(sum(CASE WHEN g.tot > 1 AND g.nsrc = 1
-        |      THEN c.c ELSE 0 END) AS DOUBLE) / sum(c.c), 6)
-        |    AS intra_rate,
-        |  roundStable(CAST(sum(CASE WHEN g.nsrc > 1 THEN c.c ELSE 0
-        |      END) AS DOUBLE) / sum(c.c), 6) AS cross_rate
-        |FROM c JOIN g USING (h) GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q329_char_classes" ->
-      // same exact length-difference arithmetic ('g' = replace all,
-      // Spark's default)
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(len(text)) AS BIGINT) AS n_chars,
-        |  roundStable(CASE WHEN sum(len(text)) > 0 THEN
-        |    CAST(sum(len(text) - len(regexp_replace(text, '[A-Za-z]',
-        |      '', 'g'))) AS DOUBLE) / sum(len(text)) END, 6)
-        |    AS alpha_share,
-        |  roundStable(CASE WHEN sum(len(text)) > 0 THEN
-        |    CAST(sum(len(text) - len(regexp_replace(text, '[0-9]',
-        |      '', 'g'))) AS DOUBLE) / sum(len(text)) END, 6)
-        |    AS digit_share,
-        |  roundStable(CASE WHEN sum(len(text)) > 0 THEN
-        |    CAST(sum(len(text) - len(regexp_replace(text, '[ \t\n]',
-        |      '', 'g'))) AS DOUBLE) / sum(len(text)) END, 6)
-        |    AS space_share,
-        |  roundStable(CASE WHEN sum(len(text)) > 0 THEN
-        |    CAST(sum(len(regexp_replace(regexp_replace(regexp_replace(
-        |      text, '[A-Za-z]', '', 'g'), '[0-9]', '', 'g'),
-        |      '[ \t\n]', '', 'g'))) AS DOUBLE) / sum(len(text)) END, 6)
-        |    AS other_share
-        |FROM documents WHERE text IS NOT NULL
-        |GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q330_msprt" ->
-      // same cumulative arm moments, same Λ and running-max p
-      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN 1.0 ELSE 0.0 END) AS na,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN value ELSE 0.0 END) AS sa,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN value * value ELSE 0.0
-        |      END) AS qa,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN 0.0 ELSE 1.0 END) AS nb,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN 0.0 ELSE value END) AS sb,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN 0.0 ELSE value * value
-        |      END) AS qb
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |c AS (SELECT event_type, day,
-        |    sum(na) OVER w AS cna, sum(sa) OVER w AS csa,
-        |    sum(qa) OVER w AS cqa, sum(nb) OVER w AS cnb,
-        |    sum(sb) OVER w AS csb, sum(qb) OVER w AS cqb
-        |  FROM d WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |    ROWS UNBOUNDED PRECEDING)),
-        |m AS (SELECT *,
-        |    CASE WHEN cna > 0 THEN csa / cna END AS ma,
-        |    CASE WHEN cnb > 0 THEN csb / cnb END AS mb FROM c),
-        |m2 AS (SELECT *, (cqa - cna * ma * ma + cqb - cnb * mb * mb)
-        |    / (cna + cnb - 2) AS s2 FROM m),
-        |l AS (SELECT *, ma - mb AS delta,
-        |    CASE WHEN cna >= 2 AND cnb >= 2 AND s2 > 0 THEN
-        |      s2 * (1.0 / cna + 1.0 / cnb) END AS vn FROM m2),
-        |x AS (SELECT *, sqrt(vn / (vn + 100.0)) * exp(delta * delta
-        |    * 100.0 / (2.0 * vn * (vn + 100.0))) AS lam FROM l),
-        |y AS (SELECT *, max(lam) OVER (PARTITION BY event_type
-        |    ORDER BY day ROWS UNBOUNDED PRECEDING) AS ml FROM x)
-        |SELECT event_type, day, CAST(cna AS BIGINT) AS n_treat,
-        |  CAST(cnb AS BIGINT) AS n_control,
-        |  roundStable(delta, 6) AS delta, roundStable(lam, 6) AS lambda,
-        |  roundStable(least(1.0, 1.0 / ml), 6) AS always_valid_p,
-        |  coalesce(1.0 / ml < 0.05, false) AS significant
-        |FROM y ORDER BY event_type, day""".stripMargin,
-
-    "q331_ucb" ->
-      // same cells, same exploration bonus, argmax with arm tiebreak
-      """WITH c AS (SELECT event_type,
-        |    'arm' || CAST(user_id % 3 AS VARCHAR) AS arm,
-        |    CAST(count(*) AS DOUBLE) AS n,
-        |    sum(CASE WHEN value > 250 THEN 1.0 ELSE 0.0 END) AS x
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT *, sum(n) OVER (PARTITION BY event_type) AS nn
-        |  FROM c),
-        |u AS (SELECT *, roundStable(x / n + sqrt(2.0 * ln(nn) / n), 6)
-        |    AS ucb FROM s),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY event_type
-        |    ORDER BY ucb DESC, arm) AS rk FROM u)
-        |SELECT event_type, arm, CAST(n AS BIGINT) AS n,
-        |  roundStable(x / n, 6) AS mean, ucb, (rk = 1) AS would_pull
-        |FROM r ORDER BY event_type, arm""".stripMargin,
-
-    "q332_srm" ->
-      // same design grid (absent arms materialize at observed 0),
-      // same Pearson residuals and GOF fold
-      """WITH obs AS (SELECT event_type,
-        |    CAST(user_id % 3 AS VARCHAR) AS arm,
-        |    CAST(count(*) AS DOUBLE) AS o FROM events GROUP BY 1, 2),
-        |design AS (SELECT unnest(['0', '1', '2']) AS arm,
-        |    unnest([1.0 / 3, 1.0 / 3, 1.0 / 3]) AS f),
-        |grid AS (SELECT DISTINCT obs.event_type, d.arm, d.f
-        |  FROM obs, design d),
-        |fl AS (SELECT g.event_type, g.arm, g.f, coalesce(o.o, 0.0) AS o
-        |  FROM grid g LEFT JOIN obs o ON o.event_type = g.event_type
-        |    AND o.arm = g.arm),
-        |w AS (SELECT *, sum(o) OVER (PARTITION BY event_type) AS n
-        |  FROM fl),
-        |r AS (SELECT *, f * n AS e, (o - f * n) / sqrt(f * n) AS res
-        |  FROM w)
-        |SELECT event_type, arm, CAST(o AS BIGINT) AS observed,
-        |  roundStable(e, 6) AS expected,
-        |  roundStable(res, 6) AS pearson_residual,
-        |  roundStable(sum(res * res) OVER (PARTITION BY event_type), 6)
-        |    AS chi2
-        |FROM r ORDER BY event_type, arm""".stripMargin,
-
-    "q333_brown_les" ->
-      // q91's smoothing replayed twice (second pass consumes the
-      // ROUNDED first), Brown level/trend closed form on the last row
-      """WITH o AS (SELECT event_type, value,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS rn,
-        |    list(value) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id
-        |      ROWS BETWEEN 24 PRECEDING AND CURRENT ROW) AS ll
-        |  FROM events),
-        |s1 AS (SELECT event_type, rn,
-        |    roundStable(list_sum([ll[i+1] * pow(0.7, len(ll)-1-i)
-        |        FOR i IN range(0, len(ll))])
-        |      / list_sum([pow(0.7, len(ll)-1-i)
-        |        FOR i IN range(0, len(ll))]), 6) AS s1
-        |  FROM o),
-        |s2p AS (SELECT event_type, rn, s1,
-        |    list(s1) OVER (PARTITION BY event_type ORDER BY rn
-        |      ROWS BETWEEN 24 PRECEDING AND CURRENT ROW) AS l2
-        |  FROM s1),
-        |s2 AS (SELECT event_type, rn, s1,
-        |    roundStable(list_sum([l2[i+1] * pow(0.7, len(l2)-1-i)
-        |        FOR i IN range(0, len(l2))])
-        |      / list_sum([pow(0.7, len(l2)-1-i)
-        |        FOR i IN range(0, len(l2))]), 6) AS s2
-        |  FROM s2p),
-        |lst AS (SELECT *, row_number() OVER (PARTITION BY event_type
-        |    ORDER BY rn DESC) AS rk FROM s2)
-        |SELECT event_type, CAST(rn AS BIGINT) AS n, s1, s2,
-        |  roundStable(2.0 * s1 - s2, 6) AS level,
-        |  roundStable(0.3 / 0.7 * (s1 - s2), 6) AS trend,
-        |  roundStable((2.0 * s1 - s2) + 0.3 / 0.7 * (s1 - s2), 6)
-        |    AS forecast_1,
-        |  roundStable((2.0 * s1 - s2) + 6.0 * (0.3 / 0.7 * (s1 - s2)),
-        |    6) AS forecast_6
-        |FROM lst WHERE rk = 1 ORDER BY event_type""".stripMargin,
-
-    "q334_fellegi_sunter" ->
-      // same brand-blocked pairs, same per-field log-likelihood sums
-      """WITH p AS (SELECT p_partkey, p_brand, p_type,
-        |    str_split(p_name, ' ')[1] AS w1, p_size FROM part
-        |  WHERE p_partkey <= 300),
-        |j AS (SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |    CASE WHEN a.p_type = b.p_type THEN 1 ELSE 0 END AS at,
-        |    CASE WHEN a.w1 = b.w1 THEN 1 ELSE 0 END
-        |      AS ac,
-        |    CASE WHEN a.p_size = b.p_size THEN 1 ELSE 0 END AS az
-        |  FROM p a JOIN p b ON a.p_brand = b.p_brand
-        |    AND a.p_partkey < b.p_partkey)
-        |SELECT id_a, id_b, CAST(at + ac + az AS BIGINT) AS n_agree,
-        |  roundStable(
-        |    CASE WHEN at = 1 THEN ln(0.9 / 0.05)
-        |      ELSE ln(0.1 / 0.95) END
-        |    + CASE WHEN ac = 1 THEN ln(0.8 / 0.1)
-        |      ELSE ln(0.2 / 0.9) END
-        |    + CASE WHEN az = 1 THEN ln(0.85 / 0.15)
-        |      ELSE ln(0.15 / 0.85) END, 6) AS match_weight
-        |FROM j ORDER BY id_a, id_b""".stripMargin,
-
-    "q335_last_digit" ->
-      // same materialized 10-digit grid, same GOF fold and argmax
-      """WITH c AS (SELECT event_type,
-        |    CAST(floor(abs(value)) % 10 AS INTEGER) AS d,
-        |    CAST(count(*) AS DOUBLE) AS c FROM events
-        |  WHERE value IS NOT NULL GROUP BY 1, 2),
-        |g AS (SELECT DISTINCT event_type FROM c),
-        |grid AS (SELECT g.event_type, r.d FROM g CROSS JOIN
-        |  (SELECT CAST(unnest(range(0, 10)) AS INTEGER) AS d) r),
-        |f AS (SELECT grid.event_type, grid.d, coalesce(c.c, 0.0) AS c
-        |  FROM grid LEFT JOIN c ON c.event_type = grid.event_type
-        |    AND c.d = grid.d),
-        |w AS (SELECT *, sum(c) OVER (PARTITION BY event_type) AS n
-        |  FROM f),
-        |r AS (SELECT *, n / 10 AS e FROM w),
-        |x AS (SELECT *, sum((c - e) * (c - e) / e) OVER
-        |    (PARTITION BY event_type) AS chi2,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY c DESC, d) AS rk FROM r)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |  roundStable(chi2, 6) AS chi2, d AS top_digit,
-        |  roundStable(c / n, 6) AS top_share
-        |FROM x WHERE rk = 1 ORDER BY event_type""".stripMargin,
-
-    "q336_raking" ->
-      // same 3-sweep unroll (row then col), same zero guards
-      """WITH cells AS (SELECT event_type, isodow(ts) - 1 AS dow,
-        |    CAST(count(*) AS DOUBLE) AS n FROM events
-        |  WHERE day(ts) > 15 GROUP BY 1, 2),
-        |rt AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS rt
-        |  FROM events WHERE day(ts) <= 15 GROUP BY 1),
-        |ct AS (SELECT isodow(ts) - 1 AS dow,
-        |    CAST(count(*) AS DOUBLE) AS ct FROM events
-        |  WHERE day(ts) <= 15 GROUP BY 1),
-        |m0 AS (SELECT c.event_type, c.dow, c.n, rt.rt, ct.ct, c.n AS m
-        |  FROM cells c JOIN rt USING (event_type) JOIN ct USING (dow)),
-        |a1 AS (SELECT *, CASE WHEN sum(m) OVER (PARTITION BY event_type)
-        |    > 0 THEN m * rt / sum(m) OVER (PARTITION BY event_type)
-        |    ELSE m END AS m1 FROM m0),
-        |b1 AS (SELECT *, CASE WHEN sum(m1) OVER (PARTITION BY dow) > 0
-        |    THEN m1 * ct / sum(m1) OVER (PARTITION BY dow)
-        |    ELSE m1 END AS m2 FROM a1),
-        |a2 AS (SELECT *, CASE WHEN sum(m2) OVER (PARTITION BY event_type)
-        |    > 0 THEN m2 * rt / sum(m2) OVER (PARTITION BY event_type)
-        |    ELSE m2 END AS m3 FROM b1),
-        |b2 AS (SELECT *, CASE WHEN sum(m3) OVER (PARTITION BY dow) > 0
-        |    THEN m3 * ct / sum(m3) OVER (PARTITION BY dow)
-        |    ELSE m3 END AS m4 FROM a2),
-        |a3 AS (SELECT *, CASE WHEN sum(m4) OVER (PARTITION BY event_type)
-        |    > 0 THEN m4 * rt / sum(m4) OVER (PARTITION BY event_type)
-        |    ELSE m4 END AS m5 FROM b2),
-        |b3 AS (SELECT *, CASE WHEN sum(m5) OVER (PARTITION BY dow) > 0
-        |    THEN m5 * ct / sum(m5) OVER (PARTITION BY dow)
-        |    ELSE m5 END AS m6 FROM a3),
-        |fin AS (SELECT event_type, dow, n, rt, m6,
-        |    sum(m6) OVER (PARTITION BY event_type) AS rowsum FROM b3)
-        |SELECT event_type, dow, CAST(n AS BIGINT) AS n,
-        |  roundStable(m6, 6) AS raked,
-        |  roundStable(CASE WHEN n > 0 THEN m6 / n END, 6) AS weight,
-        |  roundStable(CASE WHEN rt > 0 THEN abs(rowsum - rt) / rt END,
-        |    6) AS row_err
-        |FROM fin ORDER BY event_type, dow""".stripMargin,
-
-    "q337_ess" ->
-      // same rake chain, Kish ESS/deff over the ROUNDED weights
-      """WITH cells AS (SELECT event_type, isodow(ts) - 1 AS dow,
-        |    CAST(count(*) AS DOUBLE) AS n FROM events
-        |  WHERE day(ts) > 15 GROUP BY 1, 2),
-        |rt AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS rt
-        |  FROM events WHERE day(ts) <= 15 GROUP BY 1),
-        |ct AS (SELECT isodow(ts) - 1 AS dow,
-        |    CAST(count(*) AS DOUBLE) AS ct FROM events
-        |  WHERE day(ts) <= 15 GROUP BY 1),
-        |m0 AS (SELECT c.event_type, c.dow, c.n, rt.rt, ct.ct, c.n AS m
-        |  FROM cells c JOIN rt USING (event_type) JOIN ct USING (dow)),
-        |a1 AS (SELECT *, CASE WHEN sum(m) OVER (PARTITION BY event_type)
-        |    > 0 THEN m * rt / sum(m) OVER (PARTITION BY event_type)
-        |    ELSE m END AS m1 FROM m0),
-        |b1 AS (SELECT *, CASE WHEN sum(m1) OVER (PARTITION BY dow) > 0
-        |    THEN m1 * ct / sum(m1) OVER (PARTITION BY dow)
-        |    ELSE m1 END AS m2 FROM a1),
-        |a2 AS (SELECT *, CASE WHEN sum(m2) OVER (PARTITION BY event_type)
-        |    > 0 THEN m2 * rt / sum(m2) OVER (PARTITION BY event_type)
-        |    ELSE m2 END AS m3 FROM b1),
-        |b2 AS (SELECT *, CASE WHEN sum(m3) OVER (PARTITION BY dow) > 0
-        |    THEN m3 * ct / sum(m3) OVER (PARTITION BY dow)
-        |    ELSE m3 END AS m4 FROM a2),
-        |a3 AS (SELECT *, CASE WHEN sum(m4) OVER (PARTITION BY event_type)
-        |    > 0 THEN m4 * rt / sum(m4) OVER (PARTITION BY event_type)
-        |    ELSE m4 END AS m5 FROM b2),
-        |b3 AS (SELECT *, CASE WHEN sum(m5) OVER (PARTITION BY dow) > 0
-        |    THEN m5 * ct / sum(m5) OVER (PARTITION BY dow)
-        |    ELSE m5 END AS m6 FROM a3),
-        |w AS (SELECT event_type, n,
-        |    roundStable(CASE WHEN n > 0 THEN m6 / n END, 6) AS wt
-        |  FROM b3),
-        |s AS (SELECT event_type, sum(n) AS cn, sum(n * wt) AS sw,
-        |    sum(n * wt * wt) AS sw2 FROM w GROUP BY 1)
-        |SELECT event_type, CAST(cn AS BIGINT) AS n,
-        |  roundStable(CASE WHEN sw2 > 0 THEN sw * sw / sw2 END, 6)
-        |    AS ess,
-        |  roundStable(CASE WHEN sw > 0 THEN cn * sw2 / (sw * sw) END,
-        |    6) AS deff
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    "q338_weight_trim" ->
-      // same rake chain, p80 cap over cell weights, mass/ESS readout
-      """WITH cells AS (SELECT event_type, isodow(ts) - 1 AS dow,
-        |    CAST(count(*) AS DOUBLE) AS n FROM events
-        |  WHERE day(ts) > 15 GROUP BY 1, 2),
-        |rt AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS rt
-        |  FROM events WHERE day(ts) <= 15 GROUP BY 1),
-        |ct AS (SELECT isodow(ts) - 1 AS dow,
-        |    CAST(count(*) AS DOUBLE) AS ct FROM events
-        |  WHERE day(ts) <= 15 GROUP BY 1),
-        |m0 AS (SELECT c.event_type, c.dow, c.n, rt.rt, ct.ct, c.n AS m
-        |  FROM cells c JOIN rt USING (event_type) JOIN ct USING (dow)),
-        |a1 AS (SELECT *, CASE WHEN sum(m) OVER (PARTITION BY event_type)
-        |    > 0 THEN m * rt / sum(m) OVER (PARTITION BY event_type)
-        |    ELSE m END AS m1 FROM m0),
-        |b1 AS (SELECT *, CASE WHEN sum(m1) OVER (PARTITION BY dow) > 0
-        |    THEN m1 * ct / sum(m1) OVER (PARTITION BY dow)
-        |    ELSE m1 END AS m2 FROM a1),
-        |a2 AS (SELECT *, CASE WHEN sum(m2) OVER (PARTITION BY event_type)
-        |    > 0 THEN m2 * rt / sum(m2) OVER (PARTITION BY event_type)
-        |    ELSE m2 END AS m3 FROM b1),
-        |b2 AS (SELECT *, CASE WHEN sum(m3) OVER (PARTITION BY dow) > 0
-        |    THEN m3 * ct / sum(m3) OVER (PARTITION BY dow)
-        |    ELSE m3 END AS m4 FROM a2),
-        |a3 AS (SELECT *, CASE WHEN sum(m4) OVER (PARTITION BY event_type)
-        |    > 0 THEN m4 * rt / sum(m4) OVER (PARTITION BY event_type)
-        |    ELSE m4 END AS m5 FROM b2),
-        |b3 AS (SELECT *, CASE WHEN sum(m5) OVER (PARTITION BY dow) > 0
-        |    THEN m5 * ct / sum(m5) OVER (PARTITION BY dow)
-        |    ELSE m5 END AS m6 FROM a3),
-        |w AS (SELECT event_type, n,
-        |    roundStable(CASE WHEN n > 0 THEN m6 / n END, 6) AS wt
-        |  FROM b3),
-        |cap AS (SELECT event_type, quantile_cont(wt, 0.8) AS cap
-        |  FROM w GROUP BY 1),
-        |tr AS (SELECT w.event_type, w.n, w.wt, cap.cap,
-        |    least(w.wt, cap.cap) AS wc FROM w JOIN cap USING (event_type)),
-        |s AS (SELECT event_type, sum(n) AS cn, any_value(cap) AS capv,
-        |    sum(n * wt) AS sw, sum(n * wt * wt) AS sw2,
-        |    sum(n * wc) AS swt, sum(n * wc * wc) AS swt2,
-        |    sum(n * (wt - wc)) AS moved FROM tr GROUP BY 1)
-        |SELECT event_type, CAST(cn AS BIGINT) AS n,
-        |  roundStable(capv, 6) AS cap,
-        |  roundStable(CASE WHEN sw > 0 THEN moved / sw END, 6)
-        |    AS mass_trimmed,
-        |  roundStable(CASE WHEN sw2 > 0 THEN sw * sw / sw2 END, 6)
-        |    AS ess_before,
-        |  roundStable(CASE WHEN swt2 > 0 THEN swt * swt / swt2 END, 6)
-        |    AS ess_after
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    "q339_wald_iv" ->
-      // same conditional cell means, same ITT / first-stage ratio
-      """WITH s AS (SELECT event_type,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN 1.0 ELSE 0.0 END) AS n1,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN value ELSE 0.0 END)
-        |      AS y1,
-        |    sum(CASE WHEN user_id % 2 = 0 AND user_id % 4 = 0 THEN 1.0
-        |      ELSE 0.0 END) AS d1,
-        |    sum(CASE WHEN user_id % 2 <> 0 THEN 1.0 ELSE 0.0 END) AS n0,
-        |    sum(CASE WHEN user_id % 2 <> 0 THEN value ELSE 0.0 END)
-        |      AS y0,
-        |    sum(CASE WHEN user_id % 2 <> 0 AND user_id % 4 = 0 THEN 1.0
-        |      ELSE 0.0 END) AS d0
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |t AS (SELECT event_type, n1, n0,
-        |    CASE WHEN n1 > 0 AND n0 > 0 THEN y1 / n1 - y0 / n0 END
-        |      AS itt,
-        |    CASE WHEN n1 > 0 AND n0 > 0 THEN d1 / n1 - d0 / n0 END
-        |      AS fs FROM s)
-        |SELECT event_type, CAST(n1 AS BIGINT) AS n_encouraged,
-        |  CAST(n0 AS BIGINT) AS n_control,
-        |  roundStable(itt, 6) AS itt, roundStable(fs, 6) AS first_stage,
-        |  roundStable(CASE WHEN abs(fs) >= 0.01 THEN itt / fs END, 6)
-        |    AS late
-        |FROM t ORDER BY event_type""".stripMargin,
-
-    "q340_rdd" ->
-      // same per-side moments in one pass, same centered-intercept fit
-      """WITH b AS (SELECT event_type,
-        |      CAST(minute(ts) AS DOUBLE) - 30.0 AS x, value AS y
-        |  FROM events WHERE value IS NOT NULL
-        |    AND abs(CAST(minute(ts) AS DOUBLE) - 30.0) <= 30.0),
-        |s AS (SELECT event_type,
-        |    sum(CASE WHEN x < 0 THEN 1.0 ELSE 0.0 END) AS nl,
-        |    sum(CASE WHEN x < 0 THEN x ELSE 0.0 END) AS sxl,
-        |    sum(CASE WHEN x < 0 THEN y ELSE 0.0 END) AS syl,
-        |    sum(CASE WHEN x < 0 THEN x * x ELSE 0.0 END) AS sxxl,
-        |    sum(CASE WHEN x < 0 THEN x * y ELSE 0.0 END) AS sxyl,
-        |    sum(CASE WHEN x >= 0 THEN 1.0 ELSE 0.0 END) AS nr,
-        |    sum(CASE WHEN x >= 0 THEN x ELSE 0.0 END) AS sxr,
-        |    sum(CASE WHEN x >= 0 THEN y ELSE 0.0 END) AS syr,
-        |    sum(CASE WHEN x >= 0 THEN x * x ELSE 0.0 END) AS sxxr,
-        |    sum(CASE WHEN x >= 0 THEN x * y ELSE 0.0 END) AS sxyr
-        |  FROM b GROUP BY 1),
-        |f AS (SELECT *,
-        |    CASE WHEN nl >= 2 AND nl * sxxl - sxl * sxl > 0 THEN
-        |      (nl * sxyl - sxl * syl) / (nl * sxxl - sxl * sxl) END AS bl,
-        |    CASE WHEN nr >= 2 AND nr * sxxr - sxr * sxr > 0 THEN
-        |      (nr * sxyr - sxr * syr) / (nr * sxxr - sxr * sxr) END AS br
-        |  FROM s),
-        |g AS (SELECT *, (syl - bl * sxl) / nl AS al,
-        |    (syr - br * sxr) / nr AS ar FROM f)
-        |SELECT event_type, CAST(nl AS BIGINT) AS n_left,
-        |  CAST(nr AS BIGINT) AS n_right,
-        |  roundStable(al, 6) AS left_at_cutoff,
-        |  roundStable(ar, 6) AS right_at_cutoff,
-        |  roundStable(bl, 6) AS slope_left,
-        |  roundStable(br, 6) AS slope_right,
-        |  roundStable(ar - al, 6) AS jump
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q341_evalue" ->
-      // same 2×2 cells, protective RRs inverted first
-      """WITH s AS (SELECT event_type,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN 1.0 ELSE 0.0 END) AS n1,
-        |    sum(CASE WHEN user_id % 2 = 0 AND value > 250 THEN 1.0
-        |      ELSE 0.0 END) AS x1,
-        |    sum(CASE WHEN user_id % 2 <> 0 THEN 1.0 ELSE 0.0 END) AS n0,
-        |    sum(CASE WHEN user_id % 2 <> 0 AND value > 250 THEN 1.0
-        |      ELSE 0.0 END) AS x0
-        |  FROM events GROUP BY 1),
-        |p AS (SELECT event_type,
-        |    CASE WHEN n1 > 0 THEN x1 / n1 END AS p1,
-        |    CASE WHEN n0 > 0 THEN x0 / n0 END AS p0 FROM s),
-        |r AS (SELECT *, CASE WHEN p0 > 0 AND p1 > 0 THEN p1 / p0 END
-        |    AS rr FROM p),
-        |e AS (SELECT *, CASE WHEN rr >= 1 THEN rr ELSE 1.0 / rr END
-        |    AS rs FROM r)
-        |SELECT event_type, roundStable(p1, 6) AS p_exposed,
-        |  roundStable(p0, 6) AS p_unexposed, roundStable(rr, 6) AS rr,
-        |  roundStable(rs + sqrt(rs * (rs - 1)), 6) AS evalue
-        |FROM e ORDER BY event_type""".stripMargin,
-
-    "q342_cindex" ->
-      // same reduced subjects, usable pairs, half-credit score ties
-      """WITH u AS (SELECT user_id, min(ts) AS f, max(ts) AS l,
-        |    min(CASE WHEN event_type = 'error' THEN ts END) AS err,
-        |    avg(value) AS score FROM events GROUP BY 1),
-        |s AS (SELECT user_id % 3 AS cohort,
-        |    date_diff('day', CAST(f AS DATE),
-        |      CAST(coalesce(err, l) AS DATE)) AS t,
-        |    (err IS NOT NULL) AS obs, roundStable(score, 6) AS sc
-        |  FROM u),
-        |p AS (SELECT a.cohort, a.sc AS sa, b.sc AS sb FROM s a
-        |  JOIN s b ON a.cohort = b.cohort AND a.obs AND a.t < b.t)
-        |SELECT cohort, count(*) AS n_pairs,
-        |  roundStable(sum(CASE WHEN sa > sb THEN 1.0
-        |    WHEN sa = sb THEN 0.5 ELSE 0.0 END) / count(*), 6)
-        |    AS c_index
-        |FROM p GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "q343_survival_summary" ->
-      // q172's KM chain, then the step integral capped at τ = 20
-      """WITH u AS (SELECT user_id, min(ts) AS f, max(ts) AS l,
-        |    min(CASE WHEN event_type = 'error' THEN ts END) AS err
-        |  FROM events GROUP BY 1),
-        |s AS (SELECT user_id % 3 AS cohort,
-        |    date_diff('day', CAST(f AS DATE),
-        |      CAST(coalesce(err, l) AS DATE)) AS t,
-        |    (err IS NOT NULL) AS obs FROM u),
-        |g AS (SELECT cohort, t,
-        |    sum(CASE WHEN obs THEN 1 ELSE 0 END) AS d,
-        |    sum(CASE WHEN obs THEN 0 ELSE 1 END) AS c
-        |  FROM s GROUP BY 1, 2),
-        |w AS (SELECT cohort, t, d, c,
-        |    sum(d + c) OVER (PARTITION BY cohort ORDER BY t
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS n
-        |  FROM g),
-        |f AS (SELECT cohort, t, 1.0 - CAST(d AS DOUBLE) / n AS fac
-        |  FROM w),
-        |k AS (SELECT cohort, t,
-        |    roundStable(CASE WHEN min(fac) OVER win <= 0 THEN 0.0
-        |      ELSE exp(sum(CASE WHEN fac > 0 THEN ln(fac) ELSE 0.0 END)
-        |        OVER win) END, 6) AS survival
-        |  FROM f WINDOW win AS (PARTITION BY cohort ORDER BY t
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY cohort
-        |      ORDER BY t) AS rn,
-        |    coalesce(CAST(lead(t) OVER (PARTITION BY cohort ORDER BY t)
-        |      AS DOUBLE), 20.0) AS nt FROM k),
-        |q AS (SELECT cohort, t, survival,
-        |    survival * (least(nt, 20.0) - least(CAST(t AS DOUBLE), 20.0))
-        |      + CASE WHEN rn = 1 THEN least(CAST(t AS DOUBLE), 20.0)
-        |        ELSE 0.0 END AS seg FROM r)
-        |SELECT cohort, roundStable(sum(seg), 6) AS rmst,
-        |  min(CASE WHEN survival <= 0.5 THEN t END) AS median_t,
-        |  max(t) AS last_t, min(survival) AS s_last, 20.0 AS tau
-        |FROM q GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "q344_rate_ratio" ->
-      // same person-time cells, Poisson log-scale CI
-      """WITH u AS (SELECT user_id, min(ts) AS f, max(ts) AS l,
-        |    min(CASE WHEN event_type = 'error' THEN ts END) AS err
-        |  FROM events GROUP BY 1),
-        |s AS (SELECT user_id % 3 AS cohort, user_id % 2 = 0 AS ex,
-        |    CAST(date_diff('day', CAST(f AS DATE),
-        |      CAST(coalesce(err, l) AS DATE)) AS DOUBLE) AS t,
-        |    (err IS NOT NULL) AS obs FROM u),
-        |g AS (SELECT cohort,
-        |    sum(CASE WHEN ex AND obs THEN 1.0 ELSE 0.0 END) AS d1,
-        |    sum(CASE WHEN ex THEN t ELSE 0.0 END) AS t1,
-        |    sum(CASE WHEN NOT ex AND obs THEN 1.0 ELSE 0.0 END) AS d0,
-        |    sum(CASE WHEN NOT ex THEN t ELSE 0.0 END) AS t0
-        |  FROM s GROUP BY 1),
-        |r AS (SELECT *, CASE WHEN t1 > 0 THEN d1 / t1 END AS r1,
-        |    CASE WHEN t0 > 0 THEN d0 / t0 END AS r0 FROM g),
-        |i AS (SELECT *, CASE WHEN r0 > 0 AND r1 > 0 THEN r1 / r0 END
-        |    AS irr, CASE WHEN d1 > 0 AND d0 > 0 THEN
-        |    sqrt(1.0 / d1 + 1.0 / d0) END AS se FROM r)
-        |SELECT cohort, CAST(d1 AS BIGINT) AS events_exposed,
-        |  roundStable(t1, 6) AS time_exposed,
-        |  CAST(d0 AS BIGINT) AS events_unexposed,
-        |  roundStable(t0, 6) AS time_unexposed,
-        |  roundStable(irr, 6) AS irr,
-        |  roundStable(exp(ln(irr) - 1.96 * se), 6) AS ci_lo,
-        |  roundStable(exp(ln(irr) + 1.96 * se), 6) AS ci_hi
-        |FROM i ORDER BY cohort""".stripMargin,
-
-    "q345_inequality" ->
-      // same positive-only base, Theil via the log identity, same
-      // floor cuts (equal-value boundary ties sum identically)
-      """WITH b AS (SELECT event_type, value AS x FROM events
-        |  WHERE value IS NOT NULL AND value > 0),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY event_type
-        |      ORDER BY x) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n FROM b),
-        |k AS (SELECT *, floor(n * 0.4) AS k40, floor(n * 0.1) AS k10
-        |  FROM r),
-        |s AS (SELECT event_type, count(*) AS n, avg(x) AS mu,
-        |    avg(ln(x)) AS mlx, sum(x * ln(x)) AS sxl,
-        |    sum(CASE WHEN rn <= k40 THEN x ELSE 0.0 END) AS b40,
-        |    sum(CASE WHEN rn > n - k10 THEN x ELSE 0.0 END) AS t10
-        |  FROM k GROUP BY 1)
-        |SELECT event_type, n, roundStable(mu, 6) AS mean,
-        |  roundStable(sxl / (n * mu) - ln(mu), 6) AS theil,
-        |  roundStable(1.0 - exp(mlx) / mu, 6) AS atkinson,
-        |  roundStable(CASE WHEN b40 > 0 THEN t10 / b40 END, 6) AS palma
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    "q346_price_index" ->
-      // same matched-basket unit values, same L/P/F folds
-      """WITH li AS (SELECT l.l_partkey AS item,
-        |    year(o.o_orderdate) AS y,
-        |    l.l_extendedprice * (1.0 - l.l_discount) AS spend,
-        |    CAST(l.l_quantity AS DOUBLE) AS qty
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  WHERE year(o.o_orderdate) IN (1996, 2000)),
-        |c AS (SELECT item,
-        |    sum(CASE WHEN y = 1996 THEN spend ELSE 0.0 END) AS s0,
-        |    sum(CASE WHEN y = 1996 THEN qty ELSE 0.0 END) AS q0,
-        |    sum(CASE WHEN y = 2000 THEN spend ELSE 0.0 END) AS s1,
-        |    sum(CASE WHEN y = 2000 THEN qty ELSE 0.0 END) AS q1
-        |  FROM li GROUP BY 1),
-        |a AS (SELECT count(*) AS n_items,
-        |    CAST(sum(CASE WHEN q0 > 0 AND q1 > 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_matched,
-        |    sum(CASE WHEN q0 > 0 AND q1 > 0 THEN s1 / q1 * q0
-        |      ELSE 0.0 END) AS l1,
-        |    sum(CASE WHEN q0 > 0 AND q1 > 0 THEN s0 / q0 * q0
-        |      ELSE 0.0 END) AS l0,
-        |    sum(CASE WHEN q0 > 0 AND q1 > 0 THEN s1 / q1 * q1
-        |      ELSE 0.0 END) AS p1,
-        |    sum(CASE WHEN q0 > 0 AND q1 > 0 THEN s0 / q0 * q1
-        |      ELSE 0.0 END) AS p0
-        |  FROM c)
-        |SELECT n_items, n_matched,
-        |  roundStable(CASE WHEN l0 > 0 THEN l1 / l0 END, 6)
-        |    AS laspeyres,
-        |  roundStable(CASE WHEN p0 > 0 THEN p1 / p0 END, 6) AS paasche,
-        |  roundStable(sqrt((CASE WHEN l0 > 0 THEN l1 / l0 END)
-        |    * (CASE WHEN p0 > 0 THEN p1 / p0 END)), 6) AS fisher
-        |FROM a""".stripMargin,
-
-    "q347_abc_xyz" ->
-      // same rounded-revenue Pareto cut × occupied-period CV classes
-      """WITH li AS (SELECT l.l_partkey AS item,
-        |    date_trunc('month', o.o_orderdate) AS m,
-        |    l.l_extendedprice * (1.0 - l.l_discount) AS r,
-        |    CAST(l.l_quantity AS DOUBLE) AS q
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |pp AS (SELECT item, m, sum(r) AS r, sum(q) AS q FROM li
-        |  GROUP BY 1, 2),
-        |pi AS (SELECT item, roundStable(sum(r), 6) AS rev,
-        |    count(*) AS np, avg(q) AS mq, stddev_pop(q) AS sq
-        |  FROM pp GROUP BY 1),
-        |cl AS (SELECT *,
-        |    sum(rev) OVER (ORDER BY rev DESC, item
-        |      ROWS UNBOUNDED PRECEDING) AS cum,
-        |    sum(rev) OVER () AS tot,
-        |    CASE WHEN np >= 2 AND mq > 0 THEN sq / mq END AS cv
-        |  FROM pi),
-        |cls AS (SELECT *,
-        |    CASE WHEN cum <= tot * 0.8 THEN 'A'
-        |      WHEN cum <= tot * 0.95 THEN 'B' ELSE 'C' END AS abc,
-        |    CASE WHEN cv < 0.5 THEN 'X' WHEN cv < 1.0 THEN 'Y'
-        |      ELSE 'Z' END AS xyz FROM cl),
-        |cells AS (SELECT abc, xyz, count(*) AS n_items,
-        |    roundStable(sum(rev), 6) AS revenue FROM cls GROUP BY 1, 2)
-        |SELECT abc, xyz, n_items, revenue,
-        |  roundStable(revenue / sum(revenue) OVER (), 6)
-        |    AS revenue_share
-        |FROM cells ORDER BY abc, xyz""".stripMargin,
-
-    "q348_elasticity" ->
-      // same within-item demeaning, same pooled moments fold
-      """WITH b AS (SELECT l_partkey AS item,
-        |    ln(l_extendedprice * (1.0 - l_discount)
-        |      / CAST(l_quantity AS DOUBLE)) AS lp,
-        |    ln(CAST(l_quantity AS DOUBLE)) AS lq
-        |  FROM lineitem
-        |  WHERE l_quantity > 0
-        |    AND l_extendedprice * (1.0 - l_discount)
-        |      / CAST(l_quantity AS DOUBLE) > 0),
-        |d AS (SELECT item,
-        |    lp - avg(lp) OVER (PARTITION BY item) AS dp,
-        |    lq - avg(lq) OVER (PARTITION BY item) AS dq FROM b),
-        |s AS (SELECT count(*) AS n, count(DISTINCT item) AS n_items,
-        |    sum(dp * dq) AS sxy, sum(dp * dp) AS sxx,
-        |    sum(dq * dq) AS syy FROM d)
-        |SELECT n, n_items,
-        |  roundStable(CASE WHEN sxx > 0 THEN sxy / sxx END, 6)
-        |    AS elasticity,
-        |  roundStable(CASE WHEN sxx > 0 AND syy > 0 THEN
-        |    sxy * sxy / (sxx * syy) END, 6) AS r2_within
-        |FROM s""".stripMargin,
-
-    "q349_supplier_risk" ->
-      // same share cells, same inverse-Simpson fold and top argmax
-      """WITH c AS (SELECT l_partkey AS grp, l_suppkey AS m,
-        |    sum(CAST(l_extendedprice AS DOUBLE)) AS v FROM lineitem
-        |  WHERE l_partkey <= 400 AND l_extendedprice > 0
-        |  GROUP BY 1, 2),
-        |s AS (SELECT grp, m, v, v / sum(v) OVER (PARTITION BY grp) AS sh,
-        |    row_number() OVER (PARTITION BY grp ORDER BY v DESC, m)
-        |      AS rk FROM c)
-        |SELECT grp AS "group", count(*) AS n_members,
-        |  roundStable(sum(sh * sh), 6) AS hhi,
-        |  roundStable(1.0 / sum(sh * sh), 6) AS effective_n,
-        |  roundStable(max(CASE WHEN rk = 1 THEN sh END), 6)
-        |    AS top_share,
-        |  (count(*) = 1) AS single_source
-        |FROM s GROUP BY 1 ORDER BY "group"""".stripMargin,
-
-    "q285_eb_shrinkage" ->
-      // same per-item counts, same moments prior and shrinkage fold
-      """WITH i AS (SELECT user_id, count(*) AS n,
-        |    sum(CASE WHEN value > 250 THEN 1 ELSE 0 END) AS x
-        |  FROM events GROUP BY 1),
-        |r AS (SELECT user_id, n, x,
-        |    CAST(x AS DOUBLE) / CAST(n AS DOUBLE) AS rr FROM i),
-        |s AS (SELECT *, avg(rr) OVER () AS m,
-        |    var_samp(rr) OVER () AS v FROM r),
-        |t AS (SELECT *, CASE WHEN v > 0
-        |      AND m * (1.0 - m) / v - 1.0 > 0
-        |    THEN m * (1.0 - m) / v - 1.0 END AS ab FROM s)
-        |SELECT user_id, CAST(n AS BIGINT) AS n, CAST(x AS BIGINT) AS x,
-        |  roundStable(rr, 6) AS raw_rate,
-        |  roundStable(m * ab, 6) AS alpha,
-        |  roundStable((1.0 - m) * ab, 6) AS beta,
-        |  roundStable((m * ab + CAST(x AS DOUBLE))
-        |    / (ab + CAST(n AS DOUBLE)), 6) AS shrunk_rate
-        |FROM t ORDER BY user_id""".stripMargin,
-
-    "q286_simpson" ->
-      // same segment cells, pooled vs size-weighted stratified diff
-      """WITH c AS (SELECT event_type, isodow(ts) - 1 AS seg,
-        |    count(CASE WHEN user_id % 2 = 0 THEN value END) AS na,
-        |    count(CASE WHEN user_id % 2 <> 0 THEN value END) AS nb,
-        |    avg(CASE WHEN user_id % 2 = 0 THEN value END) AS ma,
-        |    avg(CASE WHEN user_id % 2 <> 0 THEN value END) AS mb,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN value END) AS sa,
-        |    sum(CASE WHEN user_id % 2 <> 0 THEN value END) AS sb
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |g AS (SELECT event_type, count(*) AS nseg,
-        |    sum(CASE WHEN na > 0 AND nb > 0 THEN 1 ELSE 0 END)
-        |      AS nused,
-        |    roundStable(sum(sa) / sum(na) - sum(sb) / sum(nb), 6)
-        |      AS pooled,
-        |    roundStable(sum(CASE WHEN na > 0 AND nb > 0
-        |        THEN CAST(na + nb AS DOUBLE) * (ma - mb) END)
-        |      / sum(CASE WHEN na > 0 AND nb > 0
-        |        THEN CAST(na + nb AS DOUBLE) END), 6) AS stdd
-        |  FROM c GROUP BY 1)
-        |SELECT event_type, CAST(nseg AS BIGINT) AS n_segments,
-        |  CAST(nused AS BIGINT) AS n_segments_used,
-        |  pooled AS pooled_diff, stdd AS standardized_diff,
-        |  CAST(CASE WHEN pooled IS NOT NULL AND stdd IS NOT NULL
-        |    THEN CASE WHEN sign(pooled) <> sign(stdd)
-        |      AND sign(pooled) <> 0 AND sign(stdd) <> 0
-        |      THEN 1 ELSE 0 END END AS BIGINT) AS reversal
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q287_cell_residuals" ->
-      // same margins, same Haberman denominator association
-      """WITH c AS (SELECT event_type AS a, isodow(ts) - 1 AS b,
-        |    count(*) AS o
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT a, b, o,
-        |    CAST(sum(o) OVER (PARTITION BY a) AS DOUBLE) AS na,
-        |    CAST(sum(o) OVER (PARTITION BY b) AS DOUBLE) AS nb,
-        |    CAST(sum(o) OVER () AS DOUBLE) AS n
-        |  FROM c)
-        |SELECT a, CAST(b AS BIGINT) AS b, CAST(o AS BIGINT) AS observed,
-        |  roundStable(na * nb / n, 6) AS expected,
-        |  roundStable(CASE WHEN sqrt(na * nb / n * (1.0 - na / n)
-        |      * (1.0 - nb / n)) > 0
-        |    THEN (CAST(o AS DOUBLE) - na * nb / n)
-        |      / sqrt(na * nb / n * (1.0 - na / n) * (1.0 - nb / n))
-        |    END, 6) AS adj_residual,
-        |  CAST(CASE WHEN sqrt(na * nb / n * (1.0 - na / n)
-        |      * (1.0 - nb / n)) > 0
-        |    THEN CASE WHEN abs(roundStable(
-        |        (CAST(o AS DOUBLE) - na * nb / n)
-        |        / sqrt(na * nb / n * (1.0 - na / n)
-        |          * (1.0 - nb / n)), 6)) > 3.0
-        |      THEN 1 ELSE 0 END END AS BIGINT) AS surprising
-        |FROM s ORDER BY a, b""".stripMargin,
-
-    "q282_cluster_purity" ->
-      // q66's recursive closure + md5 truth classes, B-cubed as cell
-      // arithmetic
-      """WITH RECURSIVE s AS (SELECT doc_id, str_split(text, ' ') AS w
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |      FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh
-        |  FROM sh),
-        |pairs AS (SELECT doc_a, doc_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |      CAST(count(*) AS DOUBLE)
-        |        / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |    FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |    GROUP BY a.doc_id, b.doc_id) t
-        |  WHERE j >= 0.8),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT a AS node, a AS comp
-        |    FROM (SELECT DISTINCT a FROM edges) t
-        |  UNION
-        |  SELECT e.a AS node, r.comp FROM edges e
-        |    JOIN reach r ON e.b = r.node),
-        |comp AS (SELECT node, min(comp) AS cluster_id FROM reach
-        |  GROUP BY node),
-        |el AS (SELECT d.doc_id,
-        |    coalesce(c.cluster_id, d.doc_id) AS cl, md5(d.text) AS tr
-        |  FROM documents d LEFT JOIN comp c ON c.node = d.doc_id),
-        |cells AS (SELECT cl, tr, count(*) AS nct FROM el GROUP BY 1, 2),
-        |st AS (SELECT nct,
-        |    CAST(sum(nct) OVER (PARTITION BY cl) AS DOUBLE) AS nc,
-        |    CAST(sum(nct) OVER (PARTITION BY tr) AS DOUBLE) AS nt,
-        |    cl, tr
-        |  FROM cells),
-        |g AS (SELECT CAST(sum(nct) AS DOUBLE) AS nn,
-        |    count(DISTINCT cl) AS ncl, count(DISTINCT tr) AS ntr,
-        |    sum(CAST(nct AS DOUBLE) * CAST(nct AS DOUBLE) / nc) AS sp,
-        |    sum(CAST(nct AS DOUBLE) * CAST(nct AS DOUBLE) / nt) AS sr
-        |  FROM st)
-        |SELECT CAST(nn AS BIGINT) AS n_elements,
-        |  CAST(ncl AS BIGINT) AS n_clusters,
-        |  CAST(ntr AS BIGINT) AS n_truth_classes,
-        |  roundStable(sp / nn, 6) AS bcubed_precision,
-        |  roundStable(sr / nn, 6) AS bcubed_recall,
-        |  roundStable(CASE WHEN roundStable(sp / nn, 6)
-        |      + roundStable(sr / nn, 6) > 0
-        |    THEN 2.0 * roundStable(sp / nn, 6) * roundStable(sr / nn, 6)
-        |      / (roundStable(sp / nn, 6) + roundStable(sr / nn, 6))
-        |    END, 6) AS f1
-        |FROM g""".stripMargin,
-
-    "q283_dominant_period" -> {
-      // the same 47 leads / corrs, unpivoted and ranked on rounded acf
-      val lags = 2 to 48
-      val leadCols = lags.map(l =>
-        s"lead(v, $l) OVER (PARTITION BY event_type ORDER BY hb, hb) AS ld$l")
-        .mkString(",\n    ")
-      val corrCols = lags.map(l =>
-        s"roundStable(corr(v, ld$l), 6) AS a$l").mkString(",\n    ")
-      val unions = lags.map(l =>
-        s"SELECT event_type, $l AS lag, a$l AS acf FROM g")
-        .mkString("\n  UNION ALL ")
-      s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hb,
-         |    avg(value) AS v
-         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-         |w AS (SELECT event_type, v,
-         |    $leadCols
-         |  FROM h),
-         |g AS (SELECT event_type,
-         |    $corrCols
-         |  FROM w GROUP BY 1),
-         |u AS ($unions),
-         |r AS (SELECT event_type, lag, acf,
-         |    row_number() OVER (PARTITION BY event_type
-         |      ORDER BY acf DESC, lag) AS rk
-         |  FROM u WHERE acf IS NOT NULL)
-         |SELECT event_type,
-         |  CAST(max(CASE WHEN rk = 1 THEN lag END) AS BIGINT)
-         |    AS best_lag,
-         |  max(CASE WHEN rk = 1 THEN acf END) AS best_acf,
-         |  CAST(max(CASE WHEN rk = 2 THEN lag END) AS BIGINT)
-         |    AS runner_lag,
-         |  max(CASE WHEN rk = 2 THEN acf END) AS runner_acf
-         |FROM r WHERE rk <= 2 GROUP BY 1
-         |ORDER BY event_type""".stripMargin
-    },
-
-    "q284_records" ->
-      // same running extrema, harmonic expectation over the same ranks
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hb,
-        |    avg(value) AS v
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |a AS (SELECT event_type, hb, v,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY hb, hb) AS j,
-        |    max(v) OVER (PARTITION BY event_type ORDER BY hb, hb
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax,
-        |    min(v) OVER (PARTITION BY event_type ORDER BY hb, hb
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmin
-        |  FROM h)
-        |SELECT event_type, count(*) AS n,
-        |  CAST(sum(CASE WHEN pmax IS NULL OR v > pmax THEN 1 ELSE 0
-        |    END) AS BIGINT) AS records_up,
-        |  CAST(sum(CASE WHEN pmin IS NULL OR v < pmin THEN 1 ELSE 0
-        |    END) AS BIGINT) AS records_down,
-        |  roundStable(sum(1.0 / CAST(j AS DOUBLE)), 6)
-        |    AS expected_records,
-        |  roundStable(CAST(sum(CASE WHEN pmax IS NULL OR v > pmax
-        |    THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / sum(1.0 / CAST(j AS DOUBLE)), 6) AS up_ratio,
-        |  roundStable(CAST(sum(CASE WHEN pmin IS NULL OR v < pmin
-        |    THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / sum(1.0 / CAST(j AS DOUBLE)), 6) AS down_ratio
-        |FROM a GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q279_stump" ->
-      // same distinct-value staging, prefix-sum class counts, argmin
-      // on rounded impurity
-      """WITH f AS (
-        |  SELECT 'hour' AS feature, CAST(hour(ts) AS DOUBLE) AS v,
-        |    CASE WHEN value > 250 THEN 1 ELSE 0 END AS y FROM events
-        |  UNION ALL
-        |  SELECT 'weekday', CAST(isodow(ts) - 1 AS DOUBLE),
-        |    CASE WHEN value > 250 THEN 1 ELSE 0 END FROM events
-        |  UNION ALL
-        |  SELECT 'day_of_month', CAST(day(ts) AS DOUBLE),
-        |    CASE WHEN value > 250 THEN 1 ELSE 0 END FROM events),
-        |c AS (SELECT feature, v, count(*) AS n, sum(y) AS pos
-        |  FROM f GROUP BY 1, 2),
-        |a1 AS (SELECT *,
-        |    sum(n) OVER wc AS cn, sum(pos) OVER wc AS cp
-        |  FROM c
-        |  WINDOW wc AS (PARTITION BY feature ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |a2 AS (SELECT *,
-        |    last_value(cn) OVER wf AS nn, last_value(cp) OVER wf AS pp
-        |  FROM a1
-        |  WINDOW wf AS (PARTITION BY feature ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)),
-        |g AS (SELECT feature, v, nn,
-        |    roundStable((CAST(cn AS DOUBLE) / CAST(nn AS DOUBLE))
-        |      * (1.0 - (CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE))
-        |          * (CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE))
-        |        - (1.0 - CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE))
-        |          * (1.0 - CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE)))
-        |      + ((CAST(nn AS DOUBLE) - CAST(cn AS DOUBLE))
-        |          / CAST(nn AS DOUBLE))
-        |        * (1.0 - (CAST(pp - cp AS DOUBLE)
-        |            / CAST(nn - cn AS DOUBLE))
-        |          * (CAST(pp - cp AS DOUBLE) / CAST(nn - cn AS DOUBLE))
-        |          - (1.0 - CAST(pp - cp AS DOUBLE)
-        |              / CAST(nn - cn AS DOUBLE))
-        |            * (1.0 - CAST(pp - cp AS DOUBLE)
-        |              / CAST(nn - cn AS DOUBLE))), 6) AS aft,
-        |    roundStable(1.0 - (CAST(pp AS DOUBLE) / CAST(nn AS DOUBLE))
-        |        * (CAST(pp AS DOUBLE) / CAST(nn AS DOUBLE))
-        |      - (1.0 - CAST(pp AS DOUBLE) / CAST(nn AS DOUBLE))
-        |        * (1.0 - CAST(pp AS DOUBLE) / CAST(nn AS DOUBLE)), 6)
-        |      AS bef,
-        |    row_number() OVER (PARTITION BY feature ORDER BY
-        |      roundStable((CAST(cn AS DOUBLE) / CAST(nn AS DOUBLE))
-        |        * (1.0 - (CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE))
-        |            * (CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE))
-        |          - (1.0 - CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE))
-        |            * (1.0 - CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE)))
-        |        + ((CAST(nn AS DOUBLE) - CAST(cn AS DOUBLE))
-        |            / CAST(nn AS DOUBLE))
-        |          * (1.0 - (CAST(pp - cp AS DOUBLE)
-        |              / CAST(nn - cn AS DOUBLE))
-        |            * (CAST(pp - cp AS DOUBLE)
-        |              / CAST(nn - cn AS DOUBLE))
-        |            - (1.0 - CAST(pp - cp AS DOUBLE)
-        |                / CAST(nn - cn AS DOUBLE))
-        |              * (1.0 - CAST(pp - cp AS DOUBLE)
-        |                / CAST(nn - cn AS DOUBLE))), 6) ASC, v ASC)
-        |      AS rk
-        |  FROM a2 WHERE cn < nn)
-        |SELECT feature, CAST(nn AS BIGINT) AS n, v AS best_threshold,
-        |  bef AS gini_before, aft AS gini_after,
-        |  roundStable(bef - aft, 6) AS gain
-        |FROM g WHERE rk = 1 ORDER BY feature""".stripMargin,
-
-    "q280_hll_overlap" ->
-      // exact pair counts + the always-1 verdict the sketch must earn
-      """WITH m AS (SELECT DISTINCT event_type AS c, user_id AS e
-        |  FROM events),
-        |pr AS (SELECT x.c AS cat_a, y.c AS cat_b, count(*) AS n_both
-        |  FROM m x JOIN m y ON y.e = x.e AND x.c < y.c GROUP BY 1, 2),
-        |allp AS (SELECT a.c AS cat_a, b.c AS cat_b
-        |  FROM (SELECT DISTINCT c FROM m) a
-        |  JOIN (SELECT DISTINCT c FROM m) b ON a.c < b.c)
-        |SELECT allp.cat_a, allp.cat_b,
-        |  CAST(coalesce(pr.n_both, 0) AS BIGINT) AS n_both,
-        |  CAST(1 AS BIGINT) AS sketch_ok
-        |FROM allp LEFT JOIN pr ON pr.cat_a = allp.cat_a
-        |  AND pr.cat_b = allp.cat_b
-        |ORDER BY allp.cat_a, allp.cat_b""".stripMargin,
-
-    "q281_poststrat" ->
-      // same conditional cells, same weighted fold and guards
-      """WITH c AS (SELECT event_type,
-        |    sum(CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0
-        |      END) AS nh_ref,
-        |    count(CASE WHEN ts >= TIMESTAMP '2024-01-16' THEN value
-        |      END) AS nh,
-        |    avg(CASE WHEN ts >= TIMESTAMP '2024-01-16' THEN value
-        |      END) AS mh,
-        |    var_samp(CASE WHEN ts >= TIMESTAMP '2024-01-16' THEN value
-        |      END) AS vh
-        |  FROM events GROUP BY 1),
-        |s AS (SELECT *, CAST(sum(CASE WHEN nh_ref > 0 THEN nh_ref END)
-        |    OVER () AS DOUBLE) AS bigN FROM c)
-        |SELECT
-        |  CAST(sum(CASE WHEN nh_ref > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_strata,
-        |  CAST(sum(CASE WHEN nh_ref > 0 AND nh = 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_missing_strata,
-        |  CAST(sum(CASE WHEN nh_ref = 0 AND nh > 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_new_strata,
-        |  roundStable(sum(CASE WHEN nh > 0
-        |      THEN CAST(nh AS DOUBLE) * mh END)
-        |    / sum(CASE WHEN nh > 0 THEN CAST(nh AS DOUBLE) END), 6)
-        |    AS raw_mean,
-        |  roundStable(CASE WHEN sum(CASE WHEN nh_ref > 0 AND nh = 0
-        |      THEN 1 ELSE 0 END) = 0
-        |    THEN sum(CASE WHEN nh_ref > 0 AND nh > 0
-        |      THEN (CAST(nh_ref AS DOUBLE) / bigN) * mh END) END, 6)
-        |    AS ps_mean,
-        |  roundStable(CASE WHEN sum(CASE WHEN nh_ref > 0 AND nh = 0
-        |      THEN 1 ELSE 0 END) = 0 AND sum(CASE WHEN nh_ref > 0
-        |      AND nh > 0 AND nh < 2 THEN 1 ELSE 0 END) = 0
-        |    THEN sqrt(sum(CASE WHEN nh_ref > 0 AND nh > 1
-        |      THEN (CAST(nh_ref AS DOUBLE) / bigN)
-        |        * (CAST(nh_ref AS DOUBLE) / bigN) * vh
-        |        / CAST(nh AS DOUBLE) END)) END, 6) AS se
-        |FROM s""".stripMargin,
-
-    "q276_did" ->
-      // same four conditional cells, same independent-cells SE
-      """WITH g AS (SELECT event_type,
-        |    avg(CASE WHEN user_id % 2 = 0
-        |      AND ts >= TIMESTAMP '2024-01-16' THEN value END) AS mtp,
-        |    var_samp(CASE WHEN user_id % 2 = 0
-        |      AND ts >= TIMESTAMP '2024-01-16' THEN value END) AS vtp,
-        |    count(CASE WHEN user_id % 2 = 0
-        |      AND ts >= TIMESTAMP '2024-01-16' THEN value END) AS ntp,
-        |    avg(CASE WHEN user_id % 2 = 0
-        |      AND ts < TIMESTAMP '2024-01-16' THEN value END) AS mtq,
-        |    var_samp(CASE WHEN user_id % 2 = 0
-        |      AND ts < TIMESTAMP '2024-01-16' THEN value END) AS vtq,
-        |    count(CASE WHEN user_id % 2 = 0
-        |      AND ts < TIMESTAMP '2024-01-16' THEN value END) AS ntq,
-        |    avg(CASE WHEN user_id % 2 <> 0
-        |      AND ts >= TIMESTAMP '2024-01-16' THEN value END) AS mcp,
-        |    var_samp(CASE WHEN user_id % 2 <> 0
-        |      AND ts >= TIMESTAMP '2024-01-16' THEN value END) AS vcp,
-        |    count(CASE WHEN user_id % 2 <> 0
-        |      AND ts >= TIMESTAMP '2024-01-16' THEN value END) AS ncp,
-        |    avg(CASE WHEN user_id % 2 <> 0
-        |      AND ts < TIMESTAMP '2024-01-16' THEN value END) AS mcq,
-        |    var_samp(CASE WHEN user_id % 2 <> 0
-        |      AND ts < TIMESTAMP '2024-01-16' THEN value END) AS vcq,
-        |    count(CASE WHEN user_id % 2 <> 0
-        |      AND ts < TIMESTAMP '2024-01-16' THEN value END) AS ncq
-        |  FROM events GROUP BY 1)
-        |SELECT event_type,
-        |  CAST(ntp AS BIGINT) AS n_treat_post,
-        |  CAST(ntq AS BIGINT) AS n_treat_pre,
-        |  CAST(ncp AS BIGINT) AS n_ctrl_post,
-        |  CAST(ncq AS BIGINT) AS n_ctrl_pre,
-        |  roundStable(mtp, 6) AS m_treat_post,
-        |  roundStable(mtq, 6) AS m_treat_pre,
-        |  roundStable(mcp, 6) AS m_ctrl_post,
-        |  roundStable(mcq, 6) AS m_ctrl_pre,
-        |  roundStable(CASE WHEN ntp > 1 AND ntq > 1 AND ncp > 1
-        |    AND ncq > 1 THEN (mtp - mtq) - (mcp - mcq) END, 6) AS did,
-        |  roundStable(CASE WHEN ntp > 1 AND ntq > 1 AND ncp > 1
-        |    AND ncq > 1 THEN sqrt(vtp / ntp + vtq / ntq + vcp / ncp
-        |      + vcq / ncq) END, 6) AS se,
-        |  roundStable(CASE WHEN ntp > 1 AND ntq > 1 AND ncp > 1
-        |    AND ncq > 1 THEN ((mtp - mtq) - (mcp - mcq))
-        |      - 1.96 * sqrt(vtp / ntp + vtq / ntq + vcp / ncp
-        |        + vcq / ncq) END, 6) AS ci_lo,
-        |  roundStable(CASE WHEN ntp > 1 AND ntq > 1 AND ncp > 1
-        |    AND ncq > 1 THEN ((mtp - mtq) - (mcp - mcq))
-        |      + 1.96 * sqrt(vtp / ntp + vtq / ntq + vcp / ncp
-        |        + vcq / ncq) END, 6) AS ci_hi
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q277_ltv_curve" ->
-      // q49's cohort staging on purchases; ordered cumulative revenue
-      """WITH c AS (SELECT user_id, date_trunc('week', min(ts))
-        |    AS cohort FROM events GROUP BY 1),
-        |cu AS (SELECT cohort, count(DISTINCT user_id) AS cohort_users
-        |  FROM c GROUP BY 1),
-        |r AS (SELECT c.cohort,
-        |    CAST(date_diff('day', CAST(c.cohort AS DATE),
-        |      CAST(e.ts AS DATE)) // 7 AS BIGINT) AS week_offset,
-        |    sum(e.value) AS rev0
-        |  FROM events e JOIN c ON c.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.value IS NOT NULL
-        |  GROUP BY 1, 2),
-        |w AS (SELECT r.cohort, week_offset, cu.cohort_users, rev0,
-        |    sum(rev0) OVER (PARTITION BY r.cohort ORDER BY week_offset
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum0
-        |  FROM r JOIN cu ON cu.cohort = r.cohort)
-        |SELECT CAST(cohort AS TIMESTAMP) AS cohort, week_offset,
-        |  CAST(cohort_users AS BIGINT) AS cohort_users,
-        |  roundStable(rev0, 6) AS rev, roundStable(cum0, 6) AS cum_rev,
-        |  roundStable(cum0 / CAST(cohort_users AS DOUBLE), 6)
-        |    AS ltv_per_user
-        |FROM w ORDER BY cohort, week_offset""".stripMargin,
-
-    "q278_vocab_overlap" ->
-      // q244's overlap SQL on (word, source) memberships
-      """WITH t AS (SELECT source AS c,
-        |    unnest(str_split(text, ' ')) AS e FROM documents),
-        |m AS (SELECT DISTINCT e, c FROM t WHERE e <> ''),
-        |sz AS (SELECT c, count(*) AS sz FROM m GROUP BY 1),
-        |tt AS (SELECT count(DISTINCT e) AS N FROM m),
-        |pr AS (SELECT x.c AS cat_a, y.c AS cat_b, count(*) AS n_both
-        |  FROM m x JOIN m y ON y.e = x.e AND x.c < y.c GROUP BY 1, 2)
-        |SELECT cat_a, cat_b,
-        |  CAST(a.sz AS BIGINT) AS n_a, CAST(b.sz AS BIGINT) AS n_b,
-        |  CAST(n_both AS BIGINT) AS n_both,
-        |  CAST(a.sz + b.sz - n_both AS BIGINT) AS n_union,
-        |  roundStable(CAST(n_both AS DOUBLE)
-        |    / (a.sz + b.sz - n_both), 6) AS jaccard,
-        |  roundStable(CAST(n_both AS DOUBLE) * tt.N / (a.sz * b.sz), 6)
-        |    AS lift
-        |FROM pr JOIN sz a ON a.c = pr.cat_a
-        |  JOIN sz b ON b.c = pr.cat_b, tt
-        |ORDER BY cat_a, cat_b""".stripMargin,
-
-    "q273_binseg" -> {
-      // both levels replayed: ordered prefix sums (bit-deterministic),
-      // totals from the LAST cumulative row, argmin on rounded cost
-      def levelSql(src: String, part: String, segExpr: String) =
-        s"""${src}a1 AS (SELECT *,
-           |    row_number() OVER (PARTITION BY $part ORDER BY i) AS j,
-           |    sum(x) OVER (PARTITION BY $part ORDER BY i
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sx,
-           |    sum(x * x) OVER (PARTITION BY $part ORDER BY i
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sxx
-           |  FROM ${src}r),
-           |${src}a2 AS (SELECT *,
-           |    count(*) OVER (PARTITION BY $part) AS n,
-           |    last_value(sx) OVER (PARTITION BY $part ORDER BY i
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-           |      FOLLOWING) AS sxn,
-           |    last_value(sxx) OVER (PARTITION BY $part ORDER BY i
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-           |      FOLLOWING) AS sxxn
-           |  FROM ${src}a1),
-           |${src}c1 AS (SELECT event_type, $segExpr AS segment, n, i, o, j,
-           |    roundStable((sxx - sx * sx / CAST(j AS DOUBLE))
-           |      + ((sxxn - sxx) - (sxn - sx) * (sxn - sx)
-           |        / (CAST(n AS DOUBLE) - CAST(j AS DOUBLE))), 6)
-           |      AS cost,
-           |    roundStable(sxxn - sxn * sxn / CAST(n AS DOUBLE), 6)
-           |      AS sset
-           |  FROM ${src}a2 WHERE j >= 48 AND j <= n - 48),
-           |${src}s1 AS (SELECT event_type, segment, n AS n_seg,
-           |    i AS split_i, o AS split_at,
-           |    roundStable(sset - cost, 6) AS gain,
-           |    row_number() OVER (PARTITION BY event_type, segment
-           |      ORDER BY cost ASC, j ASC) AS rn
-           |  FROM ${src}c1)""".stripMargin
-      s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS o,
-         |    avg(value) AS x
-         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-         |lr AS (SELECT event_type, o, x,
-         |    row_number() OVER (PARTITION BY event_type ORDER BY o, o)
-         |      AS i
-         |  FROM h),
-         |${levelSql("l", "event_type", "'root'")},
-         |lpick AS (SELECT * FROM ls1 WHERE rn = 1),
-         |rr AS (SELECT lr.event_type, lr.o, lr.x, lr.i,
-         |    CASE WHEN lr.i <= p.split_i THEN 'L' ELSE 'R' END AS side
-         |  FROM lr JOIN (SELECT event_type, split_i FROM lpick) p
-         |    ON p.event_type = lr.event_type),
-         |${levelSql("r", "event_type, side", "side")},
-         |rpick AS (SELECT * FROM rs1 WHERE rn = 1)
-         |SELECT event_type, segment, CAST(n_seg AS BIGINT) AS n_seg,
-         |  CAST(split_i AS BIGINT) AS split_i, split_at, gain
-         |FROM (SELECT event_type, segment, n_seg, split_i, split_at,
-         |    gain FROM lpick
-         |  UNION ALL SELECT event_type, segment, n_seg, split_i,
-         |    split_at, gain FROM rpick) u
-         |ORDER BY event_type, segment, split_i""".stripMargin
-    },
-
-    "q274_retention_halflife" ->
-      // q49's staging, then the log-linear fit from moments
-      """WITH first AS (SELECT user_id, date_trunc('week', min(ts))
-        |    AS cohort FROM events GROUP BY user_id),
-        |act AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS wk
-        |  FROM events),
-        |cnt AS (SELECT CAST(cohort AS TIMESTAMP) AS cohort,
-        |    CAST(date_diff('day', CAST(cohort AS DATE),
-        |      CAST(wk AS DATE)) // 7 AS BIGINT) AS off,
-        |    count(DISTINCT user_id) AS active
-        |  FROM act JOIN first USING (user_id) GROUP BY 1, 2),
-        |b AS (SELECT cohort, off, active,
-        |    max(CASE WHEN off = 0 THEN active END)
-        |      OVER (PARTITION BY cohort) AS base
-        |  FROM cnt),
-        |p AS (SELECT cohort,
-        |    ln(CAST(active AS DOUBLE) / CAST(base AS DOUBLE)) AS y,
-        |    CAST(off AS DOUBLE) AS t
-        |  FROM b WHERE off >= 1 AND base > 0 AND active > 0),
-        |g AS (SELECT cohort, CAST(count(*) AS DOUBLE) AS n,
-        |    sum(t * t) - sum(t) * sum(t) / CAST(count(*) AS DOUBLE)
-        |      AS sxx,
-        |    sum(y * y) - sum(y) * sum(y) / CAST(count(*) AS DOUBLE)
-        |      AS syy,
-        |    sum(t * y) - sum(t) * sum(y) / CAST(count(*) AS DOUBLE)
-        |      AS sxy
-        |  FROM p GROUP BY 1)
-        |SELECT cohort, CAST(n AS BIGINT) AS n_weeks,
-        |  roundStable(CASE WHEN n > 1 AND sxx > 0 THEN sxy / sxx END,
-        |    6) AS slope,
-        |  roundStable(CASE WHEN n > 1 AND sxx > 0 AND syy > 0
-        |    THEN sxy * sxy / (sxx * syy) END, 6) AS r2,
-        |  roundStable(CASE WHEN n > 1 AND sxx > 0 AND sxy / sxx < 0
-        |    THEN -0.693147 / (sxy / sxx) END, 6) AS half_life_weeks
-        |FROM g ORDER BY cohort""".stripMargin,
-
-    "q275_peaks" ->
-      // same robust threshold, same plateau convention, rounded flags
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS o,
-        |    avg(value) AS v
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |m AS (SELECT event_type, quantile_cont(v, 0.5) AS med
-        |  FROM h GROUP BY 1),
-        |d AS (SELECT h.event_type, o, v, med
-        |  FROM h JOIN m ON m.event_type = h.event_type),
-        |a AS (SELECT event_type, quantile_cont(abs(v - med), 0.5) AS mad
-        |  FROM d GROUP BY 1),
-        |x AS (SELECT d.event_type, o, v, med, mad,
-        |    lag(v) OVER w AS pv, lead(v) OVER w AS nv
-        |  FROM d JOIN a ON a.event_type = d.event_type
-        |  WINDOW w AS (PARTITION BY d.event_type ORDER BY o, o))
-        |SELECT event_type, o, roundStable(v, 6) AS value,
-        |  roundStable(med + 2.5 * CAST(1.4826 AS DOUBLE) * mad, 6)
-        |    AS threshold,
-        |  roundStable(v - med, 6) AS above_median
-        |FROM x
-        |WHERE pv IS NOT NULL AND nv IS NOT NULL AND v > pv AND v >= nv
-        |  AND roundStable(v, 6) > roundStable(med
-        |    + 2.5 * CAST(1.4826 AS DOUBLE) * mad, 6)
-        |ORDER BY event_type, o""".stripMargin,
-
-    "q270_readability" ->
-      // same regexp counts: sentence RUNS, vowel-group syllables
-      """WITH t AS (SELECT doc_id,
-        |    CAST(len(str_split(text, ' ')) AS DOUBLE) AS w,
-        |    CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+')))
-        |      AS DOUBLE) AS s,
-        |    CAST(greatest(1, len(regexp_extract_all(lower(text),
-        |      '[aeiouy]+'))) AS DOUBLE) AS sy
-        |  FROM documents)
-        |SELECT doc_id, CAST(w AS BIGINT) AS n_words,
-        |  CAST(s AS BIGINT) AS n_sentences,
-        |  CAST(sy AS BIGINT) AS n_syllables,
-        |  roundStable(206.835 - 1.015 * (w / s) - 84.6 * (sy / w), 6)
-        |    AS flesch,
-        |  roundStable(0.39 * (w / s) + 11.8 * (sy / w) - 15.59, 6)
-        |    AS fk_grade
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    "q271_log_odds" ->
-      // same conditional counts, same prior-shrunk delta/sigma
-      """WITH t AS (SELECT (lang = 'en') AS a,
-        |    unnest(str_split(text, ' ')) AS word FROM documents),
-        |c AS (SELECT word,
-        |    sum(CASE WHEN a THEN 1 ELSE 0 END) AS y_a,
-        |    sum(CASE WHEN NOT a THEN 1 ELSE 0 END) AS y_b
-        |  FROM t WHERE word <> '' GROUP BY 1),
-        |w AS (SELECT word, y_a, y_b,
-        |    CAST(sum(y_a) OVER () AS DOUBLE) AS na,
-        |    CAST(sum(y_b) OVER () AS DOUBLE) AS nb
-        |  FROM c),
-        |x AS (SELECT word, y_a, y_b, na, nb,
-        |    CAST(y_a AS DOUBLE) AS ya, CAST(y_b AS DOUBLE) AS yb,
-        |    500.0 * (CAST(y_a AS DOUBLE) + CAST(y_b AS DOUBLE))
-        |      / (na + nb) AS aw
-        |  FROM w WHERE y_a + y_b >= 20),
-        |z AS (SELECT word, y_a, y_b,
-        |    ln((ya + aw) / (na + 500.0 - ya - aw))
-        |      - ln((yb + aw) / (nb + 500.0 - yb - aw)) AS delta,
-        |    sqrt(1.0 / (ya + aw) + 1.0 / (yb + aw)) AS sigma
-        |  FROM x)
-        |SELECT word, CAST(y_a AS BIGINT) AS y_a,
-        |  CAST(y_b AS BIGINT) AS y_b,
-        |  roundStable(delta, 6) AS log_odds,
-        |  roundStable(delta / sigma, 6) AS z
-        |FROM z ORDER BY word""".stripMargin,
-
-    "q272_conversion_latency" ->
-      // same two-stage staging, exact latency percentiles in seconds
-      """WITH v AS (SELECT user_id, min(ts) AS tv FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |p AS (SELECT e.user_id, min(epoch_us(e.ts)) AS tp
-        |  FROM events e JOIN v ON v.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > v.tv GROUP BY 1),
-        |l AS (SELECT v.user_id % 3 AS cohort,
-        |    CAST(p.tp - epoch_us(v.tv) AS DOUBLE) / 1000000.0 AS lat,
-        |    (p.user_id IS NOT NULL) AS conv
-        |  FROM v LEFT JOIN p ON p.user_id = v.user_id)
-        |SELECT cohort, count(*) AS n_viewed,
-        |  CAST(sum(CASE WHEN conv THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_converted,
-        |  roundStable(CAST(sum(CASE WHEN conv THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS conv_rate,
-        |  roundStable(quantile_cont(lat, 0.5), 6) AS median_s,
-        |  roundStable(quantile_cont(lat, 0.9), 6) AS p90_s,
-        |  roundStable(avg(lat), 6) AS mean_s
-        |FROM l GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "q267_neyman" ->
-      // same mass/remainder staging; remainders rounded BEFORE ranking
-      """WITH c AS (SELECT event_type, count(*) AS n_rows,
-        |    coalesce(sqrt(var_samp(value)), 0.0) AS sd
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |s AS (SELECT event_type, n_rows, sd,
-        |    CAST(n_rows AS DOUBLE) * sd AS mass FROM c),
-        |t AS (SELECT event_type, n_rows, sd, mass,
-        |    sum(mass) OVER () AS tot FROM s),
-        |r AS (SELECT event_type, n_rows, sd,
-        |    CASE WHEN tot > 0 THEN 1000.0 * mass / tot
-        |      ELSE 0.0 END AS raw
-        |  FROM t),
-        |b AS (SELECT event_type, n_rows, sd, raw,
-        |    CAST(floor(raw) AS BIGINT) AS base,
-        |    roundStable(raw - floor(raw), 6) AS remr FROM r),
-        |w AS (SELECT event_type, n_rows, sd, raw, base,
-        |    1000 - sum(base) OVER () AS leftv,
-        |    row_number() OVER (ORDER BY remr DESC, event_type) AS rk
-        |  FROM b),
-        |f AS (SELECT event_type, n_rows, sd, raw,
-        |    least(n_rows, base + CASE WHEN rk <= leftv THEN 1 ELSE 0
-        |      END) AS alloc
-        |  FROM w)
-        |SELECT event_type, CAST(n_rows AS BIGINT) AS n_rows,
-        |  roundStable(sd, 6) AS sd, roundStable(raw, 6) AS alloc_raw,
-        |  CAST(alloc AS BIGINT) AS alloc_n,
-        |  roundStable(CAST(alloc AS DOUBLE) / CAST(n_rows AS DOUBLE), 6)
-        |    AS sampling_frac
-        |FROM f ORDER BY event_type""".stripMargin,
-
-    "q268_smd_balance" ->
-      // same per-user covariates, same conditional moments, unpivoted
-      """WITH p AS (SELECT user_id,
-        |    CAST(count(*) AS DOUBLE) AS n_events,
-        |    avg(value) AS avg_value,
-        |    CAST(count(DISTINCT event_type) AS DOUBLE) AS n_types,
-        |    CAST(count(DISTINCT CAST(ts AS DATE)) AS DOUBLE)
-        |      AS active_days
-        |  FROM events GROUP BY 1),
-        |g AS (SELECT
-        |    avg(CASE WHEN user_id % 2 = 0 THEN n_events END) AS ma1,
-        |    avg(CASE WHEN user_id % 2 <> 0 THEN n_events END) AS mb1,
-        |    var_samp(CASE WHEN user_id % 2 = 0 THEN n_events END) AS va1,
-        |    var_samp(CASE WHEN user_id % 2 <> 0 THEN n_events END) AS vb1,
-        |    count(CASE WHEN user_id % 2 = 0 THEN n_events END) AS na1,
-        |    count(CASE WHEN user_id % 2 <> 0 THEN n_events END) AS nb1,
-        |    avg(CASE WHEN user_id % 2 = 0 THEN avg_value END) AS ma2,
-        |    avg(CASE WHEN user_id % 2 <> 0 THEN avg_value END) AS mb2,
-        |    var_samp(CASE WHEN user_id % 2 = 0 THEN avg_value END) AS va2,
-        |    var_samp(CASE WHEN user_id % 2 <> 0 THEN avg_value END) AS vb2,
-        |    count(CASE WHEN user_id % 2 = 0 THEN avg_value END) AS na2,
-        |    count(CASE WHEN user_id % 2 <> 0 THEN avg_value END) AS nb2,
-        |    avg(CASE WHEN user_id % 2 = 0 THEN n_types END) AS ma3,
-        |    avg(CASE WHEN user_id % 2 <> 0 THEN n_types END) AS mb3,
-        |    var_samp(CASE WHEN user_id % 2 = 0 THEN n_types END) AS va3,
-        |    var_samp(CASE WHEN user_id % 2 <> 0 THEN n_types END) AS vb3,
-        |    count(CASE WHEN user_id % 2 = 0 THEN n_types END) AS na3,
-        |    count(CASE WHEN user_id % 2 <> 0 THEN n_types END) AS nb3,
-        |    avg(CASE WHEN user_id % 2 = 0 THEN active_days END) AS ma4,
-        |    avg(CASE WHEN user_id % 2 <> 0 THEN active_days END) AS mb4,
-        |    var_samp(CASE WHEN user_id % 2 = 0 THEN active_days END)
-        |      AS va4,
-        |    var_samp(CASE WHEN user_id % 2 <> 0 THEN active_days END)
-        |      AS vb4,
-        |    count(CASE WHEN user_id % 2 = 0 THEN active_days END) AS na4,
-        |    count(CASE WHEN user_id % 2 <> 0 THEN active_days END) AS nb4
-        |  FROM p)
-        |SELECT covariate, n_a, n_b, mean_a, mean_b, smd, imbalanced
-        |FROM (
-        |  SELECT 'n_events' AS covariate, na1 AS n_a, nb1 AS n_b,
-        |    roundStable(ma1, 6) AS mean_a, roundStable(mb1, 6) AS mean_b,
-        |    roundStable(CASE WHEN (va1 + vb1) / 2.0 > 0
-        |      THEN (ma1 - mb1) / sqrt((va1 + vb1) / 2.0) END, 6) AS smd,
-        |    CAST(CASE WHEN (va1 + vb1) / 2.0 > 0 THEN
-        |      CASE WHEN abs(roundStable((ma1 - mb1)
-        |        / sqrt((va1 + vb1) / 2.0), 6)) > 0.1
-        |      THEN 1 ELSE 0 END END AS BIGINT) AS imbalanced
-        |  FROM g
-        |  UNION ALL
-        |  SELECT 'avg_value', na2, nb2, roundStable(ma2, 6),
-        |    roundStable(mb2, 6),
-        |    roundStable(CASE WHEN (va2 + vb2) / 2.0 > 0
-        |      THEN (ma2 - mb2) / sqrt((va2 + vb2) / 2.0) END, 6),
-        |    CAST(CASE WHEN (va2 + vb2) / 2.0 > 0 THEN
-        |      CASE WHEN abs(roundStable((ma2 - mb2)
-        |        / sqrt((va2 + vb2) / 2.0), 6)) > 0.1
-        |      THEN 1 ELSE 0 END END AS BIGINT)
-        |  FROM g
-        |  UNION ALL
-        |  SELECT 'n_types', na3, nb3, roundStable(ma3, 6),
-        |    roundStable(mb3, 6),
-        |    roundStable(CASE WHEN (va3 + vb3) / 2.0 > 0
-        |      THEN (ma3 - mb3) / sqrt((va3 + vb3) / 2.0) END, 6),
-        |    CAST(CASE WHEN (va3 + vb3) / 2.0 > 0 THEN
-        |      CASE WHEN abs(roundStable((ma3 - mb3)
-        |        / sqrt((va3 + vb3) / 2.0), 6)) > 0.1
-        |      THEN 1 ELSE 0 END END AS BIGINT)
-        |  FROM g
-        |  UNION ALL
-        |  SELECT 'active_days', na4, nb4, roundStable(ma4, 6),
-        |    roundStable(mb4, 6),
-        |    roundStable(CASE WHEN (va4 + vb4) / 2.0 > 0
-        |      THEN (ma4 - mb4) / sqrt((va4 + vb4) / 2.0) END, 6),
-        |    CAST(CASE WHEN (va4 + vb4) / 2.0 > 0 THEN
-        |      CASE WHEN abs(roundStable((ma4 - mb4)
-        |        / sqrt((va4 + vb4) / 2.0), 6)) > 0.1
-        |      THEN 1 ELSE 0 END END AS BIGINT)
-        |  FROM g) u
-        |ORDER BY covariate""".stripMargin,
-
-    "q374_icc" ->
-      // identical continuous derivation, one-way ANOVA from cell
-      // moments, identical unequal-groups k0 and ratio expressions
-      """WITH r0 AS (SELECT user_id % 200 AS unit,
-        |    CAST(value AS DOUBLE) AS rating,
-        |    row_number() OVER (PARTITION BY user_id % 200, event_type
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM events WHERE value IS NOT NULL),
-        |r AS (SELECT unit % 3 AS cohort, unit, rating FROM r0
-        |  WHERE rn = 1),
-        |ua AS (SELECT cohort, unit, CAST(count(*) AS DOUBLE) AS n,
-        |    sum(rating) AS s, sum(rating * rating) AS q
-        |  FROM r GROUP BY 1, 2),
-        |units AS (SELECT * FROM ua WHERE n >= 2),
-        |sg AS (SELECT cohort, CAST(sum(CASE WHEN n < 2 THEN 1 ELSE 0
-        |    END) AS BIGINT) AS n_single FROM ua GROUP BY 1),
-        |g AS (SELECT cohort, sum(n) AS nn, count(*) AS k, sum(s) AS ss,
-        |    sum(q - s * s / n) AS ssw, sum(s * s / n) AS sb,
-        |    sum(n * n) AS nsq
-        |  FROM units GROUP BY 1),
-        |m AS (SELECT cohort, k, nn,
-        |    (sb - ss * ss / nn) / (CAST(k AS DOUBLE) - 1) AS msb,
-        |    ssw / (nn - CAST(k AS DOUBLE)) AS msw,
-        |    (nn - nsq / nn) / (CAST(k AS DOUBLE) - 1) AS k0
-        |  FROM g)
-        |SELECT sg.cohort, COALESCE(m.k, CAST(0 AS BIGINT)) AS n_units,
-        |  COALESCE(CAST(m.nn AS BIGINT), CAST(0 AS BIGINT)) AS n_ratings,
-        |  sg.n_single,
-        |  roundStable(m.msb, 6) AS ms_between,
-        |  roundStable(m.msw, 6) AS ms_within,
-        |  roundStable(CASE WHEN m.k >= 2
-        |      AND m.msb + (m.k0 - 1) * m.msw > 0
-        |    THEN (m.msb - m.msw) / (m.msb + (m.k0 - 1) * m.msw) END, 6)
-        |    AS icc
-        |FROM sg LEFT JOIN m USING (cohort)
-        |ORDER BY sg.cohort""".stripMargin,
-
-    "q375_cronbach" ->
-      """WITH r0 AS (SELECT user_id % 200 AS unit, event_type AS rater,
-        |    CAST(value AS DOUBLE) AS rating,
-        |    row_number() OVER (PARTITION BY user_id % 200, event_type
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM events WHERE value IS NOT NULL),
-        |r AS (SELECT unit % 3 AS cohort, unit, rater, rating FROM r0
-        |  WHERE rn = 1),
-        |kk AS (SELECT cohort, CAST(count(DISTINCT rater) AS DOUBLE)
-        |    AS kk FROM r GROUP BY 1),
-        |ur AS (SELECT cohort, unit, CAST(count(*) AS DOUBLE) AS nr,
-        |    sum(rating) AS tot FROM r GROUP BY 1, 2),
-        |cu AS (SELECT ur.cohort, ur.unit, ur.tot,
-        |    (ur.nr = kk.kk) AS fl FROM ur JOIN kk USING (cohort)),
-        |tv AS (SELECT cohort, CAST(count(*) AS DOUBLE) AS m,
-        |    avg(tot) AS mt, avg(tot * tot) AS qt
-        |  FROM cu WHERE fl GROUP BY 1),
-        |iv AS (SELECT cohort, sum(qi - mi * mi) AS vsum FROM (
-        |    SELECT r.cohort, r.rater, avg(r.rating) AS mi,
-        |      avg(r.rating * r.rating) AS qi
-        |    FROM r JOIN cu ON cu.cohort = r.cohort AND cu.unit = r.unit
-        |      AND cu.fl
-        |    GROUP BY 1, 2) GROUP BY 1),
-        |inc AS (SELECT cohort,
-        |    CAST(sum(CASE WHEN fl THEN 0 ELSE 1 END) AS BIGINT)
-        |      AS n_incomplete
-        |  FROM cu GROUP BY 1)
-        |SELECT kk.cohort,
-        |  COALESCE(CAST(tv.m AS BIGINT), CAST(0 AS BIGINT))
-        |    AS n_complete_units,
-        |  CAST(kk.kk AS BIGINT) AS k_raters, inc.n_incomplete,
-        |  roundStable(CASE WHEN kk.kk >= 2 AND tv.m >= 2
-        |      AND tv.qt - tv.mt * tv.mt > 0
-        |    THEN kk.kk / (kk.kk - 1)
-        |      * (1.0 - iv.vsum / (tv.qt - tv.mt * tv.mt)) END, 6)
-        |    AS alpha
-        |FROM kk JOIN inc USING (cohort)
-        |  LEFT JOIN tv USING (cohort) LEFT JOIN iv USING (cohort)
-        |ORDER BY kk.cohort""".stripMargin,
-
-    "q355_fleiss_kappa" ->
-      // the identical ratings derivation (first rating per (unit,
-      // rater) by ts), then Fleiss 1971 with variable rater counts;
-      // pairable units only in BOTH terms, singles counted visibly
-      """WITH r0 AS (SELECT user_id % 200 AS unit, event_type AS rater,
-        |    CASE WHEN value < 150 THEN 'lo' WHEN value < 300 THEN 'mid'
-        |      ELSE 'hi' END AS label,
-        |    row_number() OVER (PARTITION BY user_id % 200, event_type
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM events WHERE value IS NOT NULL),
-        |r AS (SELECT unit % 3 AS cohort, unit, label FROM r0 WHERE rn = 1),
-        |cells AS (SELECT cohort, unit, label,
-        |    CAST(count(*) AS DOUBLE) AS m FROM r GROUP BY 1, 2, 3),
-        |units AS (SELECT cohort, unit, sum(m) AS mi,
-        |    sum(m * (m - 1)) AS agree FROM cells GROUP BY 1, 2),
-        |pu AS (SELECT cohort, unit, mi, agree / (mi * (mi - 1)) AS pi
-        |  FROM units WHERE mi >= 2),
-        |po AS (SELECT cohort, avg(pi) AS po, count(*) AS nu,
-        |    sum(mi) AS nr FROM pu GROUP BY 1),
-        |pe AS (SELECT cohort, sum(nc * nc) / (sum(nc) * sum(nc)) AS pe
-        |  FROM (SELECT c.cohort, c.label, sum(c.m) AS nc FROM cells c
-        |    JOIN pu ON pu.cohort = c.cohort AND pu.unit = c.unit
-        |    GROUP BY 1, 2) GROUP BY 1),
-        |sg AS (SELECT cohort, sum(CASE WHEN mi < 2 THEN 1 ELSE 0 END)
-        |    AS n_single FROM units GROUP BY 1)
-        |SELECT sg.cohort, COALESCE(po.nu, CAST(0 AS BIGINT)) AS n_units,
-        |  COALESCE(CAST(po.nr AS BIGINT), CAST(0 AS BIGINT)) AS n_ratings,
-        |  CAST(sg.n_single AS BIGINT) AS n_single,
-        |  roundStable(po.po, 6) AS observed_agreement,
-        |  roundStable(pe.pe, 6) AS expected_agreement,
-        |  roundStable(CASE WHEN pe.pe < 1
-        |    THEN (po.po - pe.pe) / (1.0 - pe.pe) END, 6) AS kappa
-        |FROM sg LEFT JOIN po ON sg.cohort = po.cohort
-        |  LEFT JOIN pe ON sg.cohort = pe.cohort
-        |ORDER BY sg.cohort""".stripMargin,
-
-    "q356_krippendorff" ->
-      // coincidence-matrix identities — D_o and D_e as exact cell
-      // folds, no pair enumeration; all-one-label cohorts NULL
-      """WITH r0 AS (SELECT user_id % 200 AS unit, event_type AS rater,
-        |    CASE WHEN value < 150 THEN 'lo' WHEN value < 300 THEN 'mid'
-        |      ELSE 'hi' END AS label,
-        |    row_number() OVER (PARTITION BY user_id % 200, event_type
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM events WHERE value IS NOT NULL),
-        |r AS (SELECT unit % 3 AS cohort, unit, label FROM r0 WHERE rn = 1),
-        |cells AS (SELECT cohort, unit, label,
-        |    CAST(count(*) AS DOUBLE) AS m FROM r GROUP BY 1, 2, 3),
-        |units AS (SELECT cohort, unit, sum(m) AS mu, sum(m * m) AS sq
-        |  FROM cells GROUP BY 1, 2 HAVING sum(m) >= 2),
-        |dot AS (SELECT cohort,
-        |    sum((mu * mu - sq) / (mu - 1)) AS d_o, count(*) AS n_units
-        |  FROM units GROUP BY 1),
-        |nc AS (SELECT c.cohort, c.label, sum(c.m) AS nc FROM cells c
-        |  JOIN units u ON u.cohort = c.cohort AND u.unit = c.unit
-        |  GROUP BY 1, 2),
-        |det AS (SELECT cohort, sum(nc) AS n,
-        |    (sum(nc) * sum(nc) - sum(nc * nc)) / (sum(nc) - 1) AS d_e
-        |  FROM nc GROUP BY 1)
-        |SELECT dot.cohort, dot.n_units, CAST(det.n AS BIGINT) AS n_ratings,
-        |  roundStable(dot.d_o, 6) AS d_observed,
-        |  roundStable(det.d_e, 6) AS d_expected,
-        |  roundStable(CASE WHEN det.d_e > 0
-        |    THEN 1.0 - dot.d_o / det.d_e END, 6) AS alpha
-        |FROM dot JOIN det ON dot.cohort = det.cohort
-        |ORDER BY dot.cohort""".stripMargin,
-
-    "q357_lf_diagnostics" ->
-      // min-label vote dedup, per-unit voter/label stats joined back,
-      // majority by (count desc, label) — all replayed exactly
-      """WITH base AS (SELECT user_id % 200 AS unit, event_type AS lf,
-        |    CASE WHEN value IS NULL THEN NULL
-        |      WHEN value < 150 THEN 'lo' WHEN value < 300 THEN 'mid'
-        |      ELSE 'hi' END AS label
-        |  FROM events),
-        |nu AS (SELECT CAST(count(DISTINCT unit) AS DOUBLE) AS nu FROM base),
-        |votes AS (SELECT unit, lf, min(label) AS label FROM base
-        |  WHERE label IS NOT NULL GROUP BY 1, 2),
-        |us AS (SELECT unit, count(*) AS nvoters,
-        |    count(DISTINCT label) AS nlabels FROM votes GROUP BY 1),
-        |maj AS (SELECT unit, label AS mj FROM (
-        |    SELECT unit, label, row_number() OVER (PARTITION BY unit
-        |      ORDER BY count(*) DESC, label ASC) AS rk
-        |    FROM votes GROUP BY unit, label) WHERE rk = 1),
-        |agg AS (SELECT v.lf, CAST(count(*) AS DOUBLE) AS nv,
-        |    sum(CASE WHEN s.nvoters > 1 THEN 1.0 ELSE 0.0 END) AS ov,
-        |    sum(CASE WHEN s.nvoters > 1 AND s.nlabels > 1 THEN 1.0
-        |      ELSE 0.0 END) AS cf,
-        |    sum(CASE WHEN v.label = m.mj THEN 1.0 ELSE 0.0 END) AS mjc
-        |  FROM votes v JOIN us s ON v.unit = s.unit
-        |    JOIN maj m ON v.unit = m.unit
-        |  GROUP BY 1)
-        |SELECT lf, CAST(nv AS BIGINT) AS n_votes,
-        |  roundStable(nv / nu.nu, 6) AS coverage,
-        |  roundStable(ov / nu.nu, 6) AS overlap,
-        |  roundStable(cf / nu.nu, 6) AS conflict,
-        |  roundStable(mjc / nv, 6) AS majority_agreement
-        |FROM agg, nu ORDER BY lf""".stripMargin,
-
-    "q358_logistic" -> {
-      // the identical standardization + 4 Newton rounds, each round one
-      // MATERIALIZED moment agg + the same Cramer cofactor expansions
-      // (same operand order — IEEE-identical); intermediates UNROUNDED
-      // (Newton contracts engine-order fp noise, the q292 lesson)
-      val iters = 4
-      val steps = (1 to iters).map { k =>
-        s"""a$k AS MATERIALIZED (SELECT
-           |    sum(p * (1.0 - p)) AS h11,
-           |    sum(p * (1.0 - p) * x1) AS h12,
-           |    sum(p * (1.0 - p) * x2) AS h13,
-           |    sum(p * (1.0 - p) * x1 * x1) AS h22,
-           |    sum(p * (1.0 - p) * x1 * x2) AS h23,
-           |    sum(p * (1.0 - p) * x2 * x2) AS h33,
-           |    sum(y - p) AS g0, sum((y - p) * x1) AS g1,
-           |    sum((y - p) * x2) AS g2
-           |  FROM (SELECT y, x1, x2,
-           |      1.0 / (1.0 + exp(-(b0 + b1 * x1 + b2 * x2))) AS p
-           |    FROM d, i${k - 1}) t),
-           |s$k AS (SELECT *,
-           |    h11 * (h22 * h33 - h23 * h23) - h12 * (h12 * h33 - h23 * h13)
-           |      + h13 * (h12 * h23 - h22 * h13) AS det FROM a$k),
-           |i$k AS (SELECT
-           |    b0 + (g0 * (h22 * h33 - h23 * h23) - h12 * (g1 * h33 - h23 * g2)
-           |      + h13 * (g1 * h23 - h22 * g2)) / det AS b0,
-           |    b1 + (h11 * (g1 * h33 - h23 * g2) - g0 * (h12 * h33 - h23 * h13)
-           |      + h13 * (h12 * g2 - g1 * h13)) / det AS b1,
-           |    b2 + (h11 * (h22 * g2 - g1 * h23) - h12 * (h12 * g2 - g1 * h13)
-           |      + g0 * (h12 * h23 - h22 * h13)) / det AS b2
-           |  FROM i${k - 1}, s$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH pu AS MATERIALIZED (SELECT
-         |    CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y,
-         |    CAST(l_quantity AS DOUBLE) AS x1r,
-         |    CAST(l_discount AS DOUBLE) AS x2r
-         |  FROM lineitem WHERE l_returnflag IS NOT NULL
-         |    AND l_quantity IS NOT NULL AND l_discount IS NOT NULL),
-         |mo AS MATERIALIZED (SELECT avg(x1r) AS m1,
-         |    sqrt(avg(x1r * x1r) - avg(x1r) * avg(x1r)) AS s1,
-         |    avg(x2r) AS m2,
-         |    sqrt(avg(x2r * x2r) - avg(x2r) * avg(x2r)) AS s2,
-         |    count(*) AS n FROM pu),
-         |d AS MATERIALIZED (SELECT y, (x1r - m1) / s1 AS x1,
-         |    (x2r - m2) / s2 AS x2 FROM pu, mo),
-         |i0 AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2),
-         |$steps
-         |SELECT term, beta, n_obs FROM (
-         |  SELECT 'intercept' AS term, roundStable(b0, 6) AS beta,
-         |    mo.n AS n_obs FROM i$iters, mo
-         |  UNION ALL SELECT 'x1', roundStable(b1, 6), mo.n FROM i$iters, mo
-         |  UNION ALL SELECT 'x2', roundStable(b2, 6), mo.n FROM i$iters, mo)
-         |ORDER BY term""".stripMargin
-    },
-
-    "q359_hill_tail" ->
-      // identical rank cut at k+1 = 51; ties rank arbitrarily but
-      // contribute identical logs, so both engines agree
-      """WITH pos AS (SELECT event_type, CAST(value AS DOUBLE) AS v
-        |  FROM events WHERE value IS NOT NULL AND value > 0),
-        |rk AS (SELECT event_type, v, row_number() OVER (
-        |    PARTITION BY event_type ORDER BY v DESC) AS rk FROM pos),
-        |f AS (SELECT event_type, count(*) AS m,
-        |    sum(CASE WHEN rk <= 50 THEN ln(v) END) AS sl,
-        |    min(CASE WHEN rk = 51 THEN v END) AS thr
-        |  FROM rk WHERE rk <= 51 GROUP BY 1)
-        |SELECT event_type, CAST(50 AS BIGINT) AS k,
-        |  roundStable(CASE WHEN m = 51 THEN thr END, 6) AS threshold,
-        |  roundStable(CASE WHEN m = 51 THEN sl / 50.0 - ln(thr) END, 6)
-        |    AS gamma,
-        |  roundStable(CASE WHEN m = 51 AND sl / 50.0 - ln(thr) > 0
-        |    THEN 1.0 / (sl / 50.0 - ln(thr)) END, 6) AS alpha
-        |FROM f ORDER BY event_type""".stripMargin,
-
-    "q360_repeated_spans" ->
-      // same 1-based gram starts, global count, start flags widened to
-      // token coverage by the identical k−1-preceding window
-      """WITH b AS (SELECT doc_id, str_split(text, ' ') AS w,
-        |    len(str_split(text, ' ')) AS n FROM documents),
-        |g AS (SELECT doc_id, i AS pos, array_to_string(w[i:i+4], ' ') AS gr
-        |  FROM b, unnest(range(1, n - 3)) AS t(i)
-        |  WHERE n >= 5),
-        |c AS (SELECT gr, count(*) AS c FROM g GROUP BY 1),
-        |s AS (SELECT doc_id, pos FROM g JOIN c USING (gr) WHERE c.c >= 2),
-        |tok AS (SELECT doc_id, n, unnest(range(1, n + 1)) AS t FROM b),
-        |f AS (SELECT tok.doc_id, tok.n, tok.t,
-        |    CASE WHEN s.pos IS NULL THEN 0 ELSE 1 END AS flag
-        |  FROM tok LEFT JOIN s ON s.doc_id = tok.doc_id AND s.pos = tok.t),
-        |cv AS (SELECT doc_id, n, flag,
-        |    max(flag) OVER (PARTITION BY doc_id ORDER BY t
-        |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS cov
-        |  FROM f)
-        |SELECT doc_id, CAST(min(n) AS BIGINT) AS n_tokens,
-        |  CAST(sum(flag) AS BIGINT) AS n_repeated_starts,
-        |  CAST(sum(cov) AS BIGINT) AS covered_tokens,
-        |  roundStable(CAST(sum(cov) AS DOUBLE) / min(n), 6)
-        |    AS repeated_share
-        |FROM cv GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q361_top_spans" ->
-      """WITH b AS (SELECT doc_id, str_split(text, ' ') AS w,
-        |    len(str_split(text, ' ')) AS n FROM documents),
-        |g AS (SELECT doc_id, array_to_string(w[i:i+4], ' ') AS gr
-        |  FROM b, unnest(range(1, n - 3)) AS t(i)
-        |  WHERE n >= 5)
-        |SELECT CAST(rank AS BIGINT) AS rank, gram, n_occurrences, n_docs
-        |FROM (SELECT gr AS gram, count(*) AS n_occurrences,
-        |    count(DISTINCT doc_id) AS n_docs,
-        |    row_number() OVER (ORDER BY count(*) DESC, gr ASC) AS rank
-        |  FROM g GROUP BY gr HAVING count(*) >= 2)
-        |WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-    "q372_group_sequential" ->
-      // identical time-slice looks (epoch-micros arithmetic), identical
-      // cumulative Welch moments, identical pinned OBF literals
-      """WITH base AS (SELECT event_type, value,
-        |    CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS tr,
-        |    epoch_us(ts) AS tu,
-        |    min(epoch_us(ts)) OVER (PARTITION BY event_type) AS tmin,
-        |    max(epoch_us(ts)) OVER (PARTITION BY event_type) AS tmax
-        |  FROM events WHERE value IS NOT NULL),
-        |lk AS (SELECT event_type, value, tr,
-        |    least(CAST(floor(5.0 * CAST(tu - tmin AS DOUBLE)
-        |      / CAST(tmax - tmin + 1 AS DOUBLE)) AS BIGINT) + 1, 5)
-        |      AS look
-        |  FROM base),
-        |cells AS (SELECT event_type, look,
-        |    sum(CASE WHEN tr = 1 THEN 1.0 ELSE 0.0 END) AS na,
-        |    sum(CASE WHEN tr = 1 THEN value ELSE 0.0 END) AS sa,
-        |    sum(CASE WHEN tr = 1 THEN value * value ELSE 0.0 END) AS qa,
-        |    sum(CASE WHEN tr = 0 THEN 1.0 ELSE 0.0 END) AS nb,
-        |    sum(CASE WHEN tr = 0 THEN value ELSE 0.0 END) AS sb,
-        |    sum(CASE WHEN tr = 0 THEN value * value ELSE 0.0 END) AS qb
-        |  FROM lk GROUP BY 1, 2),
-        |c AS (SELECT event_type, look,
-        |    sum(na) OVER w AS cna, sum(sa) OVER w AS csa,
-        |    sum(qa) OVER w AS cqa, sum(nb) OVER w AS cnb,
-        |    sum(sb) OVER w AS csb, sum(qb) OVER w AS cqb
-        |  FROM cells WINDOW w AS (PARTITION BY event_type ORDER BY look
-        |    ROWS UNBOUNDED PRECEDING)),
-        |sc AS (SELECT event_type, look, cna, cnb,
-        |    CASE WHEN cna > 0 THEN csa / cna END AS ma,
-        |    CASE WHEN cnb > 0 THEN csb / cnb END AS mb,
-        |    CASE WHEN cna >= 2 THEN (cqa - cna * (csa / cna)
-        |      * (csa / cna)) / (cna - 1) END AS s2a,
-        |    CASE WHEN cnb >= 2 THEN (cqb - cnb * (csb / cnb)
-        |      * (csb / cnb)) / (cnb - 1) END AS s2b
-        |  FROM c),
-        |zz AS (SELECT event_type, look, cna, cnb, ma, mb,
-        |    CASE WHEN cna >= 2 AND cnb >= 2
-        |      AND s2a / cna + s2b / cnb > 0
-        |      THEN (ma - mb) / sqrt(s2a / cna + s2b / cnb) END AS z,
-        |    CAST(CASE WHEN look = 1 THEN 4.8769
-        |      WHEN look = 2 THEN 3.3569 WHEN look = 3 THEN 2.6803
-        |      WHEN look = 4 THEN 2.2898 ELSE 2.0310 END AS DOUBLE)
-        |      AS boundary
-        |  FROM sc)
-        |SELECT event_type, look, CAST(cna AS BIGINT) AS n_treat,
-        |  CAST(cnb AS BIGINT) AS n_control,
-        |  roundStable(ma - mb, 6) AS delta, roundStable(z, 6) AS z,
-        |  boundary,
-        |  coalesce(abs(roundStable(z, 6)) > boundary, false) AS crossed
-        |FROM zz ORDER BY event_type, look""".stripMargin,
-
-    "q392_alpha_spending" ->
-      // identical Welch-look machinery as q372, then the pinned
-      // Abramowitz-Stegun 26.2.17 upper-tail replayed through an
-      // unpivot/pivot (three arguments per row: OBF spend at t_k, at
-      // t_{k-1}, and |z|), spends and the Bonferroni-increment
-      // crossings recomputed from the same literals
-      """WITH base AS (SELECT event_type, value,
-        |    CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS tr,
-        |    epoch_us(ts) AS tu,
-        |    min(epoch_us(ts)) OVER (PARTITION BY event_type) AS tmin,
-        |    max(epoch_us(ts)) OVER (PARTITION BY event_type) AS tmax
-        |  FROM events WHERE value IS NOT NULL),
-        |lk AS (SELECT event_type, value, tr,
-        |    least(CAST(floor(5.0 * CAST(tu - tmin AS DOUBLE)
-        |      / CAST(tmax - tmin + 1 AS DOUBLE)) AS BIGINT) + 1, 5)
-        |      AS look
-        |  FROM base),
-        |cells AS (SELECT event_type, look,
-        |    sum(CASE WHEN tr = 1 THEN 1.0 ELSE 0.0 END) AS na,
-        |    sum(CASE WHEN tr = 1 THEN value ELSE 0.0 END) AS sa,
-        |    sum(CASE WHEN tr = 1 THEN value * value ELSE 0.0 END) AS qa,
-        |    sum(CASE WHEN tr = 0 THEN 1.0 ELSE 0.0 END) AS nb,
-        |    sum(CASE WHEN tr = 0 THEN value ELSE 0.0 END) AS sb,
-        |    sum(CASE WHEN tr = 0 THEN value * value ELSE 0.0 END) AS qb
-        |  FROM lk GROUP BY 1, 2),
-        |c AS (SELECT event_type, look,
-        |    sum(na) OVER w AS cna, sum(sa) OVER w AS csa,
-        |    sum(qa) OVER w AS cqa, sum(nb) OVER w AS cnb,
-        |    sum(sb) OVER w AS csb, sum(qb) OVER w AS cqb
-        |  FROM cells WINDOW w AS (PARTITION BY event_type ORDER BY look
-        |    ROWS UNBOUNDED PRECEDING)),
-        |sc AS (SELECT event_type, look, cna, cnb,
-        |    CASE WHEN cna > 0 THEN csa / cna END AS ma,
-        |    CASE WHEN cnb > 0 THEN csb / cnb END AS mb,
-        |    CASE WHEN cna >= 2 THEN (cqa - cna * (csa / cna)
-        |      * (csa / cna)) / (cna - 1) END AS s2a,
-        |    CASE WHEN cnb >= 2 THEN (cqb - cnb * (csb / cnb)
-        |      * (csb / cnb)) / (cnb - 1) END AS s2b
-        |  FROM c),
-        |zz AS (SELECT event_type, look, cna, cnb, ma, mb,
-        |    CASE WHEN cna >= 2 AND cnb >= 2
-        |      AND s2a / cna + s2b / cnb > 0
-        |      THEN (ma - mb) / sqrt(s2a / cna + s2b / cnb) END AS z
-        |  FROM sc),
-        |un AS (SELECT event_type, look, 'k' AS which,
-        |         1.959964 / sqrt(look / 5.0) AS x FROM zz
-        |       UNION ALL
-        |       SELECT event_type, look, 'p',
-        |         CASE WHEN look > 1
-        |           THEN 1.959964 / sqrt((look - 1) / 5.0) END FROM zz
-        |       UNION ALL
-        |       SELECT event_type, look, 'z', abs(z) FROM zz),
-        |ph AS (SELECT event_type, look, which,
-        |    0.3989422804014327 * exp(-0.5 * x * x) *
-        |    (t * (0.319381530 + t * (-0.356563782 + t * (1.781477937
-        |      + t * (-1.821255978 + t * 1.330274429))))) AS pu
-        |  FROM (SELECT event_type, look, which, x,
-        |          1.0 / (1.0 + 0.2316419 * x) AS t FROM un)),
-        |pv AS (SELECT event_type, look,
-        |    max(CASE WHEN which = 'k' THEN pu END) AS pu_k,
-        |    max(CASE WHEN which = 'p' THEN pu END) AS pu_p,
-        |    max(CASE WHEN which = 'z' THEN pu END) AS pu_z
-        |  FROM ph GROUP BY 1, 2)
-        |SELECT zz.event_type, zz.look, CAST(cna AS BIGINT) AS n_treat,
-        |  CAST(cnb AS BIGINT) AS n_control,
-        |  roundStable(ma - mb, 6) AS delta, roundStable(z, 6) AS z,
-        |  roundStable(2.0 * pu_z, 6) AS p_two,
-        |  roundStable(2.0 * pu_k, 6) AS obf_spent,
-        |  roundStable(2.0 * pu_k - CASE WHEN zz.look = 1 THEN 0.0
-        |    ELSE 2.0 * pu_p END, 6) AS obf_inc,
-        |  roundStable(0.05 * ln(1.0 + 1.718281828459045
-        |    * (zz.look / 5.0)), 6) AS pocock_spent,
-        |  roundStable(0.05 * ln(1.0 + 1.718281828459045 * (zz.look / 5.0))
-        |    - CASE WHEN zz.look = 1 THEN 0.0
-        |      ELSE 0.05 * ln(1.0 + 1.718281828459045
-        |        * ((zz.look - 1) / 5.0)) END, 6) AS pocock_inc,
-        |  coalesce(roundStable(2.0 * pu_z, 6) <
-        |    roundStable(2.0 * pu_k - CASE WHEN zz.look = 1 THEN 0.0
-        |      ELSE 2.0 * pu_p END, 6), false) AS crossed_obf,
-        |  coalesce(roundStable(2.0 * pu_z, 6) <
-        |    roundStable(0.05 * ln(1.0 + 1.718281828459045 * (zz.look / 5.0))
-        |      - CASE WHEN zz.look = 1 THEN 0.0
-        |        ELSE 0.05 * ln(1.0 + 1.718281828459045
-        |          * ((zz.look - 1) / 5.0)) END, 6), false) AS crossed_pocock
-        |FROM zz JOIN pv ON zz.event_type = pv.event_type
-        |  AND zz.look = pv.look
-        |ORDER BY zz.event_type, zz.look""".stripMargin,
-
-    "q370_theta_overlap" ->
-      // exact pair counts from the same distinct-cell self-join; the
-      // sketch verdicts are expected-TRUE literals (the q138 pattern —
-      // if an estimate drifts past 5% the Spark side flips its verdict
-      // and the hash mismatch surfaces it)
-      """WITH cells AS (SELECT DISTINCT
-        |    CAST(floor(value / 100) AS BIGINT) AS seg,
-        |    CAST(user_id AS VARCHAR) AS aid
-        |  FROM events WHERE value IS NOT NULL),
-        |sizes AS (SELECT seg, count(*) AS n FROM cells GROUP BY 1),
-        |inter AS (SELECT a.seg AS sa, b.seg AS sb, count(*) AS ni
-        |  FROM cells a JOIN cells b ON a.aid = b.aid AND a.seg < b.seg
-        |  GROUP BY 1, 2),
-        |grid AS (SELECT sa.seg AS sa, sb.seg AS sb, sa.n AS na,
-        |    sb.n AS nb, coalesce(i.ni, 0) AS ni
-        |  FROM sizes sa JOIN sizes sb ON sa.seg < sb.seg
-        |  LEFT JOIN inter i ON i.sa = sa.seg AND i.sb = sb.seg)
-        |SELECT sa AS seg_a, sb AS seg_b, CAST(na AS BIGINT) AS n_a,
-        |  CAST(nb AS BIGINT) AS n_b, CAST(ni AS BIGINT) AS n_inter,
-        |  CAST(na + nb - ni AS BIGINT) AS n_union,
-        |  roundStable(CAST(ni AS DOUBLE) / (na + nb - ni), 6) AS jaccard,
-        |  CAST(1 AS BIGINT) AS inter_ok, CAST(1 AS BIGINT) AS union_ok,
-        |  CAST(1 AS BIGINT) AS diff_ok
-        |FROM grid ORDER BY seg_a, seg_b""".stripMargin,
-
-    "q368_url_canon" ->
-      // identical plant, identical regex subset (the C33 discipline),
-      // identical filter→sort→join param handling
-      """WITH u AS (SELECT doc_id,
-        |    (CASE WHEN doc_id % 3 = 0 THEN 'HTTP' ELSE 'http' END
-        |     || '://' ||
-        |     CASE WHEN doc_id % 4 = 0 THEN 'WWW.' || upper(source)
-        |       ELSE source END || '.example.com' ||
-        |     CASE WHEN doc_id % 5 = 0 THEN ':80' ELSE '' END ||
-        |     '/p/' || CAST(doc_id % 7 AS VARCHAR) ||
-        |     '?utm_source=feed&b=' || CAST(doc_id % 3 AS VARCHAR)
-        |     || '&a=1' ||
-        |     CASE WHEN doc_id % 2 = 0 THEN '#frag' ELSE '' END) AS url
-        |  FROM documents),
-        |c AS (SELECT doc_id, url,
-        |    lower(regexp_extract(url,
-        |      '^([A-Za-z]+)://([^/?#]+)([^?#]*)(\?[^#]*)?(#.*)?$', 1))
-        |      AS scheme,
-        |    lower(regexp_extract(url,
-        |      '^([A-Za-z]+)://([^/?#]+)([^?#]*)(\?[^#]*)?(#.*)?$', 2))
-        |      AS rawhost,
-        |    regexp_extract(url,
-        |      '^([A-Za-z]+)://([^/?#]+)([^?#]*)(\?[^#]*)?(#.*)?$', 3)
-        |      AS path,
-        |    regexp_extract(url,
-        |      '^([A-Za-z]+)://([^/?#]+)([^?#]*)(\?[^#]*)?(#.*)?$', 4)
-        |      AS query
-        |  FROM u),
-        |h AS (SELECT doc_id, url, scheme,
-        |    CASE WHEN scheme = 'http' THEN regexp_replace(
-        |        regexp_replace(rawhost, '^www\.', ''), ':80$', '')
-        |      WHEN scheme = 'https' THEN regexp_replace(
-        |        regexp_replace(rawhost, '^www\.', ''), ':443$', '')
-        |      ELSE regexp_replace(rawhost, '^www\.', '')
-        |      END AS host, path, query FROM c),
-        |p AS (SELECT doc_id, url, scheme, host, path,
-        |    array_to_string(list_sort(list_filter(
-        |      str_split(regexp_replace(query, '^\?', ''), '&'),
-        |      x -> NOT (regexp_matches(x,
-        |        '^(utm_[A-Za-z0-9_]+|fbclid|gclid)=') OR x = ''))), '&') AS q
-        |  FROM h)
-        |SELECT doc_id, url, host,
-        |  scheme || '://' || host ||
-        |    CASE WHEN path = '' THEN '/' ELSE path END ||
-        |    CASE WHEN q = '' THEN '' ELSE '?' || q END AS canonical
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    "q369_host_census" ->
-      """WITH u AS (SELECT doc_id,
-        |    (CASE WHEN doc_id % 3 = 0 THEN 'HTTP' ELSE 'http' END
-        |     || '://' ||
-        |     CASE WHEN doc_id % 4 = 0 THEN 'WWW.' || upper(source)
-        |       ELSE source END || '.example.com' ||
-        |     CASE WHEN doc_id % 5 = 0 THEN ':80' ELSE '' END ||
-        |     '/p/' || CAST(doc_id % 7 AS VARCHAR) ||
-        |     '?utm_source=feed&b=' || CAST(doc_id % 3 AS VARCHAR)
-        |     || '&a=1' ||
-        |     CASE WHEN doc_id % 2 = 0 THEN '#frag' ELSE '' END) AS url
-        |  FROM documents),
-        |c AS (SELECT doc_id, url,
-        |    lower(regexp_extract(url,
-        |      '^([A-Za-z]+)://([^/?#]+)([^?#]*)(\?[^#]*)?(#.*)?$', 1))
-        |      AS scheme,
-        |    lower(regexp_extract(url,
-        |      '^([A-Za-z]+)://([^/?#]+)([^?#]*)(\?[^#]*)?(#.*)?$', 2))
-        |      AS rawhost,
-        |    regexp_extract(url,
-        |      '^([A-Za-z]+)://([^/?#]+)([^?#]*)(\?[^#]*)?(#.*)?$', 3)
-        |      AS path,
-        |    regexp_extract(url,
-        |      '^([A-Za-z]+)://([^/?#]+)([^?#]*)(\?[^#]*)?(#.*)?$', 4)
-        |      AS query
-        |  FROM u),
-        |h AS (SELECT doc_id, scheme,
-        |    CASE WHEN scheme = 'http' THEN regexp_replace(
-        |        regexp_replace(rawhost, '^www\.', ''), ':80$', '')
-        |      WHEN scheme = 'https' THEN regexp_replace(
-        |        regexp_replace(rawhost, '^www\.', ''), ':443$', '')
-        |      ELSE regexp_replace(rawhost, '^www\.', '')
-        |      END AS host, path, query FROM c),
-        |p AS (SELECT doc_id, scheme, host, path,
-        |    array_to_string(list_sort(list_filter(
-        |      str_split(regexp_replace(query, '^\?', ''), '&'),
-        |      x -> NOT (regexp_matches(x,
-        |        '^(utm_[A-Za-z0-9_]+|fbclid|gclid)=') OR x = ''))), '&') AS q
-        |  FROM h),
-        |k AS (SELECT host,
-        |    scheme || '://' || host ||
-        |      CASE WHEN path = '' THEN '/' ELSE path END ||
-        |      CASE WHEN q = '' THEN '' ELSE '?' || q END AS canonical
-        |  FROM p)
-        |SELECT host, count(*) AS n_urls,
-        |  count(DISTINCT canonical) AS n_pages,
-        |  roundStable(1.0 - CAST(count(DISTINCT canonical) AS DOUBLE)
-        |    / count(*), 6) AS dup_rate
-        |FROM k GROUP BY host ORDER BY host""".stripMargin,
-
-    "q367_platt" -> {
-      // the q358 unrolled-Newton oracle at its 2×2 case
-      val iters = 4
-      val steps = (1 to iters).map { k =>
-        s"""a$k AS MATERIALIZED (SELECT
-           |    sum(p * (1.0 - p) * s * s) AS h11,
-           |    sum(p * (1.0 - p) * s) AS h12,
-           |    sum(p * (1.0 - p)) AS h22,
-           |    sum((y - p) * s) AS g0, sum(y - p) AS g1
-           |  FROM (SELECT s, y,
-           |      1.0 / (1.0 + exp(-(a * s + b))) AS p
-           |    FROM d, i${k - 1}) t),
-           |i$k AS (SELECT
-           |    a + (g0 * h22 - h12 * g1) / (h11 * h22 - h12 * h12) AS a,
-           |    b + (h11 * g1 - g0 * h12) / (h11 * h22 - h12 * h12) AS b
-           |  FROM i${k - 1}, a$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH d AS MATERIALIZED (SELECT
-         |    least(CAST(value AS DOUBLE) / 500, 1.0) AS s,
-         |    CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END AS y
-         |  FROM events WHERE value IS NOT NULL),
-         |nn AS (SELECT count(*) AS n FROM d),
-         |i0 AS (SELECT 0.0 AS a, 0.0 AS b),
-         |$steps
-         |SELECT param, value, n_obs FROM (
-         |  SELECT 'intercept' AS param, roundStable(b, 6) AS value,
-         |    nn.n AS n_obs FROM i$iters, nn
-         |  UNION ALL SELECT 'slope', roundStable(a, 6), nn.n
-         |  FROM i$iters, nn)
-         |ORDER BY param""".stripMargin
-    },
-
-    "q366_quantile_norm" ->
-      // identical min-rank percent, identical explicit interpolation at
-      // t = p·(N−1) — no percentile_cont on either side
-      """WITH vals AS (SELECT event_type AS s, CAST(value AS DOUBLE) AS v
-        |  FROM events WHERE value IS NOT NULL),
-        |ranked AS (SELECT s, v,
-        |    rank() OVER (PARTITION BY s ORDER BY v) AS r,
-        |    count(*) OVER (PARTITION BY s) AS n FROM vals),
-        |pooled AS (SELECT v AS pv,
-        |    row_number() OVER (ORDER BY v) - 1 AS idx FROM vals),
-        |tot AS (SELECT count(*) AS nn FROM vals),
-        |tr AS (SELECT s, v, CASE WHEN n > 1
-        |    THEN CAST(r - 1 AS DOUBLE) / CAST(n - 1 AS DOUBLE)
-        |    ELSE 0.0 END AS p FROM ranked),
-        |tt AS (SELECT s, v, p, p * CAST(nn - 1 AS DOUBLE) AS t,
-        |    CAST(floor(p * CAST(nn - 1 AS DOUBLE)) AS BIGINT) AS ft
-        |  FROM tr, tot)
-        |SELECT s AS event_type, roundStable(v, 6) AS value,
-        |  roundStable(p, 6) AS pct,
-        |  roundStable(p0.pv + (t - floor(t))
-        |    * (coalesce(p1.pv, p0.pv) - p0.pv), 6) AS normalized
-        |FROM tt JOIN pooled p0 ON p0.idx = tt.ft
-        |  LEFT JOIN pooled p1 ON p1.idx = tt.ft + 1
-        |ORDER BY event_type, value, pct""".stripMargin,
-
-    "q364_join_skew" ->
-      """WITH l AS (SELECT user_id, count(*) AS n_left FROM events
-        |  GROUP BY 1),
-        |r AS (SELECT user_id, count(*) AS n_right FROM events GROUP BY 1),
-        |k AS (SELECT l.user_id, n_left, n_right,
-        |    n_left * n_right AS out_rows
-        |  FROM l JOIN r USING (user_id)),
-        |t AS (SELECT sum(out_rows) AS tt, count(*) AS kk FROM k)
-        |SELECT user_id,
-        |  CAST(row_number() OVER (ORDER BY out_rows DESC, user_id)
-        |    AS BIGINT) AS rank,
-        |  n_left, n_right, CAST(out_rows AS BIGINT) AS out_rows,
-        |  roundStable(CAST(out_rows AS DOUBLE) / tt, 6) AS out_share,
-        |  CAST(tt AS BIGINT) AS total_out_rows, kk AS n_matching_keys
-        |FROM k, t ORDER BY out_rows DESC, user_id LIMIT 20""".stripMargin,
-
-    "q362_k_anonymity" ->
-      """WITH c AS (SELECT c_nationkey, c_mktsegment, count(*) AS n
-        |  FROM customer GROUP BY 1, 2)
-        |SELECT CAST(sum(n) AS BIGINT) AS n_rows, count(*) AS n_classes,
-        |  CAST(min(n) AS BIGINT) AS k_satisfied,
-        |  CAST(10 AS BIGINT) AS k_target,
-        |  CAST(sum(CASE WHEN n < 10 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_classes_at_risk,
-        |  CAST(sum(CASE WHEN n < 10 THEN n ELSE 0 END) AS BIGINT)
-        |    AS n_rows_at_risk,
-        |  roundStable(CAST(sum(CASE WHEN n < 10 THEN n ELSE 0 END)
-        |    AS DOUBLE) / sum(n), 6) AS risk_share
-        |FROM c""".stripMargin,
-
-    "q363_l_diversity" ->
-      """WITH cells AS (SELECT c_nationkey, c_mktsegment,
-        |    CAST(floor(c_acctbal / 2000) AS BIGINT) AS s, count(*) AS n
-        |  FROM customer GROUP BY 1, 2, 3),
-        |cl AS (SELECT c_nationkey, c_mktsegment, sum(n) AS rows_,
-        |    count(*) AS ldist FROM cells GROUP BY 1, 2)
-        |SELECT CAST(sum(rows_) AS BIGINT) AS n_rows, count(*) AS n_classes,
-        |  CAST(min(ldist) AS BIGINT) AS l_satisfied,
-        |  CAST(3 AS BIGINT) AS l_target,
-        |  CAST(sum(CASE WHEN ldist < 3 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_classes_at_risk,
-        |  CAST(sum(CASE WHEN ldist < 3 THEN rows_ ELSE 0 END) AS BIGINT)
-        |    AS n_rows_at_risk,
-        |  roundStable(CAST(sum(CASE WHEN ldist < 3 THEN rows_ ELSE 0 END)
-        |    AS DOUBLE) / sum(rows_), 6) AS risk_share
-        |FROM cl""".stripMargin,
-
-    "q269_blocking_eval" ->
-      // block sizes give |candidates| without enumerating any pair;
-      // the q34 exact-Jaccard CTE is the ground truth
-      """WITH k AS (SELECT doc_id AS id,
-        |    substr(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-        |      1, 40) AS kk
-        |  FROM documents),
-        |bl AS (SELECT kk, count(*) AS nb FROM k GROUP BY 1),
-        |bs AS (SELECT count(*) AS n_blocks, max(nb) AS max_block,
-        |    sum(CAST(CAST(nb AS DOUBLE) * (CAST(nb AS DOUBLE) - 1.0)
-        |      / 2.0 AS BIGINT)) AS cand_pairs,
-        |    sum(nb) AS n_docs
-        |  FROM bl),
-        |s AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |      FOR i IN range(1, len(w) - 1)]) AS shingles
-        |  FROM s),
-        |ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS sh
-        |  FROM sh),
-        |tp AS (SELECT doc_a, doc_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |      CAST(count(*) AS DOUBLE)
-        |        / CAST(max(a.n) + max(b.n) - count(*) AS DOUBLE) AS j
-        |    FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |    GROUP BY 1, 2) t WHERE j >= 0.5),
-        |cv AS (SELECT count(*) AS true_pairs,
-        |    sum(CASE WHEN ka.kk = kb.kk THEN 1 ELSE 0 END)
-        |      AS covered_pairs
-        |  FROM tp JOIN k ka ON ka.id = tp.doc_a
-        |    JOIN k kb ON kb.id = tp.doc_b)
-        |SELECT CAST(bs.n_docs AS BIGINT) AS n_docs, bs.n_blocks,
-        |  bs.max_block, CAST(bs.cand_pairs AS BIGINT) AS cand_pairs,
-        |  cv.true_pairs,
-        |  CAST(cv.covered_pairs AS BIGINT) AS covered_pairs,
-        |  roundStable(CASE WHEN CAST(bs.n_docs AS DOUBLE)
-        |      * (CAST(bs.n_docs AS DOUBLE) - 1.0) / 2.0 > 0
-        |    THEN 1.0 - CAST(bs.cand_pairs AS DOUBLE)
-        |      / (CAST(bs.n_docs AS DOUBLE)
-        |        * (CAST(bs.n_docs AS DOUBLE) - 1.0) / 2.0) END, 6)
-        |    AS reduction_ratio,
-        |  roundStable(CASE WHEN cv.true_pairs > 0
-        |    THEN CAST(cv.covered_pairs AS DOUBLE)
-        |      / CAST(cv.true_pairs AS DOUBLE) END, 6)
-        |    AS pair_completeness,
-        |  roundStable(CASE WHEN bs.cand_pairs > 0
-        |    THEN CAST(cv.covered_pairs AS DOUBLE)
-        |      / CAST(bs.cand_pairs AS DOUBLE) END, 6) AS pair_quality
-        |FROM bs, cv""".stripMargin,
-
-    "q264_forecast_band" ->
-      // exact-hour self-join, per-key exact quantile of |residual|,
-      // flags from the identical rounded comparison
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    avg(value) AS v
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |j AS (SELECT c.event_type, c.bucket, c.v, p.v AS f,
-        |    c.v - p.v AS r
-        |  FROM h c JOIN h p ON p.event_type = c.event_type
-        |    AND p.bucket + INTERVAL 24 HOURS = c.bucket),
-        |q AS (SELECT event_type, quantile_cont(abs(r), 0.95) AS qr
-        |  FROM j GROUP BY 1),
-        |w AS (SELECT j.event_type, j.bucket, j.v, j.f, j.r, q.qr
-        |  FROM j JOIN q ON q.event_type = j.event_type)
-        |SELECT event_type, bucket, roundStable(v, 6) AS actual,
-        |  roundStable(f, 6) AS forecast, roundStable(r, 6) AS resid,
-        |  roundStable(f - qr, 6) AS band_lo,
-        |  roundStable(f + qr, 6) AS band_hi,
-        |  CAST(CASE WHEN abs(roundStable(r, 6)) > roundStable(qr, 6)
-        |    THEN 1 ELSE 0 END AS BIGINT) AS outside_band
-        |FROM w ORDER BY event_type, bucket""".stripMargin,
-
-    "q265_adf" ->
-      // same hourly series, same centered-moment regression
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hb,
-        |    avg(value) AS hv
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |l AS (SELECT event_type, CAST(hv AS DOUBLE) AS y,
-        |    CAST(lag(hv) OVER (PARTITION BY event_type ORDER BY hb)
-        |      AS DOUBLE) AS yl
-        |  FROM h),
-        |f AS (SELECT event_type, yl, y - yl AS dy
-        |  FROM l WHERE yl IS NOT NULL),
-        |g AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    sum(yl * yl) AS a, sum(yl) AS b, sum(dy * dy) AS c,
-        |    sum(dy) AS d, sum(yl * dy) AS e
-        |  FROM f GROUP BY 1),
-        |m AS (SELECT event_type, n,
-        |    a - b * b / n AS sxx, c - d * d / n AS syy,
-        |    e - b * d / n AS sxy
-        |  FROM g),
-        |x AS (SELECT event_type, n, sxx,
-        |    sxy / sxx AS beta,
-        |    syy - (sxy / sxx) * sxy AS rss
-        |  FROM m)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |  roundStable(CASE WHEN sxx > 0 THEN beta END, 6) AS beta,
-        |  roundStable(CASE WHEN n > 3 AND sxx > 0 AND rss > 0
-        |    THEN beta / sqrt((rss / (n - 2.0)) / sxx) END, 6) AS t_stat,
-        |  CAST(CASE WHEN n > 3 AND sxx > 0 AND rss > 0
-        |    THEN CASE WHEN beta / sqrt((rss / (n - 2.0)) / sxx) > -2.86
-        |      THEN 1 ELSE 0 END END AS BIGINT) AS is_unit_root
-        |FROM x ORDER BY event_type""".stripMargin,
-
-    "q266_granger" ->
-      // same daily pair, restricted and unrestricted RSS from the one
-      // centered-moment pass, 2x2 normal equations closed-form
-      """WITH d AS (SELECT CAST(ts AS DATE) AS dt,
-        |    avg(CASE WHEN event_type = 'purchase' THEN value END) AS y,
-        |    CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |      AS DOUBLE) AS x
-        |  FROM events GROUP BY 1),
-        |l AS (SELECT CAST(y AS DOUBLE) AS y,
-        |    CAST(lag(y) OVER (ORDER BY dt) AS DOUBLE) AS y1,
-        |    CAST(lag(x) OVER (ORDER BY dt) AS DOUBLE) AS x1
-        |  FROM d),
-        |f AS (SELECT y, y1, x1 FROM l
-        |  WHERE y IS NOT NULL AND y1 IS NOT NULL AND x1 IS NOT NULL),
-        |g AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    sum(y * y) - sum(y) * sum(y) / CAST(count(*) AS DOUBLE)
-        |      AS syy,
-        |    sum(y1 * y1) - sum(y1) * sum(y1) / CAST(count(*) AS DOUBLE)
-        |      AS s11,
-        |    sum(x1 * x1) - sum(x1) * sum(x1) / CAST(count(*) AS DOUBLE)
-        |      AS s22,
-        |    sum(y1 * x1) - sum(y1) * sum(x1) / CAST(count(*) AS DOUBLE)
-        |      AS s12,
-        |    sum(y * y1) - sum(y) * sum(y1) / CAST(count(*) AS DOUBLE)
-        |      AS sy1,
-        |    sum(y * x1) - sum(y) * sum(x1) / CAST(count(*) AS DOUBLE)
-        |      AS sy2
-        |  FROM f),
-        |m AS (SELECT n, syy, s11, sy1,
-        |    s11 * s22 - s12 * s12 AS det,
-        |    (sy1 * s22 - sy2 * s12) / (s11 * s22 - s12 * s12) AS b,
-        |    (sy2 * s11 - sy1 * s12) / (s11 * s22 - s12 * s12) AS c,
-        |    sy2
-        |  FROM g),
-        |x AS (SELECT n, syy, s11, sy1, det, b, c,
-        |    syy - b * sy1 - c * sy2 AS rssu,
-        |    syy - sy1 * sy1 / s11 AS rssr
-        |  FROM m)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  roundStable(CASE WHEN n > 3 AND det > 0 AND rssu > 0
-        |    AND s11 > 0 AND syy > 0 THEN b END, 6) AS beta_ylag,
-        |  roundStable(CASE WHEN n > 3 AND det > 0 AND rssu > 0
-        |    AND s11 > 0 AND syy > 0 THEN c END, 6) AS gamma_xlag,
-        |  roundStable(CASE WHEN s11 > 0 AND syy > 0
-        |    THEN 1.0 - (syy - sy1 * sy1 / s11) / syy END, 6)
-        |    AS r2_restricted,
-        |  roundStable(CASE WHEN n > 3 AND det > 0 AND rssu > 0
-        |    AND s11 > 0 AND syy > 0 THEN 1.0 - rssu / syy END, 6)
-        |    AS r2_unrestricted,
-        |  roundStable(CASE WHEN n > 3 AND det > 0 AND rssu > 0
-        |    AND s11 > 0 AND syy > 0
-        |    THEN (rssr - rssu) / (rssu / (n - 3.0)) END, 6) AS f_stat
-        |FROM x""".stripMargin,
-
-    "q261_ktruss" -> {
-      // the q137 unrolling discipline, on EDGES: each round recomputes
-      // per-edge triangle support (common-neighbor count over the
-      // adjacency) and keeps support >= 2; the inner join drops
-      // zero-support edges exactly as the Spark coalesce-filter does.
-      // AS MATERIALIZED for the same 5^n-inlining reason as q137
-      val peels = (0 until 3).map { i =>
-        s"""n$i AS MATERIALIZED (SELECT a AS v, b AS u FROM e$i
-           |      UNION ALL SELECT b, a FROM e$i),
-           |s$i AS MATERIALIZED (SELECT x.v AS a, y.v AS b,
-           |        count(*) AS sup
-           |      FROM n$i x JOIN n$i y ON x.u = y.u AND x.v < y.v
-           |      JOIN e$i e ON e.a = x.v AND e.b = y.v
-           |      GROUP BY 1, 2),
-           |e${i + 1} AS MATERIALIZED (SELECT e.a, e.b FROM e$i e
-           |      JOIN s$i s ON s.a = e.a AND s.b = e.b
-           |      WHERE s.sup >= 2)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH sp AS MATERIALIZED (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk
-         |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         |  WHERE l_quantity > 45),
-         |e0 AS MATERIALIZED (SELECT DISTINCT r1.sk AS a, r2.sk AS b
-         |       FROM sp r1 JOIN sp r2 ON r1.pk = r2.pk AND r1.sk < r2.sk),
-         |$peels,
-         |nf AS MATERIALIZED (SELECT a AS v, b AS u FROM e3
-         |      UNION ALL SELECT b, a FROM e3),
-         |sf AS MATERIALIZED (SELECT x.v AS a, y.v AS b, count(*) AS sup
-         |      FROM nf x JOIN nf y ON x.u = y.u AND x.v < y.v
-         |      JOIN e3 e ON e.a = x.v AND e.b = y.v
-         |      GROUP BY 1, 2)
-         |SELECT e.a, e.b, CAST(coalesce(s.sup, 0) AS BIGINT) AS support
-         |FROM e3 e LEFT JOIN sf s ON s.a = e.a AND s.b = e.b
-         |ORDER BY e.a, e.b""".stripMargin
-    },
-
-    "q262_markov_entropy" ->
-      // same lead pairs, same -p ln p fold over the cell table
-      """WITH p AS (SELECT event_type AS s,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS nx
-        |  FROM events),
-        |c AS (SELECT s AS state, nx AS next, count(*) AS n
-        |  FROM p WHERE nx IS NOT NULL GROUP BY 1, 2),
-        |w AS (SELECT state, next, n,
-        |    sum(n) OVER (PARTITION BY state) AS tot,
-        |    row_number() OVER (PARTITION BY state
-        |      ORDER BY n DESC, next) AS rk
-        |  FROM c)
-        |SELECT state, CAST(max(tot) AS BIGINT) AS n_transitions,
-        |  count(*) AS n_next_states,
-        |  roundStable(sum(-(CAST(n AS DOUBLE) / tot)
-        |    * ln(CAST(n AS DOUBLE) / tot)), 6) AS h_cond,
-        |  max(CASE WHEN rk = 1 THEN next END) AS top_next,
-        |  roundStable(max(CASE WHEN rk = 1
-        |    THEN CAST(n AS DOUBLE) / tot END), 6) AS top_share
-        |FROM w GROUP BY state ORDER BY state""".stripMargin,
-
-    "q263_gumbel_return" ->
-      // daily maxima → the l1/l2 staging of q260 (rounded at 6dp) →
-      // the fit and return levels from PINNED transcendental constants
-      """WITH dm AS (SELECT event_type, CAST(ts AS DATE) AS d,
-        |    max(value) AS mx
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |r AS (SELECT event_type, CAST(mx AS DOUBLE) AS x,
-        |    CAST(row_number() OVER (PARTITION BY event_type
-        |      ORDER BY mx, d) AS DOUBLE) AS i
-        |  FROM dm),
-        |g AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    avg(x) AS b0, sum((i - 1.0) * x) AS s1
-        |  FROM r GROUP BY 1),
-        |l AS (SELECT event_type, n,
-        |    roundStable(b0, 6) AS l1,
-        |    roundStable(CASE WHEN n > 1
-        |      THEN 2.0 * (s1 / (n * (n - 1.0))) - b0 END, 6) AS l2
-        |  FROM g)
-        |SELECT event_type, CAST(n AS BIGINT) AS n, l1, l2,
-        |  roundStable(CASE WHEN l2 IS NOT NULL AND l2 > 0
-        |    THEN l2 / 0.693147 END, 6) AS beta,
-        |  roundStable(CASE WHEN l2 IS NOT NULL AND l2 > 0
-        |    THEN l1 - 0.577216 * (l2 / 0.693147) END, 6) AS mu,
-        |  roundStable(CASE WHEN l2 IS NOT NULL AND l2 > 0
-        |    THEN (l1 - 0.577216 * (l2 / 0.693147))
-        |      + (l2 / 0.693147) * 2.250367 END, 6) AS return_10,
-        |  roundStable(CASE WHEN l2 IS NOT NULL AND l2 > 0
-        |    THEN (l1 - 0.577216 * (l2 / 0.693147))
-        |      + (l2 / 0.693147) * 4.600149 END, 6) AS return_100
-        |FROM l ORDER BY event_type""".stripMargin,
-
-    "q258_tukey" ->
-      // same cell moments, MSW via the same per-key window, same
-      // se association sqrt(msw/2 * (1/na + 1/nb))
-      """WITH c AS (SELECT event_type, isodow(ts) - 1 AS lvl,
-        |    CAST(count(value) AS DOUBLE) AS n, avg(value) AS m,
-        |    sum(value * value) AS ss, sum(value) AS s
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |w AS (SELECT event_type, lvl, n, m,
-        |    sum(n) OVER wa AS bn,
-        |    CAST(count(*) OVER wa AS DOUBLE) AS k,
-        |    sum(ss - s * s / n) OVER wa AS ssw
-        |  FROM c WINDOW wa AS (PARTITION BY event_type)),
-        |x AS (SELECT event_type, lvl, n, m,
-        |    CASE WHEN bn > k THEN ssw / (bn - k) END AS msw FROM w)
-        |SELECT a.event_type, a.lvl AS lvl_a, b.lvl AS lvl_b,
-        |  CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
-        |  roundStable(a.m - b.m, 6) AS mean_diff,
-        |  roundStable(CASE WHEN a.msw > 0 AND a.n > 0 AND b.n > 0
-        |    THEN abs(a.m - b.m)
-        |      / sqrt(a.msw / 2.0 * (1.0 / a.n + 1.0 / b.n)) END, 6)
-        |    AS q_stat
-        |FROM x a JOIN x b
-        |  ON a.event_type = b.event_type AND a.lvl < b.lvl
-        |ORDER BY a.event_type, lvl_a, lvl_b""".stripMargin,
-
-    "q259_funnel_window" ->
-      // same two stacked running-max windows over the same (us, id)
-      // sort; window arithmetic in integer microseconds
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us,
-        |    event_id FROM events),
-        |s AS (SELECT user_id, event_type, us, event_id,
-        |    max(CASE WHEN event_type = 'view' THEN us END) OVER w AS v1
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |t AS (SELECT user_id, event_type, us, v1,
-        |    max(CASE WHEN event_type = 'click' AND v1 IS NOT NULL
-        |      AND us - v1 <= 259200000000 THEN v1 END) OVER w AS v2s
-        |  FROM s
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |d AS (SELECT user_id,
-        |    max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS d1,
-        |    max(CASE WHEN event_type = 'click' AND v1 IS NOT NULL
-        |      AND us - v1 <= 259200000000 THEN 1 ELSE 0 END) AS d2,
-        |    max(CASE WHEN event_type = 'purchase' AND v2s IS NOT NULL
-        |      AND us - v2s <= 259200000000 THEN 1 ELSE 0 END) AS d3
-        |  FROM t GROUP BY 1)
-        |SELECT CAST(d1 + d2 + d3 AS BIGINT) AS depth,
-        |  count(*) AS n_entities
-        |FROM d GROUP BY 1 ORDER BY depth""".stripMargin,
-
-    "q260_lmoments" ->
-      // same rank weights, same Hosking combinations, same guards
-      """WITH r AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
-        |    CAST(row_number() OVER (PARTITION BY event_type
-        |      ORDER BY value, event_id) AS DOUBLE) AS i
-        |  FROM events WHERE value IS NOT NULL),
-        |g AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    avg(x) AS b0,
-        |    sum((i - 1.0) * x) AS s1,
-        |    sum((i - 1.0) * (i - 2.0) * x) AS s2,
-        |    sum((i - 1.0) * (i - 2.0) * (i - 3.0) * x) AS s3
-        |  FROM r GROUP BY 1),
-        |m AS (SELECT event_type, n, b0,
-        |    s1 / (n * (n - 1.0)) AS b1,
-        |    s2 / (n * (n - 1.0) * (n - 2.0)) AS b2,
-        |    s3 / (n * (n - 1.0) * (n - 2.0) * (n - 3.0)) AS b3
-        |  FROM g),
-        |l AS (SELECT event_type, n, b0 AS l1,
-        |    2.0 * b1 - b0 AS l2,
-        |    6.0 * b2 - 6.0 * b1 + b0 AS l3,
-        |    20.0 * b3 - 30.0 * b2 + 12.0 * b1 - b0 AS l4
-        |  FROM m)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |  roundStable(l1, 6) AS l1,
-        |  roundStable(CASE WHEN n > 1 THEN l2 END, 6) AS l2,
-        |  roundStable(CASE WHEN n > 3 THEN l3 END, 6) AS l3,
-        |  roundStable(CASE WHEN n > 3 THEN l4 END, 6) AS l4,
-        |  roundStable(CASE WHEN n > 1 AND abs(l1) > 0 THEN l2 / l1
-        |    END, 6) AS l_cv,
-        |  roundStable(CASE WHEN n > 3 AND abs(l2) > 0 THEN l3 / l2
-        |    END, 6) AS l_skew,
-        |  roundStable(CASE WHEN n > 3 AND abs(l2) > 0 THEN l4 / l2
-        |    END, 6) AS l_kurt
-        |FROM l ORDER BY event_type""".stripMargin,
-
-    "q255_logrank" ->
-      // q251's staging + arm flag; identical O−E / hypergeometric-V
-      // association, zero variance pinned at single-subject times
-      """WITH u AS (SELECT user_id, min(ts) AS f, max(ts) AS l,
-        |        min(CASE WHEN event_type = 'error' THEN ts END) AS err
-        |      FROM events GROUP BY 1),
-        |s AS (SELECT user_id % 3 AS cohort, user_id % 2 = 0 AS ga,
-        |        date_diff('day', CAST(f AS DATE),
-        |          CAST(coalesce(err, l) AS DATE)) AS t,
-        |        (err IS NOT NULL) AS obs
-        |      FROM u),
-        |g AS (SELECT cohort, t,
-        |        sum(CASE WHEN ga AND obs THEN 1 ELSE 0 END) AS d1,
-        |        sum(CASE WHEN ga AND NOT obs THEN 1 ELSE 0 END) AS c1,
-        |        sum(CASE WHEN NOT ga AND obs THEN 1 ELSE 0 END) AS d2,
-        |        sum(CASE WHEN NOT ga AND NOT obs THEN 1 ELSE 0 END)
-        |          AS c2
-        |      FROM s GROUP BY 1, 2),
-        |w AS (SELECT cohort, d1, c1, d2, c2,
-        |        CAST(sum(d1 + c1) OVER win AS DOUBLE) AS n1,
-        |        CAST(sum(d2 + c2) OVER win AS DOUBLE) AS n2,
-        |        CAST(d1 + d2 AS DOUBLE) AS d
-        |      FROM g
-        |      WINDOW win AS (PARTITION BY cohort ORDER BY t
-        |        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-        |x AS (SELECT cohort, d1, c1, d2, c2,
-        |        CASE WHEN d > 0 THEN d * n1 / (n1 + n2) END AS e1,
-        |        CASE WHEN d > 0 THEN
-        |          CASE WHEN n1 + n2 > 1
-        |            THEN d * (n1 / (n1 + n2)) * (n2 / (n1 + n2))
-        |              * (((n1 + n2) - d) / ((n1 + n2) - 1.0))
-        |            ELSE 0.0 END END AS v
-        |      FROM w),
-        |f AS (SELECT cohort, sum(d1 + c1) AS na, sum(d2 + c2) AS nb,
-        |        sum(d1) AS o1, sum(d2) AS o2, sum(e1) AS es,
-        |        sum(v) AS vs,
-        |        CAST(sum(d1) AS DOUBLE) - sum(e1) AS ome
-        |      FROM x GROUP BY 1)
-        |SELECT cohort, CAST(na AS BIGINT) AS n_a,
-        |  CAST(nb AS BIGINT) AS n_b, CAST(o1 AS BIGINT) AS events_a,
-        |  CAST(o2 AS BIGINT) AS events_b,
-        |  roundStable(es, 6) AS expected_a,
-        |  roundStable(CASE WHEN vs > 0 THEN ome / sqrt(vs) END, 6) AS z,
-        |  roundStable(CASE WHEN vs > 0 THEN ome * ome / vs END, 6)
-        |    AS chi2
-        |FROM f ORDER BY cohort""".stripMargin,
-
-    "q256_bartlett" ->
-      // same per-cell moments; per-cell ln guarded INSIDE the fold
-      """WITH c AS (SELECT event_type, isodow(ts) - 1 AS lvl,
-        |    CAST(count(value) AS DOUBLE) AS n, var_samp(value) AS v
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |g AS (SELECT event_type, sum(n) AS bn,
-        |    CAST(count(*) AS DOUBLE) AS k,
-        |    sum(CASE WHEN v IS NOT NULL THEN (n - 1.0) * v END) AS ssw,
-        |    sum(CASE WHEN v > 0 THEN (n - 1.0) * ln(v) END) AS lns,
-        |    sum(CASE WHEN n > 1 THEN 1.0 / (n - 1.0) END) AS invs,
-        |    min(n) AS minn, min(v) AS minv
-        |  FROM c GROUP BY 1)
-        |SELECT event_type, CAST(k AS BIGINT) AS k_groups,
-        |  CAST(bn AS BIGINT) AS n, CAST(k - 1.0 AS BIGINT) AS df,
-        |  roundStable(CASE WHEN bn > k THEN ssw / (bn - k) END, 6)
-        |    AS pooled_var,
-        |  roundStable(CASE WHEN k > 1 AND bn > k AND minn > 1
-        |      AND minv > 0 AND ssw / (bn - k) > 0
-        |    THEN ((bn - k) * ln(ssw / (bn - k)) - lns)
-        |      / (1.0 + (invs - 1.0 / (bn - k)) / (3.0 * (k - 1.0)))
-        |    END, 6) AS bartlett_t
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q257_xbar_chart" ->
-      // same subgroup staging, pooled variance and limits from windows
-      // over subgroup rows, flags from the SAME 6dp-rounded values
-      """WITH s AS (SELECT event_type, CAST(ts AS DATE) AS bucket,
-        |    count(*) AS n, avg(value) AS xb, var_samp(value) AS v
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |w AS (SELECT event_type, bucket, n, xb, v,
-        |    sum(xb * CAST(n AS DOUBLE)) OVER wa
-        |      / sum(CAST(n AS DOUBLE)) OVER wa AS grand,
-        |    sum(CASE WHEN v IS NOT NULL THEN CAST(n AS DOUBLE) - 1.0
-        |      END) OVER wa AS pdf,
-        |    sum(CASE WHEN v IS NOT NULL
-        |      THEN (CAST(n AS DOUBLE) - 1.0) * v END) OVER wa AS pnum
-        |  FROM s
-        |  WINDOW wa AS (PARTITION BY event_type)),
-        |x AS (SELECT event_type, bucket, n,
-        |    roundStable(xb, 6) AS xbar, roundStable(grand, 6) AS center,
-        |    roundStable(grand + 3.0 * sqrt((CASE WHEN pdf > 0
-        |      THEN pnum / pdf END) / CAST(n AS DOUBLE)), 6) AS ucl,
-        |    roundStable(grand - 3.0 * sqrt((CASE WHEN pdf > 0
-        |      THEN pnum / pdf END) / CAST(n AS DOUBLE)), 6) AS lcl
-        |  FROM w),
-        |y AS (SELECT event_type, bucket, n, xbar, center, ucl, lcl,
-        |    CASE WHEN ucl IS NOT NULL
-        |      AND (xbar > ucl OR xbar < lcl) THEN 1 ELSE 0 END AS ooc,
-        |    CASE WHEN xbar > center THEN 1 ELSE 0 END AS ab,
-        |    CASE WHEN xbar < center THEN 1 ELSE 0 END AS bl
-        |  FROM x),
-        |z AS (SELECT event_type, bucket, n, xbar, center, ucl, lcl, ooc,
-        |    CASE WHEN count(*) OVER w8 = 8 AND (sum(ab) OVER w8 = 8
-        |      OR sum(bl) OVER w8 = 8) THEN 1 ELSE 0 END AS run_flag
-        |  FROM y
-        |  WINDOW w8 AS (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN 7 PRECEDING AND CURRENT ROW))
-        |SELECT event_type, bucket, CAST(n AS BIGINT) AS n, xbar, center,
-        |  ucl, lcl, CAST(ooc AS BIGINT) AS out_of_control,
-        |  CAST(run_flag AS BIGINT) AS run_flag
-        |FROM z ORDER BY event_type, bucket""".stripMargin,
-
-    "q252_cuped" ->
-      // same per-user halves staging, same one-pass conditional moments
-      """WITH p AS (SELECT event_type, user_id,
-        |    avg(CASE WHEN ts < TIMESTAMP '2024-01-16' THEN value END)
-        |      AS x,
-        |    avg(CASE WHEN ts >= TIMESTAMP '2024-01-16' THEN value END)
-        |      AS y
-        |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT * FROM p WHERE x IS NOT NULL AND y IS NOT NULL),
-        |g AS (SELECT event_type,
-        |    count(CASE WHEN user_id % 2 = 0 THEN y END) AS na,
-        |    count(CASE WHEN user_id % 2 <> 0 THEN y END) AS nb,
-        |    covar_samp(x, y) AS cxy, var_samp(x) AS vx,
-        |    var_samp(y) AS vy,
-        |    avg(CASE WHEN user_id % 2 = 0 THEN y END) AS ya,
-        |    avg(CASE WHEN user_id % 2 <> 0 THEN y END) AS yb,
-        |    avg(CASE WHEN user_id % 2 = 0 THEN x END) AS xa,
-        |    avg(CASE WHEN user_id % 2 <> 0 THEN x END) AS xb
-        |  FROM b GROUP BY 1)
-        |SELECT event_type, CAST(na AS BIGINT) AS n_a,
-        |  CAST(nb AS BIGINT) AS n_b,
-        |  roundStable(CASE WHEN vx > 0 THEN cxy / vx END, 6) AS theta,
-        |  roundStable(ya - yb, 6) AS diff_raw,
-        |  roundStable(CASE WHEN vx > 0 AND vy > 0 AND na > 0 AND nb > 0
-        |    THEN (ya - yb) - (cxy / vx) * (xa - xb) END, 6) AS diff_adj,
-        |  roundStable(CASE WHEN vx > 0 AND vy > 0 AND na > 0 AND nb > 0
-        |    THEN (cxy * cxy) / (vx * vy) END, 6) AS var_reduction
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q253_power_mde" ->
-      // the z-sum pinned as a DOUBLE literal on both engines (a bare
-      // DuckDB decimal literal would square exactly, Spark's double
-      // wouldn't — the q197 lesson); ceil steps on the 6dp-rounded value
-      """WITH g AS (SELECT event_type,
-        |    CAST(count(CASE WHEN user_id % 2 = 0 THEN value END)
-        |      AS DOUBLE) AS na,
-        |    CAST(count(CASE WHEN user_id % 2 <> 0 THEN value END)
-        |      AS DOUBLE) AS nb,
-        |    var_samp(value) AS s2, avg(value) AS m
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1)
-        |SELECT event_type, CAST(na AS BIGINT) AS n_a,
-        |  CAST(nb AS BIGINT) AS n_b,
-        |  roundStable(m, 6) AS mean, roundStable(sqrt(s2), 6) AS sd,
-        |  roundStable(CASE WHEN na > 1 AND nb > 1 AND s2 > 0
-        |    THEN CAST(2.801586 AS DOUBLE)
-        |      * sqrt(s2 * (1.0 / na + 1.0 / nb)) END, 6) AS mde_abs,
-        |  roundStable(CASE WHEN na > 1 AND nb > 1 AND s2 > 0
-        |      AND abs(m) > 0
-        |    THEN CAST(2.801586 AS DOUBLE)
-        |      * sqrt(s2 * (1.0 / na + 1.0 / nb)) / abs(m) END, 6)
-        |    AS mde_rel,
-        |  CAST(CASE WHEN na > 1 AND nb > 1 AND s2 > 0
-        |      AND abs(m) * 0.05 > 0
-        |    THEN ceil(roundStable(2.0 * s2 * CAST(2.801586 AS DOUBLE)
-        |      * CAST(2.801586 AS DOUBLE)
-        |      / ((abs(m) * 0.05) * (abs(m) * 0.05)), 6)) END AS BIGINT)
-        |    AS n_per_arm_needed
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q254_ratio_ci" ->
-      // same per-user totals, same delta-method quadratic form with the
-      // identical greatest(…, 0) clamp
-      """WITH p AS (SELECT event_type, user_id, sum(value) AS y,
-        |    count(value) AS x
-        |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT * FROM p WHERE y IS NOT NULL AND x IS NOT NULL),
-        |g AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    sum(CAST(y AS DOUBLE)) AS sy, sum(CAST(x AS DOUBLE)) AS sx,
-        |    var_samp(CAST(y AS DOUBLE)) AS vy,
-        |    var_samp(CAST(x AS DOUBLE)) AS vx,
-        |    covar_samp(CAST(x AS DOUBLE), CAST(y AS DOUBLE)) AS cxy,
-        |    avg(CAST(x AS DOUBLE)) AS mx
-        |  FROM b GROUP BY 1)
-        |SELECT event_type, CAST(n AS BIGINT) AS n_units,
-        |  roundStable(sy, 6) AS num_total,
-        |  roundStable(sx, 6) AS den_total,
-        |  roundStable(CASE WHEN sx > 0 THEN sy / sx END, 6) AS ratio,
-        |  roundStable(CASE WHEN sx > 0 AND n > 1 AND mx > 0
-        |    THEN sqrt(greatest(vy - 2.0 * (sy / sx) * cxy
-        |      + (sy / sx) * (sy / sx) * vx, 0.0) / n) / mx END, 6)
-        |    AS se,
-        |  roundStable(CASE WHEN sx > 0 AND n > 1 AND mx > 0
-        |    THEN sy / sx - 1.96 * (sqrt(greatest(vy
-        |      - 2.0 * (sy / sx) * cxy
-        |      + (sy / sx) * (sy / sx) * vx, 0.0) / n) / mx) END, 6)
-        |    AS ci_lo,
-        |  roundStable(CASE WHEN sx > 0 AND n > 1 AND mx > 0
-        |    THEN sy / sx + 1.96 * (sqrt(greatest(vy
-        |      - 2.0 * (sy / sx) * cxy
-        |      + (sy / sx) * (sy / sx) * vx, 0.0) / n) / mx) END, 6)
-        |    AS ci_hi
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q176_rbo" ->
-      // both rankings replayed from one pair scan (cosine and raw dot,
-      // each rounded-then-ranked); the per-item RBO weight is the same
-      // ascending pow/d prefix sum
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, len(embedding) + 1)])) AS nrm,
-        |    sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |                   FOR i IN range(1, 17)])) AS pnrm
-        |  FROM embeddings),
-        |pr AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |              FOR i IN range(1, len(q.embedding) + 1)]) AS rawdot,
-        |    list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)
-        |              FOR i IN range(1, 17)]) AS predot,
-        |    q.nrm AS qn, c.nrm AS cn, q.pnrm AS qpn, c.pnrm AS cpn
-        |  FROM v q JOIN v c ON q.vec_id < 50 AND q.vec_id <> c.vec_id),
-        |ra AS (SELECT query_id, neighbor_id,
-        |        row_number() OVER (PARTITION BY query_id
-        |          ORDER BY roundStable(rawdot / (qn * cn), 4) DESC,
-        |            neighbor_id) AS rka
-        |      FROM pr),
-        |rb AS (SELECT query_id, neighbor_id,
-        |        row_number() OVER (PARTITION BY query_id
-        |          ORDER BY roundStable(predot / (qpn * cpn), 4) DESC,
-        |            neighbor_id) AS rkb
-        |      FROM pr),
-        |j AS (SELECT ra.query_id,
-        |        greatest(ra.rka, rb.rkb) AS m
-        |      FROM ra JOIN rb ON rb.query_id = ra.query_id
-        |        AND rb.neighbor_id = ra.neighbor_id
-        |      WHERE ra.rka <= 10 AND rb.rkb <= 10),
-        |s AS (SELECT query_id,
-        |        sum((1 - 0.9) * list_sum([pow(0.9, d - 1) / d
-        |          FOR d IN range(CAST(m AS INT), 11)]))
-        |          / (1 - pow(0.9, 10)) AS rbo,
-        |        count(*) AS n_common
-        |      FROM j GROUP BY 1)
-        |SELECT u.query_id AS qid,
-        |  roundStable(coalesce(s.rbo, 0), 6) AS rbo,
-        |  CAST(coalesce(s.n_common, 0) AS BIGINT) AS n_common
-        |FROM (SELECT DISTINCT vec_id AS query_id FROM embeddings
-        |      WHERE vec_id < 50) u
-        |LEFT JOIN s ON s.query_id = u.query_id
-        |ORDER BY qid""".stripMargin,
-
-    "q152_chi2_keyed" ->
-      // per-source contingency: same observed-cells-only identity as
-      // q131, marginals partitioned by (source, level)
-      """WITH cells AS (SELECT source,
-        |        lang AS a,
-        |        CASE WHEN n_chars >= 300 THEN 'long' ELSE 'short' END AS b,
-        |        CAST(count(*) AS DOUBLE) AS o
-        |      FROM documents GROUP BY 1, 2, 3),
-        |m AS (SELECT source, a, b, o,
-        |        sum(o) OVER (PARTITION BY source, a) AS rt,
-        |        sum(o) OVER (PARTITION BY source, b) AS ct
-        |      FROM cells)
-        |SELECT source,
-        |  roundStable((sum(o * o / (rt * ct)) - 1.0) * sum(o), 6) AS chi2,
-        |  CAST((count(DISTINCT a) - 1) * (count(DISTINCT b) - 1) AS BIGINT)
-        |    AS dof,
-        |  roundStable(CASE WHEN least(count(DISTINCT a),
-        |      count(DISTINCT b)) > 1
-        |    THEN sqrt((sum(o * o / (rt * ct)) - 1.0)
-        |      / CAST(least(count(DISTINCT a), count(DISTINCT b)) - 1
-        |          AS DOUBLE)) END, 6) AS cramers_v,
-        |  CAST(sum(o) AS BIGINT) AS n
-        |FROM m GROUP BY source ORDER BY source""".stripMargin,
-
-    "q138_hll_distinct" ->
-      // exact cardinality for value comparison; the sketch verdicts are
-      // asserted literal 1s (the q62 discipline — raw HLL estimates are
-      // engine-specific and never reach the output)
-      """SELECT event_type,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct,
-        |  CAST(1 AS BIGINT) AS est_ok,
-        |  CAST(1 AS BIGINT) AS merge_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q118_ols_trend" ->
-      // same population-moment formulas spelled out (≡ regr_slope /
-      // regr_intercept / regr_r2), x centered at 2024-01-01
-      """WITH t AS (SELECT event_type, value AS y,
-        |  (epoch_us(ts) - 1704067200000000) / 86400000000.0 AS x
-        |  FROM events)
-        |SELECT event_type,
-        |  roundStable(covar_pop(y, x) / var_pop(x), 6) AS slope,
-        |  roundStable(avg(y) - covar_pop(y, x) / var_pop(x) * avg(x), 6)
-        |    AS intercept,
-        |  roundStable(pow(corr(x, y), 2), 6) AS r2,
-        |  count(*) AS n
-        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q121_welch_ttest" ->
-      // conditional aggregates over the two arms; Welch–Satterthwaite df
-      """WITH t AS (SELECT event_type,
-        |    CASE WHEN user_id % 2 = 0 THEN value END AS a,
-        |    CASE WHEN user_id % 2 <> 0 THEN value END AS b
-        |  FROM events),
-        |g AS (SELECT event_type,
-        |    count(a) AS n_a, count(b) AS n_b,
-        |    avg(a) AS ma, avg(b) AS mb,
-        |    var_samp(a) / count(a) AS sa, var_samp(b) / count(b) AS sb
-        |  FROM t GROUP BY event_type)
-        |SELECT event_type, n_a, n_b,
-        |  roundStable(ma - mb, 4) AS mean_diff,
-        |  roundStable((ma - mb) / sqrt(sa + sb), 4) AS t_stat,
-        |  roundStable(pow(sa + sb, 2) /
-        |    (pow(sa, 2) / (n_a - 1) + pow(sb, 2) / (n_b - 1)), 4) AS df,
-        |  CAST(abs((ma - mb) / sqrt(sa + sb)) > 1.96 AS BIGINT) AS significant
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    "q120_collocations" ->
-      // bigrams via list_zip of the two token-array slices (same
-      // in-array construction as the Spark side — no window)
-      """WITH tk AS (SELECT unnest(str_split(text, ' ')) AS tok FROM documents),
-        |uni AS (SELECT tok, CAST(count(*) AS DOUBLE) AS c FROM tk GROUP BY tok),
-        |tot AS (SELECT sum(c) AS t FROM uni),
-        |d AS (SELECT doc_id, str_split(text, ' ') AS l FROM documents),
-        |bgz AS (SELECT unnest(list_zip(l[1:len(l)-1], l[2:len(l)])) AS z
-        |        FROM d WHERE len(l) >= 2),
-        |bg AS (SELECT z[1] AS w1, z[2] AS w2 FROM bgz),
-        |big AS (SELECT w1, w2, count(*) AS n FROM bg GROUP BY w1, w2),
-        |nb AS (SELECT CAST(sum(n) AS DOUBLE) AS b FROM big)
-        |SELECT big.w1, big.w2, big.n,
-        |  roundStable(ln(n / b / (u1.c / t) / (u2.c / t)), 6) AS pmi,
-        |  roundStable(ln(n / b / (u1.c / t) / (u2.c / t)) / -ln(n / b), 6)
-        |    AS npmi
-        |FROM big
-        |JOIN uni u1 ON big.w1 = u1.tok
-        |JOIN uni u2 ON big.w2 = u2.tok
-        |CROSS JOIN tot CROSS JOIN nb
-        |WHERE n >= 5
-        |ORDER BY w1, w2""".stripMargin,
-
-    "q122_bigram_logprob" ->
-      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS l FROM documents),
-        |v AS (SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS vocab
-        |      FROM (SELECT unnest(str_split(text, ' ')) AS tok FROM documents)),
-        |bgz AS (SELECT doc_id, unnest(list_zip(l[1:len(l)-1], l[2:len(l)])) AS z
-        |        FROM d WHERE len(l) >= 2),
-        |bg AS (SELECT doc_id, z[1] AS w1, z[2] AS w2 FROM bgz),
-        |c12 AS (SELECT w1, w2, CAST(count(*) AS DOUBLE) AS c12
-        |        FROM bg GROUP BY w1, w2),
-        |c1 AS (SELECT w1, CAST(count(*) AS DOUBLE) AS c1 FROM bg GROUP BY w1),
-        |lm AS (SELECT c12.w1, c12.w2, ln((c12 + 1.0) / (c1 + vocab)) AS lp
-        |       FROM c12 JOIN c1 USING (w1) CROSS JOIN v)
-        |SELECT bg.doc_id, count(*) AS n_bigrams,
-        |  roundStable(avg(lp), 6) AS mean_logprob
-        |FROM bg JOIN lm ON bg.w1 = lm.w1 AND bg.w2 = lm.w2
-        |GROUP BY bg.doc_id ORDER BY doc_id""".stripMargin,
-
-    "q85_weighted_sample" ->
-      """WITH g AS (SELECT lang, count(*) AS n_docs,
-        |             sum(len(str_split(text,' '))) AS n_toks
-        |           FROM documents GROUP BY lang),
-        |w AS (SELECT lang, n_docs,
-        |        pow(CAST(n_toks AS DOUBLE)/sum(n_toks) OVER (), 0.5) AS raw_w,
-        |        sum(n_docs) OVER () AS n_total
-        |      FROM g),
-        |p AS (SELECT lang,
-        |        least(1.0, 0.5 * n_total * roundStable(raw_w/sum(raw_w) OVER (), 6) / n_docs) AS p_keep
-        |      FROM w)
-        |SELECT d.doc_id, d.lang, roundStable(p.p_keep, 6) AS p_keep
-        |FROM documents d JOIN p ON d.lang = p.lang
-        |WHERE CAST(((d.doc_id % 2147483648) * 2654435761) % 2147483648 AS DOUBLE) / 2147483648.0 < p.p_keep
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q84_salted_join" ->
-      """WITH dim AS (SELECT event_type,
-        |    roundStable(avg(value), 6) AS type_avg
-        |  FROM events GROUP BY event_type)
-        |SELECT e.event_type, count(*) AS n,
-        |  roundStable(sum(e.value - d.type_avg), 4) AS dev_sum
-        |FROM events e JOIN dim d USING (event_type)
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
-
-    "q83_curation" ->
-      """WITH n AS (SELECT doc_id, lang,
-        |    regexp_replace(lower(text), '  +', ' ', 'g') AS t FROM documents),
-        |s AS (SELECT doc_id, lang, t, str_split(t, ' ') AS toks FROM n),
-        |q AS (SELECT doc_id, lang, t,
-        |  0.5 * least(1.0, CAST(len(toks) AS DOUBLE) / 50.0)
-        |   + 0.3 * (1.0 - CAST(len(regexp_extract_all(t, '[.,!?;:]')) AS DOUBLE) / CAST(length(t) AS DOUBLE))
-        |   + 0.2 * (CAST(len(list_filter(toks, x -> x IN ('the','a'))) AS DOUBLE) / CAST(len(toks) AS DOUBLE)) AS quality,
-        |  CAST(len(toks) AS BIGINT) AS n_toks,
-        |  md5(array_to_string(list_sort(list_distinct(str_split(lower(t), ' '))), ' ')) AS fp
-        | FROM s),
-        |f AS (SELECT * FROM q WHERE quality >= 0.4 AND n_toks BETWEEN 10 AND 200),
-        |m AS (SELECT fp, min(doc_id) AS doc_id FROM f GROUP BY fp)
-        |SELECT f.doc_id, f.lang, roundStable(f.quality, 6) AS quality, f.n_toks,
-        |  CASE WHEN ((f.doc_id % 2147483648) * 2654435761) % 2147483648 % 10 < 8 THEN 'train'
-        |       WHEN ((f.doc_id % 2147483648) * 2654435761) % 2147483648 % 10 < 9 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM f JOIN m ON f.fp = m.fp AND f.doc_id = m.doc_id
-        |ORDER BY f.doc_id""".stripMargin,
-
-    "q81_redact_pii" ->
-      """WITH planted AS (SELECT doc_id, text ||
-        |  CASE WHEN doc_id % 10 = 0 THEN ' contact user' || doc_id || '@example.com' ELSE '' END ||
-        |  CASE WHEN doc_id % 17 = 0 THEN ' host 10.0.' || (doc_id % 256) || '.1' ELSE '' END ||
-        |  CASE WHEN doc_id % 23 = 0 THEN ' tel 555-01' || (doc_id % 100) || '-4433' ELSE '' END
-        |  AS text FROM documents),
-        |r AS (SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(text,
-        |    '[a-z0-9.]+@[a-z0-9.]+', '<email>', 'g'),
-        |    '[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+', '<ip>', 'g'),
-        |    '[0-9][0-9-]{6,}[0-9]', '<phone>', 'g') AS clean_text,
-        |  CAST(len(regexp_extract_all(text, '[a-z0-9.]+@[a-z0-9.]+'))
-        |     + len(regexp_extract_all(text, '[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+'))
-        |     + len(regexp_extract_all(text, '[0-9][0-9-]{6,}[0-9]')) AS BIGINT) AS n_redactions
-        | FROM planted)
-        |SELECT doc_id, clean_text, n_redactions,
-        |  CAST(length(clean_text) AS BIGINT) AS clean_len
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "q82_train_split" ->
-      """SELECT doc_id,
-        |  ((doc_id % 2147483648) * 2654435761) % 2147483648 AS h,
-        |  CASE WHEN ((doc_id % 2147483648) * 2654435761) % 2147483648 % 10 < 8 THEN 'train'
-        |       WHEN ((doc_id % 2147483648) * 2654435761) % 2147483648 % 10 < 9 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q80_heavy_hitters" ->
-      """SELECT tok, count(*) AS cnt
-        |FROM (SELECT unnest(str_split(text, ' ')) AS tok FROM documents)
-        |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 20""".stripMargin,
-
-    "q79_incremental_agg" ->
-      """SELECT event_type, CAST(ts AS DATE) AS d,
-        | count(value) AS cnt,
-        | roundStable(sum(value), 4) AS sum_value,
-        | roundStable(roundStable(sum(value), 4) / count(value), 4) AS avg_value,
-        | roundStable(min(value), 6) AS min_value,
-        | roundStable(max(value), 6) AS max_value
-        |FROM events GROUP BY event_type, d
-        |ORDER BY d, event_type""".stripMargin,
-
-    "q381_stream_agg" ->
-      // one-shot aggregate over all facts ≡ the streamed 3-batch fold
-      // (incl. mid-stream compaction); the replay gate asserts as 1
-      """SELECT event_type, count(value) AS cnt,
-        | roundStable(sum(value), 4) AS sum_value,
-        | roundStable(roundStable(sum(value), 4) / count(value), 4) AS avg_value,
-        | roundStable(min(value), 6) AS min_value,
-        | roundStable(max(value), 6) AS max_value,
-        | CAST(1 AS BIGINT) AS replay_gated
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q382_stream_drift" ->
-      // per-batch PSI against the frozen first-half reference — q125's
-      // arithmetic with the current side split by event_id % 2; the
-      // replayed batch 0 must land these exact bytes
-      """WITH t AS (SELECT event_type, value, event_id % 2 AS b,
-        |             (day(ts) <= 15) AS ref FROM events),
-        |r AS (SELECT event_type, min(value) AS lo, max(value) AS hi
-        |      FROM t WHERE ref GROUP BY event_type),
-        |bb AS (SELECT t.event_type,
-        |        CAST(least(greatest(CASE WHEN hi - lo <= 0 THEN 0
-        |          ELSE floor((value - lo) / (hi - lo) * 10) END, 0), 9)
-        |          AS BIGINT) AS bin,
-        |        ref, b
-        |      FROM t JOIN r ON t.event_type = r.event_type),
-        |refc AS (SELECT event_type, bin, count(*) AS rc FROM bb
-        |         WHERE ref GROUP BY 1, 2),
-        |refx AS (SELECT event_type, bin, rc, bid FROM refc
-        |         CROSS JOIN (SELECT unnest([0, 1]) AS bid)),
-        |curc AS (SELECT event_type, b AS bid, bin, count(*) AS cc
-        |         FROM bb WHERE NOT ref GROUP BY 1, 2, 3),
-        |j AS (SELECT coalesce(refx.event_type, curc.event_type) AS event_type,
-        |        coalesce(refx.bid, curc.bid) AS bid,
-        |        coalesce(rc, 0) AS rc, coalesce(cc, 0) AS cc
-        |      FROM refx FULL OUTER JOIN curc
-        |        ON refx.event_type = curc.event_type
-        |       AND refx.bin = curc.bin AND refx.bid = curc.bid),
-        |w AS (SELECT event_type, bid, rc, cc,
-        |        sum(rc) OVER (PARTITION BY event_type, bid) AS nr,
-        |        sum(cc) OVER (PARTITION BY event_type, bid) AS nc
-        |      FROM j)
-        |SELECT event_type, CAST(bid AS BIGINT) AS batch_id,
-        |  roundStable(sum(((rc + 0.5) / (nr + 5.0) - (cc + 0.5) / (nc + 5.0))
-        |    * ln(((rc + 0.5) / (nr + 5.0)) / ((cc + 0.5) / (nc + 5.0)))), 6)
-        |    AS psi,
-        |  CAST(max(nr) AS BIGINT) AS n_ref, CAST(max(nc) AS BIGINT) AS n_cur
-        |FROM w GROUP BY event_type, bid
-        |ORDER BY event_type, batch_id""".stripMargin,
-
-    "q383_stream_census" ->
-      // q328's one-shot dup-locality profile — the streamed 3-batch
-      // census (batch 1 replayed) must merge to these exact cells
-      """WITH c AS (SELECT source AS s, md5(substr(text, 1, 40)) AS h,
-        |    count(*) AS c FROM documents GROUP BY 1, 2),
-        |g AS (SELECT h, sum(c) AS tot, count(*) AS nsrc FROM c
-        |  GROUP BY 1)
-        |SELECT s AS source, CAST(sum(c.c) AS BIGINT) AS n_docs,
-        |  count(*) AS n_distinct,
-        |  CAST(sum(CASE WHEN g.tot > 1 AND g.nsrc = 1 THEN c.c ELSE 0
-        |    END) AS BIGINT) AS n_intra_dup,
-        |  CAST(sum(CASE WHEN g.nsrc > 1 THEN c.c ELSE 0 END) AS BIGINT)
-        |    AS n_cross_dup,
-        |  roundStable(CAST(sum(CASE WHEN g.tot > 1 AND g.nsrc = 1
-        |      THEN c.c ELSE 0 END) AS DOUBLE) / sum(c.c), 6)
-        |    AS intra_rate,
-        |  roundStable(CAST(sum(CASE WHEN g.nsrc > 1 THEN c.c ELSE 0
-        |      END) AS DOUBLE) / sum(c.c), 6) AS cross_rate
-        |FROM c JOIN g USING (h) GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q78_pack_greedy" ->
-      """WITH RECURSIVE t AS (SELECT lang, doc_id,
-        |    len(str_split(text,' ')) AS n_toks FROM documents),
-        |o AS (SELECT lang, doc_id, n_toks,
-        |        row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-        |      FROM t),
-        |p AS (
-        |  SELECT lang, doc_id, n_toks, rn, 0 AS bin_id, n_toks AS fill
-        |  FROM o WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.lang, o.doc_id, o.n_toks, o.rn,
-        |    CASE WHEN p.fill + o.n_toks > 256 THEN p.bin_id + 1 ELSE p.bin_id END,
-        |    CASE WHEN p.fill + o.n_toks > 256 THEN o.n_toks ELSE p.fill + o.n_toks END
-        |  FROM p JOIN o ON o.lang = p.lang AND o.rn = p.rn + 1)
-        |SELECT lang, doc_id, CAST(n_toks AS BIGINT) AS n_toks,
-        |  CAST(bin_id AS BIGINT) AS bin_id, CAST(fill AS BIGINT) AS bin_fill
-        |FROM p ORDER BY lang, doc_id""".stripMargin,
-  )
-}
-
-/** Generated DuckDB oracle for q292: the SAME 10 power-iteration rounds
-  * the engine runs driver-side, unrolled as chained CTEs (the q106/q146
-  * unrolled-iteration feat) — covariance from raw moments, w₀ = 1/√d,
-  * per-round L2 normalization, canonical sign at the max-|loading| dim
-  * (lowest pos on ties), λ₁ as the Rayleigh quotient over trace.
-  */
-private[graft] object Pc1OracleSql {
-  val iters = 10
-  val sql: String = {
-    val rounds = (1 to iters).map { r =>
-      val prev = if (r == 1) "w0" else s"w${r - 1}"
-      // MATERIALIZED: each round references its predecessor twice (the
-      // norm scalar + the vector); inlined CTEs would re-evaluate the
-      // whole chain 2^iters times
-      s"""m$r AS MATERIALIZED (SELECT cv.i AS i, sum(cv.c * $prev.w) AS nw
-         |  FROM cv JOIN $prev ON cv.j = $prev.i GROUP BY 1),
-         |w$r AS MATERIALIZED (SELECT i,
-         |    nw / sqrt((SELECT sum(nw * nw) FROM m$r)) AS w
-         |  FROM m$r)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH px AS (SELECT i.i AS i, j.j AS j,
-       |    CAST(embedding[CAST(i.i AS INT)] AS DOUBLE) AS xi,
-       |    CAST(embedding[CAST(j.j AS INT)] AS DOUBLE) AS xj
-       |  FROM embeddings, range(1, 65) i(i), range(1, 65) j(j)),
-       |cv AS MATERIALIZED (SELECT i, j,
-       |    sum(xi * xj) / count(*)
-       |      - (sum(xi) / count(*)) * (sum(xj) / count(*)) AS c
-       |  FROM px GROUP BY 1, 2),
-       |w0 AS (SELECT i, 1.0 / sqrt(64.0) AS w FROM range(1, 65) t(i)),
-       |$rounds,
-       |sgn AS (SELECT CASE WHEN (SELECT w FROM w$iters
-       |    ORDER BY abs(w) DESC, i ASC LIMIT 1) < 0
-       |  THEN -1.0 ELSE 1.0 END AS s),
-       |wf AS (SELECT i, w * s AS w FROM w$iters, sgn),
-       |lam AS (SELECT sum(wi.w * cv.c * wj.w) AS l FROM cv
-       |  JOIN wf wi ON cv.i = wi.i JOIN wf wj ON cv.j = wj.i),
-       |tr AS (SELECT sum(c) AS t FROM cv WHERE i = j)
-       |SELECT CAST(wf.i - 1 AS BIGINT) AS pos,
-       |  roundStable(wf.w, 6) AS pc1_loading,
-       |  roundStable(CASE WHEN tr.t > 0 THEN lam.l / tr.t ELSE 0.0 END, 6)
-       |    AS pc1_var_share
-       |FROM wf, lam, tr ORDER BY pos""".stripMargin
-  }
-
-  /** q371: the SAME 10-round fit (everything through `wf`), then the
-    * all-but-the-top projection per (vector, dim) — the common prefix
-    * is built once here so the two oracles cannot drift apart.
-    */
-  val debiasSql: String = {
-    // reuse everything up to and including wf/lam/tr by prefix-sharing
-    // the WITH-chain and swapping the final SELECT — the two oracles
-    // cannot drift apart
-    val base = sql.substring(0, sql.indexOf("SELECT CAST(wf.i - 1"))
-    base.reverse.dropWhile(_ == '\n').reverse + ",\n" +
-      """mn AS MATERIALIZED (SELECT i.i AS i,
-        |    avg(CAST(embedding[CAST(i.i AS INT)] AS DOUBLE)) AS m
-        |  FROM embeddings, range(1, 65) i(i) GROUP BY 1),
-        |pj AS MATERIALIZED (SELECT e.vec_id,
-        |    sum((CAST(e.embedding[CAST(wf.i AS INT)] AS DOUBLE) - mn.m)
-        |      * wf.w) AS p
-        |  FROM embeddings e, wf JOIN mn ON mn.i = wf.i GROUP BY 1)
-        |SELECT e.vec_id, CAST(wf.i - 1 AS BIGINT) AS pos,
-        |  roundStable((CAST(e.embedding[CAST(wf.i AS INT)] AS DOUBLE)
-        |      - mn.m) - pj.p * wf.w, 6) AS debiased
-        |FROM embeddings e, wf
-        |  JOIN mn ON mn.i = wf.i
-        |  JOIN pj ON pj.vec_id = e.vec_id
-        |ORDER BY e.vec_id, pos""".stripMargin
-  }
+  lazy val oracleSql: Map[String, String] =
+    catalog.map { case (name, q) => name -> graft.functions.expandRoundStable(q.oracle) }
 }

@@ -54,21 +54,6 @@ object AirQualityPipeline {
         avg("pollution_index").as("pollution_index_mean"),
         sum("is_rush_hour").as("is_rush_hour_sum"))
 
-  /** Weekly and monthly rollups (README "Weekly and monthly statistics"). */
-  def periodSummary(transformed: DataFrame, period: String): DataFrame =
-    transformed.groupBy(date_trunc(period, col("ts")).as("period"), col("station"))
-      .agg(avg("pm25").as("pm25_mean"), max("pm25").as("pm25_max"),
-        avg("aqi_pm25").as("aqi_pm25_mean"), count(lit(1)).as("n"))
-
-  /** Load phase (dag:287-359): CSV for compatibility + snappy parquet
-    * partitioned by date for pruning (the scale-relevant layout).
-    */
-  def load(transformed: DataFrame, daily: DataFrame, outDir: String): Unit = {
-    Io.writeCsv(daily, s"$outDir/air_quality_daily_csv")
-    Io.writeParquet(transformed, s"$outDir/air_quality_final", partitionBy = Seq("date"))
-    Io.writeParquet(daily, s"$outDir/air_quality_daily")
-  }
-
   /** Land the transformed data once, then read it back for downstream
     * aggregation — at scale this beats `.cache()` (measured at 17.5M
     * rows: caching the wide transform cost 3.5× the transform itself,

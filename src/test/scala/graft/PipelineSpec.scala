@@ -1487,6 +1487,88 @@ class PipelineSpec extends AnyFunSuite {
     assert(b1.getString(3) == "C", s"$b1")
   }
 
+  test("Hist/Rate/Profile/Enrich/Novelty/Rules sinks: a two-batch stream lands what the batch functions write") {
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Encoders, Row}
+    import org.apache.spark.sql.streaming.DataStreamWriter
+    /** `sink` wires the streaming sink under a root dir; `direct` writes
+      * batch `id` there with the sink's batch function; `outs` are the
+      * dirs both land per batch.
+      */
+    case class SinkCase(name: String, batches: Seq[DataFrame], outs: Seq[String],
+        sink: (DataFrame, String, String) => DataStreamWriter[Row],
+        direct: (DataFrame, Long, String) => Unit)
+    val kv = (1 to 400).map(i => (if (i % 3 == 0) "a" else "b", i.toDouble)).toDF("k", "v")
+    val geom = streaming.HistStream.buildGeometry(kv, Seq("k"), "v", bins = 20)
+    def evs(k: String, base: Long, cnt: Int) =
+      (0 until cnt).map(i => (k, base + i.toLong * 3600 / cnt)).toDF("k", "sec")
+        .withColumn("ts", timestamp_seconds(col("sec")))
+    val mon = streaming.RateStream.buildReference(
+      evs("a", 0L, 100).union(evs("b", 0L, 100)), Seq("k"), "ts")
+    val tags = (1 to 60).map(i =>
+      (i.toLong % 25, if (i % 7 == 0) None else Some(s"u${i % 9}"))).toDF("uid", "tag")
+    val dimPath = Files.createTempDirectory("graft_sinkdim").toString + "/dim"
+    for ((day, v) <- Seq("2021-01-01" -> "A", "2021-02-01" -> "B"))
+      streaming.DimStream.scd2Batch(Seq((1L, day, v)).toDF("k", "ts", "v")
+        .withColumn("ts", to_date(col("ts"))), dimPath, Seq("k"), Seq("v"), "ts")
+    def facts(rows: (Long, Long, String)*) =
+      rows.toDF("fid", "k", "ft").withColumn("ft", to_date(col("ft")))
+    val rules = Seq(etl.Rules.NotNull("v"), etl.Rules.InRange("v", 0, 10),
+      etl.Rules.Unique(Seq("id")))
+    val cases = Seq(
+      SinkCase("hist", Seq(kv.filter(col("v") <= 150), kv.filter(col("v") > 150)), Seq("sk"),
+        (s, root, ck) => streaming.HistStream.toHistSink(s, "v", geom, s"$root/sk", ck),
+        (b, id, root) => streaming.HistStream.histBatch(geom, b, id, "v", s"$root/sk")),
+      SinkCase("rate", Seq(evs("b", 10000L, 400), evs("a", 20000L, 30)), Seq("mon"),
+        (s, root, ck) => streaming.RateStream.toRateSink(s, "ts", mon, s"$root/mon", ck),
+        (b, id, root) => streaming.RateStream.rateBatch(mon, b, id, "ts", s"$root/mon")),
+      SinkCase("profile", Seq(tags.filter(col("uid") < 12), tags.filter(col("uid") >= 12)),
+        Seq("st"),
+        (s, root, ck) => streaming.ProfileStream.toProfileSink(s, Seq("uid", "tag"),
+          s"$root/st", ck),
+        (b, id, root) => streaming.ProfileStream.profileBatch(b, id, Seq("uid", "tag"),
+          s"$root/st")),
+      SinkCase("enrich", Seq(facts((10L, 1L, "2021-01-15"), (11L, 1L, "2020-12-25")),
+          facts((12L, 1L, "2021-02-01"), (13L, 2L, "2021-03-01"))), Seq("out"),
+        (s, root, ck) => streaming.EnrichStream.toEnrichedSink(s, Seq("k"), "ft",
+          Seq("fid"), dimPath, s"$root/out", ck),
+        (b, id, root) => streaming.EnrichStream.enrichBatch(b, id, Seq("k"), "ft",
+          Seq("fid"), dimPath, s"$root/out")),
+      SinkCase("novelty", Seq(Seq("alpha beta gamma delta", "one two three four").toDF("text"),
+          Seq("alpha beta gamma delta", "five six seven eight").toDF("text")),
+        Seq("state", "report"),
+        (s, root, ck) => streaming.NoveltyStream.toNoveltySink(s, "text",
+          s"$root/state", s"$root/report", ck),
+        (b, id, root) => streaming.NoveltyStream.noveltyBatch(b, id, "text",
+          s"$root/state", s"$root/report")),
+      SinkCase("rules", Seq(Seq((1L, Some(5.0)), (2L, Some(7.0))).toDF("id", "v"),
+          Seq((3L, Some(99.0)), (3L, None: Option[Double])).toDF("id", "v")), Seq("rep"),
+        (s, root, ck) => streaming.RulesStream.toRulesSink(s, rules, s"$root/rep", ck),
+        (b, id, root) => streaming.RulesStream.rulesBatch(b, id, rules, s"$root/rep")))
+    // binary cells (sketches) compare by content, not by array identity
+    def landed(dir: String) = spark.read.parquet(dir).collect().toSeq
+      .map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }).sortBy(_.toString)
+    for (c <- cases) {
+      val tmp = Files.createTempDirectory(s"graft_sink_${c.name}").toString
+      implicit val enc: org.apache.spark.sql.Encoder[Row] = Encoders.row(c.batches.head.schema)
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[Row]
+      val q = c.sink(mem.toDF(), s"$tmp/stream", s"$tmp/ck").start()
+      for (b <- c.batches) {
+        mem.addData(b.collect().toSeq: _*)
+        q.processAllAvailable()
+      }
+      q.stop()
+      for ((b, id) <- c.batches.zipWithIndex) c.direct(b, id.toLong, s"$tmp/direct")
+      for (out <- c.outs; id <- c.batches.indices) {
+        val streamed = landed(s"$tmp/stream/$out/batch=$id")
+        assert(streamed.nonEmpty, s"${c.name}: $out/batch=$id landed no rows")
+        assert(streamed == landed(s"$tmp/direct/$out/batch=$id"),
+          s"${c.name}: streamed $out/batch=$id differs from the batch function's")
+      }
+    }
+  }
+
   test("CusumStream: an empty first batch cannot wedge the gate") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_cusumempty").toString

@@ -20,9 +20,16 @@ class QueriesSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracleSql keys are a subset of queries") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("catalog assembly refuses two records with one name") {
+    val build: (SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => s.range(1).toDF()
+    val err = intercept[IllegalArgumentException] {
+      catalog.Query.byName(Seq(catalog.Query("q_twice", build, "SELECT 1"),
+        catalog.Query("q_once", build, "SELECT 2"),
+        catalog.Query("q_twice", build, "SELECT 3")))
+    }
+    assert(err.getMessage.contains("q_twice") && !err.getMessage.contains("q_once"),
+      err.getMessage)
   }
 
   test("SURVEY.md intro counts match the registered query surface") {
