@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Multi-source BFS hop distances — the DISTANCE axis of the graph
   * family ([[ConnectedComponents]] answers reachability, [[LabelProp]]
@@ -20,8 +19,10 @@ import org.apache.spark.storage.StorageLevel
   * not "capped" but unknown, and the fixed horizon is what makes the
   * result SQL-replayable round for round). Frontier size is bounded by
   * reached nodes; each round is one keyed equi-join + one min-agg,
-  * lineage re-rooted and persisted per round (the iterative-loop
-  * discipline).
+  * lineage re-rooted and cut per round (the iterative-loop discipline).
+  * The edge frame is built once with `GraftShims.cachedCut`, so rounds
+  * read it at its adaptive partition count rather than one cached
+  * partition per shuffle partition.
   */
 object Bfs {
 
@@ -33,9 +34,8 @@ object Bfs {
   def hops(edges: DataFrame, srcCol: String, dstCol: String,
            seeds: DataFrame, nodeCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    val e = edges.select(col(srcCol).as("node"), col(dstCol).as("__dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+    val e = org.apache.spark.sql.GraftShims.cachedCut(
+      edges.select(col(srcCol).as("node"), col(dstCol).as("__dst")))
     var dist = seeds.select(col(nodeCol).as("node")).distinct()
       .withColumn("dist", lit(0L))
     var prev: DataFrame = null

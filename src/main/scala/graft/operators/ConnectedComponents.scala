@@ -50,10 +50,11 @@ object ConnectedComponents {
       maxIters: Int = 25): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
     // symmetrize once: propagation below only needs one direction per
-    // stored edge because both endpoints are present as sources
-    val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      .filter(col("a") =!= col("b")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // stored edge because both endpoints are present as sources; the
+    // seed round's count below is the cut's materializing action
+    val sym = org.apache.spark.sql.GraftShims.cachedCut(
+      e.union(e.select(col("b").as("a"), col("a").as("b")))
+        .filter(col("a") =!= col("b")).distinct(), eager = false)
 
     // seed with the closed-neighborhood min directly (node vs its
     // neighbors) — identical to running one propagation round on

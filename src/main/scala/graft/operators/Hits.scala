@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -15,12 +15,13 @@ import org.apache.spark.storage.StorageLevel
   * Per round: authorities from hub mass pushed along edges (one keyed
   * agg), L1-normalize (one scalar cross join — no driver round trip),
   * hubs from authority mass pulled back (one keyed agg), normalize.
-  * Same iterative discipline as PageRank: the edge table is persisted
-  * once and reused read-only; lineage re-roots every round with the
-  * previous block released, so peak memory is 2 score tables
-  * regardless of round count. L1 normalization (not L2) keeps the
-  * recurrence rational — exactly replayable by an unrolled SQL oracle
-  * (the q106 discipline for iterative fixpoints).
+  * Same iterative discipline as PageRank: the edge table and node set
+  * are built once with `GraftShims.cachedCut` and reused read-only;
+  * lineage re-roots every round with the previous block released, so
+  * peak memory is 2 score tables regardless of round count. L1
+  * normalization (not L2) keeps the recurrence rational — exactly
+  * replayable by an unrolled SQL oracle (the q106 discipline for
+  * iterative fixpoints).
   */
 object Hits {
 
@@ -41,14 +42,10 @@ object Hits {
           iters: Int, saltBuckets: Int = 1): DataFrame = {
     require(iters >= 1, s"need iters >= 1, got $iters")
     require(saltBuckets >= 1, s"need saltBuckets >= 1, got $saltBuckets")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.count()
+    val e = GraftShims.cachedCut(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    val nodes = GraftShims.cachedCut(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     var hubs = nodes.withColumn("h", lit(1.0))
     var prev: DataFrame = null
     // per-round broadcast hygiene — see [[PageRank.run]]
@@ -95,7 +92,7 @@ object Hits {
         .join(aNorm, Seq("node"), "left")
         .select(col("node"), coalesce(col("h"), lit(0.0)).as("h"),
           coalesce(col("a"), lit(0.0)).as("a"))
-      val cut = org.apache.spark.sql.GraftShims.cachedCut(joined)
+      val cut = GraftShims.cachedCut(joined)
       aRaw.unpersist(blocking = false)
       hRaw.unpersist(blocking = false)
       if (prev != null) prev.unpersist(blocking = false)

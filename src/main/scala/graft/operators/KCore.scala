@@ -38,13 +38,11 @@ object KCore {
            k: Int, maxPeels: Int = 8): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     require(maxPeels >= 1, s"need maxPeels >= 1, got $maxPeels")
-    var e = edges
+    var e = org.apache.spark.sql.GraftShims.cachedCut(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+      .distinct())
     var prev: DataFrame = e // previous round's cached block, released as the next lands
     var round = 0
     var fixed = false

@@ -37,13 +37,11 @@ object KTruss {
             k: Int, maxPeels: Int = 4): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     require(maxPeels >= 1, s"need maxPeels >= 1, got $maxPeels")
-    var e = edges
+    var e = org.apache.spark.sql.GraftShims.cachedCut(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+      .distinct())
     var prev: DataFrame = e
     var round = 0
     var fixed = false

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Synchronous label propagation (LPA — Raghavan et al. 2007): community
   * detection by majority vote. Every node starts labeled with itself;
@@ -27,9 +26,10 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape per round: edges ⋈ labels (keyed equi-join on dst) →
   * per-(node, label) count → per-node argmax via one keyed window —
   * two keyed shuffles per round, state is O(nodes); isolated nodes keep
-  * their label via the closing left join. Lineage re-rooted and
-  * persisted per round (the iterative-loop discipline — the Catalyst
-  * tree otherwise doubles per round). For power-law hubs the
+  * their label via the closing left join. Lineage re-rooted and cut
+  * per round (the iterative-loop discipline — the Catalyst tree
+  * otherwise doubles per round); the node set and edge frame are built
+  * once with `GraftShims.cachedCut`. For power-law hubs the
   * contribution join admits the same salting as PageRank
   * (`Skew.saltedJoin`) — pass `saltBuckets` > 1.
   */
@@ -43,13 +43,10 @@ object LabelProp {
           rounds: Int, saltBuckets: Int = 1): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     require(saltBuckets >= 1, s"need saltBuckets >= 1, got $saltBuckets")
-    val nodes = edges.select(col(srcCol).as("node"))
-      .union(edges.select(col(dstCol).as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.count()
-    val e = edges.select(col(srcCol).as("node"), col(dstCol).as("__dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+    val nodes = GraftShims.cachedCut(edges.select(col(srcCol).as("node"))
+      .union(edges.select(col(dstCol).as("node"))).distinct())
+    val e = GraftShims.cachedCut(
+      edges.select(col(srcCol).as("node"), col(dstCol).as("__dst")))
     var labels = nodes.withColumn("label", col("node"))
     var prev: DataFrame = null
     // per-round broadcast hygiene — see [[PageRank.run]]
@@ -80,7 +77,7 @@ object LabelProp {
       val next = labels.join(best, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("__newLab"), col("label")).as("label"))
-      val cut = org.apache.spark.sql.GraftShims.cachedCut(next)
+      val cut = GraftShims.cachedCut(next)
       if (prev != null) prev.unpersist(blocking = false)
       bcScope.roundEnd()
       prev = cut

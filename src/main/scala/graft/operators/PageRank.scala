@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Power-iteration PageRank over an edge list — the classic iterative
   * keyed-aggregation workload (importance ranking for link graphs,
@@ -22,8 +21,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Distributed shape per round: ONE keyed shuffle (contribution sum by
   * dst) + a broadcast-friendly left join back to the node set; the
-  * edge×degree join is precomputed once and persisted, so rounds touch
-  * it read-only. Lineage is re-rooted every round (the naive loop's
+  * node set and the edge×degree join are built once with
+  * `GraftShims.cachedCut`, so rounds read them at their adaptive
+  * partition count. Lineage is re-rooted every round (the naive loop's
   * Catalyst tree doubles per iteration — the q66 OOM lesson), and the
   * previous round's block is released as soon as the next is
   * materialized: peak memory is 2 rank tables, O(nodes), regardless of
@@ -59,26 +59,20 @@ object PageRank {
     require(iters >= 1, s"need iters >= 1, got $iters")
     require(damping > 0 && damping < 1, s"need 0 < damping < 1, got $damping")
     require(saltBuckets >= 1, s"need saltBuckets >= 1, got $saltBuckets")
-    val nodes = edges.select(col(srcCol).as("node"))
-      .union(edges.select(col(dstCol).as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the node count is the cut's materializing action
+    val nodes = GraftShims.cachedCut(edges.select(col(srcCol).as("node"))
+      .union(edges.select(col(dstCol).as("node"))).distinct(), eager = false)
     val n = nodes.count()
     val deg = edges.groupBy(col(srcCol).as("node"))
       .agg(count(lit(1)).as("__deg"))
-    val edgeDeg = edges.select(col(srcCol).as("node"), col(dstCol).as("__dst"))
-      .join(deg, Seq("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgeDeg.count() // materialize once; rounds reuse the cached blocks
+    val edgeDeg = GraftShims.cachedCut(
+      edges.select(col(srcCol).as("node"), col(dstCol).as("__dst"))
+        .join(deg, Seq("node")))
     // dangling = no out-edges: computed ONCE (anti-join on the degree
-    // table), persisted, reused by the per-round mass sum
+    // table), cut, reused by the per-round mass sum
     val dangling =
       if (!redistributeDangling) null
-      else {
-        val d = nodes.join(deg, Seq("node"), "left_anti")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        d.count()
-        d
-      }
+      else GraftShims.cachedCut(nodes.join(deg, Seq("node"), "left_anti"))
     val base = (1.0 - damping) / n
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
     var prev: DataFrame = null
@@ -121,7 +115,7 @@ object PageRank {
         else joinedNodes.crossJoin(broadcast(mass)))
         .select(col("node"),
           (lit(base) + lit(damping) * contrib).as("rank"))
-      val cut = org.apache.spark.sql.GraftShims.cachedCut(next)
+      val cut = GraftShims.cachedCut(next)
       if (prev != null) prev.unpersist(blocking = false)
       bcScope.roundEnd()
       prev = cut
@@ -140,7 +134,7 @@ object PageRank {
     * `r'(v) = (1−d)·s(v) + d · Σ_{u→v} r(u)/outdeg(u)` with
     * `s(v) = 1/|S|` on seeds, 0 elsewhere; start from `s`. Ranks
     * concentrate NEAR the seeds ("importance from HERE"), the global
-    * run's view from nowhere. Same per-round shape, persist discipline,
+    * run's view from nowhere. Same per-round shape, cut discipline,
     * and `saltBuckets` hub mitigation as [[run]]; the seed indicator
     * joins once up front (O(nodes)) so rounds stay two-shuffle. Seeds
     * absent from the graph contribute teleport mass to nobody —
@@ -157,30 +151,22 @@ object PageRank {
     val seedSet = seeds.select(col(seedCol).as("node")).distinct()
     val nSeeds = seedSet.count()
     require(nSeeds >= 1, "need at least one seed")
-    val nodes = edges.select(col(srcCol).as("node"))
+    val nodes = GraftShims.cachedCut(edges.select(col(srcCol).as("node"))
       .union(edges.select(col(dstCol).as("node"))).distinct()
       .join(seedSet.withColumn("__isSeed", lit(true)), Seq("node"), "left")
       .select(col("node"),
-        when(col("__isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("__s"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.count()
+        when(col("__isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("__s")))
     val deg = edges.groupBy(col(srcCol).as("node"))
       .agg(count(lit(1)).as("__deg"))
-    val edgeDeg = edges.select(col(srcCol).as("node"), col(dstCol).as("__dst"))
-      .join(deg, Seq("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgeDeg.count()
+    val edgeDeg = GraftShims.cachedCut(
+      edges.select(col(srcCol).as("node"), col(dstCol).as("__dst"))
+        .join(deg, Seq("node")))
     // dangling mass teleports to the SEED distribution (the walk
     // restarts from s when it hits a sink — the standard PPR treatment)
     val dangling =
       if (!redistributeDangling) null
-      else {
-        val d = nodes.select(col("node"), col("__s"))
-          .join(deg, Seq("node"), "left_anti")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        d.count()
-        d
-      }
+      else GraftShims.cachedCut(nodes.select(col("node"), col("__s"))
+        .join(deg, Seq("node"), "left_anti"))
     var ranks = nodes.select(col("node"), col("__s").as("rank"))
     var prev: DataFrame = null
     val bcScope = graft.Blocks.loopBroadcastScope(edges.sparkSession)
@@ -215,7 +201,7 @@ object PageRank {
         .select(col("node"),
           ((lit(1.0) - damping) * col("__s") +
             lit(damping) * contrib).as("rank"))
-      val cut = org.apache.spark.sql.GraftShims.cachedCut(next)
+      val cut = GraftShims.cachedCut(next)
       if (prev != null) prev.unpersist(blocking = false)
       bcScope.roundEnd()
       prev = cut

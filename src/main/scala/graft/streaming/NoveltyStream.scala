@@ -45,11 +45,13 @@ object NoveltyStream {
                    digits: Int = 6): Unit = {
     val spark = batch.sparkSession
     val sh = shingleHashes(batch, textCol, n)
+    // no state dir yet (the stream's first batch) = an empty prior; any
+    // other read failure is real and propagates
+    val state = new org.apache.hadoop.fs.Path(stateDir)
     val prior =
-      try spark.read.parquet(stateDir).filter(col("batch") < batchId)
-        .select(col("sh"))
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        spark.emptyDataFrame.select(lit(0L).as("sh")).limit(0) }
+      if (state.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(state))
+        spark.read.parquet(stateDir).filter(col("batch") < batchId).select(col("sh"))
+      else spark.emptyDataFrame.select(lit(0L).as("sh")).limit(0)
     val novel = sh.join(prior, Seq("sh"), "left_anti")
       .localCheckpoint() // scored AND stored; don't recompute the anti-join
     val nDocs = batch.count()

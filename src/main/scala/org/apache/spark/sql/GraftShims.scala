@@ -66,6 +66,15 @@ object GraftShims {
     * `unpersist`, exactly like the pattern it replaces — unlike
     * `localCheckpoint`, whose block handle is unreachable and whose
     * blocks a loop would leak until the session-level reset.
+    *
+    * The graph loops also build their loop-invariant inputs (edge
+    * frames, node sets) with it instead of `persist` + `count`. Spark
+    * plans a cached frame without AQE's partition coalescing
+    * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is
+    * false), so it keeps every shuffle partition: q170's edge frame, a
+    * union of two `distinct`s, was cached as 64 tiny partitions, and
+    * every BFS round ran 65 tasks to relax it. The cut keeps the AQE
+    * plan's coalesced partition count instead.
     */
   def cachedCut(df: Dataset[Row], eager: Boolean = true): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]

@@ -1876,6 +1876,50 @@ class OperatorEdgeSpec extends AnyFunSuite {
     assert(multi("e") == 1L && multi("d") == 0L && multi("b") == 1L, s"$multi")
   }
 
+  test("Bfs.hops: rounds read the edge frame at its adaptive partition count, not one task per shuffle partition") {
+    // q170's edge shape: a distinct and its swap, a union of two shuffles
+    // of spark.sql.shuffle.partitions each. Cached as is, that frame
+    // keeps 2 × parts partitions and every round scans them all.
+    val parts = 32
+    val rounds = 4
+    val pairs = (0 until 90).map(i => (s"c${i % 30}", s"s${(i * 7) % 11}"))
+    val cs = pairs.toDF("src", "dst").distinct()
+    val edges = cs.unionByName(cs.select(col("dst").as("src"), col("src").as("dst")))
+    val seeds = Seq("c0", "c17").toDF("node")
+    val sc = spark.sparkContext
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet(); ()
+      }
+    }
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    val out = try {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      val dist = operators.Bfs.hops(edges, "src", "dst", seeds, "node", rounds)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      org.apache.spark.ListenerBusDrain(sc)
+      dist
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
+    val launched = s"${tasks.get} tasks for $rounds rounds at $parts shuffle partitions"
+    info(launched)
+    assert(tasks.get < rounds * parts, launched)
+    // the same horizon, breadth-first by hand over the undirected graph
+    val adj = (pairs ++ pairs.map(_.swap)).distinct.groupMap(_._1)(_._2)
+    var frontier = Set("c0", "c17")
+    val expected = scala.collection.mutable.Map(frontier.toSeq.map(_ -> 0L): _*)
+    for (d <- 1 to rounds) {
+      frontier = frontier.flatMap(adj.getOrElse(_, Nil)).filterNot(expected.contains)
+      frontier.foreach(expected(_) = d.toLong)
+    }
+    assert(out == expected.toMap)
+  }
+
   test("jsd: identical windows score exactly 0; a full-range shift is large but <= ln 2") {
     val same = (1 to 200).flatMap(i =>
       Seq(("k", i.toDouble, true), ("k", i.toDouble, false)))
