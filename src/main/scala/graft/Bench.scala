@@ -165,9 +165,9 @@ object Bench {
     * "cold" means the same thing in both artifacts: parquet scan,
     * shuffle agg, broadcast join (the r12 set — scan exec, exchange,
     * codegen driver, block manager), PLUS (r17) the iterative-loop
-    * machinery — a 3-round toy loop through [[org.apache.spark.sql
-    * .GraftShims.cachedCut]] (InMemoryRelation columnar cache write +
-    * read, LogicalRDD) and one sort-merge self-join (sort + SMJ codegen).
+    * machinery — a 6-round toy loop on [[Blocks.rounds]]
+    * (InMemoryRelation columnar cache write + read, LogicalRDD) and one
+    * sort-merge self-join (sort + SMJ codegen).
     * The r17 sorted first pass made the alphabetically-first iterative
     * query (q106) carry ~54 s of in-run JIT for these shared paths that
     * hash order had smeared onto whichever query happened to run first —
@@ -191,16 +191,11 @@ object Bench {
     // iterative loop: cache write/read + cachedCut + keyed agg per round
     var it = t.groupBy("k").agg(
       org.apache.spark.sql.functions.sum("id").cast("double").as("s"))
-    var prevIt: org.apache.spark.sql.DataFrame = null
-    for (_ <- 1 to 6) {
-      val nxt = it.join(t.select("k").distinct(), Seq("k"), "left")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("s").as("s"))
-      val cut = org.apache.spark.sql.GraftShims.cachedCut(nxt)
-      if (prevIt != null) prevIt.unpersist(blocking = false)
-      prevIt = cut
-      it = cut
-    }
-    if (prevIt != null) prevIt.unpersist(blocking = false)
+    val loop = Blocks.rounds(spark)
+    for (_ <- 1 to 6)
+      it = loop.advance(it.join(t.select("k").distinct(), Seq("k"), "left")
+        .groupBy("k").agg(org.apache.spark.sql.functions.sum("s").as("s")))
+    loop.close()
   }
 
   /** JVM flags this process was launched with that the fresh-JVM child

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cached-block lifetime control for long-lived sessions.
   *
@@ -93,47 +93,70 @@ object Blocks {
     org.apache.spark.GraftSparkShims.dropAllBroadcastBlocks(spark.sparkContext)
   }
 
-  /** Scoped PER-ROUND broadcast release for iterative loops (r17,
-    * guide §5 leaked state): each round of a cachedCut loop executes
-    * fresh broadcast exchanges (the rank/score join side, the
-    * dangling-mass one-row), and the `Broadcast` handles are unreachable
-    * the moment the round's cut is materialized — yet their blocks
-    * survive to the end-of-query reset (~40 blocks / ~135 MB per q106
-    * run, r16 triage), squeezing storage for the live cuts across a
-    * long chain. The scope drops, at each round's end, every broadcast
-    * that appeared AFTER the loop started but BEFORE this round began:
-    * provably dead — the current round's cut is materialized (count
-    * returned), the previous cut is unpersisted, and no later plan can
-    * reference an earlier round's exchange (each round plans fresh
-    * exchanges; cache entries die with their unpersist).
+  /** The rounds of every iterative loop: each round's frame is cut
+    * ([[org.apache.spark.sql.GraftShims.cachedCut]]), so the Catalyst
+    * tree stays constant-size however many rounds run (it otherwise
+    * doubles per round — the q66 OOM lesson), and `Rounds` releases
+    * what the loop no longer reads, in the one safe order.
+    *
+    * `advanceWith(next)(action)` cuts `next` lazily and runs `action` on
+    * the cut as the round's only materializing job (a count, a
+    * changed-rows count, a multi-count aggregate). Only after that does
+    * it unpersist the previous round's cut and drop every broadcast
+    * created after `Rounds` was built but before this round began. Both
+    * are provably dead: the current cut is materialized, and no later
+    * plan can reference an earlier round's exchange (each round plans
+    * fresh exchanges; cache entries die with their unpersist). Without
+    * the drop, each round's broadcasts (the rank/score join side, the
+    * dangling-mass one-row) survive to the end-of-query reset: ~40
+    * blocks / ~135 MB per q106 run (r16 triage), squeezing storage for
+    * the live cuts across a long chain. `close()` releases the last cut
+    * once the loop's result has been copied out; a loop that returns
+    * its last cut leaves it to the caller.
+    *
+    * A loop whose state starts as a cut frame makes it its first
+    * `advance`, so that frame is released like any round's.
+    * Loop-invariant inputs (edge frames, node sets) are cut BEFORE
+    * `Rounds` is built: their broadcasts predate it and are never
+    * dropped.
     *
     * The trade is documented: a dropped broadcast breaks RECOMPUTE of an
     * already-unpersisted earlier cut — exactly as unpersisting it did.
     * Persisted cuts are MEMORY_AND_DISK; losing one means executor loss,
     * at which point the loop re-runs from its inputs.
     *
-    * CONCURRENCY CONSTRAINT: the snapshot delta is SparkSession-global —
-    * a broadcast created by a DIFFERENT thread's query between this
-    * loop's rounds would be swept up by roundEnd and its job would fail
-    * re-fetching it. The iterative operators that embed this scope are
-    * single-query driver loops (the engine's execution model: one query
-    * at a time per session, which is also what Bench/Verify do); do NOT
-    * run them concurrently with other queries on the same session.
-    *
-    * Usage: `val scope = Blocks.loopBroadcastScope(spark)`, then per
-    * round `scope.roundStart()` before building, `scope.roundEnd()`
-    * after the cut's materializing count + the prev unpersist.
+    * CONCURRENCY CONSTRAINT: the broadcast snapshot is
+    * SparkSession-global — a broadcast created by a DIFFERENT thread's
+    * query between this loop's rounds would be swept up by the next
+    * drop and its job would fail re-fetching it. The iterative
+    * operators run one query at a time per session (the engine's
+    * execution model, which is also what Bench/Verify do); do NOT run
+    * them concurrently with other queries on the same session. Nothing
+    * enforces this yet.
     */
-  final class LoopBroadcastScope private[Blocks] (spark: SparkSession) {
+  final class Rounds private[Blocks] (spark: SparkSession) {
     private val sc = spark.sparkContext
     private val base = org.apache.spark.GraftSparkShims.broadcastIds(sc)
     private var beforeRound = base
-    def roundStart(): Unit =
-      beforeRound = org.apache.spark.GraftSparkShims.broadcastIds(sc)
-    def roundEnd(): Int =
+    private var prev: DataFrame = null
+
+    def advanceWith[T](next: DataFrame)(action: DataFrame => T): (DataFrame, T) = {
+      val cut = org.apache.spark.sql.GraftShims.cachedCut(next, eager = false)
+      val out = action(cut)
+      if (prev != null) prev.unpersist(blocking = false)
       org.apache.spark.GraftSparkShims.dropBroadcastIds(sc, beforeRound -- base)
+      beforeRound = org.apache.spark.GraftSparkShims.broadcastIds(sc)
+      prev = cut
+      (cut, out)
+    }
+
+    def advance(next: DataFrame): DataFrame = advanceWith(next)(_.count())._1
+
+    def close(): Unit = {
+      if (prev != null) prev.unpersist(blocking = false)
+      prev = null
+    }
   }
 
-  def loopBroadcastScope(spark: SparkSession): LoopBroadcastScope =
-    new LoopBroadcastScope(spark)
+  def rounds(spark: SparkSession): Rounds = new Rounds(spark)
 }

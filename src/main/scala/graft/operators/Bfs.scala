@@ -19,10 +19,9 @@ import org.apache.spark.sql.functions._
   * not "capped" but unknown, and the fixed horizon is what makes the
   * result SQL-replayable round for round). Frontier size is bounded by
   * reached nodes; each round is one keyed equi-join + one min-agg,
-  * lineage re-rooted and cut per round (the iterative-loop discipline).
-  * The edge frame is built once with `GraftShims.cachedCut`, so rounds
-  * read it at its adaptive partition count rather than one cached
-  * partition per shuffle partition.
+  * run on [[graft.Blocks.rounds]]. The edge frame is built once with
+  * `GraftShims.cachedCut`, so rounds read it at its adaptive partition
+  * count rather than one cached partition per shuffle partition.
   */
 object Bfs {
 
@@ -38,20 +37,12 @@ object Bfs {
       edges.select(col(srcCol).as("node"), col(dstCol).as("__dst")))
     var dist = seeds.select(col(nodeCol).as("node")).distinct()
       .withColumn("dist", lit(0L))
-    var prev: DataFrame = null
-    // per-round broadcast hygiene — see [[PageRank.run]]
-    val bcScope = graft.Blocks.loopBroadcastScope(edges.sparkSession)
+    val loop = graft.Blocks.rounds(edges.sparkSession)
     for (_ <- 1 to rounds) {
-      bcScope.roundStart()
       val relaxed = e.join(dist, Seq("node"))
         .select(col("__dst").as("node"), (col("dist") + 1L).as("dist"))
-      val next = dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      val cut = org.apache.spark.sql.GraftShims.cachedCut(next)
-      if (prev != null) prev.unpersist(blocking = false)
-      bcScope.roundEnd()
-      prev = cut
-      dist = cut
+      dist = loop.advance(dist.unionByName(relaxed)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
     }
     e.unpersist(blocking = false)
     dist

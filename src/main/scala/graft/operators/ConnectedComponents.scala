@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -23,23 +23,12 @@ import org.apache.spark.storage.StorageLevel
   *     of diameter, same keyed-shuffle shape per round; the fallback
   *     for adversarial topologies (long paths/chains) where label
   *     propagation would need diameter rounds.
+  *
+  * Both run on [[graft.Blocks.rounds]], seeded with their first cut
+  * (the seed labels, the canonical edge set); each round's fixpoint
+  * test is the round's one materializing job.
   */
 object ConnectedComponents {
-
-  /** Re-root an iterative result as a fresh LogicalRDD and materialize
-    * it, running `action` as the materializing pass. Iterative plans
-    * EXPLODE without lineage truncation (each round references the
-    * previous result, doubling the Catalyst tree per round — 12 rounds
-    * is a gigabyte-scale plan string and a driver OOM before any data
-    * moves); the cut keeps every round's plan constant-size while the
-    * persisted blocks keep recompute local.
-    */
-  private def reRootWith(df: DataFrame)(action: DataFrame => Long): (DataFrame, Long) = {
-    // lazy InternalRow cut: the caller's action is the materializing
-    // pass (one job per round), with no external-Row round trip
-    val cut = org.apache.spark.sql.GraftShims.cachedCut(df, eager = false)
-    (cut, action(cut))
-  }
 
   /** (node, comp) for every node appearing in `edges`; comp = min node
     * id of the connected component. Fails loudly if `maxIters` rounds
@@ -60,16 +49,13 @@ object ConnectedComponents {
     // neighbors) — identical to running one propagation round on
     // identity labels, but free: it rides the same groupBy that the
     // distinct node set needs anyway, saving one full round
-    var (cur, _) = reRootWith(sym.groupBy(col("a").as("node"))
-      .agg(least(min(col("b")), col("a")).as("comp")))(_.count())
-    var labels = cur
+    val loop = graft.Blocks.rounds(edges.sparkSession)
+    var labels = loop.advance(sym.groupBy(col("a").as("node"))
+      .agg(least(min(col("b")), col("a")).as("comp")))
 
     var iter = 0
     var changed = 1L
-    // per-round broadcast hygiene — see [[PageRank.run]]
-    val bcScope = graft.Blocks.loopBroadcastScope(edges.sparkSession)
     while (changed > 0 && iter < maxIters) {
-      bcScope.roundStart()
       // min label over the closed neighborhood: the node's own label and
       // every neighbor's label — one keyed join + one min-aggregate.
       // The node's own row carries its previous label a second time as
@@ -82,12 +68,9 @@ object ConnectedComponents {
       val merged = labels.select(col("node"), col("comp"), col("comp").as("own"))
         .union(nbr)
         .groupBy("node").agg(min(col("comp")).as("comp"), max(col("own")).as("old"))
-      val (cut, delta) = reRootWith(merged)(
+      val (cut, delta) = loop.advanceWith(merged)(
         _.filter(col("comp") =!= col("old")).count())
       changed = delta
-      cur.unpersist()
-      bcScope.roundEnd()
-      cur = cut
       labels = cut.select("node", "comp")
       iter += 1
     }
@@ -95,7 +78,7 @@ object ConnectedComponents {
       s"connected components did not converge in $maxIters rounds — " +
         "graph diameter exceeds the cap; raise maxIters or use starComponents")
     val out = labels.localCheckpoint()
-    cur.unpersist()
+    loop.close()
     sym.unpersist()
     out
   }
@@ -130,17 +113,14 @@ object ConnectedComponents {
     // canonical high→low orientation; the node set is preserved across
     // rounds because every round re-emits each node as a source or a
     // target (isolated-in-input nodes don't exist by construction)
-    var (curCut, curCnt) = reRootWith(
+    val loop = graft.Blocks.rounds(edges.sparkSession)
+    var (cur, curCnt) = loop.advanceWith(
       e0.select(greatest(col("x"), col("y")).as("u"), least(col("x"), col("y")).as("v"))
         .distinct())(_.count())
-    var cur = curCut
 
     var iter = 0
     var stable = curCnt == 0L // an empty edge set is already converged
-    // per-round broadcast hygiene — see [[PageRank.run]]
-    val bcScope = graft.Blocks.loopBroadcastScope(edges.sparkSession)
     while (!stable && iter < maxIters) {
-      bcScope.roundStart()
       // ---- large-star: per node, min over the CLOSED neighborhood ----
       // sym feeds BOTH the min-aggregate and the join below; without a
       // persist the union of the previous round's edges is evaluated
@@ -171,14 +151,11 @@ object ConnectedComponents {
       // shuffle of both edge sets.
       val marked = small.join(
         cur.select(col("u"), col("v"), lit(1L).as("__seen")), Seq("u", "v"), "left")
-      val next = org.apache.spark.sql.GraftShims.cachedCut(marked, eager = false)
-      val counts = next.agg(count(lit(1)), count(col("__seen"))).head()
+      val (next, counts) = loop.advanceWith(marked)(
+        _.agg(count(lit(1)), count(col("__seen"))).head())
       val (nextCnt, interCnt) = (counts.getLong(0), counts.getLong(1))
       stable = nextCnt == curCnt && interCnt == nextCnt
       sym.unpersist()
-      curCut.unpersist()
-      bcScope.roundEnd()
-      curCut = next
       cur = next.select("u", "v")
       curCnt = nextCnt
       iter += 1
@@ -193,7 +170,7 @@ object ConnectedComponents {
       .union(cur.select(col("v").as("node"), col("v").as("comp")))
       .distinct()
       .localCheckpoint()
-    curCut.unpersist()
+    loop.close()
     out
   }
 }

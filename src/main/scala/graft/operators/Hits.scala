@@ -15,10 +15,10 @@ import org.apache.spark.storage.StorageLevel
   * Per round: authorities from hub mass pushed along edges (one keyed
   * agg), L1-normalize (one scalar cross join — no driver round trip),
   * hubs from authority mass pulled back (one keyed agg), normalize.
-  * Same iterative discipline as PageRank: the edge table and node set
-  * are built once with `GraftShims.cachedCut` and reused read-only;
-  * lineage re-roots every round with the previous block released, so
-  * peak memory is 2 score tables regardless of round count. L1
+  * The edge table and node set are built once with
+  * `GraftShims.cachedCut` and reused read-only; rounds run on
+  * [[graft.Blocks.rounds]], so peak memory is 2 score tables regardless
+  * of round count. L1
   * normalization (not L2) keeps the recurrence rational — exactly
   * replayable by an unrolled SQL oracle (the q106 discipline for
   * iterative fixpoints).
@@ -47,60 +47,36 @@ object Hits {
     val nodes = GraftShims.cachedCut(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     var hubs = nodes.withColumn("h", lit(1.0))
-    var prev: DataFrame = null
-    // per-round broadcast hygiene — see [[PageRank.run]]
-    val bcScope = graft.Blocks.loopBroadcastScope(edges.sparkSession)
+    var scores: DataFrame = null
+    val loop = graft.Blocks.rounds(edges.sparkSession)
     for (_ <- 1 to iters) {
-      bcScope.roundStart()
       // authority: pull hub mass along in-edges, L1-normalize. The raw
       // agg feeds BOTH the rows and the norm scalar — persisted so the
       // edge join runs once per round, not twice (exchange reuse alone
       // still re-reduces; measured ~2× per-round cost without this)
-      val aJoined =
-        if (saltBuckets <= 1)
-          e.join(hubs.withColumnRenamed("node", "src"), Seq("src"))
-        else Skew.saltedJoin(e, hubs.withColumnRenamed("node", "src"),
-          "src", saltBuckets, saltFrom = Some("dst"))
-      val aRaw = (if (saltBuckets <= 1)
-          aJoined.groupBy(col("dst").as("node")).agg(sum(col("h")).as("__a"))
-        else aJoined
-          .withColumn("__s2", pmod(xxhash64(col("src")), lit(saltBuckets)))
-          .groupBy(col("dst").as("node"), col("__s2"))
-          .agg(sum(col("h")).as("__ap"))
-          .groupBy(col("node")).agg(sum(col("__ap")).as("__a")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val aJoined = Skew.saltedJoin(e, hubs.withColumnRenamed("node", "src"),
+        "src", saltBuckets, saltFrom = Some("dst"))
+      val aRaw = Skew.sumBy(aJoined, "dst", "node", col("h"), "__a", saltBuckets,
+        saltFrom = "src").persist(StorageLevel.MEMORY_AND_DISK)
       val aNorm = aRaw.crossJoin(aRaw.agg(sum(col("__a")).as("__na")))
         .select(col("node"), (col("__a") / col("__na")).as("a"))
       // hub: pull authority mass back along out-edges, L1-normalize
-      val hJoined =
-        if (saltBuckets <= 1)
-          e.join(aNorm.withColumnRenamed("node", "dst"), Seq("dst"))
-        else Skew.saltedJoin(e, aNorm.withColumnRenamed("node", "dst"),
-          "dst", saltBuckets, saltFrom = Some("src"))
-      val hRaw = (if (saltBuckets <= 1)
-          hJoined.groupBy(col("src").as("node")).agg(sum(col("a")).as("__h"))
-        else hJoined
-          .withColumn("__s2", pmod(xxhash64(col("dst")), lit(saltBuckets)))
-          .groupBy(col("src").as("node"), col("__s2"))
-          .agg(sum(col("a")).as("__hp"))
-          .groupBy(col("node")).agg(sum(col("__hp")).as("__h")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val hJoined = Skew.saltedJoin(e, aNorm.withColumnRenamed("node", "dst"),
+        "dst", saltBuckets, saltFrom = Some("src"))
+      val hRaw = Skew.sumBy(hJoined, "src", "node", col("a"), "__h", saltBuckets,
+        saltFrom = "dst").persist(StorageLevel.MEMORY_AND_DISK)
       val hNorm = hRaw.crossJoin(hRaw.agg(sum(col("__h")).as("__nh")))
         .select(col("node"), (col("__h") / col("__nh")).as("h"))
-      val joined = nodes
+      scores = loop.advance(nodes
         .join(hNorm, Seq("node"), "left")
         .join(aNorm, Seq("node"), "left")
         .select(col("node"), coalesce(col("h"), lit(0.0)).as("h"),
-          coalesce(col("a"), lit(0.0)).as("a"))
-      val cut = GraftShims.cachedCut(joined)
+          coalesce(col("a"), lit(0.0)).as("a")))
       aRaw.unpersist(blocking = false)
       hRaw.unpersist(blocking = false)
-      if (prev != null) prev.unpersist(blocking = false)
-      bcScope.roundEnd()
-      prev = cut
-      hubs = cut.select(col("node"), col("h"))
+      hubs = scores.select(col("node"), col("h"))
     }
-    val out = prev.select(col("node"), col("h").as("hub"),
+    val out = scores.select(col("node"), col("h").as("hub"),
       col("a").as("authority"))
     nodes.unpersist(blocking = false)
     e.unpersist(blocking = false)

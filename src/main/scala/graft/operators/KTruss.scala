@@ -17,8 +17,8 @@ import org.apache.spark.storage.StorageLevel
   * Vassilvitskii WWW'11 — out-degrees bounded ~√(2m), so a power-law
   * hub cannot explode the wedge join), each found triangle crediting
   * its three canonical edges; then one filter on the support count.
-  * Keyed equi-joins only. Lineage re-rooted and the previous block
-  * released every round (the q66 OOM lesson): peak = 2 edge tables.
+  * Keyed equi-joins only. Rounds run on [[graft.Blocks.rounds]],
+  * seeded with the canonical edge cut: peak = 2 edge tables.
   *
   * Rounds are data-dependent, so the loop takes an explicit `maxPeels`
   * cap and short-circuits at the fixpoint — the same capped,
@@ -37,37 +37,31 @@ object KTruss {
             k: Int, maxPeels: Int = 4): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     require(maxPeels >= 1, s"need maxPeels >= 1, got $maxPeels")
-    var e = org.apache.spark.sql.GraftShims.cachedCut(edges
+    val loop = graft.Blocks.rounds(edges.sparkSession)
+    var (e, n) = loop.advanceWith(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct())
-    var prev: DataFrame = e
+      .distinct())(_.count())
     var round = 0
     var fixed = false
-    // Invariant: `sup` is always support(e) for the CURRENT e, persisted.
-    // At loop exit — fixpoint (nothing peeled, so sup still describes e)
-    // or maxPeels (sup recomputed after the last peel) — it is reused for
-    // the output join, saving a full extra wedge enumeration (~1/3 of
-    // q261's cold time before this change).
+    // Invariant: `sup` is support of the current edge set, persisted.
+    // At loop exit — fixpoint (nothing peeled: the fixpoint round's cut
+    // holds the same edges sup describes) or maxPeels (sup recomputed
+    // after the last peel) — it is reused for the output join, saving a
+    // full extra wedge enumeration (~1/3 of q261's cold time before
+    // this change). A round's one count against the previous round's
+    // detects the fixpoint.
     var sup = support(e).persist(StorageLevel.MEMORY_AND_DISK)
-    // per-round broadcast hygiene — see [[PageRank.run]]
-    val bcScope = graft.Blocks.loopBroadcastScope(edges.sparkSession)
     while (round < maxPeels && !fixed) {
-      bcScope.roundStart()
-      val next = e
+      val (cut, m) = loop.advanceWith(e
         .join(sup, Seq("a", "b"), "left")
         .filter(coalesce(col("__sup"), lit(0L)) >= k - 2)
-        .select("a", "b")
-      val cut = org.apache.spark.sql.GraftShims.cachedCut(next)
-      if (cut.count() == e.count()) { // no edge peeled: fixpoint
-        cut.unpersist(blocking = false)
-        fixed = true
-      } else {
-        prev.unpersist(blocking = false)
-        bcScope.roundEnd()
-        prev = cut
-        e = cut
+        .select("a", "b"))(_.count())
+      fixed = m == n
+      e = cut
+      n = m
+      if (!fixed) {
         round += 1
         sup.unpersist(blocking = false)
         sup = support(e).persist(StorageLevel.MEMORY_AND_DISK)
@@ -79,7 +73,7 @@ object KTruss {
         coalesce(col("__sup"), lit(0L)).as("support"))
       .localCheckpoint()
     sup.unpersist(blocking = false)
-    prev.unpersist(blocking = false)
+    loop.close()
     out
   }
 

@@ -26,10 +26,9 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: edges ⋈ labels (keyed equi-join on dst) →
   * per-(node, label) count → per-node argmax via one keyed window —
   * two keyed shuffles per round, state is O(nodes); isolated nodes keep
-  * their label via the closing left join. Lineage re-rooted and cut
-  * per round (the iterative-loop discipline — the Catalyst tree
-  * otherwise doubles per round); the node set and edge frame are built
-  * once with `GraftShims.cachedCut`. For power-law hubs the
+  * their label via the closing left join. Rounds run on
+  * [[graft.Blocks.rounds]]; the node set and edge frame are built once
+  * with `GraftShims.cachedCut`. For power-law hubs the
   * contribution join admits the same salting as PageRank
   * (`Skew.saltedJoin`) — pass `saltBuckets` > 1.
   */
@@ -48,20 +47,14 @@ object LabelProp {
     val e = GraftShims.cachedCut(
       edges.select(col(srcCol).as("node"), col(dstCol).as("__dst")))
     var labels = nodes.withColumn("label", col("node"))
-    var prev: DataFrame = null
-    // per-round broadcast hygiene — see [[PageRank.run]]
-    val bcScope = graft.Blocks.loopBroadcastScope(edges.sparkSession)
+    val loop = graft.Blocks.rounds(edges.sparkSession)
     for (_ <- 1 to rounds) {
-      bcScope.roundStart()
       // neighbor labels arrive by joining each edge's dst against the
-      // snapshot; the vote is per (voting node, label)
-      val joined =
-        if (saltBuckets <= 1)
-          e.join(labels.select(col("node").as("__dst"), col("label")), Seq("__dst"))
-        else Skew.saltedJoin(
-          e.select(col("__dst").as("node"), col("node").as("__voter")),
-          labels, "node", saltBuckets, saltFrom = Some("__voter"))
-          .select(col("__voter").as("node"), col("label"))
+      // snapshot; the vote is per (voting node, label), and a salted
+      // join takes its salt from the voter
+      val joined = Skew.saltedJoin(e,
+        labels.select(col("node").as("__dst"), col("label")), "__dst",
+        saltBuckets, saltFrom = Some("node"))
       // ONE exchange by node: hash(node) satisfies the (node, label)
       // grouping (subset rule) AND the argmax window's partitioning —
       // a plain groupBy(node, label) would partition on the pair and
@@ -74,14 +67,9 @@ object LabelProp {
       val best = votes.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("node"), col("label").as("__newLab"))
-      val next = labels.join(best, Seq("node"), "left")
+      labels = loop.advance(labels.join(best, Seq("node"), "left")
         .select(col("node"),
-          coalesce(col("__newLab"), col("label")).as("label"))
-      val cut = GraftShims.cachedCut(next)
-      if (prev != null) prev.unpersist(blocking = false)
-      bcScope.roundEnd()
-      prev = cut
-      labels = cut
+          coalesce(col("__newLab"), col("label")).as("label")))
     }
     nodes.unpersist(blocking = false)
     e.unpersist(blocking = false)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftShims}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 
 /** Power-iteration PageRank over an edge list — the classic iterative
@@ -23,11 +23,8 @@ import org.apache.spark.sql.functions._
   * dst) + a broadcast-friendly left join back to the node set; the
   * node set and the edge×degree join are built once with
   * `GraftShims.cachedCut`, so rounds read them at their adaptive
-  * partition count. Lineage is re-rooted every round (the naive loop's
-  * Catalyst tree doubles per iteration — the q66 OOM lesson), and the
-  * previous round's block is released as soon as the next is
-  * materialized: peak memory is 2 rank tables, O(nodes), regardless of
-  * round count.
+  * partition count. Rounds run on [[graft.Blocks.rounds]]: peak memory
+  * is 2 rank tables, O(nodes), regardless of round count.
   *
   * Determinism: per-round sums are fp-order-dependent only in the last
   * ulps; callers that need engine-portable output round the final ranks
@@ -63,68 +60,11 @@ object PageRank {
     val nodes = GraftShims.cachedCut(edges.select(col(srcCol).as("node"))
       .union(edges.select(col(dstCol).as("node"))).distinct(), eager = false)
     val n = nodes.count()
-    val deg = edges.groupBy(col(srcCol).as("node"))
-      .agg(count(lit(1)).as("__deg"))
-    val edgeDeg = GraftShims.cachedCut(
-      edges.select(col(srcCol).as("node"), col(dstCol).as("__dst"))
-        .join(deg, Seq("node")))
-    // dangling = no out-edges: computed ONCE (anti-join on the degree
-    // table), cut, reused by the per-round mass sum
-    val dangling =
-      if (!redistributeDangling) null
-      else GraftShims.cachedCut(nodes.join(deg, Seq("node"), "left_anti"))
-    val base = (1.0 - damping) / n
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    var prev: DataFrame = null
-    // per-round broadcast hygiene: round R−1's exchange broadcasts are
-    // provably dead once round R's cut is materialized — release them
-    // instead of pinning ~40 blocks/run to the end-of-query reset
-    val bcScope = graft.Blocks.loopBroadcastScope(edges.sparkSession)
-    for (_ <- 1 to iters) {
-      bcScope.roundStart()
-      // dangling mass as a ONE-ROW broadcast subtree instead of a
-      // per-round collect: same sum over the same cached tables, but it
-      // rides the round's single materializing job (one action per
-      // round, not two — the r16 job-count trim; arithmetic unchanged:
-      // Σ rank over dangling, then /n, then added per row)
-      val mass =
-        if (dangling == null) null
-        else ranks.join(dangling.select(col("node")), Seq("node"))
-          .agg((sum(col("rank")) / n).as("__mn"))
-      val joined =
-        if (saltBuckets <= 1) edgeDeg.join(ranks, Seq("node"))
-        else Skew.saltedJoin(edgeDeg, ranks, "node", saltBuckets,
-          saltFrom = Some("__dst"))
-      val sums =
-        if (saltBuckets <= 1)
-          joined.groupBy(col("__dst").as("node"))
-            .agg(sum(col("rank") / col("__deg")).as("__c"))
-        else joined
-          .withColumn("__s2", pmod(xxhash64(col("node")), lit(saltBuckets)))
-          .groupBy(col("__dst").as("node"), col("__s2"))
-          .agg(sum(col("rank") / col("__deg")).as("__cp"))
-          .groupBy(col("node"))
-          .agg(sum(col("__cp")).as("__c"))
-      // the non-dangling path keeps its exact pre-option expression tree
-      // (q106/q190 oracle parity is byte-level on the rounded output)
-      val contrib =
-        if (dangling == null) coalesce(col("__c"), lit(0.0))
-        else coalesce(col("__c"), lit(0.0)) + coalesce(col("__mn"), lit(0.0))
-      val joinedNodes = nodes.join(sums, Seq("node"), "left")
-      val next = (if (dangling == null) joinedNodes
-        else joinedNodes.crossJoin(broadcast(mass)))
-        .select(col("node"),
-          (lit(base) + lit(damping) * contrib).as("rank"))
-      val cut = GraftShims.cachedCut(next)
-      if (prev != null) prev.unpersist(blocking = false)
-      bcScope.roundEnd()
-      prev = cut
-      ranks = cut
-    }
-    nodes.unpersist(blocking = false)
-    edgeDeg.unpersist(blocking = false)
-    if (dangling != null) dangling.unpersist(blocking = false)
-    ranks
+    iterate(edges, srcCol, dstCol, nodes, nodes.withColumn("rank", lit(1.0 / n)),
+      iters, damping, saltBuckets, redistributeDangling,
+      teleport = lit((1.0 - damping) / n),
+      massAgg = (sum(col("rank")) / n).as("__mn"),
+      massShare = coalesce(col("__mn"), lit(0.0)))
   }
 
   /** Personalized PageRank (random walk with restart to a SEED set —
@@ -156,56 +96,59 @@ object PageRank {
       .join(seedSet.withColumn("__isSeed", lit(true)), Seq("node"), "left")
       .select(col("node"),
         when(col("__isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("__s")))
+    // dangling mass teleports to the SEED distribution (the walk
+    // restarts from s when it hits a sink — the standard PPR treatment)
+    iterate(edges, srcCol, dstCol, nodes, nodes.select(col("node"), col("__s").as("rank")),
+      iters, damping, saltBuckets, redistributeDangling,
+      teleport = (lit(1.0) - damping) * col("__s"),
+      massAgg = sum(col("rank")).as("__mm"),
+      massShare = coalesce(col("__mm"), lit(0.0)) * col("__s"))
+  }
+
+  /** The power iteration [[run]] and [[personalized]] share, from the
+    * cut node set `nodes` (released here) and the start ranks. The two
+    * differ only in three terms, each resolved against the round's
+    * node ⋈ sums (⋈ mass) frame: `teleport`, the per-row restart mass;
+    * `massAgg`, the one-row dangling-mass aggregate over the dangling
+    * nodes' ranks; and `massShare`, a node's share of that mass. Each
+    * path's rank expression tree is exactly its pre-merge one (q106/q190
+    * oracle parity is byte-level on the rounded output).
+    */
+  private def iterate(edges: DataFrame, srcCol: String, dstCol: String,
+                      nodes: DataFrame, start: DataFrame, iters: Int,
+                      damping: Double, saltBuckets: Int,
+                      redistributeDangling: Boolean, teleport: Column,
+                      massAgg: Column, massShare: Column): DataFrame = {
     val deg = edges.groupBy(col(srcCol).as("node"))
       .agg(count(lit(1)).as("__deg"))
     val edgeDeg = GraftShims.cachedCut(
       edges.select(col(srcCol).as("node"), col(dstCol).as("__dst"))
         .join(deg, Seq("node")))
-    // dangling mass teleports to the SEED distribution (the walk
-    // restarts from s when it hits a sink — the standard PPR treatment)
+    // dangling = no out-edges: computed ONCE (anti-join on the degree
+    // table), cut, reused by the per-round mass sum
     val dangling =
       if (!redistributeDangling) null
-      else GraftShims.cachedCut(nodes.select(col("node"), col("__s"))
-        .join(deg, Seq("node"), "left_anti"))
-    var ranks = nodes.select(col("node"), col("__s").as("rank"))
-    var prev: DataFrame = null
-    val bcScope = graft.Blocks.loopBroadcastScope(edges.sparkSession)
+      else GraftShims.cachedCut(nodes.join(deg, Seq("node"), "left_anti"))
+    var ranks = start
+    val loop = graft.Blocks.rounds(edges.sparkSession)
     for (_ <- 1 to iters) {
-      bcScope.roundStart()
-      // dangling mass folded into the round's single job (see [[run]])
-      val mass =
-        if (dangling == null) null
-        else ranks.join(dangling.select(col("node")), Seq("node"))
-          .agg(sum(col("rank")).as("__mm"))
-      val joined =
-        if (saltBuckets <= 1) edgeDeg.join(ranks, Seq("node"))
-        else Skew.saltedJoin(edgeDeg, ranks, "node", saltBuckets,
-          saltFrom = Some("__dst"))
-      val sums =
-        if (saltBuckets <= 1)
-          joined.groupBy(col("__dst").as("node"))
-            .agg(sum(col("rank") / col("__deg")).as("__c"))
-        else joined
-          .withColumn("__s2", pmod(xxhash64(col("node")), lit(saltBuckets)))
-          .groupBy(col("__dst").as("node"), col("__s2"))
-          .agg(sum(col("rank") / col("__deg")).as("__cp"))
-          .groupBy(col("node"))
-          .agg(sum(col("__cp")).as("__c"))
-      val contrib =
-        if (dangling == null) coalesce(col("__c"), lit(0.0))
-        else coalesce(col("__c"), lit(0.0)) +
-          coalesce(col("__mm"), lit(0.0)) * col("__s")
+      val joined = Skew.saltedJoin(edgeDeg, ranks, "node", saltBuckets,
+        saltFrom = Some("__dst"))
+      val sums = Skew.sumBy(joined, "__dst", "node", col("rank") / col("__deg"),
+        "__c", saltBuckets, saltFrom = "node")
       val joinedNodes = nodes.join(sums, Seq("node"), "left")
-      val next = (if (dangling == null) joinedNodes
-        else joinedNodes.crossJoin(broadcast(mass)))
-        .select(col("node"),
-          ((lit(1.0) - damping) * col("__s") +
-            lit(damping) * contrib).as("rank"))
-      val cut = GraftShims.cachedCut(next)
-      if (prev != null) prev.unpersist(blocking = false)
-      bcScope.roundEnd()
-      prev = cut
-      ranks = cut
+      // dangling mass as a ONE-ROW broadcast subtree instead of a
+      // per-round collect: same sum over the same cached tables, but it
+      // rides the round's single materializing job (one action per
+      // round, not two — the r16 job-count trim). The non-dangling path
+      // keeps its exact pre-option expression tree.
+      val (frame, contrib) =
+        if (dangling == null) (joinedNodes, coalesce(col("__c"), lit(0.0)))
+        else (joinedNodes.crossJoin(broadcast(
+            ranks.join(dangling.select(col("node")), Seq("node")).agg(massAgg))),
+          coalesce(col("__c"), lit(0.0)) + massShare)
+      ranks = loop.advance(frame.select(col("node"),
+        (teleport + lit(damping) * contrib).as("rank")))
     }
     nodes.unpersist(blocking = false)
     edgeDeg.unpersist(blocking = false)

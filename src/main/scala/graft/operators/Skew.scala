@@ -36,14 +36,20 @@ object Skew {
   private def saltExpr(buckets: Int, saltFrom: Option[String]): Column =
     pmod(xxhash64(saltFrom.fold(monotonically_increasing_id())(col)), lit(buckets))
 
+  /** The one salted partial stage: `aggs` per (keys, salt) group. */
+  private def saltedStage(df: DataFrame, keys: Seq[Column], buckets: Int,
+      saltFrom: Option[String])(agg: Column, aggs: Column*): DataFrame =
+    df.withColumn("__salt", saltExpr(buckets, saltFrom))
+      .groupBy((keys :+ col("__salt")): _*)
+      .agg(agg, aggs: _*)
+
   /** The salted partial stage of [[saltedSum]], exposed so tests can
     * assert the salt actually spreads a hot key across buckets.
     */
   private[graft] def saltedPartial(df: DataFrame, keys: Seq[String], valueCol: String,
       buckets: Int, saltFrom: Option[String] = None): DataFrame =
-    df.withColumn("__salt", saltExpr(buckets, saltFrom))
-      .groupBy((keys.map(col) :+ col("__salt")): _*)
-      .agg(sum(col(valueCol)).as("__s"), count(lit(1)).as("__c"))
+    saltedStage(df, keys.map(col), buckets, saltFrom)(
+      sum(col(valueCol)).as("__s"), count(lit(1)).as("__c"))
 
   def saltedSum(df: DataFrame, keys: Seq[String], valueCol: String, buckets: Int,
       saltFrom: Option[String] = None): DataFrame =
@@ -51,6 +57,20 @@ object Skew {
       .groupBy(keys.map(col): _*)
       .agg(sum(col("__s")).as("sum_value"), sum(col("__c")).as("n"))
       .withColumn("avg_value", col("sum_value") / col("n"))
+
+  /** `(as, out)`: the sum of `value` per `key` (renamed `as`). At one
+    * bucket this is the plain `groupBy(key).agg(sum)`; above it the sum
+    * runs two-phase, partial per (key, salt from `saltFrom`), final per
+    * key, so a hot key's reduce-side group is bounded even when
+    * map-side partial aggregation degrades. The salted sum reorders fp
+    * addition: compare rounded results.
+    */
+  private[operators] def sumBy(df: DataFrame, key: String, as: String, value: Column,
+      out: String, buckets: Int, saltFrom: String): DataFrame =
+    if (buckets <= 1) df.groupBy(col(key).as(as)).agg(sum(value).as(out))
+    else saltedStage(df, Seq(col(key).as(as)), buckets, Some(saltFrom))(
+        sum(value).as("__s"))
+      .groupBy(col(as)).agg(sum(col("__s")).as(out))
 
   /** Skew DIAGNOSTIC — the measurement half of this module (salting is
     * the cure; this tells you whether, and on which keys, you need it):
@@ -128,12 +148,15 @@ object Skew {
   /** Salted join for a skewed left key: left rows get a salt in
     * [0, buckets), the (small) right side is exploded `buckets`× so every
     * salted left row still finds its match. Right side must be the small
-    * side — its blowup is the price of splitting the hot key.
+    * side — its blowup is the price of splitting the hot key. At one
+    * bucket this is the plain equi-join on `key`.
     */
   def saltedJoin(left: DataFrame, right: DataFrame, key: String, buckets: Int,
-      saltFrom: Option[String] = None): DataFrame = {
-    val l = left.withColumn("__salt", saltExpr(buckets, saltFrom))
-    val r = right.withColumn("__salt", explode(sequence(lit(0L), lit(buckets.toLong - 1))))
-    l.join(r, Seq(key, "__salt")).drop("__salt")
-  }
+      saltFrom: Option[String] = None): DataFrame =
+    if (buckets <= 1) left.join(right, Seq(key))
+    else {
+      val l = left.withColumn("__salt", saltExpr(buckets, saltFrom))
+      val r = right.withColumn("__salt", explode(sequence(lit(0L), lit(buckets.toLong - 1))))
+      l.join(r, Seq(key, "__salt")).drop("__salt")
+    }
 }

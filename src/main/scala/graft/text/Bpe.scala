@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Byte-pair-encoding merge training over the corpus — the actual
   * tokenizer-training loop of the GPT-2/LLaMA lineage (Sennrich et al.
@@ -16,11 +15,12 @@ import org.apache.spark.storage.StorageLevel
   * standard trainer trick), so a round costs one explode + keyed
   * aggregation over vocab plus a 1-row driver action (the argmax). The
   * symbol rewrite is a per-word Catalyst fold (left-to-right greedy,
-  * the BPE application order); lineage is re-rooted every round so k
-  * rounds never stack k plans. Production trainers run 30k+ merges and
-  * update pair counts incrementally (only words containing the merged
-  * pair change) — the recount here is the clear-correctness form; its
-  * per-round cost is O(|vocab|·avg_len), corpus-independent.
+  * the BPE application order); rounds run on [[graft.Blocks.rounds]],
+  * seeded with the vocabulary, so k rounds never stack k plans.
+  * Production trainers run 30k+ merges and update pair counts
+  * incrementally (only words containing the merged pair change) — the
+  * recount here is the clear-correctness form; its per-round cost is
+  * O(|vocab|·avg_len), corpus-independent.
   *
   * Determinism: ties on pair count break lexicographically, so the
   * merge table is stable across partitionings and engines.
@@ -35,21 +35,17 @@ object Bpe {
     require(numMerges >= 1, s"need numMerges >= 1, got $numMerges")
     val spark = docs.sparkSession
     import TextStats.tokens
+    val loop = graft.Blocks.rounds(spark)
     // the initial vocab agg explodes every token and char-splits every
     // word in the scan task — spread an under-parallel scan (guide §2.2)
-    var vocab = graft.Tables.spread(docs, textCol)
+    var vocab = loop.advance(graft.Tables.spread(docs, textCol)
       .select(explode(tokens(col(textCol))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(split(col("w"), "").as("syms"), col("cnt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    vocab.count()
+      .select(split(col("w"), "").as("syms"), col("cnt")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var exhausted = false
-    // per-round broadcast hygiene — see [[graft.operators.PageRank.run]]
-    val bcScope = graft.Blocks.loopBroadcastScope(spark)
     while (merges.size < numMerges && !exhausted) {
-      bcScope.roundStart()
       // adjacent pair counts: position-explode with the pair read AFTER
       // the Generate (the InferFiltersFromGenerate discipline)
       val top = vocab.filter(size(col("syms")) >= 2)
@@ -72,14 +68,10 @@ object Bpe {
             get(acc, size(acc) - 1) === lit(l) && x === lit(r),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
             .otherwise(concat(acc, array(x))))
-        val next = vocab.select(fused.as("syms"), col("cnt"))
-        val cut = org.apache.spark.sql.GraftShims.cachedCut(next)
-        vocab.unpersist(blocking = false)
-        bcScope.roundEnd()
-        vocab = cut
+        vocab = loop.advance(vocab.select(fused.as("syms"), col("cnt")))
       }
     }
-    vocab.unpersist(blocking = false)
+    loop.close()
     val rows = merges.toSeq.zipWithIndex.map { case ((l, r), i) =>
       Row(i.toLong, l, r)
     }

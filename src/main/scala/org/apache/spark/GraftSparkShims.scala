@@ -45,7 +45,7 @@ object GraftSparkShims {
 
   /** Ids of every broadcast currently holding blocks — the snapshot half
     * of the SCOPED release an iterative loop needs (see
-    * [[graft.Blocks.LoopBroadcastScope]]): `dropAllBroadcastBlocks` is
+    * [[graft.Blocks.Rounds]]): `dropAllBroadcastBlocks` is
     * only safe between queries, but a 20-round loop pins every round's
     * per-round broadcasts (contribution sums, dangling-mass one-rows)
     * until the end-of-query reset — ~40 blocks / ~135 MB per PageRank

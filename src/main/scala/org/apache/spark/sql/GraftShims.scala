@@ -63,9 +63,9 @@ object GraftShims {
     * time (stage-by-stage re-optimization), so only the final stage is
     * actually deferred to the caller's action. The cut is persisted
     * MEMORY_AND_DISK as a normal cached Dataset — the caller owns its
-    * `unpersist`, exactly like the pattern it replaces — unlike
-    * `localCheckpoint`, whose block handle is unreachable and whose
-    * blocks a loop would leak until the session-level reset.
+    * `unpersist` ([[graft.Blocks.Rounds]] owns it for every loop's round
+    * cuts) — unlike `localCheckpoint`, whose block handle is unreachable
+    * and whose blocks a loop would leak until the session-level reset.
     *
     * The graph loops also build their loop-invariant inputs (edge
     * frames, node sets) with it instead of `persist` + `count`. Spark
@@ -84,7 +84,7 @@ object GraftShims {
     // with ACTUAL size statistics (losing them demotes downstream
     // broadcast joins to sort-merge — measured on q66/q69's final
     // comps⋈docs join) and (b) keeps the usual persist/unpersist
-    // lifecycle the loop callers already have.
+    // lifecycle, which graft.Blocks.Rounds runs for the loops.
     val rdd = ds.queryExecution.toRdd.map(_.copy())
     val plan = execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
     val cut = classic.Dataset.ofRows(ds.sparkSession, plan)

@@ -8,42 +8,42 @@ class OperatorEdgeSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  test("LoopBroadcastScope drops earlier rounds' broadcasts, keeps pre-loop and current ones") {
+  test("Blocks.rounds drops earlier rounds' broadcasts and cuts, keeps pre-loop and current ones") {
     import org.apache.spark.GraftSparkShims
+    import org.apache.spark.storage.StorageLevel
     val sc = spark.sparkContext
     def bids() = GraftSparkShims.broadcastIds(sc)
-    def bcastAction(): Set[Long] = {
-      // force a fresh BroadcastExchange: a join whose build side is an
-      // explicit broadcast() over a derived (non-reusable) frame
-      val n = scala.util.Random.nextInt(1000000)
-      val big = spark.range(2000).toDF("id")
-      val small = spark.range(5).toDF("id").withColumn("x", lit(n))
-      val pre = bids()
-      big.join(broadcast(small), "id").count()
-      bids() -- pre
-    }
-    val preLoop = bcastAction() // a broadcast alive BEFORE the scope
-    assert(preLoop.nonEmpty, "test harness: no broadcast created")
-    val scope = Blocks.loopBroadcastScope(spark)
-    scope.roundStart()
-    val round1 = bcastAction()
-    assert(round1.nonEmpty)
-    // base exclusion: pre-loop broadcasts are NEVER the scope's to drop
-    // (asserted via the drop COUNT, not block presence — the
-    // ContextCleaner may reap unreachable broadcasts on its own at any
-    // GC, so absolute block-state assertions are inherently racy)
-    assert(scope.roundEnd() == 0, "round 1 must drop nothing")
-    scope.roundStart()
-    val round2 = bcastAction()
-    val dropped = scope.roundEnd()
-    assert(dropped >= round1.size, s"round 2 should drop round 1's (${round1.size}), dropped $dropped")
-    // the current round's broadcasts were not selected for the drop
-    assert(round2.subsetOf(bids()), "current round's broadcasts must survive roundEnd")
-    // removal is non-blocking: poll briefly for round 1's blocks to go
-    val deadline = System.currentTimeMillis() + 10000
-    while (bids().intersect(round1).nonEmpty && System.currentTimeMillis() < deadline)
-      Thread.sleep(100)
-    assert(bids().intersect(round1).isEmpty, "round 1 broadcasts must be gone")
+    // a frame whose cut runs a fresh BroadcastExchange: a join whose
+    // build side is an explicit broadcast() over a derived frame
+    def bcastFrame() = spark.range(2000).toDF("id").join(broadcast(
+      spark.range(5).toDF("id").withColumn("x", lit(scala.util.Random.nextInt(1000000)))), "id")
+    // a broadcast from before the loop, held live so that nothing but
+    // Rounds could drop it
+    val held = sc.broadcast(Array.fill(16)(1L))
+    try {
+      assert(bids().contains(held.id), "test harness: held broadcast has no blocks")
+      val loop = Blocks.rounds(spark)
+      val pre1 = bids()
+      val cut1 = loop.advance(bcastFrame())
+      val round1 = bids() -- pre1
+      assert(round1.nonEmpty, "test harness: round 1 created no broadcast")
+      val pre2 = bids()
+      val cut2 = loop.advance(bcastFrame())
+      val round2 = bids() -- pre2
+      assert(round2.nonEmpty, "test harness: round 2 created no broadcast")
+      assert(round2.subsetOf(bids()), "the current round's broadcasts must survive")
+      // removal is non-blocking: poll briefly for round 1's blocks to go
+      val deadline = System.currentTimeMillis() + 10000
+      while (bids().intersect(round1).nonEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      assert(bids().intersect(round1).isEmpty, "round 1's broadcasts must be gone")
+      assert(bids().contains(held.id), "a broadcast from before the loop is never dropped")
+      assert(cut1.storageLevel == StorageLevel.NONE, "round 2 releases round 1's cut")
+      assert(cut2.storageLevel != StorageLevel.NONE, "the last cut stays until close")
+      assert(cut2.count() == 5L)
+      loop.close()
+      assert(cut2.storageLevel == StorageLevel.NONE, "close releases the last cut")
+    } finally held.destroy()
   }
 
   test("Tables.spread refuses a shuffled input and passes a parallel scan unchanged") {
@@ -4767,6 +4767,38 @@ class OperatorEdgeSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(t3.size == 9 && !t3.contains((6L, 7L)),
       s"3-truss keeps both triangle structures, drops the dangler: $t3")
+  }
+
+  test("KTruss: each peel round runs one count, and the fixpoint reads its own cut") {
+    // the hand graph above; k = 3 peels the dangler then stops, k = 4
+    // peels the triangle and the dangler, then stops
+    val edges = Seq((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
+      (4, 5), (5, 6), (4, 6), (6, 7))
+      .map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
+    val sc = spark.sparkContext
+    def jobs(k: Int): (Int, Int) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          n.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      val truss = try {
+        val out = operators.KTruss.truss(edges, "src", "dst", k = k, maxPeels = 3)
+        org.apache.spark.ListenerBusDrain(sc)
+        out
+      } finally sc.removeSparkListener(listener)
+      (n.get, truss.collect().length)
+    }
+    for ((k, size) <- Seq(3 -> 9, 4 -> 6)) {
+      val (launched, rows) = jobs(k)
+      info(s"k = $k: $launched jobs")
+      assert(rows == size, s"k = $k: $rows edges")
+      // one count per peel round takes 46 jobs here; three took 54
+      assert(launched < 50, s"k = $k: $launched jobs")
+    }
   }
 
   test("markovEntropy: corridor state H=0, hub state ln 2, tie breaks ascending") {
