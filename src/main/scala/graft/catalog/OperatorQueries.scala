@@ -929,7 +929,7 @@ private[graft] object OperatorQueries {
     Query("q178_skew_report", (s, dir) =>
       // the measurement half of the salting module: top-10 heaviest
       // users with share and skew factor — the "which keys die at 100x"
-      // readout that picks saltedAgg/saltedJoin targets
+      // readout that picks saltedSum/saltedJoin targets
       operators.Skew.skewReport(Tables.events(s, dir), Seq("user_id"),
           topN = 10)
         .orderBy(col("rank")),

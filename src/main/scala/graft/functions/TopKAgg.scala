@@ -48,60 +48,20 @@ case class TopKAgg(
 
   override def createAggregationBuffer(): Buf = new Buf(k)
 
-  // total order on (score, id) with the window's null/NaN placement:
-  // returns negative when (s1, id1) ranks BEFORE (s2, id2). Spark's
-  // sort runs NormalizeFloatingNumbers over the key, so -0.0 and 0.0
-  // ARE equal there (tie → id) — normalize before Double.compare
-  // (which would otherwise order -0.0 < 0.0); NaN==NaN is already a
-  // tie under Double.compare, matching the normalized single-NaN key.
-  // NULL ids rank like the window's `id asc` tie-break does: NULLS
-  // FIRST among equal scores (r17, the advisor's null-id finding — the
-  // previous form silently DROPPED null-id rows the window ranks).
-  private def cmp(n1: Boolean, s1: Double, in1: Boolean, id1: Long,
-      n2: Boolean, s2: Double, in2: Boolean, id2: Long): Int = {
-    val c =
-      if (n1 && n2) 0
-      else if (n1) { if (asc) -1 else 1 } // null: first when asc, last when desc
-      else if (n2) { if (asc) 1 else -1 }
-      else {
-        val x1 = if (s1 == 0.0) 0.0 else s1
-        val x2 = if (s2 == 0.0) 0.0 else s2
-        val d = java.lang.Double.compare(x1, x2)
-        if (asc) d else -d
-      }
-    if (c != 0) c
-    else if (in1 && in2) 0
-    else if (in1) -1 // id asc ⇒ NULLS FIRST on the tie-break
-    else if (in2) 1
-    else java.lang.Long.compare(id1, id2)
-  }
-
   override def update(buf: Buf, input: InternalRow): Buf = {
     val sv = score.eval(input)
     val iv = id.eval(input)
     val isNull = sv == null
     val s = if (isNull) 0.0 else sv.asInstanceOf[Double]
-    if (iv == null) insert(buf, isNull, s, idNul = true, 0L)
-    else insert(buf, isNull, s, idNul = false, iv.asInstanceOf[Long])
+    if (iv == null) buf.offer(asc, isNull, s, idNul = true, 0L)
+    else buf.offer(asc, isNull, s, idNul = false, iv.asInstanceOf[Long])
     buf
-  }
-
-  private def insert(buf: Buf, isNull: Boolean, s: Double, idNul: Boolean, i: Long): Unit = {
-    val n = buf.size
-    if (n == k && cmp(isNull, s, idNul, i,
-      buf.nul(n - 1), buf.score(n - 1), buf.idNul(n - 1), buf.id(n - 1)) >= 0) return
-    // find insertion point (linear — k is tiny and rows mostly lose at
-    // the last slot after the buffer warms up)
-    var pos = n
-    while (pos > 0 && cmp(isNull, s, idNul, i,
-      buf.nul(pos - 1), buf.score(pos - 1), buf.idNul(pos - 1), buf.id(pos - 1)) < 0) pos -= 1
-    buf.insertAt(pos, isNull, s, idNul, i, k)
   }
 
   override def merge(a: Buf, b: Buf): Buf = {
     var j = 0
     while (j < b.size) {
-      insert(a, b.nul(j), b.score(j), b.idNul(j), b.id(j))
+      a.offer(asc, b.nul(j), b.score(j), b.idNul(j), b.id(j))
       j += 1
     }
     a
@@ -142,7 +102,7 @@ case class TopKAgg(
       val flags = bb.get()
       val s = bb.getDouble
       val i = bb.getLong
-      buf.insertAt(j, (flags & 1) != 0, s, (flags & 2) != 0, i, k)
+      buf.insertAt(j, (flags & 1) != 0, s, (flags & 2) != 0, i)
       j += 1
     }
     buf
@@ -166,7 +126,39 @@ case class TopKAgg(
 
 object TopKAgg {
 
-  /** k-bounded rank-ordered buffer: parallel arrays + size. */
+  /** Total order on (score, id) with the window's null/NaN placement:
+    * negative when (s1, id1) ranks BEFORE (s2, id2). Spark's sort runs
+    * NormalizeFloatingNumbers over the key, so -0.0 and 0.0 ARE equal
+    * there (tie → id) — normalize before Double.compare (which would
+    * otherwise order -0.0 < 0.0); NaN==NaN is already a tie under
+    * Double.compare, matching the normalized single-NaN key. NULL ids
+    * rank like the window's `id asc` tie-break does: NULLS FIRST among
+    * equal scores (r17, the advisor's null-id finding — the previous
+    * form silently DROPPED null-id rows the window ranks).
+    */
+  private def cmp(asc: Boolean, n1: Boolean, s1: Double, in1: Boolean, id1: Long,
+      n2: Boolean, s2: Double, in2: Boolean, id2: Long): Int = {
+    val c =
+      if (n1 && n2) 0
+      else if (n1) { if (asc) -1 else 1 } // null: first when asc, last when desc
+      else if (n2) { if (asc) 1 else -1 }
+      else {
+        val x1 = if (s1 == 0.0) 0.0 else s1
+        val x2 = if (s2 == 0.0) 0.0 else s2
+        val d = java.lang.Double.compare(x1, x2)
+        if (asc) d else -d
+      }
+    if (c != 0) c
+    else if (in1 && in2) 0
+    else if (in1) -1 // id asc ⇒ NULLS FIRST on the tie-break
+    else if (in2) 1
+    else java.lang.Long.compare(id1, id2)
+  }
+
+  /** k-bounded rank-ordered buffer: parallel arrays + size. [[TopKAgg]]
+    * and the exact top-k kernel ([[graft.plans.ExactTopKExec]]) both
+    * rank through [[offer]].
+    */
   final class Buf(k: Int) {
     private[TopKAgg] val scores = new Array[Double](k)
     private[TopKAgg] val ids = new Array[Long](k)
@@ -177,9 +169,25 @@ object TopKAgg {
     def id(j: Int): Long = ids(j)
     def nul(j: Int): Boolean = nulls(j)
     def idNul(j: Int): Boolean = idNulls(j)
+
+    /** Keep (score, id) if it ranks among the k best seen so far under
+      * [[cmp]] (`asc` = keep the smallest). A candidate that ties the
+      * current k-th is dropped.
+      */
+    def offer(asc: Boolean, isNull: Boolean, s: Double, idNul: Boolean, i: Long): Unit = {
+      val n = size
+      if (n == k && cmp(asc, isNull, s, idNul, i,
+        nulls(n - 1), scores(n - 1), idNulls(n - 1), ids(n - 1)) >= 0) return
+      // find insertion point (linear — k is tiny and rows mostly lose at
+      // the last slot after the buffer warms up)
+      var pos = n
+      while (pos > 0 && cmp(asc, isNull, s, idNul, i,
+        nulls(pos - 1), scores(pos - 1), idNulls(pos - 1), ids(pos - 1)) < 0) pos -= 1
+      insertAt(pos, isNull, s, idNul, i)
+    }
+
     /** shift [pos, size) right by one (dropping overflow) and write. */
-    def insertAt(pos: Int, isNull: Boolean, s: Double, idNul: Boolean,
-        i: Long, k: Int): Unit = {
+    def insertAt(pos: Int, isNull: Boolean, s: Double, idNul: Boolean, i: Long): Unit = {
       if (pos >= k) return
       val last = math.min(size, k - 1)
       var j = last

@@ -11,15 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Two-phase (salted) aggregation: a deterministic salt spreads each
-    * key over `buckets` partial groups, which are then merged. Use when a
-    * single group's rows exceed an executor partition. The partial
-    * aggregate is the map-side combine Catalyst already does — salting
-    * additionally bounds the *reduce-side* group size.
-    *
-    * sumCols/countCols are re-aggregated correctly; avg is derived from
-    * sum/count rather than averaged-of-averages.
-    */
   /** Salt expression in [0, buckets). Prefer `saltFrom = Some(uniqueCol)`
     * — a deterministic row key (event id, primary key) makes the partial
     * stage reproducible under task retry / stage recomputation. With no
@@ -51,6 +42,15 @@ object Skew {
     saltedStage(df, keys.map(col), buckets, saltFrom)(
       sum(col(valueCol)).as("__s"), count(lit(1)).as("__c"))
 
+  /** Two-phase (salted) aggregation: a deterministic salt spreads each
+    * key over `buckets` partial groups, which are then merged. Use when a
+    * single group's rows exceed an executor partition. The partial
+    * aggregate is the map-side combine Catalyst already does — salting
+    * additionally bounds the *reduce-side* group size.
+    *
+    * The partial sums and counts are re-aggregated; `avg_value` is
+    * derived from the merged sum/count rather than averaged-of-averages.
+    */
   def saltedSum(df: DataFrame, keys: Seq[String], valueCol: String, buckets: Int,
       saltFrom: Option[String] = None): DataFrame =
     saltedPartial(df, keys, valueCol, buckets, saltFrom)
@@ -78,7 +78,7 @@ object Skew {
     * and the skew factor `count / mean-rows-per-key`. A factor near 1
     * is uniform; ≫ 1 on the head key is the shuffle that dies at 100×
     * scale (one key > one task's memory) — feed exactly those keys to
-    * `saltedAgg`/`saltedJoin` buckets. One keyed count + one global
+    * `saltedSum`/`saltedJoin` buckets. One keyed count + one global
     * one-row agg (broadcast) + a top-N window over the per-key rows.
     */
   def skewReport(df: DataFrame, keys: Seq[String], topN: Int,

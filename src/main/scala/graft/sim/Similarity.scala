@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Embedding similarity search over an `array<float>` column.
   *
-  * All math is done in double via higher-order Catalyst expressions
-  * (`zip_with` + `aggregate`) so the DuckDB oracle can mirror the exact
-  * arithmetic (float32 accumulation would diverge engine-to-engine).
+  * All math is done in double through the native
+  * [[graft.functions.DotProduct]] expression (each product widened to
+  * double, summed left to right), so the DuckDB oracle can mirror the
+  * exact arithmetic (float32 accumulation would diverge
+  * engine-to-engine).
   *
   * Brute force is the small-candidate-set workhorse (and the oracle for
   * the approximate paths); [[LshAnn]] is the 100 TB path.
@@ -69,41 +71,57 @@ object Similarity {
 
   /** Exact top-k neighbors for each query vector, brute force.
     *
-    * The query side is expected to be small (it is broadcast); the corpus
-    * side streams. Ranking uses the *rounded* similarity plus an id
-    * tie-break so results are deterministic and oracle-stable.
-    * Cost: |queries| × |corpus| — at scale cap queries or use [[LshAnn]].
+    * Output (query_id, neighbor_id, cosine, rank): for each query, the k
+    * corpus rows with a different id ranked by
+    * `roundStable(cos, simDigits)` desc NULLS LAST, then neighbor id —
+    * deterministic and oracle-stable. Rows with a NULL id on either side
+    * are never scored; a NULL vector scores NULL.
+    *
+    * With Long ids on both sides and k ≤ 256 (every real caller) the
+    * pairs never become rows: [[graft.plans.ExactTopKExec]] streams the
+    * corpus partitions and takes the queries as a broadcast; each task
+    * holds the queries as one flat `double[]` plus their norms and one
+    * k-bounded buffer per query, |Q| × (d + k) slots, and emits its
+    * |Q| × k best candidates. [[graft.functions.TopKAgg]] merges those
+    * per query (map-side partial, then one exchange of k rows per query
+    * and partition). The plan stays lazy and visible to `explain` and
+    * AQE. Other id types and larger k (the q51 full ranking passes
+    * `Int.MaxValue`) score through a broadcast nested-loop join and a
+    * `row_number` window, which gives the same rows.
+    *
+    * The query side must be small: every task holds all of it. Cost:
+    * |queries| × |corpus| dot products — at scale cap the queries or use
+    * [[LshAnn]].
     */
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       simDigits: Int = 4): DataFrame = {
-    // Norms once per vector (not per pair) — the oracle precomputes them
-    // in a CTE the same way, so the arithmetic stays identical.
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-      norm(col(vecCol)).as("__qn"))
-    // the corpus is the STREAM side of the broadcast join: its scan
-    // partitioning bounds the |queries|×|corpus| scoring parallelism —
-    // spread an under-parallel scan (guide §2.2; no-op at scale)
-    val c = graft.Tables.spread(corpus, idCol)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-        norm(col(vecCol)).as("__cn"))
-    val sim = graft.functions.roundStable(
-      dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), simDigits)
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", sim)
-    // long-id corpora ride the bounded TopKAgg (map-side partial keeps
-    // k per query BEFORE the exchange — guide §2.3; the window form
-    // shuffles and sorts the whole |queries|×|corpus| frame). Bounded
-    // buffers need a small k: unbounded callers (k = Int.MaxValue, the
-    // q51 full-ranking truth) and exotic id types keep the window. Cap
-    // 256 (was 4096, r17 advisor note): the insertion buffer's update/
-    // merge is O(k) per row, so a near-cap k would regress vs the
-    // window's sort — every real caller uses k ≤ 64; larger k takes the
-    // window until someone needs a heap-based buffer.
-    import org.apache.spark.sql.types.LongType
-    if (k <= 256 && corpus.schema(idCol).dataType == LongType) {
-      scored.groupBy(col("query_id"))
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    // the corpus is the STREAM side: its scan partitioning bounds the
+    // |queries|×|corpus| scoring parallelism — spread an under-parallel
+    // scan (guide §2.2; no-op at scale)
+    val spread = graft.Tables.spread(corpus, idCol)
+    val longIds = corpus.schema(idCol).dataType == LongType &&
+      queries.schema(idCol).dataType == LongType
+    // cap 256 (r17 advisor note): a buffer offer is O(k) per pair, so a
+    // near-cap k would regress against the window's sort — every real
+    // caller uses k ≤ 64
+    if (k <= 256 && longIds) {
+      import org.apache.spark.sql.catalyst.expressions.AttributeReference
+      val c = spread.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
+        .queryExecution.analyzed
+      val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
+        .queryExecution.analyzed
+      val (cId, cVec) = (c.output(0), c.output(1))
+      val (qId, qVec) = (q.output(0), q.output(1))
+      val ansi = corpus.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+      val out = Seq(AttributeReference("query_id", LongType, qId.nullable)(),
+        AttributeReference("neighbor_id", LongType, cId.nullable)(),
+        AttributeReference("cosine", DoubleType)())
+      org.apache.spark.sql.GraftShims.ofRows(corpus.sparkSession,
+        graft.plans.ExactTopKLogical(c, q, cId, cVec, qId, qVec, k, simDigits, ansi, out))
+        .groupBy(col("query_id"))
         .agg(graft.functions.TopKAgg.topKMax(
           col("cosine"), col("neighbor_id"), k).as("__tk"))
         .select(col("query_id"), posexplode(col("__tk")).as(Seq("__p", "__e")))
@@ -111,9 +129,18 @@ object Similarity {
           col("__e").getField("score").as("cosine"),
           (col("__p") + 1).cast("long").as("rank"))
     } else {
+      // Norms once per vector (not per pair) — the oracle precomputes
+      // them in a CTE the same way, so the arithmetic stays identical.
+      val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
+        norm(col(vecCol)).as("__qn"))
+      val c = spread.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
+        norm(col(vecCol)).as("__cn"))
+      val sim = graft.functions.roundStable(
+        dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), simDigits)
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("cosine").desc, col("neighbor_id"))
-      scored
+      c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+        .withColumn("cosine", sim)
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= k)
         .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))

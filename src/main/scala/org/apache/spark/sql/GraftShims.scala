@@ -14,6 +14,9 @@ object GraftShims {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** Spark's DIVIDE_BY_ZERO error, as an ANSI `Divide` raises it. */
+  def divideByZeroError(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
   def hasOptimizerRule(spark: SparkSession, rule: AnyRef): Boolean =
     spark.asInstanceOf[classic.SparkSession].sessionState.optimizer
       .extendedOperatorOptimizationRules.exists(_ eq rule)

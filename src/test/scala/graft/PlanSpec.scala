@@ -38,9 +38,13 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q37 cosine top-k: query side broadcast, corpus not shuffled before join") {
-    val p = planOf("q37_cosine_topk")
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
-      s"queries must broadcast:\n$p")
+    // the scoring kernel's query child is the broadcast
+    val plan = SparkEntry.queries("q37_cosine_topk")(spark, sfDir).queryExecution.executedPlan
+    val kernels = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) { case e: plans.ExactTopKExec => e }
+    assert(kernels.size == 1 && kernels.head.queries.isInstanceOf[
+      org.apache.spark.sql.execution.exchange.BroadcastExchangeExec],
+      s"queries must broadcast into the kernel:\n$plan")
   }
 
   test("q04 IQR clip: AQE broadcasts the group bounds at runtime (no static hint)") {
