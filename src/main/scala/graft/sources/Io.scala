@@ -105,6 +105,16 @@ object Io {
       .option("batchsize", batchSize.toString)
       .jdbc(url, table, props)
 
+  /** Land one micro-batch's rows under `dir/batch=<batchId>`,
+    * overwriting that directory. Each batch owns its directory, so the
+    * replay `foreachBatch` may deliver after a crash rewrites it with the
+    * same rows instead of adding to it. Callers fix the bytes with their
+    * own `coalesce` / sort; readers take `spark.read.parquet(dir)` and
+    * get `batch` as a partition column.
+    */
+  def landBatch(df: DataFrame, dir: String, batchId: Long): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(s"$dir/batch=$batchId")
+
   /** Directory swap through the Hadoop FileSystem API (works on any
     * supported scheme — local, HDFS, s3a, …, unlike java.io/NIO which
     * silently see size 0 and then throw on non-local paths). Sequence:

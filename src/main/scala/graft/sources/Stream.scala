@@ -1,12 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types.StructType
 
-/** Message-bus streaming sources: the `readStream → options → binary
+/** Message-bus streaming sources — the `readStream → options → binary
   * key/value → typed projection` contract every bus connector (Kafka,
-  * Pulsar, Kinesis via their Spark connectors) shares.
+  * Pulsar, Kinesis via their Spark connectors) shares — and the one
+  * streaming sink, [[sink]].
   *
   * The raw frame a bus source emits is
   * `(key binary, value binary, timestamp, topic/partition/offset …)`;
@@ -56,4 +58,26 @@ object Stream {
     val kept = if (dropCorrupt) decoded.filter(col("v").isNotNull) else decoded
     kept.select(col("v.*"), col("ingest_ts"))
   }
+
+  /** The one streaming sink: run `batch` on every micro-batch of
+    * `stream`, checkpointed at `checkpoint`, in Append mode. Each stream
+    * in `graft.streaming` is a per-batch function
+    * (`HistStream.histBatch`, `DedupStream.dedupBatch`, …) that the
+    * catalog and backfills call directly; this starts the same function
+    * on a live stream, e.g.
+    * `Stream.sink(df, ck)(HistStream.histBatch(geom, _, _, "v", dir)).start()`.
+    *
+    * `foreachBatch` delivers at least once: after a crash the last batch
+    * id re-runs with the same rows, so every batch function is
+    * replay-idempotent (its own `batch=<id>` directory, a batch-id gate,
+    * or a monotone gate). The mode is Append: a stream without an
+    * aggregation emits each row once, as Update would, and a windowed
+    * aggregation fed here emits each window once its watermark closes.
+    */
+  def sink(stream: DataFrame, checkpoint: String)(
+      batch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(batch)
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming ingest × incremental aggregation — the continuously-
   * maintained summary: facts arrive as micro-batches, each batch folds
@@ -23,12 +22,18 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object AggStream {
 
-  /** One micro-batch's fold, exposed for direct (re)use and testing
-    * (the [[DedupStream.dedupBatch]] / [[DriftStream.driftBatch]]
-    * convention): gated append + optional compaction on the cadence.
-    * Idempotent under replay — `appendDelta`'s batch-id gate appends
-    * zero rows for a batch id already applied (before OR after a
-    * compaction: the marker table survives the fold).
+  /** One micro-batch's fold: gated append + optional compaction on the
+    * cadence. Stream it with [[graft.sources.Stream.sink]]. The state
+    * must exist — [[graft.etl.IncrementalAgg.writeState]] the historical
+    * facts first (an empty base is fine). Idempotent under replay —
+    * `appendDelta`'s batch-id gate appends zero rows for a batch id
+    * already applied (before OR after a compaction: the marker table
+    * survives the fold).
+    *
+    * `compactEvery` > 0 folds the partial-row log every that-many
+    * batches; compaction is crash-safe and keeps replay gating (the
+    * marker table), so the cadence composes freely with at-least-once
+    * replay.
     */
   def aggBatch(batch: DataFrame, batchId: Long, keys: Seq[String],
       valueCol: String, name: String, compactEvery: Int = 0): Unit = {
@@ -36,22 +41,4 @@ object AggStream {
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
       graft.etl.IncrementalAgg.compact(batch.sparkSession, name)
   }
-
-  /** Streaming sink: fold a fact stream into the named aggregate state.
-    * The state must exist — [[graft.etl.IncrementalAgg.writeState]] the
-    * historical facts first (an empty base is fine).
-    *
-    * `compactEvery` > 0 folds the partial-row log every that-many
-    * batches; compaction is crash-safe and keeps replay gating (the
-    * marker table), so the cadence composes freely with at-least-once
-    * replay.
-    */
-  def toAggSink(facts: DataFrame, keys: Seq[String], valueCol: String,
-      name: String, checkpoint: String, compactEvery: Int = 0) =
-    facts.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        aggBatch(batch, batchId, keys, valueCol, name, compactEvery)
-      }
 }

@@ -1,11 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming ingest × incremental ANN — the fourth incremental surface's
-  * streaming wrapper, closing the family ([[DedupStream]], [[AggStream]],
-  * [[DedupStream.toDedupSink]]'s `clusterName` CC composition): an
+  * per-batch fold, closing the family ([[DedupStream]], [[AggStream]],
+  * [[DedupStream.dedupBatch]]'s `clusterName` CC composition): an
   * embedding stream lands as micro-batches, each batch is assigned
   * against the FROZEN coarse centroids and appended to the bucketed cell
   * table in O(batch) ([[graft.sim.IncrementalAnn.appendVectors]]), and
@@ -21,10 +20,13 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object AnnStream {
 
-  /** Streaming sink: fold a vector stream into the named ANN index. The
-    * index must exist — [[graft.sim.IncrementalAnn.writeIndex]] the
-    * historical corpus first (centroids are frozen at that point; the
-    * stream only ever assigns, never retrains).
+  /** One micro-batch's fold into the named ANN index: append through
+    * the id gate, land the drift row, compact on cadence. The oracle gate
+    * (q387), the backfill path and [[graft.sources.Stream.sink]] all run
+    * this EXACT code. The index must exist —
+    * [[graft.sim.IncrementalAnn.writeIndex]] the historical corpus first
+    * (centroids are frozen at that point; the stream only ever assigns,
+    * never retrains).
     *
     * `compactEvery` > 0 rebuilds the cells/ids tables every that-many
     * batches, bounding the per-append file accumulation; the rebuild is
@@ -38,21 +40,6 @@ object AnnStream {
     * centroids), so an at-least-once replay appends a byte-identical
     * row; readers fold with `dropDuplicates("batch_id")` and alert on
     * `drift_ratio` trending away from 1.
-    */
-  def toAnnSink(vectors: DataFrame, idCol: String, vecCol: String,
-      name: String, checkpoint: String, compactEvery: Int = 0,
-      driftLog: Option[String] = None) =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        annBatch(batch, batchId, idCol, vecCol, name, compactEvery, driftLog)
-      }
-
-  /** The sink's whole per-batch body, batch-mode entry (the
-    * AggStream.aggBatch discipline): append through the id gate, land
-    * the drift row, compact on cadence. Exposed so the oracle gate
-    * (q387) and the backfill path drive the EXACT code the stream runs.
     */
   def annBatch(batch: DataFrame, batchId: Long, idCol: String,
       vecCol: String, name: String, compactEvery: Int = 0,

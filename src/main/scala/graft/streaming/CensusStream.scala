@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.roundStable
+import graft.sources.Io.landBatch
 import graft.text.TextStats.tokens
 
 /** Streaming ingest × corpus census — the live half of the curation
@@ -33,32 +34,16 @@ object CensusStream {
   def censusBatch(batch: DataFrame, batchId: Long, sourceCol: String,
                   textCol: String, fingerprint: Column,
                   stateDir: String): Unit = {
-    batch.select(explode(tokens(col(textCol))).as("tok"))
+    landBatch(batch.select(explode(tokens(col(textCol))).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("tf"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/tokens/batch=$batchId")
-    batch.select(col(sourceCol).as("source"), fingerprint.as("fp"))
+      .coalesce(1), s"$stateDir/tokens", batchId)
+    landBatch(batch.select(col(sourceCol).as("source"), fingerprint.as("fp"))
       .groupBy(col("source"), col("fp"))
       .agg(count(lit(1)).as("c"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/cells/batch=$batchId")
+      .coalesce(1), s"$stateDir/cells", batchId)
   }
-
-  /** Streaming sink: additive census partitions per micro-batch. */
-  def toCensusSink(stream: DataFrame, sourceCol: String, textCol: String,
-                   fingerprint: Column, stateDir: String,
-                   checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        censusBatch(batch, batchId, sourceCol, textCol, fingerprint,
-          stateDir)
-      }
 
   /** Any-time vocabulary coverage curve over everything ingested so
     * far — same math (and column schema) as

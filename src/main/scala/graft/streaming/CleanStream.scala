@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
+import graft.sources.Io.landBatch
 import graft.text.Corpus
 
 /** Streaming ingest × benchmark decontamination — the admission gate a
@@ -23,28 +23,16 @@ import graft.text.Corpus
   */
 object CleanStream {
 
-  /** Streaming sink: screen each micro-batch of documents against the
-    * (static, bounded) benchmark and land clean/contaminated rows under
-    * `cleanDir`/`quarantineDir` per-batch directories. Quarantined rows
-    * carry the `n_hits`/`contamination` evidence columns.
-    */
-  def toContaminationSink(docs: DataFrame, idCol: String, textCol: String,
-      bench: DataFrame, n: Int, cleanDir: String, quarantineDir: String,
-      checkpoint: String, bitsPerItem: Int = 16) = {
-    val filter = Corpus.benchFilter(bench, textCol, n, bitsPerItem,
-      persist = true)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        contaminationBatch(filter, batch, batchId, idCol, textCol,
-          cleanDir, quarantineDir)
-      }
-  }
-
-  /** One micro-batch's screening, exposed for direct (re)use and
-    * testing: stats over the batch, split, land both sides under the
-    * batch's own directories (replay = byte-identical overwrite).
+  /** One micro-batch's screening: stats over the batch against the
+    * (static, bounded) benchmark, split, land clean/contaminated rows
+    * under the batch's own `cleanDir`/`quarantineDir` directories
+    * (replay = byte-identical overwrite). Quarantined rows carry the
+    * `n_hits`/`contamination` evidence columns.
+    *
+    * A stream builds `filter` once before it starts —
+    * `Corpus.benchFilter(bench, textCol, n, persist = true)` — feeds it
+    * to every batch through [[graft.sources.Stream.sink]], and
+    * `release()`s it after the stream stops.
     */
   def contaminationBatch(filter: Corpus.BenchFilter, batch: DataFrame,
       batchId: Long, idCol: String, textCol: String,
@@ -54,15 +42,10 @@ object CleanStream {
     val stats = Corpus.contaminationWith(filter, batch, idCol, textCol)
       .localCheckpoint() // screened once; both splits read the result
     val dirty = stats.filter(col("contaminated"))
-    batch.join(dirty.select(col(idCol)), Seq(idCol), "left_anti")
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy")
-      .parquet(s"$cleanDir/batch=$batchId")
-    batch.join(dirty.select(col(idCol), col("n_hits"), col("contamination")),
-        Seq(idCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy")
-      .parquet(s"$quarantineDir/batch=$batchId")
+    landBatch(batch.join(dirty.select(col(idCol)), Seq(idCol), "left_anti"),
+      cleanDir, batchId)
+    landBatch(batch.join(dirty.select(col(idCol), col("n_hits"), col("contamination")),
+        Seq(idCol)), quarantineDir, batchId)
     graft.Blocks.releaseSince(spark, before)
   }
 }

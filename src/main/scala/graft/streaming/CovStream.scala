@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{OuterProductAgg, VecSumAgg, roundStable}
+import graft.sources.Io.landBatch
 
 /** Streaming embedding-geometry census (D27) — the live half of the
   * covariance diagnostics (q377/q379 participation ratio, q292's PC1
@@ -38,23 +39,11 @@ object CovStream {
   def covBatch(batch: DataFrame, batchId: Long, vecCol: String,
                stateDir: String): Unit = {
     val vd = transform(col(vecCol), x => x.cast("double"))
-    batch
+    landBatch(batch
       .agg(count(vd).as("n"), VecSumAgg.vecSum(vd).as("sx"),
         OuterProductAgg.outerProductSum(vd, vd).as("sxy"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/moments/batch=$batchId")
+      .coalesce(1), s"$stateDir/moments", batchId)
   }
-
-  /** Streaming sink: additive moment rows per micro-batch. */
-  def toCovSink(stream: DataFrame, vecCol: String, stateDir: String,
-                checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        covBatch(batch, batchId, vecCol, stateDir)
-      }
 
   /** Land one micro-batch's raw covariance moments PER KEY (one row per
     * key present in the batch) — the keyed form ([[covBatch]] × q379's
@@ -72,24 +61,12 @@ object CovStream {
   def covBatchBy(batch: DataFrame, batchId: Long, keyCol: String,
                  vecCol: String, stateDir: String): Unit = {
     val vd = transform(col(vecCol), x => x.cast("double"))
-    batch
+    landBatch(batch
       .groupBy(col(keyCol).cast("long").as("k"))
       .agg(count(vd).as("n"), VecSumAgg.vecSum(vd).as("sx"),
         OuterProductAgg.outerProductSum(vd, vd).as("sxy"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/moments_by/batch=$batchId")
+      .coalesce(1), s"$stateDir/moments_by", batchId)
   }
-
-  /** Streaming sink: additive per-key moment rows per micro-batch. */
-  def toCovSinkBy(stream: DataFrame, keyCol: String, vecCol: String,
-                  stateDir: String, checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        covBatchBy(batch, batchId, keyCol, vecCol, stateDir)
-      }
 
   /** Any-time participation-ratio report over everything ingested so
     * far — identical schema and math to

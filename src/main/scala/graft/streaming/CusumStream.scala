@@ -48,23 +48,11 @@ object CusumStream {
     Monitor(stats, keys, slack, h)
   }
 
-  /** Streaming sink: per batch, one row per key — upper alarms
+  /** One micro-batch's fold: one row per key — upper alarms
     * (n_alarms, first_alarm_at, max_s), lower alarms (the `_lo` triple),
     * n_cur, batch_id — under `monitorDir/batch=<id>`, with the per-key
     * per-side (P_end, P_min) state carried in `stateDir`.
     */
-  def toCusumSink(stream: DataFrame, valueCol: String, orderCol: String,
-                  tieCol: String, mon: Monitor, stateDir: String,
-                  monitorDir: String, checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cusumBatch(mon, batch, batchId, valueCol, orderCol, tieCol,
-          stateDir, monitorDir)
-      }
-
-  /** One micro-batch's fold, exposed for direct (re)use and testing. */
   def cusumBatch(mon: Monitor, batch: DataFrame, batchId: Long,
                  valueCol: String, orderCol: String, tieCol: String,
                  stateDir: String, monitorDir: String): Unit = {
@@ -130,7 +118,7 @@ object CusumStream {
       .withColumn("__rn2", least(col("__qm"), min(col("__q")).over(wOrd)))
       .withColumn("__sl", col("__q") - least(col("__rn2"), lit(0.0)))
       .localCheckpoint() // one computation feeds output AND state
-    scored
+    graft.sources.Io.landBatch(scored
       .withColumn("__alarm", (col("__s") > mon.h).cast("long"))
       .withColumn("__alarmLo", (col("__sl") > mon.h).cast("long"))
       .groupBy(keyCols: _*)
@@ -145,9 +133,7 @@ object CusumStream {
         count(lit(1)).as("n_cur"))
       .withColumn("batch_id", lit(batchId))
       .orderBy(keyCols: _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$monitorDir/batch=$batchId")
+      .coalesce(1), monitorDir, batchId)
 
     // fold the batch into the state: last row's P becomes P_end, the
     // running min of ALL rows ever seen becomes P_min — per side;

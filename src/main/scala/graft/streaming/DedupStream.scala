@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming ingest × incremental dedup — the composition that is the
   * actual production shape of LLM-corpus ingestion: documents arrive as
@@ -35,50 +34,15 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object DedupStream {
 
-  /** Streaming sink: wire a document stream (idCol, textCol) into the
-    * named incremental-dedup index. The index must exist —
+  /** One micro-batch of a document stream (idCol, textCol) against the
+    * named incremental-dedup index: delta-join the batch against the
+    * index, write the verified pairs under the batch's own partition
+    * directory, fold the batch in. Stream it with
+    * [[graft.sources.Stream.sink]]; the catalog (q72) and backfills call
+    * it directly. The index must exist —
     * [[graft.dedup.IncrementalDedup.writeIndex]] the historical corpus
     * first (an empty corpus is fine).
     *
-    * `compactEvery` > 0 folds completed batch directories via
-    * [[compactPairs]] every that-many batches, so a long-running stream
-    * holds a BOUNDED directory count instead of one per micro-batch
-    * forever. The fold always leaves the newest directory alone
-    * (keepLatest = 1), so the one batch foreachBatch may replay still
-    * finds — and overwrites — its own directory; and because compaction
-    * itself is idempotent and crash-healed, a replay that re-triggers
-    * the cadence re-folds harmlessly.
-    */
-  /** `clusterName`, when set, additionally folds each batch's pairs into
-    * that [[graft.operators.IncrementalCC]] label table (which must
-    * exist — `writeLabels` an empty edge set to start cold), so the
-    * stream maintains docs → pairs → CLUSTERS end-to-end. Replay-safe
-    * for free: the replayed batch's pairs are byte-identical and the
-    * label log is an idempotent min-fold.
-    */
-  def toDedupSink(docs: DataFrame, idCol: String, textCol: String, name: String,
-      pairsPath: String, checkpoint: String, minJaccard: Double,
-      n: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      compactEvery: Int = 0, clusterName: Option[String] = None) =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(batch, batchId, idCol, textCol, name, pairsPath, minJaccard,
-          n, numHashes, bands, clusterName)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          compactPairs(batch.sparkSession, pairsPath)
-          // the index tables too (r14): without this the gate scan's
-          // file count grows one-per-bucket per batch — StreamScale
-          // measured 1.95 s → 6.6 s/batch over 100 un-compacted appends
-          graft.dedup.IncrementalDedup.compactIndex(batch.sparkSession, name)
-          clusterName.foreach(graft.operators.IncrementalCC.compactLabels(batch.sparkSession, _))
-        }
-      }
-
-  /** One micro-batch's work, exposed for direct (re)use and testing:
-    * delta-join the batch against the index, write the verified pairs
-    * under the batch's own partition directory, fold the batch in.
     * Pairs BEFORE append — deltaPairs' self-pair guard plus the
     * overwrite below keep a replay byte-identical either way, but this
     * order keeps the common path cheap (the batch's band rows join only
@@ -89,24 +53,47 @@ object DedupStream {
     * so each batch releases exactly the blocks it created — a leak here
     * compounds over thousands of micro-batches into executor storage
     * pressure (leak-gated in the spec).
+    *
+    * `clusterName`, when set, additionally folds each batch's pairs into
+    * that [[graft.operators.IncrementalCC]] label table (which must
+    * exist — `writeLabels` an empty edge set to start cold), so the
+    * stream maintains docs → pairs → CLUSTERS end-to-end. Replay-safe
+    * for free: the replayed batch's pairs are byte-identical and the
+    * label log is an idempotent min-fold.
+    *
+    * `compactEvery` > 0 folds completed batch directories via
+    * [[compactPairs]] every that-many batches, so a long-running stream
+    * holds a BOUNDED directory count instead of one per micro-batch
+    * forever; the same cadence compacts the index and label tables. The
+    * fold always leaves the newest directory alone (keepLatest = 1), so
+    * the one batch foreachBatch may replay still finds — and overwrites
+    * — its own directory; and because compaction itself is idempotent
+    * and crash-healed, a replay that re-triggers the cadence re-folds
+    * harmlessly.
     */
   def dedupBatch(batch: DataFrame, batchId: Long, idCol: String, textCol: String,
       name: String, pairsPath: String, minJaccard: Double,
       n: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      clusterName: Option[String] = None): Unit = {
+      clusterName: Option[String] = None, compactEvery: Int = 0): Unit = {
     val spark = batch.sparkSession
     val before = graft.Blocks.persistedIds(spark)
     val pairs = graft.dedup.IncrementalDedup.deltaPairs(
       spark, batch, idCol, textCol, name, minJaccard, n, numHashes, bands)
-    pairs.write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy")
-      .parquet(s"$pairsPath/batch=$batchId")
+    graft.sources.Io.landBatch(pairs, pairsPath, batchId)
     graft.dedup.IncrementalDedup.appendToIndex(
       batch, idCol, textCol, name, n, numHashes, bands)
     clusterName.foreach { cn =>
       graft.operators.IncrementalCC.mergeEdges(spark, pairs, "id_a", "id_b", cn); ()
     }
     graft.Blocks.releaseSince(spark, before)
+    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+      compactPairs(spark, pairsPath)
+      // the index tables too (r14): without this the gate scan's
+      // file count grows one-per-bucket per batch — StreamScale
+      // measured 1.95 s → 6.6 s/batch over 100 un-compacted appends
+      graft.dedup.IncrementalDedup.compactIndex(spark, name)
+      clusterName.foreach(graft.operators.IncrementalCC.compactLabels(spark, _))
+    }
   }
 
   /** Read the pair set accumulated under `pairsPath` (consolidated +

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming ingest × SCD Type-2 dimension maintenance: attribute
   * updates arrive as micro-batches and fold into the versioned
@@ -32,9 +31,10 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object DimStream {
 
-  /** Fold one update batch into the dimension at `path` (created on
-    * first batch). Batch-mode entry — [[toScd2Sink]] wraps it; the
-    * backfill path feeds historical batches through here directly.
+  /** Fold one update batch (keys ++ attrs ++ tsCol) into the dimension
+    * at `path` (created on first batch). A live update stream runs it
+    * through [[graft.sources.Stream.sink]]; the backfill path feeds
+    * historical batches through here directly.
     */
   def scd2Batch(batch: DataFrame, path: String, keys: Seq[String],
                 attrs: Seq[String], tsCol: String): Unit = {
@@ -71,16 +71,4 @@ object DimStream {
     merged.write.mode("overwrite").parquet(tmp.toString)
     graft.sources.Io.swapDirs(fs, live, tmp)
   }
-
-  /** Streaming sink: maintain the SCD2 dimension at `path` from an
-    * update stream (keys ++ attrs ++ tsCol).
-    */
-  def toScd2Sink(updates: DataFrame, path: String, keys: Seq[String],
-                 attrs: Seq[String], tsCol: String, checkpoint: String) =
-    updates.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        scd2Batch(batch, path, keys, attrs, tsCol)
-      }
 }

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.Drift
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × distribution-drift monitoring — the live form of
   * [[graft.etl.Drift.psi]]: a reference window is compressed ONCE at
@@ -51,21 +52,9 @@ object DriftStream {
     Reference(ranges, counts, keys, bins)
   }
 
-  /** Streaming sink: PSI of each micro-batch against the frozen
-    * reference, one row per key per batch, landed under
-    * `monitorDir/batch=<id>`.
-    */
-  def toDriftSink(stream: DataFrame, valueCol: String, ref: Reference,
-                  monitorDir: String, checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        driftBatch(ref, batch, batchId, valueCol, monitorDir)
-      }
-
-  /** One micro-batch's scoring, exposed for direct (re)use and testing.
-    * Bins the batch against the frozen ranges, full-outer-joins the
+  /** PSI of one micro-batch against the frozen reference, one row per
+    * key under `monitorDir/batch=<id>`. Bins the batch against the
+    * frozen ranges, full-outer-joins the
     * reference bin table (a bin present on only one side still
     * contributes via smoothing), and writes (keys, psi, n_ref, n_cur,
     * batch_id) sorted by key — deterministic bytes, so a replayed batch
@@ -86,7 +75,7 @@ object DriftStream {
       .withColumn("__cc", coalesce(col("__cc"), lit(0L)))
       .withColumn("__nr", max(col("__nr")).over(w)) // ref total rides ref rows
       .withColumn("__nc", sum(col("__cc")).over(w))
-    joined
+    landBatch(joined
       .withColumn("__term", Drift.psiTerm(col("__rc"), col("__cc"),
         col("__nr"), col("__nc"), ref.bins))
       .groupBy(keyCols: _*)
@@ -94,8 +83,6 @@ object DriftStream {
         max(col("__nr")).as("n_ref"), max(col("__nc")).as("n_cur"))
       .withColumn("batch_id", lit(batchId))
       .orderBy(keyCols: _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$monitorDir/batch=$batchId")
+      .coalesce(1), monitorDir, batchId)
   }
 }

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Scd2
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × SCD2 temporal enrichment — the live form of the
   * q112 temporal join, and the payoff of keeping dimensions SCD2
@@ -25,31 +26,17 @@ import graft.operators.Scd2
   */
 object EnrichStream {
 
-  /** Streaming sink: each micro-batch temporally enriched against the
-    * SCD2 dimension at `dimPath`, landed under `outDir/batch=<id>`.
-    */
-  def toEnrichedSink(stream: DataFrame, keys: Seq[String], tsCol: String,
-                     orderCols: Seq[String], dimPath: String,
-                     outDir: String, checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        enrichBatch(batch, batchId, keys, tsCol, orderCols, dimPath, outDir)
-      }
-
-  /** One micro-batch's enrichment, exposed for direct (re)use and
-    * testing. `orderCols` must be a unique key of the batch — it pins
-    * the written row order so replays are byte-stable.
+  /** One micro-batch temporally enriched against the SCD2 dimension at
+    * `dimPath`, landed under `outDir/batch=<id>`. `orderCols` must be a
+    * unique key of the batch — it pins the written row order so replays
+    * are byte-stable.
     */
   def enrichBatch(batch: DataFrame, batchId: Long, keys: Seq[String],
                   tsCol: String, orderCols: Seq[String], dimPath: String,
                   outDir: String): Unit = {
     val dim = batch.sparkSession.read.parquet(dimPath)
-    Scd2.temporalJoin(batch, dim, keys, tsCol)
+    landBatch(Scd2.temporalJoin(batch, dim, keys, tsCol)
       .orderBy(orderCols.map(col): _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/batch=$batchId")
+      .coalesce(1), outDir, batchId)
   }
 }

@@ -32,16 +32,6 @@ object EventStream {
       .select(col("w.start").as("bucket"), col("event_type"), col("n"), col("sum_value"))
   }
 
-  /** Append-mode parquet sink with checkpointing — the durable landing
-    * path (watermark closes windows; closed windows land as files).
-    */
-  def toParquetSink(agg: DataFrame, path: String, checkpoint: String) =
-    agg.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-
   /** Stream-stream interval join (attribution shape): each left event is
     * paired with right events by the same key that occur AT OR AFTER it,
     * within `horizon`. Watermarks on both sides plus the closed time-range
@@ -74,7 +64,7 @@ object EventStream {
       watermark: String = "1 hour"): DataFrame =
     intervalJoin(left, right, key, horizon, watermark, joinType = "leftOuter")
 
-  /** foreachBatch upsert sink: every micro-batch merges into a keyed
+  /** One micro-batch's upsert: the batch merges into a keyed
     * parquet snapshot with last-write-wins semantics — existing rows
     * whose key appears in the batch are replaced; within a batch the
     * survivor is the last row by `orderCol`. The rewrite goes to a temp
@@ -85,17 +75,8 @@ object EventStream {
     * table format with ACID merge (Delta/Iceberg) replaces the swap and
     * closes the brief window where the live path is absent; the MERGE
     * semantics expressed here are the part that carries over.
-    */
-  def toUpsertSink(df: DataFrame, path: String, checkpoint: String,
-      keys: Seq[String], orderCol: String) =
-    df.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, path, keys, orderCol)
-      }
-
-  /** One micro-batch's merge, exposed for direct (re)use and testing.
+    *
+    * Stream it with [[graft.sources.Stream.sink]] over a row stream.
     * IDEMPOTENT under foreachBatch's at-least-once contract: replaying a
     * batch against a snapshot that already merged it anti-joins away the
     * batch's keys and re-inserts identical survivors — the snapshot is

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Aggregates
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × mergeable histogram quantiles — the live form of
   * [[graft.etl.Aggregates.histSketch]]/`histQuantiles` (B37): each
@@ -43,27 +44,15 @@ object HistStream {
     Geometry(ranges, keys, bins)
   }
 
-  /** Streaming sink: one mergeable sketch partition per micro-batch. */
-  def toHistSink(stream: DataFrame, valueCol: String, geom: Geometry,
-                 sketchDir: String, checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        histBatch(geom, batch, batchId, valueCol, sketchDir)
-      }
-
-  /** One micro-batch's sketch, exposed for direct (re)use and testing. */
+  /** One micro-batch's mergeable sketch partition. */
   def histBatch(geom: Geometry, batch: DataFrame, batchId: Long,
                 valueCol: String, sketchDir: String): Unit =
-    Aggregates.histSketch(
+    landBatch(Aggregates.histSketch(
         batch.withColumn("__slice", lit(batchId)),
         geom.keys, "__slice", valueCol, geom.bins,
         ranges = Some(geom.ranges))
       .orderBy(geom.keys.map(col) :+ col("__bin"): _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$sketchDir/batch=$batchId")
+      .coalesce(1), sketchDir, batchId)
 
   /** Any-time quantile readout over everything written so far — the
     * merge is `histQuantiles`' vector addition over all batch slices.

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × corpus novelty — the live form of
   * [[graft.text.Corpus.novelty]] (C81): each micro-batch of documents
@@ -57,27 +59,15 @@ object NoveltyStream {
     val nDocs = batch.count()
     val nSh = sh.count()
     val nNew = novel.count()
-    novel.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/batch=$batchId")
+    landBatch(novel.coalesce(1), stateDir, batchId)
     import spark.implicits._
-    Seq((batchId, nDocs, nSh, nNew,
-      if (nSh == 0) 0.0
+    val rate = if (nSh == 0) 0.0
       else BigDecimal(nNew.toDouble / nSh)
-        .setScale(digits, BigDecimal.RoundingMode.HALF_UP).toDouble))
+        .setScale(digits, BigDecimal.RoundingMode.HALF_UP).toDouble
+    landBatch(Seq((batchId, nDocs, nSh, nNew, rate))
       .toDF("batch_id", "n_docs", "n_shingles", "n_new", "novelty_rate")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$reportDir/batch=$batchId")
+      .coalesce(1), reportDir, batchId)
   }
-
-  /** Streaming sink wiring the per-batch scorer. */
-  def toNoveltySink(stream: DataFrame, textCol: String, stateDir: String,
-                    reportDir: String, checkpoint: String, n: Int = 3) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        noveltyBatch(batch, batchId, textCol, stateDir, reportDir, n)
-      }
 
   /** The whole-stream novelty curve so far. */
   def report(spark: SparkSession, reportDir: String): DataFrame =

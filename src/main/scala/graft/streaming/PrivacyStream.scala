@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.Io.landBatch
 
 /** Streaming privacy gate (D26) — the live half of
   * [[graft.etl.Privacy]] (q362/q363): per-batch k-anonymity /
@@ -34,24 +36,11 @@ object PrivacyStream {
   def privacyBatch(batch: DataFrame, batchId: Long, quasiCols: Seq[String],
                    sensitiveCol: Column, stateDir: String): Unit = {
     require(quasiCols.nonEmpty, "need QI cols")
-    batch
+    landBatch(batch
       .groupBy(quasiCols.map(col) :+ sensitiveCol.as("__sv"): _*)
       .agg(count(lit(1)).as("__c"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/cells/batch=$batchId")
+      .coalesce(1), s"$stateDir/cells", batchId)
   }
-
-  /** Streaming sink: additive privacy cells per micro-batch. */
-  def toPrivacySink(stream: DataFrame, quasiCols: Seq[String],
-                    sensitiveCol: Column, stateDir: String,
-                    checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        privacyBatch(batch, batchId, quasiCols, sensitiveCol, stateDir)
-      }
 
   /** Merged (QI…, sensitive, __n) cells over everything landed so far. */
   private def mergedCells(spark: SparkSession, stateDir: String,

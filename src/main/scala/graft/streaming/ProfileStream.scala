@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × column profiling — the live form of
   * [[graft.etl.Profile]] (B43): each micro-batch compresses to one row
@@ -39,25 +41,13 @@ object ProfileStream {
     val row = batch.agg(aggs.head, aggs.tail: _*)
     val items = array(cols.map(c => struct(lit(c).as("column"),
       col(s"__nn_$c").as("__nn"), col(s"__sk_$c").as("__sk"))): _*)
-    row.select(col("__n").as("n_rows"), explode(items).as("m"))
+    landBatch(row.select(col("__n").as("n_rows"), explode(items).as("m"))
       .select(col("m.column").as("column"), col("n_rows"),
         (col("n_rows") - col("m.__nn")).as("n_null"),
         col("m.__sk").as("sketch"))
       .orderBy(col("column"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/batch=$batchId")
+      .coalesce(1), stateDir, batchId)
   }
-
-  /** Streaming sink: one mergeable profile partition per micro-batch. */
-  def toProfileSink(stream: DataFrame, cols: Seq[String], stateDir: String,
-                    checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        profileBatch(batch, batchId, cols, stateDir)
-      }
 
   /** Any-time whole-stream profile: counts add, sketches union. Same
     * long-form schema as [[graft.etl.Profile.profile]] with the HLL

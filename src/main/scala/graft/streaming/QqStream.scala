@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.roundStable
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × the quantile-shift profile — the live form of
   * [[graft.etl.Drift.qqShift]], and the diagnosis layer of the
@@ -54,21 +55,9 @@ object QqStream {
       keys, parts)
   }
 
-  /** Streaming sink: per-batch quantile shifts against the frozen
-    * reference deciles, landed under `monitorDir/batch=<id>`.
-    */
-  def toQqSink(stream: DataFrame, valueCol: String, ref: Reference,
-               monitorDir: String, checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        qqBatch(ref, batch, batchId, valueCol, monitorDir)
-      }
-
-  /** One micro-batch's scoring, exposed for direct (re)use and replay
-    * testing: batch deciles per key, reference-left-joined, written
-    * sorted — deterministic bytes.
+  /** One micro-batch's quantile shifts against the frozen reference
+    * deciles, landed under `monitorDir/batch=<id>`: batch deciles per
+    * key, reference-left-joined, written sorted — deterministic bytes.
     */
   def qqBatch(ref: Reference, batch: DataFrame, batchId: Long,
               valueCol: String, monitorDir: String): Unit = {
@@ -83,7 +72,6 @@ object QqStream {
         coalesce(col("n_cur"), lit(0L)).as("n_cur"),
         lit(batchId).as("batch_id")): _*)
       .sort((keyCols :+ col("decile")): _*)
-    scored.write.mode(SaveMode.Overwrite)
-      .parquet(s"$monitorDir/batch=$batchId")
+    landBatch(scored, monitorDir, batchId)
   }
 }

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.roundStable
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × event-RATE monitoring — the live form of
   * [[graft.etl.Drift.rateShift]], closing the streaming drift triple
@@ -52,20 +53,10 @@ object RateStream {
     Monitor(rates, keys)
   }
 
-  /** Streaming sink: one (keys, cur_rate, rate_ratio, poisson_z, n_cur,
-    * batch_id) row per REFERENCE key per batch under
+  /** One micro-batch's scoring: one (keys, cur_rate, rate_ratio,
+    * poisson_z, n_cur, batch_id) row per REFERENCE key under
     * `monitorDir/batch=<id>`.
     */
-  def toRateSink(stream: DataFrame, tsCol: String, mon: Monitor,
-                 monitorDir: String, checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rateBatch(mon, batch, batchId, tsCol, monitorDir)
-      }
-
-  /** One micro-batch's scoring, exposed for direct (re)use and testing. */
   def rateBatch(mon: Monitor, batch: DataFrame, batchId: Long,
                 tsCol: String, monitorDir: String): Unit = {
     val keyCols = mon.keys.map(col)
@@ -77,7 +68,7 @@ object RateStream {
     // most interesting row on this monitor (z = −√(λ·H))
     val expect = col("__lam") * col("__hc")
     val ok = col("__lam").isNotNull && col("__hc") > 0
-    mon.rates
+    landBatch(mon.rates
       .join(counts, mon.keys, "left")
       .crossJoin(broadcast(span))
       .withColumn("__cc", coalesce(col("__cc"), lit(0L)))
@@ -90,8 +81,6 @@ object RateStream {
         col("__cc").as("n_cur")): _*)
       .withColumn("batch_id", lit(batchId))
       .orderBy(keyCols: _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$monitorDir/batch=$batchId")
+      .coalesce(1), monitorDir, batchId)
   }
 }

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Rules
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × the declarative data-quality gate — the live
   * form of [[graft.etl.Rules]] (B44): every micro-batch evaluates the
@@ -25,20 +26,10 @@ object RulesStream {
 
   def rulesBatch(batch: DataFrame, batchId: Long, rules: Seq[Rules.Rule],
                  reportDir: String): Unit =
-    Rules.check(batch, rules)
+    landBatch(Rules.check(batch, rules)
       .withColumn("batch_id", lit(batchId))
       .orderBy(col("rule"), col("target"))
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$reportDir/batch=$batchId")
-
-  def toRulesSink(stream: DataFrame, rules: Seq[Rules.Rule],
-                  reportDir: String, checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rulesBatch(batch, batchId, rules, reportDir)
-      }
+      .coalesce(1), reportDir, batchId)
 
   /** The violation-rate trend: one row per (batch, rule). */
   def report(spark: SparkSession, reportDir: String): DataFrame =

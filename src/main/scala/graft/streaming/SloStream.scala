@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.etl.Slo
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × SLO burn-rate monitoring — the live form of
   * [[graft.etl.Slo.burnRate]]: each micro-batch lands its OWN hourly
@@ -25,24 +26,8 @@ import graft.etl.Slo
   */
 object SloStream {
 
-  /** Streaming sink: accumulate hourly counts, re-derive burns, land
-    * the alert table per batch.
-    */
-  def toBurnSink(stream: DataFrame, keys: Seq[String], tsCol: String,
-                 isError: org.apache.spark.sql.Column, budget: Double,
-                 shortHours: Int, longHours: Int, threshold: Double,
-                 stateDir: String, monitorDir: String,
-                 checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        burnBatch(batch, batchId, keys, tsCol, isError, budget,
-          shortHours, longHours, threshold, stateDir, monitorDir)
-      }
-
-  /** One micro-batch's fold + readout, exposed for direct (re)use and
-    * testing: land this batch's hourly counts (deterministic bytes —
+  /** One micro-batch's fold + readout: land this batch's hourly counts
+    * (deterministic bytes —
     * sorted, single file), merge the full state tree, emit the burn
     * rows that currently ALERT (sorted — a replay overwrites
     * byte-identically).
@@ -54,24 +39,20 @@ object SloStream {
                 monitorDir: String): Unit = {
     val spark = batch.sparkSession
     val keyCols = keys.map(col)
-    batch
+    landBatch(batch
       .groupBy(keyCols :+ date_trunc("hour", col(tsCol)).as("__h"): _*)
       .agg(count(lit(1)).cast("double").as("__n"),
         sum(when(isError, 1.0).otherwise(0.0)).as("__e"))
       .orderBy(keyCols :+ col("__h"): _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/batch=$batchId")
+      .coalesce(1), stateDir, batchId)
     val merged = spark.read.parquet(stateDir)
       .groupBy(keyCols :+ col("__h"): _*)
       .agg(sum(col("__n")).as("__n"), sum(col("__e")).as("__e"))
-    Slo.burnFromHourly(merged, keys, budget, shortHours, longHours,
+    landBatch(Slo.burnFromHourly(merged, keys, budget, shortHours, longHours,
         threshold, digits = 6)
       .filter(col("alert"))
       .withColumn("batch_id", lit(batchId))
       .orderBy(keyCols :+ col("hour"): _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$monitorDir/batch=$batchId")
+      .coalesce(1), monitorDir, batchId)
   }
 }

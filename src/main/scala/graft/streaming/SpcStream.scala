@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.roundStable
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × statistical process control — the live form of
   * [[graft.etl.Drift.xbarChart]]: an in-control reference window is
@@ -61,22 +62,11 @@ object SpcStream {
     Chart(stats, keys, l)
   }
 
-  /** Streaming sink: each micro-batch scored as one subgroup per key
-    * against the frozen chart, landed under `monitorDir/batch=<id>`.
-    */
-  def toSpcSink(stream: DataFrame, valueCol: String, chart: Chart,
-                monitorDir: String, checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        spcBatch(chart, batch, batchId, valueCol, monitorDir)
-      }
-
-  /** One micro-batch's scoring, exposed for direct (re)use and testing.
-    * Writes (keys, n, xbar, center, ucl, lcl, out_of_control, side)
-    * sorted by key — deterministic bytes, so a replayed batch
-    * overwrites itself. Flags compare 6dp-rounded values.
+  /** One micro-batch scored as one subgroup per key against the frozen
+    * chart. Writes (keys, n, xbar, center, ucl, lcl, out_of_control,
+    * side) under `monitorDir/batch=<id>` sorted by key — deterministic
+    * bytes, so a replayed batch overwrites itself. Flags compare
+    * 6dp-rounded values.
     */
   def spcBatch(chart: Chart, batch: DataFrame, batchId: Long,
                valueCol: String, monitorDir: String): Unit = {
@@ -85,7 +75,7 @@ object SpcStream {
       .groupBy(keyCols: _*)
       .agg(count(lit(1)).as("n"), avg(col(valueCol)).as("__xb"))
     val se = sqrt(col("__pool") / col("n").cast("double"))
-    grp.join(broadcast(chart.stats), chart.keys)
+    landBatch(grp.join(broadcast(chart.stats), chart.keys)
       .withColumn("xbar", roundStable(col("__xb"), 6))
       .withColumn("center", roundStable(col("__center"), 6))
       .withColumn("ucl", roundStable(col("__center") + lit(chart.l) * se, 6))
@@ -102,8 +92,6 @@ object SpcStream {
         col("ucl"), col("lcl"), col("out_of_control"), col("side"),
         col("batch_id")): _*)
       .orderBy(keyCols: _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$monitorDir/batch=$batchId")
+      .coalesce(1), monitorDir, batchId)
   }
 }

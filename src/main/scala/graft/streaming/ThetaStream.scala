@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.roundStable
+import graft.sources.Io.landBatch
 
 /** Streaming ingest × theta-sketch audience state — the live half of
   * [[graft.etl.Aggregates.thetaOverlap]] (q370): each micro-batch
@@ -28,23 +29,11 @@ object ThetaStream {
   /** Land one micro-batch's per-segment sketches. */
   def sketchBatch(batch: DataFrame, batchId: Long, segmentCol: Column,
                   idCol: Column, stateDir: String): Unit =
-    batch.select(segmentCol.as("segment"), idCol.cast("string").as("__id"))
+    landBatch(batch.select(segmentCol.as("segment"), idCol.cast("string").as("__id"))
       .filter(col("segment").isNotNull && col("__id").isNotNull)
       .groupBy(col("segment"))
       .agg(expr("theta_sketch_agg(__id)").as("sketch"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/batch=$batchId")
-
-  /** Streaming sink: one mergeable sketch partition per micro-batch. */
-  def toThetaSink(stream: DataFrame, segmentCol: Column, idCol: Column,
-                  stateDir: String, checkpoint: String) =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sketchBatch(batch, batchId, segmentCol, idCol, stateDir)
-      }
+      .coalesce(1), stateDir, batchId)
 
   /** Any-time per-segment reach estimate over everything ingested. */
   def reach(spark: SparkSession, stateDir: String): DataFrame =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming ingest × heavy hitters: maintain the top tokens of an
   * unbounded stream with BOUNDED state, by composing the batch-gated
@@ -24,24 +23,24 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object TopKStream {
 
-  /** Streaming sink. The state must exist — build it with
+  /** One micro-batch's fold: gated append of the batch's token counts,
+    * then an MG fold on the cadence. Stream it with
+    * [[graft.sources.Stream.sink]]. The state must exist — build it with
     * [[graft.etl.IncrementalAgg.writeState]] over the historical tokens
     * (an empty base is fine). `compactEvery` bounds how many batches of
     * partial rows accumulate between MG folds; state size between folds
-    * is `capacity` + the uncompacted batches' distinct tokens.
+    * is `capacity` + the uncompacted batches' distinct tokens. A replay
+    * re-runs the fold over state already within `capacity`, which
+    * evicts nothing.
     */
-  def toTopKSink(events: DataFrame, tokenCol: String, name: String,
-      checkpoint: String, capacity: Int, compactEvery: Int = 4) =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val toks = batch.select(col(tokenCol).cast("string").as("token"))
-          .withColumn("__one", lit(1.0))
-        graft.etl.IncrementalAgg.appendDelta(toks, Seq("token"), "__one", name, batchId)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.etl.IncrementalAgg.compactTopK(batch.sparkSession, name, capacity)
-      }
+  def topKBatch(batch: DataFrame, batchId: Long, tokenCol: String,
+      name: String, capacity: Int, compactEvery: Int = 4): Unit = {
+    val toks = batch.select(col(tokenCol).cast("string").as("token"))
+      .withColumn("__one", lit(1.0))
+    graft.etl.IncrementalAgg.appendDelta(toks, Seq("token"), "__one", name, batchId)
+    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+      graft.etl.IncrementalAgg.compactTopK(batch.sparkSession, name, capacity)
+  }
 
   /** The current top-k claim: retained tokens by (lower-bound) count,
     * deterministic tie-break on the token.

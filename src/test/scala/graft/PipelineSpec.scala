@@ -164,8 +164,9 @@ class PipelineSpec extends AnyFunSuite {
     val mem = MemoryStream[streaming.EventStream.Event]
     // batch 1: user 1 twice (later wins within batch), user 2 once
     mem.addData(ev(1, 1000, 1, 10.0), ev(2, 2000, 1, 11.0), ev(3, 1000, 2, 20.0))
-    val q = streaming.EventStream.toUpsertSink(mem.toDF(), s"$tmp/snap", s"$tmp/ck",
-      keys = Seq("user_id"), orderCol = "ts").start()
+    val q = sources.Stream.sink(mem.toDF(), s"$tmp/ck") { (b, _) =>
+      streaming.EventStream.upsertBatch(b, s"$tmp/snap", keys = Seq("user_id"), orderCol = "ts")
+    }.start()
     q.processAllAvailable()
     // batch 2: user 1 updated, user 3 new
     mem.addData(ev(4, 3000, 1, 12.0), ev(5, 1000, 3, 30.0))
@@ -209,9 +210,9 @@ class PipelineSpec extends AnyFunSuite {
     val b1 = src.map { case (id, t) => (id + 1000L, t) }
     val b2 = src.map { case (id, t) => (id + 2000L, t) }
     val mem = MemoryStream[(Long, String)]
-    val q = streaming.DedupStream.toDedupSink(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", "strm",
-      s"$tmp/pairs", s"$tmp/ck", minJaccard = 0.8).start()
+    val q = sources.Stream.sink(mem.toDF().toDF("doc_id", "text"), s"$tmp/ck")(
+      streaming.DedupStream.dedupBatch(_, _, "doc_id", "text", "strm",
+        s"$tmp/pairs", minJaccard = 0.8)).start()
     mem.addData(b1: _*)
     q.processAllAvailable()
     mem.addData(b2: _*)
@@ -254,9 +255,9 @@ class PipelineSpec extends AnyFunSuite {
     val src = corpus.filter(col("doc_id") % 3 === 0).orderBy("doc_id").limit(4)
       .as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
-    val q = streaming.DedupStream.toDedupSink(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", "cadidx",
-      s"$tmp/pairs", s"$tmp/ck", minJaccard = 0.8, compactEvery = 2).start()
+    val q = sources.Stream.sink(mem.toDF().toDF("doc_id", "text"), s"$tmp/ck")(
+      streaming.DedupStream.dedupBatch(_, _, "doc_id", "text", "cadidx",
+        s"$tmp/pairs", minJaccard = 0.8, compactEvery = 2)).start()
     // four micro-batches of twins at distinct id offsets; the cadence
     // fires after batches 1 and 3, each fold sparing the newest dir
     for (off <- Seq(1000L, 2000L, 3000L, 4000L)) {
@@ -713,7 +714,8 @@ class PipelineSpec extends AnyFunSuite {
     mem.addData(ev(1, 0), ev(2, 60000), ev(3, 7200000))
     val agg = streaming.EventStream.windowedAgg(mem.toDF(),
       windowLen = "10 minutes", watermark = "1 minute", slide = Some("5 minutes"))
-    val q = streaming.EventStream.toParquetSink(agg, s"$tmp/out", s"$tmp/ck").start()
+    val q = agg.writeStream.outputMode("append").format("parquet")
+      .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck").start()
     q.processAllAvailable()
     mem.addData(ev(9, 86400000)) // far future: closes earlier windows
     q.processAllAvailable()
@@ -837,9 +839,9 @@ class PipelineSpec extends AnyFunSuite {
     val b1 = src.map { case (id, t) => (id + 1000L, t) }
     val b2 = src.map { case (id, t) => (id + 2000L, t) }
     val mem = MemoryStream[(Long, String)]
-    val q = streaming.DedupStream.toDedupSink(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", "sccidx",
-      s"$tmp/pairs", s"$tmp/ck", minJaccard = 0.8, clusterName = Some("scc")).start()
+    val q = sources.Stream.sink(mem.toDF().toDF("doc_id", "text"), s"$tmp/ck")(
+      streaming.DedupStream.dedupBatch(_, _, "doc_id", "text", "sccidx",
+        s"$tmp/pairs", minJaccard = 0.8, clusterName = Some("scc"))).start()
     mem.addData(b1: _*)
     q.processAllAvailable()
     mem.addData(b2: _*)
@@ -874,9 +876,8 @@ class PipelineSpec extends AnyFunSuite {
     // must NOT be swallowed by the gate
     etl.IncrementalAgg.writeState(base, Seq("k"), "v", "astrm", buckets = 2)
     val mem = MemoryStream[(String, Double)]
-    val q = streaming.AggStream.toAggSink(
-      mem.toDF().toDF("k", "v"), Seq("k"), "v", "astrm",
-      s"$tmp/ck", compactEvery = 2).start()
+    val q = sources.Stream.sink(mem.toDF().toDF("k", "v"), s"$tmp/ck")(
+      streaming.AggStream.aggBatch(_, _, Seq("k"), "v", "astrm", compactEvery = 2)).start()
     mem.addData(("a", 2.0), ("c", 5.0))
     q.processAllAvailable()
     mem.addData(("b", -1.0), ("c", 1.0))
@@ -913,10 +914,9 @@ class PipelineSpec extends AnyFunSuite {
       .as[(Long, Seq[Float])].collect().toSeq
     val (b1, b2) = rest.partition(_._1 % 3 == 1)
     val mem = MemoryStream[(Long, Seq[Float])]
-    val q = streaming.AnnStream.toAnnSink(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      "annstrm", s"$tmp/ck", compactEvery = 2,
-      driftLog = Some(s"$tmp/drift")).start()
+    val q = sources.Stream.sink(mem.toDF().toDF("vec_id", "embedding"), s"$tmp/ck")(
+      streaming.AnnStream.annBatch(_, _, "vec_id", "embedding", "annstrm",
+        compactEvery = 2, driftLog = Some(s"$tmp/drift"))).start()
     mem.addData(b1: _*)
     q.processAllAvailable()
     mem.addData(b2: _*)
@@ -968,8 +968,9 @@ class PipelineSpec extends AnyFunSuite {
       Seq("token"), "__one", "tkstrm", buckets = 2)
     val mem = MemoryStream[String]
     val cap = 8
-    val q = streaming.TopKStream.toTopKSink(mem.toDF().toDF("token"),
-      "token", "tkstrm", s"$tmp/ck", capacity = cap, compactEvery = 1).start()
+    val q = sources.Stream.sink(mem.toDF().toDF("token"), s"$tmp/ck")(
+      streaming.TopKStream.topKBatch(_, _, "token", "tkstrm", capacity = cap,
+        compactEvery = 1)).start()
     // 3 batches: "hot" dominates; a rotating long tail (5 fresh tokens a
     // batch) would grow state unboundedly without eviction
     var total = 0L
@@ -989,12 +990,11 @@ class PipelineSpec extends AnyFunSuite {
     // MG error bound: undercount <= N/(capacity+1); true count is 90
     assert(top.head._2 <= 90L && top.head._2 >= 90L - total / (cap + 1),
       s"cnt must be a bounded undercount of 90: $top (N=$total)")
-    // at-least-once replay of the last batch id: gated to a no-op even
-    // though compaction folded its rows away
+    // at-least-once replay of the last batch id, cadence and all: gated
+    // to a no-op even though compaction folded its rows away
     val before = streaming.TopKStream.topK(spark, "tkstrm", cap).collect().toSeq
-    etl.IncrementalAgg.appendDelta(
-      Seq.fill(30)("hot").toDF("token").withColumn("__one", lit(1.0)),
-      Seq("token"), "__one", "tkstrm", batchId = 2)
+    streaming.TopKStream.topKBatch(Seq.fill(30)("hot").toDF("token"), 2L,
+      "token", "tkstrm", capacity = cap, compactEvery = 1)
     assert(streaming.TopKStream.topK(spark, "tkstrm", cap).collect().toSeq == before,
       "replayed batch must gate to a no-op")
   }
@@ -1005,9 +1005,10 @@ class PipelineSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft_dimstream").toString
     val dimPath = s"$tmp/dim"
     val mem = MemoryStream[(Long, String, String)]
-    val q = streaming.DimStream.toScd2Sink(
-      mem.toDF().toDF("k", "ts", "v").withColumn("ts", to_date(col("ts"))),
-      dimPath, Seq("k"), Seq("v"), "ts", s"$tmp/ck").start()
+    val q = sources.Stream.sink(
+        mem.toDF().toDF("k", "ts", "v").withColumn("ts", to_date(col("ts"))), s"$tmp/ck") {
+      (b, _) => streaming.DimStream.scd2Batch(b, dimPath, Seq("k"), Seq("v"), "ts")
+    }.start()
     mem.addData((1L, "2021-01-01", "A"), (2L, "2021-01-05", "X"))
     q.processAllAvailable()
     // batch 1: a new version for k=1, plus a colliding instant that must
@@ -1046,9 +1047,11 @@ class PipelineSpec extends AnyFunSuite {
     val gram = "alpha beta gamma delta"
     val bench = Seq((100L, s"prefix $gram suffix tokens here")).toDF("doc_id", "text")
     val mem = MemoryStream[(Long, String)]
-    val q = streaming.CleanStream.toContaminationSink(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", bench, n = 4,
-      s"$tmp/clean", s"$tmp/bad", s"$tmp/ck").start()
+    // the stream's filter: built once before it starts, released after
+    val streamFilter = text.Corpus.benchFilter(bench, "text", n = 4, persist = true)
+    val q = sources.Stream.sink(mem.toDF().toDF("doc_id", "text"), s"$tmp/ck")(
+      streaming.CleanStream.contaminationBatch(streamFilter, _, _, "doc_id", "text",
+        s"$tmp/clean", s"$tmp/bad")).start()
     mem.addData((1L, "one totally clean document right here"),
       (2L, s"evil doc embedding $gram verbatim"))
     q.processAllAvailable()
@@ -1074,6 +1077,7 @@ class PipelineSpec extends AnyFunSuite {
       1L, "doc_id", "text", s"$tmp/clean", s"$tmp/bad")
     assert((ids(s"$tmp/clean"), ids(s"$tmp/bad")) == before,
       "replay must leave both landings unchanged")
+    streamFilter.release()
   }
 
   test("QqStream: matching batch zero shift, shifted batch reads +50 at every decile, silent key NULL, replay byte-stable") {
@@ -1085,8 +1089,8 @@ class PipelineSpec extends AnyFunSuite {
       Seq(("k", i.toDouble), ("s", i.toDouble))).toDF("k", "v")
     val r = streaming.QqStream.buildReference(ref, Seq("k"), "v")
     val mem = MemoryStream[(String, Double)]
-    val q = streaming.QqStream.toQqSink(mem.toDF().toDF("k", "v"),
-      "v", r, s"$tmp/mon", s"$tmp/ck").start()
+    val q = sources.Stream.sink(mem.toDF().toDF("k", "v"), s"$tmp/ck")(
+      streaming.QqStream.qqBatch(r, _, _, "v", s"$tmp/mon")).start()
     // batch 0: both keys matching; batch 1: k shifted +50, s SILENT
     mem.addData((0 to 100).flatMap(i =>
       Seq(("k", i.toDouble), ("s", i.toDouble))): _*)
@@ -1124,10 +1128,10 @@ class PipelineSpec extends AnyFunSuite {
     val mem = MemoryStream[(String, String, String)]
     val in = mem.toDF().toDF("k", "tss", "et")
       .withColumn("ts", to_timestamp(col("tss")))
-    val q = streaming.SloStream.toBurnSink(in, Seq("k"), "ts",
-      isError = col("et") === "error", budget = 0.1, shortHours = 2,
-      longHours = 3, threshold = 2.0, s"$tmp/state", s"$tmp/mon",
-      s"$tmp/ck").start()
+    val q = sources.Stream.sink(in, s"$tmp/ck")(
+      streaming.SloStream.burnBatch(_, _, Seq("k"), "ts",
+        isError = col("et") === "error", budget = 0.1, shortHours = 2,
+        longHours = 3, threshold = 2.0, s"$tmp/state", s"$tmp/mon")).start()
     mem.addData(calm: _*)
     q.processAllAvailable()
     mem.addData(burst: _*)
@@ -1167,8 +1171,8 @@ class PipelineSpec extends AnyFunSuite {
     val ref = (1 to 200).map(i => ("k", (i % 10).toDouble)).toDF("k", "v")
     val r = streaming.DriftStream.buildReference(ref, Seq("k"), "v", bins = 10)
     val mem = MemoryStream[(String, Double)]
-    val q = streaming.DriftStream.toDriftSink(mem.toDF().toDF("k", "v"),
-      "v", r, s"$tmp/mon", s"$tmp/ck").start()
+    val q = sources.Stream.sink(mem.toDF().toDF("k", "v"), s"$tmp/ck")(
+      streaming.DriftStream.driftBatch(r, _, _, "v", s"$tmp/mon")).start()
     mem.addData((1 to 100).map(i => ("k", (i % 10).toDouble)): _*)
     q.processAllAvailable()
     mem.addData((1 to 100).map(i => ("k", (i % 10) + 50.0)): _*)
@@ -1204,8 +1208,9 @@ class PipelineSpec extends AnyFunSuite {
     val shifted = (1 to 30).map(i => ("k", 2000L + i, 3.0))
 
     val mem = MemoryStream[(String, Long, Double)]
-    val q = streaming.CusumStream.toCusumSink(mem.toDF().toDF("k", "t", "v"),
-      "v", "t", "t", mon, s"$tmp/state", s"$tmp/mon", s"$tmp/ck").start()
+    val q = sources.Stream.sink(mem.toDF().toDF("k", "t", "v"), s"$tmp/ck")(
+      streaming.CusumStream.cusumBatch(mon, _, _, "v", "t", "t",
+        s"$tmp/state", s"$tmp/mon")).start()
     mem.addData(calm: _*)
     q.processAllAvailable()
     mem.addData(shifted: _*)
@@ -1490,13 +1495,11 @@ class PipelineSpec extends AnyFunSuite {
   test("Hist/Rate/Profile/Enrich/Novelty/Rules sinks: a two-batch stream lands what the batch functions write") {
     import spark.implicits._
     import org.apache.spark.sql.{DataFrame, Encoders, Row}
-    import org.apache.spark.sql.streaming.DataStreamWriter
-    /** `sink` wires the streaming sink under a root dir; `direct` writes
-      * batch `id` there with the sink's batch function; `outs` are the
-      * dirs both land per batch.
+    /** `direct` writes batch `id` under a root dir with the stream's
+      * batch function; `Stream.sink` runs the same function on a
+      * two-batch stream; `outs` are the dirs both land per batch.
       */
     case class SinkCase(name: String, batches: Seq[DataFrame], outs: Seq[String],
-        sink: (DataFrame, String, String) => DataStreamWriter[Row],
         direct: (DataFrame, Long, String) => Unit)
     val kv = (1 to 400).map(i => (if (i % 3 == 0) "a" else "b", i.toDouble)).toDF("k", "v")
     val geom = streaming.HistStream.buildGeometry(kv, Seq("k"), "v", bins = 20)
@@ -1515,36 +1518,47 @@ class PipelineSpec extends AnyFunSuite {
       rows.toDF("fid", "k", "ft").withColumn("ft", to_date(col("ft")))
     val rules = Seq(etl.Rules.NotNull("v"), etl.Rules.InRange("v", 0, 10),
       etl.Rules.Unique(Seq("id")))
+    val fp = md5(substring(col("text"), 1, 40))
+    def vecs(rows: (Long, Seq[Double])*) = rows.toDF("k", "v")
     val cases = Seq(
       SinkCase("hist", Seq(kv.filter(col("v") <= 150), kv.filter(col("v") > 150)), Seq("sk"),
-        (s, root, ck) => streaming.HistStream.toHistSink(s, "v", geom, s"$root/sk", ck),
         (b, id, root) => streaming.HistStream.histBatch(geom, b, id, "v", s"$root/sk")),
       SinkCase("rate", Seq(evs("b", 10000L, 400), evs("a", 20000L, 30)), Seq("mon"),
-        (s, root, ck) => streaming.RateStream.toRateSink(s, "ts", mon, s"$root/mon", ck),
         (b, id, root) => streaming.RateStream.rateBatch(mon, b, id, "ts", s"$root/mon")),
       SinkCase("profile", Seq(tags.filter(col("uid") < 12), tags.filter(col("uid") >= 12)),
         Seq("st"),
-        (s, root, ck) => streaming.ProfileStream.toProfileSink(s, Seq("uid", "tag"),
-          s"$root/st", ck),
         (b, id, root) => streaming.ProfileStream.profileBatch(b, id, Seq("uid", "tag"),
           s"$root/st")),
       SinkCase("enrich", Seq(facts((10L, 1L, "2021-01-15"), (11L, 1L, "2020-12-25")),
           facts((12L, 1L, "2021-02-01"), (13L, 2L, "2021-03-01"))), Seq("out"),
-        (s, root, ck) => streaming.EnrichStream.toEnrichedSink(s, Seq("k"), "ft",
-          Seq("fid"), dimPath, s"$root/out", ck),
         (b, id, root) => streaming.EnrichStream.enrichBatch(b, id, Seq("k"), "ft",
           Seq("fid"), dimPath, s"$root/out")),
       SinkCase("novelty", Seq(Seq("alpha beta gamma delta", "one two three four").toDF("text"),
           Seq("alpha beta gamma delta", "five six seven eight").toDF("text")),
         Seq("state", "report"),
-        (s, root, ck) => streaming.NoveltyStream.toNoveltySink(s, "text",
-          s"$root/state", s"$root/report", ck),
         (b, id, root) => streaming.NoveltyStream.noveltyBatch(b, id, "text",
           s"$root/state", s"$root/report")),
       SinkCase("rules", Seq(Seq((1L, Some(5.0)), (2L, Some(7.0))).toDF("id", "v"),
           Seq((3L, Some(99.0)), (3L, None: Option[Double])).toDF("id", "v")), Seq("rep"),
-        (s, root, ck) => streaming.RulesStream.toRulesSink(s, rules, s"$root/rep", ck),
-        (b, id, root) => streaming.RulesStream.rulesBatch(b, id, rules, s"$root/rep")))
+        (b, id, root) => streaming.RulesStream.rulesBatch(b, id, rules, s"$root/rep")),
+      SinkCase("theta", Seq(Seq(("s1", 1L), ("s1", 2L), ("s2", 2L)).toDF("seg", "uid"),
+          Seq(("s2", 4L), ("s3", 9L), ("s1", 2L)).toDF("seg", "uid")), Seq("st"),
+        (b, id, root) => streaming.ThetaStream.sketchBatch(b, id, col("seg"), col("uid"),
+          s"$root/st")),
+      SinkCase("census", Seq(Seq(("web", "the cat sat"), ("forum", "dogs run fast")).toDF("source", "text"),
+          Seq(("forum", "the cat sat"), ("web", "unique text")).toDF("source", "text")),
+        Seq("tokens", "cells"),
+        (b, id, root) => streaming.CensusStream.censusBatch(b, id, "source", "text", fp, root)),
+      SinkCase("privacy", Seq(Seq(("z1", "f", "flu"), ("z1", "f", "cold")).toDF("zip", "sex", "diag"),
+          Seq(("z9", "f", "rare"), ("z1", "f", "flu")).toDF("zip", "sex", "diag")), Seq("cells"),
+        (b, id, root) => streaming.PrivacyStream.privacyBatch(b, id, Seq("zip", "sex"),
+          col("diag"), root)),
+      SinkCase("cov", Seq(vecs((1L, Seq(1.0, -1.0)), (2L, Seq(-1.0, 1.0))),
+          vecs((3L, Seq(2.0, 0.0)), (4L, Seq(0.0, 3.0)))), Seq("moments"),
+        (b, id, root) => streaming.CovStream.covBatch(b, id, "v", root)),
+      SinkCase("covBy", Seq(vecs((1L, Seq(1.0, -1.0)), (2L, Seq(-1.0, 1.0))),
+          vecs((1L, Seq(2.0, 0.0)), (2L, Seq(0.0, 3.0)))), Seq("moments_by"),
+        (b, id, root) => streaming.CovStream.covBatchBy(b, id, "k", "v", root)))
     // binary cells (sketches) compare by content, not by array identity
     def landed(dir: String) = spark.read.parquet(dir).collect().toSeq
       .map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }).sortBy(_.toString)
@@ -1553,7 +1567,8 @@ class PipelineSpec extends AnyFunSuite {
       implicit val enc: org.apache.spark.sql.Encoder[Row] = Encoders.row(c.batches.head.schema)
       implicit val sqlCtx = spark.sqlContext
       val mem = MemoryStream[Row]
-      val q = c.sink(mem.toDF(), s"$tmp/stream", s"$tmp/ck").start()
+      val q = sources.Stream.sink(mem.toDF(), s"$tmp/ck")(
+        c.direct(_, _, s"$tmp/stream")).start()
       for (b <- c.batches) {
         mem.addData(b.collect().toSeq: _*)
         q.processAllAvailable()
@@ -1601,8 +1616,8 @@ class PipelineSpec extends AnyFunSuite {
       .toDF("k", "b", "v")
     val chart = streaming.SpcStream.buildChart(ref, Seq("k"), col("b"), "v")
     val mem = MemoryStream[(String, Double)]
-    val q = streaming.SpcStream.toSpcSink(mem.toDF().toDF("k", "v"), "v",
-      chart, s"$tmp/mon", s"$tmp/ck").start()
+    val q = sources.Stream.sink(mem.toDF().toDF("k", "v"), s"$tmp/ck")(
+      streaming.SpcStream.spcBatch(chart, _, _, "v", s"$tmp/mon")).start()
     mem.addData(("k", 9.0), ("k", 11.0), ("k", 9.0), ("k", 11.0))
     q.processAllAvailable()
     mem.addData(("k", 14.0), ("k", 14.0), ("k", 14.0), ("k", 14.0))
@@ -1643,9 +1658,9 @@ class PipelineSpec extends AnyFunSuite {
     val b0 = Seq(("s1", 1L), ("s1", 2L), ("s1", 3L), ("s2", 2L), ("s2", 3L))
     val b1 = Seq(("s2", 4L), ("s3", 9L), ("s1", 2L))
     val mem = MemoryStream[(String, Long)]
-    val q = streaming.ThetaStream.toThetaSink(
-      mem.toDF().toDF("seg", "uid"), col("seg"), col("uid"),
-      s"$tmp/state", s"$tmp/ck").start()
+    val q = sources.Stream.sink(mem.toDF().toDF("seg", "uid"), s"$tmp/ck")(
+      streaming.ThetaStream.sketchBatch(_, _, col("seg"), col("uid"),
+        s"$tmp/state")).start()
     mem.addData(b0: _*)
     q.processAllAvailable()
     mem.addData(b1: _*)
@@ -1685,9 +1700,9 @@ class PipelineSpec extends AnyFunSuite {
       ("web", "entirely unique snowflake text"))
     val fp = md5(substring(col("text"), 1, 40))
     val mem = MemoryStream[(String, String)]
-    val q = streaming.CensusStream.toCensusSink(
-      mem.toDF().toDF("source", "text"), "source", "text", fp,
-      s"$tmp/state", s"$tmp/ck").start()
+    val q = sources.Stream.sink(mem.toDF().toDF("source", "text"), s"$tmp/ck")(
+      streaming.CensusStream.censusBatch(_, _, "source", "text", fp,
+        s"$tmp/state")).start()
     mem.addData(part1: _*)
     q.processAllAvailable()
     mem.addData(part2: _*)
@@ -1735,9 +1750,9 @@ class PipelineSpec extends AnyFunSuite {
     val part2 = Seq(("z9", "f", "rare"), ("z1", "f", "flu"))
     val qi = Seq("zip", "sex")
     val mem = MemoryStream[(String, String, String)]
-    val q = streaming.PrivacyStream.toPrivacySink(
-      mem.toDF().toDF("zip", "sex", "diag"), qi, col("diag"),
-      s"$tmp/state", s"$tmp/ck").start()
+    val q = sources.Stream.sink(mem.toDF().toDF("zip", "sex", "diag"), s"$tmp/ck")(
+      streaming.PrivacyStream.privacyBatch(_, _, qi, col("diag"),
+        s"$tmp/state")).start()
     mem.addData(part1: _*)
     q.processAllAvailable()
     // the clean interim state: gate green after batch 0
@@ -1790,8 +1805,8 @@ class PipelineSpec extends AnyFunSuite {
     }
     val (part1, part2) = cube.splitAt(3)
     val mem = MemoryStream[(Long, Seq[Double])]
-    val q = streaming.CovStream.toCovSink(
-      mem.toDF().toDF("id", "v"), "v", s"$tmp/state", s"$tmp/ck").start()
+    val q = sources.Stream.sink(mem.toDF().toDF("id", "v"), s"$tmp/ck")(
+      streaming.CovStream.covBatch(_, _, "v", s"$tmp/state")).start()
     mem.addData(part1: _*)
     q.processAllAvailable()
     mem.addData(part2: _*)
@@ -1833,8 +1848,8 @@ class PipelineSpec extends AnyFunSuite {
     val (part1, part2) = (all.zipWithIndex.filter(_._2 % 2 == 0).map(_._1),
       all.zipWithIndex.filter(_._2 % 2 == 1).map(_._1))
     val mem = MemoryStream[(Long, Seq[Double])]
-    val q = streaming.CovStream.toCovSinkBy(
-      mem.toDF().toDF("k", "v"), "k", "v", s"$tmp/state", s"$tmp/ck").start()
+    val q = sources.Stream.sink(mem.toDF().toDF("k", "v"), s"$tmp/ck")(
+      streaming.CovStream.covBatchBy(_, _, "k", "v", s"$tmp/state")).start()
     mem.addData(part1: _*)
     q.processAllAvailable()
     mem.addData(part2: _*)

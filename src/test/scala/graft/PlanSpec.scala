@@ -71,10 +71,11 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("upsertBatch merge carries no static broadcast hint (backfill batches are unbounded)") {
-    // toUpsertSink's documented replay/backfill path (Trigger.AvailableNow)
-    // feeds whole tables through upsertBatch — a forced broadcast of the
-    // batch key set is the same unbounded-side static hint banned for
-    // q49/q44. AQE still broadcasts small micro-batches at runtime.
+    // the documented replay/backfill path (a Stream.sink started with
+    // Trigger.AvailableNow) feeds whole tables through upsertBatch — a
+    // forced broadcast of the batch key set is the same unbounded-side
+    // static hint banned for q49/q44. AQE still broadcasts small
+    // micro-batches at runtime.
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
     import spark.implicits._
     val existing = Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "v", "ver")
