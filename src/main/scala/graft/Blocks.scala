@@ -47,12 +47,6 @@ object Blocks {
     mids.size
   }
 
-  /** Unpersist everything — the between-queries reset for bench/verify
-    * loops where no prior result is live.
-    */
-  def releaseAll(spark: SparkSession): Int =
-    releaseSince(spark, Set.empty)
-
   /** The TIMED-HARNESS reset, in the one order that is safe:
     *
     *  1. CLEAR THE RELATION CACHE (CacheManager). `releaseSince`'s raw

@@ -101,7 +101,7 @@ private[graft] object DedupStreamQueries {
       // indexed, tight at t=0.8, with exact verification) — so the query
       // equals its oracle DETERMINISTICALLY, not up to a recall term. The
       // probabilistic MinHash+LSH path stays the measured scale
-      // alternative (q35 + DedupScale assert its contract); an
+      // alternative (q35 and ScaleShapeSpec assert its contract); an
       // oracle-gated query must not carry even a ~5e-8 per-pair flake.
       val pairs = NGramJaccard.similarPairs(Tables.documents(s, dir), "doc_id", "text",
         n = 3, minJaccard = 0.8)

@@ -24,8 +24,8 @@ private[graft] object SimQueries {
     }
 
   /** Prune floor (percent) asserted by the q350-q353 verdicts for the
-    * registered kCoarse=8 / nprobe=2 configuration: CandScale measures
-    * the raw-corpus prune rate at ~0.53-0.55 (both sf0.01 and sf0.1 —
+    * registered kCoarse=8 / nprobe=2 configuration: the raw-corpus
+    * prune rate measured ~0.53-0.55 (sf0.01 and sf0.1, SURVEY §5.2 —
     * balanced-cell expectation 1 − (1 − C(6,2)/C(8,2)) ≈ 0.536);
     * 30 % is the conservative floor with ~20 pts of margin, enough to
     * catch the failure mode that matters (a candidate generator that
@@ -1387,7 +1387,7 @@ private[graft] object SimQueries {
       // when geometry exists" — made oracle-visible (it lived only in
       // SURVEY tables and CandidatesSpec until r14). Corpus: the sf
       // embeddings pulled toward 8 deterministic hash-derived centers
-      // (CandScale's planted-geometry generator: signal ×0.3, center
+      // (`ScaleRun.planted`'s geometry on the sf vectors: signal ×0.3, center
       // span ±2.5 — intra-cluster cosine ≫ inter, the structure real
       // embedding corpora have and the raw synthetic corpus lacks).
       // Verdicts, all asserted as 1 by the oracle: recall of the TRUE

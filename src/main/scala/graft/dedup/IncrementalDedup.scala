@@ -208,10 +208,11 @@ object IncrementalDedup {
     * rows dedupe downstream by contract — a crash replay's harmless
     * duplicates are distinct()-ed away here as a bonus); what changes
     * is the FILE count, which otherwise grows by `buckets` files per
-    * appended batch: StreamScale measured the un-compacted index's
-    * per-batch gate scan growing 1.95 s → 6.6 s over 100 appends from
-    * listing + opening ~100 files per bucket, while the compacted
-    * agg/ANN/CC surfaces stay flat. Run on the same cadence as their
+    * appended batch: the un-compacted index's per-batch gate scan grew
+    * 1.95 s → 6.6 s over 100 appends from listing + opening ~100 files
+    * per bucket (SURVEY §5.4, historical), while the compacted agg/ANN/CC
+    * surfaces stayed flat; ScaleShapeSpec counts the compacted fold's
+    * input bytes. Run on the same cadence as their
     * `compactEvery`. Crash-safe: both rebuilds heal via
     * [[recover]]/[[graft.sources.Io.recoverRebuild]] on entry to every
     * surface, and the tables stay consistent in either crash window

@@ -99,13 +99,6 @@ object ConnectedComponents {
     * component minima (Kiveris et al., Thm 3.1/3.2), read off directly
     * as (node → center) plus (center → center).
     */
-  /** Rounds the most recent [[starComponents]] call took to converge —
-    * a diagnostics hook (bench drift triage: a grown round count means
-    * the graph changed, an unchanged one means box noise). Last-writer-
-    * wins under concurrent calls; never read it for correctness.
-    */
-  val lastStarRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
-
   def starComponents(edges: DataFrame, srcCol: String, dstCol: String,
       maxIters: Int = 50): DataFrame = {
     val e0 = edges.select(col(srcCol).cast("long").as("x"), col(dstCol).cast("long").as("y"))
@@ -163,7 +156,6 @@ object ConnectedComponents {
     require(stable,
       s"star contraction did not converge in $maxIters rounds — " +
         "raise maxIters (expected O(log²n) for any graph)")
-    lastStarRounds.set(iter)
     // stars: every non-center points at its center; centers appear only
     // as targets and label themselves
     val out = cur.select(col("u").as("node"), col("v").as("comp"))

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   *    (1 − pruneFloor)·n_pairs_full: the registered configuration
   *    genuinely prunes (a generator degenerating to all-pairs prunes
   *    0 % and fails), with the floor carried as the `prune_floor_pct`
-  *    literal (spec-measured margin — CandScale).
+  *    literal (spec-measured margin, SURVEY §5.2).
   *  - the REGISTERED pruned diagnostic is executed in-query and gated
   *    on its row count: by VALUE where the count is structural
   *    (topN-shaped / per-label — the self diagnostics), by BOUNDS

@@ -52,7 +52,7 @@ object Candidates {
     //  - a LOOP over one packed non-primitive literal (cell, centroid,
     //    |c|²) via transform(): constant code size in k — the form that
     //    survives the k ∝ n/cellSize scaling a 100 TB corpus needs
-    //    (CandScale's decade rung runs k in the hundreds through it).
+    //    (ScaleShapeSpec's candidate case crosses into it at 4n).
     val scoredArr: Column =
       if (centroids.length < loopFrom) {
         val scored = centroids.zipWithIndex.map { case (c, j) =>
@@ -97,8 +97,8 @@ object Candidates {
     */
   def ivfSelfPairs(df: DataFrame, idCol: String, vecCol: String,
       kCoarse: Int = 8, nprobe: Int = 2, iters: Int = 5,
-      seeding: String = "farthest", probeLoopFrom: Int = 33): DataFrame = {
-    val cents = KMeans.fit(df, idCol, vecCol, kCoarse, iters, seeding)
+      probeLoopFrom: Int = 33): DataFrame = {
+    val cents = KMeans.fit(df, idCol, vecCol, kCoarse, iters)
     val cells = probeCells(df, idCol, vecCol, cents, nprobe, probeLoopFrom)
     // Both join sides are spread by the point id before the cell join
     // (guide §2.2): the gate-scale cell join is a broadcast join whose

@@ -89,8 +89,9 @@ object DedupStream {
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
       compactPairs(spark, pairsPath)
       // the index tables too (r14): without this the gate scan's
-      // file count grows one-per-bucket per batch — StreamScale
-      // measured 1.95 s → 6.6 s/batch over 100 un-compacted appends
+      // file count grows one-per-bucket per batch — 1.95 s → 6.6 s per
+      // batch over 100 un-compacted appends (SURVEY §5.4, historical);
+      // ScaleShapeSpec folds the compacted index
       graft.dedup.IncrementalDedup.compactIndex(spark, name)
       clusterName.foreach(graft.operators.IncrementalCC.compactLabels(spark, _))
     }

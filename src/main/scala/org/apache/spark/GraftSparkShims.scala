@@ -65,4 +65,11 @@ object GraftSparkShims {
     ids.foreach(id => master.removeBroadcast(id, removeFromMaster = true, blocking = false))
     ids.size
   }
+
+  /** Block until every event already posted to the `private[spark]`
+    * listener bus has been delivered: listener events arrive
+    * asynchronously, so a counter reads its listener only after this
+    * ([[graft.ScaleRun.counted]]).
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -149,24 +149,15 @@ class ExactTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("building bruteForceTopK submits no job; its plan scores in the kernel") {
     val emb = Tables.embeddings(spark, sfDir)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    val df = try {
+    val built = ScaleRun.counted(spark) {
       val out = sim.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", 5)
       out.queryExecution.executedPlan // planning, too, runs nothing
-      org.apache.spark.ListenerBusDrain(sc)
       out
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 0, s"${jobs.get} jobs while building")
+    }
+    assert(built.jobs == 0, s"${built.jobs} jobs while building")
 
+    val df = built.value
     val rows = df.collect()
     val plan = df.queryExecution.executedPlan
     assert(collect(plan) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, s"$plan")

@@ -1886,29 +1886,16 @@ class OperatorEdgeSpec extends AnyFunSuite {
     val cs = pairs.toDF("src", "dst").distinct()
     val edges = cs.unionByName(cs.select(col("dst").as("src"), col("src").as("dst")))
     val seeds = Seq("c0", "c17").toDF("node")
-    val sc = spark.sparkContext
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet(); ()
-      }
-    }
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    val out = try {
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.addSparkListener(listener)
-      val dist = operators.Bfs.hops(edges, "src", "dst", seeds, "node", rounds)
+    val run = try ScaleRun.counted(spark) {
+      operators.Bfs.hops(edges, "src", "dst", seeds, "node", rounds)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      org.apache.spark.ListenerBusDrain(sc)
-      dist
-    } finally {
-      sc.removeSparkListener(listener)
-      spark.conf.set("spark.sql.shuffle.partitions", before)
-    }
-    val launched = s"${tasks.get} tasks for $rounds rounds at $parts shuffle partitions"
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    val out = run.value
+    val launched = s"${run.tasks} tasks for $rounds rounds at $parts shuffle partitions"
     info(launched)
-    assert(tasks.get < rounds * parts, launched)
+    assert(run.tasks < rounds * parts, launched)
     // the same horizon, breadth-first by hand over the undirected graph
     val adj = (pairs ++ pairs.map(_.swap)).distinct.groupMap(_._1)(_._2)
     var frontier = Set("c0", "c17")
@@ -4775,22 +4762,10 @@ class OperatorEdgeSpec extends AnyFunSuite {
     val edges = Seq((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
       (4, 5), (5, 6), (4, 6), (6, 7))
       .map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
-    val sc = spark.sparkContext
     def jobs(k: Int): (Int, Int) = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.addSparkListener(listener)
-      val truss = try {
-        val out = operators.KTruss.truss(edges, "src", "dst", k = k, maxPeels = 3)
-        org.apache.spark.ListenerBusDrain(sc)
-        out
-      } finally sc.removeSparkListener(listener)
-      (n.get, truss.collect().length)
+      val truss = ScaleRun.counted(spark)(
+        operators.KTruss.truss(edges, "src", "dst", k = k, maxPeels = 3))
+      (truss.jobs, truss.value.collect().length)
     }
     for ((k, size) <- Seq(3 -> 9, 4 -> 6)) {
       val (launched, rows) = jobs(k)

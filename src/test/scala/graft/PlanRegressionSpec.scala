@@ -40,7 +40,7 @@ class PlanRegressionSpec extends AnyFunSuite {
     * [[dedup.MinHashLsh.similarPairs]] materializes eagerly (its
     * registered queries fingerprint as a LogicalRDD scan), so the gate
     * inspects the lazy [[dedup.MinHashLsh.pairsPlan]]: this is the exact
-    * plan DedupScale runs at 100k docs, and the shape pins the
+    * plan ScaleShapeSpec and `ScaleRun minhash` run, and the shape pins the
     * O(n·bands) banded candidate join (a shape flip to a nested-loop /
     * cartesian candidate stage would fail here even while tiny-SF
     * results stay correct).
@@ -51,7 +51,8 @@ class PlanRegressionSpec extends AnyFunSuite {
     Map(
       "lib_dedup_minhash_pipeline" ->
         dedup.MinHashLsh.pairsPlan(sets, "doc_id", minJaccard = 0.8),
-      // ScaleSmoke's hottest stage: the 7-column single-shuffle
+      // the pipeline scenario's hottest stage (ScaleRun, ScaleShapeSpec):
+      // the 7-column single-shuffle
       // interpolation over the synthetic air-quality shape
       "lib_scale_interpolate" ->
         etl.Clean.interpolateLinear(etl.Synth.airQuality(spark, 2, 48),
